@@ -2,9 +2,15 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Dev tool: dump a registered query's optimized + executed plan to a
-  * file for offline inspection (lambda-inlining audits, exchange
-  * counts, pushdown checks). Not part of the library.
+/** Dev tool: dump a registered query's plans to a file for offline
+  * inspection (lambda-inlining audits, exchange counts, pushdown
+  * checks). Not part of the library.
+  *
+  * The terminal optimized + executed plan is followed by the optimized
+  * plan of every frame the query settled while it was built, as
+  * recorded before its checkpoint ([[Settle.capture]]) — the work a
+  * checkpoint scan hides from the terminal plan (BFS and CC rounds,
+  * the triangle close, sweep arms).
   *
   * Usage: runMain graft.PlanDump <queryName> <sfDir> <outFile>
   */
@@ -26,13 +32,17 @@ object PlanDump {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val df = SparkEntry.queries(name)(spark, sfDir)
+    val (df, settled) = Settle.capture(SparkEntry.queries(name)(spark, sfDir))
     val txt = new StringBuilder
     txt ++= "== OPTIMIZED ==\n" ++= df.queryExecution.optimizedPlan.toString
     txt ++= "\n== PHYSICAL ==\n" ++= df.queryExecution.executedPlan.toString
+    settled.zipWithIndex.foreach { case (s, i) =>
+      txt ++= s"\n== SETTLED ${i + 1}/${settled.size}: ${s.label}/${s.phase} (optimized, before its checkpoint) ==\n"
+      txt ++= s.plan.toString
+    }
     java.nio.file.Files.writeString(java.nio.file.Path.of(outFile),
       txt.toString)
-    println(s"[plandump] wrote $outFile")
+    println(s"[plandump] wrote $outFile (${settled.size} settled frames)")
     spark.stop()
   }
 }

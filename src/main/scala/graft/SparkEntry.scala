@@ -12,9 +12,15 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     llm.LlmQueries.p1Curate(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each builds
+    * inside a [[Settle]] scope named after it, so the caches and
+    * checkpoints a query leaves behind are exactly those its result
+    * reads. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    relational.Relational.queries ++ typesystem.TypeQueries.queries ++ llm.LlmQueries.queries
+    (relational.Relational.queries ++ typesystem.TypeQueries.queries ++ llm.LlmQueries.queries)
+      .map { case (name, q) =>
+        name -> ((s: SparkSession, dir: String) => Settle.scope(name)(_ => q(s, dir)))
+      }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get a rows-only check. */

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.Settle
 import graft.Tables._
 import graft.operators._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -91,7 +92,7 @@ object LlmQueries {
     * quality kernel — into one pass: the argmax is q57's
     * max-of-struct device on the cluster-cardinality table, so
     * survivorship adds one tiny aggregate to d6's cost. */
-  def d19QualitySurvivor(s: SparkSession, dir: String): DataFrame = {
+  def d19QualitySurvivor(s: SparkSession, dir: String): DataFrame = Settle.scope("d19_quality_survivor") { st =>
     val corpus = withCopies(t(s, dir, "documents"), perturb = true)
     val pairs = Dedup.minhashPairs(corpus, "doc_id", "text",
       w = 3, h = 64, bands = 32, threshold = 0.5)
@@ -99,22 +100,17 @@ object LlmQueries {
     // concurrent driver job (guide §2.6) so the kernel's tasks
     // backfill the latency-bound CC rounds instead of running after
     // them; deterministic, so concurrency cannot change a row (r14)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val qualF = Future {
-      corpus.select(col("doc_id").as("id"),
-          TextAnalysis.qualityColumns(col("text")).last.as("q"))
-        .localCheckpoint(true)
+    val Seq(qual, clusters) = st.sweep(Seq(true, false)) { quality =>
+      if (quality) st.settle(corpus.select(col("doc_id").as("id"),
+        TextAnalysis.qualityColumns(col("text")).last.as("q")), "quality")
+      else Dedup.dupClusters(pairs, "id_a", "id_b")
     }
-    val clusters = Dedup.dupClusters(pairs, "id_a", "id_b")
-    val qual = Await.result(qualF,
-      scala.concurrent.duration.Duration.Inf)
     // settled eagerly (r14): j is consumed TWICE (the argmax and the
     // verdict join) — unsettled, the cluster join AND the quality
     // kernel over the perturbed corpus executed once per consumer
     // (guide §2.5, the x32 posture). Corpus-cardinality but narrow
     // (id, cluster, size, q).
-    val j = clusters.join(qual, Seq("id")).localCheckpoint(true)
+    val j = st.settle(clusters.join(qual, Seq("id")), "clusters")
     // argmax (q desc, id asc): max of (q, −id) — the q57 device
     val surv = j.groupBy("cluster_id")
       .agg(max(struct(col("q"), (-col("id")).as("ni"))).as("m"))
@@ -215,14 +211,13 @@ object LlmQueries {
     * counts aggregate corpus-wide (overlap / brute = one IEEE
     * division). Monotone by construction: a larger probe set is a
     * superset, so candidates only grow. */
-  def e10IvfRecallSweep(s: SparkSession, dir: String): DataFrame = {
+  def e10IvfRecallSweep(s: SparkSession, dir: String): DataFrame = Settle.scope("e10_ivf_recall_sweep") { st =>
     val emb = t(s, dir, "embeddings")
     val qs = emb.filter(col("vec_id") < 5)
     // ground truth settles ONCE (|queries|·k rows): it is consumed
     // twice per arm (semi-join + count), and unsettled the full brute
     // subplan replicated 8x into the final DAG
-    val brute = Similarity.bruteTopK(emb, qs, k = 10).select("qid", "id")
-      .localCheckpoint(true)
+    val brute = st.settle(Similarity.bruteTopK(emb, qs, k = 10).select("qid", "id"), "truth")
     // the four probe arms are INDEPENDENT given the shared ground
     // truth — run them as concurrent jobs (guide §2.6: actions are
     // only sequential because the driver calls them sequentially);
@@ -235,10 +230,10 @@ object LlmQueries {
     // Previously every arm re-collected centroids and re-assigned the
     // whole corpus.
     val (cents, cellsRaw) = Similarity.ivfSampledIndex(emb, nCells = 16)
-    val cells = cellsRaw.localCheckpoint(true)
-    val ivfs = sweepArms(Seq(1, 2, 4, 8)) { np =>
-      Similarity.ivfTopKIndexed(cents, cells, qs, k = 10, nProbe = np)
-        .select("qid", "id").localCheckpoint(true)
+    val cells = st.settle(cellsRaw, "cells")
+    val ivfs = st.sweep(Seq(1, 2, 4, 8)) { np =>
+      st.settle(Similarity.ivfTopKIndexed(cents, cells, qs, k = 10, nProbe = np)
+        .select("qid", "id"), s"nprobe-$np")
     }
     Seq(1, 2, 4, 8).zip(ivfs).map { case (np, ivf) =>
       val ov = brute.join(ivf, Seq("qid", "id"), "left_semi")
@@ -253,40 +248,6 @@ object LlmQueries {
     }.reduce(_.unionByName(_)).orderBy("nprobe")
   }
 
-  /** Run independent sweep arms as CONCURRENT driver-submitted jobs
-    * (optimization guide §2.6): each arm must return a MATERIALIZED
-    * frame (localCheckpoint) so its work happens inside the future and
-    * later arms' tasks back-fill executors freed by earlier arms'
-    * tails. Output order matches input order; every arm is
-    * deterministic, so scheduling cannot change results. */
-  private val sweepSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  private def sweepArms[A](xs: Seq[A])(f: A => DataFrame): Seq[DataFrame] = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(xs.size)
-    // each arm's jobs run under a shared cancellable group: if one arm
-    // fails, the others' in-flight Spark jobs are cancelled instead of
-    // running (and localCheckpointing) on after the query has already
-    // failed (ADVICE r13)
-    val group = s"graft-sweep-${sweepSeq.incrementAndGet()}"
-    val sc = org.apache.spark.sql.SparkSession.active.sparkContext
-    try {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      implicit val ec: ExecutionContext =
-        ExecutionContext.fromExecutorService(pool)
-      val futs = xs.map(x => Future {
-        sc.setJobGroup(group, "sweep arm", interruptOnCancel = true)
-        try f(x) finally sc.clearJobGroup()
-      })
-      try futs.map(fu =>
-        Await.result(fu, scala.concurrent.duration.Duration.Inf))
-      catch {
-        case e: Throwable =>
-          sc.cancelJobGroup(group)
-          throw e
-      }
-    } finally pool.shutdown()
-  }
-
   // ---- L119: graph-ANN hop-sweep recall curve --------------------------------
   /** The graph-ANN twin of e10's probe sweep: recall@10 of s7's beam
     * search at hops ∈ {0, 1, 2, 3} against the s1 brute ground truth —
@@ -296,23 +257,22 @@ object LlmQueries {
     * [[Similarity.graphTopK]]'s `index` hook), so the curve isolates
     * the search horizon; hops=0 is the entry-points-only floor.
     * Monotone by construction: candidate sets only grow with hops. */
-  def e21GraphRecallSweep(s: SparkSession, dir: String): DataFrame = {
+  def e21GraphRecallSweep(s: SparkSession, dir: String): DataFrame = Settle.scope("e21_graph_recall_sweep") { st =>
     val emb = t(s, dir, "embeddings")
     val qs = emb.filter(col("vec_id") < 5)
     // ground truth settled once (the e10 posture): 8 consumers across
     // the four arms
-    val brute = Similarity.bruteTopK(emb, qs, k = 10).select("qid", "id")
-      .localCheckpoint(true)
+    val brute = st.settle(Similarity.bruteTopK(emb, qs, k = 10).select("qid", "id"), "truth")
     val index = Similarity.directedTopK(emb, "vec_id", "embedding", 5, 16)
       .select(col("qid").as("node"), col("id").as("nbr"))
     // normalized corpus settled ONCE and shared (r14): each arm's own
-    // persist deduped onto one CacheManager entry (identical plan), so
-    // the first arm to finish unpersisted it from under the others
-    val normed = Similarity.normalizedCorpus(emb).localCheckpoint(true)
+    // cache shared one CacheManager entry (identical plan), so the
+    // first arm to finish released it from under the others
+    val normed = st.settle(Similarity.normalizedCorpus(emb), "normed")
     // four independent searches over ONE settled index: concurrent
     // driver jobs (guide §2.6) — graphTopK settles its own result
     // (localCheckpoint inside), so each arm completes in its future
-    val arms = sweepArms(Seq(0, 1, 2, 3)) { h =>
+    val arms = st.sweep(Seq(0, 1, 2, 3)) { h =>
       Similarity.graphTopK(emb, qs, k = 10, hops = h, index = Some(index),
           normed = Some(normed))
         .select("qid", "id")
@@ -359,57 +319,56 @@ object LlmQueries {
     *          exactly (V − |T_A| − |T_B| + |A∩B|) × constant.
     * Work: |observed|·(S−1) rows in the per-source sweeps plus the
     * ∩ join — never V·S; the pair assembly runs on S²-row tables. */
-  def x32SourceDriftMatrix(s: SparkSession, dir: String): DataFrame = {
+  def x32SourceDriftMatrix(s: SparkSession, dir: String): DataFrame = Settle.scope("x32_source_drift_matrix") { st =>
     import org.apache.spark.sql.types.DecimalType
     val tok = t(s, dir, "documents")
       .select(col("source"), explode(TextAnalysis.tokens(col("text")))
         .as("tok"))
       .filter(col("tok") =!= "")
-    val counts = tok.groupBy("source", "tok").agg(count(lit(1)).as("c"))
-      .persist()
+    val counts = st.cache(tok.groupBy("source", "tok").agg(count(lit(1)).as("c")))
     // 1-row / S-row model frames with 2+ consumers each (vc: p and the
     // pair grid; prof: p, sweep, and the grid twice) — settle them
-    // eagerly so each broadcast build reads a localCheckpoint instead
-    // of re-running its distinct/groupBy over the cached counts
-    val vc = counts.select("tok").distinct().agg(count(lit(1)).as("v"))
-      .localCheckpoint(true)
+    // eagerly so each broadcast build reads a checkpoint instead of
+    // re-running its distinct/groupBy over the cached counts
+    val vc = st.settle(counts.select("tok").distinct().agg(count(lit(1)).as("v")), "vocab")
     // S-row per-source profile: token total n, distinct-token count nt
-    val prof = counts.groupBy("source")
-      .agg(sum("c").as("n"), count(lit(1)).as("nt"))
-      .localCheckpoint(true)
+    val prof = st.settle(counts.groupBy("source")
+      .agg(sum("c").as("n"), count(lit(1)).as("nt")), "profile")
     // sparse Laplace probabilities — p identical bit-for-bit to the
     // dense cell for observed tokens; n/v ride along for the absent
     // constants q = 1.0/(n+v)
-    // PERSISTED: three consumers (both sides of the ∩ self-join and
-    // the one-sided sweep) — unpersisted, each re-ran the join +
-    // per-row divisions from the counts cache
-    val p = counts.join(broadcast(prof.select("source", "n")), Seq("source"))
+    // CACHED: three consumers (both sides of the ∩ self-join and the
+    // one-sided sweep) — uncached, each re-ran the join + per-row
+    // divisions from the counts cache
+    val p = st.cache(counts.join(broadcast(prof.select("source", "n")), Seq("source"))
       .crossJoin(broadcast(vc))
       .select(col("source"), col("tok"),
         ((col("c") + 1).cast("double") /
           (col("n") + col("v")).cast("double")).as("p"),
-        col("n"), col("v"))
-      .persist()
+        col("n"), col("v")))
     def term(a: Column, b: Column): Column =
       (round(a * log(a / b), 9) + 0.0).cast("decimal(20,9)")
     def absentP(n: Column, v: Column): Column =
       lit(1.0) / (n + v).cast("double")
     // directed ∩ aggregates per (a, b): the both-present terms plus
-    // the ∩ portions of the two one-sided sweeps (to subtract)
-    val inter = p.as("x").join(p.as("y"),
+    // the ∩ portions of the two one-sided sweeps (to subtract). The
+    // S²-row result of the |observed|-scale self-join settles so the
+    // assembly below references rows, not the join subtree.
+    val inter = st.settle(p.as("x").join(p.as("y"),
         col("x.tok") === col("y.tok") && col("x.source") =!= col("y.source"))
       .groupBy(col("x.source").as("a"), col("y.source").as("b"))
       .agg(
         sum(term(col("x.p"), col("y.p"))).as("i_both"),
         sum(term(col("x.p"), absentP(col("y.n"), col("x.v")))).as("i_aside"),
         sum(term(absentP(col("x.n"), col("x.v")), col("y.p"))).as("i_bside"),
-        count(lit(1)).as("n_common"))
-      // S²-row result of the |observed|-scale self-join: settle it so
-      // the assembly below references rows, not the join subtree
-      .localCheckpoint(true)
+        count(lit(1)).as("n_common")), "intersect")
     // directed one-sided sweeps per (a, b): a's FULL token list scored
-    // against b's absent-prob — |observed|·(S−1) rows, never V·S
-    val sweep = p.as("x").join(
+    // against b's absent-prob — |observed|·(S−1) rows, never V·S.
+    // The S(S−1)-row result is JOINED TWICE in the assembly (forward as
+    // f_ab, mirrored as g_ba): unsettled, the full |observed|·(S−1)
+    // sweep aggregation executed twice — the probe's biggest single
+    // re-execution in this query.
+    val sweep = st.settle(p.as("x").join(
         broadcast(prof.select(col("source").as("b"), col("n").as("nb"))),
         col("x.source") =!= col("b"))
       .groupBy(col("x.source").as("a"), col("b"))
@@ -417,12 +376,7 @@ object LlmQueries {
         // tok ∈ a, scored in direction a→b (a present, b absent)
         sum(term(col("x.p"), absentP(col("nb"), col("x.v")))).as("f_ab"),
         // tok ∈ a, scored in direction b→a (b absent side is the P)
-        sum(term(absentP(col("nb"), col("x.v")), col("x.p"))).as("g_ab"))
-      // S(S−1)-row result JOINED TWICE in the assembly (forward as
-      // f_ab, mirrored as g_ba): unsettled, the full |observed|·(S−1)
-      // sweep aggregation executed twice — the probe's biggest single
-      // re-execution in this query
-      .localCheckpoint(true)
+        sum(term(absentP(col("nb"), col("x.v")), col("x.p"))).as("g_ab")), "sweep")
     // assemble directed KL on the S²-row grid
     val pairs = prof.select(col("source").as("a"), col("n").as("na"),
         col("nt").as("nta"))
@@ -506,7 +460,7 @@ object LlmQueries {
     * summed as exact DECIMAL, so the mean is partition-order-free with
     * ONE terminal IEEE division. One corpus pass + digest/lang
     * aggregations; only digests and per-lang rows shuffle. */
-  def p4CorpusDatasheet(s: SparkSession, dir: String): DataFrame = {
+  def p4CorpusDatasheet(s: SparkSession, dir: String): DataFrame = Settle.scope("p4_corpus_datasheet") { st =>
     val raw = t(s, dir, "documents").select("doc_id", "lang", "text")
     val planted = raw.as("r")
       .join(raw.select(col("doc_id").as("pid"), col("text").as("ptext")).as("p"),
@@ -514,12 +468,11 @@ object LlmQueries {
       .select(col("r.doc_id").as("doc_id"), col("r.lang").as("lang"),
         when(col("r.doc_id") % 7 === 3 && col("ptext").isNotNull,
           col("ptext")).otherwise(col("r.text")).as("text"))
-    val q = planted.select(Seq(col("doc_id"), col("lang"),
+    val q = st.cache(planted.select(Seq(col("doc_id"), col("lang"),
         sha2(Dedup.normText(col("text")), 256).as("digest")) ++
         TextAnalysis.qualityColumns(col("text")): _*)
       .select(col("doc_id"), col("lang"), col("digest"), col("n_tokens"),
-        round(col("quality_score"), 6).cast("decimal(12,6)").as("q6"))
-      .persist()
+        round(col("quality_score"), 6).cast("decimal(12,6)").as("q6")))
     val dup = q.groupBy("digest").agg(count(lit(1)).as("nc"))
       .filter(col("nc") >= 2).select("digest")
     val fl = q.join(dup, Seq("digest"), "left_semi")
@@ -804,7 +757,7 @@ object LlmQueries {
     * the same IEEE sequence on both engines. The two fits are the
     * proven e3 machinery (map-only assignment, k-row shuffle per
     * iteration); everything after is type²-sized. */
-  def e12KmeansAri(s: SparkSession, dir: String): DataFrame = {
+  def e12KmeansAri(s: SparkSession, dir: String): DataFrame = Settle.scope("e12_kmeans_ari") { st =>
     def comb2(c: Column): Column = ((c * (c - lit(1))) / lit(2)).cast("long")
     val emb = t(s, dir, "embeddings")
     val a = Clustering.kmeansAssign(emb, "vec_id", "embedding", 8, 3)
@@ -812,8 +765,8 @@ object LlmQueries {
     val b2 = Clustering.kmeansAssign(emb, "vec_id", "embedding", 8, 3,
         initSalt = "b")
       .select(col("id"), col("cluster").as("cb"))
-    val cont = a.join(b2, Seq("id"))
-      .groupBy("ca", "cb").agg(count(lit(1)).as("n")).persist()
+    val cont = st.cache(a.join(b2, Seq("id"))
+      .groupBy("ca", "cb").agg(count(lit(1)).as("n")))
     val sAgg = cont.agg(sum(comb2(col("n"))).as("s"), sum(col("n")).as("nn"),
       countDistinct("ca").as("k_a"), countDistinct("cb").as("k_b"))
     val aAgg = cont.groupBy("ca").agg(sum("n").as("t"))
@@ -854,7 +807,7 @@ object LlmQueries {
 
   /** CMS core over a single `tok` column — parameterized so the spec
     * can shrink `buckets` to force collisions and pin est ≥ truth. */
-  def countMinProbe(tokens: DataFrame, seeds: Int, buckets: Int): DataFrame = {
+  def countMinProbe(tokens: DataFrame, seeds: Int, buckets: Int): DataFrame = Settle.scope("countMinProbe") { st =>
     def bucketOf(sd: Int, c: Column): Column =
       pmod(conv(substring(md5(concat(lit(sd + "|"), c)), 1, 15), 16, 10)
         .cast("long"), lit(buckets))
@@ -865,11 +818,10 @@ object LlmQueries {
     // occurrences, and the 4 md5 probes run once per DISTINCT token
     // instead of once per occurrence (the dominant map cost). The
     // exact-count table is also exactly what the probe selection
-    // needs, so one aggregation serves all three consumers (persisted:
+    // needs, so one aggregation serves all three consumers (cached:
     // heavy + sampled cuts and the cell derivation).
-    val exact = tokens.filter(col("tok") =!= "")
-      .groupBy("tok").agg(count(lit(1)).as("exact_n"))
-      .persist()
+    val exact = st.cache(tokens.filter(col("tok") =!= "")
+      .groupBy("tok").agg(count(lit(1)).as("exact_n")))
     val cells = exact
       .select(col("exact_n"), posexplode(array((0 until seeds).map(sd =>
         bucketOf(sd, col("tok"))): _*)).as(Seq("seed", "bucket")))
@@ -935,14 +887,14 @@ object LlmQueries {
     * allowlisted shape) — calibration runs on a sample, the production
     * path stays banded. The length-ratio prefilter is lossless for
     * j ≥ 0.5 (that similarity forces set sizes within 2×). */
-  def d16LshBandSweep(s: SparkSession, dir: String): DataFrame = {
+  def d16LshBandSweep(s: SparkSession, dir: String): DataFrame = Settle.scope("d16_lsh_band_sweep") { st =>
     val h = 16
     val base = t(s, dir, "documents")
       .orderBy(md5(col("doc_id").cast("string")), col("doc_id")).limit(300)
       .select(col("doc_id").as("id"), col("text"))
     val docs = base.union(base.select((col("id") + lit(1000000L)).as("id"),
       concat(col("text"), lit(" zz qq")).as("text")))
-    val sh = docs
+    val sh = st.cache(docs
       // the same bind-once device as tenWordSegs: a plain `words`
       // attribute inside the per-shingle lambda would inline the
       // split+regexp per element (O(tokens²) per doc)
@@ -951,8 +903,7 @@ object LlmQueries {
           "'\\\\s+', ' ')), ' ')), ws -> array_distinct(transform(" +
           "sequence(1, greatest(size(ws) - 2, 1)), " +
           "i -> array_join(slice(ws, i, 3), ' '))))[0]"))
-      .select("id", "sh")
-      .persist()
+      .select("id", "sh"))
     // signature + truth hashes via ONE shingle explode and codegen'd
     // md5 projections folded by mergeable min/collect aggregations —
     // an array_min(transform(...)) spelling re-evaluates interpreted
@@ -962,29 +913,27 @@ object LlmQueries {
     val minCols = (0 until h).map(k =>
       min(conv(substring(md5(concat(lit(k + "|"), col("sg"))), 1, 15),
         16, 10).cast("long")).as(s"m$k"))
-    val sig = exploded
+    val sig = st.cache(exploded
       .groupBy("id").agg(minCols.head, minCols.tail: _*)
       .select(col("id"),
-        array((0 until h).map(k => col(s"m$k")): _*).as("sig"))
-      .persist()
+        array((0 until h).map(k => col(s"m$k")): _*).as("sig")))
     // truth sets as SORTED md5-hash longs: the exact-Jaccard cross runs
     // a native merge-scan intersect instead of string-set hashing
     // (~10× on the sample cross); the oracle replays the SAME hashed
     // sets, so parity stays bit-exact — only the truth's relation to
     // raw strings is modulo md5 collisions (the d2/d15 precedent)
-    val hashed = exploded
+    val hashed = st.cache(exploded
       .select(col("id"),
         conv(substring(md5(concat(lit("g|"), col("sg"))), 1, 15), 16, 10)
           .cast("long").as("h1"))
-      .groupBy("id").agg(array_sort(collect_set(col("h1"))).as("hv"))
-      .persist()
+      .groupBy("id").agg(array_sort(collect_set(col("h1"))).as("hv")))
     val commonN = {
       import org.apache.spark.sql.graft.ColumnBridge
       ColumnBridge.column(graft.expressions.SortedLongArrayIntersectCount(
         ColumnBridge.expression(col("a.hv")),
         ColumnBridge.expression(col("b.hv")))).cast("double")
     }
-    val truth = hashed.as("a").join(hashed.as("b"),
+    val truth = st.cache(hashed.as("a").join(hashed.as("b"),
         col("a.id") < col("b.id") &&
           size(col("a.hv")) * 2 >= size(col("b.hv")) &&
           size(col("b.hv")) * 2 >= size(col("a.hv")))
@@ -992,7 +941,7 @@ object LlmQueries {
         commonN.as("common"),
         (size(col("a.hv")) + size(col("b.hv"))).cast("double").as("sz"))
       .filter(col("common") / (col("sz") - col("common")) >= 0.5)
-      .select("id_a", "id_b").persist()
+      .select("id_a", "id_b"))
     // ALL configs ride ONE tagged band explode + ONE self-join + ONE
     // truth semi-join (a per-config loop costs 3× the plan/codegen and
     // 9 scheduler jobs — measured as most of the query at sf0.1)
@@ -1005,20 +954,19 @@ object LlmQueries {
       }: _*)).as("e"))
       .select(col("id"), col("e.bands").as("bands"),
         col("e.band").as("band"), col("e.key").as("key"))
-    val cand = ex.as("x").join(ex.as("y"),
+    val cand = st.cache(ex.as("x").join(ex.as("y"),
         col("x.bands") === col("y.bands") &&
           col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
           col("x.id") < col("y.id"))
       .select(col("x.bands").as("bands"), col("x.id").as("id_a"),
         col("y.id").as("id_b"))
-      .distinct().persist()
+      .distinct())
     val nCand = cand.groupBy("bands").agg(count(lit(1)).as("n_cand"))
     val caught = cand.join(truth, Seq("id_a", "id_b"), "left_semi")
       .groupBy("bands").agg(count(lit(1)).as("n_caught"))
     // 3-row result settles eagerly so the five sample-scale caches
-    // (shingles, signatures, hashed sets, truth, candidates) release
-    // before return (ADVICE r13 release-path convention)
-    val out = nCand.join(caught, Seq("bands"), "left")
+    // (shingles, signatures, hashed sets, truth, candidates) go on return
+    st.settle(nCand.join(caught, Seq("bands"), "left")
       .crossJoin(broadcast(truth.agg(count(lit(1)).as("n_true"))))
       .select(col("bands"), (lit(h) / col("bands")).cast("int")
           .as("rows_per_band"),
@@ -1028,10 +976,8 @@ object LlmQueries {
           nullif(col("n_true").cast("double"), lit(0.0))).as("recall"),
         (coalesce(col("n_caught"), lit(0L)).cast("double") /
           nullif(col("n_cand").cast("double"), lit(0.0)))
-          .as("cand_precision"))
-      .localCheckpoint(true)
-    Seq(cand, truth, hashed, sig, sh).foreach(_.unpersist())
-    out.orderBy("bands")
+          .as("cand_precision")), "recall")
+      .orderBy("bands")
   }
 
   // ---- L62: hybrid lexical+dense retrieval (RRF) ---------------------------
@@ -2172,7 +2118,7 @@ object LlmQueries {
     * give — any shared w+k−1-token run is guaranteed a common
     * selected fingerprint. Output = the selected (pos, hash) set per
     * doc; within-row HOF selection, output-sized explode only. */
-  def x44Winnowing(s: SparkSession, dir: String): DataFrame =
+  def x44Winnowing(s: SparkSession, dir: String): DataFrame = Settle.scope("x44_winnowing") { st =>
     // LOCAL scan fan-out (r14): the per-row HOF selection (md5 per
     // gram × window mins) is the whole cost and the single-row-group
     // input scans as ONE task — probe showed taskTime ≈ exec wall,
@@ -2180,15 +2126,15 @@ object LlmQueries {
     // for the map pass; single consumer, so the r13 global-fanout
     // hazard (re-execution through the exchange) can't bite. Width is
     // scale-adaptive (defaultParallelism = the session's cores).
-    TextAnalysis.winnow(t(s, dir, "documents")
+    // The (output-sized) fingerprint set settles before the final
+    // sort: the orderBy's range sampling otherwise re-evaluates the
+    // whole HOF selection a second time.
+    st.settle(TextAnalysis.winnow(t(s, dir, "documents")
         .repartition(s.sparkContext.defaultParallelism),
       "doc_id", "text")
-      .withColumnRenamed("id", "doc_id")
-      // settle the (output-sized) fingerprint set before the final
-      // sort: the orderBy's range sampling otherwise re-evaluates the
-      // whole HOF selection a second time
-      .localCheckpoint(true)
+      .withColumnRenamed("id", "doc_id"), "fingerprints")
       .orderBy("doc_id", "pos")
+  }
 
   // ---- L111: RAKE keyword extraction ---------------------------------------
   /** RAKE keywords per doc ([[TextAnalysis.rake]]): top-3 candidate
@@ -2370,7 +2316,7 @@ object LlmQueries {
     * band-key shuffle — signatures travel, text does not; the
     * boundary check is an equi-join of the pair list against the
     * test-id set. */
-  def p7LeakageFreeSplit(s: SparkSession, dir: String): DataFrame = {
+  def p7LeakageFreeSplit(s: SparkSession, dir: String): DataFrame = Settle.scope("p7_leakage_free_split") { st =>
     import org.apache.spark.sql.expressions.Window
     // NOT persisted: measured (r13 probe) — caching the perturbed
     // corpus costs more than the three consumers' re-scans (parquet
@@ -2393,20 +2339,18 @@ object LlmQueries {
     // consumers, and unsettled the strata window ran twice and the
     // per-strata md5 sort over the corpus ran twice. This is NOT the
     // rejected r13 corpus persist — the text column never caches.
-    val alloc = al.crossJoin(broadcast(lo))
+    val alloc = st.settle(al.crossJoin(broadcast(lo))
       .withColumn("allocated", least(col("n_docs"),
         col("base") + when(col("rk") <= col("lo"), 1L).otherwise(0L)))
-      .select("lang", "source", "n_docs", "allocated")
-      .localCheckpoint(true)
-    val sides = corpus
+      .select("lang", "source", "n_docs", "allocated"), "alloc")
+    val sides = st.settle(corpus
       .withColumn("rn", row_number().over(
         Window.partitionBy("lang", "source")
           .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))))
       .join(broadcast(alloc.select("lang", "source", "allocated")),
         Seq("lang", "source"))
       .select(col("doc_id"), col("lang"), col("source"),
-        (col("rn") <= col("allocated")).as("is_test"))
-      .localCheckpoint(true)
+        (col("rn") <= col("allocated")).as("is_test")), "sides")
     val pairs = Dedup.minhashPairs(corpus, "doc_id", "text",
       w = 3, h = 64, bands = 32, threshold = 0.5)
     val testIds = sides.filter(col("is_test"))

@@ -6,6 +6,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Settle
 
 /** Byte-pair-encoding tokenizer training on Spark — the vocabulary-
   * fitting pass of an LLM data pipeline (Sennrich et al. 2016).
@@ -58,11 +59,10 @@ object BpeTrainer {
     * the second element. Stops early (shorter merge list) if the
     * vocabulary runs out of adjacent pairs before `nMerges`. */
   def fit(docs: DataFrame, textCol: String,
-      nMerges: Int = 5): (DataFrame, Seq[(Int, String, String, Long)]) = {
-    var vocab = wordCounts(docs, textCol)
+      nMerges: Int = 5): (DataFrame, Seq[(Int, String, String, Long)]) = Settle.scope("bpeFit") { st =>
+    var vocab = st.cache(wordCounts(docs, textCol)
       .withColumn("sym",
-        concat(lit(Sep), concat_ws(Sep, split(col("word"), "")), lit(Sep)))
-      .persist()
+        concat(lit(Sep), concat_ws(Sep, split(col("word"), "")), lit(Sep))))
     vocab.count()
     val merges = scala.collection.mutable.ArrayBuffer
       .empty[(Int, String, String, Long)]
@@ -85,19 +85,16 @@ object BpeTrainer {
           merges += ((it, l, r, c))
           val applied = vocab.withColumn("sym",
             expr(s"replace(sym, '$Sep$l$Sep$r$Sep', '$Sep$l$r$Sep')"))
-          // TRUNCATE the lineage every round (eager localCheckpoint,
-          // which also persists the round like the old persist+count):
+          // TRUNCATE the lineage every round (eager settle, which
+          // also materializes the round like the old persist+count):
           // chaining each merge over the previous round's cached plan
           // nests InMemoryRelation trees — Spark's per-job plan-string
           // rendering walks that nest super-linearly, so by ~20 rounds
           // the driver spends minutes (then OOMs) printing plans, not
           // computing — and even a flat LOGICAL re-root leaves an RDD
           // chain that overflows the task-serialization stack by ~50
-          // rounds. The checkpoint pins round k's data, so unpersisting
-          // round k−1 after materialization is safe.
-          val next = applied.localCheckpoint(true)
-          vocab.unpersist()
-          vocab = next
+          // rounds. The scope releases superseded rounds on return.
+          vocab = st.settle(applied, s"merge-$it")
       }
     }
     val out = vocab
@@ -283,27 +280,25 @@ object BpeTrainer {
     * Heaps' law fails). Merge-for-merge equal to [[fit]] by spec. */
   def fitLocal(docs: DataFrame, textCol: String, nMerges: Int = 5,
       maxLocalVocab: Long = DefaultMaxLocalVocab)
-      : (DataFrame, Seq[(Int, String, String, Long)]) = {
+      : (DataFrame, Seq[(Int, String, String, Long)]) = Settle.scope("bpeFitLocal") { st =>
     val spark = docs.sparkSession
-    val wc = wordCounts(docs, textCol).persist()
-    try {
-      if (wc.count() > maxLocalVocab) fit(docs, textCol, nMerges)
-      else {
-        val rows = wc.collect()
-        val words = rows.map(_.getString(0))
-        val cnts = rows.map(_.getLong(1))
-        val (toks, merges) = localMergeLoop(words, cnts, nMerges)
-        val out = words.indices.map { i =>
-          (words(i), cnts(i), toks(i).length, toks(i).mkString(" "))
-        }
-        val sc = spark.sparkContext
-        val df = spark.createDataFrame(
-          sc.parallelize(out, math.max(1,
-            math.min(sc.defaultParallelism, out.length / 4096 + 1))))
-          .toDF("word", "cnt", "n_tokens", "tokens")
-        (df, merges)
+    val wc = st.cache(wordCounts(docs, textCol))
+    if (wc.count() > maxLocalVocab) fit(docs, textCol, nMerges)
+    else {
+      val rows = wc.collect()
+      val words = rows.map(_.getString(0))
+      val cnts = rows.map(_.getLong(1))
+      val (toks, merges) = localMergeLoop(words, cnts, nMerges)
+      val out = words.indices.map { i =>
+        (words(i), cnts(i), toks(i).length, toks(i).mkString(" "))
       }
-    } finally wc.unpersist()
+      val sc = spark.sparkContext
+      val df = spark.createDataFrame(
+        sc.parallelize(out, math.max(1,
+          math.min(sc.defaultParallelism, out.length / 4096 + 1))))
+        .toDF("word", "cnt", "n_tokens", "tokens")
+      (df, merges)
+    }
   }
 
   /** Encode the corpus with a fitted tokenizer: per-doc whitespace

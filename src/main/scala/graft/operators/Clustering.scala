@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Settle
 
 /** Distributed k-means (Lloyd) over an embedding column — the actual
   * coarse quantizer behind SemDeDup / IVF at web scale (the md5-sample
@@ -44,11 +45,14 @@ object Clustering {
       cs.map(_._2), cs.map(_._1.toLong), ipccs))
   }
 
-  /** The Lloyd fit over a pre-cast, persisted (id, v) frame — the
-    * model-state producer shared by [[kmeansAssign]] (assignment read)
-    * and [[silhouetteSimplified]] (quality read). */
-  private def fitCentroids(v: DataFrame, k: Int,
-      iters: Int, initSalt: String = ""): Array[(Int, Array[Double])] = {
+  /** The Lloyd fit over a pre-cast (id, v) frame — the model-state
+    * producer shared by [[kmeansAssign]] and [[silhouetteSimplified]].
+    * `v` is cached for the fit loop only (the init collect and each
+    * iteration's aggregate would re-scan and re-cast the source); the
+    * caller's read recomputes from the scan once, lazily. */
+  private def fitCentroids(vIn: DataFrame, k: Int, iters: Int,
+      initSalt: String = ""): Array[(Int, Array[Double])] = Settle.scope("kmeansFit") { st =>
+    val v = st.cache(vIn)
     // init: md5-order deterministic sample, cid = position in that
     // order; initSalt prefixes the md5 input, giving an independent
     // (but equally deterministic) init per salt — the device e12's
@@ -82,19 +86,12 @@ object Clustering {
     * centroid, rounded to 6 decimals. */
   def kmeansAssign(df: DataFrame, idCol: String, vecCol: String,
       k: Int = 8, iters: Int = 3, initSalt: String = ""): DataFrame = {
-    // persisted for the driver loop (init collect + one aggregate per
-    // iteration would otherwise each re-scan and re-cast the source);
-    // released before returning — the final assignment recomputes from
-    // the scan once, lazily, so no cache outlives the call
-    val v = castVecs(df, idCol, vecCol).persist()
-    val cents = fitCentroids(v, k, iters, initSalt)
-    val win = ranked(cents)
-    val out = v.select(col("id"), element_at(win, 2).cast("int").as("cluster"),
+    val v = castVecs(df, idCol, vecCol)
+    val win = ranked(fitCentroids(v, k, iters, initSalt))
+    v.select(col("id"), element_at(win, 2).cast("int").as("cluster"),
         round(sqrt(greatest(lit(0.0),
           element_at(win, 1) + VectorOps.dot(col("v"), col("v")))), 6)
           .as("dist"))
-    v.unpersist()
-    out
   }
 
   /** Simplified (centroid-based) silhouette per cluster — the O(n·k)
@@ -117,7 +114,7 @@ object Clustering {
   def silhouetteSimplified(df: DataFrame, idCol: String, vecCol: String,
       k: Int = 8, iters: Int = 3): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val v = castVecs(df, idCol, vecCol).persist()
+    val v = castVecs(df, idCol, vecCol)
     val cents = fitCentroids(v, k, iters)
     // full (d, cid) array — unlike the argmin-only NearestCentroid
     // expression, the quality read needs rank 2 as well; k structs of
@@ -129,8 +126,7 @@ object Clustering {
         lit(cid.toLong).as("cid"))
     }: _*))
     val ipvv = VectorOps.dot(col("v"), col("v"))
-    val out = v
-      .withColumn("ds", dArr)
+    v.withColumn("ds", dArr)
       .select(col("id"),
         col("ds")(0).getField("cid").as("cluster"),
         sqrt(greatest(lit(0.0), col("ds")(0).getField("d") + ipvv)).as("a"),
@@ -143,8 +139,6 @@ object Clustering {
       .agg(count(lit(1)).as("n"),
         (sum(col("sil").cast(DecimalType(20, 6))).cast("double") /
           count(lit(1))).as("mean_sil"))
-    v.unpersist()
-    out
   }
 
   /** Greedy k-center coreset (Gonzalez 1985 farthest-point traversal)
@@ -171,18 +165,23 @@ object Clustering {
     * k grows). */
   def kCenterCoreset(df: DataFrame, idCol: String, vecCol: String,
       k: Int = 8): DataFrame = {
-    val v = castVecs(df, idCol, vecCol).persist()
-    val seed = v.orderBy("id").limit(1).collect()(0)
-    var sel = Vector((0, seed.getLong(0), seed.getSeq[Double](1).toArray,
-      Option.empty[Double]))
-    while (sel.size < k) {
-      val cents = sel.map(s => (s._1, s._3)).toArray
-      val far = v.select(col("id"), col("v"),
-          (element_at(ranked(cents), 1) +
-            VectorOps.dot(col("v"), col("v"))).as("d2"))
-        .orderBy(desc("d2"), asc("id")).limit(1).collect()(0)
-      sel = sel :+ ((sel.size, far.getLong(0),
-        far.getSeq[Double](1).toArray, Some(far.getDouble(2))))
+    val v = castVecs(df, idCol, vecCol)
+    // cached for the k-step loop only; the census reads the scan
+    val sel = Settle.scope("kCenterCoreset") { st =>
+      val vc = st.cache(v)
+      val seed = vc.orderBy("id").limit(1).collect()(0)
+      var sel = Vector((0, seed.getLong(0), seed.getSeq[Double](1).toArray,
+        Option.empty[Double]))
+      while (sel.size < k) {
+        val cents = sel.map(s => (s._1, s._3)).toArray
+        val far = vc.select(col("id"), col("v"),
+            (element_at(ranked(cents), 1) +
+              VectorOps.dot(col("v"), col("v"))).as("d2"))
+          .orderBy(desc("d2"), asc("id")).limit(1).collect()(0)
+        sel = sel :+ ((sel.size, far.getLong(0),
+          far.getSeq[Double](1).toArray, Some(far.getDouble(2))))
+      }
+      sel
     }
     val cents = sel.map(s => (s._1, s._3)).toArray
     val census = v
@@ -192,7 +191,6 @@ object Clustering {
       .createDataFrame(sel.map(s => (s._1.toLong, s._2,
         s._4.map(d2 => math.sqrt(math.max(0.0, d2))))))
       .toDF("step", "center_id", "radius_raw")
-    v.unpersist()
     selDf.join(census, Seq("step"), "left")
       .select(col("step"), col("center_id"),
         (round(col("radius_raw"), 6) + lit(0.0)).as("radius"),

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Settle
 
 /** Document-deduplication operators for training-data pipelines.
   *
@@ -157,20 +158,19 @@ object Dedup {
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
       w: Int = 3, h: Int = 64, bands: Int = 32,
       threshold: Double = 0.5,
-      capBucket: Int = 4096, maxSalt: Int = 64): DataFrame = {
+      capBucket: Int = 4096, maxSalt: Int = 64): DataFrame = Settle.scope("minhashPairs") { st =>
     // staged projections: sh → sig → bands, so each step reads the
     // previous as a row attribute (bandKeys over an inline signature
     // would re-run the signature aggregate once per band). persisted:
     // consumed three times below (band explode + both verify-join
     // sides). At cluster scale this is a checkpoint.
-    val withSig = df.select(col(idCol).as("id"),
+    val withSig = st.cache(df.select(col(idCol).as("id"),
         shingleHashes(col(textCol), w).as("sh"))
       .withColumn("sig", minhashSignature(col("sh"), h))
       .withColumn("bands", bandKeys(col("sig"), h, bands))
       // the full signature is subsumed by its band keys from here on —
       // drop it before persisting (512 B/doc dead weight × 3 consumers)
-      .select("id", "sh", "bands")
-      .persist()
+      .select("id", "sh", "bands"))
     // BLOCK-LOCAL candidate generation: pairs are enumerated inside
     // each (band, key) group — vs the former self-join this shuffles
     // the exploded rows (not the join's materialized pair rows).
@@ -194,8 +194,8 @@ object Dedup {
     val sets = withSig.select(col("id"), col("sh"))
     // verified-pair result settles eagerly (it is the output —
     // pair-bounded, orders of magnitude under the corpus) so the
-    // signature cache releases before return (ADVICE r13 release path)
-    val out = cand
+    // scope releases the signature cache on return
+    st.settle(cand
       .join(sets.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
       .join(sets.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
       .withColumn("common", {
@@ -207,10 +207,7 @@ object Dedup {
       .withColumn("jaccard",
         col("common") / (size(col("sh_a")) + size(col("sh_b")) - col("common")))
       .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-      .localCheckpoint(true)
-    withSig.unpersist()
-    out
+      .select("id_a", "id_b", "jaccard"), "verify")
   }
 
   /** Incremental (continuous-crawl) dedup: match a NEW batch against an
@@ -242,14 +239,14 @@ object Dedup {
   def incrementalDedup(corpus: DataFrame, batch: DataFrame,
       idCol: String, textCol: String,
       w: Int = 3, h: Int = 64, bands: Int = 32,
-      threshold: Double = 0.5): DataFrame = {
+      threshold: Double = 0.5): DataFrame = Settle.scope("incrementalDedup") { st =>
     def indexed(df: DataFrame): DataFrame =
       df.select(col(idCol).cast("long").as("id"),
           shingleHashes(col(textCol), w).as("sh"))
         .withColumn("bands", bandKeys(minhashSignature(col("sh"), h), h, bands))
     // the corpus index: in production a stored table, here built once
-    val corpusIdx = indexed(corpus).persist()
-    val batchIdx = indexed(batch).persist()
+    val corpusIdx = st.cache(indexed(corpus))
+    val batchIdx = st.cache(indexed(batch))
     def bandRows(idx: DataFrame): DataFrame =
       idx.select(col("id"), posexplode(col("bands")).as(Seq("band", "key")))
     // pool = stored corpus index ∪ the batch's own bands; an in-batch
@@ -282,16 +279,11 @@ object Dedup {
     val best = verified.groupBy("id")
       .agg(min(struct(col("pid"), col("jaccard"))).as("m"))
       .select(col("id"), col("m.pid").as("dup_of"), col("m.jaccard").as("jaccard"))
-    // batch-row-sized verdicts settle eagerly so both index caches
-    // release before return (ADVICE r13 release-path convention)
-    val out = batchIdx.select(col("id"))
+    // batch-row-sized verdicts settle eagerly: both index caches go on return
+    st.settle(batchIdx.select(col("id"))
       .join(best, Seq("id"), "left")
       .select(col("id"), col("dup_of").isNotNull.as("is_dup"),
-        col("dup_of"), col("jaccard"))
-      .localCheckpoint(true)
-    corpusIdx.unpersist()
-    batchIdx.unpersist()
-    out
+        col("dup_of"), col("jaccard")), "verdicts")
   }
 
   /** Cross-boundary near-dup verdicts against a FIXED held-out pool —
@@ -315,25 +307,17 @@ object Dedup {
   def leakageVerdicts(heldOut: DataFrame, batch: DataFrame,
       idCol: String, textCol: String,
       w: Int = 3, h: Int = 64, bands: Int = 32,
-      threshold: Double = 0.5): DataFrame = {
-    // leakageIndex's contract says the CALLER owns the cache lifetime
-    // — this batch convenience wrapper therefore settles the verdicts
-    // eagerly (localCheckpoint severs lineage; the result is
-    // batch-row-sized) and releases both index caches before
-    // returning, so repeated invocations can't accumulate blocks.
-    val poolIdx = leakageIndex(heldOut, idCol, textCol, w, h, bands).persist()
-    val batchIdx = leakageIndex(batch, idCol, textCol, w, h, bands).persist()
-    val out = leakageVerdictsIndexed(poolIdx, batchIdx, threshold)
-      .localCheckpoint(true)
-    poolIdx.unpersist(false)
-    batchIdx.unpersist(false)
-    out
+      threshold: Double = 0.5): DataFrame = Settle.scope("leakageVerdicts") { st =>
+    // batch-row-sized verdicts settle eagerly: both index caches go on return
+    val poolIdx = st.cache(leakageIndex(heldOut, idCol, textCol, w, h, bands))
+    val batchIdx = st.cache(leakageIndex(batch, idCol, textCol, w, h, bands))
+    st.settle(leakageVerdictsIndexed(poolIdx, batchIdx, threshold), "verdicts")
   }
 
   /** The (id, shingle-set, band-keys) index [[leakageVerdictsIndexed]]
     * matches against — built ONCE over the closed held-out pool at
-    * deployment (the caller persists and owns the cache lifetime),
-    * and per trigger over each arriving batch. */
+    * deployment and per trigger over each arriving batch; the caller
+    * caches it (leakageVerdicts in its scope, streaming S34 per stream). */
   def leakageIndex(df: DataFrame, idCol: String, textCol: String,
       w: Int = 3, h: Int = 64, bands: Int = 32): DataFrame =
     df.select(col(idCol).cast("long").as("id"),
@@ -400,7 +384,7 @@ object Dedup {
     * SemDeDup's own cost model; size `nCells` ∝ corpus/expected-cell so
     * cells stay bounded (the paper uses ~100k cells at web scale). */
   def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
-      nCells: Int = 16, threshold: Double = 0.95): DataFrame = {
+      nCells: Int = 16, threshold: Double = 0.95): DataFrame = Settle.scope("semanticDedup") { st =>
     val c = df.select(col(idCol).cast("long").as("id"),
         col(vecCol).cast("array<double>").as("v"))
       .withColumn("nv", VectorOps.norm(col("v")))
@@ -424,11 +408,9 @@ object Dedup {
     }
     // persisted: three consumers (both self-join sides + the verdict
     // join) would otherwise each recompute the scan+assign stage —
-    // measured ~40% slower uncached at sf0.1. CACHING CONTRACT (the
-    // minhashPairs convention): the blocks live until the session's
-    // next clearCache/unpersist; at cluster scale swap MEMORY_AND_DISK
-    // or drop the persist — assignment recompute is one map pass.
-    val assign = c.withColumn("cell", cellOf).persist()
+    // measured ~40% slower uncached at sf0.1; the lazy result reads it.
+    // At cluster scale swap MEMORY_AND_DISK or drop it (one map pass).
+    val assign = st.cache(c.withColumn("cell", cellOf))
     val lhs = assign.select(col("cell"), col("id").as("id_a"),
       col("v").as("va"), col("nv").as("na"))
     val rhs = assign.select(col("cell"), col("id").as("id_b"),
@@ -747,7 +729,7 @@ object Dedup {
     * production data. */
   def embeddingDupPairs(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, bits: Int = 16, bands: Int = 32,
-      dim: Int = 64): DataFrame = {
+      dim: Int = 64): DataFrame = Settle.scope("embeddingDupPairs") { st =>
     // norms precomputed per vector (not per pair) and the relation
     // persisted across its consumers; the pair expression is then a
     // single dot + one division.
@@ -757,7 +739,7 @@ object Dedup {
     val cosExpr = when(nn === 0.0, 0.0)
       .otherwise(VectorOps.dot(col("a.v"), col("b.v")) / nn)
     if (bands <= 0) {
-      val cached = v.persist()
+      val cached = st.cache(v)
       cached.as("a").join(cached.as("b"), col("a.id") < col("b.id"))
         .select(col("a.id").as("id_a"), col("b.id").as("id_b"), cosExpr.as("cos"))
         .filter(col("cos") >= threshold)
@@ -766,7 +748,7 @@ object Dedup {
       val bk = ColumnBridge.column(graft.expressions.SignLshBands(
         ColumnBridge.expression(col("v")), bits, bands, dim))
       // persisted: band explode + both verify-join sides consume it
-      val withB = v.withColumn("bk", bk).persist()
+      val withB = st.cache(v.withColumn("bk", bk))
       val exploded = withB.select(col("id"), posexplode(col("bk")).as(Seq("band", "key")))
       val cand = exploded.as("a")
         .join(exploded.as("b"),
@@ -815,26 +797,25 @@ object Dedup {
     * At 100 TB the label relation is one long per *distinct paired
     * doc* — orders of magnitude smaller than the corpus. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 25): DataFrame = {
+      maxIter: Int = 25): DataFrame = Settle.scope("connectedComponents") { st =>
     // materialize the pair list ONCE before symmetrizing: the union
     // references it twice, and Spark does not share a subplan across
     // union branches — without this, an expensive upstream (the LSH
     // pair generation) executes twice. The pair graph is orders of
     // magnitude smaller than the corpus, so an eager local checkpoint
     // is cheap and also cuts the iterative loop's replay lineage.
-    val sym = pairs.select(col(aCol).cast("long").as("src"),
-      col(bCol).cast("long").as("dst")).localCheckpoint(true)
+    val sym = st.settle(pairs.select(col(aCol).cast("long").as("src"),
+      col(bCol).cast("long").as("dst")), "pairs")
     // repartition by src BEFORE persisting (r14, guide §2.4): every
     // round equi-joins the edges on src, and the distinct left the
     // cache hash-partitioned by (src, dst) — so each round re-shuffled
     // the FULL edge table. Pinned to src, the cached partitioning
     // satisfies the join's requirement and only the (small, changing)
     // label side moves per round.
-    val edges = sym.union(sym.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().repartition(col("src")).persist()
-    var labels = edges.groupBy("src").agg(min("dst").as("nmin"))
-      .select(col("src").as("id"), least(col("src"), col("nmin")).as("lbl"))
-      .localCheckpoint()
+    val edges = st.cache(sym.union(sym.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct().repartition(col("src")))
+    var labels = st.settle(edges.groupBy("src").agg(min("dst").as("nmin"))
+      .select(col("src").as("id"), least(col("src"), col("nmin")).as("lbl")), "labels")
     var iter = 0
     var converged = labels.isEmpty
     while (!converged && iter < maxIter) {
@@ -852,11 +833,12 @@ object Dedup {
       // before) and answers "did anything change" — the eager-
       // checkpoint-then-isEmpty form paid two jobs per round for the
       // same information
-      val next = stepped.join(jump, col("mid") === col("jid"), "left")
-        .select(col("id"), col("old"),
-          least(col("mid"), coalesce(col("jlbl"), col("mid"))).as("lbl"))
-        .localCheckpoint(false)
-      converged = next.filter(col("lbl") < col("old")).count() == 0L
+      val (next, changed) = st.settleWith(
+        stepped.join(jump, col("mid") === col("jid"), "left")
+          .select(col("id"), col("old"),
+            least(col("mid"), coalesce(col("jlbl"), col("mid"))).as("lbl")),
+        s"round-${iter + 1}")(_.filter(col("lbl") < col("old")).count())
+      converged = changed == 0L
       labels = next.select("id", "lbl")
       iter += 1
     }
@@ -865,7 +847,6 @@ object Dedup {
         s"connectedComponents: hit maxIter=$maxIter with labels still " +
           "changing; components may be under-merged (raise maxIter — " +
           "pointer jumping converges in O(log longest-chain) rounds)")
-    edges.unpersist()
     labels
   }
 
@@ -927,7 +908,7 @@ object Dedup {
     * `w` words contributes its whole text as one partial gram
     * (shingleHashes' documented fallback). */
   def dupSpans(corpus: DataFrame, idCol: String, textCol: String,
-      w: Int = 13): DataFrame = {
+      w: Int = 13): DataFrame = Settle.scope("dupSpans") { st =>
     // PERSISTED (r13): the gram table feeds the df>1 aggregate and the
     // shared-count join — the compiled shingle kernel ran twice (the
     // scaladoc's old "recompute is cheaper" claim lost its A/B probe:
@@ -941,8 +922,8 @@ object Dedup {
     // count(g) skips them, so nullif(·, 0) below restores exactly the
     // old (id, null n_grams, 0, null frac) row. Pinned by DedupSpec's
     // null-text case.
-    val grams = corpus.select(col(idCol).as("id"),
-      explode_outer(shingleHashes(col(textCol), w)).as("g")).persist()
+    val grams = st.cache(corpus.select(col(idCol).as("id"),
+      explode_outer(shingleHashes(col(textCol), w)).as("g")))
     val dupGrams = grams.groupBy("g")
       .agg(count(lit(1)).as("ndocs"))
       .filter(col("ndocs") > 1 && col("g").isNotNull)
@@ -955,18 +936,14 @@ object Dedup {
     // ONLY for a null text, which nullif maps back to the old null),
     // so the third shingle pass the old size(shingleHashes(...))
     // projection paid is gone
-    // per-doc narrow result settles eagerly so the gram cache releases
-    // before return (ADVICE r13 release path)
-    val out = grams.groupBy("id")
+    // per-doc narrow result settles eagerly: the gram cache goes on return
+    st.settle(grams.groupBy("id")
       .agg(nullif(count(col("g")), lit(0L)).as("n_grams"))
       .join(shared, Seq("id"), "left")
       .select(col("id"), col("n_grams"),
         coalesce(col("n_shared"), lit(0L)).as("n_shared"),
         round(coalesce(col("n_shared"), lit(0L)) / col("n_grams"), 6)
-          .as("shared_frac"))
-      .localCheckpoint(true)
-    grams.unpersist()
-    out
+          .as("shared_frac")), "spans")
   }
 
   /** d20: TRUE variable-length exact duplicated-substring spans — the
@@ -1006,12 +983,12 @@ object Dedup {
     * the oracle joins gram STRINGS, so a collision would surface as a
     * gate mismatch rather than hide). */
   def exactSubstringSpans(corpus: DataFrame, idCol: String,
-      textCol: String, minLen: Int = 13): DataFrame = {
+      textCol: String, minLen: Int = 13): DataFrame = Settle.scope("exactSubstringSpans") { st =>
     // PERSISTED: both sides of the self-join scan the same positional
     // index — unpersisted, the tokenize + per-window concat/xxhash
     // kernel (the operator's dominant map cost) ran twice (r13 probe;
     // ~20 B/row cached vs re-hashing every window)
-    val grams = positionalGrams(corpus, idCol, textCol, minLen).persist()
+    val grams = st.cache(positionalGrams(corpus, idCol, textCol, minLen))
     val lhs = grams.select(col("gh"), col("id").as("id_a"),
       col("pos").as("pos_a"))
     val rhs = grams.select(col("gh"), col("id").as("id_b"),
@@ -1020,12 +997,9 @@ object Dedup {
       .filter(col("id_a") < col("id_b") ||
         (col("id_a") === col("id_b") && col("pos_a") < col("pos_b")))
       .select("id_a", "pos_a", "id_b", "pos_b")
-    // span-report result settles eagerly so the gram cache releases
-    // before return (ADVICE r13: library persists need a release path;
-    // the report IS the output, so settling it adds no extra compute)
-    val out = diagonalSpans(pairs, minLen).localCheckpoint(true)
-    grams.unpersist()
-    out
+    // span-report result settles eagerly so the gram cache goes on
+    // return (the report IS the output: settling adds no compute)
+    st.settle(diagonalSpans(pairs, minLen), "spans")
   }
 
   /** d22: [[exactSubstringSpans]] with the exactGroups pre-collapse
@@ -1070,22 +1044,21 @@ object Dedup {
     * [[removeDuplicateSpansOwned]], which never enumerates pairs at
     * all. */
   def exactSubstringSpansGrouped(corpus: DataFrame, idCol: String,
-      textCol: String, minLen: Int = 13): DataFrame = {
+      textCol: String, minLen: Int = 13): DataFrame = Settle.scope("exactSubstringSpansGrouped") { st =>
     val norm = corpus.select(col(idCol).cast("long").as("id"),
       normText(col(textCol)).as("nt"))
     val withDg = norm.withColumn("dg", sha2(col("nt"), 256))
     // identity groups: only (digest, id) pairs shuffle, never text
     val groups = withDg.groupBy("dg")
       .agg(min("id").as("rep"), count(lit(1)).as("gsz"))
-    val reps = withDg.join(groups, Seq("dg"))
+    val reps = st.cache(withDg.join(groups, Seq("dg"))
       .filter(col("id") === col("rep"))
       .select(col("id"), col("nt"), col("gsz"),
-        size(split(col("nt"), " ")).cast("long").as("n_toks"))
-      .persist()
+        size(split(col("nt"), " ")).cast("long").as("n_toks")))
     val sz = reps.select(col("id"), col("gsz"))
     // the d20 diagonal scan, representatives only (normText is
     // idempotent, so re-normalizing nt inside is a no-op). The span
-    // report arrives SETTLED (exactSubstringSpans localCheckpoints its
+    // report arrives SETTLED (exactSubstringSpans checkpoints its
     // output), so both the cross-group and within-group branches read
     // the materialized report — the former extra persist is redundant
     val repSpans = exactSubstringSpans(reps, "id", "nt", minLen)
@@ -1095,9 +1068,8 @@ object Dedup {
       .join(sz.toDF("id_b", "gsz_b"), "id_b")
       .select(col("id_a"), col("id_b"), col("start_a"), col("start_b"),
         col("span_tokens"), (col("gsz_a") * col("gsz_b")).as("n_pairs"))
-    val within = repSpans.filter(col("id_a") === col("id_b"))
-      .join(sz.toDF("id_a", "gsz"), "id_a")
-      .persist()
+    val within = st.cache(repSpans.filter(col("id_a") === col("id_b"))
+      .join(sz.toDF("id_a", "gsz"), "id_a"))
     val withinRows = within.select(col("id_a"),
       col("id_a").as("id_b"), col("start_a"), col("start_b"),
       col("span_tokens"), (col("gsz") + half).as("n_pairs"))
@@ -1111,14 +1083,9 @@ object Dedup {
         col("n_toks").as("span_tokens"),
         expr("gsz * (gsz - 1) DIV 2").as("n_pairs"))
     // grouped report settles eagerly (it is the output) so the rep
-    // and within caches release before return (the ADVICE r13 path:
-    // previously both stayed resident until a session clearCache)
-    val out = cross.unionByName(withinRows).unionByName(mirrorRows)
-      .unionByName(fullRows)
-      .localCheckpoint(true)
-    within.unpersist()
-    reps.unpersist()
-    out
+    // and within caches go on return
+    st.settle(cross.unionByName(withinRows).unionByName(mirrorRows)
+      .unionByName(fullRows), "report")
   }
 
   /** The (id, pos, gramHash) positional index [[exactSubstringSpans]]
@@ -1230,11 +1197,11 @@ object Dedup {
     * RUNS; [[exactSubstringSpans]] stays the forensic report whose
     * output is the pair list itself. */
   def removeDuplicateSpansOwned(corpus: DataFrame, idCol: String,
-      textCol: String, minLen: Int = 13): DataFrame = {
+      textCol: String, minLen: Int = 13): DataFrame = Settle.scope("removeDuplicateSpansOwned") { st =>
     // PERSISTED: the index feeds the ownership aggregate AND the
     // probe join back — unpersisted, every window re-tokenized and
     // re-hashed twice (the exactSubstringSpans measurement)
-    val grams = positionalGrams(corpus, idCol, textCol, minLen).persist()
+    val grams = st.cache(positionalGrams(corpus, idCol, textCol, minLen))
     // gram ownership: the lexicographic-min (id, pos) occurrence; df=1
     // grams drop before the join (their only occurrence is the owner)
     val owners = grams.groupBy("gh")
@@ -1247,12 +1214,10 @@ object Dedup {
       .select(col("id"), col("pos").as("ss"),
         (col("pos") + minLen).as("ee"), lit(1L).as("n"))
     // settle the merged per-doc interval table (doc-bounded rows, the
-    // only consumer of the gram cache) so the cache releases before
-    // the corpus rewrite runs (ADVICE r13 release path) — the rewrite
-    // output itself stays lazy: it carries the full rewritten text and
-    // must not be double-materialized
-    val ivs = mergedIntervals(cuts).localCheckpoint(true)
-    grams.unpersist()
+    // only consumer of the gram cache) so the result never reads the
+    // cache — the rewrite output itself stays lazy: it carries the
+    // full rewritten text and must not be double-materialized
+    val ivs = st.settle(mergedIntervals(cuts), "intervals")
     applyCuts(corpus, idCol, textCol, ivs)
   }
 

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, LongType}
+import graft.Settle
 
 /** Iterative graph traversal over edge DataFrames.
   *
@@ -27,13 +28,13 @@ object Graphs {
     * The frontier and visited sets ride as broadcasts, which holds
     * while they fit on executors (node-id sets, not payloads); for
     * frontiers past broadcast scale pass `broadcastFrontier = false`
-    * to fall back to shuffled equi-joins. The caller should persist
+    * to fall back to shuffled equi-joins. The caller passes a cached
     * `edges` (probed once per round). Driver sequences the rounds; all
     * data movement is distributed — the connectedComponents idiom with
     * a bounded round count.
     */
   def bfs(edges: DataFrame, seeds: DataFrame, maxHops: Int,
-      broadcastFrontier: Boolean = true): DataFrame = {
+      broadcastFrontier: Boolean = true): DataFrame = Settle.scope("bfs") { st =>
     def bc(df: DataFrame): DataFrame =
       if (broadcastFrontier) broadcast(df) else df
     // Per-round EAGER localCheckpoint, not persist+count (r14, guide
@@ -44,18 +45,17 @@ object Graphs {
     // RDD scan: O(1) plan per round, one materializing job per round
     // (same job count as persist+count), and the union below reads
     // settled node-cardinality frames.
-    val s0 = seeds.select(col("node")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint(true)
+    val s0 = st.settle(seeds.select(col("node")).distinct()
+      .withColumn("dist", lit(0L)), "seeds")
     var visited: DataFrame = s0
     var frontier: DataFrame = s0
     for (d <- 1 to maxHops) {
       // edges stay put: the frontier probes them map-side
-      val next = edges
+      val next = st.settle(edges
         .join(bc(frontier.select(col("node").as("src"))), Seq("src"))
         .select(col("dst").as("node")).distinct()
         .join(bc(visited.select("node")), Seq("node"), "left_anti")
-        .withColumn("dist", lit(d).cast(LongType))
-        .localCheckpoint(true)
+        .withColumn("dist", lit(d).cast(LongType)), s"hop-$d")
       visited = visited.union(next) // lazy union of settled rounds
       frontier = next
     }
@@ -91,31 +91,27 @@ object Graphs {
     * idiom). */
   def pageRank(edges: DataFrame, iters: Int,
       damping: Double = 0.85,
-      broadcastNodes: Long = 5000000L): DataFrame = {
-    val cached = scala.collection.mutable.Buffer.empty[DataFrame]
+      broadcastNodes: Long = 5000000L): DataFrame = Settle.scope("pageRank") { st =>
     // one shuffle fixes the probe layout for every later pass (and
     // keeps the persisted table at full core parallelism — an
     // AQE-coalesced tiny cache would serialize every probe)
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).persist()
-    cached += e
+    val e = st.cache(edges.select(col("src"), col("dst"))
+      .repartition(col("src")))
     // no eager count: the nodeDeg aggregation below is e's first
     // consumer and materializes the cache as a side effect — a
     // standalone count() was one extra full cache pass (r13 probe)
     // node inventory + out-degree in ONE aggregation: every endpoint
     // appears, src occurrences carry 1 (deg = Σ), dst occurrences 0
-    val nodeDeg = e.select(explode(array(
+    val nodeDeg = st.cache(e.select(explode(array(
         struct(col("src").as("node"), lit(1L).as("one")),
         struct(col("dst").as("node"), lit(0L).as("one")))).as("x"))
       .groupBy(col("x.node").as("node"))
-      .agg(sum(col("x.one")).as("deg")).persist()
-    cached += nodeDeg
+      .agg(sum(col("x.one")).as("deg")))
     val n = nodeDeg.count()
     val out =
-      if (n <= broadcastNodes) pageRankSmall(e, nodeDeg, n, iters, damping)
-      else pageRankLarge(e, nodeDeg, n, iters, damping, cached)
+      if (n <= broadcastNodes) pageRankSmall(st, e, nodeDeg, n, iters, damping)
+      else pageRankLarge(st, e, nodeDeg, n, iters, damping)
     out.count()
-    cached.foreach(_.unpersist())
     out
   }
 
@@ -126,8 +122,8 @@ object Graphs {
     * IEEE double ops. All per-edge arithmetic (the 9-dp contribution
     * round, the decimal partial sums) stays in Spark, so both regimes
     * and the SQL oracle share bit-identical semantics. */
-  private def pageRankSmall(e: DataFrame, nodeDeg: DataFrame, n: Long,
-      iters: Int, damping: Double): DataFrame = {
+  private def pageRankSmall(st: Settle.Scope, e: DataFrame,
+      nodeDeg: DataFrame, n: Long, iters: Int, damping: Double): DataFrame = {
     import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StructField, StructType}
     import org.apache.spark.sql.Row
     val spark = e.sparkSession
@@ -158,17 +154,15 @@ object Graphs {
     }
     // final 9-dp round runs through Spark's Round (not driver math) so
     // both regimes share the exact rounding semantics
-    toDf(ranks).select(col("src").as("node"),
-        round(col("rank"), 9).as("rank"))
-      .cache()
+    st.cache(toDf(ranks).select(col("src").as("node"),
+        round(col("rank"), 9).as("rank")))
   }
 
   /** Large regime: the rank vector stays distributed; per iteration
     * one shuffled equi-join + key-shuffle aggregation + node-list left
     * join, materialized per round so lineage stays O(1). */
-  private def pageRankLarge(e: DataFrame, nodeDeg: DataFrame, n: Long,
-      iters: Int, damping: Double,
-      cached: scala.collection.mutable.Buffer[DataFrame]): DataFrame = {
+  private def pageRankLarge(st: Settle.Scope, e: DataFrame,
+      nodeDeg: DataFrame, n: Long, iters: Int, damping: Double): DataFrame = {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
     var ranks = nodeDeg.select(col("node"), lit(1.0 / n).as("rank"))
     for (_ <- 1 to iters) {
@@ -178,15 +172,13 @@ object Graphs {
         .select(col("dst").as("node"),
           round(col("rank") / col("deg"), 9).cast(DecimalType(28, 9)).as("c"))
         .groupBy("node").agg(sum(col("c")).as("sc"))
-      ranks = nodeDeg.select("node").join(contribs, Seq("node"), "left")
+      ranks = st.cache(nodeDeg.select("node").join(contribs, Seq("node"), "left")
         .select(col("node"),
           (lit((1.0 - damping) / n) + lit(damping) *
-            coalesce(col("sc").cast(DoubleType), lit(0.0))).as("rank"))
-        .persist()
+            coalesce(col("sc").cast(DoubleType), lit(0.0))).as("rank")))
       ranks.count()
-      cached += ranks
     }
-    ranks.select(col("node"), round(col("rank"), 9).as("rank")).cache()
+    st.cache(ranks.select(col("node"), round(col("rank"), 9).as("rank")))
   }
 
   /** Per-node triangle counts — the local clustering signal behind
@@ -221,38 +213,19 @@ object Graphs {
     * output-sized. */
   def triangleCounts(edges: DataFrame,
       broadcastNodes: Long = 1L << 23,
-      broadcastAdjEdges: Long = 1L << 22): DataFrame = {
-    val und = edges
+      broadcastAdjEdges: Long = 1L << 22): DataFrame = Settle.scope("triangleCounts") { st =>
+    val und = st.cache(edges
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct()
-      .persist()
-    val out = triangleCountsCanonical(und, None,
-      broadcastNodes, broadcastAdjEdges)
-    und.unpersist()
-    out
-  }
-
-  /** [[triangleCounts]] over edges the CALLER certifies canonical
-    * (a < b, distinct, self-loop-free) and persisted — skips the
-    * least/greatest + distinct canonicalization shuffle (a full pass
-    * over the edge table) when the producer already paid it
-    * ([[graphProfile]]'s contract). `degOpt`: a persisted (node, deg)
-    * table over the SAME edges, so a caller that already aggregated
-    * degrees (the profile) doesn't pay the aggregation twice. */
-  private[graft] def triangleCountsCanonical(und: DataFrame,
-      degOpt: Option[DataFrame],
-      broadcastNodes: Long = 1L << 23,
-      broadcastAdjEdges: Long = 1L << 22): DataFrame = {
+      .distinct())
     // both endpoints of the canonical edge carry degree 1 — one
-    // explode-aggregate, the pageRank nodeDeg idiom. PERSISTED: it is
+    // explode-aggregate, the pageRank nodeDeg idiom. CACHED: it is
     // consumed three times (the regime count + both endpoint-degree
     // broadcast builds), and a broadcast build re-executes its child
-    // plan — unpersisted, the aggregation ran once per build.
-    val deg = degOpt.getOrElse(
-      und.select(explode(array(col("a"), col("b"))).as("node"))
-        .groupBy("node").agg(count(lit(1)).as("deg")).persist())
+    // plan — uncached, the aggregation ran once per build.
+    val deg = st.cache(und.select(explode(array(col("a"), col("b"))).as("node"))
+      .groupBy("node").agg(count(lit(1)).as("deg")))
     // bounded model-state broadcasts, decided on EXACT counts (the
     // pageRank broadcastNodes regime; distributed equi-joins above):
     // deg is 16 B/node, adjacency totals ~8 B/oriented-edge — the
@@ -262,7 +235,7 @@ object Graphs {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     val nNodesF = Future(deg.count())
-    val mEdges = und.count() // cheap: und is persisted
+    val mEdges = und.count() // cheap: und is cached
     val nNodes = Await.result(nNodesF,
       scala.concurrent.duration.Duration.Inf)
     val bcN: DataFrame => DataFrame =
@@ -271,11 +244,8 @@ object Graphs {
     val withDeg = und
       .join(bcN(deg.select(col("node").as("a"), col("deg").as("da"))), Seq("a"))
       .join(bcN(deg.select(col("node").as("b"), col("deg").as("db"))), Seq("b"))
-    val oriented = orientedFrom(withDeg, "a", "b", "da", "db").persist()
-    val out = closeOriented(oriented, mEdges <= broadcastAdjEdges)
-    oriented.unpersist()
-    if (degOpt.isEmpty) deg.unpersist()
-    out
+    val oriented = st.cache(orientedFrom(withDeg, "a", "b", "da", "db"))
+    closeOriented(oriented, mEdges <= broadcastAdjEdges)
   }
 
   /** Degree-ordered orientation of a degree-joined canonical edge
@@ -292,20 +262,20 @@ object Graphs {
         .otherwise(struct(col(bCol).as("u"), col(aCol).as("v"))).as("e"))
     .select(col("e.u").as("u"), col("e.v").as("v"))
 
-  /** The edge-iterator triangle close over a PERSISTED degree-ordered
+  /** The edge-iterator triangle close over a CACHED degree-ordered
     * orientation (u, v): per-node triangle counts (node, n_tri),
-    * eagerly materialized. The caller owns `oriented`'s release. */
+    * eagerly materialized. `oriented` belongs to the caller's scope,
+    * which releases it once its own result no longer needs it. */
   private def closeOriented(oriented: DataFrame,
-      broadcastAdj: Boolean): DataFrame = {
+      broadcastAdj: Boolean): DataFrame = Settle.scope("triangleClose") { st =>
     val bcA: DataFrame => DataFrame =
       if (broadcastAdj) (df: DataFrame) => broadcast(df)
       else (df: DataFrame) => df
     // per-u sorted out-neighborhoods; orientation bounds their size.
-    // PERSISTED: both triangle-close joins broadcast it, and each
+    // CACHED: both triangle-close joins broadcast it, and each
     // broadcast build would otherwise re-run the groupBy + sort.
-    val adj = oriented.groupBy(col("u").as("node"))
-      .agg(sort_array(collect_list(col("v"))).as("nbrs"))
-      .persist()
+    val adj = st.cache(oriented.groupBy(col("u").as("node"))
+      .agg(sort_array(collect_list(col("v"))).as("nbrs")))
     // inner join on v is lossless: a triangle's base edge (u,v) always
     // has w ∈ N⁺(v), so v is never a sink for a closing edge
     // native sorted-merge intersection: one primitive buffer per row,
@@ -323,21 +293,9 @@ object Graphs {
       .groupBy("node").agg(count(lit(1)).as("n_tri"))
     // node-cardinality result: materialize eagerly so the adj cache
     // releases before return (the pqTopK convention)
-    val out = counts.localCheckpoint(true)
-    adj.unpersist()
-    out
+    st.settle(counts, "close")
   }
 
-  /** ALL (descendant, ancestor) pairs of a parent FOREST via pointer
-    * DOUBLING: round k turns "all ancestors within 2^(k-1) hops" into
-    * "within 2^k hops" by composing the pair set with itself
-    * ((a,b) ⋈ (b,c) → (a,c)) — ⌈log₂ depth⌉ equi-join rounds instead
-    * of a depth-long chain, the device that makes a 30-deep hierarchy
-    * cost 5 shuffles, not 30. Output size is Σ depth(n) pairs
-    * (inherent to the closure — every node lists its ancestors), each
-    * round's result materialized via localCheckpoint so the next
-    * round joins a settled set, not a growing lineage. `edges` =
-    * (node, parent), roots omitted or self-looped out by the caller. */
   /** Whole-graph structural datasheet (the q77 kernel): one row of
     * n_nodes, n_edges, n_wedges (Σ C(deg,2)), n_triangles, the global
     * clustering coefficient C = 3T/W (transitivity) and the degree
@@ -346,7 +304,7 @@ object Graphs {
     * scale-free integer kernels M·Σxy − (Σx)² and M·Σx² − (Σx)²
     * staged in DECIMAL(38,0) (the t61 discipline) with ONE terminal
     * IEEE division each. `edges` must be canonical (src < dst,
-    * distinct); it is persisted here and re-read by the degree,
+    * distinct); it is cached here and re-read by the degree,
     * moment, and triangle passes. Degenerate guards: clustering null
     * when W = 0, r null when the denominator is 0 (regular graphs —
     * exact integer tests).
@@ -363,10 +321,10 @@ object Graphs {
   def graphProfile(edgesIn: DataFrame,
       triCounts: Option[DataFrame] = None,
       broadcastNodes: Long = 1L << 23,
-      broadcastAdjEdges: Long = 1L << 22): DataFrame = {
+      broadcastAdjEdges: Long = 1L << 22): DataFrame = Settle.scope("graphProfile") { st =>
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
     val d38 = DecimalType(38, 0)
-    val edges = edgesIn.persist()
+    val edges = st.cache(edgesIn)
     // Contract guard (debug-mode — one extra pass over the edge
     // cache): the profile and its triangle close assume canonical
     // edges (src < dst, distinct); a violating caller would get
@@ -381,12 +339,11 @@ object Graphs {
           s"($bad rows with src >= dst, $dups duplicate rows)")
     }
     // node-cardinality table with THREE consumers (the wedge aggregate
-    // and both endpoint-degree broadcast builds) — persist so the
+    // and both endpoint-degree broadcast builds) — cached so the
     // union+groupBy over the edge list runs once
-    val deg = edges.select(col("src").as("v"))
+    val deg = st.cache(edges.select(col("src").as("v"))
       .unionByName(edges.select(col("dst").as("v")))
-      .groupBy("v").agg(count(lit(1)).as("dg"))
-      .persist()
+      .groupBy("v").agg(count(lit(1)).as("dg")))
     val degStats = deg.agg(count(lit(1)).as("n_nodes"),
       sum(expr("dg * (dg - 1) div 2")).as("n_wedges"))
     // regime counts (exact, the pageRank convention — deliberate, not
@@ -406,10 +363,9 @@ object Graphs {
     // (r14, guide §2.5 — previously the `ep` moment join and the
     // close's orientation join each re-scanned the edge cache through
     // their own pair of broadcast probes)
-    val withDeg = edges
+    val withDeg = st.cache(edges
       .join(bcN(deg.select(col("v").as("src"), col("dg").as("du"))), Seq("src"))
-      .join(bcN(deg.select(col("v").as("dst"), col("dg").as("dv"))), Seq("dst"))
-      .persist()
+      .join(bcN(deg.select(col("v").as("dst"), col("dg").as("dv"))), Seq("dst")))
     val mo = withDeg.agg(count(lit(1)).as("m"),
       sum((col("du") + col("dv")).cast(d38)).as("sx"),
       sum((col("du") * col("du") + col("dv") * col("dv")).cast(d38))
@@ -421,11 +377,9 @@ object Graphs {
     // redundant distinct and re-aggregate degrees it already has
     val tri = triCounts.map(_.agg(sum("n_tri").as("tri3")))
       .getOrElse {
-        val oriented = orientedFrom(withDeg, "src", "dst", "du", "dv")
-          .persist()
-        val counts = closeOriented(oriented, mEdges <= broadcastAdjEdges)
-        oriented.unpersist()
-        counts.agg(sum("n_tri").as("tri3")) // = 3·T (3 corners each)
+        val oriented = st.cache(orientedFrom(withDeg, "src", "dst", "du", "dv"))
+        closeOriented(oriented, mEdges <= broadcastAdjEdges)
+          .agg(sum("n_tri").as("tri3")) // = 3·T (3 corners each)
       }
     val m2 = (col("m") * 2).cast(d38) // directed listing size
     val numer = m2 * col("sxy") - col("sx") * col("sx")
@@ -441,22 +395,27 @@ object Graphs {
     // the datasheet is ONE row — settle it eagerly so the edge/degree
     // caches release before return (the pqTopK convention; repeated
     // profile calls must not accumulate cached edge tables)
-    val out = row.localCheckpoint(true)
-    withDeg.unpersist()
-    deg.unpersist()
-    edges.unpersist()
-    out
+    st.settle(row, "datasheet")
   }
 
-  def ancestorPairs(edges: DataFrame, rounds: Int): DataFrame = {
-    var p = edges.select(col("node").as("a"), col("parent").as("b"))
-      .filter(col("a") =!= col("b")).distinct().localCheckpoint(true)
-    for (_ <- 1 to rounds) {
-      val grown = p.union(
+  /** ALL (descendant, ancestor) pairs of a parent FOREST via pointer
+    * DOUBLING: round k turns "all ancestors within 2^(k-1) hops" into
+    * "within 2^k hops" by composing the pair set with itself
+    * ((a,b) ⋈ (b,c) → (a,c)) — ⌈log₂ depth⌉ equi-join rounds instead
+    * of a depth-long chain, the device that makes a 30-deep hierarchy
+    * cost 5 shuffles, not 30. Output size is Σ depth(n) pairs
+    * (inherent to the closure — every node lists its ancestors), each
+    * round's result materialized via localCheckpoint so the next
+    * round joins a settled set, not a growing lineage. `edges` =
+    * (node, parent), roots omitted or self-looped out by the caller. */
+  def ancestorPairs(edges: DataFrame, rounds: Int): DataFrame = Settle.scope("ancestorPairs") { st =>
+    var p = st.settle(edges.select(col("node").as("a"), col("parent").as("b"))
+      .filter(col("a") =!= col("b")).distinct(), "pairs")
+    for (r <- 1 to rounds) {
+      p = st.settle(p.union(
           p.as("x").join(p.as("y"), col("x.b") === col("y.a"))
             .select(col("x.a").as("a"), col("y.b").as("b")))
-        .distinct().localCheckpoint(true)
-      p = grown
+        .distinct(), s"round-$r")
     }
     p
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 
+import graft.Settle
 import graft.expressions.TopKAgg
 
 /** Deterministic corpus-sampling operators.
@@ -83,7 +84,7 @@ object Sampling {
     * on the doc id. The target slice rides the same scan (a boolean
     * flag, not a second pass). */
   def dsirWeights(docs: DataFrame, idCol: String, textCol: String,
-      targetCol: Column, buckets: Int = 256): DataFrame = {
+      targetCol: Column, buckets: Int = 256): DataFrame = Settle.scope("dsirWeights") { st =>
     val grams = docs
       .withColumn("is_target", targetCol)
       .select(col(idCol), col("is_target"),
@@ -92,12 +93,11 @@ object Sampling {
     // pre-aggregate once to (doc, bucket, count): the gram explode +
     // md5 run in exactly ONE pass; everything downstream (model fit,
     // scoring) reuses this ≤256-rows-per-doc table. Cached like d10's
-    // assignments — constant size per doc, released by the session /
-    // caller, recomputable if evicted.
-    val docBuckets = grams
+    // assignments — constant size per doc, released by the enclosing
+    // scope once no result reads it, recomputable if evicted.
+    val docBuckets = st.cache(grams
       .groupBy(col(idCol), col("is_target"), col("b"))
-      .agg(count(lit(1)).as("c"))
-      .persist()
+      .agg(count(lit(1)).as("c")))
     val counts = docBuckets.groupBy("b").agg(
       sum("c").as("cr"),
       sum(when(col("is_target"), col("c")).otherwise(0L)).as("ct"))

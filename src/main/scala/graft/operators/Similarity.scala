@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 
+import graft.Settle
 import graft.expressions.TopKAgg
 
 /** Approximate-nearest-neighbor search over an embedding column.
@@ -290,7 +291,7 @@ object Similarity {
     * (window-free); the exact re-rank touches only rerank·k·|queries|
     * full vectors. */
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      m: Int = 8, ks: Int = 16, rerank: Int = 4): DataFrame = {
+      m: Int = 8, ks: Int = 16, rerank: Int = 4): DataFrame = Settle.scope("pqTopK") { st =>
     val c = withNorm(corpus, "id", "v", "nv")
     val sample: Array[Array[Double]] =
       c.select(col("id").cast("long"), col("v"))
@@ -322,13 +323,12 @@ object Similarity {
           (lit(ipcc(j)(cIdx)) - VectorOps.dot(subv(v, j), cwLit(j, cIdx)) * 2.0).as("d"),
           lit(cIdx).as("c"))
       }: _*)).getField("c")
-    val encoded = c
+    val encoded = st.cache(c
       .withColumn("codes", array((0 until m).map(j => codeOf(col("v"), j)): _*))
       // reconstruction norm² = Σ_j ip(cw_code, cw_code), j ascending
       .withColumn("rn2", (0 until m).map(j =>
           element_at(array(ipcc(j).map(lit(_)): _*), col("codes")(j) + 1))
-        .reduce(_ + _))
-      .persist()
+        .reduce(_ + _)))
     // per-query LUT: lut(j)(c) = ip(q_j, cw_{j,c}); tiny and broadcast
     val q = withNorm(queries, "qid", "qv", "nqv")
       .withColumn("lut", array((0 until m).map(j =>
@@ -349,13 +349,10 @@ object Similarity {
       .join(broadcast(q.select(col("qid"), col("qv"), col("nqv"))), Seq("qid"))
       .select(col("qid"), col("id"), cosOf("v", "qv", "nv", "nqv").as("cos"))
     // materialize the (tiny: |queries|·k rows) result eagerly so the
-    // corpus-sized `encoded` cache can be released before returning —
-    // otherwise every pqTopK call in a long-lived session leaks its
-    // encoded blocks into the block manager until the caller happens to
-    // clearCache
-    val res = topK(exact, k).localCheckpoint(true)
-    encoded.unpersist()
-    res
+    // scope releases the corpus-sized `encoded` cache on return —
+    // otherwise every pqTopK call in a long-lived session would keep
+    // its encoded blocks in the block manager
+    st.settle(topK(exact, k), "rerank")
   }
 
   /** Approximate mutual-kNN graph over an embedding corpus — the
@@ -389,12 +386,12 @@ object Similarity {
 
   /** The directed half of [[knnGraph]]: every node's top-`k` same-cell
     * neighbors as (qid, id, cos, rk) — BEFORE mutual symmetrization.
-    * Materialized (localCheckpoint) at O(nodes × k) rows so the
+    * Materialized (eager settle) at O(nodes × k) rows so the
     * cell-pair generation runs exactly once however many consumers
     * ([[knnGraph]]'s mutual join reads it twice; [[knnHubness]] folds
     * it into in-degrees). */
   def directedTopK(corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int, nCells: Int = 16): DataFrame = {
+      k: Int, nCells: Int = 16): DataFrame = Settle.scope("directedTopK") { st =>
     val c = corpus.select(col(idCol).cast("long").as("id"),
         col(vecCol).cast("array<double>").as("v"))
       .withColumn("nv", VectorOps.norm(col("v")))
@@ -410,7 +407,7 @@ object Similarity {
         ColumnBridge.expression(col("nv")),
         centroids.map(_._2), centroids.map(_._1), ncs)), 2).cast("long")
     }
-    val assign = c.withColumn("cell", cellOf).persist()
+    val assign = st.cache(c.withColumn("cell", cellOf))
     val half = assign.select(col("cell"), col("id").as("id_a"),
         col("v").as("va"), col("nv").as("na"))
       .join(assign.select(col("cell"), col("id").as("id_b"),
@@ -426,9 +423,7 @@ object Similarity {
         col("cos"))
       .union(half.select(col("id_b").as("qid"), col("id_a").as("id"),
         col("cos")))
-    val res = topK(directed, k).localCheckpoint(true)
-    assign.unpersist()
-    res
+    st.settle(topK(directed, k), "topk")
   }
 
   /** Graph-based ANN: fixed-horizon beam search over the [[knnGraph]]
@@ -462,14 +457,10 @@ object Similarity {
   def graphTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       graphK: Int = 5, nCells: Int = 16, beam: Int = 4,
       hops: Int = 2, index: Option[DataFrame] = None,
-      normed: Option[DataFrame] = None): DataFrame = {
-    // `normed`: a caller-settled (id, v, nv) corpus (the e21 sweep
-    // passes one shared localCheckpoint) — concurrent arms each
-    // persisting the IDENTICAL withNorm plan dedupe onto ONE
-    // CacheManager entry, so the first arm to finish unpersisted the
-    // cache out from under the others (results unaffected; the
-    // concurrency win wasn't)
-    val c = normed.getOrElse(withNorm(corpus, "id", "v", "nv").persist())
+      normed: Option[DataFrame] = None): DataFrame = Settle.scope("graphTopK") { st =>
+    // `normed`: a caller-settled (id, v, nv) corpus shared by the e21
+    // arms (arms caching one plan share an entry its creator releases)
+    val c = normed.getOrElse(st.cache(withNorm(corpus, "id", "v", "nv")))
     // entry points: the deterministic md5-order sample (the s3/s5
     // quantizer pick) — real corpus ids, so they are graph nodes
     val seeds: Array[Long] =
@@ -502,13 +493,10 @@ object Similarity {
       val next = graph
         .join(broadcast(bm.withColumnRenamed("id", "node")), Seq("node"))
         .select(col("qid"), col("nbr").as("id"))
-      cand = cand.union(next).distinct().localCheckpoint(true)
       h += 1
+      cand = st.settle(cand.union(next).distinct(), s"hop-$h")
     }
-    val res = topK(score(cand).filter(col("id") =!= col("qid")), k)
-      .localCheckpoint(true)
-    if (normed.isEmpty) c.unpersist()
-    res
+    st.settle(topK(score(cand).filter(col("id") =!= col("qid")), k), "rank")
   }
 
   /** kNN hubness audit (Radovanović et al. 2010, JMLR): the

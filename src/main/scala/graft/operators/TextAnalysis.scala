@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.Settle
 
 /** Text-analysis operators for training-data curation: language ID,
   * quality scoring, token counting, fingerprinting. All pure Column
@@ -462,7 +463,7 @@ object TextAnalysis {
     * doc×distinct-phrase table (bounded by text size, not corpus
     * joins). Per-doc windows order by position — no global sort. */
   def rake(df: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String, topK: Int = 3): org.apache.spark.sql.DataFrame = {
+      textCol: String, topK: Int = 3): org.apache.spark.sql.DataFrame = Settle.scope("rake") { st =>
     import org.apache.spark.sql.expressions.Window
     val tok = df.select(col(idCol).as("doc_id"),
         posexplode(tokens(col(textCol))).as(Seq("p", "tok")))
@@ -474,10 +475,9 @@ object TextAnalysis {
     // window chain — unlike x40's flat bigram explode, the recompute
     // here includes a shuffle+sort per consumer, which A/B measured
     // worth caching
-    val member = tok
+    val member = st.cache(tok
       .withColumn("grp", sum(col("delim").cast("long")).over(wDoc))
-      .filter(!col("delim"))
-      .persist()
+      .filter(!col("delim")))
     val phrases = member.groupBy("doc_id", "grp")
       .agg(sort_array(collect_list(struct(col("p"), col("tok")))).as("pt"))
       .select(col("doc_id"), col("grp"),
@@ -502,13 +502,10 @@ object TextAnalysis {
     // before return; no terminal orderBy (row order is not part of the
     // operator contract — the x45 query applies its own final sort,
     // and a sort here made its range sampling re-evaluate the chain)
-    val out = scored.withColumn("rank", row_number().over(wRank))
+    st.settle(scored.withColumn("rank", row_number().over(wRank))
       .filter(col("rank") <= topK)
       .select(col("doc_id"), col("rank"), col("phrase"),
-        col("score").cast("decimal(28,9)").as("score"), col("n_occur"))
-      .localCheckpoint(true)
-    member.unpersist()
-    out
+        col("score").cast("decimal(28,9)").as("score"), col("n_occur")), "phrases")
   }
 
   /** Flesch reading ease + Flesch–Kincaid grade level (Flesch 1948;

@@ -1,5 +1,6 @@
 package graft.relational
 
+import graft.Settle
 import graft.Tables._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -868,13 +869,13 @@ object Relational {
   // not quadratic, because order size is bounded (~7 items). Rounds
   // are driver-sequenced but all data movement is distributed — the
   // connectedComponents idiom, here with a full DuckDB oracle.
-  def q52BfsReach(s: SparkSession, dir: String): DataFrame = {
+  def q52BfsReach(s: SparkSession, dir: String): DataFrame = Settle.scope("q52_bfs_reach") { st =>
     val li = t(s, dir, "lineitem").select(col("l_orderkey").as("ok"),
       col("l_partkey").as("pk"))
     // no edge-level distinct: the per-round distinct on matched
     // destinations dedupes anyway, and skipping it saves a full
     // edge-table shuffle (the multigraph probes identically)
-    // repartition before persist: AQE would coalesce the ~40 MB join
+    // repartition before caching: AQE would coalesce the ~40 MB join
     // output into 1-2 cached partitions, serializing every BFS probe
     // round (the pageRank lesson) — one extra shuffle buys 32-way
     // probe parallelism for all 3 rounds
@@ -882,16 +883,13 @@ object Relational {
     // carry ~7 rows each, so the per-partition hash build is bounded
     // and the two 600k-row sorts a sort-merge join pays are pure
     // overhead (guide §3.1; measured 2-3x on this join at sf0.1)
-    val edges = li.as("a").join(li.as("b").hint("SHUFFLE_HASH"), Seq("ok"))
+    val edges = st.cache(li.as("a").join(li.as("b").hint("SHUFFLE_HASH"), Seq("ok"))
       .filter(col("a.pk") =!= col("b.pk"))
       .select(col("a.pk").as("src"), col("b.pk").as("dst"))
-      .repartition(col("src"))
-      .persist()
+      .repartition(col("src")))
     val seeds = t(s, dir, "part").filter(col("p_size") === 50)
       .select(col("p_partkey").as("node"))
-    val reach = graft.operators.Graphs.bfs(edges, seeds, maxHops = 3)
-    edges.unpersist()
-    reach.orderBy("node")
+    graft.operators.Graphs.bfs(edges, seeds, maxHops = 3).orderBy("node")
       .select(col("node").as("p_partkey"), col("dist"))
   }
 
@@ -1324,9 +1322,9 @@ object Relational {
     * session counts + the session total ride broadcast joins onto the
     * type²-sized pair table. Lift = exact integer products and ONE
     * IEEE division, replayed identically. */
-  def q68SessionCooccurrence(s: SparkSession, dir: String): DataFrame = {
+  def q68SessionCooccurrence(s: SparkSession, dir: String): DataFrame = Settle.scope("q68_session_cooccurrence") { st =>
     val w = Window.partitionBy("user_id").orderBy("es", "event_id")
-    val st = events(s, dir)
+    val sess = st.cache(events(s, dir)
       .select(col("user_id"), unix_timestamp(col("ts")).as("es"),
         col("event_id"), col("event_type"))
       .withColumn("prev", lag("es", 1).over(w))
@@ -1336,14 +1334,13 @@ object Relational {
       .withColumn("session_id", sum("new_s").over(
         w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .select(col("user_id"), col("session_id"), col("event_type"))
-      .distinct()
-      .persist()
-    val nSess = st.select("user_id", "session_id").distinct()
+      .distinct())
+    val nSess = sess.select("user_id", "session_id").distinct()
       .agg(count(lit(1)).as("n_sess"))
-    val perType = st.groupBy(col("event_type").as("tp"))
+    val perType = sess.groupBy(col("event_type").as("tp"))
       .agg(count(lit(1)).as("n_t"))
-    val pairs = st.as("a")
-      .join(st.as("b"),
+    val pairs = sess.as("a")
+      .join(sess.as("b"),
         col("a.user_id") === col("b.user_id") &&
           col("a.session_id") === col("b.session_id") &&
           col("a.event_type") < col("b.event_type"))

@@ -20,12 +20,23 @@ object TestSpark {
   val sf = "/root/testdata/sf0.001"
 }
 
-/** Every SURVEY §2 query runs and returns rows at sf0.001. */
+/** Every SURVEY §2 query runs and returns rows at sf0.001, and leaves
+  * behind no cache or checkpoint its result does not read. */
 class QueriesSmokeSpec extends AnyFunSuite {
   import TestSpark._
+  import org.apache.spark.sql.graft.CacheEntries
   SparkEntry.queries.foreach { case (name, fn) =>
     test(s"$name returns rows") {
-      assert(fn(spark, sf).count() > 0, s"$name returned 0 rows")
+      val rdds0 = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val entries0 = CacheEntries(spark)
+      val df = fn(spark, sf)
+      assert(df.count() > 0, s"$name returned 0 rows")
+      val refs = Settle.referencedBy(Seq(df))
+      val strayRdds = spark.sparkContext.getPersistentRDDs.keySet.toSet -- rdds0 -- refs.rddIds
+      val strayEntries = CacheEntries(spark).filterNot(e => entries0.exists(_ eq e) || refs.holds(e))
+      assert(strayRdds.isEmpty && strayEntries.isEmpty,
+        s"$name left ${strayRdds.size} persistent RDDs and ${strayEntries.size} cache entries " +
+          "its result does not reference")
     }
   }
   test("entry returns rows") {

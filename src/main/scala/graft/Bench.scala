@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   *
@@ -45,17 +43,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-bench")
     // JVM/codegen warmup so the first measured query isn't charged for it
     SparkEntry.queries("q1_agg")(spark, sfDir).write
       .format("noop").mode("overwrite").save()
@@ -81,15 +69,7 @@ object Bench {
       // opt-in only (SPARK_GRAFT_BENCH_GC=1) — measured at sf0.1 it
       // not only costs ~0.4 s/query outside the window but bleeds GC
       // churn INTO the next measurement (total 179 s -> 120 s without)
-      spark.catalog.clearCache()
-      // clearCache only covers catalog-tracked caches; localCheckpoint
-      // blocks (the graph/sketch eager-materialize convention) live as
-      // bare persistent RDDs until a driver GC — drop them explicitly
-      // or they pile heap pressure onto every later query (s3_ann_ivf
-      // measured anywhere from 1.3 s to 12.5 s depending on how much
-      // debris the q5x/q61 graph queries left behind)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      GraftSession.reset(spark)
       if (sys.env.get("SPARK_GRAFT_BENCH_GC").contains("1")) System.gc()
       val t0 = System.nanoTime()
       // a pass that throws is recorded as FAILED, not silently timed:
@@ -138,7 +118,7 @@ object Bench {
     // 32-core record). Tag a second copy with the core count so both
     // survive; BENCH_full.json stays for readers of the old path.
     val cpuTaggedOut =
-      if (only.isEmpty) Some(s"BENCH_full_c$cpus.json") else None
+      if (only.isEmpty) Some(s"BENCH_full_c${GraftSession.cpus}.json") else None
     // per-query plan-cost notes: costs a registry sweep pays that a
     // production pipeline would not, so a reader doesn't misread them
     // as regressions (VERDICT r12 item 6)

@@ -2,7 +2,7 @@ package graft
 
 import graft.llm.LlmQueries
 import graft.operators.Dedup
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Spark-side certification of d20_exact_substrings on duplication
@@ -37,15 +37,7 @@ import org.apache.spark.sql.functions._
 object CertifyDup {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outJson) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-certify-dup")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-certify-dup")
     val t0 = System.nanoTime()
 
     val corpus = LlmQueries.d20Corpus(spark, sfDir)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump a registered query's plans to a file for offline
   * inspection (lambda-inlining audits, exchange counts, pushdown
   * checks). Not part of the library.
@@ -22,16 +20,7 @@ object PlanDump {
       sys.exit(2)
     }
     val Array(name, sfDir, outFile) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local("graft-plandump")
     val (df, settled) = Settle.capture(SparkEntry.queries(name)(spark, sfDir))
     val txt = new StringBuilder
     txt ++= "== OPTIMIZED ==\n" ++= df.queryExecution.optimizedPlan.toString

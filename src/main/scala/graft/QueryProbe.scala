@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool (not part of the library): decompose a registered query's
   * wall time into plan time (analyze + optimize + physical planning)
@@ -22,17 +21,7 @@ object QueryProbe {
     val names = args(0).split(',').map(_.trim).filter(_.nonEmpty)
     val reps = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-queryprobe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local("graft-queryprobe")
     // JVM warmup (the Bench convention)
     SparkEntry.queries("q1_agg")(spark, sfDir).write
       .format("noop").mode("overwrite").save()
@@ -58,8 +47,7 @@ object QueryProbe {
     for (name <- names; r <- 1 to reps) {
       jobLines.synchronized(jobLines.clear())
       stageAgg.set(0L)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      GraftSession.reset(spark)
       val t0 = System.nanoTime()
       val df = SparkEntry.queries(name)(spark, sfDir)
       // force analysis+optimization+physical planning of the TERMINAL

@@ -12,7 +12,8 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.graft.PlanBridge
 
 /** The one owner of cache lifetimes in the batch layers (operators,
-  * query registries): `Settle.scope(label) { st => … st.cache(df) …
+  * query registries) and streaming (one [[open]] scope per query):
+  * `Settle.scope(label) { st => … st.cache(df) …
   * st.settle(df, phase) … }`. On exit a scope releases every cache and
   * checkpoint it created that its result's plan (a DataFrame, or any
   * tuple, `Seq` or `Option` of them) does not reference, and hands the
@@ -61,6 +62,11 @@ object Settle {
     parent.foreach(_.adopt(survivors))
     a
   }
+
+  /** A scope not tied to one block — a streaming query's lifetime:
+    * [[Scope.within]] runs each trigger as its child, [[Scope.close]]
+    * releases all it holds. */
+  def open(label: String): Scope = new Scope(label)
 
   /** Runs `body`, returning with its value every frame settled while it
     * ran (on any thread), in settle order. */
@@ -129,6 +135,21 @@ object Settle {
         }
       } finally pool.shutdown()
     }
+
+    /** Runs `body` on this thread in a child scope of this one, then
+      * keeps only what its result reads: the child's survivors become
+      * this scope's, and what this scope held before that the result
+      * no longer reads (the previous trigger's state) is released. */
+    def within[A](label: String)(body: Scope => A): A = {
+      val prev = current.get
+      current.set(this)
+      val a = try scope(label)(body) finally current.set(prev)
+      adopt(release(Some(referencedBy(frames(a)))))
+      a
+    }
+
+    /** Releases everything this scope holds. */
+    def close(): Unit = release(None)
 
     private def hold(h: Held): Unit = adopt(Seq(h))
     private[Settle] def adopt(hs: Seq[Held]): Unit = synchronized { held ++= hs }

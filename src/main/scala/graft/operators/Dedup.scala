@@ -327,8 +327,8 @@ object Dedup {
   /** [[leakageVerdicts]] over PRE-BUILT indexes — the kernel streaming
     * S34 drives so the fixed pool index is computed and cached once
     * for the stream's lifetime instead of re-shingled every trigger;
-    * cache lifetimes belong to the caller (S34 unpersists the batch
-    * index when its trigger's sink returns). */
+    * cache lifetimes belong to the caller (S34's trigger scope
+    * releases the batch index when the trigger ends). */
   def leakageVerdictsIndexed(poolIdx: DataFrame, batchIdx: DataFrame,
       threshold: Double = 0.5): DataFrame = {
     def bandRows(idx: DataFrame): DataFrame =

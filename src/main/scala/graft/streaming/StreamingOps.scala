@@ -1,7 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.util.UUID
+import graft.Settle
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface: the events table consumed as an
@@ -13,43 +16,126 @@ import org.apache.spark.sql.types._
   * horizon. Both survive arbitrarily long streams. */
 object StreamingOps {
 
-  /** Release stream-lifetime caches when THIS query terminates: the
-    * guard operators (S34/S40) persist a fixed pool index for the
-    * stream's lifetime — without a termination hook the blocks outlive
-    * `query.stop()` for the whole session, so repeated guard starts
-    * accumulate pool caches. A self-removing StreamingQueryListener
-    * keyed on the query's runId unpersists exactly once; the
-    * registered-before-start / runId-learned-after-start seam is
-    * closed by re-checking a terminated-id set under the listener's
-    * lock (unpersist is idempotent, so the worst race is a no-op). */
-  private def unpersistOnTermination(spark: SparkSession,
-      cached: Seq[DataFrame])(start: => org.apache.spark.sql.streaming.StreamingQuery)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.streaming.StreamingQueryListener
-    val listener = new StreamingQueryListener {
-      @volatile private var target: Option[java.util.UUID] = None
-      private val terminated = new java.util.HashSet[java.util.UUID]()
-      def arm(runId: java.util.UUID): Unit = synchronized {
-        if (terminated.contains(runId)) release() else target = Some(runId)
+  /** The relations one trigger of a `foreachBatch` fold hands the next. */
+  private type State = Seq[DataFrame]
+
+  /** Every `foreachBatch` operator runs through here, and a stream-
+    * lifetime [[Settle]] scope labelled `label` owns all it caches.
+    * `init` settles what the query needs before its first trigger (an
+    * initial state, a fixed pool index) at construction. Each trigger
+    * runs `step(st, prev, batch)` in the child scope `<label>/trigger`
+    * and hands its output to `sink` there, so trigger-scoped caches go
+    * when the trigger ends; the returned state passes to the stream
+    * scope, which then releases the previous state. One
+    * StreamingQueryListener closes the stream scope when the query
+    * terminates — exhausted, stopped or failed. Registered before
+    * `start()` and armed with the run id after it, the listener keeps
+    * the ids that terminated in between, so no termination is missed.
+    *
+    * With `stateDir` the state also snapshots every trigger and a
+    * restarted query restores it ([[SnapshotState]]); `checkpointDir`
+    * checkpoints the source offsets. */
+  private def foldStream(label: String, input: DataFrame,
+      trigger: Trigger = Trigger.AvailableNow(),
+      stateDir: Option[String] = None, checkpointDir: Option[String] = None,
+      init: Settle.Scope => State = _ => Nil)(
+      step: (Settle.Scope, State, DataFrame) => (State, DataFrame))(
+      sink: DataFrame => Unit): StreamingQuery = {
+    val spark = input.sparkSession
+    val stream = Settle.open(label)
+    final class Closer extends StreamingQueryListener {
+      private var runId: Option[UUID] = None
+      private val ended = new java.util.HashSet[UUID]()
+      def arm(id: UUID): Unit = synchronized {
+        if (ended.contains(id)) close() else runId = Some(id)
       }
-      private def release(): Unit = {
-        cached.foreach(_.unpersist(false))
+      def close(): Unit = {
+        stream.close()
         spark.streams.removeListener(this)
       }
-      override def onQueryStarted(
-          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
       override def onQueryTerminated(
           e: StreamingQueryListener.QueryTerminatedEvent): Unit = synchronized {
-        terminated.add(e.runId)
-        if (target.contains(e.runId)) release()
+        ended.add(e.runId)
+        if (runId.contains(e.runId)) close()
       }
     }
-    spark.streams.addListener(listener)
-    val q = start
-    listener.arm(q.runId)
-    q
+    val closer = new Closer
+    spark.streams.addListener(closer)
+    try {
+      var state = stream.within(s"$label/init")(init)
+      val writer = input.writeStream
+        .foreachBatch { (b: Dataset[Row], batchId: Long) =>
+          val bs = b.sparkSession
+          val prev = if (state.nonEmpty) state
+            else stateDir.flatMap(SnapshotState.restore(bs, _, batchId)).getOrElse(Nil)
+          state = stream.within(s"$label/trigger") { st =>
+            val (next, out) = step(st, prev, b)
+            stateDir.foreach(SnapshotState.commit(bs, _, batchId, next))
+            sink(out)
+            next
+          }
+        }
+        .trigger(trigger)
+      checkpointDir.foreach(d => writer.option("checkpointLocation", d))
+      val q = writer.start()
+      closer.arm(q.runId)
+      q
+    } catch {
+      case t: Throwable => closer.close(); throw t
+    }
+  }
+
+  /** Durable snapshots of a fold's state, for the operators that take
+    * a `stateDir`: each trigger writes its state's relations under
+    * `state_batch=<batchId>/<i>`, and a restarted query restores the
+    * newest snapshot with id < batchId.
+    *
+    * `< batchId` (not <=) is what makes the replayed trigger
+    * idempotent: after a crash, Structured Streaming re-runs the last
+    * uncommitted batch with the SAME id and data (checkpointed
+    * offsets), and the fold re-derives from snapshot id−1 + that
+    * batch, overwriting snapshot id with identical content. A partial
+    * snapshot from a crash mid-write is never read, because the
+    * snapshot write happens BEFORE the trigger's offset commit — an
+    * incomplete snapshot id implies offset id never committed, so the
+    * restart replays id and overwrites it. */
+  private[streaming] object SnapshotState {
+    private val Prefix = "state_batch="
+
+    private def snapshots(bs: SparkSession, dir: String) = {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      val fs = p.getFileSystem(bs.sparkContext.hadoopConfiguration)
+      val ids =
+        if (!fs.exists(p)) Seq.empty
+        else fs.listStatus(p).toSeq.map(_.getPath)
+          .filter(_.getName.startsWith(Prefix))
+          .map(s => s -> s.getName.stripPrefix(Prefix).toLong)
+      (fs, ids)
+    }
+
+    /** Newest committed snapshot with id < batchId, if any. */
+    def restore(bs: SparkSession, dir: String, batchId: Long): Option[State] = {
+      val (fs, ids) = snapshots(bs, dir)
+      ids.filter(_._2 < batchId).maxByOption(_._2).map { case (base, _) =>
+        fs.listStatus(base).toSeq.map(_.getPath.getName).filter(_.forall(_.isDigit))
+          .sortBy(_.toInt).map(i => bs.read.parquet(s"$base/$i"))
+      }
+    }
+
+    /** Write snapshot `batchId` and prune ids < batchId−1: recovery
+      * only ever reads the newest snapshot and its crash-replay anchor,
+      * and anything older would grow the state dir without bound. The
+      * state itself is settled, so its lineage ends at its own blocks
+      * and never reads a snapshot a later prune deletes. */
+    def commit(bs: SparkSession, dir: String, batchId: Long, state: State): Unit = {
+      state.zipWithIndex.foreach { case (df, i) =>
+        df.write.mode("overwrite").parquet(s"$dir/$Prefix$batchId/$i")
+      }
+      val (fs, ids) = snapshots(bs, dir)
+      ids.filter(_._2 < batchId - 1).foreach(s => fs.delete(s._1, true))
+    }
   }
 
   /** The events parquet schema as written by the generator (nanosecond
@@ -258,14 +344,10 @@ object StreamingOps {
     * per-doc aggregate — not a row-wise enrichment. */
   def streamingIncrementalDedup(docs: DataFrame, corpus: DataFrame,
       idCol: String, textCol: String)(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        sink(graft.operators.Dedup.incrementalDedup(
-          corpus, b.toDF(), idCol, textCol))
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      sink: DataFrame => Unit): StreamingQuery =
+    foldStream("S8", docs) { (_, _, b) =>
+      (Nil, graft.operators.Dedup.incrementalDedup(corpus, b, idCol, textCol))
+    }(sink)
 
   /** S34: streaming leakage guard — p7's live half. The held-out
     * (eval) set is FIXED at deployment; its LSH band index + shingle
@@ -283,33 +365,19 @@ object StreamingOps {
     * same-trigger train docs are correctly invisible to each other.
     * Per trigger: the batch explodes its own bands into one equi-join
     * against the fixed index + the exact verify on survivors —
-    * batch-proportional work, never corpus-proportional. */
+    * batch-proportional work, never corpus-proportional. The pool
+    * index is cached once for the stream's lifetime (every trigger
+    * probes the same cache), the batch's index for its trigger. */
   def streamingLeakageGuard(docs: DataFrame, heldOut: DataFrame,
       idCol: String, textCol: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    // the closed-at-deployment index, shingled and cached ONCE for the
-    // stream's lifetime — every trigger probes this same cache (the
-    // docstring's "constant index" made literal; it was previously
-    // rebuilt per micro-batch)
-    val poolIdx = graft.operators.Dedup
-      .leakageIndex(heldOut, idCol, textCol).persist()
-    // pool cache released when the query terminates (the batchIdx
-    // trigger-scoped cleanup's stream-lifetime counterpart)
-    unpersistOnTermination(docs.sparkSession, Seq(poolIdx)) {
-      docs.writeStream
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val batchIdx = graft.operators.Dedup
-            .leakageIndex(b.toDF(), idCol, textCol).persist()
-          try sink(graft.operators.Dedup
-            .leakageVerdictsIndexed(poolIdx, batchIdx))
-          finally batchIdx.unpersist() // trigger-scoped, like S32/S33/S35
-        }
-        .trigger(trigger)
-        .start()
-    }
-  }
+      trigger: Trigger = Trigger.AvailableNow())(
+      sink: DataFrame => Unit): StreamingQuery =
+    foldStream("S34", docs, trigger, init = st =>
+        Seq(st.cache(graft.operators.Dedup.leakageIndex(heldOut, idCol, textCol)))) {
+      (st, pool, b) =>
+        val batchIdx = st.cache(graft.operators.Dedup.leakageIndex(b, idCol, textCol))
+        (pool, graft.operators.Dedup.leakageVerdictsIndexed(pool.head, batchIdx))
+    }(sink)
 
   /** S40: streaming exact-substring guard — d20's live half and S34's
     * positional sibling: each arriving doc is checked for MAXIMAL
@@ -331,46 +399,35 @@ object StreamingOps {
     * triggers recompute identical verdicts. */
   def streamingSubstringGuard(docs: DataFrame, pool: DataFrame,
       idCol: String, textCol: String, minLen: Int = 13,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val poolIdx = graft.operators.Dedup
-      .positionalGrams(pool, idCol, textCol, minLen).persist()
-    // pool cache released when the query terminates (mirrors S34)
-    unpersistOnTermination(docs.sparkSession, Seq(poolIdx)) {
-    docs.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val batch = b.toDF()
-        val batchIdx = graft.operators.Dedup
-          .positionalGrams(batch, idCol, textCol, minLen).persist()
-        try {
-          val spans = graft.operators.Dedup
-            .crossSubstringSpans(poolIdx, batchIdx, minLen)
-          val merged = graft.operators.Intervals.merge(
-            spans.select(col("id_b").as("id"), col("start_b").as("ss"),
-              (col("start_b") + col("span_tokens")).as("ee"),
-              lit(1L).as("n")),
-            keyCol = "id")
-          val perDoc = spans.groupBy(col("id_b").as("id"))
-            .agg(count(lit(1)).as("n_spans"),
-              max(col("span_tokens")).as("max_span"))
-            .join(merged.groupBy("id")
-              .agg(sum(col("m_end") - col("m_start"))
-                .as("n_copied_tokens")), Seq("id"))
-          sink(batch
-            .select(col(idCol).cast("long").as("id"))
-            .join(perDoc, Seq("id"), "left")
-            .select(col("id"),
-              coalesce(col("n_spans"), lit(0L)).as("n_spans"),
-              coalesce(col("max_span"), lit(0L)).as("max_span"),
-              coalesce(col("n_copied_tokens"), lit(0L))
-                .as("n_copied_tokens")))
-        } finally batchIdx.unpersist() // trigger-scoped, like S34
-      }
-      .trigger(trigger)
-      .start()
-    }
-  }
+      trigger: Trigger = Trigger.AvailableNow())(
+      sink: DataFrame => Unit): StreamingQuery =
+    foldStream("S40", docs, trigger, init = st =>
+        Seq(st.cache(graft.operators.Dedup.positionalGrams(pool, idCol, textCol, minLen)))) {
+      (st, poolIdx, batch) =>
+        val batchIdx = st.cache(graft.operators.Dedup
+          .positionalGrams(batch, idCol, textCol, minLen))
+        val spans = graft.operators.Dedup
+          .crossSubstringSpans(poolIdx.head, batchIdx, minLen)
+        val merged = graft.operators.Intervals.merge(
+          spans.select(col("id_b").as("id"), col("start_b").as("ss"),
+            (col("start_b") + col("span_tokens")).as("ee"),
+            lit(1L).as("n")),
+          keyCol = "id")
+        val perDoc = spans.groupBy(col("id_b").as("id"))
+          .agg(count(lit(1)).as("n_spans"),
+            max(col("span_tokens")).as("max_span"))
+          .join(merged.groupBy("id")
+            .agg(sum(col("m_end") - col("m_start"))
+              .as("n_copied_tokens")), Seq("id"))
+        (poolIdx, batch
+          .select(col(idCol).cast("long").as("id"))
+          .join(perDoc, Seq("id"), "left")
+          .select(col("id"),
+            coalesce(col("n_spans"), lit(0L)).as("n_spans"),
+            coalesce(col("max_span"), lit(0L)).as("max_span"),
+            coalesce(col("n_copied_tokens"), lit(0L))
+              .as("n_copied_tokens")))
+    }(sink)
 
   /** S35: streaming autocorrelation monitor — t65's live half. State
     * per user is the five exact Pearson sums per lag (DECIMAL(38,0),
@@ -401,75 +458,47 @@ object StreamingOps {
     * crossing the kill point and proves the resumed fold equals the
     * uninterrupted batch answer. */
   def streamingAutocorr(rows: DataFrame,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow(),
+      trigger: Trigger = Trigger.AvailableNow(),
       stateDir: Option[String] = None,
       checkpointDir: Option[String] = None)(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+      sink: DataFrame => Unit): StreamingQuery = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.types.{DecimalType, LongType}
     val d38 = DecimalType(38, 0)
     val sumCols = Seq("n1", "sx1", "sy1", "sxy1", "sxx1", "syy1",
       "n7", "sx7", "sy7", "sxy7", "sxx7", "syy7")
-    var tails: DataFrame = null
-    var sums: DataFrame = null
-    val writer = rows.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val bs = b.sparkSession
-        // Checkpoint RECOVERY for the TWO-relation state shape (the
-        // ≤7-rows/user boundary buffer + the per-user sums row) —
-        // streamingIncrementalMv's protocol, one snapshot dir holding
-        // both relations: restore the newest snapshot with id <
-        // batchId (so the crash-replayed trigger re-derives from
-        // id−1 and overwrites id idempotently); a partial snapshot is
-        // never read because the write lands BEFORE the trigger's
-        // offset commit.
-        if (tails == null && sums == null) stateDir.foreach { dir =>
-          val p = new org.apache.hadoop.fs.Path(dir)
-          val fs = p.getFileSystem(bs.sparkContext.hadoopConfiguration)
-          val committed =
-            if (!fs.exists(p)) Array.empty[Long]
-            else fs.listStatus(p).map(_.getPath.getName)
-              .filter(_.startsWith("state_batch="))
-              .map(_.stripPrefix("state_batch=").toLong)
-              .filter(_ < batchId)
-          if (committed.nonEmpty) {
-            val base = s"$dir/state_batch=${committed.max}"
-            tails = bs.read.parquet(s"$base/tails")
-            sums = bs.read.parquet(s"$base/sums")
-          }
-        }
-        val daily = b.toDF()
-          .select(col("user_id"), to_date(col("ts")).as("day"),
-            (col("value").cast(DecimalType(12, 2)) * lit(100))
-              .cast(LongType).as("c"))
-          .groupBy("user_id", "day").agg(sum(col("c")).as("x"))
-        val u = (if (tails == null) daily.withColumn("is_new", lit(true))
-          else tails.withColumn("is_new", lit(false))
-            .unionByName(daily.withColumn("is_new", lit(true))))
-          .persist()
-        val w = Window.partitionBy("user_id").orderBy("day")
-        def incSums(y: Column, p: String) = Seq(
-          count(y).cast(LongType).as(s"n$p"),
-          coalesce(sum(when(y.isNotNull, col("x")).cast(d38)),
-            lit(0).cast(d38)).as(s"sx$p"),
-          coalesce(sum(y.cast(d38)), lit(0).cast(d38)).as(s"sy$p"),
-          coalesce(sum(col("x").cast(d38) * y.cast(d38)),
-            lit(0).cast(d38)).as(s"sxy$p"),
-          coalesce(sum(when(y.isNotNull,
-            col("x").cast(d38) * col("x").cast(d38))),
-            lit(0).cast(d38)).as(s"sxx$p"),
-          coalesce(sum(y.cast(d38) * y.cast(d38)),
-            lit(0).cast(d38)).as(s"syy$p"))
-        val aggs = Seq(count(lit(1)).cast(LongType).as("n_days")) ++
-          incSums(col("y1"), "1") ++ incSums(col("y7"), "7")
-        val inc = u
-          .withColumn("y1", lag("x", 1).over(w))
-          .withColumn("y7", lag("x", 7).over(w))
-          .filter(col("is_new"))
-          .groupBy("user_id").agg(aggs.head, aggs.tail: _*)
-        val folded = (if (sums == null) inc else {
-          val old = sums
+    foldStream("S35", rows, trigger, stateDir, checkpointDir) { (st, prev, b) =>
+      val daily = b
+        .select(col("user_id"), to_date(col("ts")).as("day"),
+          (col("value").cast(DecimalType(12, 2)) * lit(100))
+            .cast(LongType).as("c"))
+        .groupBy("user_id", "day").agg(sum(col("c")).as("x"))
+      val u = st.cache(prev match {
+        case Seq(tails, _) => tails.withColumn("is_new", lit(false))
+          .unionByName(daily.withColumn("is_new", lit(true)))
+        case _ => daily.withColumn("is_new", lit(true))
+      })
+      val w = Window.partitionBy("user_id").orderBy("day")
+      def incSums(y: Column, p: String) = Seq(
+        count(y).cast(LongType).as(s"n$p"),
+        coalesce(sum(when(y.isNotNull, col("x")).cast(d38)),
+          lit(0).cast(d38)).as(s"sx$p"),
+        coalesce(sum(y.cast(d38)), lit(0).cast(d38)).as(s"sy$p"),
+        coalesce(sum(col("x").cast(d38) * y.cast(d38)),
+          lit(0).cast(d38)).as(s"sxy$p"),
+        coalesce(sum(when(y.isNotNull,
+          col("x").cast(d38) * col("x").cast(d38))),
+          lit(0).cast(d38)).as(s"sxx$p"),
+        coalesce(sum(y.cast(d38) * y.cast(d38)),
+          lit(0).cast(d38)).as(s"syy$p"))
+      val aggs = Seq(count(lit(1)).cast(LongType).as("n_days")) ++
+        incSums(col("y1"), "1") ++ incSums(col("y7"), "7")
+      val inc = u
+        .withColumn("y1", lag("x", 1).over(w))
+        .withColumn("y7", lag("x", 7).over(w))
+        .filter(col("is_new"))
+        .groupBy("user_id").agg(aggs.head, aggs.tail: _*)
+      val sums = st.settle(prev match {
+        case Seq(_, old) =>
           old.as("a").join(inc.as("b"), Seq("user_id"), "full_outer")
             .select(col("user_id") +:
               (("n_days" +: sumCols).map { c =>
@@ -477,62 +506,23 @@ object StreamingOps {
                   coalesce(col(s"b.$c"), lit(0).cast(d38)))
                   .cast(if (c.startsWith("n")) LongType else d38).as(c)
               }): _*)
-        }).persist()
-        folded.count() // settle before releasing the parent state
-        val newTails = u
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("user_id").orderBy(col("day").desc)))
-          .filter(col("rn") <= 7)
-          .select("user_id", "day", "x")
-          .persist()
-        newTails.count()
-        val (nextSums, nextTails) = stateDir match {
-          case Some(dir) =>
-            val base = s"$dir/state_batch=$batchId"
-            folded.write.mode("overwrite").parquet(s"$base/sums")
-            newTails.write.mode("overwrite").parquet(s"$base/tails")
-            // prune: only batchId-1 is ever read again (the crash-
-            // replay anchor) — older snapshots are unreachable
-            val p = new org.apache.hadoop.fs.Path(dir)
-            val fs = p.getFileSystem(bs.sparkContext.hadoopConfiguration)
-            fs.listStatus(p).map(_.getPath)
-              .filter(_.getName.startsWith("state_batch="))
-              .filter(_.getName.stripPrefix("state_batch=").toLong < batchId - 1)
-              .foreach(fs.delete(_, true))
-            // RE-ROOT on the snapshot just written: after a restore,
-            // folded/newTails carry lineage into the RESTORED
-            // state_batch= dir, which a later trigger's prune deletes
-            // — if a persisted block were then lost (executor death,
-            // cache eviction past the disk tier), recomputation would
-            // read a deleted path and throw. The fresh read's lineage
-            // roots at the current snapshot, which the prune never
-            // touches while it is newest-or-anchor.
-            val rs = bs.read.parquet(s"$base/sums").persist()
-            val rt = bs.read.parquet(s"$base/tails").persist()
-            rs.count(); rt.count()
-            folded.unpersist()
-            newTails.unpersist()
-            (rs, rt)
-          case None => (folded, newTails)
-        }
-        if (sums != null) sums.unpersist()
-        if (tails != null) tails.unpersist()
-        u.unpersist()
-        sums = nextSums
-        tails = nextTails
-        sink(sums.select(col("user_id"), col("n_days"),
-          col("n1").as("n_lag1"),
-          graft.operators.SeriesStats.pearson(col("n1"), col("sx1"),
-            col("sy1"), col("sxy1"), col("sxx1"), col("syy1"))
-            .as("autocorr_1"),
-          col("n7").as("n_lag7"),
-          graft.operators.SeriesStats.pearson(col("n7"), col("sx7"),
-            col("sy7"), col("sxy7"), col("sxx7"), col("syy7"))
-            .as("autocorr_7")))
-      }
-      .trigger(trigger)
-    checkpointDir.foreach(d => writer.option("checkpointLocation", d))
-    writer.start()
+        case _ => inc
+      }, "sums")
+      val tails = st.settle(u
+        .withColumn("rn", row_number().over(
+          Window.partitionBy("user_id").orderBy(col("day").desc)))
+        .filter(col("rn") <= 7)
+        .select("user_id", "day", "x"), "tails")
+      (Seq(tails, sums), sums.select(col("user_id"), col("n_days"),
+        col("n1").as("n_lag1"),
+        graft.operators.SeriesStats.pearson(col("n1"), col("sx1"),
+          col("sy1"), col("sxy1"), col("sxx1"), col("syy1"))
+          .as("autocorr_1"),
+        col("n7").as("n_lag7"),
+        graft.operators.SeriesStats.pearson(col("n7"), col("sx7"),
+          col("sy7"), col("sxy7"), col("sxx7"), col("syy7"))
+          .as("autocorr_7")))
+    }(sink)
   }
 
   /** S10: streaming CDC merge — a change feed applied to a maintained
@@ -541,27 +531,19 @@ object StreamingOps {
     * enrichment). The updated snapshot goes to `sink` after every
     * trigger; batches apply strictly in trigger order (foreachBatch's
     * sequential contract), so the maintained state equals the batch
-    * fold. Each new snapshot is materialized (persist + count) before
-    * its parent is released — the incremental-state idiom S8/S9 use
-    * for their indexes; a production deployment would write/read a
-    * parquet (or Delta-style) table between triggers instead. */
+    * fold. The initial snapshot settles at construction and each new
+    * one settles before its parent is released; a production
+    * deployment would write/read a parquet (or Delta-style) table
+    * between triggers instead. */
   def streamingCdcMerge(ops: DataFrame, initial: DataFrame,
       keyCol: String, opCol: String = "op")(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    var snap = initial.persist()
-    snap.count()
-    ops.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val next = graft.operators.Merge
-          .applyCdc(snap, b.toDF(), keyCol, opCol).persist()
-        next.count()
-        snap.unpersist()
-        snap = next
-        sink(next)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-  }
+      sink: DataFrame => Unit): StreamingQuery =
+    foldStream("S10", ops, init = st => Seq(st.settle(initial, "initial"))) {
+      (st, snap, b) =>
+        val next = st.settle(graft.operators.Merge
+          .applyCdc(snap.head, b, keyCol, opCol), "snapshot")
+        (Seq(next), next)
+    }(sink)
 
   /** S11: streaming crawl-frontier URL dedup — the streaming form of
     * d13. Each micro-batch canonicalizes arriving URLs
@@ -570,44 +552,30 @@ object StreamingOps {
     * and verdicts against the maintained frontier of already-seen
     * canonical keys (broadcast-friendly left join): `seen = true`
     * carries the stored `first_id`. Unseen keys fold into the frontier
-    * between triggers (persist + count materialization before the
-    * parent releases — the S8–S10 state idiom; a production frontier
-    * is a parquet/Delta keyed store appended per trigger, and the
-    * lookup a key-partitioned join). Verdict rows:
-    * (canonical_url, id, n_in_batch, seen, first_id). */
+    * between triggers (each new frontier settles before its parent is
+    * released; a production frontier is a parquet/Delta keyed store
+    * appended per trigger, and the lookup a key-partitioned join).
+    * Verdict rows: (canonical_url, id, n_in_batch, seen, first_id). */
   def streamingUrlFrontier(urls: DataFrame, initial: DataFrame,
       idCol: String, urlCol: String)(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    var frontier = initial
-      .select(col("canonical_url"), col("first_id").cast("long").as("first_id"))
-      .persist()
-    frontier.count()
-    urls.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val batch = b.toDF()
-          .select(col(idCol).cast("long").as("id"),
-            graft.operators.Urls.canonicalize(col(urlCol)).as("canonical_url"))
-          .groupBy("canonical_url")
-          .agg(min(col("id")).as("id"), count(lit(1)).as("n_in_batch"))
-        val verdict = batch.join(frontier, Seq("canonical_url"), "left")
-          .select(col("canonical_url"), col("id"), col("n_in_batch"),
-            col("first_id").isNotNull.as("seen"),
-            coalesce(col("first_id"), col("id")).as("first_id"))
-          .persist()
-        verdict.count()
-        val next = frontier.union(
-          verdict.filter(!col("seen"))
-            .select(col("canonical_url"), col("first_id"))).persist()
-        next.count()
-        frontier.unpersist()
-        frontier = next
-        sink(verdict)
-        verdict.unpersist()
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-  }
+      sink: DataFrame => Unit): StreamingQuery =
+    foldStream("S11", urls, init = st => Seq(st.settle(initial
+        .select(col("canonical_url"), col("first_id").cast("long").as("first_id")),
+        "initial"))) { (st, frontier, b) =>
+      val batch = b
+        .select(col(idCol).cast("long").as("id"),
+          graft.operators.Urls.canonicalize(col(urlCol)).as("canonical_url"))
+        .groupBy("canonical_url")
+        .agg(min(col("id")).as("id"), count(lit(1)).as("n_in_batch"))
+      val verdict = st.settle(batch.join(frontier.head, Seq("canonical_url"), "left")
+        .select(col("canonical_url"), col("id"), col("n_in_batch"),
+          col("first_id").isNotNull.as("seen"),
+          coalesce(col("first_id"), col("id")).as("first_id")), "verdict")
+      val next = st.settle(frontier.head.union(
+        verdict.filter(!col("seen"))
+          .select(col("canonical_url"), col("first_id"))), "frontier")
+      (Seq(next), verdict)
+    }(sink)
 
   /** S12: streaming distribution-drift monitor — the streaming form of
     * x24. State is [[graft.operators.TextAnalysis.tokenCounts]]'s
@@ -617,32 +585,20 @@ object StreamingOps {
     * ([[graft.operators.TextAnalysis.driftFromCounts]]) are recomputed
     * from the folded state and emitted per trigger — the monitor always
     * reflects everything seen so far (equals the batch x24 over the
-    * same prefix, which is what the spec asserts). State persists via
-    * the S8–S11 persist+count idiom; production would checkpoint the
-    * count table to a keyed store per trigger. */
+    * same prefix, which is what the spec asserts). Each trigger settles
+    * the folded table; production would checkpoint the count table to
+    * a keyed store per trigger. */
   def streamingTokenDrift(docs: DataFrame, textCol: String,
       sliceA: Column,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    var counts: Option[DataFrame] = None
-    docs.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val bc = graft.operators.TextAnalysis
-          .tokenCounts(b.toDF(), textCol, sliceA)
-        val next = counts.map(_.union(bc)
-            .groupBy("tok")
-            .agg(sum("c_a").as("c_a"), sum("c_b").as("c_b")))
-          .getOrElse(bc).persist()
-        next.count()
-        counts.foreach(_.unpersist())
-        counts = Some(next)
-        sink(graft.operators.TextAnalysis.driftFromCounts(next))
-        ()
-      }
-      .trigger(trigger)
-      .start()
-  }
+      trigger: Trigger = Trigger.AvailableNow())(
+      sink: DataFrame => Unit): StreamingQuery =
+    foldStream("S12", docs, trigger) { (st, prev, b) =>
+      val bc = graft.operators.TextAnalysis.tokenCounts(b, textCol, sliceA)
+      val next = st.settle(prev.headOption.fold(bc)(_.union(bc)
+        .groupBy("tok")
+        .agg(sum("c_a").as("c_a"), sum("c_b").as("c_b"))), "state")
+      (Seq(next), graft.operators.TextAnalysis.driftFromCounts(next))
+    }(sink)
 
   /** S13: streaming incremental materialized-view maintenance — the
     * streaming form of q55. Each micro-batch aggregates to per-key
@@ -661,95 +617,16 @@ object StreamingOps {
     * resume-from-checkpoint equals the uninterrupted run. */
   def streamingIncrementalMv(rows: DataFrame, keyCols: Seq[String],
       valCol: Column,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow(),
+      trigger: Trigger = Trigger.AvailableNow(),
       stateDir: Option[String] = None,
       checkpointDir: Option[String] = None)(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    var state: Option[DataFrame] = None
-    val writer = rows.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val bs = b.sparkSession
-        if (state.isEmpty)
-          stateDir.foreach(d => state = SnapshotState.restore(bs, d, batchId))
-        val partials = graft.operators.Merge
-          .aggPartials(b.toDF(), keyCols, valCol)
-        val folded = state.map(st => graft.operators.Merge
-            .mergeAggState(st, partials, keyCols))
-          .getOrElse(partials).persist()
-        folded.count()
-        val next = stateDir match {
-          case Some(dir) =>
-            val re = SnapshotState.commit(bs, dir, batchId, folded)
-            folded.unpersist()
-            re
-          case None => folded
-        }
-        state.foreach(_.unpersist())
-        state = Some(next)
-        sink(next)
-        ()
-      }
-      .trigger(trigger)
-    checkpointDir.foreach(d => writer.option("checkpointLocation", d))
-    writer.start()
-  }
-
-  /** Durable snapshots for the driver-fold state idiom (S38's
-    * machinery, shared by the index-state family): the fold state
-    * normally lives in a driver var; with a stateDir each trigger
-    * also snapshots it durably, keyed by batchId, and a restarted
-    * query restores the newest snapshot with id < batchId.
-    *
-    * `< batchId` (not <=) is what makes the replayed trigger
-    * idempotent: after a crash, Structured Streaming re-runs the last
-    * uncommitted batch with the SAME id and data (checkpointed
-    * offsets), and the fold re-derives from snapshot id−1 + that
-    * batch, overwriting snapshot id with identical content. A partial
-    * snapshot from a crash mid-write is never read, because the
-    * snapshot write happens BEFORE the trigger's offset commit — an
-    * incomplete snapshot id implies offset id never committed, so the
-    * restart replays id and overwrites it. */
-  private[streaming] object SnapshotState {
-    /** Newest committed snapshot with id < batchId, if any. */
-    def restore(bs: SparkSession, dir: String,
-        batchId: Long): Option[DataFrame] = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(bs.sparkContext.hadoopConfiguration)
-      val committed =
-        if (!fs.exists(p)) Array.empty[Long]
-        else fs.listStatus(p).map(_.getPath.getName)
-          .filter(_.startsWith("state_batch="))
-          .map(_.stripPrefix("state_batch=").toLong)
-          .filter(_ < batchId)
-      if (committed.isEmpty) None
-      else Some(bs.read.parquet(s"$dir/state_batch=${committed.max}"))
-    }
-
-    /** Write snapshot `batchId`, prune ids < batchId−1 (recovery only
-      * ever reads the newest snapshot and its crash-replay anchor —
-      * anything older is unreachable and would otherwise grow the
-      * state dir without bound), and return the state RE-ROOTED on
-      * the snapshot just written (persisted + counted): after a
-      * restore, the folded state carries lineage into the RESTORED
-      * state_batch= dir, which a later trigger's prune deletes — if a
-      * persisted block were then lost, recomputation would read a
-      * deleted path and throw. The caller unpersists the `folded` it
-      * passed in. */
-    def commit(bs: SparkSession, dir: String, batchId: Long,
-        folded: DataFrame): DataFrame = {
-      folded.write.mode("overwrite").parquet(s"$dir/state_batch=$batchId")
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(bs.sparkContext.hadoopConfiguration)
-      fs.listStatus(p).map(_.getPath)
-        .filter(_.getName.startsWith("state_batch="))
-        .filter(_.getName.stripPrefix("state_batch=").toLong < batchId - 1)
-        .foreach(fs.delete(_, true))
-      val re = bs.read.parquet(s"$dir/state_batch=$batchId").persist()
-      re.count()
-      re
-    }
-  }
+      sink: DataFrame => Unit): StreamingQuery =
+    foldStream("S13", rows, trigger, stateDir, checkpointDir) { (st, prev, b) =>
+      val partials = graft.operators.Merge.aggPartials(b, keyCols, valCol)
+      val next = st.settle(prev.headOption.fold(partials)(
+        graft.operators.Merge.mergeAggState(_, partials, keyCols)), "state")
+      (Seq(next), next)
+    }(sink)
 
   /** S14: streaming histogram quantiles — the streaming form of q60.
     * The grid ([lo, hi] × `buckets`) is pinned up front (production:
@@ -765,26 +642,15 @@ object StreamingOps {
       lo: Double, hi: Double, buckets: Int = 4096,
       qs: Seq[(Double, String)] = Seq(0.25 -> "p25", 0.5 -> "p50",
         0.75 -> "p75", 0.9 -> "p90"),
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    var state: Option[DataFrame] = None
-    rows.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val cells = graft.operators.Sketches
-          .histCounts(b.toDF(), gCol, xCol, lo, hi, buckets)
-        val next = state.map(st =>
-            st.union(cells).groupBy("g", "b").agg(sum("c").as("c")))
-          .getOrElse(cells).persist()
-        next.count()
-        state.foreach(_.unpersist())
-        state = Some(next)
-        sink(graft.operators.Sketches.histQuantiles(next, lo, hi, buckets, qs))
-        ()
-      }
-      .trigger(trigger)
-      .start()
-  }
+      trigger: Trigger = Trigger.AvailableNow())(
+      sink: DataFrame => Unit): StreamingQuery =
+    foldStream("S14", rows, trigger) { (st, prev, b) =>
+      val cells = graft.operators.Sketches
+        .histCounts(b, gCol, xCol, lo, hi, buckets)
+      val next = st.settle(prev.headOption.fold(cells)(
+        _.union(cells).groupBy("g", "b").agg(sum("c").as("c"))), "state")
+      (Seq(next), graft.operators.Sketches.histQuantiles(next, lo, hi, buckets, qs))
+    }(sink)
 
   /** S15: streaming Z-order layout audit — the streaming form of q62.
     * The dimension EXTENTS are pinned up front (production: a layout
@@ -796,37 +662,27 @@ object StreamingOps {
     * everything seen (min/max/sum merges are exact). */
   def streamingZorderStats(rows: DataFrame, aCol: String, bCol: String,
       aMin: Long, aMax: Long, bMin: Long, bMax: Long, log2Buckets: Int = 6,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+      trigger: Trigger = Trigger.AvailableNow())(
+      sink: DataFrame => Unit): StreamingQuery = {
     import graft.operators.ZOrder
-    var state: Option[DataFrame] = None
-    rows.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val cells = b.toDF()
-          .select(col(aCol).cast(LongType).as("da"),
-            col(bCol).cast(LongType).as("db"))
-          .select(col("da"), col("db"), ZOrder.zbucket2(
-            ZOrder.normalize16(col("da"), lit(aMin), lit(aMax)),
-            ZOrder.normalize16(col("db"), lit(bMin), lit(bMax)),
-            log2Buckets).as("zb"))
-          .groupBy("zb")
-          .agg(count(lit(1)).as("n_rows"),
-            min("da").as("a_min"), max("da").as("a_max"),
-            min("db").as("b_min"), max("db").as("b_max"))
-        val next = state.map(st => st.union(cells).groupBy("zb")
-            .agg(sum("n_rows").as("n_rows"),
-              min("a_min").as("a_min"), max("a_max").as("a_max"),
-              min("b_min").as("b_min"), max("b_max").as("b_max")))
-          .getOrElse(cells).persist()
-        next.count()
-        state.foreach(_.unpersist())
-        state = Some(next)
-        sink(next)
-        ()
-      }
-      .trigger(trigger)
-      .start()
+    foldStream("S15", rows, trigger) { (st, prev, b) =>
+      val cells = b
+        .select(col(aCol).cast(LongType).as("da"),
+          col(bCol).cast(LongType).as("db"))
+        .select(col("da"), col("db"), ZOrder.zbucket2(
+          ZOrder.normalize16(col("da"), lit(aMin), lit(aMax)),
+          ZOrder.normalize16(col("db"), lit(bMin), lit(bMax)),
+          log2Buckets).as("zb"))
+        .groupBy("zb")
+        .agg(count(lit(1)).as("n_rows"),
+          min("da").as("a_min"), max("da").as("a_max"),
+          min("db").as("b_min"), max("db").as("b_max"))
+      val next = st.settle(prev.headOption.fold(cells)(_.union(cells).groupBy("zb")
+        .agg(sum("n_rows").as("n_rows"),
+          min("a_min").as("a_min"), max("a_max").as("a_max"),
+          min("b_min").as("b_min"), max("b_max").as("b_max"))), "state")
+      (Seq(next), next)
+    }(sink)
   }
 
   /** S16: streaming interval merge — the streaming form of q63.
@@ -841,28 +697,16 @@ object StreamingOps {
     * everything seen (the spec's assertion — the fold is exact, not
     * approximate-on-merge). Expects (user_id, ss, ee, n) rows. */
   def streamingIntervalMerge(rows: DataFrame,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    var state: Option[DataFrame] = None
-    rows.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val iv = b.toDF().select(col("user_id"), col("ss"), col("ee"),
-          col("n"))
-        val all = state.map(st => st.select(col("user_id"),
-            col("m_start").as("ss"), col("m_end").as("ee"),
-            col("n_events").as("n")).union(iv))
-          .getOrElse(iv)
-        val next = graft.operators.Intervals.merge(all, "user_id").persist()
-        next.count()
-        state.foreach(_.unpersist())
-        state = Some(next)
-        sink(next)
-        ()
-      }
-      .trigger(trigger)
-      .start()
-  }
+      trigger: Trigger = Trigger.AvailableNow())(
+      sink: DataFrame => Unit): StreamingQuery =
+    foldStream("S16", rows, trigger) { (st, prev, b) =>
+      val iv = b.select(col("user_id"), col("ss"), col("ee"), col("n"))
+      val all = prev.headOption.fold(iv)(_.select(col("user_id"),
+        col("m_start").as("ss"), col("m_end").as("ee"),
+        col("n_events").as("n")).union(iv))
+      val next = st.settle(graft.operators.Intervals.merge(all, "user_id"), "state")
+      (Seq(next), next)
+    }(sink)
 
   /** S17: streaming per-group top-k — the streaming form of q44's
     * mergeable bounded-heap TopKAgg. The heap is a SEMIGROUP (merge of
@@ -875,9 +719,8 @@ object StreamingOps {
     * over everything seen (the spec's assertion; ties break id asc
     * inside TopKAgg on both paths). Expects (g, score, id) rows. */
   def streamingTopK(rows: DataFrame, k: Int,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+      trigger: Trigger = Trigger.AvailableNow())(
+      sink: DataFrame => Unit): StreamingQuery = {
     import org.apache.spark.sql.graft.ColumnBridge
     def topk(df: DataFrame): DataFrame = {
       val tk = ColumnBridge.column(graft.expressions.TopKAgg(
@@ -888,22 +731,12 @@ object StreamingOps {
         .select(col("g"), col("e.id").as("id"),
           col("e.score").as("score"), (col("pos") + 1).cast("int").as("rk"))
     }
-    var state: Option[DataFrame] = None
-    rows.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val batchCut = b.toDF().select(col("g"), col("score"), col("id"))
-        val all = state.map(st =>
-            st.select(col("g"), col("score"), col("id")).union(batchCut))
-          .getOrElse(batchCut)
-        val next = topk(all).persist()
-        next.count()
-        state.foreach(_.unpersist())
-        state = Some(next)
-        sink(next)
-        ()
-      }
-      .trigger(trigger)
-      .start()
+    foldStream("S17", rows, trigger) { (st, prev, b) =>
+      val batchCut = b.select(col("g"), col("score"), col("id"))
+      val next = st.settle(topk(prev.headOption.fold(batchCut)(
+        _.select(col("g"), col("score"), col("id")).union(batchCut))), "state")
+      (Seq(next), next)
+    }(sink)
   }
 
   /** S19: streaming OHLC bars — the streaming form of t53. An OHLC
@@ -920,9 +753,8 @@ object StreamingOps {
     * (exact, order-free) and surfaced as double only in the read.
     * Expects (user_id, day_s, us, event_id, value) rows. */
   def streamingOhlc(rows: DataFrame,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+      trigger: Trigger = Trigger.AvailableNow())(
+      sink: DataFrame => Unit): StreamingQuery = {
     def bars(df: DataFrame): DataFrame = df
       .groupBy("user_id", "day_s")
       .agg(
@@ -932,28 +764,19 @@ object StreamingOps {
         sum(graft.Tables.dec(col("value")))
           .cast(DecimalType(38, 2)).as("vol"),
         count(lit(1)).as("n_ticks"))
-    var state: Option[DataFrame] = None
-    rows.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val partial = bars(b.toDF())
-        val next = state.map(st => st.union(partial)
-            .groupBy("user_id", "day_s")
-            .agg(min("o").as("o"), max("c").as("c"),
-              max("high").as("high"), min("low").as("low"),
-              sum("vol").cast(DecimalType(38, 2)).as("vol"),
-              sum("n_ticks").as("n_ticks")))
-          .getOrElse(partial).persist()
-        next.count()
-        state.foreach(_.unpersist())
-        state = Some(next)
-        sink(next.select(col("user_id"), col("day_s"),
-          col("o.value").as("open"), col("high"), col("low"),
-          col("c.value").as("close"),
-          col("vol").cast(DoubleType).as("volume"), col("n_ticks")))
-        ()
-      }
-      .trigger(trigger)
-      .start()
+    foldStream("S19", rows, trigger) { (st, prev, b) =>
+      val partial = bars(b)
+      val next = st.settle(prev.headOption.fold(partial)(_.union(partial)
+        .groupBy("user_id", "day_s")
+        .agg(min("o").as("o"), max("c").as("c"),
+          max("high").as("high"), min("low").as("low"),
+          sum("vol").cast(DecimalType(38, 2)).as("vol"),
+          sum("n_ticks").as("n_ticks"))), "state")
+      (Seq(next), next.select(col("user_id"), col("day_s"),
+        col("o.value").as("open"), col("high"), col("low"),
+        col("c.value").as("close"),
+        col("vol").cast(DoubleType).as("volume"), col("n_ticks")))
+    }(sink)
   }
 
   /** S20: streaming skyline — the streaming form of q65. Dominance is
@@ -969,28 +792,18 @@ object StreamingOps {
     * batch skyline over everything seen (the spec's assertion).
     * Expects (g, x, y, n, rep) rows — x minimized, y maximized. */
   def streamingSkyline(rows: DataFrame,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+      trigger: Trigger = Trigger.AvailableNow())(
+      sink: DataFrame => Unit): StreamingQuery = {
     def frontier(df: DataFrame): DataFrame =
       graft.operators.Skyline.skyline(
         df.groupBy("g", "x", "y")
           .agg(sum("n").as("n"), min("rep").as("rep")),
         "g", "x", "y", "n", "rep")
-    var state: Option[DataFrame] = None
-    rows.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val batch = b.toDF().select("g", "x", "y", "n", "rep")
-        val next = frontier(state.map(_.union(batch)).getOrElse(batch))
-          .persist()
-        next.count()
-        state.foreach(_.unpersist())
-        state = Some(next)
-        sink(next)
-        ()
-      }
-      .trigger(trigger)
-      .start()
+    foldStream("S20", rows, trigger) { (st, prev, b) =>
+      val batch = b.select("g", "x", "y", "n", "rep")
+      val next = st.settle(frontier(prev.headOption.fold(batch)(_.union(batch))), "state")
+      (Seq(next), next)
+    }(sink)
   }
 
   /** S21: streaming Count-Min sketch — the streaming form of x28. CMS
@@ -1007,9 +820,8 @@ object StreamingOps {
     * column. */
   def streamingCountMin(rows: DataFrame, probes: Seq[String],
       seeds: Int = 4, buckets: Int = 1024,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+      trigger: Trigger = Trigger.AvailableNow())(
+      sink: DataFrame => Unit): StreamingQuery = {
     def bucketOf(sd: Int, c: Column): Column =
       pmod(conv(substring(md5(concat(lit(sd + "|"), c)), 1, 15), 16, 10)
         .cast("long"), lit(buckets))
@@ -1018,30 +830,21 @@ object StreamingOps {
       .select(posexplode(array((0 until seeds).map(sd =>
         bucketOf(sd, col("tok"))): _*)).as(Seq("seed", "bucket")))
       .groupBy("seed", "bucket").agg(count(lit(1)).as("c"))
-    var state: Option[DataFrame] = None
-    rows.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val cells = cellsOf(b.toDF())
-        val next = state.map(st => st.union(cells).groupBy("seed", "bucket")
-            .agg(sum("c").as("c")))
-          .getOrElse(cells).persist()
-        next.count()
-        state.foreach(_.unpersist())
-        state = Some(next)
-        val s = next.sparkSession
-        import s.implicits._
-        val pb = probes.toDF("tok")
-          .select(col("tok"), posexplode(array((0 until seeds).map(sd =>
-            bucketOf(sd, col("tok"))): _*)).as(Seq("seed", "bucket")))
-        // an absent cell IS a zero count (the sketch has proven the
-        // token unseen) — coalesce BEFORE the min, not after
-        sink(pb.join(next, Seq("seed", "bucket"), "left")
-          .groupBy("tok")
-          .agg(min(coalesce(col("c"), lit(0L))).as("cms_n")))
-        ()
-      }
-      .trigger(trigger)
-      .start()
+    foldStream("S21", rows, trigger) { (st, prev, b) =>
+      val cells = cellsOf(b)
+      val next = st.settle(prev.headOption.fold(cells)(_.union(cells)
+        .groupBy("seed", "bucket").agg(sum("c").as("c"))), "state")
+      val s = next.sparkSession
+      import s.implicits._
+      val pb = probes.toDF("tok")
+        .select(col("tok"), posexplode(array((0 until seeds).map(sd =>
+          bucketOf(sd, col("tok"))): _*)).as(Seq("seed", "bucket")))
+      // an absent cell IS a zero count (the sketch has proven the
+      // token unseen) — coalesce BEFORE the min, not after
+      (Seq(next), pb.join(next, Seq("seed", "bucket"), "left")
+        .groupBy("tok")
+        .agg(min(coalesce(col("c"), lit(0L))).as("cms_n")))
+    }(sink)
   }
 
   /** S22: streaming event-transition matrix — the streaming form of
@@ -1059,50 +862,39 @@ object StreamingOps {
     * folded matrix equals the batch q67 counts over everything seen.
     * Expects (user_id, us, event_id, event_type) rows. */
   def streamingTransitions(rows: DataFrame,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+      trigger: Trigger = Trigger.AvailableNow())(
+      sink: DataFrame => Unit): StreamingQuery = {
     import org.apache.spark.sql.expressions.Window
-    var counts: Option[DataFrame] = None
-    var lastEv: Option[DataFrame] = None
-    rows.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val batch = b.toDF()
-          .select(col("user_id"), col("us"), col("event_id"),
-            col("event_type"), lit(false).as("carried"))
-        val all = lastEv.map(le => le.select(col("user_id"), col("us"),
-            col("event_id"), col("event_type"), lit(true).as("carried"))
-            .union(batch))
-          .getOrElse(batch)
-        val w = Window.partitionBy("user_id").orderBy("us", "event_id")
-        val pairs = all
-          .withColumn("prev_type", lag("event_type", 1).over(w))
-          .filter(!col("carried") && col("prev_type").isNotNull)
-          .groupBy(col("prev_type"), col("event_type").as("cur_type"))
-          .agg(count(lit(1)).as("n"))
-        val nextCounts = counts.map(c => c.union(pairs)
-            .groupBy("prev_type", "cur_type").agg(sum("n").as("n")))
-          .getOrElse(pairs).persist()
-        nextCounts.count()
-        val nextLast = all
-          .groupBy("user_id")
-          .agg(max(struct(col("us"), col("event_id"), col("event_type")))
-            .as("m"))
-          .select(col("user_id"), col("m.us").as("us"),
-            col("m.event_id").as("event_id"),
-            col("m.event_type").as("event_type"))
-          .persist()
-        nextLast.count()
-        counts.foreach(_.unpersist()); lastEv.foreach(_.unpersist())
-        counts = Some(nextCounts); lastEv = Some(nextLast)
-        sink(nextCounts
-          .withColumn("tot", sum("n").over(Window.partitionBy("prev_type")))
-          .select(col("prev_type"), col("cur_type"), col("n"),
-            (col("n").cast("double") / col("tot").cast("double")).as("p")))
-        ()
+    foldStream("S22", rows, trigger) { (st, prev, b) =>
+      val batch = b
+        .select(col("user_id"), col("us"), col("event_id"),
+          col("event_type"), lit(false).as("carried"))
+      val all = prev match {
+        case Seq(_, lastEv) => lastEv.select(col("user_id"), col("us"),
+          col("event_id"), col("event_type"), lit(true).as("carried"))
+          .union(batch)
+        case _ => batch
       }
-      .trigger(trigger)
-      .start()
+      val w = Window.partitionBy("user_id").orderBy("us", "event_id")
+      val pairs = all
+        .withColumn("prev_type", lag("event_type", 1).over(w))
+        .filter(!col("carried") && col("prev_type").isNotNull)
+        .groupBy(col("prev_type"), col("event_type").as("cur_type"))
+        .agg(count(lit(1)).as("n"))
+      val counts = st.settle(prev.headOption.fold(pairs)(_.union(pairs)
+        .groupBy("prev_type", "cur_type").agg(sum("n").as("n"))), "counts")
+      val last = st.settle(all
+        .groupBy("user_id")
+        .agg(max(struct(col("us"), col("event_id"), col("event_type")))
+          .as("m"))
+        .select(col("user_id"), col("m.us").as("us"),
+          col("m.event_id").as("event_id"),
+          col("m.event_type").as("event_type")), "last")
+      (Seq(counts, last), counts
+        .withColumn("tot", sum("n").over(Window.partitionBy("prev_type")))
+        .select(col("prev_type"), col("cur_type"), col("n"),
+          (col("n").cast("double") / col("tot").cast("double")).as("p")))
+    }(sink)
   }
 
   /** S23: streaming embedding diversity — the streaming twin of e13.
@@ -1115,26 +907,15 @@ object StreamingOps {
     * continuously-embedded corpus runs per ingest batch. */
   def streamingDiversity(rows: DataFrame, labelCol: String, vecCol: String,
       dim: Int = 64,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    var state: Option[DataFrame] = None
-    rows.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val cells = graft.operators.EmbedStats
-          .diversityMoments(b.toDF(), labelCol, vecCol, dim)
-        val next = state.map(st => graft.operators.EmbedStats
-            .mergeMoments(st.unionByName(cells), dim))
-          .getOrElse(cells).persist()
-        next.count()
-        state.foreach(_.unpersist())
-        state = Some(next)
-        sink(graft.operators.EmbedStats.diversityFromMoments(next, dim))
-        ()
-      }
-      .trigger(trigger)
-      .start()
-  }
+      trigger: Trigger = Trigger.AvailableNow())(
+      sink: DataFrame => Unit): StreamingQuery =
+    foldStream("S23", rows, trigger) { (st, prev, b) =>
+      val cells = graft.operators.EmbedStats
+        .diversityMoments(b, labelCol, vecCol, dim)
+      val next = st.settle(prev.headOption.fold(cells)(s => graft.operators.EmbedStats
+        .mergeMoments(s.unionByName(cells), dim)), "state")
+      (Seq(next), graft.operators.EmbedStats.diversityFromMoments(next, dim))
+    }(sink)
 
   /** S24: streaming Good-Turing / OOV-mass monitor — the streaming
     * twin of x35. State = the (tok, c) vocabulary count table (the
@@ -1148,28 +929,17 @@ object StreamingOps {
     * re-crawling itself. */
   def streamingGoodTuring(docs: DataFrame, textCol: String,
       maxR: Int = 10,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    var state: Option[DataFrame] = None
-    docs.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val cells = b.toDF()
-          .select(explode(graft.operators.TextAnalysis
-            .tokens(col(textCol))).as("tok"))
-          .groupBy("tok").agg(count(lit(1)).as("c"))
-        val next = state.map(st =>
-            st.union(cells).groupBy("tok").agg(sum("c").as("c")))
-          .getOrElse(cells).persist()
-        next.count()
-        state.foreach(_.unpersist())
-        state = Some(next)
-        sink(graft.operators.TextAnalysis.goodTuringFromCounts(next, maxR))
-        ()
-      }
-      .trigger(trigger)
-      .start()
-  }
+      trigger: Trigger = Trigger.AvailableNow())(
+      sink: DataFrame => Unit): StreamingQuery =
+    foldStream("S24", docs, trigger) { (st, prev, b) =>
+      val cells = b
+        .select(explode(graft.operators.TextAnalysis
+          .tokens(col(textCol))).as("tok"))
+        .groupBy("tok").agg(count(lit(1)).as("c"))
+      val next = st.settle(prev.headOption.fold(cells)(
+        _.union(cells).groupBy("tok").agg(sum("c").as("c"))), "state")
+      (Seq(next), graft.operators.TextAnalysis.goodTuringFromCounts(next, maxR))
+    }(sink)
 
   /** S25: streaming incremental CDC-chunk dedup — d17's streaming
     * half, in the S8 corpus-never-re-pairs posture: state = the seen
@@ -1188,64 +958,39 @@ object StreamingOps {
     * before the batch folds in), so an original and its near-copy
     * arriving in one trigger both report known_frac 0 and the copy is
     * flagged only from the NEXT batch on. Same-batch mutual dedup is
-    * d17's batch job, not this operator's contract. */
+    * d17's batch job, not this operator's contract.
+    *
+    * `stateDir` + `checkpointDir` make the index survive a kill
+    * ([[SnapshotState]]). Replay-safe BECAUSE the restore predicate is
+    * strict: a crash-replayed trigger re-judges its docs against
+    * snapshot id−1 — the index as of the previous trigger, exactly the
+    * pinned intra-batch-blindness contract — then overwrites snapshot
+    * id with identical content. */
   def streamingCdcDedup(docs: DataFrame, idCol: String, textCol: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow(),
+      trigger: Trigger = Trigger.AvailableNow(),
       stateDir: Option[String] = None,
       checkpointDir: Option[String] = None)(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    var state: Option[DataFrame] = None
-    val writer = docs.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val bs = b.sparkSession
-        // kill/restart recovery for the corpus digest index — the
-        // [[SnapshotState]] idiom (snapshot per trigger, restore
-        // newest < batchId, prune, re-root). Replay-safe BECAUSE the
-        // restore predicate is strict: a crash-replayed trigger
-        // re-judges its docs against snapshot id−1 — the index as of
-        // the previous trigger, exactly the pinned intra-batch-
-        // blindness contract — then overwrites snapshot id with
-        // identical content.
-        if (state.isEmpty)
-          stateDir.foreach(d => state = SnapshotState.restore(bs, d, batchId))
-        val chunks = graft.operators.Dedup
-          .cdcChunks(b.toDF(), idCol, textCol).persist()
-        chunks.count()
-        val known = state match {
-          case Some(idx) => chunks.join(idx, Seq("digest"), "left_semi")
-            .groupBy("doc_id").agg(count(lit(1)).as("n_known"))
-          case None => chunks.select(col("doc_id")).limit(0)
-            .withColumn("n_known", lit(0L))
-        }
-        val verdicts = chunks.groupBy("doc_id")
-          .agg(count(lit(1)).as("n_chunks"))
-          .join(known, Seq("doc_id"), "left")
-          .select(col("doc_id"), col("n_chunks"),
-            coalesce(col("n_known"), lit(0L)).as("n_known"),
-            round(coalesce(col("n_known"), lit(0L)) / col("n_chunks"), 6)
-              .as("known_frac"))
-        sink(verdicts)
-        val folded = state.map(idx => idx.union(
-            chunks.select("digest")).distinct())
-          .getOrElse(chunks.select("digest").distinct()).persist()
-        folded.count()
-        val next = stateDir match {
-          case Some(dir) =>
-            val re = SnapshotState.commit(bs, dir, batchId, folded)
-            folded.unpersist()
-            re
-          case None => folded
-        }
-        state.foreach(_.unpersist())
-        state = Some(next)
-        chunks.unpersist()
-        ()
+      sink: DataFrame => Unit): StreamingQuery =
+    foldStream("S25", docs, trigger, stateDir, checkpointDir) { (st, prev, b) =>
+      val chunks = st.settle(graft.operators.Dedup.cdcChunks(b, idCol, textCol), "chunks")
+      val known = prev.headOption match {
+        case Some(idx) => chunks.join(idx, Seq("digest"), "left_semi")
+          .groupBy("doc_id").agg(count(lit(1)).as("n_known"))
+        case None => chunks.select(col("doc_id")).limit(0)
+          .withColumn("n_known", lit(0L))
       }
-      .trigger(trigger)
-    checkpointDir.foreach(d => writer.option("checkpointLocation", d))
-    writer.start()
-  }
+      val verdicts = chunks.groupBy("doc_id")
+        .agg(count(lit(1)).as("n_chunks"))
+        .join(known, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("n_chunks"),
+          coalesce(col("n_known"), lit(0L)).as("n_known"),
+          round(coalesce(col("n_known"), lit(0L)) / col("n_chunks"), 6)
+            .as("known_frac"))
+      val digests = chunks.select("digest")
+      val next = st.settle(prev.headOption.fold(digests)(_.union(digests))
+        .distinct(), "state")
+      (Seq(next), verdicts)
+    }(sink)
 
   /** S28: streaming Bloom-filter dedup — d18's operational streaming
     * half, and the strongest bounded-state story in the family: state
@@ -1268,44 +1013,33 @@ object StreamingOps {
     * corpus-sized. */
   def streamingBloomDedup(docs: DataFrame, idCol: String,
       textCol: String, mBits: Int = 2048, kHash: Int = 3,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    var state: Option[DataFrame] = None // distinct set positions, ≤ mBits rows
-    docs.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val d = b.toDF().select(col(idCol).cast("long").as("id"),
-          md5(graft.operators.Dedup.normText(col(textCol))).as("digest"))
-        val pos = d.select(col("id"),
-          explode(graft.operators.Dedup.bloomPositions(col("digest"),
-            mBits, kHash)).as("pos")).persist()
-        pos.count()
-        val batchMin = pos.groupBy("pos").agg(min("id").as("first_id"))
-        val withPrev = state match {
-          case Some(sb) => batchMin.join(
-            sb.withColumn("prev", lit(true)), Seq("pos"), "left")
-          case None => batchMin.withColumn("prev", lit(false))
-        }
-        // bit set before doc d ⟺ set in an earlier trigger OR the
-        // batch's min setter < d (the d18 identity, batch-local)
-        val verdicts = pos.join(withPrev, Seq("pos"))
-          .withColumn("setb", coalesce(col("prev"), lit(false)) ||
-            (col("first_id") < col("id")))
-          .groupBy("id")
-          .agg((min(col("setb").cast("int")) === 1).as("flagged"))
-        sink(verdicts)
-        val next = state.map(sb => sb.select("pos")
-            .union(pos.select("pos")).distinct())
-          .getOrElse(pos.select("pos").distinct()).persist()
-        next.count()
-        state.foreach(_.unpersist())
-        state = Some(next)
-        pos.unpersist()
-        ()
+      trigger: Trigger = Trigger.AvailableNow())(
+      sink: DataFrame => Unit): StreamingQuery =
+    // state: the distinct set positions, ≤ mBits rows
+    foldStream("S28", docs, trigger) { (st, prev, b) =>
+      val d = b.select(col(idCol).cast("long").as("id"),
+        md5(graft.operators.Dedup.normText(col(textCol))).as("digest"))
+      val pos = st.settle(d.select(col("id"),
+        explode(graft.operators.Dedup.bloomPositions(col("digest"),
+          mBits, kHash)).as("pos")), "positions")
+      val batchMin = pos.groupBy("pos").agg(min("id").as("first_id"))
+      val withPrev = prev.headOption match {
+        case Some(sb) => batchMin.join(
+          sb.withColumn("prev", lit(true)), Seq("pos"), "left")
+        case None => batchMin.withColumn("prev", lit(false))
       }
-      .trigger(trigger)
-      .start()
-  }
+      // bit set before doc d ⟺ set in an earlier trigger OR the
+      // batch's min setter < d (the d18 identity, batch-local)
+      val verdicts = pos.join(withPrev, Seq("pos"))
+        .withColumn("setb", coalesce(col("prev"), lit(false)) ||
+          (col("first_id") < col("id")))
+        .groupBy("id")
+        .agg((min(col("setb").cast("int")) === 1).as("flagged"))
+      val bits = pos.select("pos")
+      val next = st.settle(prev.headOption.fold(bits)(_.select("pos").union(bits))
+        .distinct(), "state")
+      (Seq(next), verdicts)
+    }(sink)
 
   /** S32: streaming partial-overlap detection via winnowing
     * fingerprints — x44's live half, and the GRANULARITY complement
@@ -1332,40 +1066,29 @@ object StreamingOps {
     * emit no verdict row (x44's pinned empty case). */
   def streamingWinnowOverlap(docs: DataFrame, idCol: String,
       textCol: String, k: Int = 4, w: Int = 5,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    var state: Option[DataFrame] = None // distinct fps, corpus-fp-cardinality
-    docs.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val fps = graft.operators.TextAnalysis
-          .winnow(b.toDF(), idCol, textCol, k, w)
-          .select(col("id"), col("fp")).distinct().persist()
-        fps.count()
-        val known = state match {
-          case Some(idx) => fps.join(idx, Seq("fp"), "left_semi")
-            .groupBy("id").agg(count(lit(1)).as("n_known"))
-          case None => fps.select(col("id")).limit(0)
-            .withColumn("n_known", lit(0L))
-        }
-        val verdicts = fps.groupBy("id").agg(count(lit(1)).as("n_fp"))
-          .join(known, Seq("id"), "left")
-          .select(col("id").as("doc_id"), col("n_fp"),
-            coalesce(col("n_known"), lit(0L)).as("n_known"),
-            round(coalesce(col("n_known"), lit(0L)) / col("n_fp"), 6)
-              .as("known_frac"))
-        sink(verdicts)
-        val next = state.map(idx => idx.union(fps.select("fp")).distinct())
-          .getOrElse(fps.select("fp").distinct()).persist()
-        next.count()
-        state.foreach(_.unpersist())
-        state = Some(next)
-        fps.unpersist()
-        ()
+      trigger: Trigger = Trigger.AvailableNow())(
+      sink: DataFrame => Unit): StreamingQuery =
+    // state: the distinct fps, corpus-fp-cardinality
+    foldStream("S32", docs, trigger) { (st, prev, b) =>
+      val fps = st.settle(graft.operators.TextAnalysis
+        .winnow(b, idCol, textCol, k, w)
+        .select(col("id"), col("fp")).distinct(), "fingerprints")
+      val known = prev.headOption match {
+        case Some(idx) => fps.join(idx, Seq("fp"), "left_semi")
+          .groupBy("id").agg(count(lit(1)).as("n_known"))
+        case None => fps.select(col("id")).limit(0)
+          .withColumn("n_known", lit(0L))
       }
-      .trigger(trigger)
-      .start()
-  }
+      val verdicts = fps.groupBy("id").agg(count(lit(1)).as("n_fp"))
+        .join(known, Seq("id"), "left")
+        .select(col("id").as("doc_id"), col("n_fp"),
+          coalesce(col("n_known"), lit(0L)).as("n_known"),
+          round(coalesce(col("n_known"), lit(0L)) / col("n_fp"), 6)
+            .as("known_frac"))
+      val fp = fps.select("fp")
+      val next = st.settle(prev.headOption.fold(fp)(_.union(fp)).distinct(), "state")
+      (Seq(next), verdicts)
+    }(sink)
 
   /** S33: streaming higher-moment monitor — t61's live half, and the
     * tightest state bound after S30: per key ONE row of five exact
@@ -1383,74 +1106,58 @@ object StreamingOps {
     * Per trigger: one map pass + one key aggregate on the BATCH only,
     * a key-equi outer join against key-cardinality state. */
   def streamingMoments(rows: DataFrame, keyCol: String, valueCol: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+      trigger: Trigger = Trigger.AvailableNow())(
+      sink: DataFrame => Unit): StreamingQuery = {
     val d38 = DecimalType(38, 0)
     val d19 = DecimalType(19, 0)
-    var state: Option[DataFrame] = None // key, n, s1..s4 — one row per key
-    rows.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val c = (b.toDF().select(col(keyCol).as("k"),
-            (col(valueCol).cast(DecimalType(12, 2)) * lit(100))
-              .cast(LongType).as("c")))
-        val batch = c.groupBy("k").agg(
-          count(lit(1)).as("n"),
-          sum(col("c")).cast(d38).as("s1"),
-          sum(col("c") * col("c")).cast(d38).as("s2"),
-          sum((col("c") * col("c") * col("c")).cast(d38)).cast(d38).as("s3"),
-          sum((col("c") * col("c")).cast(d19) *
-            (col("c") * col("c")).cast(d19)).cast(d38).as("s4"))
-        val folded = state match {
-          case Some(st) =>
-            batch.unionByName(st)
-              .groupBy("k").agg(sum("n").as("n"),
-                sum("s1").cast(d38).as("s1"), sum("s2").cast(d38).as("s2"),
-                sum("s3").cast(d38).as("s3"), sum("s4").cast(d38).as("s4"))
-          case None => batch
-        }
-        val next = folded.persist()
-        next.count()
-        val (m2i, m3i, m4i) = graft.operators.Moments.kernels(
-          col("n"), col("s1"), col("s2"), col("s3"), col("s4"))
-        sink(next
-          .withColumn("m2i", m2i).withColumn("m3i", m3i)
-          .withColumn("m4i", m4i)
-          .select(col("k"), col("n"),
-            graft.operators.Moments.g1(col("n"), col("m2i"), col("m3i"))
-              .as("skew"),
-            graft.operators.Moments.g2(col("n"), col("m2i"), col("m4i"))
-              .as("kurt")))
-        state.foreach(_.unpersist())
-        state = Some(next)
-        ()
-      }
-      .trigger(trigger)
-      .start()
+    // state: key, n, s1..s4 — one row per key
+    foldStream("S33", rows, trigger) { (st, prev, b) =>
+      val c = b.select(col(keyCol).as("k"),
+        (col(valueCol).cast(DecimalType(12, 2)) * lit(100))
+          .cast(LongType).as("c"))
+      val batch = c.groupBy("k").agg(
+        count(lit(1)).as("n"),
+        sum(col("c")).cast(d38).as("s1"),
+        sum(col("c") * col("c")).cast(d38).as("s2"),
+        sum((col("c") * col("c") * col("c")).cast(d38)).cast(d38).as("s3"),
+        sum((col("c") * col("c")).cast(d19) *
+          (col("c") * col("c")).cast(d19)).cast(d38).as("s4"))
+      val next = st.settle(prev.headOption.fold(batch)(s => batch.unionByName(s)
+        .groupBy("k").agg(sum("n").as("n"),
+          sum("s1").cast(d38).as("s1"), sum("s2").cast(d38).as("s2"),
+          sum("s3").cast(d38).as("s3"), sum("s4").cast(d38).as("s4"))), "state")
+      val (m2i, m3i, m4i) = graft.operators.Moments.kernels(
+        col("n"), col("s1"), col("s2"), col("s3"), col("s4"))
+      (Seq(next), next
+        .withColumn("m2i", m2i).withColumn("m3i", m3i)
+        .withColumn("m4i", m4i)
+        .select(col("k"), col("n"),
+          graft.operators.Moments.g1(col("n"), col("m2i"), col("m3i"))
+            .as("skew"),
+          graft.operators.Moments.g2(col("n"), col("m2i"), col("m4i"))
+            .as("kurt")))
+    }(sink)
   }
 
   /** S9: streaming ingest curation — each arriving micro-batch runs
     * the full curation pipeline (dedup, decontamination, quality,
     * length) INCREMENTALLY against the corpus's precomputed digest
     * index ([[graft.operators.Curation.curateIncremental]]): the
-    * corpus's digests/grams/quality are computed ONCE here, never per
-    * trigger, and per batch the index is consulted via a map-only
-    * broadcast semi-join — the S8 "corpus never re-pairs" posture.
-    * Only batch verdicts reach `sink`. A production deployment appends
-    * kept batch digests to the index between triggers. */
+    * corpus's digests/grams/quality are computed and cached ONCE per
+    * stream, never per trigger, and per batch the index is consulted
+    * via a map-only broadcast semi-join — the S8 "corpus never
+    * re-pairs" posture. Only batch verdicts reach `sink`. A production
+    * deployment appends kept batch digests to the index between
+    * triggers. */
   def streamingCuration(docs: DataFrame, corpus: DataFrame,
       evalDocs: DataFrame, idCol: String, textCol: String)(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val corpusIndex = graft.operators.Curation
-      .digests(corpus, idCol, textCol).persist()
-    docs.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        sink(graft.operators.Curation.curateIncremental(
-          b.toDF(), corpusIndex, evalDocs, idCol, textCol))
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-  }
+      sink: DataFrame => Unit): StreamingQuery =
+    foldStream("S9", docs, init = st =>
+        Seq(st.cache(graft.operators.Curation.digests(corpus, idCol, textCol)))) {
+      (_, corpusIndex, b) =>
+        (corpusIndex, graft.operators.Curation.curateIncremental(
+          b, corpusIndex.head, evalDocs, idCol, textCol))
+    }(sink)
 
   /** S27: streaming Zipf rank-frequency monitor — x38's live half:
     * state = the (source, tok, c) count table (the S12/S24 tokenCounts
@@ -1469,30 +1176,19 @@ object StreamingOps {
     * integer-micros regression; spec-pinned). */
   def streamingZipf(docs: DataFrame, textCol: String,
       sourceCol: String, topR: Int = 200,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    var state: Option[DataFrame] = None
-    docs.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val counts = b.toDF()
-          .select(col(sourceCol).as("source"),
-            explode(graft.operators.TextAnalysis.tokens(col(textCol)))
-              .as("tok"))
-          .filter(col("tok") =!= "")
-          .groupBy("source", "tok").agg(count(lit(1)).as("c"))
-        val next = state.map(st => st.union(counts)
-            .groupBy("source", "tok").agg(sum("c").as("c")))
-          .getOrElse(counts).persist()
-        next.count()
-        state.foreach(_.unpersist())
-        state = Some(next)
-        sink(graft.operators.TextAnalysis.zipfFromCounts(next, topR))
-        ()
-      }
-      .trigger(trigger)
-      .start()
-  }
+      trigger: Trigger = Trigger.AvailableNow())(
+      sink: DataFrame => Unit): StreamingQuery =
+    foldStream("S27", docs, trigger) { (st, prev, b) =>
+      val counts = b
+        .select(col(sourceCol).as("source"),
+          explode(graft.operators.TextAnalysis.tokens(col(textCol)))
+            .as("tok"))
+        .filter(col("tok") =!= "")
+        .groupBy("source", "tok").agg(count(lit(1)).as("c"))
+      val next = st.settle(prev.headOption.fold(counts)(_.union(counts)
+        .groupBy("source", "tok").agg(sum("c").as("c"))), "state")
+      (Seq(next), graft.operators.TextAnalysis.zipfFromCounts(next, topR))
+    }(sink)
 
   /** S29: streaming lexical-diversity monitor — x39's live half: each
     * arriving doc's moving-window distinct-type sums compute
@@ -1510,30 +1206,19 @@ object StreamingOps {
     * EXACTLY (spec-pinned, doubles included). */
   def streamingMattr(docs: DataFrame, textCol: String,
       sourceCol: String, w: Int = 25,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    var state: Option[DataFrame] = None
-    docs.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val partials = graft.operators.TextAnalysis
-          .mattrPartials(b.toDF(), sourceCol, textCol, w)
-        val next = state.map(st => st.union(partials)
-            .groupBy("source").agg(
-              sum("n_docs").as("n_docs"),
-              sum("n_tokens").as("n_tokens"),
-              sum("sum_win_types").as("sum_win_types"),
-              sum("sum_win_slots").as("sum_win_slots")))
-          .getOrElse(partials).persist()
-        next.count()
-        state.foreach(_.unpersist())
-        state = Some(next)
-        sink(graft.operators.TextAnalysis.mattrMassFromPartials(next))
-        ()
-      }
-      .trigger(trigger)
-      .start()
-  }
+      trigger: Trigger = Trigger.AvailableNow())(
+      sink: DataFrame => Unit): StreamingQuery =
+    foldStream("S29", docs, trigger) { (st, prev, b) =>
+      val partials = graft.operators.TextAnalysis
+        .mattrPartials(b, sourceCol, textCol, w)
+      val next = st.settle(prev.headOption.fold(partials)(_.union(partials)
+        .groupBy("source").agg(
+          sum("n_docs").as("n_docs"),
+          sum("n_tokens").as("n_tokens"),
+          sum("sum_win_types").as("sum_win_types"),
+          sum("sum_win_slots").as("sum_win_slots"))), "state")
+      (Seq(next), graft.operators.TextAnalysis.mattrMassFromPartials(next))
+    }(sink)
 
   /** S30: streaming anisotropy monitor — e20's live half and the
     * hardest-bounded state in the embedding family: state is ONE
@@ -1548,26 +1233,14 @@ object StreamingOps {
     * pages before the next similarity job trusts its thresholds.
     * Vectors quantize in their arrival batch; nothing re-shuffles. */
   def streamingAnisotropy(rows: DataFrame, vecCol: String, dim: Int = 64,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    var state: Option[DataFrame] = None
-    rows.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val m = graft.operators.EmbedStats
-          .anisotropyMoments(b.toDF(), vecCol, dim)
-        val next = state.map(st => graft.operators.EmbedStats
-            .mergeAnisotropyMoments(st.unionByName(m), dim))
-          .getOrElse(m).persist()
-        next.count()
-        state.foreach(_.unpersist())
-        state = Some(next)
-        sink(graft.operators.EmbedStats.anisotropyFromMoments(next, dim))
-        ()
-      }
-      .trigger(trigger)
-      .start()
-  }
+      trigger: Trigger = Trigger.AvailableNow())(
+      sink: DataFrame => Unit): StreamingQuery =
+    foldStream("S30", rows, trigger) { (st, prev, b) =>
+      val m = graft.operators.EmbedStats.anisotropyMoments(b, vecCol, dim)
+      val next = st.settle(prev.headOption.fold(m)(s => graft.operators.EmbedStats
+        .mergeAnisotropyMoments(s.unionByName(m), dim)), "state")
+      (Seq(next), graft.operators.EmbedStats.anisotropyFromMoments(next, dim))
+    }(sink)
 
   /** S31: streaming cell-wise correction overlay — t60's live half
     * and the CELL-granular sibling of S10's row-wise CDC merge: a
@@ -1587,27 +1260,16 @@ object StreamingOps {
     * re-reading history. */
   def streamingCellOverlay(updates: DataFrame, keys: Seq[String],
       orderCol: String, valueCols: Seq[String],
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    var state: Option[DataFrame] = None
-    updates.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val folded = graft.operators.Merge
-          .goldenRecord(b.toDF(), keys, orderCol, orderCol, valueCols)
-          .select((keys.map(col) ++ valueCols.map(col)): _*)
-        val next = state.map(st => graft.operators.Merge
-            .combineFirst(folded, st, keys))
-          .getOrElse(folded).persist()
-        next.count()
-        state.foreach(_.unpersist())
-        state = Some(next)
-        sink(next)
-        ()
-      }
-      .trigger(trigger)
-      .start()
-  }
+      trigger: Trigger = Trigger.AvailableNow())(
+      sink: DataFrame => Unit): StreamingQuery =
+    foldStream("S31", updates, trigger) { (st, prev, b) =>
+      val folded = graft.operators.Merge
+        .goldenRecord(b, keys, orderCol, orderCol, valueCols)
+        .select((keys.map(col) ++ valueCols.map(col)): _*)
+      val next = st.settle(prev.headOption.fold(folded)(
+        graft.operators.Merge.combineFirst(folded, _, keys)), "state")
+      (Seq(next), next)
+    }(sink)
 
   /** S36: streaming snapshot diff — q43's live half and the LABEL
     * companion of S10's CDC merge / S31's cell overlay: a CDC stream
@@ -1628,36 +1290,26 @@ object StreamingOps {
     * arrival races), then ONE full-outer join folds it into state.
     * `baseline`/`cdc` columns: k, dg (+ op ∈ {U, D}, seq on cdc). */
   def streamingSnapshotDiff(cdc: DataFrame, baseline: DataFrame,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    var state: Option[DataFrame] = None
-    val init = baseline.select(col("k"), col("dg").as("dg_base"),
+      trigger: Trigger = Trigger.AvailableNow())(
+      sink: DataFrame => Unit): StreamingQuery = {
+    val base = baseline.select(col("k"), col("dg").as("dg_base"),
       col("dg").as("dg_cur"))
-    cdc.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val last = b.toDF().groupBy("k")
-          .agg(max(struct(col("seq"), col("op"), col("dg"))).as("m"))
-          .select(col("k"), col("m.op").as("op"), col("m.dg").as("dg_new"))
-        val next = state.getOrElse(init)
-          .join(last, Seq("k"), "full_outer")
-          .select(col("k"), col("dg_base"),
-            when(col("op").isNull, col("dg_cur"))
-              .when(col("op") === "D", lit(null))
-              .otherwise(col("dg_new")).as("dg_cur"))
-          .persist()
-        next.count()
-        state.foreach(_.unpersist()) // init is never persisted; no-op there
-        state = Some(next)
-        sink(next.select(col("k"),
-            when(col("dg_base").isNull && col("dg_cur").isNotNull, "added")
-              .when(col("dg_base").isNotNull && col("dg_cur").isNull, "removed")
-              .when(col("dg_base") =!= col("dg_cur"), "changed").as("change"))
-          .filter(col("change").isNotNull))
-        ()
-      }
-      .trigger(trigger)
-      .start()
+    foldStream("S36", cdc, trigger) { (st, prev, b) =>
+      val last = b.groupBy("k")
+        .agg(max(struct(col("seq"), col("op"), col("dg"))).as("m"))
+        .select(col("k"), col("m.op").as("op"), col("m.dg").as("dg_new"))
+      val next = st.settle(prev.headOption.getOrElse(base)
+        .join(last, Seq("k"), "full_outer")
+        .select(col("k"), col("dg_base"),
+          when(col("op").isNull, col("dg_cur"))
+            .when(col("op") === "D", lit(null))
+            .otherwise(col("dg_new")).as("dg_cur")), "state")
+      (Seq(next), next.select(col("k"),
+          when(col("dg_base").isNull && col("dg_cur").isNotNull, "added")
+            .when(col("dg_base").isNotNull && col("dg_cur").isNull, "removed")
+            .when(col("dg_base") =!= col("dg_cur"), "changed").as("change"))
+        .filter(col("change").isNotNull))
+    }(sink)
   }
 
   /** S37: streaming rolling quantile — t68's live half with S35's
@@ -1679,44 +1331,32 @@ object StreamingOps {
     * live read: a user's rolling p50/p25 spread widening mid-stream
     * is a volatility page — without re-reading history. */
   def streamingRollingQuantile(rows: DataFrame,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+      trigger: Trigger = Trigger.AvailableNow())(
+      sink: DataFrame => Unit): StreamingQuery = {
     import org.apache.spark.sql.expressions.Window
-    var tails: DataFrame = null
-    rows.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val batch = b.toDF()
-          .select(col("user_id"), unix_timestamp(col("ts")).as("es"),
-            col("event_id"), col("value"))
-        val u = (if (tails == null) batch.withColumn("is_new", lit(true))
-          else tails.withColumn("is_new", lit(false))
-            .unionByName(batch.withColumn("is_new", lit(true))))
-          .persist()
-        val w = Window.partitionBy("user_id").orderBy("es", "event_id")
-        val (q25, q50, q75) = graft.operators.SeriesStats.rollingQuantiles(
-          col("value"), col("l1"), col("l2"), col("l3"))
-        sink(u
-          .withColumn("l1", lag("value", 1).over(w))
-          .withColumn("l2", lag("value", 2).over(w))
-          .withColumn("l3", lag("value", 3).over(w))
-          .filter(col("is_new"))
-          .select(col("user_id"), col("es"), col("event_id"), col("value"),
-            q25.as("roll_q25"), q50.as("roll_q50"), q75.as("roll_q75")))
-        val newTails = u
-          .withColumn("rn", row_number().over(Window.partitionBy("user_id")
-            .orderBy(col("es").desc, col("event_id").desc)))
-          .filter(col("rn") <= 3)
-          .select("user_id", "es", "event_id", "value")
-          .persist()
-        newTails.count() // settle before releasing the parent state
-        if (tails != null) tails.unpersist()
-        u.unpersist()
-        tails = newTails
-        ()
-      }
-      .trigger(trigger)
-      .start()
+    foldStream("S37", rows, trigger) { (st, prev, b) =>
+      val batch = b
+        .select(col("user_id"), unix_timestamp(col("ts")).as("es"),
+          col("event_id"), col("value"))
+      val u = st.cache(prev.headOption.fold(batch.withColumn("is_new", lit(true)))(
+        _.withColumn("is_new", lit(false))
+          .unionByName(batch.withColumn("is_new", lit(true)))))
+      val w = Window.partitionBy("user_id").orderBy("es", "event_id")
+      val (q25, q50, q75) = graft.operators.SeriesStats.rollingQuantiles(
+        col("value"), col("l1"), col("l2"), col("l3"))
+      val tails = st.settle(u
+        .withColumn("rn", row_number().over(Window.partitionBy("user_id")
+          .orderBy(col("es").desc, col("event_id").desc)))
+        .filter(col("rn") <= 3)
+        .select("user_id", "es", "event_id", "value"), "tails")
+      (Seq(tails), u
+        .withColumn("l1", lag("value", 1).over(w))
+        .withColumn("l2", lag("value", 2).over(w))
+        .withColumn("l3", lag("value", 3).over(w))
+        .filter(col("is_new"))
+        .select(col("user_id"), col("es"), col("event_id"), col("value"),
+          q25.as("roll_q25"), q50.as("roll_q50"), q75.as("roll_q75")))
+    }(sink)
   }
 
   /** S26: streaming mixing-plan monitor — p5's live half: as crawl
@@ -1731,30 +1371,19 @@ object StreamingOps {
     * everything seen (the S24 fold-then-finish posture; spec-pinned). */
   def streamingMixingPlan(docs: DataFrame, textCol: String,
       sourceCol: String, cap: Long = 4L,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    var state: Option[DataFrame] = None
-    docs.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val counts = b.toDF()
-          .select(col(sourceCol).as("source"),
-            size(graft.operators.TextAnalysis.tokens(col(textCol)))
-              .cast("long").as("n_tokens"))
-          .groupBy("source").agg(sum("n_tokens").as("avail"))
-        val next = state.map(st => st.union(counts)
-            .groupBy("source").agg(sum("avail").as("avail")))
-          .getOrElse(counts).persist()
-        next.count()
-        state.foreach(_.unpersist())
-        state = Some(next)
-        sink(graft.operators.Sampling.mixingPlan(
-          next.withColumn("u",
-            regexp_extract(col("source"), "(\\d+)", 1).cast("long") % 4 + 1),
-          cap))
-        ()
-      }
-      .trigger(trigger)
-      .start()
-  }
+      trigger: Trigger = Trigger.AvailableNow())(
+      sink: DataFrame => Unit): StreamingQuery =
+    foldStream("S26", docs, trigger) { (st, prev, b) =>
+      val counts = b
+        .select(col(sourceCol).as("source"),
+          size(graft.operators.TextAnalysis.tokens(col(textCol)))
+            .cast("long").as("n_tokens"))
+        .groupBy("source").agg(sum("n_tokens").as("avail"))
+      val next = st.settle(prev.headOption.fold(counts)(_.union(counts)
+        .groupBy("source").agg(sum("avail").as("avail"))), "state")
+      (Seq(next), graft.operators.Sampling.mixingPlan(
+        next.withColumn("u",
+          regexp_extract(col("source"), "(\\d+)", 1).cast("long") % 4 + 1),
+        cap))
+    }(sink)
 }

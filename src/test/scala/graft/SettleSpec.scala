@@ -88,6 +88,20 @@ class SettleSpec extends AnyFunSuite {
     assert(rdds == rdds0)
   }
 
+  test("an open scope keeps only what its latest body returned; close releases it") {
+    val rdds0 = rdds
+    val stream = Settle.open("stream")
+    val first = stream.within("t1")(st => st.settle(frame(100), "state"))
+    val kept1 = rdds -- rdds0
+    assert(kept1.size == 1)
+    val second = stream.within("t2")(st => st.settle(first.filter(col("id") > 0), "state"))
+    val kept2 = rdds -- rdds0
+    assert(kept2.size == 1 && kept2 != kept1, s"previous state not released: $kept1 -> $kept2")
+    assert(second.count() == 99L)
+    stream.close()
+    assert(rdds == rdds0)
+  }
+
   test("scopes caching identical plans release only the entry they created") {
     val base = frame()
     val entries0 = entries
@@ -164,7 +178,7 @@ class SettleSpec extends AnyFunSuite {
 
   test("no batch-layer file manages a cache lifetime directly") {
     val direct = """\.persist\(|\.cache\(\)|localCheckpoint\(|\.unpersist\(""".r
-    val roots = Seq("operators", "llm", "relational")
+    val roots = Seq("operators", "llm", "relational", "streaming")
       .map(d => java.nio.file.Path.of("src/main/scala/graft", d))
     assert(roots.forall(java.nio.file.Files.isDirectory(_)))
     val offenders = roots.flatMap { root =>

@@ -2,11 +2,31 @@ package graft
 
 import graft.streaming.StreamingOps
 import org.apache.spark.sql.functions.{coalesce, col, concat, date_trunc, datediff, explode, lit, max, pmod, posexplode, regexp_extract, size, sum, to_date, unix_micros, unix_timestamp, when}
+import org.apache.spark.graft.ListenerBusDrain
+import org.apache.spark.sql.graft.CacheEntries
 import org.apache.spark.sql.streaming.Trigger
+import org.scalatest.{Failed, Outcome, Succeeded}
 import org.scalatest.funsuite.AnyFunSuite
 
 class StreamingSpec extends AnyFunSuite {
   import TestSpark._
+
+  /** Leak guard: once its queries have terminated (and the listener
+    * bus has delivered their termination), a test leaves no persistent
+    * RDD or CacheManager entry behind. */
+  override def withFixture(test: NoArgTest): Outcome = {
+    val sc = spark.sparkContext
+    val (rdds0, entries0) = (sc.getPersistentRDDs.keySet.toSet, CacheEntries(spark))
+    super.withFixture(test) match {
+      case Succeeded =>
+        ListenerBusDrain(sc)
+        val rdds = sc.getPersistentRDDs.keySet.toSet -- rdds0
+        val entries = CacheEntries(spark).filterNot(e => entries0.exists(_ eq e))
+        if (rdds.isEmpty && entries.isEmpty) Succeeded
+        else Failed(s"left ${rdds.size} persistent RDDs and ${entries.size} cache entries behind")
+      case other => other
+    }
+  }
 
   test("S1: streaming windowed agg matches its batch twin") {
     val stream = StreamingOps.readEventsStream(spark, sf)
@@ -123,10 +143,13 @@ class StreamingSpec extends AnyFunSuite {
     }
     q.awaitTermination(180000)
     val batch = corpus.select((col("doc_id") + 5000000L).as("doc_id"), col("text"))
-    val expect = graft.operators.Dedup
-      .incrementalDedup(corpus, batch, "doc_id", "text")
-      .select("id", "is_dup", "dup_of").collect()
-      .map(r => (r.getLong(0), r.getBoolean(1), r.getLong(2))).toSet
+    // the twin's scope releases the verdicts it settles once collected
+    val expect = Settle.scope("S8/twin") { _ =>
+      graft.operators.Dedup
+        .incrementalDedup(corpus, batch, "doc_id", "text")
+        .select("id", "is_dup", "dup_of").collect()
+        .map(r => (r.getLong(0), r.getBoolean(1), r.getLong(2))).toSet
+    }
     assert(got.nonEmpty && got.toSet == expect,
       s"streaming verdicts diverged from batch twin (${got.size} rows)")
     // and the planted truth: every re-crawl is a dup, attributed to its
@@ -964,11 +987,13 @@ class StreamingSpec extends AnyFunSuite {
     }
     // and d20 consistency: crossSubstringSpans == exactSubstringSpans
     // over pool ∪ crawl restricted to (pool, crawl) pairs
-    val full = operators.Dedup.exactSubstringSpans(
-        pool.union(crawl.toDF("doc_id", "text")), "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4)))
-      .filter(s => s._1 < 5000000L && s._2 >= 5000000L).toSet
+    val full = Settle.scope("S40/twin") { _ =>
+      operators.Dedup.exactSubstringSpans(
+          pool.union(crawl.toDF("doc_id", "text")), "doc_id", "text")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getLong(3), r.getLong(4)))
+        .filter(s => s._1 < 5000000L && s._2 >= 5000000L).toSet
+    }
     assert(spans.toSet == full, "cross spans diverge from d20's restriction")
   }
 
@@ -1005,11 +1030,13 @@ class StreamingSpec extends AnyFunSuite {
     q.stop()
     // batch twin: the whole crawl at once — equal because the pool is
     // CLOSED (no fold between triggers, nothing arrival-dependent)
-    val expect = operators.Dedup.leakageVerdicts(
-        heldOut, crawl.toDF("doc_id", "text"), "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getBoolean(1),
-        if (r.isNullAt(2)) None else Some(r.getLong(2)),
-        if (r.isNullAt(3)) None else Some(r.getDouble(3)))).toSet
+    val expect = Settle.scope("S34/twin") { _ =>
+      operators.Dedup.leakageVerdicts(
+          heldOut, crawl.toDF("doc_id", "text"), "doc_id", "text")
+        .collect().map(r => (r.getLong(0), r.getBoolean(1),
+          if (r.isNullAt(2)) None else Some(r.getLong(2)),
+          if (r.isNullAt(3)) None else Some(r.getDouble(3)))).toSet
+    }
     assert(got.size == crawl.size && got.toSet == expect,
       s"stream verdicts diverged (${got.size} rows vs ${expect.size})")
     // planted truth: every held-out twin leaks, attributed to a
@@ -1070,6 +1097,32 @@ class StreamingSpec extends AnyFunSuite {
     // quantiles that needed trigger-1 lag values
     val t2NonNull = got.drop(n1).filter(_._5.isDefined)
     assert(t2NonNull.nonEmpty, "no warm seam row in trigger 2")
+  }
+
+  test("a sink that throws on the second trigger fails the query, and its state is released") {
+    // the leak guard checks the release: the first trigger's settled
+    // tails and the failing trigger's cache must all be gone
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val mem = MemoryStream[(Long, Long, Long, Double)]
+    @volatile var triggers = 0
+    val q = StreamingOps.streamingRollingQuantile(
+        mem.toDF().toDF("user_id", "es", "event_id", "value")
+          .withColumn("ts", col("es").cast("timestamp")),
+        trigger = Trigger.ProcessingTime(0L)) { d =>
+      d.collect()
+      triggers += 1
+      if (triggers == 2) throw new IllegalStateException("sink failed")
+    }
+    mem.addData((1L, 0L, 1L, 1.0), (1L, 60L, 2L, 2.0))
+    q.processAllAvailable()
+    mem.addData((1L, 120L, 3L, 3.0))
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      q.awaitTermination())
+    assert(Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage == "sink failed"), e)
+    assert(triggers == 2)
   }
 
   test("S35: streaming autocorr fold across day-closed triggers equals batch t65, doubles included") {

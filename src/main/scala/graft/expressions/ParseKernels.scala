@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.unsafe.types.UTF8String.LongWrapper
 
 /** Timedelta-string → int64 microseconds in one compiled call
   * (reference util/time/timedelta.pyx:136 `timedelta_string_to_ns`,
@@ -14,12 +15,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Same grammar, same Java regex engine, same floor(x·unit + 0.5)
   * per-component arithmetic as the Column cascade it replaces
-  * (TimeFns.timedeltaMicros) — but the ~20 regexp_replace /
+  * (TimeFns.timedeltaMicrosColumns) — but the ~20 regexp_replace /
   * regexp_extract / rlike machines that cascade inlined into generated
-  * code become THREE statically-precompiled patterns matched at most
-  * once each per row. Cuts whole-stage-codegen module size (the old
-  * t22 module cost ~2.8 s of one-time Janino compilation) and per-row
-  * work. Unparseable input → null; callers apply the error mode. */
+  * code become one unit-word rewrite scan plus THREE
+  * statically-precompiled patterns matched at most once each per row.
+  * Unparseable input → null; callers apply the error mode. */
 case class TimedeltaParse(child: Expression, asHours: Boolean)
     extends UnaryExpression {
 
@@ -63,8 +63,16 @@ object TimedeltaKernel {
     "days?" -> "d",
     "weeks?|wks?" -> "w")
 
-  private val ws = Pattern.compile("\\s+")
   private val repl = replacements.map { case (p, r) => (Pattern.compile(p), r) }
+  // the seven rewrites as one alternation, group i+1 = replacements(i)
+  private val unitWordP = Pattern.compile(replacements.map(r => s"(${r._1})").mkString("|"))
+  private val unitWordOut = replacements.map(_._2).toArray
+  // One scan equals the seven sequential passes unless a rewrite's
+  // output joins a later unit word: the "s" of "us"/"ms" starting a new
+  // "sec" ("microsec" + "ec"), or the "s" a "sec" leaves completing
+  // "hours"/"hrs"/"days"/"weeks"/"wks" ("hour" + "sec"). Strings
+  // containing either shape keep the sequential passes.
+  private val chainedP = Pattern.compile("(?:hour|hr|day|week|wk)sec|sec(?:s|onds?)?ec")
   private val clockP = Pattern.compile(clockReStr)
   private val secP = Pattern.compile(secReStr)
   private val abbrevP = Pattern.compile(abbrevReStr)
@@ -80,15 +88,37 @@ object TimedeltaKernel {
     math.floor(v * unitUs + 0.5).toLong
   @inline private def sign(g: String): Long = if ("-" == g) -1L else 1L
 
+  /** Java's `\s`: space and \t, \n, vertical tab, \f, \r. */
+  @inline private def isSpace(c: Char): Boolean =
+    c == ' ' || (c >= '\t' && c <= '\r')
+
+  /** Drops every whitespace character (collapse-to-empty makes the
+    * Column version's trim-vs-Java-trim distinction moot). */
+  private def stripSpaces(s: String): String =
+    if (s.exists(isSpace)) s.filterNot(isSpace) else s
+
+  /** The unit-word rewrites (`replacements`, applied in order) in one
+    * scan of `s`. */
+  def unitWords(s: String): String = {
+    val m = unitWordP.matcher(s)
+    if (!m.find()) return s
+    if (s.contains("sec") && chainedP.matcher(s).find())
+      return repl.foldLeft(s) { case (acc, (p, r)) => p.matcher(acc).replaceAll(r) }
+    val sb = new java.lang.StringBuilder(s.length)
+    var last = 0
+    while ({
+      sb.append(s, last, m.start())
+      var g = 1
+      while (m.start(g) < 0) g += 1
+      sb.append(unitWordOut(g - 1))
+      last = m.end()
+      m.find()
+    }) ()
+    sb.append(s, last, s.length).toString
+  }
+
   def compute(raw: UTF8String, asHours: Boolean): java.lang.Long = {
-    // lower + strip ALL whitespace (collapse-to-empty makes the
-    // Column version's trim-vs-Java-trim distinction moot)
-    var s = ws.matcher(raw.toLowerCase.toString).replaceAll("")
-    var i = 0
-    while (i < repl.length) {
-      s = repl(i)._1.matcher(s).replaceAll(repl(i)._2)
-      i += 1
-    }
+    val s = unitWords(stripSpaces(raw.toLowerCase.toString))
     val cm = clockP.matcher(s)
     if (cm.matches()) {
       val hasSec = cm.group(6) != null && cm.group(6).nonEmpty
@@ -192,4 +222,135 @@ object ComplexKernel {
         java.lang.Double.parseDouble(rm.group(1)), 0.0))
     null
   }
+}
+
+/** String → int64 in one compiled pass with the target width's range
+  * check folded in (reference convert/integer.py): null when the string
+  * does not parse or the value lies outside [lo, hi]. An integral child
+  * is range-checked only. Callers apply the error mode.
+  *
+  * Base 10 keeps the semantics of the Column form it replaces
+  * (`rlike("^[+-]?\\d+$")` then `try_cast` to BIGINT on the SQL-trimmed
+  * string): optional sign, ASCII digits, one trailing line terminator
+  * tolerated, overflow → null. Any other base keeps those of the
+  * sign-peel + `conv` form: after an optional sign only the longest
+  * valid digit prefix counts ("xyz", "g1" and "0x" parse to 0, a lone
+  * sign to null), and magnitudes past Long.MaxValue are null, except
+  * that "-" + 2^63 is Long.MinValue. */
+case class IntegerParse(child: Expression, base: Int, lo: Long, hi: Long)
+    extends UnaryExpression {
+
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = true
+  override def prettyName: String = "graft_integer_parse"
+
+  override def nullSafeEval(v: Any): Any = child.dataType match {
+    case StringType =>
+      val w = new LongWrapper
+      if (IntegerKernel.parse(v.asInstanceOf[UTF8String], base, lo, hi, w)) w.value else null
+    case _ =>
+      val x = v.asInstanceOf[Long]
+      if (x >= lo && x <= hi) x else null
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c => child.dataType match {
+      case StringType =>
+        val w = ctx.freshName("intParse")
+        val wrapper = classOf[LongWrapper].getName.replace('$', '.')
+        s"""$wrapper $w = new $wrapper();
+           |if (graft.expressions.IntegerKernel.parse($c, $base, ${lo}L, ${hi}L, $w)) {
+           |  ${ev.value} = $w.value;
+           |} else { ${ev.isNull} = true; }
+         """.stripMargin
+      case _ =>
+        s"""if ($c >= ${lo}L && $c <= ${hi}L) { ${ev.value} = $c; } else { ${ev.isNull} = true; }"""
+    })
+
+  override protected def withNewChildInternal(newChild: Expression): IntegerParse =
+    copy(child = newChild)
+}
+
+object IntegerKernel {
+  /** Parses `raw` in `base` into `out`; false when unparseable or
+    * outside [lo, hi]. */
+  def parse(raw: UTF8String, base: Int, lo: Long, hi: Long, out: LongWrapper): Boolean = {
+    val s = raw.trim() // SQL trim: 0x20 only
+    (if (base == 10) decimal(s, out) else radix(s, base, out)) &&
+      out.value >= lo && out.value <= hi
+  }
+
+  // Long.parseLong's accumulation: digits subtract from a non-positive
+  // accumulator, so -2^63 is reachable; false past the long range
+  private def accumulate(s: UTF8String, from: Int, to: Int, radix: Int,
+      out: LongWrapper): Int = {
+    val multMin = Long.MinValue / radix
+    var acc = 0L
+    var i = from
+    while (i < to) {
+      val d = Character.digit(s.getByte(i).toInt, radix)
+      if (d < 0) { out.value = acc; return i }
+      if (acc < multMin || acc * radix < Long.MinValue + d) return -1
+      acc = acc * radix - d
+      i += 1
+    }
+    out.value = acc
+    i
+  }
+
+  private def decimal(s: UTF8String, out: LongWrapper): Boolean = {
+    var n = s.numBytes()
+    // `$` matches before one final line terminator and the cast trims
+    // \r and \n (the other terminators are non-digits: no parse)
+    if (n >= 2 && s.getByte(n - 2) == '\r' && s.getByte(n - 1) == '\n') n -= 2
+    else if (n >= 1 && (s.getByte(n - 1) == '\n' || s.getByte(n - 1) == '\r')) n -= 1
+    val neg = n > 0 && s.getByte(0) == '-'
+    val from = if (n > 0 && (neg || s.getByte(0) == '+')) 1 else 0
+    if (from == n || accumulate(s, from, n, 10, out) != n) return false
+    if (neg) true
+    else if (out.value == Long.MinValue) false
+    else { out.value = -out.value; true }
+  }
+
+  private def radix(s: UTF8String, base: Int, out: LongWrapper): Boolean = {
+    val n = s.numBytes()
+    if (base < Character.MIN_RADIX || base > Character.MAX_RADIX || n == 0) return false
+    val neg = s.getByte(0) == '-'
+    val from = if (neg || s.getByte(0) == '+') 1 else 0
+    if (from == n) return false
+    // conv() negates a magnitude that carries its own '-': only zero
+    // survives the cast back to BIGINT
+    val magNeg = s.getByte(from) == '-'
+    if (accumulate(s, if (magNeg) from + 1 else from, n, base, out) < 0) return false
+    if (magNeg) out.value == 0L
+    else if (neg) true
+    else if (out.value == Long.MinValue) false
+    else { out.value = -out.value; true }
+  }
+}
+
+/** int64 → string in `base` (reference util/string.pyx:45
+  * `int_to_base`): lowercase digits and an explicit '-' sign, so
+  * Long.MinValue renders as "-8000000000000000" in base 16. Null for a
+  * base outside [2, 36]. */
+case class IntToBase(child: Expression, base: Int) extends UnaryExpression {
+
+  override def dataType: DataType = StringType
+  override def nullable: Boolean = true
+  override def prettyName: String = "graft_int_to_base"
+
+  private def valid: Boolean = base >= Character.MIN_RADIX && base <= Character.MAX_RADIX
+
+  override def nullSafeEval(v: Any): Any =
+    if (valid) UTF8String.fromString(java.lang.Long.toString(v.asInstanceOf[Long], base))
+    else null
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      if (valid)
+        s"${ev.value} = UTF8String.fromString(java.lang.Long.toString($c, $base));"
+      else s"${ev.isNull} = true;")
+
+  override protected def withNewChildInternal(newChild: Expression): IntToBase =
+    copy(child = newChild)
 }

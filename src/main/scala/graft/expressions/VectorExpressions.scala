@@ -1,7 +1,9 @@
 package graft.expressions
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -188,6 +190,51 @@ object MinHashSignature {
       j += 1
     }
     new GenericArrayData(m)
+  }
+}
+
+/** LSH band keys of a MinHash signature: `bands` bands of `h/bands`
+  * rows, each hashed to one bucket key in ONE compiled loop. Band b's
+  * key is exactly `xxhash64(slice(sig, b*r + 1, r), b)` (seed 42, the
+  * array's elements then the band number, a null signature hashing as
+  * an empty one), so it replaces that `bands`-wide Column array without
+  * changing a key. */
+case class BandKeys(child: Expression, h: Int, bands: Int) extends UnaryExpression {
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "graft_band_keys"
+
+  override def eval(input: InternalRow): Any =
+    BandKeys.compute(child.eval(input).asInstanceOf[ArrayData], h / bands, bands)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      |${c.code}
+      |ArrayData ${ev.value} = graft.expressions.BandKeys.compute(
+      |  ${c.isNull} ? null : ${c.value}, ${h / bands}, $bands);
+    """.stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): BandKeys =
+    copy(child = newChild)
+}
+
+object BandKeys {
+  def compute(sig: ArrayData, rows: Int, bands: Int): ArrayData = {
+    val n = if (sig == null) 0 else sig.numElements()
+    val keys = new Array[Long](bands)
+    var b = 0
+    while (b < bands) {
+      var k = 42L
+      var i = b * rows
+      val end = math.min(i + rows, n)
+      while (i < end) { k = XXH64.hashLong(sig.getLong(i), k); i += 1 }
+      keys(b) = XXH64.hashInt(b, k)
+      b += 1
+    }
+    new GenericArrayData(keys)
   }
 }
 

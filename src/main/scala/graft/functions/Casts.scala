@@ -1,7 +1,10 @@
 package graft.functions
 
+import graft.expressions.{ComplexParse, IntToBase, IntegerParse}
 import graft.types._
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -28,34 +31,39 @@ final case class CastOptions(
     downcast: Boolean = false)
 
 /** The `cast` family (reference bertrand/convert/base.py:152 `cast`,
-  * :204-293 `to_*`), re-expressed as pure Column→Column kernels.
+  * :204-293 `to_*`), as Column→Column kernels.
   *
-  * Semantics ported, implementation Spark-first: every kernel is a
-  * composition of built-in codegen'd expressions — `when`/`rlike`/
-  * `cast`/arithmetic — so conversions inline into whole-stage codegen
-  * and never leave the JVM. Error modes:
+  * Semantics ported, implementation Spark-first: built-in codegen'd
+  * expressions (`when`/`rlike`/`cast`/arithmetic) where one evaluation
+  * per row suffices, and graft's native kernels (graft.expressions:
+  * IntegerParse, TimedeltaParse, ComplexParse, IntToBase) where a
+  * composition would re-parse the string — so conversions inline into
+  * whole-stage codegen, never leave the JVM, and evaluate their input
+  * once per row. Error modes:
   *   - "coerce": unconvertible/overflow → null (the reference's NA)
-  *   - "ignore": unconvertible → keep the original value (only where
-  *     the output type can carry it; otherwise behaves like coerce)
+  *   - "ignore": element-wise it behaves like coerce — no target type
+  *     here can carry the original value; [[castColumnOrKeep]] is the
+  *     reference's column-level ignore
   *   - "raise": unconvertible → runtime error via raise_error
   */
 object Casts {
 
-  private val intRe = "^[+-]?\\d+$"
   private val floatRe = "^[+-]?(\\d+\\.?\\d*|\\.\\d+)([eE][+-]?\\d+)?$"
 
   private def fail(c: Column, target: String): Column =
     raise_error(concat(lit(s"graft.cast: cannot convert to $target: "), c.cast(StringType)))
 
-  private def onError(orig: Column, converted: Column, convertible: Column,
-      target: String, opts: CastOptions, identityOk: Boolean = false): Column =
+  private def native(e: Expression): Column = ColumnBridge.column(e)
+  private def expr(c: Column): Expression = ColumnBridge.expression(c)
+
+  /** The one error-mode wrapper. `converted` must be null exactly where
+    * `orig` is null or unconvertible; it appears once in the result, so
+    * it is evaluated once per row. */
+  private def withErrors(orig: Column, converted: Column, target: String,
+      opts: CastOptions): Column =
     opts.errors match {
-      case "coerce" => when(convertible, converted)
-      case "ignore" =>
-        if (identityOk) when(convertible, converted).otherwise(orig)
-        else when(convertible, converted)
-      case _ => when(convertible || orig.isNull, converted)
-        .otherwise(fail(orig, target))
+      case "coerce" | "ignore" => converted
+      case _ => coalesce(converted, when(orig.isNotNull, fail(orig, target)))
     }
 
   /** to_boolean (reference convert/base.py:204 + convert/boolean.py).
@@ -65,26 +73,30 @@ object Casts {
     dt match {
       case StringType =>
         val v = if (opts.ignoreCase) lower(trim(c)) else trim(c)
-        val res = when(v.isin(opts.trueTokens: _*), lit(true))
-          .when(v.isin(opts.falseTokens: _*), lit(false))
-        val convertible = v.isin((opts.trueTokens ++ opts.falseTokens): _*)
-        onError(c, res, convertible, "bool", opts)
+        withErrors(c, when(v.isin(opts.trueTokens: _*), lit(true))
+          .when(v.isin(opts.falseTokens: _*), lit(false)), "bool", opts)
       case _: NumericType =>
         val d = c.cast(DoubleType)
         val convertible = abs(d) <= opts.tol || abs(d - 1) <= opts.tol
-        onError(c, d > 0.5, convertible, "bool", opts)
+        withErrors(c, when(convertible, d > 0.5), "bool", opts)
       case BooleanType => c
       case other => throw new IllegalArgumentException(s"to_boolean from $other")
     }
 
   /** to_integer (reference convert/base.py:214, convert/integer.py).
     * Floats honour `rounding` (else must be within `tol` of integral);
-    * strings parse (base 10 via cast, other radix via conv); overflow
+    * strings parse in `base` (graft.expressions.IntegerParse); overflow
     * outside the target width follows the error mode. */
   def toInteger(c: Column, dt: DataType, target: GInteger = GInteger(64),
       opts: CastOptions = CastOptions()): Column = {
-    val narrowed: Column = dt match {
-      case ByteType | ShortType | IntegerType | LongType | BooleanType => c.cast(LongType)
+    // range check against the logical width (uintN ranges enforced even
+    // though Spark carries them in wider signed types — SURVEY §3),
+    // folded into the same pass as the parse
+    def inRange(v: Column, base: Int = 10): Column = native(IntegerParse(expr(v), base,
+      target.minValue.toLong, target.maxValue.min(BigInt(Long.MaxValue)).toLong))
+    val converted: Column = dt match {
+      case ByteType | ShortType | IntegerType | LongType | BooleanType =>
+        inRange(c.cast(LongType))
       case FloatType | DoubleType | _: DecimalType =>
         val d = c.cast(DoubleType)
         val rounded = opts.rounding match {
@@ -98,36 +110,12 @@ object Casts {
         val integral =
           if (opts.rounding.isDefined) finite
           else finite && abs(d - rounded) <= opts.tol
-        onError(c, rounded.cast(LongType), integral, target.spec, opts)
-      case StringType =>
-        val v = trim(c)
-        if (opts.base == 10) {
-          // try_cast: ANSI would throw on digits exceeding long range
-          // even though intRe matched
-          onError(c, v.try_cast(LongType),
-            v.rlike(intRe) && v.try_cast(LongType).isNotNull, target.spec, opts)
-        } else {
-          // conv() is unsigned: peel an explicit sign first so radix
-          // output ("-ff") round-trips
-          val neg = v.startsWith("-")
-          val mag = when(v.rlike("^[+-]"), v.substr(lit(2), length(v))).otherwise(v)
-          val parsed = (conv(mag, opts.base, 10).try_cast(LongType) *
-            when(neg, -1L).otherwise(1L)).cast(LongType)
-          onError(c, parsed, parsed.isNotNull, target.spec, opts)
-        }
-      case TimestampType => unix_timestamp(c)
+        inRange(when(integral, rounded.cast(LongType)))
+      case StringType => inRange(c.cast(StringType), opts.base)
+      case TimestampType => inRange(unix_timestamp(c))
       case other => throw new IllegalArgumentException(s"to_integer from $other")
     }
-    // range check against the logical width (uintN ranges enforced even
-    // though Spark carries them in wider signed types — SURVEY §3)
-    val inRange = narrowed.isNull ||
-      (narrowed >= lit(target.minValue.toLong) &&
-        narrowed <= lit(target.maxValue.min(BigInt(Long.MaxValue)).toLong))
-    val checked = opts.errors match {
-      case "coerce" | "ignore" => when(inRange, narrowed)
-      case _ => when(inRange, narrowed).otherwise(fail(c, target.spec).cast(LongType))
-    }
-    checked.cast(target.sparkType)
+    withErrors(c, converted, target.spec, opts).cast(target.sparkType)
   }
 
   /** to_float (reference convert/base.py:224). */
@@ -135,7 +123,7 @@ object Casts {
       opts: CastOptions = CastOptions()): Column = dt match {
     case StringType =>
       val v = trim(c)
-      onError(c, v.cast(DoubleType), v.rlike(floatRe), target.spec, opts)
+      withErrors(c, when(v.rlike(floatRe), v.cast(DoubleType)), target.spec, opts)
         .cast(target.sparkType)
     case _ => c.cast(target.sparkType)
   }
@@ -145,18 +133,11 @@ object Casts {
       opts: CastOptions = CastOptions()): Column = dt match {
     case StringType =>
       val v = trim(c)
-      onError(c, v.try_cast(target.sparkType),
-        v.rlike(floatRe) && v.try_cast(target.sparkType).isNotNull,
-        target.spec, opts)
+      withErrors(c, when(v.rlike(floatRe), v.try_cast(target.sparkType)), target.spec, opts)
     case _ =>
       // try_cast: under ANSI (Spark 4 default) a plain cast throws on
       // out-of-precision values instead of producing null
-      val converted = c.try_cast(target.sparkType)
-      opts.errors match {
-        case "coerce" | "ignore" => converted
-        case _ => when(c.isNull || converted.isNotNull, converted)
-          .otherwise(fail(c, target.spec).cast(target.sparkType))
-      }
+      withErrors(c, c.try_cast(target.sparkType), target.spec, opts)
   }
 
   /** to_datetime (reference convert/base.py:254, convert/datetime.py):
@@ -215,8 +196,7 @@ object Casts {
               try_to_timestamp(v)).reduce(coalesce(_, _))
         }
         // tz: the string is wall-clock time in `tz` → absolute UTC instant
-        val parsed = opts.tz.fold(naive)(z => to_utc_timestamp(naive, z))
-        onError(c, parsed, parsed.isNotNull, "datetime", opts)
+        withErrors(c, opts.tz.fold(naive)(z => to_utc_timestamp(naive, z)), "datetime", opts)
       case TimestampType | DateType => c.cast(TimestampType)
       case other => throw new IllegalArgumentException(s"to_datetime from $other")
     }
@@ -238,8 +218,7 @@ object Casts {
         (c.cast(DoubleType) * lit((TimeFns.unitMicros(opts.unit) * opts.stepSize).toDouble))
           .try_cast(LongType) // ANSI-safe on NaN/Inf/overflow
       case StringType =>
-        val parsed = TimeFns.timedeltaMicros(c, opts.asHours)
-        onError(c, parsed, parsed.isNotNull, "timedelta", opts)
+        withErrors(c, TimeFns.timedeltaMicros(c, opts.asHours), "timedelta", opts)
       case other => throw new IllegalArgumentException(s"to_timedelta from $other")
     }
 
@@ -260,11 +239,8 @@ object Casts {
     dt match {
       case StringType =>
         // one compiled call, per-JVM precompiled patterns (the same
-        // three pattern strings; CastsSpec pins kernel == cascade)
-        import org.apache.spark.sql.graft.ColumnBridge
-        val parsed = ColumnBridge.column(graft.expressions.ComplexParse(
-          ColumnBridge.expression(c)))
-        onError(c, parsed, parsed.isNotNull, "complex", opts)
+        // three pattern strings; ParseKernelsSpec pins kernel == cascade)
+        withErrors(c, native(ComplexParse(expr(c))), "complex", opts)
       case _: NumericType | BooleanType =>
         ComplexOps.complex(c.cast(DoubleType), lit(0.0))
       case _ => c // already struct<re,im>
@@ -295,8 +271,7 @@ object Casts {
       case BooleanType => when(c, "true").otherwise(when(!c, "false"))
       case TimestampType => date_format(c, "yyyy-MM-dd HH:mm:ss")
       case ByteType | ShortType | IntegerType | LongType if opts.base != 10 =>
-        val mag = lower(conv(abs(c).cast(StringType), 10, opts.base))
-        when(c < 0, concat(lit("-"), mag)).otherwise(mag)
+        native(IntToBase(expr(c.cast(LongType)), opts.base))
       case _ => c.cast(StringType)
     }
 }

@@ -1,7 +1,9 @@
 package graft.functions
 
+import graft.expressions.RoundDiv
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Vectorized rounding with customizable rules, re-expressing the
@@ -9,17 +11,17 @@ import org.apache.spark.sql.types._
   * round_div: util/round/integer.pyx, Tolerance.snap:
   * util/round/tolerance.pyx).
   *
-  * All kernels are pure Column expressions over Spark built-ins (floor/
-  * ceil/sign/pmod) — whole-stage-codegen friendly, no UDFs — and use
-  * only IEEE-deterministic ops so results are identical on any engine
-  * evaluating the same formula (the DuckDB oracle mirrors them).
+  * The float and decimal kernels are Column expressions over Spark
+  * built-ins (floor/ceil/sign/pmod) using only IEEE-deterministic ops,
+  * so results are identical on any engine evaluating the same formula
+  * (the DuckDB oracle mirrors them); `roundDiv` is the native exact
+  * int64 kernel graft.expressions.RoundDiv. All are whole-stage-codegen
+  * friendly, no UDFs.
   */
 object Rounding {
 
   /** The reference's `valid_rules` (util/round/__init__.py). */
-  val validRules: Seq[String] = Seq(
-    "floor", "ceiling", "down", "up",
-    "half_floor", "half_ceiling", "half_down", "half_up", "half_even")
+  val validRules: Seq[String] = RoundDiv.rules
 
   /** Round a double column to `decimals` places under `rule`. */
   def roundFloat(x: Column, rule: String, decimals: Int = 0): Column = {
@@ -46,37 +48,12 @@ object Rounding {
     scaled / lit(s)
   }
 
-  /** Integer division a/b under `rule`, exact (no float detour).
-    * Both operands must be integral; b nonzero. Mirrors round_div. */
-  def roundDiv(a: Column, b: Column, rule: String): Column = {
-    // floor modulus (same sign as b, |m| < |b|) → exact floor quotient.
-    // The division goes through decimal so 64-bit operands never lose
-    // precision in a double.
-    val m = pmod(pmod(a, b) + b, b)
-    val qFloor = ((a - m).cast(DecimalType(38, 0)) / b.cast(DecimalType(38, 0)))
-      .cast(LongType)
-    val mag = abs(m) // distance from the floor multiple
-    val qCeil = qFloor + when(mag === 0, 0L).otherwise(1L)
-    val negQ = signum(a) * signum(b) < 0 // true quotient is negative
-    rule match {
-      case "floor" => qFloor
-      case "ceiling" => qCeil
-      case "down" => when(negQ, qCeil).otherwise(qFloor) // toward zero
-      case "up" => when(negQ, qFloor).otherwise(qCeil) // away from zero
-      case "half_floor" => when(mag * 2 > abs(b), qCeil).otherwise(qFloor)
-      case "half_ceiling" => when(mag * 2 >= abs(b), qCeil).otherwise(qFloor)
-      case "half_down" => // ties toward zero
-        when(mag * 2 > abs(b) || (mag * 2 === abs(b) && negQ), qCeil).otherwise(qFloor)
-      case "half_up" => // ties away from zero
-        when(mag * 2 > abs(b) || (mag * 2 === abs(b) && !negQ), qCeil).otherwise(qFloor)
-      case "half_even" =>
-        val qEven = pmod(pmod(qFloor, lit(2L)) + lit(2L), lit(2L)) === 0
-        when(mag * 2 > abs(b), qCeil)
-          .when(mag * 2 < abs(b), qFloor)
-          .otherwise(when(qEven, qFloor).otherwise(qCeil))
-      case other => throw new IllegalArgumentException(s"unknown rounding rule: $other")
-    }
-  }
+  /** Integer division a/b under `rule`, exact over the whole int64
+    * range (no float or decimal detour). Both operands must be
+    * integral; b nonzero. Mirrors round_div. */
+  def roundDiv(a: Column, b: Column, rule: String): Column =
+    ColumnBridge.column(RoundDiv(ColumnBridge.expression(a.cast(LongType)),
+      ColumnBridge.expression(b.cast(LongType)), rule))
 
   /** Round a DECIMAL column to `decimals` places under `rule`, staying
     * in exact decimal arithmetic throughout (reference round_decimal,

@@ -133,10 +133,11 @@ object Dedup {
   }
 
   /** LSH band keys: signature split into `bands` bands of `h/bands`
-    * rows; each band hashed to one bucket key. */
+    * rows; each band hashed to one bucket key — one compiled loop
+    * (native expression — see graft.expressions.BandKeys). */
   def bandKeys(sig: Column, h: Int, bands: Int): Column = {
-    val r = h / bands
-    array((0 until bands).map(b => xxhash64(slice(sig, b * r + 1, r), lit(b))): _*)
+    import org.apache.spark.sql.graft.ColumnBridge
+    ColumnBridge.column(graft.expressions.BandKeys(ColumnBridge.expression(sig), h, bands))
   }
 
   /** Candidate near-duplicate pairs via MinHash LSH, verified with the
@@ -159,18 +160,12 @@ object Dedup {
       w: Int = 3, h: Int = 64, bands: Int = 32,
       threshold: Double = 0.5,
       capBucket: Int = 4096, maxSalt: Int = 64): DataFrame = Settle.scope("minhashPairs") { st =>
-    // staged projections: sh → sig → bands, so each step reads the
-    // previous as a row attribute (bandKeys over an inline signature
-    // would re-run the signature aggregate once per band). persisted:
-    // consumed three times below (band explode + both verify-join
-    // sides). At cluster scale this is a checkpoint.
+    // persisted: consumed three times below (band explode + both
+    // verify-join sides). At cluster scale this is a checkpoint. Only
+    // the band keys of the signature are kept.
     val withSig = st.cache(df.select(col(idCol).as("id"),
         shingleHashes(col(textCol), w).as("sh"))
-      .withColumn("sig", minhashSignature(col("sh"), h))
-      .withColumn("bands", bandKeys(col("sig"), h, bands))
-      // the full signature is subsumed by its band keys from here on —
-      // drop it before persisting (512 B/doc dead weight × 3 consumers)
-      .select("id", "sh", "bands"))
+      .withColumn("bands", bandKeys(minhashSignature(col("sh"), h), h, bands)))
     // BLOCK-LOCAL candidate generation: pairs are enumerated inside
     // each (band, key) group — vs the former self-join this shuffles
     // the exploded rows (not the join's materialized pair rows).

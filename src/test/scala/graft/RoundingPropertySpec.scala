@@ -53,6 +53,51 @@ class RoundingPropertySpec extends AnyFunSuite {
     }
   }
 
+  /** BigDecimal's quotient under `rule`; half_floor/half_ceiling break
+    * ties toward -inf/+inf. */
+  private def exactDiv(a: Long, b: Long, rule: String): java.math.BigDecimal = {
+    val negQ = (a < 0) != (b < 0)
+    val mode = rule match {
+      case "half_floor" => if (negQ) RoundingMode.HALF_UP else RoundingMode.HALF_DOWN
+      case "half_ceiling" => if (negQ) RoundingMode.HALF_DOWN else RoundingMode.HALF_UP
+      case r => modes(r)
+    }
+    new java.math.BigDecimal(a).divide(new java.math.BigDecimal(b), 0, mode)
+  }
+
+  private def rootMessage(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq.last.getMessage
+
+  test("roundDiv is exact near Long.MinValue/Long.MaxValue for every rule") {
+    val (lo, hi) = (Long.MinValue, Long.MaxValue)
+    val edges = Seq(lo, lo + 1, lo + 2, -(1L << 62) - 1, -(1L << 62), -7L, -3L, -2L, -1L,
+      0L, 1L, 2L, 3L, 7L, 1L << 62, (1L << 62) + 1, hi - 2, hi - 1, hi)
+    // every pair whose quotient fits in a long: all but Long.MinValue / -1
+    val grid = for (a <- edges; b <- edges if b != 0 && !(a == lo && b == -1)) yield (a, b)
+    // a local relation folds through `eval`, an RDD scan runs codegen
+    for (df <- Seq(grid.toDF("a", "b"), spark.sparkContext.parallelize(grid, 2).toDF("a", "b"));
+        rule <- Rounding.validRules) {
+      val got = df.select(Rounding.roundDiv($"a", $"b", rule).as("q")).as[Long].collect().toSeq
+      got.zip(grid).foreach { case (q, (a, b)) =>
+        assert(q == exactDiv(a, b, rule).longValueExact(), s"$rule: $a / $b")
+      }
+    }
+  }
+
+  test("roundDiv throws where the quotient overflows, and on a zero divisor") {
+    def frames(a: Long, b: Long) =
+      Seq(Seq((a, b)).toDF("a", "b"), spark.sparkContext.parallelize(Seq((a, b))).toDF("a", "b"))
+    // Long.MinValue / -1 = 2^63 under every rule
+    for (rule <- Rounding.validRules; df <- frames(Long.MinValue, -1L)) {
+      val e = intercept[Exception](df.select(Rounding.roundDiv($"a", $"b", rule)).collect())
+      assert(rootMessage(e).contains("overflow"), rule)
+    }
+    for (df <- frames(7L, 0L)) {
+      val z = intercept[Exception](df.select(Rounding.roundDiv($"a", $"b", "floor")).collect())
+      assert(rootMessage(z).contains("division by zero"))
+    }
+  }
+
   test("roundDecimal matches BigDecimal at scale 1 on cents grid") {
     val cents = for (k <- -500 to 500) yield k / 100.0
     val df = cents.toDF("x").select($"x".cast("decimal(12,2)").as("x"))

@@ -239,6 +239,16 @@ class CastsSpec extends AnyFunSuite {
     assert(got == Seq(255L, 16L))
   }
 
+  test("radix casts at the int64 edges: Long.MinValue renders and parses in base 16") {
+    val df = Seq(Long.MinValue, Long.MaxValue, -1L).toDF("n")
+    val hex = df.select(Casts.toString($"n", LongType,
+      CastOptions(base = 16, errors = "coerce")).as("s")).as[String].collect().toSeq
+    assert(hex == Seq("-8000000000000000", "7fffffffffffffff", "-1"))
+    val back = hex.toDF("s").select(Casts.toInteger($"s", StringType, GInteger(64),
+      CastOptions(base = 16, errors = "coerce")).as("i")).as[Long].collect().toSeq
+    assert(back == Seq(Long.MinValue, Long.MaxValue, -1L))
+  }
+
   test("toDatetime unit/since roundtrip") {
     val df = Seq(60L).toDF("v")
     val got = df.select(unix_micros(Casts.toDatetime($"v", LongType,

@@ -1,9 +1,10 @@
 package graft
 
 import graft.expressions._
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** SparkSessionExtensions entry point: registers graft's native
   * expressions as SQL functions so `spark.sql` users get them too:
@@ -31,12 +32,27 @@ object GraftExtensions {
   private def info(name: String, usage: String) =
     new ExpressionInfo("graft", null, name, usage, "")
 
+  private def unary(name: String)(mk: Expression => Expression)
+      : Seq[Expression] => Expression = {
+    case Seq(a) => mk(a)
+    case es => throw new IllegalArgumentException(
+      s"$name requires 1 argument, got ${es.length}")
+  }
+
   private def binary(name: String)(mk: (Expression, Expression) => Expression)
       : Seq[Expression] => Expression = {
     case Seq(a, b) => mk(a, b)
     case es => throw new IllegalArgumentException(
       s"$name requires exactly 2 arguments, got ${es.length}")
   }
+
+  /** A [[Kernels]] Column constructor over Catalyst arguments. */
+  private def kernel(f: Column => Column): Expression => Expression =
+    e => ColumnBridge.expression(f(ColumnBridge.column(e)))
+  private def kernel(f: (Column, Column) => Column): (Expression, Expression) => Expression =
+    (a, b) => ColumnBridge.expression(f(ColumnBridge.column(a), ColumnBridge.column(b)))
+  private def kernelWithInt(f: (Column, Int) => Column): (Expression, Int) => Expression =
+    (e, n) => ColumnBridge.expression(f(ColumnBridge.column(e), n))
 
   /** Extract a literal int argument (for kernel shape parameters like
     * shingle width or signature length — they parameterize generated
@@ -67,33 +83,30 @@ object GraftExtensions {
     ("graft_sorted_intersect",
       info("graft_sorted_intersect",
         "graft_sorted_intersect(a, b) - a ∩ b elements for sorted array<bigint>"),
-      binary("graft_sorted_intersect")(SortedLongArrayIntersect)),
+      binary("graft_sorted_intersect")(kernel(Kernels.sortedIntersect _))),
     ("graft_minhash",
       info("graft_minhash",
         "graft_minhash(shingle_hashes[, h]) - h-permutation MinHash signature"),
       unaryWithInt("graft_minhash", 64)((e, h) => MinHashSignature(e, h))),
     ("graft_simhash",
-      info("graft_simhash", "graft_simhash(token_hashes) - 64-bit SimHash"), {
-        case Seq(a) => SimHash64(a)
-        case es => throw new IllegalArgumentException(
-          s"graft_simhash requires 1 argument, got ${es.length}")
-      }),
+      info("graft_simhash", "graft_simhash(token_hashes) - 64-bit SimHash"),
+      unary("graft_simhash")(kernel(Kernels.simHash64 _))),
     ("graft_char_grams",
       info("graft_char_grams",
         "graft_char_grams(text[, n]) - sorted distinct char n-gram hashes"),
-      unaryWithInt("graft_char_grams", 3)(CharGramHashes)),
+      unaryWithInt("graft_char_grams", 3)(kernelWithInt(Kernels.charGramHashes))),
     ("graft_word_shingles",
       info("graft_word_shingles",
         "graft_word_shingles(normalized_text[, w]) - sorted distinct word shingle hashes"),
-      unaryWithInt("graft_word_shingles", 3)(WordShingleHashes)),
+      unaryWithInt("graft_word_shingles", 3)(kernelWithInt(Kernels.wordShingleHashes))),
     ("graft_shingle_min_md5",
       info("graft_shingle_min_md5",
         "graft_shingle_min_md5(normalized_text[, w]) - min md5-prefix shingle fingerprint"),
-      unaryWithInt("graft_shingle_min_md5", 3)(ShingleMinMd5)),
+      unaryWithInt("graft_shingle_min_md5", 3)(kernelWithInt(Kernels.shingleMinMd5))),
     ("graft_lang_id",
       info("graft_lang_id",
         "graft_lang_id(raw_text, normalized_text) - heuristic language code"),
-      binary("graft_lang_id")(LangIdHeuristic)),
+      binary("graft_lang_id")(kernel(Kernels.langId _))),
     // aggregates: the analyzer wraps a bare AggregateFunction into its
     // AggregateExpression, so these work in GROUP BY queries directly
     ("graft_theta_sketch",
@@ -102,49 +115,37 @@ object GraftExtensions {
       unaryWithInt("graft_theta_sketch", 1024)((e, k) => ThetaSketchAgg(e, k))),
     ("graft_theta_estimate",
       info("graft_theta_estimate",
-        "graft_theta_estimate(sketch) - distinct estimate of a theta sketch"), {
-        case Seq(a) => ThetaEstimate(a)
-        case es => throw new IllegalArgumentException(
-          s"graft_theta_estimate requires 1 argument, got ${es.length}")
-      }),
+        "graft_theta_estimate(sketch) - distinct estimate of a theta sketch"),
+      unary("graft_theta_estimate")(kernel(Kernels.thetaEstimate _))),
     ("graft_theta_union",
       info("graft_theta_union", "graft_theta_union(a, b) - sketch union blob"),
-      binary("graft_theta_union")(ThetaUnion)),
+      binary("graft_theta_union")(kernel(Kernels.thetaUnion _))),
     ("graft_theta_intersect",
       info("graft_theta_intersect",
         "graft_theta_intersect(a, b) - intersection-cardinality estimate"),
-      binary("graft_theta_intersect")(ThetaIntersect)),
+      binary("graft_theta_intersect")(kernel(Kernels.thetaIntersect _))),
     ("graft_hll_sketch",
       info("graft_hll_sketch",
         "graft_hll_sketch(col) - md5-register HLL blob (agg); hash the " +
-          "column's string rendering"), {
-        // cast-to-string first, like operators.Sketches.hllSketch —
-        // HllSketchAgg renders the CATALYST value, which for e.g.
-        // timestamps is a raw long without the cast
-        case Seq(a) => HllSketchAgg(
-          org.apache.spark.sql.catalyst.expressions.Cast(a,
-            org.apache.spark.sql.types.StringType))
-        case es => throw new IllegalArgumentException(
-          s"graft_hll_sketch requires 1 argument, got ${es.length}")
-      }),
+          "column's string rendering"),
+      // cast-to-string first, like operators.Sketches.hllSketch —
+      // HllSketchAgg renders the CATALYST value, which for e.g.
+      // timestamps is a raw long without the cast
+      unary("graft_hll_sketch")(a => HllSketchAgg(
+        org.apache.spark.sql.catalyst.expressions.Cast(a,
+          org.apache.spark.sql.types.StringType)))),
     ("graft_hll_estimate",
       info("graft_hll_estimate",
-        "graft_hll_estimate(sketch) - distinct estimate of an HLL blob"), {
-        case Seq(a) => HllEstimate(a)
-        case es => throw new IllegalArgumentException(
-          s"graft_hll_estimate requires 1 argument, got ${es.length}")
-      }),
+        "graft_hll_estimate(sketch) - distinct estimate of an HLL blob"),
+      unary("graft_hll_estimate")(kernel(Kernels.hllEstimate _))),
     ("graft_hll_union",
       info("graft_hll_union",
         "graft_hll_union(a, b) - register-wise MAX union of two HLL blobs"),
-      binary("graft_hll_union")(HllUnion)),
+      binary("graft_hll_union")(kernel(Kernels.hllUnion _))),
     ("graft_vec_mean",
       info("graft_vec_mean",
-        "graft_vec_mean(array<double>) - elementwise mean (agg)"), {
-        case Seq(a) => VectorMeanAgg(a)
-        case es => throw new IllegalArgumentException(
-          s"graft_vec_mean requires 1 argument, got ${es.length}")
-      }),
+        "graft_vec_mean(array<double>) - elementwise mean (agg)"),
+      unary("graft_vec_mean")(VectorMeanAgg(_))),
     ("graft_top_k",
       info("graft_top_k",
         "graft_top_k(score, id, k) - bounded-heap top-k (agg): " +

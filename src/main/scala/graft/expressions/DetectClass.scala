@@ -1,8 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Content-class bitmask of a string value, fused into ONE compiled
@@ -25,21 +22,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * each applied to the space-trimmed value (SQL `trim` = 0x20 only).
   * Non-ASCII bytes fail every lane, exactly as the ASCII-only regexes
   * and token list do. */
-case class DetectClass(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_detect_class"
-
-  override def nullSafeEval(v: Any): Any =
-    DetectKernel.classify(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.DetectKernel.classify($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): DetectClass =
-    copy(child = newChild)
-}
-
 object DetectKernel {
   final val INT = 1
   final val NUM = 2

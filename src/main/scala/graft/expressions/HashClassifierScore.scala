@@ -1,9 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The x46 hashed-classifier score fused into ONE compiled pass over
@@ -25,32 +22,6 @@ import org.apache.spark.unsafe.types.UTF8String
   *    pmod == %.
   *  - a null token makes the HOF fold null — mirrored by a null
   *    result. */
-case class HashClassifierScore(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_hash_classifier_score"
-
-  override def nullSafeEval(v: Any): Any =
-    HashClassifierScore.score(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |java.lang.Long ${ev.value}_r =
-         |  graft.expressions.HashClassifierScore.score($c);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r.longValue();
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): HashClassifierScore =
-    copy(child = newChild)
-}
-
 object HashClassifierScore {
   import graft.operators.HashClassifier._
 

@@ -65,7 +65,7 @@ object HllSketch {
     while (j < a.length) { if (b(j) > a(j)) a(j) = b(j); j += 1 }
   }
 
-  /** Non-mutating merge for the scalar union expression (and codegen). */
+  /** Non-mutating merge: the scalar union ([[Kernels.hllUnion]]). */
   def unionBlobs(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
     val out = a.clone()
     merge(out, b)
@@ -124,36 +124,4 @@ case class HllSketchAgg(child: Expression,
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildInternal(newChild: Expression): HllSketchAgg =
     copy(child = newChild)
-}
-
-/** Scalar: distinct-count estimate of an HLL register blob. */
-case class HllEstimate(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_hll_estimate"
-  override def nullSafeEval(v: Any): Any =
-    HllSketch.estimate(v.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.HllSketch.estimate($c)")
-  override protected def withNewChildInternal(newChild: Expression): HllEstimate =
-    copy(child = newChild)
-}
-
-/** Register-wise MAX of two HLL blobs — the HLL union, itself a sketch. */
-case class HllUnion(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_hll_union"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    HllSketch.unionBlobs(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.expressions.HllSketch.unionBlobs($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): HllUnion =
-    copy(left = newLeft, right = newRight)
 }

@@ -1,0 +1,155 @@
+package graft.expressions
+
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types._
+
+/** The Column constructors of graft's static kernels: one per kernel,
+  * naming its method, its result type and its literal shape arguments
+  * once.
+  *
+  * Each builds Spark's `StaticInvoke`, which runs the SAME kernel
+  * method on both evaluation paths — by reflection when a plan is
+  * interpreted (exceptions unwrapped to the kernel's own), as one
+  * static call `graft.expressions.<Kernel>.<method>(...)` inside
+  * whole-stage codegen. A null column argument gives null without a
+  * call. A custom Catalyst `Expression` is only for what this cannot
+  * express: reference objects, out-parameters and inlined loops. */
+object Kernels {
+
+  /** `kernel.method(args)` per row. `nullResult` marks a kernel whose
+    * (boxed) result may itself be null; otherwise the column is null
+    * exactly where an argument is. */
+  private def call(kernel: AnyRef, method: String, dataType: DataType,
+      nullResult: Boolean = false)(args: Column*): Column =
+    ColumnBridge.column(StaticInvoke(kernel.getClass, dataType, method,
+      args.map(ColumnBridge.expression), returnNullable = nullResult))
+
+  /** A literal shape argument. A Catalyst literal, not `lit`: the SQL
+    * builders in graft.GraftExtensions hand the built expression
+    * straight to the analyzer, which resolves no DataFrame-side nodes. */
+  private def shape(v: Any): Column = ColumnBridge.column(Literal(v))
+
+  private val longs = ArrayType(LongType, containsNull = false)
+
+  // ---- typecast: detection, parses, integer rendering and division ----
+
+  /** Content-class bitmask of a string ([[DetectKernel.classify]]). */
+  def detectClass(s: Column): Column = call(DetectKernel, "classify", IntegerType)(s)
+
+  /** Timedelta string → int64 microseconds, null when unparseable
+    * ([[TimedeltaKernel.compute]]). */
+  def timedeltaParse(s: Column, asHours: Boolean): Column =
+    call(TimedeltaKernel, "compute", LongType, nullResult = true)(s, shape(asHours))
+
+  /** Complex literal → struct<re, im>, null when unparseable
+    * ([[ComplexKernel.compute]]). */
+  def complexParse(s: Column): Column =
+    call(ComplexKernel, "compute", ComplexKernel.dataType, nullResult = true)(s)
+
+  /** int64 → string in `base`, null for a base outside [2, 36]
+    * ([[IntegerKernel.toBase]]). */
+  def intToBase(v: Column, base: Int): Column =
+    call(IntegerKernel, "toBase", StringType, nullResult = true)(v, shape(base))
+
+  /** Exact int64 `a / b` under a rounding rule ([[RoundDiv.compute]]);
+    * both operands must be LongType. Throws ArithmeticException on a
+    * zero divisor and on Long.MinValue / -1. */
+  def roundDiv(a: Column, b: Column, rule: String): Column = {
+    val ruleId = RoundDiv.rules.indexOf(rule)
+    require(ruleId >= 0, s"unknown rounding rule: $rule")
+    call(RoundDiv, "compute", LongType)(a, b, shape(ruleId))
+  }
+
+  /** struct<subtype, v> of a mixed-type cell ([[ClassifyNumeric.compute]]). */
+  def classifyNumeric(s: Column): Column =
+    call(ClassifyNumeric, "compute", ClassifyNumeric.dataType)(s)
+
+  // ---- text ------------------------------------------------------------
+
+  /** Lowercased, whitespace-collapsed, trimmed text ([[NormalizeText.compute]]). */
+  def normalizeText(s: Column): Column = call(NormalizeText, "compute", StringType)(s)
+
+  /** NFC → accent strip → lowercase → whitespace collapse
+    * ([[TextNormKernel.normalizeU]]). */
+  def unicodeNormalize(s: Column): Column =
+    call(TextNormKernel, "normalizeU", StringType)(s)
+
+  /** Heuristic language code of raw + normalized text ([[TextHashKernels.langId]]). */
+  def langId(raw: Column, norm: Column): Column =
+    call(TextHashKernels, "langId", StringType)(raw, norm)
+
+  /** Sorted distinct char n-gram hashes ([[TextHashKernels.charGrams]]). */
+  def charGramHashes(s: Column, n: Int): Column =
+    call(TextHashKernels, "charGrams", longs)(s, shape(n))
+
+  /** Sorted distinct word w-shingle hashes of normalized text
+    * ([[TextHashKernels.wordShingles]]). */
+  def wordShingleHashes(norm: Column, w: Int): Column =
+    call(TextHashKernels, "wordShingles", longs)(norm, shape(w))
+
+  /** Minimum md5-prefix w-shingle fingerprint of normalized text
+    * ([[ShingleMinMd5.compute]]). */
+  def shingleMinMd5(norm: Column, w: Int): Column =
+    call(ShingleMinMd5, "compute", LongType)(norm, shape(w))
+
+  /** Per-token md5-prefix hashes, in token order ([[ShingleMinMd5.tokenHashes]]). */
+  def tokenMd5Hashes(norm: Column): Column =
+    call(ShingleMinMd5, "tokenHashes", longs)(norm)
+
+  /** DSIR md5 buckets of every unigram and bigram ([[ShingleMinMd5.dsirGramBuckets]]). */
+  def dsirGramBuckets(s: Column, buckets: Int): Column =
+    call(ShingleMinMd5, "dsirGramBuckets", ArrayType(IntegerType, containsNull = false))(
+      s, shape(buckets))
+
+  /** Bottom-k md5-prefix char n-gram sketch ([[ShingleMinMd5.charGramKmv]]). */
+  def charGramKmv(s: Column, n: Int, k: Int): Column =
+    call(ShingleMinMd5, "charGramKmv", longs)(s, shape(n), shape(k))
+
+  /** Gopher repetition counters of normalized text ([[RepetitionKernel.compute]]). */
+  def repetitionStats(norm: Column): Column =
+    call(RepetitionKernel, "compute", RepetitionKernel.dataType)(norm)
+
+  /** Content-defined chunk md5 digests ([[CdcChunkDigests.compute]]). */
+  def cdcChunkDigests(s: Column): Column =
+    call(CdcChunkDigests, "compute", ArrayType(StringType, containsNull = false))(s)
+
+  /** Σ round₉(p·ln p) of the order-1/2 code-point distribution as 10⁻⁹
+    * integer nanos ([[TextEntropyNanos.compute]]). */
+  def textEntropyNanos(s: Column, order: Int): Column =
+    call(TextEntropyNanos, "compute", LongType)(s, shape(order))
+
+  /** Hashed-classifier score of a token array, null on a null token
+    * ([[HashClassifierScore.score]]). */
+  def hashClassifierScore(toks: Column): Column =
+    call(HashClassifierScore, "score", LongType, nullResult = true)(toks)
+
+  // ---- hash arrays and sketches ----------------------------------------
+
+  /** 64-bit SimHash of a token-hash array ([[SimHash64.compute]]). */
+  def simHash64(hashes: Column): Column = call(SimHash64, "compute", LongType)(hashes)
+
+  /** a ∩ b of two sorted distinct array<bigint> ([[SortedLongArrayIntersect.intersect]]). */
+  def sortedIntersect(a: Column, b: Column): Column =
+    call(SortedLongArrayIntersect, "intersect", longs)(a, b)
+
+  /** Distinct-count estimate of an HLL register blob ([[HllSketch.estimate]]). */
+  def hllEstimate(sketch: Column): Column = call(HllSketch, "estimate", DoubleType)(sketch)
+
+  /** Register-wise MAX union of two HLL blobs ([[HllSketch.unionBlobs]]). */
+  def hllUnion(a: Column, b: Column): Column = call(HllSketch, "unionBlobs", BinaryType)(a, b)
+
+  /** Distinct-count estimate of a theta sketch blob ([[KmvSketch.estimate]]). */
+  def thetaEstimate(sketch: Column): Column = call(KmvSketch, "estimate", DoubleType)(sketch)
+
+  /** Union of two theta sketch blobs of one k ([[KmvSketch.unionSketch]]). */
+  def thetaUnion(a: Column, b: Column): Column =
+    call(KmvSketch, "unionSketch", BinaryType)(a, b)
+
+  /** Intersection-cardinality estimate of two theta sketch blobs
+    * ([[KmvSketch.intersectEstimate]]). */
+  def thetaIntersect(a: Column, b: Column): Column =
+    call(KmvSketch, "intersectEstimate", DoubleType)(a, b)
+}

@@ -20,33 +20,9 @@ import org.apache.spark.unsafe.types.UTF8String.LongWrapper
   * code become one unit-word rewrite scan plus THREE
   * statically-precompiled patterns matched at most once each per row.
   * Unparseable input → null; callers apply the error mode. */
-case class TimedeltaParse(child: Expression, asHours: Boolean)
-    extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_timedelta_parse"
-
-  override def nullSafeEval(v: Any): Any =
-    TimedeltaKernel.compute(v.asInstanceOf[UTF8String], asHours)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val out = ctx.freshName("td")
-      s"""java.lang.Long $out = graft.expressions.TimedeltaKernel.compute($c, $asHours);
-         |if ($out == null) { ${ev.isNull} = true; } else { ${ev.value} = $out.longValue(); }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): TimedeltaParse =
-    copy(child = newChild)
-}
-
 object TimedeltaKernel {
-  // the SAME pattern strings the oracle SQL is generated from
-  // (graft.functions.TimeFns.{clockRe,secRe,abbrevRe,tdReplacements})
-  // compiled ONCE per JVM. Declared here as literals to avoid an
-  // initialization cycle; TimeFnsSpec pins them equal to TimeFns's.
+  // the pattern strings the oracle SQL is generated from (read through
+  // graft.functions.TimeFns), compiled ONCE per JVM
   private val num = "(\\d+(?:\\.\\d+)?)"
   val clockReStr: String =
     s"^([+-])?(?:${num}w)?(?:${num}d)?(\\d+):(\\d{1,2})(?::(\\d{1,2}(?:\\.\\d+)?))?$$"
@@ -77,8 +53,9 @@ object TimedeltaKernel {
   private val secP = Pattern.compile(secReStr)
   private val abbrevP = Pattern.compile(abbrevReStr)
 
-  private val wUs = 6.048e11; private val dUs = 8.64e10
-  private val hUs = 3.6e9; private val mUs = 6e7; private val sUs = 1e6
+  /** micros per component of the clock/abbrev groups. */
+  val wUs = 6.048e11; val dUs = 8.64e10; val hUs = 3.6e9
+  val mUs = 6e7; val sUs = 1e6
 
   @inline private def part(g: String): Double =
     if (g == null || g.isEmpty) 0.0 else java.lang.Double.parseDouble(g)
@@ -156,33 +133,15 @@ object TimedeltaKernel {
   * Column cascade it replaces (Casts.toComplex string path), compiled
   * once per JVM instead of ~8 inlined regex runs per row. Unparseable
   * → null struct; callers apply the error mode. */
-case class ComplexParse(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
+object ComplexKernel {
+  /** struct<re, im>: the result type of [[compute]]. */
+  val dataType: StructType = StructType(Seq(
     StructField("re", DoubleType, nullable = true),
     StructField("im", DoubleType, nullable = true)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_complex_parse"
 
-  override def nullSafeEval(v: Any): Any =
-    ComplexKernel.compute(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val out = ctx.freshName("cz")
-      s"""InternalRow $out = graft.expressions.ComplexKernel.compute($c);
-         |if ($out == null) { ${ev.isNull} = true; } else { ${ev.value} = $out; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): ComplexParse =
-    copy(child = newChild)
-}
-
-object ComplexKernel {
-  // identical strings to Casts.{complexBothRe,complexImRe,complexReRe}
-  // (pinned equal by TimeFnsSpec); no lookarounds → the oracle's RE2
-  // runs the same patterns
+  // the pattern strings the oracle SQL is generated from (read through
+  // graft.functions.Casts); no lookarounds → the oracle's RE2 runs the
+  // same patterns
   private val fnum = "[+-]?(?:\\d+\\.?\\d*|\\.\\d+)(?:[eE][+-]?\\d+)?"
   private val inum = "[+-](?:\\d+\\.?\\d*|\\.\\d+)(?:[eE][+-]?\\d+)?"
   val bothReStr: String = s"^\\(?($fnum)($inum)[ij]\\)?$$"
@@ -327,30 +286,13 @@ object IntegerKernel {
     else if (out.value == Long.MinValue) false
     else { out.value = -out.value; true }
   }
+
+  /** `v` in `base` (reference util/string.pyx:45 `int_to_base`):
+    * lowercase digits and an explicit '-' sign, so Long.MinValue
+    * renders as "-8000000000000000" in base 16. Null for a base
+    * outside [2, 36]. */
+  def toBase(v: Long, base: Int): UTF8String =
+    if (base < Character.MIN_RADIX || base > Character.MAX_RADIX) null
+    else UTF8String.fromString(java.lang.Long.toString(v, base))
 }
 
-/** int64 → string in `base` (reference util/string.pyx:45
-  * `int_to_base`): lowercase digits and an explicit '-' sign, so
-  * Long.MinValue renders as "-8000000000000000" in base 16. Null for a
-  * base outside [2, 36]. */
-case class IntToBase(child: Expression, base: Int) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_int_to_base"
-
-  private def valid: Boolean = base >= Character.MIN_RADIX && base <= Character.MAX_RADIX
-
-  override def nullSafeEval(v: Any): Any =
-    if (valid) UTF8String.fromString(java.lang.Long.toString(v.asInstanceOf[Long], base))
-    else null
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      if (valid)
-        s"${ev.value} = UTF8String.fromString(java.lang.Long.toString($c, $base));"
-      else s"${ev.isNull} = true;")
-
-  override protected def withNewChildInternal(newChild: Expression): IntToBase =
-    copy(child = newChild)
-}

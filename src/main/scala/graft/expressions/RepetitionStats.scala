@@ -1,8 +1,7 @@
 package graft.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -24,27 +23,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * scale the explode multiplied the shuffled row count by ~2× the token
   * count. One open-addressed pass per row is O(n_tok) time and memory
   * bounded by the document itself. */
-case class RepetitionStats(child: Expression) extends UnaryExpression {
+object RepetitionKernel {
 
-  override def dataType: DataType = StructType(Seq(
+  /** The result type of [[compute]]. */
+  val dataType: StructType = StructType(Seq(
     StructField("n_tok", IntegerType, nullable = false),
     StructField("top_tok", IntegerType, nullable = false),
     StructField("top_bi", IntegerType, nullable = false),
     StructField("dup5", DoubleType, nullable = false)))
-
-  override def prettyName: String = "graft_repetition_stats"
-
-  override def nullSafeEval(v: Any): Any =
-    RepetitionKernel.compute(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.RepetitionKernel.compute($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): RepetitionStats =
-    copy(child = newChild)
-}
-
-object RepetitionKernel {
 
   /** (n_tok, top_tok, top_bi, dup5) of a single-spaced document. */
   def compute(norm: UTF8String): InternalRow = {

@@ -1,35 +1,11 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
-
 /** Exact int64 division a/b under a rounding rule (reference
   * util/round/integer.pyx `round_div`): `Math.floorDiv`/`floorMod`,
   * then one step up when the rule says so, decided by comparing the
   * remainder with its distance to the divisor — no wider type, no
   * overflow in between. Throws ArithmeticException on a zero divisor
-  * and when the quotient does not fit (Long.MinValue / -1). Both
-  * operands must be LongType. */
-case class RoundDiv(left: Expression, right: Expression, rule: String)
-    extends BinaryExpression {
-
-  private val ruleId = RoundDiv.rules.indexOf(rule)
-  require(ruleId >= 0, s"unknown rounding rule: $rule")
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_round_div"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    RoundDiv.compute(a.asInstanceOf[Long], b.asInstanceOf[Long], ruleId)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.expressions.RoundDiv.compute($a, $b, $ruleId)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): RoundDiv = copy(left = newLeft, right = newRight)
-}
-
+  * and when the quotient does not fit (Long.MinValue / -1). */
 object RoundDiv {
   /** The reference's `valid_rules` (util/round/__init__.py), in id order. */
   val rules: Seq[String] = Seq(

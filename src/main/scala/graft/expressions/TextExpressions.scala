@@ -3,81 +3,9 @@ package graft.expressions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-
-/** Minimum w-shingle MD5 fingerprint of a normalized (single-spaced)
-  * text column, fused into ONE compiled pass: tokenize → w-token
-  * windows → md5 per window → min of the 15-hex-char (60-bit) prefix.
-  *
-  * Replaces a chain of interpreted `zip_with`/`transform` HOF lambdas
-  * (the round-1 x4 hot spot). MD5 (not xxhash64) so the DuckDB oracle
-  * can reproduce the value: `CAST('0x' || substr(md5(s),1,15) AS
-  * BIGINT)` on the same shingle strings.
-  *
-  * Winnowing-style robust fingerprint semantics per reference
-  * bertrand/util/string.pyx (content hashing) — stable under small
-  * edits: the minimum shingle usually survives. */
-case class ShingleMinMd5(child: Expression, w: Int) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_shingle_min_md5"
-
-  override def nullSafeEval(v: Any): Any =
-    ShingleMinMd5.compute(v.asInstanceOf[UTF8String], w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.ShingleMinMd5.compute($c, $w)")
-
-  override protected def withNewChildInternal(newChild: Expression): ShingleMinMd5 =
-    copy(child = newChild)
-}
-
-/** Sorted distinct 64-bit hashes of the character n-grams of a string,
-  * in one compiled pass — replaces an interpreted
-  * `array_sort(array_distinct(transform(sequence(...), xxhash64(substr))))`
-  * chain. Code-point aware (matches SQL substr semantics); strings
-  * shorter than `n` produce one partial gram (the whole string). The
-  * hash is FNV-1a 64 — any injective-in-practice hash preserves set
-  * cardinalities, which is all Jaccard needs (the oracle compares
-  * jaccard VALUES computed on substring sets). */
-case class CharGramHashes(child: Expression, n: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_char_gram_hashes"
-
-  override def nullSafeEval(v: Any): Any =
-    TextHashKernels.charGrams(v.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.expressions.TextHashKernels.charGrams($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): CharGramHashes =
-    copy(child = newChild)
-}
-
-/** Sorted distinct 64-bit hashes of the word w-shingles of a normalized
-  * (single-spaced) string, one compiled pass — replaces the interpreted
-  * zip_with/concat_ws/transform shingle chain. Shingle text spans are
-  * hashed in place (tokens joined by single spaces already). */
-case class WordShingleHashes(child: Expression, w: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_word_shingle_hashes"
-
-  override def nullSafeEval(v: Any): Any =
-    TextHashKernels.wordShingles(v.asInstanceOf[UTF8String], w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.expressions.TextHashKernels.wordShingles($c, $w)")
-
-  override protected def withNewChildInternal(newChild: Expression): WordShingleHashes =
-    copy(child = newChild)
-}
 
 /** Text normalization in one compiled pass: lowercase (UTF8String's
   * own toLowerCase — identical to Spark's `lower()`), runs of
@@ -86,21 +14,6 @@ case class WordShingleHashes(child: Expression, w: Int) extends UnaryExpression 
   * the result is byte-identical to
   * `trim(regexp_replace(lower(text), "\\s+", " "))` — digests computed
   * on it keep matching the oracle's regexp formulation. */
-case class NormalizeText(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_norm_text"
-
-  override def nullSafeEval(v: Any): Any =
-    NormalizeText.compute(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.NormalizeText.compute($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): NormalizeText =
-    copy(child = newChild)
-}
-
 object NormalizeText {
   private def isWs(b: Byte): Boolean =
     b == ' ' || b == '\t' || b == '\n' || b == 0x0b || b == '\f' || b == '\r'
@@ -126,31 +39,6 @@ object NormalizeText {
     // trailing pendingSpace (if any) is dropped = trim
     UTF8String.fromBytes(java.util.Arrays.copyOf(out, o))
   }
-}
-
-/** Heuristic language ID fused into one compiled pass: CJK code-point
-  * ratio over the RAW text plus per-profile stopword-hit ratios over
-  * the NORMALIZED text, with the earliest-max tie-break — exactly the
-  * arithmetic of the Column formulation it replaces (and of the DuckDB
-  * oracle): pred = cjk > 0.3 ? "zh" : best > 0 ? argmax : "und". */
-case class LangIdHeuristic(rawText: Expression, normText: Expression)
-    extends BinaryExpression {
-
-  override def left: Expression = rawText
-  override def right: Expression = normText
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_lang_id"
-
-  override def nullSafeEval(raw: Any, norm: Any): Any =
-    TextHashKernels.langId(raw.asInstanceOf[UTF8String], norm.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.expressions.TextHashKernels.langId($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): LangIdHeuristic =
-    copy(rawText = newLeft, normText = newRight)
 }
 
 object TextHashKernels {
@@ -185,10 +73,11 @@ object TextHashKernels {
   private val zh = UTF8String.fromString("zh")
   private val und = UTF8String.fromString("und")
 
-  /** One-pass language ID: CJK code-point ratio on the raw text, then
-    * stopword-hash hit ratios per profile on the normalized text with
-    * strict-greater (earliest-max) argmax — arithmetic identical to the
-    * Column/oracle formulation. */
+  /** Heuristic language ID fused into one compiled pass: CJK code-point
+    * ratio over the RAW text plus per-profile stopword-hit ratios over
+    * the NORMALIZED text, with the earliest-max tie-break — exactly the
+    * arithmetic of the Column formulation it replaces (and of the DuckDB
+    * oracle): pred = cjk > 0.3 ? "zh" : best > 0 ? argmax : "und". */
   def langId(raw: UTF8String, norm: UTF8String): UTF8String = {
     val rs = raw.toString
     var i = 0
@@ -265,6 +154,14 @@ object TextHashKernels {
     new GenericArrayData(java.util.Arrays.copyOf(h, if (len == 0) 0 else out))
   }
 
+  /** Sorted distinct 64-bit hashes of the character n-grams of a string,
+    * in one compiled pass — replaces an interpreted
+    * `array_sort(array_distinct(transform(sequence(...), xxhash64(substr))))`
+    * chain. Code-point aware (matches SQL substr semantics); strings
+    * shorter than `n` produce one partial gram (the whole string). The
+    * hash is FNV-1a 64 — any injective-in-practice hash preserves set
+    * cardinalities, which is all Jaccard needs (the oracle compares
+    * jaccard VALUES computed on substring sets). */
   def charGrams(s: UTF8String, n: Int): ArrayData = {
     val cps = codePoints(s.toString)
     val count = math.max(cps.length - n + 1, 1)
@@ -277,7 +174,12 @@ object TextHashKernels {
     sortedDistinct(h, count)
   }
 
-  /** Input must be single-space normalized. Shingle i spans token i
+  /** Sorted distinct 64-bit hashes of the word w-shingles of a normalized
+    * (single-spaced) string, one compiled pass — replaces the interpreted
+    * zip_with/concat_ws/transform shingle chain. Shingle text spans are
+    * hashed in place (tokens joined by single spaces already).
+    *
+    * Input must be single-space normalized. Shingle i spans token i
     * through token i+w-1 including separating spaces — identical to
     * joining the tokens with ' '. Fewer than w tokens → one partial
     * shingle (the whole string). */
@@ -309,76 +211,18 @@ object TextHashKernels {
   }
 }
 
-/** Per-token 60-bit md5-prefix hashes of a normalized (single-spaced)
-  * string, in token order (multiset — NOT sorted/deduped: SimHash needs
-  * every occurrence). md5-prefix so the DuckDB oracle reproduces each
-  * value: `CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT)`. */
-case class TokenMd5Hashes(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_token_md5_hashes"
-
-  override def nullSafeEval(v: Any): Any =
-    ShingleMinMd5.tokenHashes(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.expressions.ShingleMinMd5.tokenHashes($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): TokenMd5Hashes =
-    copy(child = newChild)
-}
-
-/** DSIR hashed-gram buckets in one compiled pass: md5-bucket (first 4
-  * hex chars mod `buckets`) of every unigram AND space-joined bigram of
-  * the ' '-separated input. Bigram bytes are the contiguous original
-  * span (split on ' ' guarantees 1-space separators), so the digest
-  * equals md5(w1 || ' ' || w2) without building gram strings — replaces
-  * the interpreted transform/concat/md5/conv Column chain. */
-case class DsirGramBuckets(child: Expression, buckets: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "graft_dsir_gram_buckets"
-
-  override def nullSafeEval(v: Any): Any =
-    ShingleMinMd5.dsirGramBuckets(v.asInstanceOf[UTF8String], buckets)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.expressions.ShingleMinMd5.dsirGramBuckets($c, $buckets)")
-
-  override protected def withNewChildInternal(newChild: Expression): DsirGramBuckets =
-    copy(child = newChild)
-}
-
-/** Bottom-k (KMV) sketch of the character n-grams of a string: the k
-  * smallest DISTINCT 60-bit md5-prefix gram hashes, sorted ascending,
-  * in one compiled pass. Gram spans are code points (SQL substr
-  * semantics, like [[CharGramHashes]]); strings shorter than n yield
-  * the single whole-string gram. md5-prefix (not xxhash64) so every
-  * sketch value replays in DuckDB as
-  * `CAST('0x' || substr(md5(substr(nt, i, n)), 1, 15) AS BIGINT)`.
-  * The sketch is MERGEABLE (bottom-k of a union = bottom-k of the
-  * merged bottom-ks) — the constant-size per-doc state the KMV
-  * Jaccard estimate (Beyer et al., SIGMOD 2007) compares in O(k). */
-case class CharGramKmv(child: Expression, n: Int, k: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_char_gram_kmv"
-
-  override def nullSafeEval(v: Any): Any =
-    ShingleMinMd5.charGramKmv(v.asInstanceOf[UTF8String], n, k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.expressions.ShingleMinMd5.charGramKmv($c, $n, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): CharGramKmv =
-    copy(child = newChild)
-}
-
+/** Minimum w-shingle MD5 fingerprint of a normalized (single-spaced)
+  * text column, fused into ONE compiled pass: tokenize → w-token
+  * windows → md5 per window → min of the 15-hex-char (60-bit) prefix.
+  *
+  * Replaces a chain of interpreted `zip_with`/`transform` HOF lambdas
+  * (the round-1 x4 hot spot). MD5 (not xxhash64) so the DuckDB oracle
+  * can reproduce the value: `CAST('0x' || substr(md5(s),1,15) AS
+  * BIGINT)` on the same shingle strings.
+  *
+  * Winnowing-style robust fingerprint semantics per reference
+  * bertrand/util/string.pyx (content hashing) — stable under small
+  * edits: the minimum shingle usually survives. */
 object ShingleMinMd5 {
 
   private val mdLocal: ThreadLocal[MessageDigest] =
@@ -386,7 +230,12 @@ object ShingleMinMd5 {
       override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
     }
 
-  /** See [[DsirGramBuckets]]. */
+  /** DSIR hashed-gram buckets in one compiled pass: md5-bucket (first 4
+    * hex chars mod `buckets`) of every unigram AND space-joined bigram of
+    * the ' '-separated input. Bigram bytes are the contiguous original
+    * span (split on ' ' guarantees 1-space separators), so the digest
+    * equals md5(w1 || ' ' || w2) without building gram strings — replaces
+    * the interpreted transform/concat/md5/conv Column chain. */
   def dsirGramBuckets(s: UTF8String, buckets: Int)
       : org.apache.spark.sql.catalyst.util.ArrayData = {
     val b = s.getBytes
@@ -426,10 +275,20 @@ object ShingleMinMd5 {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  /** See [[CharGramKmv]]: bottom-k distinct 60-bit md5 gram hashes,
-    * sorted ascending. Sorted-insert into a k-slot buffer — O(len·k)
-    * worst case with k a small constant; duplicates (repeated grams)
-    * are skipped at insert, so the sketch is over the gram SET. */
+  /** Bottom-k (KMV) sketch of the character n-grams of a string: the k
+    * smallest DISTINCT 60-bit md5-prefix gram hashes, sorted ascending,
+    * in one compiled pass. Gram spans are code points (SQL substr
+    * semantics, like [[TextHashKernels.charGrams]]); strings shorter
+    * than n yield the single whole-string gram. md5-prefix (not xxhash64) so every
+    * sketch value replays in DuckDB as
+    * `CAST('0x' || substr(md5(substr(nt, i, n)), 1, 15) AS BIGINT)`.
+    * The sketch is MERGEABLE (bottom-k of a union = bottom-k of the
+    * merged bottom-ks) — the constant-size per-doc state the KMV
+    * Jaccard estimate (Beyer et al., SIGMOD 2007) compares in O(k).
+    *
+    * Sorted-insert into a k-slot buffer — O(len·k) worst case with k a
+    * small constant; duplicates (repeated grams) are skipped at insert,
+    * so the sketch is over the gram SET. */
   def charGramKmv(s: UTF8String, n: Int, k: Int)
       : org.apache.spark.sql.catalyst.util.ArrayData = {
     val str = s.toString
@@ -478,7 +337,10 @@ object ShingleMinMd5 {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  /** Per-token md5-prefix hashes (see [[TokenMd5Hashes]]). */
+  /** Per-token 60-bit md5-prefix hashes of a normalized (single-spaced)
+    * string, in token order (multiset — NOT sorted/deduped: SimHash needs
+    * every occurrence). md5-prefix so the DuckDB oracle reproduces each
+    * value: `CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT)`. */
   def tokenHashes(nt: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
     val b = nt.getBytes
     val n = b.length
@@ -562,24 +424,12 @@ object ShingleMinMd5 {
   * The scanner accepts EXACTLY the shared oracle regex grammar:
   * int `^[+-]?\d+$`; float `^[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?$`;
   * bool = case-insensitive true/false. */
-case class ClassifyNumeric(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
+object ClassifyNumeric {
+  /** struct<subtype, v>: the result type of [[compute]]. */
+  val dataType: StructType = StructType(Seq(
     StructField("subtype", StringType, nullable = false),
     StructField("v", DoubleType, nullable = true)))
-  override def prettyName: String = "graft_classify_numeric"
 
-  override def nullSafeEval(v: Any): Any =
-    ClassifyNumeric.compute(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.ClassifyNumeric.compute($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): ClassifyNumeric =
-    copy(child = newChild)
-}
-
-object ClassifyNumeric {
   private val INT = UTF8String.fromString("int")
   private val FLOAT = UTF8String.fromString("float")
   private val BOOL = UTF8String.fromString("bool")
@@ -652,19 +502,6 @@ object TextNormKernel {
     UTF8String.fromString(normalize(s.toString))
 }
 
-case class UnicodeNormalizeText(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_unicode_normalize"
-  override def nullSafeEval(v: Any): Any =
-    TextNormKernel.normalizeU(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.expressions.TextNormKernel.normalizeU($c)")
-  override protected def withNewChildInternal(
-      newChild: Expression): UnicodeNormalizeText =
-    copy(child = newChild)
-}
-
 /** Content-defined chunk digests in ONE fused pass — the d17 100 TB
   * form: rolling 8-term polynomial over code points (constants below
   * are THE canonical CDC constants; the DuckDB oracle interpolates
@@ -673,19 +510,6 @@ case class UnicodeNormalizeText(child: Expression) extends UnaryExpression {
   * per-position explode the oracle replays — this kernel exists
   * because that spelling materializes corpus-character-sized rows,
   * while this is one O(n) scan per document with chunk-count output. */
-case class CdcChunkDigests(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_cdc_chunk_digests"
-  override def nullSafeEval(v: Any): Any =
-    CdcChunkDigests.compute(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.expressions.CdcChunkDigests.compute($c)")
-  override protected def withNewChildInternal(
-      newChild: Expression): CdcChunkDigests =
-    copy(child = newChild)
-}
-
 object CdcChunkDigests {
   val M: Long = 1000000007L
   val B: Long = 257L
@@ -779,23 +603,6 @@ object CdcChunkDigests {
   * IEEE ops on exactly-representable operands, replayed verbatim in
   * SQL. Empty/too-short input → 0 (matches the oracle's empty gram
   * set; a single repeated gram has p = 1, ln 1 = 0). */
-case class TextEntropyNanos(child: Expression, order: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_text_entropy_nanos"
-
-  override def nullSafeEval(v: Any): Any =
-    TextEntropyNanos.compute(v.asInstanceOf[UTF8String], order)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.expressions.TextEntropyNanos.compute($c, $order)")
-
-  override protected def withNewChildInternal(newChild: Expression): TextEntropyNanos =
-    copy(child = newChild)
-}
-
 object TextEntropyNanos {
   def compute(s: UTF8String, order: Int): Long = {
     val cps = s.toString.codePoints().toArray

@@ -5,7 +5,6 @@ import java.nio.ByteBuffer
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
 
@@ -140,42 +139,4 @@ case class ThetaSketchAgg(child: Expression, k: Int = 1024,
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildInternal(newChild: Expression): ThetaSketchAgg =
     copy(child = newChild)
-}
-
-/** Scalar: distinct-count estimate of a sketch blob. */
-case class ThetaEstimate(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_theta_estimate"
-  override def nullSafeEval(v: Any): Any =
-    KmvSketch.estimate(v.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.KmvSketch.estimate($c)")
-  override protected def withNewChildInternal(newChild: Expression): ThetaEstimate =
-    copy(child = newChild)
-}
-
-/** Scalar: sketch-union of two blobs (same k). */
-case class ThetaUnion(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_theta_union"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    KmvSketch.unionSketch(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.expressions.KmvSketch.unionSketch($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ThetaUnion =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Scalar: intersection-cardinality estimate of two sketch blobs. */
-case class ThetaIntersect(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_theta_intersect"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    KmvSketch.intersectEstimate(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.expressions.KmvSketch.intersectEstimate($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ThetaIntersect =
-    copy(left = newLeft, right = newRight)
 }

@@ -58,28 +58,7 @@ case class ArrayDotProduct(left: Expression, right: Expression)
   * million-row adjacency joins — triangleCounts' close); the merge
   * allocates exactly one primitive buffer sized to the result. Same
   * contract: pre-sorted, distinct elements. */
-case class SortedLongArrayIntersect(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_sorted_intersect"
-
-  override def nullSafeEval(l: Any, r: Any): Any =
-    SortedLongArrayIntersect.intersect(
-      l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.expressions.SortedLongArrayIntersect.intersect($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedLongArrayIntersect =
-    copy(left = newLeft, right = newRight)
-}
-
 object SortedLongArrayIntersect {
-  /** Static kernel, called from generated code (stays inside
-    * whole-stage codegen; no per-row closure or hash set). */
   def intersect(a: ArrayData, b: ArrayData): ArrayData = {
     val n = a.numElements(); val m = b.numElements()
     val buf = new Array[Long](math.min(n, m))
@@ -238,24 +217,8 @@ object BandKeys {
   }
 }
 
-/** 64-bit SimHash of a token-hash array: one compiled loop over the
-  * tokens accumulating ±1 per bit. Static-kernel codegen — inlines into
-  * whole-stage codegen. */
-case class SimHash64(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash"
-
-  override def nullSafeEval(v: Any): Any =
-    SimHash64.compute(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.SimHash64.compute($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-}
-
+/** 64-bit SimHash of a token-hash array: one loop over the tokens
+  * accumulating ±1 per bit. */
 object SimHash64 {
   def compute(arr: ArrayData): Long = {
     val counts = new Array[Int](64)

@@ -1,17 +1,18 @@
 package graft.functions
 
-import graft.expressions.{ComplexParse, IntToBase, IntegerParse}
+import graft.expressions.{ComplexKernel, IntegerParse, Kernels}
 import graft.types._
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Conversion arguments, mirroring the reference's extension-func
   * keyword set (bertrand/convert/arguments.py): `errors`, `rounding`,
-  * `tol`, `unit`, `since`, `true`/`false` token sets, `base`, `format`,
-  * `downcast`. */
+  * `tol`, `unit`, `since`, `step_size`, `tz`, `day_first`,
+  * `year_first`, `as_hours`, `ignore_case`, `true`/`false` token sets,
+  * `base`, `format`. The reference's `downcast` keyword is
+  * [[Downcast.apply]] / [[Downcast.downcastAll]] here. */
 final case class CastOptions(
     errors: String = "raise", // raise | coerce | ignore
     rounding: Option[String] = None, // one of Rounding.validRules
@@ -27,8 +28,7 @@ final case class CastOptions(
     trueTokens: Seq[String] = Seq("true", "t", "yes", "y", "on", "1"),
     falseTokens: Seq[String] = Seq("false", "f", "no", "n", "off", "0"),
     base: Int = 10, // string→int radix
-    format: Option[String] = None, // datetime parse format
-    downcast: Boolean = false)
+    format: Option[String] = None) // datetime parse format
 
 /** The `cast` family (reference bertrand/convert/base.py:152 `cast`,
   * :204-293 `to_*`), as Column→Column kernels.
@@ -36,7 +36,8 @@ final case class CastOptions(
   * Semantics ported, implementation Spark-first: built-in codegen'd
   * expressions (`when`/`rlike`/`cast`/arithmetic) where one evaluation
   * per row suffices, and graft's native kernels (graft.expressions:
-  * IntegerParse, TimedeltaParse, ComplexParse, IntToBase) where a
+  * the IntegerParse expression, and TimedeltaKernel, ComplexKernel and
+  * IntegerKernel.toBase through [[graft.expressions.Kernels]]) where a
   * composition would re-parse the string — so conversions inline into
   * whole-stage codegen, never leave the JVM, and evaluate their input
   * once per row. Error modes:
@@ -52,9 +53,6 @@ object Casts {
 
   private def fail(c: Column, target: String): Column =
     raise_error(concat(lit(s"graft.cast: cannot convert to $target: "), c.cast(StringType)))
-
-  private def native(e: Expression): Column = ColumnBridge.column(e)
-  private def expr(c: Column): Expression = ColumnBridge.expression(c)
 
   /** The one error-mode wrapper. `converted` must be null exactly where
     * `orig` is null or unconvertible; it appears once in the result, so
@@ -92,7 +90,8 @@ object Casts {
     // range check against the logical width (uintN ranges enforced even
     // though Spark carries them in wider signed types — SURVEY §3),
     // folded into the same pass as the parse
-    def inRange(v: Column, base: Int = 10): Column = native(IntegerParse(expr(v), base,
+    def inRange(v: Column, base: Int = 10): Column = ColumnBridge.column(IntegerParse(
+      ColumnBridge.expression(v), base,
       target.minValue.toLong, target.maxValue.min(BigInt(Long.MaxValue)).toLong))
     val converted: Column = dt match {
       case ByteType | ShortType | IntegerType | LongType | BooleanType =>
@@ -227,20 +226,17 @@ object Casts {
     * parens, i or j, optional imaginary coefficient as in "-j");
     * numerics become (x, 0). Carried as struct<re,im> per SURVEY §3.
     * Patterns avoid lookarounds so the oracle's RE2 runs them too. */
-  // complex-literal patterns, shared with the oracle SQL generator
-  private val fnum = "[+-]?(?:\\d+\\.?\\d*|\\.\\d+)(?:[eE][+-]?\\d+)?"
-  private val inum = "[+-](?:\\d+\\.?\\d*|\\.\\d+)(?:[eE][+-]?\\d+)?"
-  val complexBothRe: String = s"^\\(?($fnum)($inum)[ij]\\)?$$"
-  val complexImRe: String =
-    s"^\\(?([+-]?(?:\\d+\\.?\\d*|\\.\\d+)?(?:[eE][+-]?\\d+)?)[ij]\\)?$$"
-  val complexReRe: String = s"^\\(?($fnum)\\)?$$"
+  // the kernel's complex-literal patterns, read by the oracle SQL generator
+  val complexBothRe: String = ComplexKernel.bothReStr
+  val complexImRe: String = ComplexKernel.imReStr
+  val complexReRe: String = ComplexKernel.reReStr
 
   def toComplex(c: Column, dt: DataType, opts: CastOptions = CastOptions()): Column =
     dt match {
       case StringType =>
-        // one compiled call, per-JVM precompiled patterns (the same
-        // three pattern strings; ParseKernelsSpec pins kernel == cascade)
-        withErrors(c, native(ComplexParse(expr(c))), "complex", opts)
+        // one compiled call, per-JVM precompiled patterns
+        // (ParseKernelsSpec pins kernel == cascade)
+        withErrors(c, Kernels.complexParse(c), "complex", opts)
       case _: NumericType | BooleanType =>
         ComplexOps.complex(c.cast(DoubleType), lit(0.0))
       case _ => c // already struct<re,im>
@@ -271,7 +267,7 @@ object Casts {
       case BooleanType => when(c, "true").otherwise(when(!c, "false"))
       case TimestampType => date_format(c, "yyyy-MM-dd HH:mm:ss")
       case ByteType | ShortType | IntegerType | LongType if opts.base != 10 =>
-        native(IntToBase(expr(c.cast(LongType)), opts.base))
+        Kernels.intToBase(c.cast(LongType), opts.base)
       case _ => c.cast(StringType)
     }
 }

@@ -1,9 +1,8 @@
 package graft.functions
 
-import graft.expressions.RoundDiv
+import graft.expressions.{Kernels, RoundDiv}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Vectorized rounding with customizable rules, re-expressing the
@@ -15,7 +14,7 @@ import org.apache.spark.sql.types._
   * built-ins (floor/ceil/sign/pmod) using only IEEE-deterministic ops,
   * so results are identical on any engine evaluating the same formula
   * (the DuckDB oracle mirrors them); `roundDiv` is the native exact
-  * int64 kernel graft.expressions.RoundDiv. All are whole-stage-codegen
+  * int64 kernel graft.expressions.RoundDiv.compute. All are whole-stage-codegen
   * friendly, no UDFs.
   */
 object Rounding {
@@ -52,8 +51,7 @@ object Rounding {
     * range (no float or decimal detour). Both operands must be
     * integral; b nonzero. Mirrors round_div. */
   def roundDiv(a: Column, b: Column, rule: String): Column =
-    ColumnBridge.column(RoundDiv(ColumnBridge.expression(a.cast(LongType)),
-      ColumnBridge.expression(b.cast(LongType)), rule))
+    Kernels.roundDiv(a.cast(LongType), b.cast(LongType), rule)
 
   /** Round a DECIMAL column to `decimals` places under `rule`, staying
     * in exact decimal arithmetic throughout (reference round_decimal,

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.expressions.{Kernels, TimedeltaKernel}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
@@ -81,34 +82,21 @@ object TimeFns {
 
   // ---- timedelta strings (reference util/time/timedelta.pyx:136) ------
 
-  private val numRe = "(\\d+(?:\\.\\d+)?)"
+  // The kernel's patterns, read by the Column cascade below and by the
+  // oracle SQL generator (no lookarounds → valid under Java regex AND
+  // the oracle's RE2).
   /** clock family: optional weeks/days prefix + H:MM[:SS[.f]] — a
     * 2-component clock is minutes:seconds (the reference's
-    * as_hours=False default). Public: the oracle SQL is generated from
-    * the SAME patterns (no lookarounds → valid under Java regex AND
-    * the oracle's RE2). */
-  val clockRe: String =
-    s"^([+-])?(?:${numRe}w)?(?:${numRe}d)?(\\d+):(\\d{1,2})(?::(\\d{1,2}(?:\\.\\d+)?))?$$"
+    * as_hours=False default). */
+  val clockRe: String = TimedeltaKernel.clockReStr
   /** bare count of seconds. */
-  val secRe: String = s"^([+-])?${numRe}$$"
+  val secRe: String = TimedeltaKernel.secReStr
   /** abbreviated units in canonical descending order (the reference's
     * `abbrev` format): [w][d][h][m][s][ms][us]. */
-  val abbrevRe: String =
-    s"^([+-])?(?:${numRe}w)?(?:${numRe}d)?(?:${numRe}h)?(?:${numRe}m)?" +
-      s"(?:${numRe}s)?(?:${numRe}ms)?(?:${numRe}us)?$$"
+  val abbrevRe: String = TimedeltaKernel.abbrevReStr
   /** longhand→short unit rewrites applied after whitespace collapse
     * (longest names first so "milliseconds" never half-matches). */
-  val tdReplacements: Seq[(String, String)] = Seq(
-    "microseconds?|microsecs?" -> "us",
-    "milliseconds?|millisecs?" -> "ms",
-    "minutes?|mins?" -> "m",
-    "seconds?|secs?" -> "s",
-    "hours?|hrs?" -> "h",
-    "days?" -> "d",
-    "weeks?|wks?" -> "w")
-  /** micros per component of the clock/abbrev groups. */
-  val wUs = 6.048e11; val dUs = 8.64e10; val hUs = 3.6e9
-  val mUs = 6e7; val sUs = 1e6
+  val tdReplacements: Seq[(String, String)] = TimedeltaKernel.replacements
 
   /** Parse timedelta strings to int64 microseconds: "1:30:00", "2:15",
     * "1h30m", "2 days 4h", "1.5h", "-0:00:30.5", "90". Longhand unit
@@ -117,19 +105,18 @@ object TimeFns {
     * timedelta.pyx `timedelta_string_to_ns` at microsecond width.
     *
     * One compiled call with per-JVM precompiled patterns
-    * ([[graft.expressions.TimedeltaKernel]]) — the Column cascade it
-    * replaced inlined ~20 regex machines into generated code;
-    * TimeFnsSpec pins the two formulations equal on the full grid. */
-  def timedeltaMicros(c: Column, asHours: Boolean = false): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(graft.expressions.TimedeltaParse(
-      ColumnBridge.expression(c), asHours))
-  }
+    * ([[graft.expressions.TimedeltaKernel.compute]]) — the Column
+    * cascade it replaced inlined ~20 regex machines into generated
+    * code; ParseKernelsSpec pins the two formulations equal on the full
+    * grid. */
+  def timedeltaMicros(c: Column, asHours: Boolean = false): Column =
+    Kernels.timedeltaParse(c, asHours)
 
   /** The original Column-cascade formulation, kept as the differential
     * oracle for the kernel (and the template the DuckDB oracle SQL is
     * generated from). Not in any hot path. */
   def timedeltaMicrosColumns(c: Column, asHours: Boolean = false): Column = {
+    import TimedeltaKernel.{wUs, dUs, hUs, mUs, sUs}
     val collapsed = regexp_replace(lower(trim(c)), "\\s+", "")
     val s = tdReplacements.foldLeft(collapsed) { case (acc, (pat, rep)) =>
       regexp_replace(acc, pat, rep)
@@ -147,17 +134,17 @@ object TimeFns {
       // hours:minutes under as_hours (reference arguments.py:973)
       val (u1, u2) = if (asHours) (hUs, mUs) else (mUs, sUs)
       val hm = when(hasSec,
-        us(part(clockRe, 4), 3.6e9) + us(part(clockRe, 5), 6e7) +
-          us(part(clockRe, 6), 1e6))
+        us(part(clockRe, 4), hUs) + us(part(clockRe, 5), mUs) +
+          us(part(clockRe, 6), sUs))
         .otherwise(us(part(clockRe, 4), u1) + us(part(clockRe, 5), u2))
       sign(clockRe) *
-        (us(part(clockRe, 2), 6.048e11) + us(part(clockRe, 3), 8.64e10) + hm)
+        (us(part(clockRe, 2), wUs) + us(part(clockRe, 3), dUs) + hm)
     }
-    val secVal = sign(secRe) * us(part(secRe, 2), 1e6)
+    val secVal = sign(secRe) * us(part(secRe, 2), sUs)
     val abbrevVal = sign(abbrevRe) *
-      (us(part(abbrevRe, 2), 6.048e11) + us(part(abbrevRe, 3), 8.64e10) +
-        us(part(abbrevRe, 4), 3.6e9) + us(part(abbrevRe, 5), 6e7) +
-        us(part(abbrevRe, 6), 1e6) + us(part(abbrevRe, 7), 1000.0) +
+      (us(part(abbrevRe, 2), wUs) + us(part(abbrevRe, 3), dUs) +
+        us(part(abbrevRe, 4), hUs) + us(part(abbrevRe, 5), mUs) +
+        us(part(abbrevRe, 6), sUs) + us(part(abbrevRe, 7), 1000.0) +
         us(part(abbrevRe, 8), 1.0))
     when(s.rlike(clockRe), clockVal)
       .when(s.rlike(secRe), secVal)

@@ -1865,16 +1865,14 @@ object LlmQueries {
   // ---- L37: unicode normalization -------------------------------------------
   /** The corpus has no accents; plant a decomposable-accent suffix per
     * doc, then run the full cleanup (NFC → accent strip → lower →
-    * whitespace collapse — expressions.UnicodeNormalizeText) and emit
+    * whitespace collapse — expressions.TextNormKernel) and emit
     * the md5 of the result: "Café" and "Café" must normalize to
     * the same bytes on both engines. Pure map pass. */
   def x16UnicodeNormalize(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graft.ColumnBridge
     val planted = t(s, dir, "documents").select(col("doc_id"),
       concat(col("text"),
         lit("  CafÉ  ZÜrich   NIÑO façade à ö  ")).as("text"))
-    val norm = ColumnBridge.column(graft.expressions.UnicodeNormalizeText(
-      ColumnBridge.expression(col("text"))))
+    val norm = graft.expressions.Kernels.unicodeNormalize(col("text"))
     planted
       .select(col("doc_id"), norm.as("nt"), length(col("text")).as("n_raw"))
       .select(col("doc_id"), md5(col("nt")).as("norm_md5"),
@@ -4233,7 +4231,7 @@ object LlmQueries {
     // x34: raw-string-gram recompute (first principles vs the engine's
     // hashed pipeline — agreement is the no-collision-loss certificate);
     // short docs (< 3 tokens) contribute one partial shingle, matching
-    // WordShingleHashes
+    // TextHashKernels.wordShingles
     "x34_source_novelty" ->
       s"""WITH base AS (SELECT source, string_split($normSql, ' ') AS toks
         |  FROM documents),

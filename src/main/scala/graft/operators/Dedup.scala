@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.Settle
+import graft.expressions.Kernels
 
 /** Document-deduplication operators for training-data pipelines.
   *
@@ -17,11 +18,7 @@ object Dedup {
     * compiled pass (graft.expressions.NormalizeText), byte-identical to
     * the `trim(regexp_replace(lower(text), "\\s+", " "))` formulation
     * the oracles use. */
-  def normText(text: Column): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(graft.expressions.NormalizeText(
-      ColumnBridge.expression(text)))
-  }
+  def normText(text: Column): Column = Kernels.normalizeText(text)
 
   /** Conditional skew salting for bucket-local pair generation.
     *
@@ -113,16 +110,13 @@ object Dedup {
   // ---------------------------------------------------------------------
 
   /** Word w-shingles of the normalized text as SORTED DISTINCT 64-bit
-    * hashes — one compiled pass (graft.expressions.WordShingleHashes;
+    * hashes — one compiled pass (graft.expressions.TextHashKernels;
     * replaced a chain of interpreted zip_with/transform HOF lambdas).
     * Sorted: min-hash aggregation is order-independent, and the jaccard
     * verify join gets a merge-scan intersection. Documents shorter than
     * `w` words get one partial shingle. */
-  def shingleHashes(text: Column, w: Int = 3): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(graft.expressions.WordShingleHashes(
-      ColumnBridge.expression(normText(text)), w))
-  }
+  def shingleHashes(text: Column, w: Int = 3): Column =
+    Kernels.wordShingleHashes(normText(text), w)
 
   /** MinHash signature: `h` minima in one compiled loop (native
     * expression — see graft.expressions.MinHashSignature). */
@@ -433,27 +427,19 @@ object Dedup {
 
   /** 64-bit SimHash of the token multiset: per bit, sign of the sum of
     * ±1 contributions from each token hash. Token hashes are 60-bit
-    * md5 prefixes (one compiled pass — TokenMd5Hashes) so the DuckDB
-    * oracle reproduces the exact bit pattern; the top 4 simhash bits
-    * are structurally 0. The 64 bit-counters run in a single
-    * native-expression pass. */
+    * md5 prefixes (one compiled pass — ShingleMinMd5.tokenHashes) so
+    * the DuckDB oracle reproduces the exact bit pattern; the top 4
+    * simhash bits are structurally 0. The 64 bit-counters run in a
+    * single native-kernel pass. */
   def simhash(text: Column): Column =
     simhashFromTokHashes(tokenMd5Hashes(normText(text)))
 
   /** Per-token md5-prefix hashes of normalized text (compiled). */
-  def tokenMd5Hashes(normed: Column): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(graft.expressions.TokenMd5Hashes(
-      ColumnBridge.expression(normed)))
-  }
+  def tokenMd5Hashes(normed: Column): Column = Kernels.tokenMd5Hashes(normed)
 
-  /** SimHash from a token-hash array: one compiled loop (native
-    * expression — see graft.expressions.SimHash64). */
-  def simhashFromTokHashes(tokHashes: Column): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(graft.expressions.SimHash64(
-      ColumnBridge.expression(tokHashes)))
-  }
+  /** SimHash from a token-hash array: one compiled loop (static kernel
+    * — see graft.expressions.SimHash64). */
+  def simhashFromTokHashes(tokHashes: Column): Column = Kernels.simHash64(tokHashes)
 
   /** Near-dup pairs with Hamming distance <= maxDist on 64-bit SimHash.
     * Pigeonhole bucketing: split the hash into (maxDist+1) chunks — any
@@ -563,11 +549,7 @@ object Dedup {
     import spark.implicits._
     // grams as SORTED DISTINCT hashed longs in one compiled pass: 8-byte
     // elements + sort-once so the per-pair intersection is a merge scan
-    val grams = {
-      import org.apache.spark.sql.graft.ColumnBridge
-      ColumnBridge.column(graft.expressions.CharGramHashes(
-        ColumnBridge.expression(col("nt")), n))
-    }
+    val grams = Kernels.charGramHashes(col("nt"), n)
     val prepared = df
       .select(Seq(col(idCol).cast("long").as("id"), normText(col(textCol)).as("nt")) ++
         blockCols.zipWithIndex.map { case (c, i) => c.cast("string").as(s"blk$i") }: _*)
@@ -602,11 +584,7 @@ object Dedup {
       threshold: Double = 0.8): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val grams = {
-      import org.apache.spark.sql.graft.ColumnBridge
-      ColumnBridge.column(graft.expressions.CharGramHashes(
-        ColumnBridge.expression(col("nt")), n))
-    }
+    val grams = Kernels.charGramHashes(col("nt"), n)
     val prepared = df
       .select(Seq(col(idCol).cast("long").as("id"),
         normText(col(textCol)).as("nt")) ++
@@ -652,19 +630,16 @@ object Dedup {
     * |bottom-k(A∪B) ∩ A_k ∩ B_k| / |bottom-k(A∪B)| (Beyer et al.,
     * SIGMOD 2007) from the two sketches alone (bottom-k of a union is
     * computable from the merged bottom-ks — the sketch is mergeable).
-    * md5-prefix hashes ([[graft.expressions.CharGramKmv]]) so every
-    * sketch value — hence the estimate — replays in the oracle;
+    * md5-prefix hashes ([[graft.expressions.ShingleMinMd5.charGramKmv]])
+    * so every sketch value — hence the estimate — replays in the oracle;
     * both ratios are raw IEEE divisions, no rounding anywhere. */
   def kmvCalibrationPairs(df: DataFrame, idCol: String, textCol: String,
       blockCols: Seq[Column], n: Int = 3, k: Int = 64,
       threshold: Double = 0.2): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.graft.ColumnBridge
-    val grams = ColumnBridge.column(graft.expressions.CharGramHashes(
-      ColumnBridge.expression(col("nt")), n))
-    val kmv = ColumnBridge.column(graft.expressions.CharGramKmv(
-      ColumnBridge.expression(col("nt")), n, k))
+    val grams = Kernels.charGramHashes(col("nt"), n)
+    val kmv = Kernels.charGramKmv(col("nt"), n, k)
     val prepared = df
       .select(Seq(col(idCol).cast("long").as("id"),
         normText(col(textCol)).as("nt")) ++
@@ -1425,9 +1400,7 @@ object Dedup {
   /** (doc_id, chunk digest) rows via the fused kernel — the shared
     * front half of [[cdcChunkStats]] and the S25 streaming dedup. */
   def cdcChunks(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    val digests = ColumnBridge.column(graft.expressions.CdcChunkDigests(
-      ColumnBridge.expression(normText(col(textCol)))))
+    val digests = Kernels.cdcChunkDigests(normText(col(textCol)))
     df.select(col(idCol).as("doc_id"), explode(digests).as("digest"))
   }
 

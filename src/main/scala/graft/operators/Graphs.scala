@@ -280,10 +280,8 @@ object Graphs {
     // has w ∈ N⁺(v), so v is never a sink for a closing edge
     // native sorted-merge intersection: one primitive buffer per row,
     // no per-row hash set (array_intersect GC-thrashes at 1M+ edges)
-    import org.apache.spark.sql.graft.ColumnBridge
-    val isect = ColumnBridge.column(graft.expressions.SortedLongArrayIntersect(
-      ColumnBridge.expression(col("nu").cast(ArrayType(LongType))),
-      ColumnBridge.expression(col("nv").cast(ArrayType(LongType)))))
+    val isect = graft.expressions.Kernels.sortedIntersect(
+      col("nu").cast(ArrayType(LongType)), col("nv").cast(ArrayType(LongType)))
     val tri = oriented
       .join(bcA(adj.select(col("node").as("u"), col("nbrs").as("nu"))), Seq("u"))
       .join(bcA(adj.select(col("node").as("v"), col("nbrs").as("nv"))), Seq("v"))

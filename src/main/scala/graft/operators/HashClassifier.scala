@@ -93,11 +93,7 @@ object HashClassifier {
     * replaces ran on the interpreted ArrayAggregate path —
     * CodegenFallback — and dominated x46's bench time; the kernel is
     * property-spec-pinned bit-equal to [[scoreRawHof]]). */
-  def scoreRaw(toks: Column): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(graft.expressions.HashClassifierScore(
-      ColumnBridge.expression(toks)))
-  }
+  def scoreRaw(toks: Column): Column = graft.expressions.Kernels.hashClassifierScore(toks)
 
   /** The Column/HOF formulation of [[scoreRaw]] — kept as the
     * executable spec of the kernel's semantics (differential property

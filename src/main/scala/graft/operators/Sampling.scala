@@ -88,8 +88,7 @@ object Sampling {
     val grams = docs
       .withColumn("is_target", targetCol)
       .select(col(idCol), col("is_target"),
-        explode(ColumnBridge.column(graft.expressions.DsirGramBuckets(
-          ColumnBridge.expression(col(textCol)), buckets))).as("b"))
+        explode(graft.expressions.Kernels.dsirGramBuckets(col(textCol), buckets)).as("b"))
     // pre-aggregate once to (doc, bucket, count): the gram explode +
     // md5 run in exactly ONE pass; everything downstream (model fit,
     // scoring) reuses this ≤256-rows-per-doc table. Cached like d10's

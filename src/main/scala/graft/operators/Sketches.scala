@@ -2,8 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.graft.ColumnBridge
-import graft.expressions.{HllEstimate, HllSketchAgg, HllUnion,
-  ThetaEstimate, ThetaIntersect, ThetaSketchAgg, ThetaUnion}
+import graft.expressions.{HllSketchAgg, Kernels, ThetaSketchAgg}
 
 /** Mergeable sketch aggregates (SURVEY §7(f)). Theta/KMV sketches
   * complement the HLL distinct counts of q30 with SET OPERATIONS:
@@ -19,18 +18,13 @@ object Sketches {
       ThetaSketchAgg(ColumnBridge.expression(c), k).toAggregateExpression())
 
   /** Distinct-count estimate of a sketch blob (exact below k). */
-  def thetaEstimate(sketch: Column): Column =
-    ColumnBridge.column(ThetaEstimate(ColumnBridge.expression(sketch)))
+  def thetaEstimate(sketch: Column): Column = Kernels.thetaEstimate(sketch)
 
   /** Sketch-union of two blobs (same k) — itself a sketch. */
-  def thetaUnion(a: Column, b: Column): Column =
-    ColumnBridge.column(ThetaUnion(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+  def thetaUnion(a: Column, b: Column): Column = Kernels.thetaUnion(a, b)
 
   /** Intersection-cardinality estimate of two sketch blobs. */
-  def thetaIntersect(a: Column, b: Column): Column =
-    ColumnBridge.column(ThetaIntersect(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+  def thetaIntersect(a: Column, b: Column): Column = Kernels.thetaIntersect(a, b)
 
   /** Aggregate a column into an md5-register HLL (4096-byte blob;
     * partial registers MAX-merge map-side; the estimate — not just the
@@ -49,13 +43,10 @@ object Sketches {
         .toAggregateExpression())
 
   /** Distinct-count estimate of an HLL register blob. */
-  def hllEstimate(sketch: Column): Column =
-    ColumnBridge.column(HllEstimate(ColumnBridge.expression(sketch)))
+  def hllEstimate(sketch: Column): Column = Kernels.hllEstimate(sketch)
 
   /** Register-wise MAX union of two HLL blobs — itself a sketch. */
-  def hllUnion(a: Column, b: Column): Column =
-    ColumnBridge.column(HllUnion(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+  def hllUnion(a: Column, b: Column): Column = Kernels.hllUnion(a, b)
 
   /** Fixed-grid histogram of `xCol` per `gCol` group: (g, b, c) cell
     * counts on a CALLER-SUPPLIED [lo, hi] grid — the mergeable state

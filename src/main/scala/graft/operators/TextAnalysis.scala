@@ -46,14 +46,10 @@ object TextAnalysis {
       .otherwise("und")
   }
 
-  /** Fused one-pass language ID (graft.expressions.LangIdHeuristic) —
-    * same arithmetic as [[langIdFromToks]], compiled. */
-  def langId(text: Column): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(graft.expressions.LangIdHeuristic(
-      ColumnBridge.expression(text),
-      ColumnBridge.expression(Dedup.normText(text))))
-  }
+  /** Fused one-pass language ID (graft.expressions.TextHashKernels.langId)
+    * — same arithmetic as [[langIdFromToks]], compiled. */
+  def langId(text: Column): Column =
+    graft.expressions.Kernels.langId(text, Dedup.normText(text))
 
   /** Quality features: lengths, token stats, punctuation/alpha/stopword
     * ratios, and a composite [0,1] score (heuristic curation signal). */
@@ -224,22 +220,16 @@ object TextAnalysis {
   /** Winnowing-style robust fingerprint: minimum shingle hash — stable
     * under small edits (the min 3-word shingle usually survives). One
     * fused compiled pass (see [[graft.expressions.ShingleMinMd5]]). */
-  def minShingleFingerprint(text: Column, w: Int = 3): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(graft.expressions.ShingleMinMd5(
-      ColumnBridge.expression(Dedup.normText(text)), w))
-  }
+  def minShingleFingerprint(text: Column, w: Int = 3): Column =
+    graft.expressions.Kernels.shingleMinMd5(Dedup.normText(text), w)
 
   /** Character-distribution Shannon entropy term sum as exact 1e-9
     * integer "nanos" — one fused compiled pass per doc (see
     * [[graft.expressions.TextEntropyNanos]]); order 1 = code points,
     * order 2 = code-point bigrams. Bits derive as
     * nanos / -1e9 / ln2-literal (two pinned IEEE ops). */
-  def entropyNanos(text: Column, order: Int): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(graft.expressions.TextEntropyNanos(
-      ColumnBridge.expression(text), order))
-  }
+  def entropyNanos(text: Column, order: Int): Column =
+    graft.expressions.Kernels.textEntropyNanos(text, order)
 
   /** Repetition-based quality signals, after the published Gopher
     * repetition rules (Rae et al. 2021, table A1) re-based on word
@@ -617,9 +607,7 @@ object TextAnalysis {
 
   def repetitionSignals(df: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    val st = ColumnBridge.column(graft.expressions.RepetitionStats(
-      ColumnBridge.expression(Dedup.normText(col(textCol)))))
+    val st = graft.expressions.Kernels.repetitionStats(Dedup.normText(col(textCol)))
     df.select(col(idCol).as("id"), st.as("st"))
       .select(col("id"), col("st.n_tok").as("n_tok"),
         round(coalesce(col("st.top_tok") / col("st.n_tok"), lit(0.0)), 6)

@@ -16,14 +16,10 @@ import org.apache.spark.sql.types._
 object Detect {
 
   /** Content-class bitmask per value — ONE compiled byte scan for all
-    * four candidate classes (graft.expressions.DetectClass; replaced
+    * four candidate classes (graft.expressions.DetectKernel; replaced
     * four per-value `rlike` regex machines whose generated aggregate
     * dominated detection time). */
-  private def mask(c: String): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(graft.expressions.DetectClass(
-      ColumnBridge.expression(col(c))))
-  }
+  private def mask(c: String): Column = graft.expressions.Kernels.detectClass(col(c))
 
   /** Per-column counters over the staged class mask. */
   private def counters(c: String): Seq[Column] = {

@@ -262,11 +262,7 @@ object TypeQueries {
     // fused classify+parse: one compiled scan per row instead of four
     // regex-engine evaluations (int/float rlike, token isin, and the
     // coercing cast's own rlike) — same grammar, same oracle
-    val cls = {
-      import org.apache.spark.sql.graft.ColumnBridge
-      ColumnBridge.column(graft.expressions.ClassifyNumeric(
-        ColumnBridge.expression(col("raw"))))
-    }
+    val cls = graft.expressions.Kernels.classifyNumeric(col("raw"))
     mixed.select(cls.as("c")) // staged: both fields read from one eval
       .select(col("c.subtype").as("subtype"), col("c.v").as("v"))
       .groupBy("subtype")
@@ -2048,7 +2044,8 @@ object TypeQueries {
   private def tdSign(re: String): String =
     s"(CASE WHEN regexp_extract(td_n, '$re', 1) = '-' THEN -1 ELSE 1 END)"
   private def t22OracleSql: String = {
-    import TimeFns.{clockRe, secRe, abbrevRe, wUs, dUs, hUs, mUs, sUs}
+    import TimeFns.{clockRe, secRe, abbrevRe}
+    import graft.expressions.TimedeltaKernel.{wUs, dUs, hUs, mUs, sUs}
     val norm = TimeFns.tdReplacements.foldLeft(
       "regexp_replace(lower(trim(td_s)), '\\s+', '', 'g')") {
       case (acc, (p, r)) => s"regexp_replace($acc, '$p', '$r', 'g')"

@@ -2,7 +2,6 @@ package graft
 
 import graft.expressions.DetectKernel
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -53,8 +52,7 @@ class DetectClassSpec extends AnyFunSuite {
         alphabet(rnd.nextInt(alphabet.length))))
     }
     val df = strs.toDF("s")
-    val maskCol = ColumnBridge.column(
-      graft.expressions.DetectClass(ColumnBridge.expression(col("s"))))
+    val maskCol = graft.expressions.Kernels.detectClass(col("s"))
     val v = trim(col("s"))
     val regexMask =
       when(v.rlike(intRe), 1).otherwise(0) +

@@ -179,17 +179,6 @@ class ParseKernelsSpec extends AnyFunSuite {
       assert(parse(t, base, "raise") == s"raised: graft.cast: cannot convert to int64: $t")
     }
   }
-
-  test("kernel pattern strings are pinned to the public oracle-template patterns") {
-    import graft.expressions.{ComplexKernel, TimedeltaKernel}
-    assert(TimedeltaKernel.clockReStr == TimeFns.clockRe)
-    assert(TimedeltaKernel.secReStr == TimeFns.secRe)
-    assert(TimedeltaKernel.abbrevReStr == TimeFns.abbrevRe)
-    assert(TimedeltaKernel.replacements == TimeFns.tdReplacements)
-    assert(ComplexKernel.bothReStr == Casts.complexBothRe)
-    assert(ComplexKernel.imReStr == Casts.complexImRe)
-    assert(ComplexKernel.reReStr == Casts.complexReRe)
-  }
 }
 
 class UnicodeNormalizeSpec extends org.scalatest.funsuite.AnyFunSuite {

@@ -55,13 +55,19 @@ object GraftExtensions {
     (e, n) => ColumnBridge.expression(f(ColumnBridge.column(e), n))
 
   /** Extract a literal int argument (for kernel shape parameters like
-    * shingle width or signature length — they parameterize generated
-    * code, so they must be literals). */
-  private def litInt(name: String, e: Expression): Int = e match {
-    case Literal(v: Int, _) => v
-    case Literal(v: Long, _) => v.toInt
-    case other => throw new IllegalArgumentException(
-      s"$name expects a literal integer parameter, got $other")
+    * shingle width or signature length — they size the kernel's
+    * tables and parameterize generated code, so they must be literals
+    * in [1, Int.MaxValue]). */
+  private def litInt(name: String, e: Expression): Int = {
+    val v = e match {
+      case Literal(v: Int, _) => v.toLong
+      case Literal(v: Long, _) => v
+      case other => throw new IllegalArgumentException(
+        s"$name expects a literal integer parameter, got $other")
+    }
+    if (v < 1 || v > Int.MaxValue) throw new IllegalArgumentException(
+      s"$name expects an integer parameter in [1, ${Int.MaxValue}], got $v")
+    v.toInt
   }
 
   private def unaryWithInt(name: String, default: Int)(
@@ -87,7 +93,7 @@ object GraftExtensions {
     ("graft_minhash",
       info("graft_minhash",
         "graft_minhash(shingle_hashes[, h]) - h-permutation MinHash signature"),
-      unaryWithInt("graft_minhash", 64)((e, h) => MinHashSignature(e, h))),
+      unaryWithInt("graft_minhash", 64)(kernelWithInt(Kernels.minhash(_, _)))),
     ("graft_simhash",
       info("graft_simhash", "graft_simhash(token_hashes) - 64-bit SimHash"),
       unary("graft_simhash")(kernel(Kernels.simHash64 _))),

@@ -2,30 +2,48 @@ package graft.expressions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Literal
-import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.expressions.objects.{Invoke, StaticInvoke}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.util.sketch.BloomFilter
 
-/** The Column constructors of graft's static kernels: one per kernel,
-  * naming its method, its result type and its literal shape arguments
-  * once.
+/** The Column constructors of graft's kernels: one per kernel, naming
+  * its method, its result type and its literal shape arguments once.
   *
-  * Each builds Spark's `StaticInvoke`, which runs the SAME kernel
-  * method on both evaluation paths — by reflection when a plan is
-  * interpreted (exceptions unwrapped to the kernel's own), as one
-  * static call `graft.expressions.<Kernel>.<method>(...)` inside
-  * whole-stage codegen. A null column argument gives null without a
-  * call. A custom Catalyst `Expression` is only for what this cannot
-  * express: reference objects, out-parameters and inlined loops. */
+  * A static kernel builds Spark's `StaticInvoke`, a kernel instance
+  * (one whose constructor precomputes tables: MinHash coefficients,
+  * LSH hyperplanes, a term list, a bloom filter) Spark's `Invoke` on
+  * the instance as an object literal. Both run the SAME kernel method
+  * on both evaluation paths — by reflection when a plan is interpreted
+  * (exceptions unwrapped to the kernel's own), as one call
+  * `graft.expressions.<Kernel>.<method>(...)` (or `<instance>.<method>`
+  * on a reference object) inside whole-stage codegen. A null column
+  * argument gives null without a call unless a constructor says
+  * otherwise. A custom Catalyst `Expression` is only for an `ArrayData`
+  * loop inlined into generated code whose shared-method form measured
+  * slower (graft.expressions.ArrayDotProduct and its siblings). */
 object Kernels {
 
   /** `kernel.method(args)` per row. `nullResult` marks a kernel whose
     * (boxed) result may itself be null; otherwise the column is null
-    * exactly where an argument is. */
+    * exactly where an argument is, or never when `nullArgs` hands null
+    * arguments to the kernel. */
   private def call(kernel: AnyRef, method: String, dataType: DataType,
-      nullResult: Boolean = false)(args: Column*): Column =
+      nullResult: Boolean = false, nullArgs: Boolean = false)(args: Column*): Column =
     ColumnBridge.column(StaticInvoke(kernel.getClass, dataType, method,
-      args.map(ColumnBridge.expression), returnNullable = nullResult))
+      args.map(ColumnBridge.expression), propagateNull = !nullArgs,
+      returnNullable = nullResult))
+
+  /** `target.method(args)` per row on an object literal; null where an
+    * argument is. */
+  private def invoke(target: Literal, method: String, dataType: DataType)(
+      args: Column*): Column =
+    ColumnBridge.column(Invoke(target, method, dataType,
+      args.map(ColumnBridge.expression), returnNullable = false))
+
+  /** A kernel instance as an object literal of its own class: a case
+    * class, so plans holding equal instances stay equal. */
+  private def instance(k: Product): Literal = Literal.fromObject(k, ObjectType(k.getClass))
 
   /** A literal shape argument. A Catalyst literal, not `lit`: the SQL
     * builders in graft.GraftExtensions hand the built expression
@@ -35,6 +53,16 @@ object Kernels {
   private val longs = ArrayType(LongType, containsNull = false)
 
   // ---- typecast: detection, parses, integer rendering and division ----
+
+  /** String → int64 in `base`, null when it does not parse or lies
+    * outside [lo, hi] ([[IntegerKernel.parse]]). */
+  def integerParse(s: Column, base: Int, lo: Long, hi: Long): Column =
+    call(IntegerKernel, "parse", LongType, nullResult = true)(
+      s, shape(base), shape(lo), shape(hi))
+
+  /** An int64 column, null outside [lo, hi] ([[IntegerKernel.inRange]]). */
+  def integerInRange(v: Column, lo: Long, hi: Long): Column =
+    call(IntegerKernel, "inRange", LongType, nullResult = true)(v, shape(lo), shape(hi))
 
   /** Content-class bitmask of a string ([[DetectKernel.classify]]). */
   def detectClass(s: Column): Column = call(DetectKernel, "classify", IntegerType)(s)
@@ -126,7 +154,35 @@ object Kernels {
   def hashClassifierScore(toks: Column): Column =
     call(HashClassifierScore, "score", LongType, nullResult = true)(toks)
 
-  // ---- hash arrays and sketches ----------------------------------------
+  // ---- hash arrays, LSH and sketches -----------------------------------
+
+  /** `h`-permutation MinHash signature of a shingle-hash array
+    * ([[MinHashKernel.compute]]). */
+  def minhash(shingles: Column, h: Int): Column =
+    invoke(instance(MinHashKernel(h)), "compute", longs)(shingles)
+
+  /** LSH band keys of a MinHash signature: `bands` keys of `h/bands`
+    * rows each ([[MinHashKernel.bandKeys]]); a null signature hashes as
+    * an empty one, so the column is never null. */
+  def bandKeys(sig: Column, h: Int, bands: Int): Column =
+    call(MinHashKernel, "bandKeys", longs, nullArgs = true)(sig, shape(h / bands), shape(bands))
+
+  /** Banded sign-LSH keys of an array<double> ([[SignLshKernel.compute]]). */
+  def signLshBands(v: Column, bits: Int, bands: Int, dim: Int): Column =
+    invoke(instance(SignLshKernel(bits, bands, dim)), "compute", longs)(v)
+
+  /** Per-row occurrence counts of `terms` in a token array
+    * ([[TermCountsKernel.compute]]). */
+  def termCounts(toks: Column, terms: Seq[String]): Column =
+    invoke(instance(TermCountsKernel(terms)), "compute",
+      ArrayType(IntegerType, containsNull = false))(toks)
+
+  /** Bloom-filter membership of a key cast to bigint. The literal is
+    * typed as the public `BloomFilter`: generated code cannot name its
+    * package-private implementation class. */
+  def bloomMightContain(bloom: BloomFilter, key: Column): Column =
+    invoke(Literal.fromObject(bloom, ObjectType(classOf[BloomFilter])), "mightContainLong",
+      BooleanType)(key.cast(LongType))
 
   /** 64-bit SimHash of a token-hash array ([[SimHash64.compute]]). */
   def simHash64(hashes: Column): Column = call(SimHash64, "compute", LongType)(hashes)

@@ -4,7 +4,6 @@ import java.util.regex.Pattern
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.unsafe.types.UTF8String.LongWrapper
@@ -183,10 +182,11 @@ object ComplexKernel {
   }
 }
 
-/** String → int64 in one compiled pass with the target width's range
-  * check folded in (reference convert/integer.py): null when the string
-  * does not parse or the value lies outside [lo, hi]. An integral child
-  * is range-checked only. Callers apply the error mode.
+/** String → int64 in one pass with the target width's range check
+  * folded in (reference convert/integer.py): null when the string does
+  * not parse or the value lies outside [lo, hi]
+  * ([[Kernels.integerParse]]; [[Kernels.integerInRange]] range-checks
+  * an integral column). Callers apply the error mode.
   *
   * Base 10 keeps the semantics of the Column form it replaces
   * (`rlike("^[+-]?\\d+$")` then `try_cast` to BIGINT on the SQL-trimmed
@@ -196,48 +196,18 @@ object ComplexKernel {
   * valid digit prefix counts ("xyz", "g1" and "0x" parse to 0, a lone
   * sign to null), and magnitudes past Long.MaxValue are null, except
   * that "-" + 2^63 is Long.MinValue. */
-case class IntegerParse(child: Expression, base: Int, lo: Long, hi: Long)
-    extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_integer_parse"
-
-  override def nullSafeEval(v: Any): Any = child.dataType match {
-    case StringType =>
-      val w = new LongWrapper
-      if (IntegerKernel.parse(v.asInstanceOf[UTF8String], base, lo, hi, w)) w.value else null
-    case _ =>
-      val x = v.asInstanceOf[Long]
-      if (x >= lo && x <= hi) x else null
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => child.dataType match {
-      case StringType =>
-        val w = ctx.freshName("intParse")
-        val wrapper = classOf[LongWrapper].getName.replace('$', '.')
-        s"""$wrapper $w = new $wrapper();
-           |if (graft.expressions.IntegerKernel.parse($c, $base, ${lo}L, ${hi}L, $w)) {
-           |  ${ev.value} = $w.value;
-           |} else { ${ev.isNull} = true; }
-         """.stripMargin
-      case _ =>
-        s"""if ($c >= ${lo}L && $c <= ${hi}L) { ${ev.value} = $c; } else { ${ev.isNull} = true; }"""
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): IntegerParse =
-    copy(child = newChild)
-}
-
 object IntegerKernel {
-  /** Parses `raw` in `base` into `out`; false when unparseable or
-    * outside [lo, hi]. */
-  def parse(raw: UTF8String, base: Int, lo: Long, hi: Long, out: LongWrapper): Boolean = {
+  /** `raw` parsed in `base`; null when unparseable or outside [lo, hi]. */
+  def parse(raw: UTF8String, base: Int, lo: Long, hi: Long): java.lang.Long = {
     val s = raw.trim() // SQL trim: 0x20 only
-    (if (base == 10) decimal(s, out) else radix(s, base, out)) &&
-      out.value >= lo && out.value <= hi
+    val out = new LongWrapper
+    if (if (base == 10) decimal(s, out) else radix(s, base, out)) inRange(out.value, lo, hi)
+    else null
   }
+
+  /** `v`, or null outside [lo, hi]. */
+  def inRange(v: Long, lo: Long, hi: Long): java.lang.Long =
+    if (v >= lo && v <= hi) java.lang.Long.valueOf(v) else null
 
   // Long.parseLong's accumulation: digits subtract from a non-positive
   // accumulator, so -2^63 is reachable; false past the long range

@@ -1,8 +1,9 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.types._
 
 /** Python's `//` and `%` as type-adaptive Catalyst expressions — the
@@ -12,7 +13,9 @@ import org.apache.spark.sql.types._
   * Python's).
   *
   * The parser runs before resolution, so it cannot know operand
-  * types; these expressions decide AFTER analysis:
+  * types; these expressions decide AFTER analysis, where each is
+  * replaced by a `StaticInvoke` of one of [[PyArith]]'s overloads over
+  * its operands cast to the chosen domain:
   *
   *  - both operands integral → EXACT int64 `Math.floorDiv` /
   *    `Math.floorMod` — closing the documented >2^53 deviation where
@@ -28,16 +31,17 @@ import org.apache.spark.sql.types._
   * PINNED semantics, independent of the session's ANSI flag: Python
   * raises ZeroDivisionError for both int and float operands, and the
   * old compilation threw the same way under the ANSI sessions this
-  * library runs in. Both expressions codegen to branch-free primitive
-  * arithmetic picked at code-generation time. */
-abstract class PyBinaryArith extends BinaryExpression {
+  * library runs in. */
+abstract class PyBinaryArith extends Expression with RuntimeReplaceable
+    with BinaryLike[Expression] {
+
+  /** The [[PyArith]] method. */
+  protected def method: String
 
   private def isIntegral(dt: DataType): Boolean = dt match {
     case ByteType | ShortType | IntegerType | LongType => true
     case _ => false
   }
-  protected def bothIntegral: Boolean =
-    isIntegral(left.dataType) && isIntegral(right.dataType)
 
   override def checkInputDataTypes(): TypeCheckResult = {
     def ok(dt: DataType) = dt.isInstanceOf[NumericType]
@@ -47,26 +51,14 @@ abstract class PyBinaryArith extends BinaryExpression {
         s"${left.dataType.catalogString} and ${right.dataType.catalogString}")
   }
 
-  protected def toD(v: Any): Double = v match {
-    case d: Decimal => d.toDouble
-    case n: Number => n.doubleValue()
-  }
-  protected def toL(v: Any): Long = v.asInstanceOf[Number].longValue()
-
-  protected def zeroDiv(): Nothing =
-    throw new ArithmeticException(
-      s"$prettyName: division by zero (Python raises ZeroDivisionError)")
-
-  protected def genThrow: String =
-    s"""throw new ArithmeticException(
-       |  "$prettyName: division by zero (Python raises ZeroDivisionError)");
-     """.stripMargin
-
-  /** Java source snippet converting a child's generated value to
-    * double (Decimal children carry an object type). */
-  protected def dbl(v: String, dt: DataType): String = dt match {
-    case _: DecimalType => s"$v.toDouble()"
-    case _ => s"(double)($v)"
+  /** The (long, long) overload when both operands are integral, else
+    * the (double, double) one; `//` yields int64 either way. */
+  override lazy val replacement: Expression = {
+    val domain =
+      if (isIntegral(left.dataType) && isIntegral(right.dataType)) LongType else DoubleType
+    val result = if (method == "floorDiv") LongType else domain
+    StaticInvoke(PyArith.getClass, result, method,
+      Seq(Cast(left, domain), Cast(right, domain)), returnNullable = false)
   }
 }
 
@@ -74,34 +66,9 @@ abstract class PyBinaryArith extends BinaryExpression {
   * float-in float-out `//` typing remains the documented deviation —
   * the double path floors to int64 like the composition it
   * replaces). */
-case class PyFloorDiv(left: Expression, right: Expression)
-    extends PyBinaryArith {
-  override def dataType: DataType = LongType
+case class PyFloorDiv(left: Expression, right: Expression) extends PyBinaryArith {
+  override protected def method: String = "floorDiv"
   override def prettyName: String = "graft_py_floordiv"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    if (bothIntegral) {
-      val d = toL(b)
-      if (d == 0L) zeroDiv() else Math.floorDiv(toL(a), d)
-    } else {
-      val d = toD(b)
-      if (d == 0.0) zeroDiv() else math.floor(toD(a) / d).toLong
-    }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val d = ctx.freshName("pyfdDiv")
-      if (bothIntegral)
-        s"""long $d = (long)($b);
-           |if ($d == 0L) { $genThrow }
-           |${ev.value} = Math.floorDiv((long)($a), $d);
-         """.stripMargin
-      else
-        s"""double $d = ${dbl(b, right.dataType)};
-           |if ($d == 0.0) { $genThrow }
-           |${ev.value} = (long) Math.floor(${dbl(a, left.dataType)} / $d);
-         """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): PyFloorDiv = copy(left = newLeft, right = newRight)
@@ -109,40 +76,30 @@ case class PyFloorDiv(left: Expression, right: Expression)
 
 /** Python modulo (result takes the divisor's sign). Int64 exact when
   * both operands are integral, else the double fmod composition. */
-case class PyMod(left: Expression, right: Expression)
-    extends PyBinaryArith {
-  override def dataType: DataType =
-    if (bothIntegral) LongType else DoubleType
+case class PyMod(left: Expression, right: Expression) extends PyBinaryArith {
+  override protected def method: String = "floorMod"
   override def prettyName: String = "graft_py_mod"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    if (bothIntegral) {
-      val d = toL(b)
-      if (d == 0L) zeroDiv() else Math.floorMod(toL(a), d)
-    } else {
-      val d = toD(b)
-      if (d == 0.0) zeroDiv()
-      else {
-        val r = toD(a) % d
-        (r + d) % d
-      }
-    }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val d = ctx.freshName("pymodDiv")
-      if (bothIntegral)
-        s"""long $d = (long)($b);
-           |if ($d == 0L) { $genThrow }
-           |${ev.value} = Math.floorMod((long)($a), $d);
-         """.stripMargin
-      else
-        s"""double $d = ${dbl(b, right.dataType)};
-           |if ($d == 0.0) { $genThrow }
-           |${ev.value} = ((${dbl(a, left.dataType)} % $d) + $d) % $d;
-         """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): PyMod = copy(left = newLeft, right = newRight)
+}
+
+/** The kernels [[PyFloorDiv]] and [[PyMod]] call: one overload per
+  * operand domain, each throwing ArithmeticException on a zero
+  * divisor. */
+object PyArith {
+  private def zeroDiv(op: String): Nothing =
+    throw new ArithmeticException(s"$op: division by zero (Python raises ZeroDivisionError)")
+
+  def floorDiv(a: Long, b: Long): Long =
+    if (b == 0L) zeroDiv("graft_py_floordiv") else Math.floorDiv(a, b)
+
+  def floorDiv(a: Double, b: Double): Long =
+    if (b == 0.0) zeroDiv("graft_py_floordiv") else math.floor(a / b).toLong
+
+  def floorMod(a: Long, b: Long): Long =
+    if (b == 0L) zeroDiv("graft_py_mod") else Math.floorMod(a, b)
+
+  def floorMod(a: Double, b: Double): Double =
+    if (b == 0.0) zeroDiv("graft_py_mod") else ((a % b) + b) % b
 }

@@ -1,9 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -121,40 +119,17 @@ case class SortedLongArrayIntersectCount(left: Expression, right: Expression)
 
 /** MinHash signature of a shingle-hash array: `h` minima under `h`
   * seeded universal-hash permutations (a_i·x + b_i over Z/2^64), in ONE
-  * compiled loop. Generated code calls the static kernel directly, so
-  * the expression inlines into whole-stage codegen (no fallback boxing).
-  */
-case class MinHashSignature(child: Expression, h: Int, seed: Long = 42L)
-    extends UnaryExpression {
+  * loop ([[Kernels.minhash]] calls [[compute]] on this instance). The
+  * coefficients are drawn once, in the constructor. */
+case class MinHashKernel(h: Int, seed: Long = 42L) {
 
   // odd multipliers → bijective permutations of Z/2^64
-  @transient private lazy val (as, bs) = MinHashSignature.coeffs(h, seed)
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_minhash"
-
-  override def nullSafeEval(v: Any): Any =
-    MinHashSignature.compute(v.asInstanceOf[ArrayData], as, bs)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val asRef = ctx.addReferenceObj("minhashAs", as, "long[]")
-    val bsRef = ctx.addReferenceObj("minhashBs", bs, "long[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.expressions.MinHashSignature.compute($c, $asRef, $bsRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSignature =
-    copy(child = newChild)
-}
-
-object MinHashSignature {
-  def coeffs(h: Int, seed: Long): (Array[Long], Array[Long]) = {
+  private val (as, bs) = {
     val r = new java.util.Random(seed)
     (Array.fill(h)(r.nextLong() | 1L), Array.fill(h)(r.nextLong()))
   }
 
-  def compute(arr: ArrayData, as: Array[Long], bs: Array[Long]): ArrayData = {
-    val h = as.length
+  def compute(arr: ArrayData): ArrayData = {
     val m = Array.fill(h)(Long.MaxValue)
     val n = arr.numElements()
     var j = 0
@@ -172,36 +147,15 @@ object MinHashSignature {
   }
 }
 
-/** LSH band keys of a MinHash signature: `bands` bands of `h/bands`
-  * rows, each hashed to one bucket key in ONE compiled loop. Band b's
-  * key is exactly `xxhash64(slice(sig, b*r + 1, r), b)` (seed 42, the
-  * array's elements then the band number, a null signature hashing as
-  * an empty one), so it replaces that `bands`-wide Column array without
-  * changing a key. */
-case class BandKeys(child: Expression, h: Int, bands: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_band_keys"
-
-  override def eval(input: InternalRow): Any =
-    BandKeys.compute(child.eval(input).asInstanceOf[ArrayData], h / bands, bands)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    ev.copy(code = code"""
-      |${c.code}
-      |ArrayData ${ev.value} = graft.expressions.BandKeys.compute(
-      |  ${c.isNull} ? null : ${c.value}, ${h / bands}, $bands);
-    """.stripMargin, isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BandKeys =
-    copy(child = newChild)
-}
-
-object BandKeys {
-  def compute(sig: ArrayData, rows: Int, bands: Int): ArrayData = {
+object MinHashKernel {
+  /** LSH band keys of a MinHash signature: `bands` bands of `rows`
+    * rows, each hashed to one bucket key in ONE loop
+    * ([[Kernels.bandKeys]]). Band b's key is exactly
+    * `xxhash64(slice(sig, b*rows + 1, rows), b)` (seed 42, the array's
+    * elements then the band number, a null signature hashing as an
+    * empty one), so it replaces that `bands`-wide Column array without
+    * changing a key. */
+  def bandKeys(sig: ArrayData, rows: Int, bands: Int): ArrayData = {
     val n = if (sig == null) 0 else sig.numElements()
     val keys = new Array[Long](bands)
     var b = 0
@@ -242,44 +196,23 @@ object SimHash64 {
 
 /** Banded sign-LSH signature for cosine-similarity blocking: `bands`
   * band keys, each packing `bits` hyperplane signs (Charikar 2002),
-  * over seeded deterministic Gaussian hyperplanes — one compiled pass.
+  * over seeded deterministic Gaussian hyperplanes — one pass
+  * ([[Kernels.signLshBands]] calls [[compute]] on this instance).
   *
   * OR-amplified banding (collide in ANY band → candidate): with `bits`
   * large the per-band random-pair collision rate is 2^-bits, while a
   * near-dup pair at per-bit agreement p is missed by ALL bands with
   * probability (1-p^bits)^bands — driven to ~1e-8 for dedup-grade
   * thresholds (cos ≥ 0.9) at bits=16, bands=32. */
-case class SignLshBands(child: Expression, bits: Int, bands: Int, dim: Int,
-    seed: Long = 42L) extends UnaryExpression {
+case class SignLshKernel(bits: Int, bands: Int, dim: Int, seed: Long = 42L) {
 
-  @transient private lazy val planes: Array[Double] =
-    SignLshBands.planes(bits * bands, dim, seed)
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_sign_lsh_bands"
-
-  override def nullSafeEval(v: Any): Any =
-    SignLshBands.compute(v.asInstanceOf[ArrayData], planes, bits, bands, dim)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pRef = ctx.addReferenceObj("lshPlanes", planes, "double[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.expressions.SignLshBands.compute($c, $pRef, $bits, $bands, $dim)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SignLshBands =
-    copy(child = newChild)
-}
-
-object SignLshBands {
-  /** Flat (nPlanes × dim) row-major Gaussian hyperplanes, seeded. */
-  def planes(nPlanes: Int, dim: Int, seed: Long): Array[Double] = {
+  // flat (bits·bands × dim) row-major Gaussian hyperplanes, drawn once
+  private val planes: Array[Double] = {
     val r = new java.util.Random(seed)
-    Array.fill(nPlanes * dim)(r.nextGaussian())
+    Array.fill(bits * bands * dim)(r.nextGaussian())
   }
 
-  def compute(v: ArrayData, planes: Array[Double], bits: Int, bands: Int,
-      dim: Int): ArrayData = {
+  def compute(v: ArrayData): ArrayData = {
     val n = math.min(v.numElements(), dim)
     val keys = new Array[Long](bands)
     var b = 0

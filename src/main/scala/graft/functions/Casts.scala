@@ -1,9 +1,8 @@
 package graft.functions
 
-import graft.expressions.{ComplexKernel, IntegerParse, Kernels}
+import graft.expressions.{ComplexKernel, Kernels}
 import graft.types._
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -36,8 +35,8 @@ final case class CastOptions(
   * Semantics ported, implementation Spark-first: built-in codegen'd
   * expressions (`when`/`rlike`/`cast`/arithmetic) where one evaluation
   * per row suffices, and graft's native kernels (graft.expressions:
-  * the IntegerParse expression, and TimedeltaKernel, ComplexKernel and
-  * IntegerKernel.toBase through [[graft.expressions.Kernels]]) where a
+  * IntegerKernel, TimedeltaKernel and ComplexKernel through
+  * [[graft.expressions.Kernels]]) where a
   * composition would re-parse the string — so conversions inline into
   * whole-stage codegen, never leave the JVM, and evaluate their input
   * once per row. Error modes:
@@ -83,16 +82,15 @@ object Casts {
 
   /** to_integer (reference convert/base.py:214, convert/integer.py).
     * Floats honour `rounding` (else must be within `tol` of integral);
-    * strings parse in `base` (graft.expressions.IntegerParse); overflow
+    * strings parse in `base` ([[graft.expressions.Kernels.integerParse]]); overflow
     * outside the target width follows the error mode. */
   def toInteger(c: Column, dt: DataType, target: GInteger = GInteger(64),
       opts: CastOptions = CastOptions()): Column = {
     // range check against the logical width (uintN ranges enforced even
     // though Spark carries them in wider signed types — SURVEY §3),
     // folded into the same pass as the parse
-    def inRange(v: Column, base: Int = 10): Column = ColumnBridge.column(IntegerParse(
-      ColumnBridge.expression(v), base,
-      target.minValue.toLong, target.maxValue.min(BigInt(Long.MaxValue)).toLong))
+    val (lo, hi) = (target.minValue.toLong, target.maxValue.min(BigInt(Long.MaxValue)).toLong)
+    def inRange(v: Column): Column = Kernels.integerInRange(v, lo, hi)
     val converted: Column = dt match {
       case ByteType | ShortType | IntegerType | LongType | BooleanType =>
         inRange(c.cast(LongType))
@@ -110,7 +108,7 @@ object Casts {
           if (opts.rounding.isDefined) finite
           else finite && abs(d - rounded) <= opts.tol
         inRange(when(integral, rounded.cast(LongType)))
-      case StringType => inRange(c.cast(StringType), opts.base)
+      case StringType => Kernels.integerParse(c.cast(StringType), opts.base, lo, hi)
       case TimestampType => inRange(unix_timestamp(c))
       case other => throw new IllegalArgumentException(s"to_integer from $other")
     }

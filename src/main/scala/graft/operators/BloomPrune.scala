@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.expressions.Kernels
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -25,14 +26,6 @@ object BloomPrune {
       expectedItems: Long, fpp: Double = 0.01): BloomFilter =
     keys.stat.bloomFilter(keyCol, expectedItems, fpp)
 
-  /** Membership probe column (codegen'd, see
-    * [[graft.expressions.BloomMightContainLong]]). */
-  def mightContain(bloom: BloomFilter, key: Column): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(graft.expressions.BloomMightContainLong(
-      ColumnBridge.expression(key.cast("long")), bloom))
-  }
-
   /** fact ⋉ dim with the fact side bloom-pruned before the shuffle.
     * The dim key is renamed internally, so factKey == dimKey (the
     * common same-name join shape) resolves unambiguously. */
@@ -41,7 +34,7 @@ object BloomPrune {
       expectedItems: Long, fpp: Double = 0.01): DataFrame = {
     val bloom = buildLongBloom(dim.select(dimKey), dimKey, expectedItems, fpp)
     val dimKeys = dim.select(col(dimKey).as("__bloom_dim_key"))
-    fact.filter(mightContain(bloom, col(factKey)))
+    fact.filter(Kernels.bloomMightContain(bloom, col(factKey)))
       .join(dimKeys, col(factKey) === col("__bloom_dim_key"), "left_semi")
   }
 }

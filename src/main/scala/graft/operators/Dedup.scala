@@ -118,22 +118,6 @@ object Dedup {
   def shingleHashes(text: Column, w: Int = 3): Column =
     Kernels.wordShingleHashes(normText(text), w)
 
-  /** MinHash signature: `h` minima in one compiled loop (native
-    * expression — see graft.expressions.MinHashSignature). */
-  def minhashSignature(shingles: Column, h: Int = 64): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(graft.expressions.MinHashSignature(
-      ColumnBridge.expression(shingles), h))
-  }
-
-  /** LSH band keys: signature split into `bands` bands of `h/bands`
-    * rows; each band hashed to one bucket key — one compiled loop
-    * (native expression — see graft.expressions.BandKeys). */
-  def bandKeys(sig: Column, h: Int, bands: Int): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(graft.expressions.BandKeys(ColumnBridge.expression(sig), h, bands))
-  }
-
   /** Candidate near-duplicate pairs via MinHash LSH, verified with the
     * exact shingle-set Jaccard. Returns (id_a, id_b, jaccard) with
     * jaccard >= `threshold`.
@@ -159,7 +143,7 @@ object Dedup {
     // the band keys of the signature are kept.
     val withSig = st.cache(df.select(col(idCol).as("id"),
         shingleHashes(col(textCol), w).as("sh"))
-      .withColumn("bands", bandKeys(minhashSignature(col("sh"), h), h, bands)))
+      .withColumn("bands", Kernels.bandKeys(Kernels.minhash(col("sh"), h), h, bands)))
     // BLOCK-LOCAL candidate generation: pairs are enumerated inside
     // each (band, key) group — vs the former self-join this shuffles
     // the exploded rows (not the join's materialized pair rows).
@@ -232,7 +216,7 @@ object Dedup {
     def indexed(df: DataFrame): DataFrame =
       df.select(col(idCol).cast("long").as("id"),
           shingleHashes(col(textCol), w).as("sh"))
-        .withColumn("bands", bandKeys(minhashSignature(col("sh"), h), h, bands))
+        .withColumn("bands", Kernels.bandKeys(Kernels.minhash(col("sh"), h), h, bands))
     // the corpus index: in production a stored table, here built once
     val corpusIdx = st.cache(indexed(corpus))
     val batchIdx = st.cache(indexed(batch))
@@ -311,7 +295,7 @@ object Dedup {
       w: Int = 3, h: Int = 64, bands: Int = 32): DataFrame =
     df.select(col(idCol).cast("long").as("id"),
         shingleHashes(col(textCol), w).as("sh"))
-      .withColumn("bands", bandKeys(minhashSignature(col("sh"), h), h, bands))
+      .withColumn("bands", Kernels.bandKeys(Kernels.minhash(col("sh"), h), h, bands))
 
   /** [[leakageVerdicts]] over PRE-BUILT indexes — the kernel streaming
     * S34 drives so the fixed pool index is computed and cached once
@@ -686,7 +670,7 @@ object Dedup {
     *
     * PRODUCTION path (`bands > 0`, the default): banded sign-LSH
     * candidate generation — `bands` keys of `bits` hyperplane signs per
-    * vector (one compiled pass, graft.expressions.SignLshBands), a
+    * vector (one pass, graft.expressions.Kernels.signLshBands), a
     * self-join per (band, key) bucket, then EXACT cosine verification
     * of the surviving candidates only. Never all-pairs: the shuffle
     * carries (band, key, id) triples, random pairs collide at
@@ -714,9 +698,7 @@ object Dedup {
         .select(col("a.id").as("id_a"), col("b.id").as("id_b"), cosExpr.as("cos"))
         .filter(col("cos") >= threshold)
     } else {
-      import org.apache.spark.sql.graft.ColumnBridge
-      val bk = ColumnBridge.column(graft.expressions.SignLshBands(
-        ColumnBridge.expression(col("v")), bits, bands, dim))
+      val bk = Kernels.signLshBands(col("v"), bits, bands, dim)
       // persisted: band explode + both verify-join sides consume it
       val withB = st.cache(v.withColumn("bk", bk))
       val exploded = withB.select(col("id"), posexplode(col("bk")).as(Seq("band", "key")))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.expressions.Kernels
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -14,7 +15,7 @@ import org.apache.spark.sql.functions._
   *   idf(t)     = ln( (N − df + 0.5)/(df + 0.5) + 1 )
   *
   * Scale shape: the per-document tf vector for the query's terms is
-  * ONE compiled pass over the tokens ([[graft.expressions.TermCounts]]
+  * ONE pass over the tokens ([[graft.expressions.Kernels.termCounts]]
   * — never an explode), so candidate filtering (any tf > 0) happens
   * row-locally before anything moves. The only exchanges are two
   * single-row corpus-stats aggregates (N · Σdl and per-term df, fused
@@ -23,12 +24,6 @@ import org.apache.spark.sql.functions._
   * exactly (long Σdl / long N, one double division) so the score
   * reproduces bit-for-bit on any engine regardless of partitioning. */
 object Retrieval {
-
-  def termCounts(toks: Column, terms: Seq[String]): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(graft.expressions.TermCounts(
-      ColumnBridge.expression(toks), terms))
-  }
 
   /** (doc_id, score, per-term tf) for documents matching ≥1 query
     * term, BM25-scored. `round6` keeps the emitted score reproducible
@@ -39,7 +34,7 @@ object Retrieval {
     val counted = docs
       .select(col(idCol).as("id"), TextAnalysis.tokens(col(textCol)).as("toks"))
       .select(col("id"), size(col("toks")).cast("long").as("dl"),
-        termCounts(col("toks"), query).as("tf"))
+        Kernels.termCounts(col("toks"), query).as("tf"))
     // one single-row aggregate carries every corpus statistic the
     // score needs; broadcast-joined back (AQE turns a 1-row join side
     // into a broadcast automatically, but be explicit)

@@ -42,9 +42,10 @@ import org.apache.spark.sql.functions.{col, floor, lit, pow}
   * `7 % -3` = -2 like Python, where `pmod` would give 1 —
   * not C/SQL remainder) at the `*`/`/` level; `//` is Python's FLOOR
   * division (`-20 // 7` = -3). Both compile to the type-adaptive
-  * kernels [[graft.expressions.PyFloorDiv]]/[[graft.expressions.
-  * PyMod]]: when BOTH operands resolve to integral types the result
-  * is EXACT int64 `Math.floorDiv`/`floorMod` — Python's semantics at
+  * [[graft.expressions.PyFloorDiv]]/[[graft.expressions.PyMod]],
+  * which call [[graft.expressions.PyArith]]'s (long, long) overload
+  * when BOTH operands resolve to integral types — EXACT int64
+  * `Math.floorDiv`/`floorMod`, Python's semantics at
   * every magnitude, including |operand| > 2^53 — and otherwise the
   * double-domain forms `floor(a / b)` / `((a fmod b) + b) fmod b`,
   * which match Python wherever the values are exactly
@@ -249,7 +250,7 @@ object PredicateParser {
         case Op("*") | Op("/") | Op("//") | Op("%") => true
         case _ => false
       }) {
-        // `//` and `%` compile to the type-adaptive kernels in
+        // `//` and `%` compile to the type-adaptive
         // [[graft.expressions.PyFloorDiv]]/[[PyMod]]: EXACT int64
         // Math.floorDiv/floorMod when both operands resolve integral
         // (closing the documented >2^53 deviation from pandas' int64
@@ -258,8 +259,8 @@ object PredicateParser {
         // ((a % b) + b) % b, Python's divisor-sign results for BOTH
         // divisor signs (pmod would diverge: pmod(7,-3) = 1 where
         // Python gives -2). The parser runs before resolution, so the
-        // integral-vs-double branch lives in the expression, decided
-        // at analysis.
+        // expression picks the integral or double PyArith overload
+        // once its operands are resolved.
         import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
         pop() match {
           case Op("*") => e = e * unaryArith()

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Dedup
+import graft.expressions.Kernels
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -22,7 +22,7 @@ class BandKeysSpec extends AnyFunSuite {
       val rows = h / bands
       val column = array((0 until bands).map(b =>
         xxhash64(slice($"sig", b * rows + 1, rows), lit(b))): _*)
-      val got = df.select(Dedup.bandKeys($"sig", h, bands).as("k"), column.as("c")).collect()
+      val got = df.select(Kernels.bandKeys($"sig", h, bands).as("k"), column.as("c")).collect()
       got.zip(sigs).foreach { case (row, sig) =>
         assert(row.getSeq[Long](0) == row.getSeq[Long](1), s"h=$h bands=$bands sig=$sig")
       }

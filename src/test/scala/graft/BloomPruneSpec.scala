@@ -1,5 +1,6 @@
 package graft
 
+import graft.expressions.Kernels
 import graft.operators.BloomPrune
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -27,7 +28,7 @@ class BloomPruneSpec extends AnyFunSuite {
 
   test("the probe prunes: far fewer fact rows survive than exist") {
     val bloom = BloomPrune.buildLongBloom(dim, "dk", expectedItems = 100L)
-    val survivors = fact.filter(BloomPrune.mightContain(bloom, col("k"))).count()
+    val survivors = fact.filter(Kernels.bloomMightContain(bloom, col("k"))).count()
     val trueMatches = fact.join(dim, col("k") === col("dk"), "left_semi").count()
     assert(survivors >= trueMatches, "a bloom can never lose a true match")
     assert(survivors < 10000L / 4,
@@ -37,7 +38,7 @@ class BloomPruneSpec extends AnyFunSuite {
   test("null probe keys are dropped, matching join semantics") {
     val f2 = fact.select(when(col("k") === 0L, lit(null)).otherwise(col("k")).as("k"))
     val bloom = BloomPrune.buildLongBloom(dim, "dk", expectedItems = 100L)
-    val kept = f2.filter(BloomPrune.mightContain(bloom, col("k")))
+    val kept = f2.filter(Kernels.bloomMightContain(bloom, col("k")))
       .select("k").as[Long].collect()
     assert(!kept.contains(0L), "null key leaked through the probe")
     assert(kept.contains(37L), "true match lost")

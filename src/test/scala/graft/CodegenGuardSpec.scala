@@ -21,7 +21,8 @@ class CodegenGuardSpec extends AnyFunSuite {
   import TestSpark._
 
   private val HugeMethodLimit = 8000
-  private val kernelCall = """(NumberConverter|graft\.expressions\.\w+Kernel)\.\w+\(""".r
+  private val kernelCall =
+    """(NumberConverter|graft\.expressions\.(\w+Kernel|RoundDiv))\.\w+\(""".r
 
   /** Every plan `body` executes through a Dataset action, plus the plan
     * of the frame it returns. */
@@ -64,6 +65,7 @@ class CodegenGuardSpec extends AnyFunSuite {
   }
 
   test("d6's MinHash band stage: JIT-sized methods") {
+    import graft.expressions.Kernels
     import graft.operators.Dedup
     import org.apache.spark.sql.functions.{concat, lit}
     // d6's input (the documents plus a perturbed copy, unioned) under
@@ -72,7 +74,7 @@ class CodegenGuardSpec extends AnyFunSuite {
     val corpus = docs.union(docs.select((col("doc_id") + 1000000L).as("doc_id"),
       concat(col("text"), lit(" zz qq")).as("text")))
     val banded = corpus.select(col("doc_id").as("id"), Dedup.shingleHashes(col("text"), 3).as("sh"))
-      .withColumn("bands", Dedup.bandKeys(Dedup.minhashSignature(col("sh"), 64), 64, 32))
+      .withColumn("bands", Kernels.bandKeys(Kernels.minhash(col("sh"), 64), 64, 32))
     val st = stages(plansOf(banded))
     assert(st.nonEmpty)
     st.foreach { case (tree, _, maxMethod) =>

@@ -470,11 +470,11 @@ class TextAnalysisSpec extends AnyFunSuite {
         ((nTok, expUni, bi, dup5)), s"doc='$doc'")
       // term counts vs naive count (same split-"" tokenization)
       val splitToks = if (toks.isEmpty) Array("") else toks
-      val terms = Array("a", "ccc", "zz").map(UTF8String.fromString)
+      val terms = Seq("a", "ccc", "zz")
       val arr = new GenericArrayData(splitToks.map(UTF8String.fromString))
-      val counts = TermCountsKernel.compute(arr, terms)
+      val counts = TermCountsKernel(terms).compute(arr)
       terms.indices.foreach { j =>
-        assert(counts.getInt(j) == splitToks.count(_ == terms(j).toString),
+        assert(counts.getInt(j) == splitToks.count(_ == terms(j)),
           s"term ${terms(j)} in doc='$doc'")
       }
     }

@@ -69,6 +69,27 @@ class SyntaxSpec extends AnyFunSuite {
     assert(r.getString(5) == "en")
   }
 
+  test("SQL shape arguments past Int.MaxValue are rejected, not wrapped") {
+    GraftExtensions.register(spark)
+    val e = intercept[Exception](
+      spark.sql("SELECT graft_minhash(array(1L, 2L, 3L), 5000000000) AS mh").collect())
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+      c.getMessage.contains("graft_minhash") && c.getMessage.contains("5000000000")), chain)
+  }
+
+  test("non-positive SQL shape arguments are rejected") {
+    GraftExtensions.register(spark)
+    for (sql <- Seq("graft_minhash(array(1L, 2L, 3L), -1)", "graft_minhash(array(1L), 0)",
+        "graft_char_grams('abcd', 0)")) {
+      val e = intercept[Exception](spark.sql(s"SELECT $sql AS r").collect())
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      val name = sql.takeWhile(_ != '(')
+      assert(chain.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+        c.getMessage.contains(name) && c.getMessage.contains("[1, 2147483647]")), s"$sql: $chain")
+    }
+  }
+
   test("withExtensions builder path registers functions") {
     // verify the SparkSessionExtensions wiring compiles & applies: use a
     // fresh session with the extension class name conf

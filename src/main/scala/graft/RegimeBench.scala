@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
   *    outputs compared for exact equality (GraphsSpec proves the
   *    semantics; this proves the COST and re-proves identity at SF).
   *  - IVF: nCells 16 (the s3 bench twin) vs 256 vs 1024 — the
-  *    centroid model state and codegen'd argmin grow 64×, probe
-  *    fan-out held at nProbe/nCells = 1/4.
+  *    centroid model state the assignment kernel scans grows 64×, and
+  *    so does the literal query-probe ranking; probe fan-out held at
+  *    nProbe/nCells = 1/4.
   *  - k-means: k 8 (e3 twin) vs 256 at 3 Lloyd iterations — driver
   *    model state and the per-iteration k-row shuffle grow 32×.
   *
@@ -69,29 +70,12 @@ object RegimeBench {
     val emb = Tables.t(spark, sfDir, "embeddings")
     val queries = emb.filter(col("vec_id") < 5)
     for (nc <- Seq(16, 256, 1024)) {
-      // force the LITERAL assignment at every size (the codegen-cost
-      // curve)...
-      results(s"ivf_cells_${nc}_literal") = timeMin2(() =>
+      results(s"ivf_cells_$nc") = timeMin2(() =>
         settle(graft.operators.Similarity.ivfTopK(
-          emb, queries, k = 10, nCells = nc, nProbe = math.max(4, nc / 4),
-          literalAssignCells = Int.MaxValue)))
-      // ...and the broadcast-TABLE assignment (the >256-cell regime)
-      results(s"ivf_cells_${nc}_table") = timeMin2(() =>
-        settle(graft.operators.Similarity.ivfTopK(
-          emb, queries, k = 10, nCells = nc, nProbe = math.max(4, nc / 4),
-          literalAssignCells = 0)))
+          emb, queries, k = 10, nCells = nc, nProbe = math.max(4, nc / 4))))
     }
     checks("ivf_1024_rows") = graft.operators.Similarity.ivfTopK(
       emb, queries, k = 10, nCells = 1024, nProbe = 256).count() == 50L
-    checks("ivf_1024_regimes_identical") = {
-      val a = graft.operators.Similarity.ivfTopK(emb, queries, k = 10,
-        nCells = 1024, nProbe = 256, literalAssignCells = Int.MaxValue)
-        .collect().toSeq
-      val b = graft.operators.Similarity.ivfTopK(emb, queries, k = 10,
-        nCells = 1024, nProbe = 256, literalAssignCells = 0)
-        .collect().toSeq
-      a == b
-    }
 
     // ---- k-means large k -------------------------------------------------
     for (k <- Seq(8, 256)) {

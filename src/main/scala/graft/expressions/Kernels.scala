@@ -1,7 +1,7 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.objects.{Invoke, StaticInvoke}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
@@ -208,4 +208,39 @@ object Kernels {
     * ([[KmvSketch.intersectEstimate]]). */
   def thetaIntersect(a: Column, b: Column): Column =
     call(KmvSketch, "intersectEstimate", DoubleType)(a, b)
+
+  // ---- inlined array loops ---------------------------------------------
+
+  private def loop(e: Expression): Column = ColumnBridge.column(e)
+  private def arg(c: Column): Expression = ColumnBridge.expression(c)
+
+  /** |a ∩ b| of two sorted distinct array<bigint> ([[SortedLongArrayIntersectCount]]). */
+  def sortedIntersectCount(a: Column, b: Column): Column =
+    loop(SortedLongArrayIntersectCount(arg(a), arg(b)))
+
+  /** v[i]·v[j] for i ≤ j, row-major, of an array<double> ([[UpperTriOuterProduct]]). */
+  def upperTriOuter(v: Column): Column = loop(UpperTriOuterProduct(arg(v)))
+
+  /** `array(d, cid)` of the centroid nearest to an array<double> `v` by
+    * the euclidean rank d = ip(c, c) − 2·ip(v, c)
+    * ([[NearestCentroidEuclid]]), over `cents` = (cid, centroid) pairs.
+    * ip(c, c) is [[graft.operators.VectorOps.selfDot]], summed once
+    * here. Ties go to the smaller cid, so the result equals
+    * `array_min(array(struct(d, cid) …))` over the same centroids; a
+    * null `v` gives null. One difference: a row whose every rank is NaN
+    * gives (+∞, Long.MaxValue), where that struct-min gives the
+    * smallest cid. */
+  def nearestCentroid(v: Column, cents: Array[(Long, Array[Double])]): Column =
+    loop(NearestCentroidEuclid(arg(v), cents.map(_._2), cents.map(_._1),
+      cents.map(c => graft.operators.VectorOps.selfDot(c._2))))
+
+  /** `array(−cos, cid)` of the centroid nearest to `v` by cosine
+    * ([[NearestCentroidCosine]]): d = −ip(v, c)/(nv·‖c‖), 0.0 when that
+    * norm product is 0; `nv` is the row's precomputed norm column, ‖c‖
+    * = √[[graft.operators.VectorOps.selfDot]] summed once here. Ties,
+    * nulls and all-NaN rows as in [[nearestCentroid]]. */
+  def nearestCentroidCosine(v: Column, nv: Column,
+      cents: Array[(Long, Array[Double])]): Column =
+    loop(NearestCentroidCosine(arg(v), arg(nv), cents.map(_._2), cents.map(_._1),
+      cents.map(c => math.sqrt(graft.operators.VectorOps.selfDot(c._2)))))
 }

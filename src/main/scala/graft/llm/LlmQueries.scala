@@ -927,12 +927,8 @@ object LlmQueries {
         conv(substring(md5(concat(lit("g|"), col("sg"))), 1, 15), 16, 10)
           .cast("long").as("h1"))
       .groupBy("id").agg(array_sort(collect_set(col("h1"))).as("hv")))
-    val commonN = {
-      import org.apache.spark.sql.graft.ColumnBridge
-      ColumnBridge.column(graft.expressions.SortedLongArrayIntersectCount(
-        ColumnBridge.expression(col("a.hv")),
-        ColumnBridge.expression(col("b.hv")))).cast("double")
-    }
+    val commonN = graft.expressions.Kernels.sortedIntersectCount(col("a.hv"), col("b.hv"))
+      .cast("double")
     val truth = st.cache(hashed.as("a").join(hashed.as("b"),
         col("a.id") < col("b.id") &&
           size(col("a.hv")) * 2 >= size(col("b.hv")) &&

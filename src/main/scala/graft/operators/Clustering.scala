@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.Settle
+import graft.expressions.Kernels
 
 /** Distributed k-means (Lloyd) over an embedding column — the actual
   * coarse quantizer behind SemDeDup / IVF at web scale (the md5-sample
@@ -12,8 +13,8 @@ import graft.Settle
   * sampling) of a training-data pipeline.
   *
   * Determinism (the property that makes an exact oracle possible):
-  *  - init = the md5-order sample idiom (k corpus vectors, cid 0..k-1
-  *    in md5 order) — no RNG, layout-independent;
+  *  - init = the md5-order sample ([[Similarity.md5Sample]]: k corpus
+  *    vectors, cid 0..k-1 in md5 order) — no RNG, layout-independent;
   *  - assignment ranks by relative squared euclidean distance
   *    ip(c,c) − 2·ip(v,c) with ties broken toward the smaller cid;
   *  - each update re-syncs: per-dim means are rounded to 6 decimals
@@ -21,9 +22,12 @@ import graft.Settle
   *    wobble never leaks into the next iteration's comparisons;
   *  - an emptied cell keeps its previous centroid.
   *
-  * Scale shape: centroids are plan literals (k·dim doubles — model
-  * state, not data), so each assignment is a MAP-ONLY pass over the
-  * corpus; each update is one mergeable [[VectorOps.meanPool]]
+  * Scale shape: centroids (k·dim doubles — model state, not data) ride
+  * into the nearest-centroid kernel
+  * ([[graft.expressions.Kernels.nearestCentroid]]) as codegen reference
+  * objects, so each assignment is a MAP-ONLY pass over the corpus whose
+  * generated code — and its Janino compile — is shared across all
+  * iterations; each update is one mergeable [[VectorOps.meanPool]]
   * aggregate shuffling only k partial sums per partition. Per
   * iteration: one map pass + one k-row shuffle — textbook scalable
   * Lloyd. The driver collects k·dim doubles per iteration (model
@@ -31,19 +35,9 @@ import graft.Settle
   * documented scale-up swap for the deterministic sample init. */
 object Clustering {
 
-  // rank column for the current centroids: fused argmin over
-  // (d, cid) — d = ip(c,c) − 2·ip(v,c), ipcc summed driver-side
-  // left-to-right (same IEEE sequence as the oracle's
-  // list_inner_product). Centroids are codegen REFERENCE objects
-  // (expressions.NearestCentroidEuclid), so the generated source —
-  // and its Janino compile — is shared across all iterations.
-  private def ranked(cs: Array[(Int, Array[Double])]): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    val ipccs = cs.map { case (_, cv) => VectorOps.selfDot(cv) }
-    ColumnBridge.column(graft.expressions.NearestCentroidEuclid(
-      ColumnBridge.expression(col("v")),
-      cs.map(_._2), cs.map(_._1.toLong), ipccs))
-  }
+  // (d, cid) of the nearest current centroid: d = ip(c,c) − 2·ip(v,c)
+  private def ranked(cs: Array[(Int, Array[Double])]): Column =
+    Kernels.nearestCentroid(col("v"), cs.map { case (cid, cv) => (cid.toLong, cv) })
 
   /** The Lloyd fit over a pre-cast (id, v) frame — the model-state
     * producer shared by [[kmeansAssign]] and [[silhouetteSimplified]].
@@ -59,10 +53,7 @@ object Clustering {
     // stability read uses to get two comparable fits ("" preserves the
     // historical order byte-for-byte: md5('' || id) == md5(id))
     var cents: Array[(Int, Array[Double])] =
-      v.orderBy(md5(concat(lit(initSalt), col("id").cast("string"))),
-          col("id"))
-        .limit(k).collect()
-        .zipWithIndex.map { case (r, i) => (i, r.getSeq[Double](1).toArray) }
+      Similarity.md5Sample(v, k, initSalt).zipWithIndex.map { case ((_, cv), i) => (i, cv) }
     for (_ <- 1 to iters) {
       val means = v.withColumn("cell",
           element_at(ranked(cents), 2).cast("int"))
@@ -155,7 +146,7 @@ object Clustering {
     * nearest to it.
     *
     * Scale shape: each of the k steps is ONE map-only pass (the shared
-    * [[graft.expressions.NearestCentroidEuclid]] literal-centroid
+    * [[graft.expressions.Kernels.nearestCentroid]] reference-object
     * kernel — same Janino compile across steps) + a
     * TakeOrderedAndProject(1) — no shuffle of vectors, no pairwise
     * materialization; driver state = k centers (model state, the

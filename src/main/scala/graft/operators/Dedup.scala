@@ -171,12 +171,8 @@ object Dedup {
     st.settle(cand
       .join(sets.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
       .join(sets.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-      .withColumn("common", {
-        import org.apache.spark.sql.graft.ColumnBridge
-        ColumnBridge.column(graft.expressions.SortedLongArrayIntersectCount(
-          ColumnBridge.expression(col("sh_a")),
-          ColumnBridge.expression(col("sh_b")))).cast("double")
-      })
+      .withColumn("common",
+        Kernels.sortedIntersectCount(col("sh_a"), col("sh_b")).cast("double"))
       .withColumn("jaccard",
         col("common") / (size(col("sh_a")) + size(col("sh_b")) - col("common")))
       .filter(col("jaccard") >= threshold)
@@ -238,12 +234,8 @@ object Dedup {
     val verified = cand
       .join(batchSets, Seq("id"))
       .join(poolSets, Seq("pid"))
-      .withColumn("common", {
-        import org.apache.spark.sql.graft.ColumnBridge
-        ColumnBridge.column(graft.expressions.SortedLongArrayIntersectCount(
-          ColumnBridge.expression(col("sh")),
-          ColumnBridge.expression(col("psh")))).cast("double")
-      })
+      .withColumn("common",
+        Kernels.sortedIntersectCount(col("sh"), col("psh")).cast("double"))
       .withColumn("jaccard",
         col("common") / (size(col("sh")) + size(col("psh")) - col("common")))
       .filter(col("jaccard") >= threshold)
@@ -314,12 +306,8 @@ object Dedup {
     val verified = cand
       .join(batchIdx.select(col("id"), col("sh")), Seq("id"))
       .join(poolIdx.select(col("id").as("pid"), col("sh").as("psh")), Seq("pid"))
-      .withColumn("common", {
-        import org.apache.spark.sql.graft.ColumnBridge
-        ColumnBridge.column(graft.expressions.SortedLongArrayIntersectCount(
-          ColumnBridge.expression(col("sh")),
-          ColumnBridge.expression(col("psh")))).cast("double")
-      })
+      .withColumn("common",
+        Kernels.sortedIntersectCount(col("sh"), col("psh")).cast("double"))
       .withColumn("jaccard",
         col("common") / (size(col("sh")) + size(col("psh")) - col("common")))
       .filter(col("jaccard") >= threshold)
@@ -344,9 +332,12 @@ object Dedup {
     * argmax cosine(v, centroid) (ties → smallest centroid id), so
     * assignment is scale-invariant like the comparison it gates — a
     * scaled re-encode of a vector provably shares its original's cell.
-    * Centroids are plan literals, assignment a map-side argmax — no
+    * Centroids ride into the cosine nearest-centroid kernel as codegen
+    * reference objects and assignment is a map-side argmax — no
     * training fit, and the whole index replays in plain SQL for the
-    * oracle. Verdict rows mirror
+    * oracle. The index and its within-cell pairs are
+    * [[Similarity.sphericalCellPairs]], shared with the kNN graph.
+    * Verdict rows mirror
     * [[incrementalDedup]]: (id, cell, is_dup, dup_of, cos) with
     * smallest-matching-id determinism; the cosine comparison is
     * bit-exact on both engines, so ANY threshold is boundary-safe.
@@ -358,43 +349,10 @@ object Dedup {
     * cells stay bounded (the paper uses ~100k cells at web scale). */
   def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
       nCells: Int = 16, threshold: Double = 0.95): DataFrame = Settle.scope("semanticDedup") { st =>
-    val c = df.select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<double>").as("v"))
-      .withColumn("nv", VectorOps.norm(col("v")))
-    val centroids: Array[(Long, Array[Double])] =
-      c.select(col("id"), col("v"))
-        .orderBy(md5(col("id").cast("string")), col("id"))
-        .limit(nCells).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    // spherical rank: -cos(v, c) ASC (centroid norms folded in driver-
-    // side with the same left-to-right sum as ArrayDotProduct; the
-    // division order matches the oracle SQL exactly). Fused argmin
-    // expression (expressions.NearestCentroidCosine): centroids ride
-    // as codegen reference objects, not k·dim plan literals.
-    val cellOf: Column = {
-      import org.apache.spark.sql.graft.ColumnBridge
-      val ncs = centroids.map { case (_, cv) => math.sqrt(VectorOps.selfDot(cv)) }
-      element_at(ColumnBridge.column(graft.expressions.NearestCentroidCosine(
-        ColumnBridge.expression(col("v")),
-        ColumnBridge.expression(col("nv")),
-        centroids.map(_._2), centroids.map(_._1), ncs)), 2).cast("long")
-    }
-    // persisted: three consumers (both self-join sides + the verdict
-    // join) would otherwise each recompute the scan+assign stage —
-    // measured ~40% slower uncached at sf0.1; the lazy result reads it.
-    // At cluster scale swap MEMORY_AND_DISK or drop it (one map pass).
-    val assign = st.cache(c.withColumn("cell", cellOf))
-    val lhs = assign.select(col("cell"), col("id").as("id_a"),
-      col("v").as("va"), col("nv").as("na"))
-    val rhs = assign.select(col("cell"), col("id").as("id_b"),
-      col("v").as("vb"), col("nv").as("nb"))
-    val hits = lhs.join(rhs, Seq("cell"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_b"), col("id_a"),
-        when(col("na") * col("nb") === 0.0, 0.0)
-          .otherwise(VectorOps.dot(col("va"), col("vb")) /
-            (col("na") * col("nb"))).as("cos"))
-      .filter(col("cos") >= threshold)
+    // `assign` is cached: both self-join sides and the verdict join
+    // read it (measured ~40% slower uncached at sf0.1)
+    val (assign, pairs) = Similarity.sphericalCellPairs(st, df, idCol, vecCol, nCells)
+    val hits = pairs.filter(col("cos") >= threshold)
     val best = hits.groupBy("id_b")
       .agg(min(struct(col("id_a"), col("cos"))).as("m"))
       .select(col("id_b").as("id"),
@@ -689,9 +647,7 @@ object Dedup {
     // single dot + one division.
     val v = df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
       .withColumn("nv", VectorOps.norm(col("v")))
-    val nn = col("a.nv") * col("b.nv")
-    val cosExpr = when(nn === 0.0, 0.0)
-      .otherwise(VectorOps.dot(col("a.v"), col("b.v")) / nn)
+    val cosExpr = Similarity.cosOf("a.v", "b.v", "a.nv", "b.nv")
     if (bands <= 0) {
       val cached = st.cache(v)
       cached.as("a").join(cached.as("b"), col("a.id") < col("b.id"))
@@ -712,10 +668,7 @@ object Dedup {
       cand
         .join(side.toDF("id_a", "va", "nva"), "id_a")
         .join(side.toDF("id_b", "vb", "nvb"), "id_b")
-        .select(col("id_a"), col("id_b"),
-          when(col("nva") * col("nvb") === 0.0, 0.0)
-            .otherwise(VectorOps.dot(col("va"), col("vb")) /
-              (col("nva") * col("nvb"))).as("cos"))
+        .select(col("id_a"), col("id_b"), Similarity.cosOf("va", "vb", "nva", "nvb").as("cos"))
         .filter(col("cos") >= threshold)
     }
   }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.expressions.Kernels
+
 /** Embedding-corpus quality analytics: the vector-side counterpart of
   * the text quality signals (x1–x8) — flag vectors that don't belong to
   * their own cluster/label, the standard mislabeled-or-garbage filter a
@@ -154,31 +156,37 @@ object EmbedStats {
     * PCA prep, redundant-dimension detection): cov(i, j) =
     * E[x_i·x_j] − E[x_i]·E[x_j] for every pair i ≤ j, long-form.
     *
-    * ONE aggregation pass: each row contributes its upper-triangular
-    * outer product (fused native expression — a Column formulation
-    * would be n(n+1)/2 separate plan nodes) and the raw vector, both
-    * through the mergeable [[VectorOps.meanPool]]; the single moment
-    * row then explodes against a broadcast (pos → i, j) map. Nothing
-    * corpus-sized ever shuffles — only k-partial sums per partition. */
-  def dimCovariance(df: DataFrame, vecCol: String, dim: Int): DataFrame = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    val spark = df.sparkSession
-    import spark.implicits._
-    val v = df.select(col(vecCol).cast("array<double>").as("v"))
-    val tri = ColumnBridge.column(graft.expressions.UpperTriOuterProduct(
-      ColumnBridge.expression(col("v"))))
-    val m = v.agg(VectorOps.meanPool(col("v")).as("mu"),
-      VectorOps.meanPool(tri).as("m2"))
-    val pairs = (for (i <- 0 until dim; j <- i until dim) yield (i, j))
-      .zipWithIndex.map { case ((i, j), k) => (k, i, j) }
-      .toDF("pos", "dim_i", "dim_j")
-    m.select(col("mu"), posexplode(col("m2")).as(Seq("pos", "exy")))
-      .join(broadcast(pairs), Seq("pos"))
+    * ONE aggregation pass ([[pairMoments]]): each row contributes its
+    * upper-triangular outer product (fused native loop — a Column
+    * formulation would be n(n+1)/2 separate plan nodes) and the raw
+    * vector. Nothing corpus-sized ever shuffles — only k-partial sums
+    * per partition. */
+  def dimCovariance(df: DataFrame, vecCol: String, dim: Int): DataFrame =
+    pairMoments(df, vecCol, dim)
       .select(col("dim_i"), col("dim_j"),
         // + 0.0 folds IEEE −0.0 to +0.0 (string-compared oracles)
         (round(col("exy") -
           element_at(col("mu"), col("dim_i") + 1) *
           element_at(col("mu"), col("dim_j") + 1), 6) + 0.0).as("cov"))
+
+  /** The moment rows [[dimCovariance]] and [[dimCorrelation]] read: one
+    * row per dimension pair i ≤ j with `dim_i`, `dim_j`, `mu` = E[x],
+    * `m2` = the upper-triangular E[x_i·x_j] array (row-major) and `exy`
+    * = its entry for (dim_i, dim_j). One aggregation pass — the raw
+    * vector and its [[graft.expressions.Kernels.upperTriOuter]] product
+    * through the mergeable [[VectorOps.meanPool]] — then the single
+    * moment row explodes against a broadcast (pos → i, j) map. */
+  private def pairMoments(df: DataFrame, vecCol: String, dim: Int): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val m = df.select(col(vecCol).cast("array<double>").as("v"))
+      .agg(VectorOps.meanPool(col("v")).as("mu"),
+        VectorOps.meanPool(Kernels.upperTriOuter(col("v"))).as("m2"))
+    val pairs = (for (i <- 0 until dim; j <- i until dim) yield (i, j))
+      .zipWithIndex.map { case ((i, j), k) => (k, i, j) }
+      .toDF("pos", "dim_i", "dim_j")
+    m.select(col("mu"), col("m2"), posexplode(col("m2")).as(Seq("pos", "exy")))
+      .join(broadcast(pairs), Seq("pos"))
   }
 
   /** Effective rank of the embedding space — the participation ratio
@@ -237,17 +245,6 @@ object EmbedStats {
     * run the identical IEEE sequence in the oracle, washed by the
     * 6-dp round. */
   def dimCorrelation(df: DataFrame, vecCol: String, dim: Int): DataFrame = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    val spark = df.sparkSession
-    import spark.implicits._
-    val v = df.select(col(vecCol).cast("array<double>").as("v"))
-    val tri = ColumnBridge.column(graft.expressions.UpperTriOuterProduct(
-      ColumnBridge.expression(col("v"))))
-    val m = v.agg(VectorOps.meanPool(col("v")).as("mu"),
-      VectorOps.meanPool(tri).as("m2"))
-    val pairs = (for (i <- 0 until dim; j <- i until dim) yield (i, j))
-      .zipWithIndex.map { case ((i, j), k) => (k, i, j) }
-      .toDF("pos", "dim_i", "dim_j")
     def mean(i: Column): Column = element_at(col("mu"), i + 1)
     // diagonal moment E[x_i²] at pos(i,i) = i·dim − i(i−1)/2 (0-based);
     // Column `/` is double division, but i(i−1) is even so it is exact
@@ -255,8 +252,7 @@ object EmbedStats {
     def diag(i: Column): Column = element_at(col("m2"),
       (i * dim - (i * (i - 1)) / 2 + 1).cast("int"))
     def variance(i: Column): Column = diag(i) - mean(i) * mean(i)
-    m.select(col("mu"), col("m2"), posexplode(col("m2")).as(Seq("pos", "exy")))
-      .join(broadcast(pairs), Seq("pos"))
+    pairMoments(df, vecCol, dim)
       .select(col("dim_i"), col("dim_j"),
         (round(when(variance(col("dim_i")) * variance(col("dim_j")) <= 0.0,
             lit(null).cast("double"))

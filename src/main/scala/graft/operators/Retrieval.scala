@@ -75,7 +75,9 @@ object Retrieval {
     * rows — driver-free, and trivially tiny however large the corpus
     * the rankings were cut from. The two reciprocal terms add in a
     * PINNED order (lex + vec, no aggregate), so the score is
-    * bit-reproducible on any engine. */
+    * bit-reproducible on any engine. The rank window has no
+    * `partitionBy`: it sorts the fused list in one task, at most
+    * |lex| + |vec| rows — the two cuts, never the corpus. */
   def rrfFuse(lex: DataFrame, vec: DataFrame, kRrf: Int,
       topK: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -144,9 +146,10 @@ object Retrieval {
     * nDCG is one pinned int64→double division.
     *
     * Scale shape: both top-k cuts are TakeOrdered (no global sort);
-    * the rank/cumulative windows run over the two ≤k-row cut results —
-    * bounded by construction (globalWindowOk-documented), and the
-    * curves join on the ≤k rank key. */
+    * the rank/cumulative windows have no `partitionBy` and run in one
+    * task over the two ≤k-row cut results — bounded by construction
+    * (globalWindowOk-documented), and the curves join on the ≤k rank
+    * key. */
   def ndcgCurve(pool: DataFrame, relCol: String, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.DecimalType

@@ -24,7 +24,9 @@ object RunLength {
     * `orderCol` must be DENSE consecutive integers — that requirement is
     * what makes this scale: island identity within a block is
     * `k - row_number` over (block, value), bounded per task by
-    * `blockSize` regardless of the value distribution. */
+    * `blockSize` regardless of the value distribution. The cross-block
+    * merge window has no `partitionBy`: it sorts the edge runs in one
+    * task, at most 2 per block — 2·⌈keyspan/blockSize⌉ rows. */
   def encode(df: DataFrame, orderCol: String, valueCol: String,
       blockSize: Long = 1L << 20): DataFrame = {
     val minK = df.agg(min(col(orderCol)).cast("long")).head().getLong(0)

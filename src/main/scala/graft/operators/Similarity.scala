@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.Settle
-import graft.expressions.TopKAgg
+import graft.expressions.{Kernels, TopKAgg}
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -30,10 +30,55 @@ object Similarity {
   def normalizedCorpus(corpus: DataFrame): DataFrame =
     withNorm(corpus, "id", "v", "nv")
 
-  private def cosOf(av: String, bv: String, an: String, bn: String) = {
+  /** Cosine of two vector columns from their precomputed norms; 0.0
+    * when either norm is 0. */
+  private[operators] def cosOf(av: String, bv: String, an: String, bn: String): Column = {
     val nn = col(an) * col(bn)
     when(nn === 0.0, 0.0)
       .otherwise(VectorOps.dot(col(av), col(bv)) / nn)
+  }
+
+  /** The first `n` rows of an `(id, v)` frame in md5(salt || id) order
+    * (ties by id), collected as (id, v): the deterministic sample every
+    * sampled quantizer draws from — IVF and spherical centroids, PQ
+    * codebooks, graph-ANN entry points and the k-means init. No RNG and
+    * independent of layout, so an oracle replays it as
+    * `ORDER BY md5(id), id LIMIT n`. A nonempty `salt` gives an
+    * independent sample; "" is the plain order, md5('' || id) == md5(id). */
+  private[operators] def md5Sample(df: DataFrame, n: Int,
+      salt: String = ""): Array[(Long, Array[Double])] =
+    df.select(col("id").cast("long").as("id"), col("v"))
+      .orderBy(md5(concat(lit(salt), col("id").cast("string"))), col("id"))
+      .limit(n).collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+
+  /** The spherical sample-quantizer cell join shared by [[directedTopK]]
+    * and [[Dedup.semanticDedup]]. `df`'s vectors become `(id, v, nv,
+    * cell)` rows, cell = the most cosine-similar of the `nCells`
+    * [[md5Sample]] centroids ([[graft.expressions.Kernels.nearestCentroidCosine]];
+    * ties to the smaller centroid id, a null vector gets a null cell),
+    * cached in `st` — returned as `assign`. `pairs` holds every
+    * within-cell pair `id_a < id_b` with its [[cosOf]] `cos`, each
+    * unordered pair once.
+    *
+    * Scale shape: assignment is a map-only projection (centroids ride
+    * as codegen reference objects); the pairs are one equi-join on the
+    * cell (AQE-splittable if a cell runs hot), quadratic only within
+    * cells — SemDeDup's O(Σ|cell|²) cost model. */
+  private[operators] def sphericalCellPairs(st: Settle.Scope, df: DataFrame,
+      idCol: String, vecCol: String, nCells: Int): (DataFrame, DataFrame) = {
+    val c = df.select(col(idCol).cast("long").as("id"),
+        col(vecCol).cast("array<double>").as("v"))
+      .withColumn("nv", VectorOps.norm(col("v")))
+    val cents = md5Sample(c, nCells)
+    val assign = st.cache(c.withColumn("cell", element_at(
+      Kernels.nearestCentroidCosine(col("v"), col("nv"), cents), 2).cast("long")))
+    def side(s: String): DataFrame = assign.select(col("cell"),
+      col("id").as(s"id_$s"), col("v").as(s"v$s"), col("nv").as(s"n$s"))
+    val pairs = side("a").join(side("b"), Seq("cell"))
+      .filter(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"), cosOf("va", "vb", "na", "nb").as("cos"))
+    (assign, pairs)
   }
 
   /** Per-query top-k of `(qid, id, cos)` rows via the mergeable
@@ -75,103 +120,48 @@ object Similarity {
     *
     * Quantizers:
     *  - `"sample"` (default): centroids = the `nCells` corpus vectors
-    *    with the smallest `md5(id)` — deterministic hash sampling (the
-    *    q31 idiom). No training fit at all: centroid selection is a
-    *    TakeOrdered scan, assignment is a map-side argmin over literal
-    *    centroids, and the whole index build is reproducible in plain
-    *    SQL (which is what lets the DuckDB oracle hash-verify s3).
+    *    with the smallest `md5(id)` ([[md5Sample]]) — deterministic hash
+    *    sampling (the q31 idiom). No training fit at all: centroid
+    *    selection is a TakeOrdered scan, assignment is a map-side
+    *    argmin through the reference-object kernel
+    *    [[graft.expressions.Kernels.nearestCentroid]], and the whole
+    *    index build is reproducible in plain SQL (which is what lets the
+    *    DuckDB oracle hash-verify s3).
     *  - `"kmeans"`: seeded MLlib K-means fit — tighter cells (better
     *    recall per probe) at the cost of an iterative training job;
     *    the right trade when the index is built once and reused. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       nCells: Int = 16, nProbe: Int = 4,
-      quantizer: String = "sample",
-      literalAssignCells: Int = 256): DataFrame = quantizer match {
+      quantizer: String = "sample"): DataFrame = quantizer match {
     case "sample" =>
-      ivfTopKSampled(corpus, queries, k, nCells, nProbe, literalAssignCells)
+      val (centroids, cells) = ivfSampledIndex(corpus, nCells)
+      ivfTopKIndexed(centroids, cells, queries, k, nProbe)
     case "kmeans" => ivfTopKKMeans(corpus, queries, k, nCells, nProbe)
     case other => throw new IllegalArgumentException(
       s"ivfTopK quantizer must be 'sample' or 'kmeans', got '$other'")
   }
 
-  /** Deterministic-sampled-centroid IVF (see [[ivfTopK]]).
+  /** The sampled-centroid IVF INDEX of [[ivfTopK]] — the centroid list
+    * plus the cell-assigned normalized corpus — exposed so a sweep
+    * caller (e10) builds ONE index (settling the assigned corpus) and
+    * searches it per arm via [[ivfTopKIndexed]], instead of
+    * re-collecting centroids and re-assigning cells once per arm.
     *
-    * Scale shape: centroid pick is one TakeOrdered over the corpus
-    * (O(n) scan, nCells-sized heaps); the 16×64 doubles collect to the
-    * driver (same footprint as KMeans `clusterCenters`) and return as
-    * LITERAL expressions, so cell assignment and probe selection are
-    * pure map-side projections — zero extra shuffles beyond topK's
-    * one aggregate exchange. */
-  private def ivfTopKSampled(corpus: DataFrame, queries: DataFrame,
-      k: Int, nCells: Int, nProbe: Int,
-      literalAssignCells: Int = 256): DataFrame = {
-    val (centroids, cells) =
-      ivfSampledIndex(corpus, nCells, literalAssignCells)
-    ivfTopKIndexed(centroids, cells, queries, k, nProbe)
-  }
-
-  /** The sampled-centroid IVF INDEX of [[ivfTopK]] — the literal
-    * centroid list plus the cell-assigned normalized corpus — exposed
-    * so a sweep caller (e10) builds ONE index (settling the assigned
-    * corpus) and searches it per arm via [[ivfTopKIndexed]], instead of
-    * re-collecting centroids and re-assigning cells once per arm. */
-  def ivfSampledIndex(corpus: DataFrame, nCells: Int,
-      literalAssignCells: Int = 256): (Array[(Long, Array[Double])], DataFrame) = {
+    * Scale shape: the centroid pick is one TakeOrdered over the corpus
+    * (O(n) scan, nCells-sized heaps); the nCells×dim doubles collect to
+    * the driver (KMeans `clusterCenters`' footprint) and ride into the
+    * assignment kernel as codegen reference objects, so the generated
+    * code is the same for every centroid set and the assignment is a
+    * map-only projection at any nCells. `cell` = argmin over centroids
+    * of ip(c,c) − 2·ip(v,c) (euclidean without the row-constant
+    * ip(v,v)), ties to the smaller centroid id; a null vector gets a
+    * null cell. */
+  def ivfSampledIndex(corpus: DataFrame,
+      nCells: Int): (Array[(Long, Array[Double])], DataFrame) = {
     val c = withNorm(corpus, "id", "v", "nv")
-    val centroids: Array[(Long, Array[Double])] =
-      c.select(col("id").cast("long"), col("v"))
-        .orderBy(md5(col("id").cast("string")), col("id"))
-        .limit(nCells).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    // relative distance to centroid j: ip(c_j,c_j) - 2·ip(v,c_j) —
-    // euclidean argmin without the ip(v,v) term (constant across j).
-    // ip(c_j,c_j) is summed left-to-right in Scala, matching
-    // ArrayDotProduct's order, so both factors reproduce in the oracle.
-    def cellRank(v: Column): Column = array(centroids.map { case (cid, cv) =>
-      var ipcc = 0.0
-      var i = 0
-      while (i < cv.length) { ipcc += cv(i) * cv(i); i += 1 }
-      struct(
-        (lit(ipcc) - VectorOps.dot(v, array(cv.map(lit(_)): _*)) * 2.0).as("d"),
-        lit(cid).as("cid"))
-    }: _*)
-    // struct ordering is lexicographic (d asc, cid asc) — ties go to
-    // the smaller centroid id, deterministically.
-    //
-    // Corpus assignment has two regimes sharing ONE arithmetic: the
-    // literal path embeds the centroids in generated code (zero extra
-    // shuffles, SQL-replayable — right for the reference's 16 cells),
-    // but its per-row cost is nCells × dim in the generated argmin,
-    // which RegimeBench measured dominant at 1024 cells. Above
-    // `literalAssignCells` the centroids become a broadcast TABLE:
-    // one broadcast nested-loop fan-out (corpus × nCells rows), a
-    // map-side-combined min(struct(d, cid)) per id, and an id-keyed
-    // join back — two extra shuffles, but assignment arithmetic runs
-    // on COLUMNS (same ArrayDotProduct, same ipcc computed driver-side
-    // in the same IEEE order, same lexicographic struct min), so the
-    // two regimes are bit-identical (QuantIvfSpec forces both and
-    // compares). Query-probe ranking always stays literal — the query
-    // side is small by contract.
-    def assignTable(): DataFrame = {
-      val spark = c.sparkSession
-      val cents = spark.createDataFrame(
-        centroids.toSeq.map { case (cid, cv) =>
-          (cid, cv.toSeq, VectorOps.selfDot(cv)) })
-        .toDF("cid", "cv", "ipcc")
-      val asg = c.select(col("id"), col("v"))
-        .join(broadcast(cents))
-        .select(col("id"), struct(
-          (col("ipcc") - VectorOps.dot(col("v"), col("cv")) * 2.0).as("d"),
-          col("cid").as("cid")).as("s"))
-        .groupBy("id").agg(min(col("s")).as("m"))
-        .select(col("id"), col("m.cid").as("cell"))
-      c.join(asg, Seq("id"))
-    }
-    val cells =
-      if (centroids.length <= literalAssignCells)
-        c.withColumn("cell", array_min(cellRank(col("v"))).getField("cid"))
-      else assignTable()
-    (centroids, cells)
+    val centroids = md5Sample(c, nCells)
+    (centroids, c.withColumn("cell",
+      element_at(Kernels.nearestCentroid(col("v"), centroids), 2).cast("long")))
   }
 
   /** Search a prebuilt [[ivfSampledIndex]]: query-probe ranking over
@@ -179,15 +169,14 @@ object Similarity {
   def ivfTopKIndexed(centroids: Array[(Long, Array[Double])],
       cells: DataFrame, queries: DataFrame, k: Int,
       nProbe: Int): DataFrame = {
-    // the same ip(c,c) − 2·ip(v,c) ranking as the index build (see
-    // ivfSampledIndex — left-to-right ipcc, lexicographic tie to the
-    // smaller centroid id)
+    // the same ip(c,c) − 2·ip(v,c) ranking as the index build, kept
+    // as literals: the probe needs the nProbe nearest cells, not the
+    // argmin, and the query side is small. Sorting struct(d, cid) ties
+    // to the smaller centroid id.
     def cellRank(v: Column): Column = array(centroids.map { case (cid, cv) =>
-      var ipcc = 0.0
-      var i = 0
-      while (i < cv.length) { ipcc += cv(i) * cv(i); i += 1 }
       struct(
-        (lit(ipcc) - VectorOps.dot(v, array(cv.map(lit(_)): _*)) * 2.0).as("d"),
+        (lit(VectorOps.selfDot(cv)) - VectorOps.dot(v, array(cv.map(lit(_)): _*)) * 2.0)
+          .as("d"),
         lit(cid).as("cid"))
     }: _*)
     val q = withNorm(queries, "qid", "qv", "nqv")
@@ -284,8 +273,9 @@ object Similarity {
     * s5). A production variant would swap in per-subspace k-means the
     * way ivfTopK offers `quantizer = "kmeans"`.
     *
-    * Scale shape: codebooks are m·ks·(dim/m) doubles — literals in the
-    * plan, no join; encoding is a map-side projection; ADC scoring is
+    * Scale shape: codebooks are m·ks·(dim/m) doubles — reference
+    * objects of the encoding kernel and literals of the per-query LUT,
+    * no join; encoding is a map-side projection; ADC scoring is
     * one scan of the compressed corpus against broadcast LUTs; both
     * top-k stages run on the mergeable bounded-heap [[TopKAgg]]
     * (window-free); the exact re-rank touches only rerank·k·|queries|
@@ -293,36 +283,23 @@ object Similarity {
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       m: Int = 8, ks: Int = 16, rerank: Int = 4): DataFrame = Settle.scope("pqTopK") { st =>
     val c = withNorm(corpus, "id", "v", "nv")
-    val sample: Array[Array[Double]] =
-      c.select(col("id").cast("long"), col("v"))
-        .orderBy(md5(col("id").cast("string")), col("id"))
-        .limit(ks).collect()
-        .map(_.getSeq[Double](1).toArray)
+    val sample = md5Sample(c, ks).map(_._2)
     require(sample.nonEmpty, "pqTopK: empty corpus")
     val dim = sample(0).length
     require(dim % m == 0, s"pqTopK: dim $dim not divisible by m=$m")
     val sub = dim / m
     // books(j)(c) = codeword c of subspace j; ipcc = its self inner
-    // product, summed left-to-right to match ArrayDotProduct (and
-    // DuckDB list_inner_product) exactly
+    // product (VectorOps.selfDot: ArrayDotProduct's and DuckDB
+    // list_inner_product's left-to-right order)
     val books: Array[Array[Array[Double]]] =
       Array.tabulate(m)(j => sample.map(_.slice(j * sub, (j + 1) * sub)))
-    val ipcc: Array[Array[Double]] = books.map(_.map { cw =>
-      var s = 0.0; var i = 0
-      while (i < cw.length) { s += cw(i) * cw(i); i += 1 }
-      s
-    })
+    val ipcc: Array[Array[Double]] = books.map(_.map(VectorOps.selfDot))
     def subv(v: Column, j: Int): Column = slice(v, j * sub + 1, sub)
     def cwLit(j: Int, cIdx: Int): Column = array(books(j)(cIdx).map(lit(_)): _*)
     // encode subspace j: argmin_c ipcc - 2·ip(x_j, cw) (euclidean sans
-    // the constant ip(x_j,x_j)); struct array_min ties to the smaller
-    // codeword index, deterministically
-    def codeOf(v: Column, j: Int): Column =
-      array_min(array(books(j).indices.map { cIdx =>
-        struct(
-          (lit(ipcc(j)(cIdx)) - VectorOps.dot(subv(v, j), cwLit(j, cIdx)) * 2.0).as("d"),
-          lit(cIdx).as("c"))
-      }: _*)).getField("c")
+    // the constant ip(x_j,x_j)), ties to the smaller codeword index
+    def codeOf(v: Column, j: Int): Column = element_at(Kernels.nearestCentroid(subv(v, j),
+      books(j).zipWithIndex.map { case (cw, cIdx) => (cIdx.toLong, cw) }), 2).cast("int")
     val encoded = st.cache(c
       .withColumn("codes", array((0 until m).map(j => codeOf(col("v"), j)): _*))
       // reconstruction norm² = Σ_j ip(cw_code, cw_code), j ascending
@@ -366,12 +343,12 @@ object Similarity {
     * its own top-k (mutual symmetrization — the standard kNN-graph
     * noise filter).
     *
-    * Scale shape: centroid assignment is a map-side argmax over
-    * literal centroids; candidate generation is cell-partitioned (AQE
-    * skew-splittable) and quadratic only WITHIN cells — SemDeDup's
-    * O(Σ|cell|²) cost model, bounded by nCells ∝ corpus size; reduce
-    * state is O(nodes × k); the mutual join carries only (node, node,
-    * rank) triples. */
+    * Scale shape: centroid assignment is a map-side argmax through the
+    * cosine nearest-centroid kernel ([[sphericalCellPairs]]); candidate
+    * generation is cell-partitioned (AQE skew-splittable) and quadratic
+    * only WITHIN cells — SemDeDup's O(Σ|cell|²) cost model, bounded by
+    * nCells ∝ corpus size; reduce state is O(nodes × k); the mutual
+    * join carries only (node, node, rank) triples. */
   def knnGraph(corpus: DataFrame, idCol: String, vecCol: String,
       k: Int, nCells: Int = 16): DataFrame = {
     val ranked = directedTopK(corpus, idCol, vecCol, k, nCells)
@@ -392,31 +369,7 @@ object Similarity {
     * it into in-degrees). */
   def directedTopK(corpus: DataFrame, idCol: String, vecCol: String,
       k: Int, nCells: Int = 16): DataFrame = Settle.scope("directedTopK") { st =>
-    val c = corpus.select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<double>").as("v"))
-      .withColumn("nv", VectorOps.norm(col("v")))
-    val centroids: Array[(Long, Array[Double])] =
-      c.select(col("id"), col("v"))
-        .orderBy(md5(col("id").cast("string")), col("id"))
-        .limit(nCells).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    val cellOf: Column = {
-      val ncs = centroids.map { case (_, cv) => math.sqrt(VectorOps.selfDot(cv)) }
-      element_at(ColumnBridge.column(graft.expressions.NearestCentroidCosine(
-        ColumnBridge.expression(col("v")),
-        ColumnBridge.expression(col("nv")),
-        centroids.map(_._2), centroids.map(_._1), ncs)), 2).cast("long")
-    }
-    val assign = st.cache(c.withColumn("cell", cellOf))
-    val half = assign.select(col("cell"), col("id").as("id_a"),
-        col("v").as("va"), col("nv").as("na"))
-      .join(assign.select(col("cell"), col("id").as("id_b"),
-        col("v").as("vb"), col("nv").as("nb")), Seq("cell"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        when(col("na") * col("nb") === 0.0, 0.0)
-          .otherwise(VectorOps.dot(col("va"), col("vb")) /
-            (col("na") * col("nb"))).as("cos"))
+    val (_, half) = sphericalCellPairs(st, corpus, idCol, vecCol, nCells)
     // each unordered pair scored once, then oriented both ways for the
     // per-node heaps
     val directed = half.select(col("id_a").as("qid"), col("id_b").as("id"),
@@ -463,10 +416,7 @@ object Similarity {
     val c = normed.getOrElse(st.cache(withNorm(corpus, "id", "v", "nv")))
     // entry points: the deterministic md5-order sample (the s3/s5
     // quantizer pick) — real corpus ids, so they are graph nodes
-    val seeds: Array[Long] =
-      c.select(col("id").cast("long"))
-        .orderBy(md5(col("id").cast("string")), col("id"))
-        .limit(nCells).collect().map(_.getLong(0))
+    val seeds: Array[Long] = md5Sample(c, nCells).map(_._1)
     // a caller sweeping search parameters (e21) passes the edge list
     // as (node, nbr) once — the production posture: build the index
     // one time, search it many times

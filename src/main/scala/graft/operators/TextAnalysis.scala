@@ -824,25 +824,6 @@ object TextAnalysis {
       .orderBy("source")
   }
 
-  /** Heaps'-law vocabulary growth curve: the corpus in arrival order
-    * (`idCol`) cut into `nBuckets` equal-width id ranges, and per
-    * bucket the cumulative doc count, token count, and DISTINCT-token
-    * vocabulary size — the V(n) ~ K·n^β read that says whether a crawl
-    * is still discovering new vocabulary or has saturated (a saturated
-    * slice is re-crawl/duplicate territory; reference capability:
-    * corpus-level string profiling, `bertrand/types/string.py`).
-    *
-    * The cumulative-distinct trick: vocab(≤b) needs no per-prefix
-    * distinct pass — each token contributes at exactly the bucket of
-    * its FIRST occurrence (min id), so one `groupBy(tok).min(id)`
-    * gives per-bucket "new token" counts whose running sum IS the
-    * growth curve. All outputs are exact integers.
-    *
-    * Scale shape: one token explode + one tok-keyed shuffle (the x24
-    * tokenCounts shape); the id bounds are a broadcast scalar; the
-    * final cumulative window runs over `nBuckets` rows (bucket
-    * cardinality, NOT corpus cardinality — the single-partition sort
-    * is bounded by construction). */
   /** Good-Turing frequency-of-frequencies: N_r = token TYPES occurring
     * exactly r times (r ≤ maxR), each row carrying its corpus mass
     * share r·N_r/N and the classic Good-Turing adjusted count
@@ -866,7 +847,9 @@ object TextAnalysis {
   /** The terminal half of [[goodTuring]], from a (tok, c) count table.
     * The count table is a SEMIGROUP (counts fold by addition — the
     * x24/S12 tokenCounts discipline), so the streaming form (S24)
-    * maintains it as state and calls this per trigger. */
+    * maintains it as state and calls this per trigger. The N_{r+1}
+    * lead window has no `partitionBy`: it sorts the `maxR`-row grid in
+    * one task, bounded by `maxR` whatever the vocabulary size. */
   def goodTuringFromCounts(tc: org.apache.spark.sql.DataFrame,
       maxR: Int = 10): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -885,6 +868,25 @@ object TextAnalysis {
       .orderBy("r")
   }
 
+  /** Heaps'-law vocabulary growth curve: the corpus in arrival order
+    * (`idCol`) cut into `nBuckets` equal-width id ranges, and per
+    * bucket the cumulative doc count, token count, and DISTINCT-token
+    * vocabulary size — the V(n) ~ K·n^β read that says whether a crawl
+    * is still discovering new vocabulary or has saturated (a saturated
+    * slice is re-crawl/duplicate territory; reference capability:
+    * corpus-level string profiling, `bertrand/types/string.py`).
+    *
+    * The cumulative-distinct trick: vocab(≤b) needs no per-prefix
+    * distinct pass — each token contributes at exactly the bucket of
+    * its FIRST occurrence (min id), so one `groupBy(tok).min(id)`
+    * gives per-bucket "new token" counts whose running sum IS the
+    * growth curve. All outputs are exact integers.
+    *
+    * Scale shape: one token explode + one tok-keyed shuffle (the x24
+    * tokenCounts shape); the id bounds are a broadcast scalar; the
+    * final cumulative window has no `partitionBy`: it sorts `nBuckets`
+    * rows (bucket cardinality, NOT corpus cardinality) in one task,
+    * bounded by construction. */
   def vocabGrowth(df: org.apache.spark.sql.DataFrame, textCol: String,
       idCol: String, nBuckets: Int = 20): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window

@@ -1463,10 +1463,10 @@ object TypeQueries {
     * (ts, event_id) event order — the appearance-order dictionary
     * (vs t15's rank dictionary), pinned by the exact (first_us,
     * first_event_id) pair from ONE mergeable min-struct aggregation
-    * (no window over the events). The ranking/total windows run over
-    * the VALUE-cardinality table only — bounded by the dictionary
-    * size, never the corpus, so the unpartitioned window is safe at
-    * any data scale. share = one IEEE division, identical on both
+    * (no window over the events). The ranking/total windows have no
+    * `partitionBy` and run in one task over the VALUE-cardinality
+    * table only — bounded by the dictionary size, never the corpus, so
+    * the unpartitioned window is safe at any data scale. share = one IEEE division, identical on both
     * engines. */
   def t51Factorize(s: SparkSession, dir: String): DataFrame = {
     val e = events(s, dir).select(col("event_type"),

@@ -73,8 +73,7 @@ class KernelsSpec extends AnyFunSuite {
     b
   }
 
-  private val centroids = Array(Array(1.0, 0.0, 0.0), Array(0.0, 1.0, 0.0))
-  private val centroidIds = Array(3L, 1L)
+  private val centroids = Array((3L, Array(1.0, 0.0, 0.0)), (1L, Array(0.0, 1.0, 0.0)))
 
   private def expr(e: Expression): Column = ColumnBridge.column(e)
   private def ex(name: String): Expression = ColumnBridge.expression(col(name))
@@ -129,13 +128,11 @@ class KernelsSpec extends AnyFunSuite {
       "py floordiv mixed" -> expr(PyFloorDiv(ex("a"), ex("y"))),
       "py mod mixed" -> expr(PyMod(ex("x"), ex("b"))),
       "ArrayDotProduct" -> expr(ArrayDotProduct(ex("da"), ex("db"))),
-      "SortedLongArrayIntersectCount" -> expr(SortedLongArrayIntersectCount(ex("la"), ex("lb"))),
-      "UpperTriOuterProduct" -> expr(UpperTriOuterProduct(ex("da"))),
-      "NearestCentroidEuclid" -> expr(NearestCentroidEuclid(ex("da"), centroids, centroidIds,
-        centroids.map(c => c.map(v => v * v).sum))),
-      "NearestCentroidCosine" -> expr(NearestCentroidCosine(ex("da"),
-        ColumnBridge.expression(graft.operators.VectorOps.norm(col("da"))),
-        centroids, centroidIds, Array(1.0, 1.0))))
+      "SortedLongArrayIntersectCount" -> Kernels.sortedIntersectCount(col("la"), col("lb")),
+      "UpperTriOuterProduct" -> Kernels.upperTriOuter(col("da")),
+      "NearestCentroidEuclid" -> Kernels.nearestCentroid(col("da"), centroids),
+      "NearestCentroidCosine" -> Kernels.nearestCentroidCosine(col("da"),
+        graft.operators.VectorOps.norm(col("da")), centroids))
   }
 
   /** The call each kernel makes in generated code: a static call, or

@@ -88,10 +88,8 @@ class DedupSpec extends AnyFunSuite {
       concat($"text", lit(" zz qq")).as("text")))
     val lsh = Dedup.minhashPairs(all, "doc_id", "text", threshold = 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    import org.apache.spark.sql.graft.ColumnBridge
     val sh = all.select($"doc_id".as("id"), Dedup.shingleHashes($"text").as("sh")).persist()
-    val common = ColumnBridge.column(graft.expressions.SortedLongArrayIntersectCount(
-      ColumnBridge.expression($"a.sh"), ColumnBridge.expression($"b.sh"))).cast("double")
+    val common = graft.expressions.Kernels.sortedIntersectCount($"a.sh", $"b.sh").cast("double")
     val exact = sh.as("a").join(sh.as("b"), $"a.id" < $"b.id")
       .select($"a.id".as("id_a"), $"b.id".as("id_b"),
         (common / (size($"a.sh") + size($"b.sh") - common)).as("j"))

@@ -1,7 +1,13 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import graft.expressions.Kernels
 import graft.operators.{Quantize, Similarity, VectorOps}
+import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.execution.{LocalTableScanExec, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 class QuantizeSpec extends AnyFunSuite {
@@ -58,30 +64,66 @@ class IvfSpec extends AnyFunSuite {
     }
   }
 
-  test("table-based cell assignment (large-nCells regime) is bit-identical to the literal path") {
-    // literalAssignCells = 0 forces the broadcast-table argmin for the
-    // SAME 16 centroids the literal path embeds in codegen; identical
-    // IEEE arithmetic + lexicographic struct min → identical cells →
-    // identical top-k, bit for bit
-    val emb = Tables.t(spark, sf, "embeddings")
-    val q = emb.filter($"vec_id" < 5)
-    val lit = Similarity.ivfTopK(emb, q, 10, nCells = 16, nProbe = 4)
-      .collect().toSeq
-    val tab = Similarity.ivfTopK(emb, q, 10, nCells = 16, nProbe = 4,
-        literalAssignCells = 0)
-      .collect().toSeq
-    assert(lit.nonEmpty && lit == tab)
+  /** The reference IVF assignment: array_min over
+    * struct(ip(c,c) − 2·ip(v,c), cid) with plan-literal centroids
+    * (lexicographic, so ties go to the smaller cid), ip(c,c) summed
+    * left-to-right. A null vector gets no cell (array_min alone would
+    * give it the smallest cid). */
+  private def structMinCell(cents: Array[(Long, Array[Double])]): Column =
+    when(col("v").isNotNull, array_min(array(cents.map { case (cid, cv) =>
+      struct(
+        (lit(cv.foldLeft(0.0)((s, x) => s + x * x)) -
+          VectorOps.dot(col("v"), array(cv.map(lit(_)): _*)) * 2.0).as("d"),
+        lit(cid).as("cid"))
+    }: _*)).getField("cid"))
+
+  test("sampled IVF cells equal the struct-min reference at 16 and 256 cells") {
+    val emb = Tables.t(spark, sf, "embeddings").select("vec_id", "embedding")
+    // the null-vector row's id sorts after every corpus id in md5 order,
+    // so it is assigned, never sampled as a centroid
+    val md = java.security.MessageDigest.getInstance("MD5")
+    def md5Hex(s: String): String =
+      md.digest(s.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
+    val nullId = Iterator.from(1000000).find(i => md5Hex(i.toString).startsWith("ff")).get
+    val corpus = emb.union(emb.limit(1).select(lit(nullId.toLong).as("vec_id"),
+      lit(null).cast(emb.schema("embedding").dataType).as("embedding")))
+    for (n <- Seq(16, 256)) {
+      val (cents, cells) = Similarity.ivfSampledIndex(corpus, nCells = n)
+      val picked = corpus.orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
+        .limit(n).select(col("vec_id").cast("long")).as[Long].collect().toSeq
+      assert(cents.map(_._1).toSeq == picked, s"$n cells: centroid pick")
+      val got = cells.select(col("id").cast("long"), col("cell"),
+          structMinCell(cents).as("want"))
+        .as[(Long, Option[Long], Option[Long])].collect()
+      assert(got.length == corpus.count(), s"$n cells")
+      assert(got.filter(_._1 == nullId).toSeq == Seq((nullId.toLong, None, None)), s"$n cells")
+      val wrong = got.filter(r => r._2 != r._3)
+      assert(wrong.isEmpty, s"$n cells: ${wrong.take(5).toSeq}")
+      assert(got.flatMap(_._2).distinct.length > 1, s"$n cells: one cell")
+    }
   }
 
   test("sampled-centroid assignment ties break to the smaller cell id") {
-    // two identical centroids-by-construction can't occur from distinct
-    // corpus vectors, but equal relative distances can: verify the
-    // argmin is deterministic by re-running the same assignment twice
-    val emb = Tables.t(spark, sf, "embeddings")
-    val q = emb.filter($"vec_id" < 3)
-    val a = Similarity.ivfTopK(emb, q, 5).collect().toSeq
-    val b = Similarity.ivfTopK(emb, q, 5).collect().toSeq
-    assert(a == b)
+    // (1, 1) is equally near e1 (cid 7, listed first) and e2 (cid 3):
+    // euclidean rank 1 − 2·1 and cosine 1/√2 for both. (2, 0) is
+    // nearer e1 under both ranks.
+    val cents = Array((7L, Array(1.0, 0.0)), (3L, Array(0.0, 1.0)))
+    val schema = StructType(Seq(StructField("v", ArrayType(DoubleType, containsNull = false))))
+    val rows = Seq(Row(Seq(1.0, 1.0)), Row(Seq(2.0, 0.0)))
+    val kernels = Seq(
+      "euclid" -> Kernels.nearestCentroid(col("v"), cents),
+      "cosine" -> Kernels.nearestCentroidCosine(col("v"), VectorOps.norm(col("v")), cents))
+    for ((name, nearest) <- kernels) {
+      val interpreted = spark.createDataFrame(rows.asJava, schema)
+        .select(element_at(nearest, 2))
+      assert(interpreted.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec], name)
+      val generated = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+        .select(element_at(nearest, 2))
+      assert(generated.queryExecution.executedPlan
+        .find(_.isInstanceOf[WholeStageCodegenExec]).isDefined, name)
+      for (df <- Seq(interpreted, generated))
+        assert(df.as[Double].collect().toSeq == Seq(3.0, 7.0), name)
+    }
   }
 }
 

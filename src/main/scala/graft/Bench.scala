@@ -119,22 +119,7 @@ object Bench {
     // survive; BENCH_full.json stays for readers of the old path.
     val cpuTaggedOut =
       if (only.isEmpty) Some(s"BENCH_full_c${GraftSession.cpus}.json") else None
-    // per-query plan-cost notes: costs a registry sweep pays that a
-    // production pipeline would not, so a reader doesn't misread them
-    // as regressions (VERDICT r12 item 6)
-    val notes = Seq(
-      "q77_graph_profile" ->
-        ("includes an independent O(m^1.5) triangle close also run by " +
-          "q61; production reuses it via graphProfile(triCounts = ...) " +
-          "(GraphsSpec pins reuse equality), so q77's standalone cost " +
-          "~= q61 + profile-only"))
-      .filter { case (n, _) => names.contains(n) }
-    val notesField =
-      if (notes.isEmpty) ""
-      else ""","notes":""" + notes.map { case (k, v) =>
-        "\"" + k + "\":\"" + v + "\""
-      }.mkString("{", ",", "}")
-    val full = line.dropRight(1) + notesField +
+    val full = line.dropRight(1) +
       s""","spread":${jmap(folded.spread)}""" +
       raw.zipWithIndex.map { case (p, i) =>
         s""","pass${i + 1}":${jmap(p.map { case (k, (v, _)) => k -> v })}"""

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.graft.PlanBridge
+
 /** Dev tool: dump a registered query's plans to a file for offline
   * inspection (lambda-inlining audits, exchange counts, pushdown
   * checks). Not part of the library.
@@ -8,7 +10,8 @@ package graft
   * plan of every frame the query settled while it was built, as
   * recorded before its checkpoint ([[Settle.capture]]) — the work a
   * checkpoint scan hides from the terminal plan (BFS and CC rounds,
-  * the triangle close, sweep arms).
+  * the triangle close, sweep arms) — and by that plan's physical
+  * form, which shows where exchanges sit.
   *
   * Usage: runMain graft.PlanDump <queryName> <sfDir> <outFile>
   */
@@ -28,6 +31,8 @@ object PlanDump {
     settled.zipWithIndex.foreach { case (s, i) =>
       txt ++= s"\n== SETTLED ${i + 1}/${settled.size}: ${s.label}/${s.phase} (optimized, before its checkpoint) ==\n"
       txt ++= s.plan.toString
+      txt ++= s"== SETTLED ${i + 1}/${settled.size}: physical, as planned before any stage ran ==\n"
+      txt ++= PlanBridge.ofRows(spark, s.plan).queryExecution.executedPlan.toString
     }
     java.nio.file.Files.writeString(java.nio.file.Path.of(outFile),
       txt.toString)

@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * spec-proven but not cost-proven" gap:
   *
   *  - pageRank: small (driver rank vector, broadcast probes) vs
-  *    FORCED large (broadcastNodes = 0 — distributed ranks, shuffled
-  *    equi-joins per round) on q59's supplier→customer graph;
+  *    FORCED large (`Graphs.pageRankDistributed` — distributed ranks,
+  *    shuffled equi-joins per round) on q59's supplier→customer graph;
   *    outputs compared for exact equality (GraphsSpec proves the
   *    semantics; this proves the COST and re-proves identity at SF).
   *  - IVF: nCells 16 (the s3 bench twin) vs 256 vs 1024 — the
@@ -54,8 +54,7 @@ object RegimeBench {
     results("pagerank_small") = timeMin2(() =>
       settle(graft.operators.Graphs.pageRank(edges, iters = 3)))
     results("pagerank_large_forced") = timeMin2(() =>
-      settle(graft.operators.Graphs.pageRank(edges, iters = 3,
-        broadcastNodes = 0L)))
+      settle(graft.operators.Graphs.pageRankDistributed(edges, iters = 3)))
     // live bit-identity at this SF (canonical string fold, order-free)
     def rankDigest(df: DataFrame): String = df
       .select(md5(concat_ws(":", col("node"), col("rank").cast("string"))).as("h"))
@@ -63,8 +62,7 @@ object RegimeBench {
       .head().get(0).toString
     checks("pagerank_regimes_identical") =
       rankDigest(graft.operators.Graphs.pageRank(edges, iters = 3)) ==
-        rankDigest(graft.operators.Graphs.pageRank(edges, iters = 3,
-          broadcastNodes = 0L))
+        rankDigest(graft.operators.Graphs.pageRankDistributed(edges, iters = 3))
 
     // ---- IVF model-state growth ----------------------------------------
     val emb = Tables.t(spark, sfDir, "embeddings")

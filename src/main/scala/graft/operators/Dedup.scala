@@ -711,12 +711,18 @@ object Dedup {
     // is cheap and also cuts the iterative loop's replay lineage.
     val sym = st.settle(pairs.select(col(aCol).cast("long").as("src"),
       col(bCol).cast("long").as("dst")), "pairs")
-    // repartition by src BEFORE persisting (r14, guide §2.4): every
-    // round equi-joins the edges on src, and the distinct left the
-    // cache hash-partitioned by (src, dst) — so each round re-shuffled
-    // the FULL edge table. Pinned to src, the cached partitioning
-    // satisfies the join's requirement and only the (small, changing)
-    // label side moves per round.
+    // repartition by src BEFORE persisting (guide §2.4): the distinct
+    // leaves the cache hash-partitioned by (src, dst), and pinned to
+    // src it satisfies every src-keyed consumer. `PlanDump
+    // d6_dup_clusters` shows both regimes. While labels are small
+    // enough to broadcast (sf0.001 and sf0.1) the round's src join is
+    // a broadcast hash join that needs no edge Exchange either way,
+    // and the pinned layout spares the seed labels aggregation its
+    // Exchange. Past the broadcast bound (the same dump at sf0.001
+    // with spark.sql.autoBroadcastJoinThreshold=-1) the round's src
+    // sort-merge join reads the cache with no Exchange on the edge
+    // side; without this repartition every round shuffles the FULL
+    // edge table there.
     val edges = st.cache(sym.union(sym.select(col("dst").as("src"), col("src").as("dst")))
       .distinct().repartition(col("src")))
     var labels = st.settle(edges.groupBy("src").agg(min("dst").as("nmin"))

@@ -1091,20 +1091,18 @@ object Relational {
     * (the t61 discipline; exact while M·Σx² < 1e38) with ONE terminal
     * IEEE division each for r and C.
     *
-    * Scale shape: degrees from one explode-free union aggregate;
-    * moments ride two broadcast-size joins of the degree table onto
-    * edges; triangles reuse [[graft.operators.Graphs.triangleCounts]]
-    * (degree-ordered edge iterator, O(m^1.5) worst case, hub-safe);
-    * the three single-row aggregates cross-join at the end (1-row
-    * broadcast crosses). Edges materialize once and serve all three
-    * passes. */
+    * Scale shape: [[graft.operators.Graphs.graphProfile]] builds the
+    * degrees, moments and triangles over one canonical-edge chain
+    * shared with `triangleCounts` (degree-ordered edge iterator,
+    * O(m^1.5) worst case, hub-safe), so the pairs go in as the join
+    * emits them: the chain's own distinct dedupes them. */
   def q77GraphProfile(s: SparkSession, dir: String): DataFrame = {
     val li = t(s, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
     // SHUFFLE_HASH: the q61 pick (bounded per-key build, no sorts)
     val edges = li.as("a").join(li.as("b").hint("SHUFFLE_HASH"),
         col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-      .select(col("a.pk").as("src"), col("b.pk").as("dst")).distinct()
+      .select(col("a.pk").as("src"), col("b.pk").as("dst"))
     graft.operators.Graphs.graphProfile(edges)
   }
 

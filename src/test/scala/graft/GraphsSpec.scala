@@ -1,6 +1,9 @@
 package graft
 
 import graft.operators.Graphs
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.sum
+import org.apache.spark.sql.graft.CacheEntries
 import org.scalatest.funsuite.AnyFunSuite
 
 class GraphsSpec extends AnyFunSuite {
@@ -49,20 +52,30 @@ class GraphsSpec extends AnyFunSuite {
     assert(k3.getDouble(4) == 1.0 && k3.isNullAt(5))
   }
 
-  test("graphProfile reusing a precomputed triangleCounts equals self-computed") {
+  test("graphProfile's n_triangles is a third of triangleCounts' corner total") {
     // triangle + pendant + a second triangle sharing node 3, plus the
     // island edge — enough structure that a wrong 3T would shift both
     // n_triangles and clustering
     val g = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (3L, 5L),
       (4L, 5L), (9L, 10L)).toDF("src", "dst")
     val tri = Graphs.triangleCounts(g)
-    val reused = Graphs.graphProfile(g, Some(tri)).collect().head
-    val self = Graphs.graphProfile(g).collect().head
-    assert(reused == self)
-    // and the counts the caller already holds are the q61 answer —
-    // the shared pass serves both registry entries from one close
+    val corners = tri.agg(sum("n_tri")).head().getLong(0)
+    val r = Graphs.graphProfile(g).collect().head
+    assert(r.getLong(3) == corners / 3 && corners % 3 == 0)
+    assert(r.getDouble(4) == corners.toDouble / r.getLong(2))
+    // and the per-node counts are the q61 answer
     assert(tri.as[(Long, Long)].collect().toMap ==
       Map(1L -> 1L, 2L -> 1L, 3L -> 2L, 4L -> 1L, 5L -> 1L))
+  }
+
+  test("graphProfile of any edge form equals the profile of its canonical form") {
+    val canonical = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (3L, 5L),
+      (4L, 5L), (9L, 10L))
+    // both orientations, a duplicate of each, and a self-loop
+    val messy = canonical ++ canonical.map(_.swap) ++ canonical.take(3) :+ ((4L, 4L))
+    val want = Graphs.graphProfile(canonical.toDF("src", "dst")).collect().head
+    assert(Graphs.graphProfile(messy.toDF("src", "dst")).collect().head == want)
+    assert((want.getLong(0), want.getLong(1), want.getLong(3)) == ((7L, 7L, 2L)))
   }
 
   test("pageRank ranks sum to ~1 and sinks hold the base rank") {
@@ -83,8 +96,28 @@ class GraphsSpec extends AnyFunSuite {
   test("pageRank small (driver-vector) and large (distributed) regimes agree exactly") {
     val small = Graphs.pageRank(edges, iters = 3).as[(Long, Double)]
       .collect().toMap
-    val large = Graphs.pageRank(edges, iters = 3, broadcastNodes = 0L)
+    val large = Graphs.pageRankDistributed(edges, iters = 3)
       .as[(Long, Double)].collect().toMap
     assert(small == large) // bit-identical, not approximately equal
+  }
+
+  test("graph operators leave no cache entry behind") {
+    val forest = Seq((2L, 1L), (3L, 1L), (4L, 2L)).toDF("node", "parent")
+    val values = Seq((1L, 10L), (2L, 20L), (3L, 30L), (4L, 40L)).toDF("node", "value")
+    val triangle = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
+    val ops: Seq[(String, () => DataFrame)] = Seq(
+      "bfs" -> (() => Graphs.bfs(edges, Seq(1L).toDF("node"), maxHops = 2)),
+      "pageRank" -> (() => Graphs.pageRank(edges, iters = 2)),
+      "pageRankDistributed" -> (() => Graphs.pageRankDistributed(edges, iters = 2)),
+      "triangleCounts" -> (() => Graphs.triangleCounts(triangle)),
+      "graphProfile" -> (() => Graphs.graphProfile(triangle)),
+      "subtreeRollup" -> (() => Graphs.subtreeRollup(forest, values, rounds = 2)))
+    for ((name, op) <- ops) {
+      val before = CacheEntries(spark)
+      val df = op()
+      assert(df.count() > 0, name)
+      val added = CacheEntries(spark).filterNot(e => before.exists(_ eq e))
+      assert(added.isEmpty, s"$name left ${added.size} cache entries")
+    }
   }
 }

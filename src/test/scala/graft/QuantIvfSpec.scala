@@ -103,6 +103,31 @@ class IvfSpec extends AnyFunSuite {
     }
   }
 
+  test("sampled IVF cells equal the struct-min reference on a non-unit-norm corpus") {
+    // the sf0.001 embeddings are all unit-norm, so ip(c,c) is nearly
+    // the same for every centroid and a kernel that dropped it would
+    // still pass above. Here norms span 0.1–10: a pure dot-product
+    // argmin favours long centroids and moves cells.
+    val rnd = new scala.util.Random(7)
+    val corpus = (0 until 400).map { i =>
+      val scale = 0.1 + 9.9 * rnd.nextDouble()
+      (i.toLong, Array.fill(6)((rnd.nextGaussian() * scale).toFloat))
+    }.toDF("vec_id", "embedding")
+    val (cents, cells) = Similarity.ivfSampledIndex(corpus, nCells = 16)
+    val dotOnly = array_min(array(cents.map { case (cid, cv) =>
+      struct((VectorOps.dot(col("v"), array(cv.map(lit(_)): _*)) * -2.0).as("d"),
+        lit(cid).as("cid"))
+    }: _*)).getField("cid")
+    val got = cells.select(col("id"), col("cell"), structMinCell(cents).as("want"),
+        dotOnly.as("dot_only"))
+      .as[(Long, Long, Long, Long)].collect()
+    assert(got.length == 400)
+    val wrong = got.filter(r => r._2 != r._3)
+    assert(wrong.isEmpty, s"${wrong.take(5).toSeq}")
+    // the corpus discriminates: dropping ip(c,c) would move cells
+    assert(got.count(r => r._3 != r._4) > 40)
+  }
+
   test("sampled-centroid assignment ties break to the smaller cell id") {
     // (1, 1) is equally near e1 (cid 7, listed first) and e2 (cid 3):
     // euclidean rank 1 − 2·1 and cosine 1/√2 for both. (2, 0) is

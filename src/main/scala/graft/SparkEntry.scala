@@ -25,5 +25,5 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get a rows-only check. */
   def oracleSql: Map[String, String] =
-    relational.Relational.oracles ++ typesystem.TypeQueries.oracles ++ llm.LlmQueries.oracles
+    oracle.RelationalOracle.sql ++ oracle.TypeOracle.sql ++ oracle.LlmOracle.sql
 }

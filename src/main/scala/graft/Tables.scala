@@ -11,6 +11,8 @@ import org.apache.spark.sql.types._
   * order-dependent (Spark partial aggregation reorders additions), so all
   * "money math" first casts the 2-decimal double columns to DECIMAL —
   * exact in both engines — and only casts back to DOUBLE at the very end.
+  * The matching DuckDB fragments live in [[graft.oracle.Fragments]];
+  * this object holds Spark helpers only.
   */
 object Tables {
 
@@ -58,24 +60,4 @@ object Tables {
   def revenue: Column =
     (dec(col("l_extendedprice")) * (lit(1) - dec(col("l_discount"))))
       .cast(DecimalType(18, 4))
-
-  /** Matching DuckDB SQL fragment for [[revenue]]. */
-  val revenueSql: String =
-    "CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2))) AS DECIMAL(18,4))"
-
-  /** DuckDB fragment: decimal-to-double at an oracle OUTPUT boundary,
-    * routed through VARCHAR. DuckDB's direct DECIMAL→DOUBLE cast
-    * divides two separately-rounded doubles (int128 value, 10^scale)
-    * and can land 1 ulp off the correctly-rounded conversion; Spark's
-    * (BigDecimal.doubleValue) is correctly rounded. Printing the
-    * exact digits and re-parsing (DuckDB's strtod is correctly
-    * rounded) matches Spark bit-for-bit — the r11 full-registry sf1
-    * strict drive caught q1's sum_charge off by exactly this ulp. */
-  def decToDoubleSql(expr: String): String =
-    s"CAST(CAST($expr AS VARCHAR) AS DOUBLE)"
-
-  /** DuckDB fragment: exact decimal sum of a 2-decimal double, as
-    * DOUBLE (correctly-rounded conversion — see [[decToDoubleSql]]). */
-  def dsumSql(col: String): String =
-    decToDoubleSql(s"SUM(CAST($col AS DECIMAL(12,2)))")
 }

@@ -505,7 +505,7 @@ object TextNormKernel {
 /** Content-defined chunk digests in ONE fused pass — the d17 100 TB
   * form: rolling 8-term polynomial over code points (constants below
   * are THE canonical CDC constants; the DuckDB oracle interpolates
-  * them via Dedup.CdcConst), boundary where hash ≡ 0 (mod 64), md5
+  * them directly), boundary where hash ≡ 0 (mod 64), md5
   * hex digest per chunk. Value-identical to the declarative
   * per-position explode the oracle replays — this kernel exists
   * because that spelling materializes corpus-character-sized rows,

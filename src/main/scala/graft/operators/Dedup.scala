@@ -1310,16 +1310,6 @@ object Dedup {
         (coalesce(col("n_hits"), lit(0L)) > 0).as("contaminated"))
   }
 
-  /** Shared CDC polynomial constants: P(k) = 257^k mod (10^9 + 7),
-    * oldest window char × P(0) … newest × P(7). Delegates to the
-    * kernel's canonical values so the oracle SQL interpolates the
-    * IDENTICAL constants the fused pass uses. */
-  object CdcConst {
-    val M: Long = graft.expressions.CdcChunkDigests.M
-    val B: Long = graft.expressions.CdcChunkDigests.B
-    val pows: Array[Long] = graft.expressions.CdcChunkDigests.pows
-  }
-
   /** Content-defined chunking (CDC) dedup statistics — the rsync/
     * FastCDC boundary idea as a corpus pass: chunk boundaries fall
     * where an 8-char polynomial window hash ≡ 0 (mod 64), so

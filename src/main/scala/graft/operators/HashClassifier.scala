@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * (tokenize → feature-hash → sum weights → threshold) are exactly
   * those of a trained model whose weights would arrive as a broadcast
   * array; pinning them to a formula keeps every arithmetic step
-  * integer-exact and SQL-replayable (the d17 CdcConst discipline: one
+  * integer-exact and SQL-replayable (the d17 CDC discipline: one
   * source of truth for the constants, interpolated into the oracle).
   *
   * Exactness contract: the feature hash is an 8-char base-131

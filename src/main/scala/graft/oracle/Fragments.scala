@@ -1,5 +1,7 @@
 package graft.oracle
 
+import graft.expressions.TextHashKernels
+
 /** DuckDB SQL fragments that more than one oracle builder shares:
   * each is written once here, so a dialect quirk (decimal→double
   * through VARCHAR, epoch seconds over nanosecond timestamps, list
@@ -38,4 +40,103 @@ object Fragments {
     * the second Spark's `unix_timestamp` reads. */
   def epochSec(c: String): String =
     s"CAST(FLOOR(epoch(CAST($c AS TIMESTAMP))) AS BIGINT)"
+
+  // ---- text ---------------------------------------------------------------
+
+  /** DuckDB fragment: `c` lower-cased, whitespace runs collapsed to one
+    * space, trimmed — the replay of `Dedup.normText`. */
+  def normTextSql(c: String): String =
+    s"trim(regexp_replace(lower($c), '\\s+', ' ', 'g'))"
+
+  /** [[normTextSql]] of the `documents.text` column. */
+  val normSql: String = normTextSql("text")
+
+  /** The normalized text's tokens (`TextAnalysis.tokens`). */
+  val tokensSql: String = s"string_split($normSql, ' ')"
+
+  /** The normalized text's token count as the quality scorer reads it
+    * (`string_split_regex`, as `TextAnalysis.qualityColumns`). */
+  val tokenCountSql: String = s"len(string_split_regex($normSql, ' '))"
+
+  /** The distinct `k`-token shingles of a normalized-text column `nt`
+    * (one shingle for a document shorter than `k` tokens). */
+  def shinglesSql(k: Int): String =
+    s"""list_distinct(list_transform(
+       |      range(1, CAST(greatest(len(string_split(nt, ' ')) - $k, 1) AS BIGINT) + 1),
+       |      i -> array_to_string((string_split(nt, ' '))[CAST(i AS INT):CAST(i AS INT)+$k], ' ')))"""
+      .stripMargin
+
+  /** A lang-id stop-word profile as an SQL `IN` list, read from the
+    * kernel's canonical profiles so engine and oracle share one list. */
+  def stopListSql(lang: String): String =
+    TextHashKernels.langProfiles.toMap.apply(lang)
+      .map(w => s"'$w'").mkString("(", ",", ")")
+
+  /** The four profile scores over a token list `toks`, as columns
+    * `s_en`, `s_de`, `s_es`, `s_fr` (profile order = tie-break order). */
+  val stopScoresSql: String = TextHashKernels.langProfiles.map { case (l, _) =>
+    s"len(list_filter(toks, t -> t IN ${stopListSql(l)})) / greatest(len(toks),1) AS s_$l"
+  }.mkString(",\n    ")
+
+  /** Diagonal islands over occurrence pairs `p` (id_a, pos_a, id_b,
+    * pos_b): runs of consecutive positions on one diagonal share
+    * `pos_a - ROW_NUMBER()`, so (diag, island) names one matched span. */
+  val islandCte: String =
+    """isl AS (SELECT id_a, id_b, pos_a, pos_b, pos_a - pos_b AS diag,
+      |    pos_a - ROW_NUMBER() OVER (PARTITION BY id_a, id_b, pos_a - pos_b
+      |      ORDER BY pos_a) AS island
+      |  FROM p)""".stripMargin
+
+  // ---- embeddings ---------------------------------------------------------
+
+  /** An `embeddings.embedding` (FLOAT[]) widened to DOUBLE[]. */
+  val embVecSql: String = "list_transform(embedding, x -> CAST(x AS DOUBLE))"
+
+  /** `name`(vec_id, v): every embedding widened to DOUBLE[]. */
+  def embCte(name: String): String =
+    s"""$name AS (SELECT vec_id,
+       |    $embVecSql AS v
+       |  FROM embeddings)""".stripMargin
+
+  /** The seeded centroid sample's order: by md5 of the id, ties by id. */
+  val md5OrderSql: String = "md5(CAST(vec_id AS VARCHAR)), vec_id"
+
+  /** Squared euclidean distance of `v` to centroid `c.cv` less the
+    * per-vector constant ip(v,v): ip(c,c) − 2·ip(v,c); `sep` breaks
+    * the two terms. Ordered `ASC, c.cid ASC`, row 1 is the nearest
+    * centroid with ties to the smaller id, as the Spark argmin. */
+  def centroidDistSql(v: String, sep: String = " "): String =
+    s"list_inner_product(c.cv, c.cv) -${sep}2 * list_inner_product($v, c.cv)"
+
+  private def assignCte(orderBy: String): String =
+    s"""assign AS (SELECT vec_id, v, nv, cid AS cell FROM (
+       |    SELECT b.vec_id, b.v, b.nv, c.cid,
+       |      ROW_NUMBER() OVER (PARTITION BY b.vec_id $orderBy) AS rn
+       |    FROM b CROSS JOIN cent c) t WHERE rn = 1)""".stripMargin
+
+  /** Row 1 of this order is the euclidean-nearest `cent` of `b.v`. */
+  val euclidOrderSql: String = s"${centroidDistSql("b.v")} ASC, c.cid ASC"
+
+  /** `assign`(vec_id, v, nv, cell): every row of `b`(vec_id, v, nv) in
+    * its euclidean-nearest `cent`(cid, cv) cell. */
+  val euclidAssignCte: String = assignCte(s"ORDER BY $euclidOrderSql")
+
+  /** [[euclidAssignCte]] by cosine: nearest = largest cos, a zero
+    * vector scoring 0 (`cent` also carries its norm `nc`). */
+  val cosineAssignCte: String = assignCte(
+    """ORDER BY
+      |        CASE WHEN b.nv * c.nc = 0.0 THEN 0.0
+      |             ELSE -(list_inner_product(b.v, c.cv) / (b.nv * c.nc))
+      |        END ASC, c.cid ASC""".stripMargin)
+
+  /** Per-dimension first and second moments of the 64-dim embeddings:
+    * `m`(i, j, exy, ex, ey) over every dimension pair i ≤ j. */
+  val momentCtes: String =
+    s"""e AS (SELECT $embVecSql AS v
+       |           FROM embeddings),
+       |d AS (SELECT CAST(unnest(range(1, 65)) AS INT) AS i),
+       |p AS (SELECT a.i AS i, b.i AS j FROM d a JOIN d b ON b.i >= a.i),
+       |m AS (SELECT p.i, p.j, AVG(v[p.i] * v[p.j]) AS exy,
+       |        AVG(v[p.i]) AS ex, AVG(v[p.j]) AS ey
+       |      FROM e CROSS JOIN p GROUP BY p.i, p.j)""".stripMargin
 }

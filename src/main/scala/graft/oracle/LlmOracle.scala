@@ -32,9 +32,7 @@ object LlmOracle {
          |  FROM $prev ORDER BY dmin DESC, vec_id LIMIT 1)""".stripMargin
     }.mkString(",\n")
     val union = (0 until k).map(i => s"SELECT * FROM s$i").mkString("\n  UNION ALL ")
-    s"""WITH emb AS (SELECT vec_id,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
+    s"""WITH ${embCte("emb")},
        |s0 AS (SELECT 0 AS step, vec_id AS cid, v AS cv,
        |    CAST(NULL AS DOUBLE) AS d2
        |  FROM emb ORDER BY vec_id LIMIT 1),
@@ -61,21 +59,13 @@ object LlmOracle {
     * by the e17 hubness oracle so the in-degree audit certifies
     * against the SAME proven neighbor lists. */
   private val knnTopkCtes: String =
-    """emb0 AS (SELECT vec_id,
-      |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      |  FROM embeddings),
+    s"""${embCte("emb0")},
       |cent AS (SELECT vec_id AS cid, v AS cv,
       |    sqrt(list_inner_product(v, v)) AS nc FROM emb0
-      |  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
+      |  ORDER BY $md5OrderSql LIMIT 16),
       |b AS (SELECT vec_id, v, sqrt(list_inner_product(v, v)) AS nv
       |  FROM emb0),
-      |assign AS (SELECT vec_id, v, nv, cid AS cell FROM (
-      |    SELECT b.vec_id, b.v, b.nv, c.cid,
-      |      ROW_NUMBER() OVER (PARTITION BY b.vec_id ORDER BY
-      |        CASE WHEN b.nv * c.nc = 0.0 THEN 0.0
-      |             ELSE -(list_inner_product(b.v, c.cv) / (b.nv * c.nc))
-      |        END ASC, c.cid ASC) AS rn
-      |    FROM b CROSS JOIN cent c) t WHERE rn = 1),
+      |$cosineAssignCte,
       |pair AS (SELECT a.vec_id AS id_a, bb.vec_id AS id_b,
       |    CASE WHEN a.nv * bb.nv = 0.0 THEN 0.0
       |         ELSE list_inner_product(a.v, bb.v) / (a.nv * bb.nv)
@@ -184,7 +174,7 @@ object LlmOracle {
       s"CAST(ascii(substr(rpad(f, 8, ' '), ${k + 1}, 1)) % 256 AS BIGINT)" +
         s" * ${CharPows(k)}")
       .mkString(" +\n      ")
-    s"""WITH base AS (SELECT doc_id, string_split($normSql, ' ') AS toks
+    s"""WITH base AS (SELECT doc_id, $tokensSql AS toks
        |  FROM documents),
        |idx AS (SELECT doc_id, toks, len(toks) AS n,
        |    unnest(range(1, len(toks) + 1)) AS i FROM base),
@@ -230,7 +220,7 @@ object LlmOracle {
     val tfOut = ts.zipWithIndex.map { case (t, i) => s"tf$i AS tf_$t" }.mkString(", ")
     val anyHit = ts.indices.map(i => s"tf$i > 0").mkString(" OR ")
     s"""base AS (SELECT doc_id,
-       |    string_split($normSql, ' ') AS toks FROM documents),
+       |    $tokensSql AS toks FROM documents),
        |tf AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl,
        |    $tfDefs
        |  FROM base),
@@ -312,7 +302,6 @@ object LlmOracle {
        |  FROM f)
        |WHERE rk <= 10 ORDER BY rk""".stripMargin
 
-  private val normSql = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
   private val cosSql =
     "list_cosine_similarity(list_transform(a.embedding, x -> CAST(x AS DOUBLE)), " +
       "list_transform(b.embedding, x -> CAST(x AS DOUBLE)))"
@@ -331,7 +320,7 @@ object LlmOracle {
        |  SELECT doc_id, text FROM documents
        |  UNION ALL SELECT doc_id + 1000000, text || ' zz qq' FROM documents),
        |toks AS (SELECT doc_id,
-       |    list_transform(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '),
+       |    list_transform($tokensSql,
        |      w -> CAST('0x' || substr(md5(w), 1, 15) AS BIGINT)) AS th
        |  FROM all_docs),
        |s AS (SELECT doc_id, $bitTerms AS sh FROM toks),
@@ -371,9 +360,7 @@ object LlmOracle {
     val masks = (0L +: ((0 until bits).map(i => 1L << i) ++
       (for (i <- 0 until bits; j <- (i + 1) until bits)
         yield (1L << i) | (1L << j)))).mkString(", ")
-    s"""WITH emb AS (SELECT vec_id,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
+    s"""WITH ${embCte("emb")},
        |b AS (SELECT vec_id, v, sqrt(list_inner_product(v, v)) AS nv,
        |    $bucketExpr AS bucket FROM emb),
        |probes AS (SELECT vec_id AS qid, v AS qv, nv AS nqv,
@@ -391,6 +378,16 @@ object LlmOracle {
        |WHERE rk <= 10 ORDER BY qid, rk""".stripMargin
   }
 
+  /** The sampled-centroid IVF index shared by the s3 and e10 oracles:
+    * `cent` = the 16 md5-first vectors, `b` = every vector with its
+    * norm, `assign` = each vector's euclidean-nearest cell. */
+  private val ivfIndexCtes: String =
+    s"""${embCte("emb")},
+       |cent AS (SELECT vec_id AS cid, v AS cv FROM emb
+       |  ORDER BY $md5OrderSql LIMIT 16),
+       |b AS (SELECT vec_id, v, sqrt(list_inner_product(v, v)) AS nv FROM emb),
+       |$euclidAssignCte""".stripMargin
+
   /** s3 oracle: the sampled-centroid IVF index is pure SQL — centroids
     * are the 16 corpus vectors with smallest md5(id), cell assignment
     * is the argmin of ip(c,c) - 2·ip(v,c) (ties to the smaller cid,
@@ -398,21 +395,10 @@ object LlmOracle {
     * are each query's 4 nearest centroids. DuckDB rebuilds the index
     * from the raw table and must land on the identical top-k. */
   private def s3OracleSql: String = {
-    val rankOrder = "list_inner_product(c.cv, c.cv) - " +
-      "2 * list_inner_product(b.v, c.cv) ASC, c.cid ASC"
-    s"""WITH emb AS (SELECT vec_id,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
-       |cent AS (SELECT vec_id AS cid, v AS cv FROM emb
-       |  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
-       |b AS (SELECT vec_id, v, sqrt(list_inner_product(v, v)) AS nv FROM emb),
-       |assign AS (SELECT vec_id, v, nv, cid AS cell FROM (
-       |    SELECT b.vec_id, b.v, b.nv, c.cid,
-       |      ROW_NUMBER() OVER (PARTITION BY b.vec_id ORDER BY $rankOrder) AS rn
-       |    FROM b CROSS JOIN cent c) t WHERE rn = 1),
+    s"""WITH $ivfIndexCtes,
        |probes AS (SELECT vec_id AS qid, cid AS cell FROM (
        |    SELECT b.vec_id, c.cid,
-       |      ROW_NUMBER() OVER (PARTITION BY b.vec_id ORDER BY $rankOrder) AS rn
+       |      ROW_NUMBER() OVER (PARTITION BY b.vec_id ORDER BY $euclidOrderSql) AS rn
        |    FROM b CROSS JOIN cent c WHERE b.vec_id < 5) t WHERE rn <= 4),
        |scored AS (SELECT p.qid, a.vec_id AS id,
        |    CASE WHEN a.nv * q.nv = 0 THEN 0.0
@@ -431,8 +417,6 @@ object LlmOracle {
     * brute ground truth from the s1 shape, recall the same single
     * IEEE division. */
   private def e10OracleSql: String = {
-    val rankOrder = "list_inner_product(c.cv, c.cv) - " +
-      "2 * list_inner_product(b.v, c.cv) ASC, c.cid ASC"
     val branches = Seq(1, 2, 4, 8).map { np =>
       s"""sc$np AS (SELECT p.qid, a.vec_id AS id,
          |    CASE WHEN a.nv * q.nv = 0 THEN 0.0
@@ -451,19 +435,10 @@ object LlmOracle {
          |    (SELECT COUNT(*) FROM brute JOIN tk$np USING (qid, id))
          |      AS n_overlap)""".stripMargin
     }.mkString(",\n")
-    s"""WITH emb AS (SELECT vec_id,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
-       |cent AS (SELECT vec_id AS cid, v AS cv FROM emb
-       |  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
-       |b AS (SELECT vec_id, v, sqrt(list_inner_product(v, v)) AS nv FROM emb),
-       |assign AS (SELECT vec_id, v, nv, cid AS cell FROM (
-       |    SELECT b.vec_id, b.v, b.nv, c.cid,
-       |      ROW_NUMBER() OVER (PARTITION BY b.vec_id ORDER BY $rankOrder) AS rn
-       |    FROM b CROSS JOIN cent c) t WHERE rn = 1),
+    s"""WITH $ivfIndexCtes,
        |pr AS (SELECT vec_id AS qid, cid AS cell, rn FROM (
        |    SELECT b.vec_id, c.cid,
-       |      ROW_NUMBER() OVER (PARTITION BY b.vec_id ORDER BY $rankOrder) AS rn
+       |      ROW_NUMBER() OVER (PARTITION BY b.vec_id ORDER BY $euclidOrderSql) AS rn
        |    FROM b CROSS JOIN cent c WHERE b.vec_id < 5) t WHERE rn <= 8),
        |brute AS (SELECT qid, id FROM (
        |    SELECT q.vec_id AS qid, a.vec_id AS id,
@@ -493,12 +468,10 @@ object LlmOracle {
       (0 until 8).map(f).mkString("(", " + ", ")")
     val recChain = chain(j => s"MAX(CASE WHEN j = $j THEN ipcc END)")
     val adcChain = chain(j => s"MAX(CASE WHEN j = $j THEN ipq END)")
-    s"""WITH emb AS (SELECT vec_id,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
+    s"""WITH ${embCte("emb")},
        |cent AS (SELECT ROW_NUMBER() OVER (
-       |      ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS c, v AS cv
-       |  FROM emb ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
+       |      ORDER BY $md5OrderSql) - 1 AS c, v AS cv
+       |  FROM emb ORDER BY $md5OrderSql LIMIT 16),
        |b AS (SELECT vec_id, v, sqrt(list_inner_product(v, v)) AS nv FROM emb),
        |js AS (SELECT CAST(j AS INT) AS j FROM range(8) t(j)),
        |enc AS (SELECT vec_id, j, c FROM (
@@ -565,9 +538,7 @@ object LlmOracle {
          |  (SELECT COUNT(*) FROM cut64x JOIN cut$d USING (qid, id)) AS n_overlap)""".stripMargin
     }.mkString(",\n")
     val unions = dims.map(d => s"SELECT * FROM r$d").mkString(" UNION ALL ")
-    s"""WITH emb AS (SELECT vec_id,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
+    s"""WITH ${embCte("emb")},
        |cut64x AS (SELECT qid, id FROM (
        |  SELECT b.vec_id AS qid, a.vec_id AS id,
        |    ROW_NUMBER() OVER (PARTITION BY b.vec_id
@@ -604,10 +575,8 @@ object LlmOracle {
        |all_docs AS (SELECT id, text FROM samp
        |  UNION ALL SELECT id + 1000000, text || ' zz qq' FROM samp),
        |b AS (SELECT id,
-       |    list_distinct(list_transform(
-       |      range(1, CAST(greatest(len(string_split(nt, ' ')) - 2, 1) AS BIGINT) + 1),
-       |      i -> array_to_string((string_split(nt, ' '))[CAST(i AS INT):CAST(i AS INT)+2], ' '))) AS sh
-       |  FROM (SELECT id, trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS nt
+       |    ${shinglesSql(2)} AS sh
+       |  FROM (SELECT id, $normSql AS nt
        |        FROM all_docs)),
        |sg AS (SELECT id, list_transform(range(0, 16), k ->
        |    list_min(list_transform(sh,
@@ -639,14 +608,12 @@ object LlmOracle {
     * at sf0.1 (10k docs). Bit-identical output verified against the
     * all-pairs form at sf0.01/sf0.001. */
   private val d2PairCtes: String =
-    """WITH RECURSIVE all_docs AS (
+    s"""WITH RECURSIVE all_docs AS (
       |  SELECT doc_id, text FROM documents
       |  UNION ALL SELECT doc_id + 1000000, text || ' zz qq' FROM documents),
       |b AS (SELECT doc_id,
-      |    list_distinct(list_transform(
-      |      range(1, CAST(greatest(len(string_split(nt, ' ')) - 2, 1) AS BIGINT) + 1),
-      |      i -> array_to_string((string_split(nt, ' '))[CAST(i AS INT):CAST(i AS INT)+2], ' '))) AS sh
-      |  FROM (SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS nt
+      |    ${shinglesSql(2)} AS sh
+      |  FROM (SELECT doc_id, $normSql AS nt
       |        FROM all_docs)),
       |dg AS (SELECT doc_id, len(sh) AS sz1, unnest(sh) AS g FROM b),
       |j AS (
@@ -662,14 +629,14 @@ object LlmOracle {
     * pos − row_number. Ends at `isl` (one row per matched window);
     * `tk` (doc_id, ts) stays visible for d21's removal replay. */
   private val d20SpanCtes: String =
-    """WITH corpus AS (
+    s"""WITH corpus AS (
       |  SELECT doc_id, text FROM documents
       |  UNION ALL SELECT doc_id + 1000000, text FROM documents
       |  WHERE doc_id < 20
       |  UNION ALL SELECT doc_id + 2000000, 'qq ww ee rr tt ' || text
       |  FROM documents WHERE doc_id >= 20 AND doc_id < 40),
       |tk AS (SELECT doc_id,
-      |    string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS ts
+      |    $tokensSql AS ts
       |  FROM corpus),
       |g0 AS (SELECT doc_id, ts,
       |    unnest(generate_series(1, len(ts) - 12)) AS i
@@ -682,10 +649,7 @@ object LlmOracle {
       |  FROM g a JOIN g b ON a.gs = b.gs
       |    AND (a.doc_id < b.doc_id
       |      OR (a.doc_id = b.doc_id AND a.pos < b.pos))),
-      |isl AS (SELECT id_a, id_b, pos_a, pos_b, pos_a - pos_b AS diag,
-      |    pos_a - ROW_NUMBER() OVER (PARTITION BY id_a, id_b, pos_a - pos_b
-      |      ORDER BY pos_a) AS island
-      |  FROM p)""".stripMargin
+      |$islandCte""".stripMargin
 
   /** d21/d23 removal replay: d20's span chain + later (b-side)
     * occurrences cut, per-doc interval UNION via the same
@@ -734,7 +698,7 @@ object LlmOracle {
     * multiplicity arithmetic. Corpus = d20's + a third copy of
     * docs < 10. */
   private val d22GroupedCtes: String =
-    """WITH corpus AS (
+    s"""WITH corpus AS (
       |  SELECT doc_id, text FROM documents
       |  UNION ALL SELECT doc_id + 1000000, text FROM documents
       |  WHERE doc_id < 20
@@ -743,7 +707,7 @@ object LlmOracle {
       |  UNION ALL SELECT doc_id + 3000000, text FROM documents
       |  WHERE doc_id < 10),
       |nrm AS (SELECT doc_id,
-      |    trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS nt
+      |    $normSql AS nt
       |  FROM corpus),
       |grp AS (SELECT nt, MIN(doc_id) AS rep, COUNT(*) AS gsz
       |  FROM nrm GROUP BY nt),
@@ -761,10 +725,7 @@ object LlmOracle {
       |  FROM g a JOIN g b ON a.gs = b.gs
       |    AND (a.doc_id < b.doc_id
       |      OR (a.doc_id = b.doc_id AND a.pos < b.pos))),
-      |isl AS (SELECT id_a, id_b, pos_a, pos_b, pos_a - pos_b AS diag,
-      |    pos_a - ROW_NUMBER() OVER (PARTITION BY id_a, id_b, pos_a - pos_b
-      |      ORDER BY pos_a) AS island
-      |  FROM p),
+      |$islandCte,
       |spans AS (SELECT id_a, id_b, MIN(pos_a) AS start_a,
       |    MIN(pos_b) AS start_b, COUNT(*) + 12 AS span_tokens
       |  FROM isl GROUP BY id_a, id_b, diag, island)""".stripMargin
@@ -962,7 +923,7 @@ object LlmOracle {
       s"($terms) / $scale AS y${i + 1}"
     }.mkString(",\n       |  ")
     s"""WITH ve AS (SELECT vec_id, label,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+       |    $embVecSql AS v
        |  FROM embeddings)
        |SELECT vec_id, label,
        |  $cols
@@ -973,14 +934,14 @@ object LlmOracle {
     * (ip(c,c) − 2·ip(v,c)) ASC, cid ASC; update = per-dim AVG rounded
     * to 6 (the round-6 resync makes the AVG order-independence moot);
     * emptied cells COALESCE to their previous centroid. Iteration CTEs
-    * are generated from one template so all three are identical. */
-  private def e3IterSql(i: Int): String = {
-    val (prev, a, m, c) = (s"c${i - 1}", s"a$i", s"m$i", s"c$i")
+    * are generated from one template so all three are identical; the
+    * name suffix `x` lets two fits (e12) coexist in one WITH. */
+  private def lloydIterSql(i: Int, x: String): String = {
+    val (prev, a, m, c) = (s"c${i - 1}$x", s"a$i$x", s"m$i$x", s"c$i$x")
     s"""$a AS (SELECT vec_id, v, cid AS cell FROM (
        |    SELECT e.vec_id, e.v, c.cid,
        |      ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-       |        list_inner_product(c.cv, c.cv) -
-       |        2 * list_inner_product(e.v, c.cv) ASC, c.cid ASC) AS rn
+       |        ${centroidDistSql("e.v", "\n        ")} ASC, c.cid ASC) AS rn
        |    FROM emb e CROSS JOIN $prev c) t WHERE rn = 1),
        |$m AS (SELECT cell, list(m ORDER BY dim) AS cv FROM (
        |    SELECT a.cell, d.dim, ROUND(AVG(a.v[d.dim]), 6) AS m
@@ -993,15 +954,13 @@ object LlmOracle {
     * fit chain, reused by the e9 silhouette oracle so the quality read
     * certifies against the SAME centroids. */
   private val e3CtesSql: String =
-    s"""emb AS (SELECT vec_id,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
+    s"""${embCte("emb")},
        |dims AS (SELECT UNNEST(range(1, 65)) AS dim),
        |c0 AS (SELECT ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
        |      vec_id) - 1 AS cid, v AS cv
        |  FROM (SELECT vec_id, v FROM emb
-       |        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 8) t),
-       |${(1 to 3).map(e3IterSql).mkString(",\n")}""".stripMargin
+       |        ORDER BY $md5OrderSql LIMIT 8) t),
+       |${(1 to 3).map(lloydIterSql(_, "")).mkString(",\n")}""".stripMargin
 
   /** x30 oracle: x2's verbatim score/token-count fragments (the IEEE
     * sequences x2's hash match proves identical), conditional-summed
@@ -1009,18 +968,15 @@ object LlmOracle {
   // x2's token-count and composite-score fragments (IEEE-identical to
   // TextAnalysis.qualityColumns — proven by x2's hash match), shared by
   // the x30 yield curve and the p4 datasheet oracles
-  private val qToksSql =
-    "len(string_split_regex(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '))"
   private val qStopSql =
-    "len(list_filter(string_split_regex(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '), " +
-      "t -> t IN ('the','and','of','to','in','is','you','that','it','for','a')))"
+    s"len(list_filter(string_split_regex($normSql, ' '), t -> t IN ${stopListSql("en")}))"
   private val qScoreSql =
-    s"least($qToksSql / 100.0, 1.0) * 0.4 " +
+    s"least($tokenCountSql / 100.0, 1.0) * 0.4 " +
       s"+ (length(regexp_replace(text, '[^A-Za-z]', '', 'g')) / greatest(length(text), 1)) * 0.4 " +
-      s"+ least($qStopSql / greatest($qToksSql, 1) * 5.0, 1.0) * 0.2"
+      s"+ least($qStopSql / greatest($tokenCountSql, 1) * 5.0, 1.0) * 0.2"
 
   private def x30OracleSql: String = {
-    val toks = qToksSql
+    val toks = tokenCountSql
     val score = qScoreSql
     val taus = Seq("0.3", "0.5", "0.7", "0.9")
     val sums = taus.zipWithIndex.map { case (t0, i) =>
@@ -1045,15 +1001,12 @@ object LlmOracle {
     * tie-break x1's hash match proves against the compiled kernel). */
   private def langPredCtes(sfx: String, src: String): String =
     s"""b$sfx AS (SELECT doc_id,
-       |    string_split(trim(regexp_replace(lower($src), '\\s+', ' ', 'g')), ' ') AS toks,
+       |    string_split(${normTextSql(src)}, ' ') AS toks,
        |    length(regexp_replace($src, '[^\\x{4e00}-\\x{9fff}]', '', 'g'))
        |      / greatest(length($src), 1) AS cjk
        |  FROM h),
        |s$sfx AS (SELECT doc_id, cjk,
-       |    len(list_filter(toks, t -> t IN ('the','and','of','to','in','is','you','that','it','for','a'))) / greatest(len(toks),1) AS s_en,
-       |    len(list_filter(toks, t -> t IN ('der','die','und','das','ist','nicht','mit','ein','zu','von'))) / greatest(len(toks),1) AS s_de,
-       |    len(list_filter(toks, t -> t IN ('el','la','de','que','y','en','un','para','con','por'))) / greatest(len(toks),1) AS s_es,
-       |    len(list_filter(toks, t -> t IN ('le','la','de','et','les','des','une','pour','que','dans'))) / greatest(len(toks),1) AS s_fr
+       |    $stopScoresSql
        |  FROM b$sfx),
        |p$sfx AS (SELECT doc_id,
        |    CASE WHEN cjk > 0.3 THEN 'zh'
@@ -1083,21 +1036,6 @@ object LlmOracle {
   /** e12 oracle helpers: the e3 iteration template with a NAME SUFFIX
     * so two full fit chains (init salts "" and "b") coexist in one
     * WITH, then the contingency/ARI arithmetic in exact integers. */
-  private def e12IterSql(i: Int, x: String): String = {
-    val (prev, a, m, c) = (s"c${i - 1}$x", s"a$i$x", s"m$i$x", s"c$i$x")
-    s"""$a AS (SELECT vec_id, v, cid AS cell FROM (
-       |    SELECT e.vec_id, e.v, c.cid,
-       |      ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-       |        list_inner_product(c.cv, c.cv) -
-       |        2 * list_inner_product(e.v, c.cv) ASC, c.cid ASC) AS rn
-       |    FROM emb e CROSS JOIN $prev c) t WHERE rn = 1),
-       |$m AS (SELECT cell, list(m ORDER BY dim) AS cv FROM (
-       |    SELECT a.cell, d.dim, ROUND(AVG(a.v[d.dim]), 6) AS m
-       |    FROM $a a CROSS JOIN dims d GROUP BY a.cell, d.dim) t GROUP BY cell),
-       |$c AS (SELECT p.cid, COALESCE(m.cv, p.cv) AS cv
-       |  FROM $prev p LEFT JOIN $m m ON m.cell = p.cid)""".stripMargin
-  }
-
   private def e12ChainSql(x: String, salt: String): String =
     s"""c0$x AS (SELECT ROW_NUMBER() OVER (ORDER BY
        |      md5('$salt' || CAST(vec_id AS VARCHAR)), vec_id) - 1 AS cid,
@@ -1105,20 +1043,17 @@ object LlmOracle {
        |  FROM (SELECT vec_id, v FROM emb
        |        ORDER BY md5('$salt' || CAST(vec_id AS VARCHAR)), vec_id
        |        LIMIT 8) t),
-       |${(1 to 3).map(i => e12IterSql(i, x)).mkString(",\n")}""".stripMargin
+       |${(1 to 3).map(lloydIterSql(_, x)).mkString(",\n")}""".stripMargin
 
   private def e12FinSql(x: String, cCol: String): String =
     s"""fin$x AS (SELECT vec_id, cid AS $cCol FROM (
        |    SELECT e.vec_id, c.cid,
        |      ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-       |        list_inner_product(c.cv, c.cv) -
-       |        2 * list_inner_product(e.v, c.cv) ASC, c.cid ASC) AS rn
+       |        ${centroidDistSql("e.v", "\n        ")} ASC, c.cid ASC) AS rn
        |    FROM emb e CROSS JOIN c3$x c) t WHERE rn = 1)""".stripMargin
 
   private def e12OracleSql: String =
-    s"""WITH emb AS (SELECT vec_id,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
+    s"""WITH ${embCte("emb")},
        |dims AS (SELECT UNNEST(range(1, 65)) AS dim),
        |${e12ChainSql("xa", "")},
        |${e12ChainSql("xb", "b")},
@@ -1145,12 +1080,10 @@ object LlmOracle {
     s"""WITH $e3CtesSql,
        |fin AS (SELECT vec_id, cid AS cluster, d, ipvv FROM (
        |    SELECT e.vec_id, c.cid,
-       |      list_inner_product(c.cv, c.cv) -
-       |      2 * list_inner_product(e.v, c.cv) AS d,
+       |      ${centroidDistSql("e.v", "\n      ")} AS d,
        |      list_inner_product(e.v, e.v) AS ipvv,
        |      ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-       |        list_inner_product(c.cv, c.cv) -
-       |        2 * list_inner_product(e.v, c.cv) ASC, c.cid ASC) AS rn
+       |        ${centroidDistSql("e.v", "\n        ")} ASC, c.cid ASC) AS rn
        |    FROM emb e CROSS JOIN c3 c) t WHERE rn = 1)
        |SELECT vec_id, cluster,
        |  ROUND(sqrt(GREATEST(0.0, d + ipvv)), 6) AS dist
@@ -1162,12 +1095,10 @@ object LlmOracle {
   private val e9OracleSql: String =
     s"""WITH $e3CtesSql,
        |ds AS (SELECT e.vec_id, c.cid,
-       |    list_inner_product(c.cv, c.cv) -
-       |      2 * list_inner_product(e.v, c.cv) AS d,
+       |    ${centroidDistSql("e.v", "\n      ")} AS d,
        |    list_inner_product(e.v, e.v) AS ipvv,
        |    ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-       |      list_inner_product(c.cv, c.cv) -
-       |      2 * list_inner_product(e.v, c.cv) ASC, c.cid ASC) AS rn
+       |      ${centroidDistSql("e.v", "\n      ")} ASC, c.cid ASC) AS rn
        |  FROM emb e CROSS JOIN c3 c),
        |ab AS (SELECT o.vec_id, o.cid AS cluster,
        |    sqrt(GREATEST(0.0, o.d + o.ipvv)) AS a,
@@ -1185,7 +1116,7 @@ object LlmOracle {
 
   /** p1 oracle body (shared with p2, which filters to batch ids). */
   private val p1OracleSql: String =
-    """WITH corpus AS (
+    s"""WITH corpus AS (
       |  SELECT doc_id, text FROM documents
       |  UNION ALL SELECT doc_id + 1000000, text FROM documents),
       |dup AS (SELECT doc_id, md5(text) AS dg FROM corpus),
@@ -1194,21 +1125,19 @@ object LlmOracle {
       |    CASE WHEN d.doc_id <> k.keeper THEN k.keeper END AS dup_of
       |  FROM dup d JOIN keep0 k USING (dg)),
       |cg AS (SELECT doc_id,
-      |    list_distinct(list_transform(
-      |      range(1, CAST(greatest(len(string_split(nt, ' ')) - 12, 1) AS BIGINT) + 1),
-      |      i -> array_to_string((string_split(nt, ' '))[CAST(i AS INT):CAST(i AS INT)+12], ' '))) AS sh
-      |  FROM (SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS nt
+      |    ${shinglesSql(12)} AS sh
+      |  FROM (SELECT doc_id, $normSql AS nt
       |        FROM corpus)),
       |eg AS (SELECT DISTINCT unnest(sh) AS g FROM cg WHERE doc_id < 20),
       |docg AS (SELECT doc_id, unnest(sh) AS g FROM cg),
       |hits AS (SELECT DISTINCT doc_id FROM docg JOIN eg USING (g)),
       |q AS (SELECT doc_id,
-      |    CAST(len(string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS BIGINT) AS n_tokens,
-      |    least(len(string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) / 100.0, 1.0) * 0.4
+      |    CAST($tokenCountSql AS BIGINT) AS n_tokens,
+      |    least($tokenCountSql / 100.0, 1.0) * 0.4
       |     + (length(regexp_replace(text, '[^A-Za-z]', '', 'g')) / greatest(length(text), 1)) * 0.4
-      |     + least(len(list_filter(string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' '),
-      |          t -> t IN ('the','and','of','to','in','is','you','that','it','for','a')))
-      |        / greatest(len(string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')), 1) * 5.0, 1.0) * 0.2
+      |     + least(len(list_filter(string_split_regex($normSql, ' '),
+      |          t -> t IN ${stopListSql("en")}))
+      |        / greatest($tokenCountSql, 1) * 5.0, 1.0) * 0.2
       |     AS quality_score
       |  FROM corpus)
       |SELECT v.doc_id, v.is_dup, v.dup_of,
@@ -1269,7 +1198,7 @@ object LlmOracle {
     * exact integer DIV, cumulative window over the 20 bucket rows.
     * Every value is an exact integer on both engines. */
   private def x33OracleSql: String =
-    s"""WITH base AS (SELECT doc_id, string_split($normSql, ' ') AS toks
+    s"""WITH base AS (SELECT doc_id, $tokensSql AS toks
        |  FROM documents),
        |b AS (SELECT MIN(doc_id) AS lo, MAX(doc_id) AS hi FROM base),
        |wb AS (SELECT doc_id, toks,
@@ -1337,7 +1266,7 @@ object LlmOracle {
        |  SELECT doc_id, text FROM documents
        |  UNION ALL SELECT doc_id + 1000000, text || ' zz qq' FROM documents),
        |base AS (SELECT doc_id,
-       |    trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS t
+       |    $normSql AS t
        |  FROM corpus),
        |b2 AS (SELECT doc_id, t, len(t) AS ln FROM base),
        |pos AS (SELECT doc_id, t, ln, unnest(range(8, ln + 1)) AS i
@@ -1453,11 +1382,11 @@ object LlmOracle {
     // "min id touching the position < d"; fill = bits/2^13 (EXACT
     // power-of-two division), pred_fpr = ((f·f)·f) pinned left-assoc
     "d18_bloom_dedup" ->
-      """WITH pool AS (SELECT doc_id, source, text FROM documents
+      s"""WITH pool AS (SELECT doc_id, source, text FROM documents
         |  UNION ALL
         |  SELECT doc_id + 1000000, source, text FROM documents),
         |d AS (SELECT doc_id AS id, source,
-        |    md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS digest
+        |    md5($normSql) AS digest
         |  FROM pool),
         |hj AS (SELECT unnest(range(0, 3)) AS j),
         |pos AS (SELECT id,
@@ -1592,7 +1521,7 @@ object LlmOracle {
     // rows must read N_r = 0, and N_{r+1} comes from the GRID lead —
     // a sparse lead would skip over absent counts)
     "x35_good_turing" ->
-      s"""WITH tok AS (SELECT unnest(string_split($normSql, ' ')) AS tok
+      s"""WITH tok AS (SELECT unnest($tokensSql) AS tok
         |  FROM documents),
         |tc AS (SELECT tok, COUNT(*) AS c FROM tok GROUP BY tok),
         |st AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM tc),
@@ -1614,7 +1543,7 @@ object LlmOracle {
     // short docs (< 3 tokens) contribute one partial shingle, matching
     // TextHashKernels.wordShingles
     "x34_source_novelty" ->
-      s"""WITH base AS (SELECT source, string_split($normSql, ' ') AS toks
+      s"""WITH base AS (SELECT source, $tokensSql AS toks
         |  FROM documents),
         |b2 AS (SELECT source, toks, len(toks) AS n FROM base),
         |gr AS (SELECT source, unnest(CASE WHEN n >= 3 THEN
@@ -1635,7 +1564,7 @@ object LlmOracle {
     // division (≡ Spark div on positives), BIGINT outputs, one
     // exactly-representable terminal IEEE division for epochs
     "p5_mixing_plan" ->
-      s"""WITH d AS (SELECT source, CAST($qToksSql AS BIGINT) AS n_tokens
+      s"""WITH d AS (SELECT source, CAST($tokenCountSql AS BIGINT) AS n_tokens
          |  FROM documents),
          |av AS (SELECT source, CAST(SUM(n_tokens) AS BIGINT) AS avail
          |  FROM d GROUP BY source),
@@ -1849,7 +1778,7 @@ object LlmOracle {
     // OOV floor; per-bigram log-probs as 9-decimal DECIMALs so the sum
     // is order-free on both engines
     "x22_bigram_ppl" ->
-      s"""WITH base AS (SELECT doc_id, string_split($normSql, ' ') AS toks
+      s"""WITH base AS (SELECT doc_id, $tokensSql AS toks
         |  FROM documents),
         |ucnt AS (SELECT tok, COUNT(*) AS cnt
         |  FROM (SELECT unnest(toks) AS tok FROM base) GROUP BY 1),
@@ -1886,7 +1815,7 @@ object LlmOracle {
     // r11 correctly-rounded-cast device; no terminal exp crosses the
     // gate since the len_k10 ulp finding)
     "x40_kneser_ney" ->
-      s"""WITH base AS (SELECT doc_id, string_split($normSql, ' ') AS toks
+      s"""WITH base AS (SELECT doc_id, $tokensSql AS toks
         |  FROM documents),
         |docs2 AS (SELECT doc_id, toks FROM base WHERE len(toks) >= 2),
         |pos AS (SELECT doc_id, toks,
@@ -1958,7 +1887,7 @@ object LlmOracle {
     // tok) vocabulary cut, same smooth-idf arithmetic; ln washed by
     // ROUND(..,6)
     "x21_tfidf" ->
-      s"""WITH base AS (SELECT doc_id, string_split($normSql, ' ') AS toks
+      s"""WITH base AS (SELECT doc_id, $tokensSql AS toks
         |  FROM documents),
         |tok AS (SELECT doc_id, unnest(toks) AS tok FROM base),
         |tfx AS (SELECT doc_id, tok, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
@@ -1991,7 +1920,7 @@ object LlmOracle {
     // of two int64->double casts
     "x39_mattr" ->
       s"""WITH base AS (SELECT doc_id,
-         |    list_filter(string_split($normSql, ' '), t -> t <> '')
+         |    list_filter($tokensSql, t -> t <> '')
          |      AS toks FROM documents),
          |d AS (SELECT doc_id, toks, CAST(len(toks) AS INT) AS n
          |  FROM base),
@@ -2016,7 +1945,7 @@ object LlmOracle {
     // engines — DuckDB 1.0's scale-18 decimal->double cast is NOT)
     "x38_zipf" ->
       s"""WITH tk AS (SELECT source, tok, COUNT(*) AS c FROM (
-         |    SELECT source, unnest(string_split($normSql, ' ')) AS tok
+         |    SELECT source, unnest($tokensSql) AS tok
          |    FROM documents) WHERE tok <> '' GROUP BY 1, 2),
          |rk AS (SELECT source, c,
          |    ROW_NUMBER() OVER (PARTITION BY source
@@ -2062,9 +1991,9 @@ object LlmOracle {
     // x32: identical dense-filled Laplace table, identical pair terms
     // (x24's round-9 + 0.0 device), exact decimal sums
     "x32_source_drift_matrix" ->
-      """WITH tk AS (SELECT source, tok FROM (
+      s"""WITH tk AS (SELECT source, tok FROM (
         |    SELECT source, unnest(string_split(
-        |      trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS tok
+        |      $normSql, ' ')) AS tok
         |    FROM documents) WHERE tok <> ''),
         |c AS (SELECT source, tok, COUNT(*) AS c FROM tk GROUP BY 1, 2),
         |vocab AS (SELECT DISTINCT tok FROM c),
@@ -2091,7 +2020,7 @@ object LlmOracle {
          |         THEN p.text ELSE r.text END AS text
          |  FROM raw r LEFT JOIN raw p ON p.doc_id = r.doc_id - 1),
          |q AS (SELECT doc_id, lang, sha256($normSql) AS digest,
-         |    CAST($qToksSql AS BIGINT) AS n_tokens,
+         |    CAST($tokenCountSql AS BIGINT) AS n_tokens,
          |    CAST(ROUND($qScoreSql, 6) AS DECIMAL(12,6)) AS q6
          |  FROM pl),
          |dup AS (SELECT digest FROM q GROUP BY digest HAVING COUNT(*) >= 2),
@@ -2146,7 +2075,7 @@ object LlmOracle {
     // shape with the asymmetric metric); Spark's hashed-gram merge scan
     // must agree exactly
     "d12_containment" ->
-      """WITH corpus AS (
+      s"""WITH corpus AS (
         |  SELECT doc_id, text, source FROM documents
         |  UNION ALL
         |  SELECT doc_id + 1000000 AS doc_id,
@@ -2159,7 +2088,7 @@ object LlmOracle {
         |      range(1, CAST(greatest(length(nt) - 2, 1) AS BIGINT) + 1),
         |      i -> substr(nt, CAST(i AS INT), 3))) AS g
         |  FROM (SELECT doc_id, source, text,
-        |          trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS nt
+        |          $normSql AS nt
         |        FROM corpus)),
         |j AS (SELECT a.id AS ia, bb.id AS ib,
         |    CAST(len(list_intersect(a.g, bb.g)) AS DOUBLE) AS common,
@@ -2361,13 +2290,7 @@ object LlmOracle {
     // e4: covariance recomputed per pair via AVG; round-6 washes the
     // summation-order wobble on both sides (the e1 precedent)
     "e4_covariance" ->
-      """WITH e AS (SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |d AS (SELECT CAST(unnest(range(1, 65)) AS INT) AS i),
-        |p AS (SELECT a.i AS i, b.i AS j FROM d a JOIN d b ON b.i >= a.i),
-        |m AS (SELECT p.i, p.j, AVG(v[p.i] * v[p.j]) AS exy,
-        |        AVG(v[p.i]) AS ex, AVG(v[p.j]) AS ey
-        |      FROM e CROSS JOIN p GROUP BY p.i, p.j)
+      s"""WITH $momentCtes
         |SELECT i - 1 AS dim_i, j - 1 AS dim_j,
         |  ROUND(exy - ex * ey, 6) + 0.0 AS cov
         |FROM m ORDER BY dim_i, dim_j""".stripMargin,
@@ -2375,13 +2298,7 @@ object LlmOracle {
     // decimal hop), BIGINT trace/Frobenius sums, pinned int64→double
     // product + division; /64 is an exact power-of-two scaling
     "e19_effective_rank" ->
-      """WITH e AS (SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |d AS (SELECT CAST(unnest(range(1, 65)) AS INT) AS i),
-        |p AS (SELECT a.i AS i, b.i AS j FROM d a JOIN d b ON b.i >= a.i),
-        |m AS (SELECT p.i, p.j, AVG(v[p.i] * v[p.j]) AS exy,
-        |        AVG(v[p.i]) AS ex, AVG(v[p.j]) AS ey
-        |      FROM e CROSS JOIN p GROUP BY p.i, p.j),
+      s"""WITH $momentCtes,
         |c AS (SELECT i, j,
         |    CAST(CAST(ROUND(exy - ex * ey, 6) + 0.0 AS DECIMAL(18,6))
         |      * 1000000 AS BIGINT) AS c6 FROM m),
@@ -2405,13 +2322,7 @@ object LlmOracle {
     // sequence as the Spark side (cov first, variance product under
     // one sqrt), NULL on zero variance, round-6 + 0.0
     "e8_corr_matrix" ->
-      """WITH e AS (SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |d AS (SELECT CAST(unnest(range(1, 65)) AS INT) AS i),
-        |p AS (SELECT a.i AS i, b.i AS j FROM d a JOIN d b ON b.i >= a.i),
-        |m AS (SELECT p.i, p.j, AVG(v[p.i] * v[p.j]) AS exy,
-        |        AVG(v[p.i]) AS ex, AVG(v[p.j]) AS ey
-        |      FROM e CROSS JOIN p GROUP BY p.i, p.j),
+      s"""WITH $momentCtes,
         |vr AS (SELECT i, exy - ex * ey AS var FROM m WHERE i = j)
         |SELECT m.i - 1 AS dim_i, m.j - 1 AS dim_j,
         |  ROUND(CASE WHEN vi.var * vj.var <= 0.0 THEN NULL
@@ -2424,22 +2335,14 @@ object LlmOracle {
     // within-cell pairs, min-id verdict. Every float op is the same
     // IEEE sequence as the Spark side, so the 0.95 cut is exact.
     "d10_semantic_dedup" ->
-      """WITH emb0 AS (SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |  FROM embeddings),
+      s"""WITH ${embCte("emb0")},
         |corpus AS (SELECT vec_id, v FROM emb0
         |  UNION ALL SELECT vec_id + 100000, v FROM emb0 WHERE vec_id < 40),
         |cent AS (SELECT vec_id AS cid, v AS cv,
         |    sqrt(list_inner_product(v, v)) AS nc FROM corpus
-        |  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
+        |  ORDER BY $md5OrderSql LIMIT 16),
         |b AS (SELECT vec_id, v, sqrt(list_inner_product(v, v)) AS nv FROM corpus),
-        |assign AS (SELECT vec_id, v, nv, cid AS cell FROM (
-        |    SELECT b.vec_id, b.v, b.nv, c.cid,
-        |      ROW_NUMBER() OVER (PARTITION BY b.vec_id ORDER BY
-        |        CASE WHEN b.nv * c.nc = 0.0 THEN 0.0
-        |             ELSE -(list_inner_product(b.v, c.cv) / (b.nv * c.nc))
-        |        END ASC, c.cid ASC) AS rn
-        |    FROM b CROSS JOIN cent c) t WHERE rn = 1),
+        |$cosineAssignCte,
         |hits AS (SELECT bb.vec_id AS id_b, a.vec_id AS id_a,
         |    CASE WHEN a.nv * bb.nv = 0.0 THEN 0.0
         |         ELSE list_inner_product(a.v, bb.v) / (a.nv * bb.nv) END AS cos
@@ -2459,8 +2362,8 @@ object LlmOracle {
     // cosine arithmetic downstream is bit-identical (list_inner_product
     // == ArrayDotProduct, left-to-right)
     "e1_embed_outliers" ->
-      """WITH ve AS (SELECT vec_id, label,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+      s"""WITH ve AS (SELECT vec_id, label,
+        |    $embVecSql AS v
         |  FROM embeddings),
         |u AS (SELECT label, vec_id, i, v[CAST(i AS INT)] AS x
         |  FROM ve, (SELECT unnest(range(1, 65)) AS i) t),
@@ -2516,16 +2419,13 @@ object LlmOracle {
         |),
         |lb AS (
         |  SELECT doc_id,
-        |    string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS toks,
+        |    $tokensSql AS toks,
         |    length(regexp_replace(text, '[^\\x{4e00}-\\x{9fff}]', '', 'g'))
         |      / greatest(length(text), 1) AS cjk
         |  FROM documents),
         |ls AS (
         |  SELECT doc_id, cjk,
-        |    len(list_filter(toks, t -> t IN ('the','and','of','to','in','is','you','that','it','for','a'))) / greatest(len(toks),1) AS s_en,
-        |    len(list_filter(toks, t -> t IN ('der','die','und','das','ist','nicht','mit','ein','zu','von'))) / greatest(len(toks),1) AS s_de,
-        |    len(list_filter(toks, t -> t IN ('el','la','de','que','y','en','un','para','con','por'))) / greatest(len(toks),1) AS s_es,
-        |    len(list_filter(toks, t -> t IN ('le','la','de','et','les','des','une','pour','que','dans'))) / greatest(len(toks),1) AS s_fr
+        |    $stopScoresSql
         |  FROM lb),
         |lp AS (
         |  SELECT doc_id,
@@ -2572,15 +2472,13 @@ object LlmOracle {
     // Hamilton allocation at k = N div 10 + the boundary quarantine;
     // every count crosses the gate as BIGINT
     "p7_leakage_free_split" ->
-      """WITH all_docs AS (
+      s"""WITH all_docs AS (
         |  SELECT doc_id, text, lang, source FROM documents
         |  UNION ALL SELECT doc_id + 1000000, text || ' zz qq', lang, source
         |  FROM documents),
         |b AS (SELECT doc_id,
-        |    list_distinct(list_transform(
-        |      range(1, CAST(greatest(len(string_split(nt, ' ')) - 2, 1) AS BIGINT) + 1),
-        |      i -> array_to_string((string_split(nt, ' '))[CAST(i AS INT):CAST(i AS INT)+2], ' '))) AS sh
-        |  FROM (SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS nt
+        |    ${shinglesSql(2)} AS sh
+        |  FROM (SELECT doc_id, $normSql AS nt
         |        FROM all_docs)),
         |dg AS (SELECT doc_id, len(sh) AS sz1, unnest(sh) AS g FROM b),
         |j AS (
@@ -2635,15 +2533,13 @@ object LlmOracle {
       "WHERE v.doc_id >= 1000000 ORDER BY v.doc_id"),
 
     "d7_decontaminate" ->
-      """WITH corpus AS (
+      s"""WITH corpus AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL SELECT doc_id + 1000000, text || ' zz qq' FROM documents
         |  WHERE doc_id < 20),
         |cg AS (SELECT doc_id,
-        |    list_distinct(list_transform(
-        |      range(1, CAST(greatest(len(string_split(nt, ' ')) - 12, 1) AS BIGINT) + 1),
-        |      i -> array_to_string((string_split(nt, ' '))[CAST(i AS INT):CAST(i AS INT)+12], ' '))) AS sh
-        |  FROM (SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS nt
+        |    ${shinglesSql(12)} AS sh
+        |  FROM (SELECT doc_id, $normSql AS nt
         |        FROM corpus)),
         |eg AS (SELECT DISTINCT unnest(sh) AS g FROM cg WHERE doc_id < 20),
         |dg AS (SELECT doc_id, unnest(sh) AS g FROM cg),
@@ -2660,17 +2556,15 @@ object LlmOracle {
     // docs < 20 land shared_frac = 1; the 5-word-prefixed copies of
     // 20-39 share only interior grams.
     "d8_dup_spans" ->
-      """WITH corpus AS (
+      s"""WITH corpus AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL SELECT doc_id + 1000000, text FROM documents
         |  WHERE doc_id < 20
         |  UNION ALL SELECT doc_id + 2000000, 'qq ww ee rr tt ' || text
         |  FROM documents WHERE doc_id >= 20 AND doc_id < 40),
         |cg AS (SELECT doc_id,
-        |    list_distinct(list_transform(
-        |      range(1, CAST(greatest(len(string_split(nt, ' ')) - 12, 1) AS BIGINT) + 1),
-        |      i -> array_to_string((string_split(nt, ' '))[CAST(i AS INT):CAST(i AS INT)+12], ' '))) AS sh
-        |  FROM (SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS nt
+        |    ${shinglesSql(12)} AS sh
+        |  FROM (SELECT doc_id, $normSql AS nt
         |        FROM corpus)),
         |dg AS (SELECT doc_id, unnest(sh) AS g FROM cg),
         |dupg AS (SELECT g FROM dg GROUP BY g HAVING COUNT(*) > 1),
@@ -2711,8 +2605,8 @@ object LlmOracle {
     // arm re-derives the batch text with the same list_reverse the d9
     // oracle uses
     "d24_cross_substrings" ->
-      """WITH tkp AS (SELECT doc_id,
-        |    string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS ts
+      s"""WITH tkp AS (SELECT doc_id,
+        |    $tokensSql AS ts
         |  FROM documents),
         |batch AS (
         |  SELECT doc_id + 5000000 AS doc_id, text FROM documents WHERE doc_id < 15
@@ -2720,10 +2614,10 @@ object LlmOracle {
         |  FROM documents WHERE doc_id >= 15 AND doc_id < 30
         |  UNION ALL SELECT doc_id + 5000000,
         |    array_to_string(list_reverse(string_split(
-        |      trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')), ' ')
+        |      $normSql, ' ')), ' ')
         |  FROM documents WHERE doc_id >= 30 AND doc_id < 45),
         |tkb AS (SELECT doc_id,
-        |    string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS ts
+        |    $tokensSql AS ts
         |  FROM batch),
         |gp0 AS (SELECT doc_id, ts, unnest(generate_series(1, len(ts) - 12)) AS i
         |  FROM tkp WHERE len(ts) >= 13),
@@ -2738,10 +2632,7 @@ object LlmOracle {
         |p AS (SELECT a.doc_id AS id_a, a.pos AS pos_a,
         |    b.doc_id AS id_b, b.pos AS pos_b
         |  FROM gp a JOIN gb b ON a.gs = b.gs),
-        |isl AS (SELECT id_a, id_b, pos_a, pos_b, pos_a - pos_b AS diag,
-        |    pos_a - ROW_NUMBER() OVER (PARTITION BY id_a, id_b, pos_a - pos_b
-        |      ORDER BY pos_a) AS island
-        |  FROM p)
+        |$islandCte
         |SELECT id_a, id_b, CAST(MIN(pos_a) AS BIGINT) AS start_a,
         |  CAST(MIN(pos_b) AS BIGINT) AS start_b,
         |  CAST(COUNT(*) + 12 AS BIGINT) AS span_tokens
@@ -2786,25 +2677,23 @@ object LlmOracle {
     // hash-match doubles as a 100%-recall proof for the index join),
     // smallest matching id kept via row_number
     "d9_incremental_dedup" ->
-      """WITH batch AS (
+      s"""WITH batch AS (
         |  SELECT doc_id + 5000000 AS doc_id, text FROM documents WHERE doc_id < 15
         |  UNION ALL SELECT doc_id + 5000000, text || ' zz qq' FROM documents
         |  WHERE doc_id >= 15 AND doc_id < 30
         |  UNION ALL SELECT doc_id + 5000000,
         |    array_to_string(list_reverse(string_split(
-        |      trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')), ' ')
+        |      $normSql, ' ')), ' ')
         |  FROM documents WHERE doc_id >= 30 AND doc_id < 45
         |  UNION ALL SELECT doc_id + 6000000,
         |    array_to_string(list_reverse(string_split(
-        |      trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')), ' ')
+        |      $normSql, ' ')), ' ')
         |  FROM documents WHERE doc_id >= 30 AND doc_id < 38),
         |pool AS (SELECT doc_id, text FROM documents
         |  UNION ALL SELECT doc_id, text FROM batch),
         |psh AS (SELECT doc_id,
-        |    list_distinct(list_transform(
-        |      range(1, CAST(greatest(len(string_split(nt, ' ')) - 2, 1) AS BIGINT) + 1),
-        |      i -> array_to_string((string_split(nt, ' '))[CAST(i AS INT):CAST(i AS INT)+2], ' '))) AS sh
-        |  FROM (SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS nt
+        |    ${shinglesSql(2)} AS sh
+        |  FROM (SELECT doc_id, $normSql AS nt
         |        FROM pool)),
         |bsh AS (SELECT doc_id, sh FROM psh WHERE doc_id >= 5000000),
         |v AS (SELECT b.doc_id AS id, p.doc_id AS pid,
@@ -2953,7 +2842,7 @@ object LlmOracle {
     // state exactly like the Spark side's streaming scan
     "x12_pack" ->
       s"""WITH RECURSIVE base AS (SELECT doc_id, source,
-        |    CAST(len(string_split($normSql, ' ')) AS INT) AS n_tok,
+        |    CAST(len($tokensSql) AS INT) AS n_tok,
         |    CAST(row_number() OVER (PARTITION BY source ORDER BY doc_id) AS INT) AS rn
         |  FROM documents),
         |rec AS (
@@ -2975,7 +2864,7 @@ object LlmOracle {
     // corpus vocabulary (no decrement ever fires), which the hash-match
     // itself then proves
     "x14_heavy_hitters" ->
-      s"""WITH base AS (SELECT string_split($normSql, ' ') AS toks FROM documents),
+      s"""WITH base AS (SELECT $tokensSql AS toks FROM documents),
         |tok AS (SELECT unnest(toks) AS tok FROM base)
         |SELECT tok AS item, COUNT(*) AS cnt FROM tok GROUP BY tok
         |ORDER BY cnt DESC, item LIMIT 20""".stripMargin,
@@ -2985,7 +2874,7 @@ object LlmOracle {
     // emitted log-domain (ln_ppl) with the VARCHAR-routed decimal cast
     // — a terminal exp put libm's last ulp ON the 6-dp grid at len_k10
     "x13_unigram_ppl" ->
-      s"""WITH base AS (SELECT doc_id, string_split($normSql, ' ') AS toks
+      s"""WITH base AS (SELECT doc_id, $tokensSql AS toks
         |  FROM documents),
         |tok AS (SELECT doc_id, unnest(toks) AS tok FROM base),
         |counts AS (SELECT tok, COUNT(*) AS cnt FROM tok GROUP BY tok),
@@ -3003,7 +2892,7 @@ object LlmOracle {
     // rightmost-min per window recovered order-free as MAX(j) among
     // positions achieving the window MIN, DISTINCT (pos, fp) pairs
     "x44_winnowing" ->
-      s"""WITH d AS (SELECT doc_id, string_split($normSql, ' ') AS toks
+      s"""WITH d AS (SELECT doc_id, $tokensSql AS toks
         |  FROM documents),
         |g AS (SELECT doc_id,
         |    list_transform(range(0, CAST(len(toks) - 3 AS BIGINT)),
@@ -3035,7 +2924,7 @@ object LlmOracle {
     "x45_rake" -> {
       val stops = graft.operators.TextAnalysis.rakeStopwords
         .map(s => s"'$s'").mkString(", ")
-      s"""WITH d AS (SELECT doc_id, string_split($normSql, ' ') AS toks
+      s"""WITH d AS (SELECT doc_id, $tokensSql AS toks
         |  FROM documents),
         |t AS (SELECT doc_id, toks,
         |    CAST(unnest(range(0, CAST(len(toks) AS BIGINT))) AS BIGINT)
@@ -3076,7 +2965,7 @@ object LlmOracle {
     // the 3-dp constants are small-int/1000 — the same double on both
     // engines by correctly-rounded division either way
     "x43_readability" ->
-      s"""WITH d AS (SELECT doc_id, text, string_split($normSql, ' ') AS toks
+      s"""WITH d AS (SELECT doc_id, text, $tokensSql AS toks
         |  FROM documents),
         |c AS (SELECT doc_id,
         |    CAST(len(toks) AS BIGINT) AS n_words,
@@ -3102,7 +2991,7 @@ object LlmOracle {
     // x42: x13's proven ppl chain as a CTE + the identical per-lang
     // rank window; terciles are pure integer comparisons (rk·3 vs n)
     "x42_ccnet_buckets" ->
-      s"""WITH base AS (SELECT doc_id, string_split($normSql, ' ') AS toks
+      s"""WITH base AS (SELECT doc_id, $tokensSql AS toks
         |  FROM documents),
         |tok AS (SELECT doc_id, unnest(toks) AS tok FROM base),
         |counts AS (SELECT tok, COUNT(*) AS cnt FROM tok GROUP BY tok),
@@ -3133,7 +3022,7 @@ object LlmOracle {
     // −0); counts cast to BIGINT (DuckDB SUM yields HUGEINT)
     "x24_kl_drift" ->
       s"""WITH base AS (SELECT lang = 'en' AS in_a,
-        |    string_split($normSql, ' ') AS toks FROM documents),
+        |    $tokensSql AS toks FROM documents),
         |tok AS (SELECT in_a, unnest(toks) AS tok FROM base),
         |counts AS (SELECT tok,
         |    CAST(SUM(CASE WHEN in_a THEN 1 ELSE 0 END) AS BIGINT) AS c_a,
@@ -3153,8 +3042,8 @@ object LlmOracle {
     // integer '/' is float division on both engines, and the flag is
     // evaluated on the ROUNDED fractions exactly as the Spark side does
     "x8_repetition" ->
-      """WITH base AS (SELECT doc_id,
-        |    string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS toks
+      s"""WITH base AS (SELECT doc_id,
+        |    $tokensSql AS toks
         |  FROM documents),
         |b2 AS (SELECT doc_id, toks, len(toks) AS n_tok FROM base),
         |uni AS (SELECT doc_id, MAX(cnt) AS top_tok FROM (
@@ -3204,18 +3093,16 @@ object LlmOracle {
     // Spark side runs log-round pointer-jump CC over ALL docs; the
     // hash-match proves the fixpoint labels.
     "d6_dup_clusters" ->
-      """WITH RECURSIVE all_docs AS (
+      s"""WITH RECURSIVE all_docs AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL SELECT doc_id + 1000000, text || ' zz qq' FROM documents),
         |nrm AS (SELECT doc_id,
-        |    trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS nt
+        |    $normSql AS nt
         |  FROM all_docs),
         |grp AS (SELECT nt, MIN(doc_id) AS rep, COUNT(*) AS gsz
         |  FROM nrm GROUP BY nt),
         |b AS (SELECT rep AS doc_id,
-        |    list_distinct(list_transform(
-        |      range(1, CAST(greatest(len(string_split(nt, ' ')) - 2, 1) AS BIGINT) + 1),
-        |      i -> array_to_string((string_split(nt, ' '))[CAST(i AS INT):CAST(i AS INT)+2], ' '))) AS sh
+        |    ${shinglesSql(2)} AS sh
         |  FROM grp),
         |dg AS (SELECT doc_id, len(sh) AS sz1, unnest(sh) AS g FROM b),
         |j AS (
@@ -3270,7 +3157,7 @@ object LlmOracle {
     // doubles as a recall proof for the blocked path
     "d5_embed_dup" ->
       s"""WITH all_v AS (
-         |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+         |  SELECT vec_id, $embVecSql AS e
          |  FROM embeddings
          |  UNION ALL
          |  SELECT vec_id + 1000000,
@@ -3303,20 +3190,20 @@ object LlmOracle {
          |LEFT JOIN ov ON nb.qid = ov.qid
          |ORDER BY nb.qid""".stripMargin,
     "x2_quality" ->
-      """SELECT doc_id, n_chars,
-        |  CAST(len(string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS BIGINT) AS n_tokens,
+      s"""SELECT doc_id, n_chars,
+        |  CAST($tokenCountSql AS BIGINT) AS n_tokens,
         |  CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS BIGINT) AS n_punct,
         |  length(regexp_replace(text, '[^A-Za-z]', '', 'g')) / greatest(length(text), 1) AS alpha_ratio,
-        |  len(list_filter(string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' '),
-        |      t -> t IN ('the','and','of','to','in','is','you','that','it','for','a')))
-        |    / greatest(len(string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')), 1) AS stopword_ratio,
-        |  (length(text) - (len(string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) - 1))
-        |    / greatest(len(string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')), 1.0) AS mean_word_len,
-        |  least(len(string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) / 100.0, 1.0) * 0.4
+        |  len(list_filter(string_split_regex($normSql, ' '),
+        |      t -> t IN ${stopListSql("en")}))
+        |    / greatest($tokenCountSql, 1) AS stopword_ratio,
+        |  (length(text) - ($tokenCountSql - 1))
+        |    / greatest($tokenCountSql, 1.0) AS mean_word_len,
+        |  least($tokenCountSql / 100.0, 1.0) * 0.4
         |   + (length(regexp_replace(text, '[^A-Za-z]', '', 'g')) / greatest(length(text), 1)) * 0.4
-        |   + least(len(list_filter(string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' '),
-        |        t -> t IN ('the','and','of','to','in','is','you','that','it','for','a')))
-        |      / greatest(len(string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')), 1) * 5.0, 1.0) * 0.2
+        |   + least(len(list_filter(string_split_regex($normSql, ' '),
+        |        t -> t IN ${stopListSql("en")}))
+        |      / greatest($tokenCountSql, 1) * 5.0, 1.0) * 0.2
         |   AS quality_score
         |FROM documents ORDER BY doc_id""".stripMargin,
     "x5_chunk" ->
@@ -3364,18 +3251,15 @@ object LlmOracle {
     // language attaining the max stopword score (strict > to replace),
     // hence the >= cascade in profile order en,de,es,fr.
     "x1_lang_id" ->
-      """WITH b AS (
+      s"""WITH b AS (
         |  SELECT doc_id, lang,
-        |    string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS toks,
-        |    length(regexp_replace(text, '[^\x{4e00}-\x{9fff}]', '', 'g'))
+        |    $tokensSql AS toks,
+        |    length(regexp_replace(text, '[^\\x{4e00}-\\x{9fff}]', '', 'g'))
         |      / greatest(length(text), 1) AS cjk
         |  FROM documents),
         |s AS (
         |  SELECT doc_id, lang, cjk,
-        |    len(list_filter(toks, t -> t IN ('the','and','of','to','in','is','you','that','it','for','a'))) / greatest(len(toks),1) AS s_en,
-        |    len(list_filter(toks, t -> t IN ('der','die','und','das','ist','nicht','mit','ein','zu','von'))) / greatest(len(toks),1) AS s_de,
-        |    len(list_filter(toks, t -> t IN ('el','la','de','que','y','en','un','para','con','por'))) / greatest(len(toks),1) AS s_es,
-        |    len(list_filter(toks, t -> t IN ('le','la','de','et','les','des','une','pour','que','dans'))) / greatest(len(toks),1) AS s_fr
+        |    $stopScoresSql
         |  FROM b),
         |p AS (
         |  SELECT doc_id, lang, cjk,
@@ -3396,8 +3280,8 @@ object LlmOracle {
     // formula on both engines (Quantize.toInt8); integer dots are exact
     // in double, so no cross-engine drift before the final round(...,6)
     "s4_quant_cosine" ->
-      """WITH base AS (
-        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+      s"""WITH base AS (
+        |  SELECT vec_id, $embVecSql AS v
         |  FROM embeddings),
         |sc AS (
         |  SELECT vec_id, v,
@@ -3436,9 +3320,9 @@ object LlmOracle {
     // x28: identical md5 buckets, cell counts, probe cuts, and the
     // min-over-rows estimate
     "x28_count_min" ->
-      """WITH tk AS (SELECT tok FROM (
+      s"""WITH tk AS (SELECT tok FROM (
         |    SELECT unnest(string_split(
-        |      trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS tok
+        |      $normSql, ' ')) AS tok
         |    FROM documents) WHERE tok <> ''),
         |sd AS (SELECT unnest(range(0, 4)) AS seed),
         |cells AS (SELECT seed,
@@ -3469,13 +3353,13 @@ object LlmOracle {
     // BIT-IDENTICAL to the all-pairs forms at sf0.001/sf0.01/sf0.1
     // before the swap (r12; the r9 d19 blocked-rewrite protocol).
     "d15_kmv_calibration" ->
-      """WITH b AS (
+      s"""WITH b AS (
         |  SELECT doc_id AS id, source, CAST(floor(n_chars / 100.0) AS INT) AS lb,
         |    list_distinct(list_transform(
         |      range(1, CAST(greatest(length(nt) - 2, 1) AS BIGINT) + 1),
         |      i -> substr(nt, CAST(i AS INT), 3))) AS g
         |  FROM (SELECT doc_id, source, n_chars,
-        |          trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS nt
+        |          $normSql AS nt
         |        FROM documents)),
         |kk AS (
         |  SELECT id,
@@ -3501,13 +3385,13 @@ object LlmOracle {
         |      AND list_contains(kb, x))) AS DOUBLE) / len(su) AS j_kmv
         |FROM f ORDER BY id_a, id_b""".stripMargin,
     "d4_ngram_jaccard" ->
-      """WITH b AS (
+      s"""WITH b AS (
         |  SELECT doc_id AS id, source, CAST(floor(n_chars / 100.0) AS INT) AS lb,
         |    list_distinct(list_transform(
         |      range(1, CAST(greatest(length(nt) - 2, 1) AS BIGINT) + 1),
         |      i -> substr(nt, CAST(i AS INT), 3))) AS g
         |  FROM (SELECT doc_id, source, n_chars,
-        |          trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS nt
+        |          $normSql AS nt
         |        FROM documents)),
         |e AS (SELECT id, source, lb, len(g) AS sz1, unnest(g) AS gram FROM b),
         |j AS (
@@ -3556,7 +3440,7 @@ object LlmOracle {
     // md5-prefix fingerprints: CAST('0x'||hex AS BIGINT) parses the same
     // 15-hex-char (60-bit) prefix Spark takes via conv/ShingleMinMd5
     "x4_fingerprint" ->
-      """WITH b AS (SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS nt
+      s"""WITH b AS (SELECT doc_id, $normSql AS nt
         |           FROM documents),
         |t AS (SELECT doc_id, nt, string_split(nt, ' ') AS toks FROM b),
         |sh AS (SELECT doc_id, nt,

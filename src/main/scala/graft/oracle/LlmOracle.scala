@@ -80,12 +80,6 @@ object LlmOracle {
       |  FROM directed),
       |topk AS (SELECT * FROM rk WHERE rk <= 5)""".stripMargin
 
-  /** s7 oracle: the beam search UNROLLED — the proven e6 chain gives
-    * the graph (`topk`) and entry points (`cent`); each hop is a
-    * candidate-set UNION (SQL UNION = the engine's distinct), a
-    * ROW_NUMBER beam cut on unrounded cos (desc, id asc — the TopKAgg
-    * order), and an edge join; self is excluded only at the final
-    * top-10, exactly the [[Similarity.graphTopK]] contract. */
   /** Beam-search CTE chain shared by the s7 and e21 oracles: scores a
     * candidate set against the query vectors, cuts the top-`n` beam on
     * unrounded cos (desc, id asc), expands out-edges through the
@@ -119,6 +113,12 @@ object LlmOracle {
     (head ++ steps).mkString(",\n")
   }
 
+  /** s7 oracle: the beam search UNROLLED — the proven e6 chain gives
+    * the graph (`topk`) and entry points (`cent`); each hop is a
+    * candidate-set UNION (SQL UNION = the engine's distinct), a
+    * ROW_NUMBER beam cut on unrounded cos (desc, id asc — the TopKAgg
+    * order), and an edge join; self is excluded only at the final
+    * top-10, exactly the [[Similarity.graphTopK]] contract. */
   private def s7OracleSql: String =
     s"""WITH $knnTopkCtes,
        |${annBeamChain(hops = 2, beam = 4)},
@@ -197,11 +197,6 @@ object LlmOracle {
        |FROM agg ORDER BY doc_id""".stripMargin
   }
 
-  /** x11 oracle: BM25 recomputed from scratch in SQL, generated from
-    * the SAME term list. Arithmetic mirrors Retrieval.bm25 EXPRESSION
-    * FOR EXPRESSION (unfolded "(1.2 + 1.0)", left-assoc sums, exact
-    * Σdl/N avgdl) so every double op is the same IEEE sequence; ln is
-    * the one library call, washed out by ROUND(...,6). */
   /** Shared BM25 lexical CTE chain (base → tf → st → lexall) — the x11
     * scorer replay, reused verbatim by the s6 hybrid oracle so the
     * fused ranking certifies against the SAME proven lexical scores. */
@@ -231,6 +226,11 @@ object LlmOracle {
        |  FROM tf, st WHERE $anyHit)""".stripMargin
   }
 
+  /** x11 oracle: BM25 recomputed from scratch in SQL, generated from
+    * the SAME term list. Arithmetic mirrors Retrieval.bm25 EXPRESSION
+    * FOR EXPRESSION (unfolded "(1.2 + 1.0)", left-assoc sums, exact
+    * Σdl/N avgdl) so every double op is the same IEEE sequence; ln is
+    * the one library call, washed out by ROUND(...,6). */
   private def x11OracleSql: String =
     s"""WITH $bm25ScoredCtes
        |SELECT * FROM lexall ORDER BY doc_id""".stripMargin
@@ -515,11 +515,6 @@ object LlmOracle {
        |WHERE rk <= 10 ORDER BY qid, rk""".stripMargin
   }
 
-  /** Oracles for the SQL-expressible subset; the rest are rows-only
-    * (probabilistic sketches / LSH top-k with engine-seeded internals). */
-  /** Shared by d2/d6: docs ∪ perturbed copies → distinct word-3-shingle
-    * sets → exact all-pairs jaccard candidates (j). RECURSIVE is inert
-    * for d2 and enables d6's closure CTE. */
   /** e11 oracle: one s1-shape brute-force CTE per prefix dimension,
     * cosine over the SAME list prefix both engines slice. */
   private def e11OracleSql: String = {
@@ -730,12 +725,6 @@ object LlmOracle {
       |    MIN(pos_b) AS start_b, COUNT(*) + 12 AS span_tokens
       |  FROM isl GROUP BY id_a, id_b, diag, island)""".stripMargin
 
-  /** e2 oracle: the 8 seeded planes embedded as literal arrays
-    * (Double.toString round-trips), each output dim one
-    * list_inner_product — bit-identical to ArrayDotProduct. */
-  /** x20 oracle: the whole 5-round BPE fit replayed — word counts,
-    * chr(1)-framed symbol strings, weighted adjacent-pair counts,
-    * (c DESC, l, r) argmax, leftmost-nonoverlapping replace. */
   /** Shared x20/x23 CTE prefix: the full nMerges-round BPE fit as
     * generated CTEs ending in the tokenized vocabulary `v$n`. */
   private def bpeVocabCtes(n: Int): String = {
@@ -764,6 +753,9 @@ object LlmOracle {
        |$iters""".stripMargin
   }
 
+  /** x20 oracle: the whole 5-round BPE fit replayed — word counts,
+    * chr(1)-framed symbol strings, weighted adjacent-pair counts,
+    * (c DESC, l, r) argmax, leftmost-nonoverlapping replace. */
   private def x20OracleSql: String = {
     val n = 5
     s"""${bpeVocabCtes(n)}
@@ -775,9 +767,6 @@ object LlmOracle {
        |ORDER BY word""".stripMargin
   }
 
-  /** x23 oracle: the x20 fit replay extended by the encode join —
-    * per-word token counts from v5, corpus words joined back, integer
-    * sums (order-free, exact). */
   /** Shared BPE per-doc encode CTE chain (vocab fit replay → per-word
     * token counts → per-doc sums) — x23's proven replay, reused by the
     * x36 fertility rollup so it certifies against the SAME chain. */
@@ -795,6 +784,9 @@ object LlmOracle {
        |  FROM w JOIN enc USING (word) WHERE word <> '' GROUP BY 1)""".stripMargin
   }
 
+  /** x23 oracle: the x20 fit replay extended by the encode join —
+    * per-word token counts from v5, corpus words joined back, integer
+    * sums (order-free, exact). */
   private def x23OracleSql: String =
     s"""$bpeEncodeCtes
        |SELECT doc_id, n_words, CAST(n_bpe_tokens AS BIGINT) AS n_bpe_tokens
@@ -816,10 +808,6 @@ object LlmOracle {
        |FROM perdoc p JOIN documents d USING (doc_id)
        |GROUP BY d.source ORDER BY d.source""".stripMargin
 
-  /** e5 oracle: full replay. Exact HUGEINT moment sums on the 1e-6
-    * grid → identical covariance doubles; then the same fixed-order
-    * power iteration (list_inner_product ≡ the strict left-to-right
-    * driver loops), 30 iterations per component, one deflation. */
   /** Shared PCA power-iteration replay CTE chain (ve → mo → cv →
     * a-chain → l1 → cv2 → b-chain → l2) — e5's proven fit replay,
     * reused verbatim by e14 so the spectrum certifies against the SAME
@@ -873,6 +861,10 @@ object LlmOracle {
        |l2 AS (SELECT v AS v2, list_inner_product(v, cvv) AS lam2 FROM l2a)""".stripMargin
   }
 
+  /** e5 oracle: full replay. Exact HUGEINT moment sums on the 1e-6
+    * grid → identical covariance doubles; then the same fixed-order
+    * power iteration (list_inner_product ≡ the strict left-to-right
+    * driver loops), 30 iterations per component, one deflation. */
   private def e5OracleSql: String =
     s"""$pcaChainCtes
        |SELECT e.vec_id, e.label,
@@ -902,6 +894,9 @@ object LlmOracle {
        |ORDER BY component""".stripMargin
   }
 
+  /** e2 oracle: the 8 seeded planes embedded as literal arrays
+    * (Double.toString round-trips), each output dim one
+    * list_inner_product — bit-identical to ArrayDotProduct. */
   private def e2OracleSql: String = {
     val planes = graft.operators.VectorOps.hyperplanes(8, 64, seed = 7L)
     val scale = math.sqrt(64.0)
@@ -1372,6 +1367,8 @@ object LlmOracle {
        |FROM g""".stripMargin
   }
 
+  /** Oracles for the SQL-expressible subset; the rest are rows-only
+    * (probabilistic sketches / LSH top-k with engine-seeded internals). */
   val sql: Map[String, String] = Map(
     "x36_tokenizer_fertility" -> x36OracleSql,
     "e15_embed_drift" -> e15OracleSql,

@@ -1053,7 +1053,7 @@ object LlmQueries {
     * lambdafunction; the `transform(array(split…), ws -> …)[0]`
     * binding evaluates the split exactly once per row because a
     * lambda VARIABLE can never be inlined. Same segments, same
-    * oracles — plan shape only. */
+    * oracle replay — plan shape only. */
   private def tenWordSegs: Column = expr(
     "transform(array(split(text, ' ')), ws -> " +
       "transform(sequence(0, cast(ceil(size(ws)/10.0) as int) - 1), " +
@@ -1803,7 +1803,7 @@ object LlmQueries {
     * wide aggregation), driver-side power iteration (model state), a
     * broadcast literal-vector dot per row. The oracle replays the
     * IDENTICAL IEEE sequence — exact sums, the same 30+30 iterations as
-    * generated CTEs over list_inner_product — so p1/p2/λ1/λ2 all
+    * generated CTEs over DuckDB list dot products — so p1/p2/λ1/λ2 all
     * hash-match bit-exact. */
   def e5PcaProject(s: SparkSession, dir: String): DataFrame =
     EmbedStats.pcaPowerProject(t(s, dir, "embeddings"),

@@ -35,9 +35,8 @@ object Fragments {
     s"CAST(SUM(CAST($col AS DECIMAL(12,2))) AS DOUBLE)"
 
   /** DuckDB fragment: a timestamp or date column as whole epoch
-    * seconds. `events.ts` is TIMESTAMP_NS in parquet, whose `epoch` is
-    * fractional; the cast to microsecond TIMESTAMP and the FLOOR give
-    * the second Spark's `unix_timestamp` reads. */
+    * seconds, floored. `events.ts` is a nanosecond TIMESTAMP in parquet;
+    * the cast to TIMESTAMP makes `epoch` read either type alike. */
   def epochSec(c: String): String =
     s"CAST(FLOOR(epoch(CAST($c AS TIMESTAMP))) AS BIGINT)"
 
@@ -65,6 +64,60 @@ object Fragments {
        |      range(1, CAST(greatest(len(string_split(nt, ' ')) - $k, 1) AS BIGINT) + 1),
        |      i -> array_to_string((string_split(nt, ' '))[CAST(i AS INT):CAST(i AS INT)+$k], ' ')))"""
       .stripMargin
+
+  /** `name`(doc_id, sh): the distinct `k`-token shingles of each
+    * `src`(doc_id, text) row's normalized text. */
+  def shingleCte(name: String, k: Int, src: String): String =
+    s"""$name AS (SELECT doc_id,
+       |    ${shinglesSql(k)} AS sh
+       |  FROM (SELECT doc_id, $normSql AS nt
+       |        FROM $src))""".stripMargin
+
+  /** `j`(id_a, id_b, common, sz) over shingle sets `b`(doc_id, sh): every
+    * pair sharing a shingle, |A∩B| and |A|+|B| as DOUBLE. An inverted
+    * index (unnest, equi-join on the shingle), lossless for any Jaccard
+    * threshold > 0: a pair with J > 0 shares at least one shingle. */
+  val jaccardPairCtes: String =
+    """dg AS (SELECT doc_id, len(sh) AS sz1, unnest(sh) AS g FROM b),
+      |j AS (
+      |  SELECT a.doc_id AS id_a, bb.doc_id AS id_b,
+      |    CAST(COUNT(*) AS DOUBLE) AS common,
+      |    CAST(ANY_VALUE(a.sz1) + ANY_VALUE(bb.sz1) AS DOUBLE) AS sz
+      |  FROM dg a JOIN dg bb ON a.g = bb.g AND a.doc_id < bb.doc_id
+      |  GROUP BY a.doc_id, bb.doc_id)""".stripMargin
+
+  /** `documents` ∪ a copy with ids + 10^6 and a two-token suffix: the
+    * perturbed-copies corpus of `LlmQueries.withCopies`. */
+  val perturbedCopiesSql: String =
+    """  SELECT doc_id, text FROM documents
+      |  UNION ALL SELECT doc_id + 1000000, text || ' zz qq' FROM documents"""
+      .stripMargin
+
+  /** The planted substring corpus (d20–d23): `documents`, exact copies of
+    * docs 0–19 (ids + 10^6), and docs 20–39 behind a 5-token prefix
+    * (ids + 2·10^6). */
+  val plantedDocsSql: String =
+    """  SELECT doc_id, text FROM documents
+      |  UNION ALL SELECT doc_id + 1000000, text FROM documents
+      |  WHERE doc_id < 20
+      |  UNION ALL SELECT doc_id + 2000000, 'qq ww ee rr tt ' || text
+      |  FROM documents WHERE doc_id >= 20 AND doc_id < 40""".stripMargin
+
+  /** Positional 13-gram occurrence pairs over token lists `tk`(doc_id,
+    * ts): `g`(doc_id, pos, gs) per window, `p`(id_a, pos_a, id_b, pos_b)
+    * per ordered pair of equal windows — the input of [[islandCte]]. */
+  val gramPairCtes: String =
+    """g0 AS (SELECT doc_id, ts,
+      |    unnest(generate_series(1, len(ts) - 12)) AS i
+      |  FROM tk WHERE len(ts) >= 13),
+      |g AS (SELECT doc_id, i - 1 AS pos,
+      |    array_to_string(ts[CAST(i AS INT):CAST(i AS INT) + 12], ' ') AS gs
+      |  FROM g0),
+      |p AS (SELECT a.doc_id AS id_a, a.pos AS pos_a,
+      |    b.doc_id AS id_b, b.pos AS pos_b
+      |  FROM g a JOIN g b ON a.gs = b.gs
+      |    AND (a.doc_id < b.doc_id
+      |      OR (a.doc_id = b.doc_id AND a.pos < b.pos)))""".stripMargin
 
   /** A lang-id stop-word profile as an SQL `IN` list, read from the
     * kernel's canonical profiles so engine and oracle share one list. */

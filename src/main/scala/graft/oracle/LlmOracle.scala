@@ -4,7 +4,9 @@ import graft.expressions.CdcChunkDigests
 import graft.llm.LlmQueries.bm25Terms
 import graft.oracle.Fragments._
 
-/** DuckDB replay of every LLM-data query (see [[graft.SparkEntry.oracleSql]]). */
+/** DuckDB replays of the LLM-data registry
+  * ([[graft.llm.LlmQueries.queries]]), served by
+  * [[graft.SparkEntry.oracleSql]]. */
 object LlmOracle {
 
   /** e16 oracle: the identical traversal as generated CTEs — seed =
@@ -317,8 +319,7 @@ object LlmOracle {
       s"(CASE WHEN list_sum(list_transform(th, tok -> CASE WHEN (tok >> $i) & 1 = 1 THEN 1 ELSE -1 END)) > 0 THEN ${1L << i} ELSE 0 END)"
     }.mkString(" + ")
     s"""WITH all_docs AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL SELECT doc_id + 1000000, text || ' zz qq' FROM documents),
+       |$perturbedCopiesSql),
        |toks AS (SELECT doc_id,
        |    list_transform($tokensSql,
        |      w -> CAST('0x' || substr(md5(w), 1, 15) AS BIGINT)) AS th
@@ -604,19 +605,9 @@ object LlmOracle {
     * all-pairs form at sf0.01/sf0.001. */
   private val d2PairCtes: String =
     s"""WITH RECURSIVE all_docs AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL SELECT doc_id + 1000000, text || ' zz qq' FROM documents),
-      |b AS (SELECT doc_id,
-      |    ${shinglesSql(2)} AS sh
-      |  FROM (SELECT doc_id, $normSql AS nt
-      |        FROM all_docs)),
-      |dg AS (SELECT doc_id, len(sh) AS sz1, unnest(sh) AS g FROM b),
-      |j AS (
-      |  SELECT a.doc_id AS id_a, bb.doc_id AS id_b,
-      |    CAST(COUNT(*) AS DOUBLE) AS common,
-      |    CAST(ANY_VALUE(a.sz1) + ANY_VALUE(bb.sz1) AS DOUBLE) AS sz
-      |  FROM dg a JOIN dg bb ON a.g = bb.g AND a.doc_id < bb.doc_id
-      |  GROUP BY a.doc_id, bb.doc_id)""".stripMargin
+      |$perturbedCopiesSql),
+      |${shingleCte("b", 2, "all_docs")},
+      |$jaccardPairCtes""".stripMargin
 
   /** Shared d20/d21 span CTE chain: the Lee et al. ExactSubstr ground
     * truth on gram STRINGS — positional 13-grams over the planted d8
@@ -625,25 +616,11 @@ object LlmOracle {
     * `tk` (doc_id, ts) stays visible for d21's removal replay. */
   private val d20SpanCtes: String =
     s"""WITH corpus AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL SELECT doc_id + 1000000, text FROM documents
-      |  WHERE doc_id < 20
-      |  UNION ALL SELECT doc_id + 2000000, 'qq ww ee rr tt ' || text
-      |  FROM documents WHERE doc_id >= 20 AND doc_id < 40),
+      |$plantedDocsSql),
       |tk AS (SELECT doc_id,
       |    $tokensSql AS ts
       |  FROM corpus),
-      |g0 AS (SELECT doc_id, ts,
-      |    unnest(generate_series(1, len(ts) - 12)) AS i
-      |  FROM tk WHERE len(ts) >= 13),
-      |g AS (SELECT doc_id, i - 1 AS pos,
-      |    array_to_string(ts[CAST(i AS INT):CAST(i AS INT) + 12], ' ') AS gs
-      |  FROM g0),
-      |p AS (SELECT a.doc_id AS id_a, a.pos AS pos_a,
-      |    b.doc_id AS id_b, b.pos AS pos_b
-      |  FROM g a JOIN g b ON a.gs = b.gs
-      |    AND (a.doc_id < b.doc_id
-      |      OR (a.doc_id = b.doc_id AND a.pos < b.pos))),
+      |$gramPairCtes,
       |$islandCte""".stripMargin
 
   /** d21/d23 removal replay: d20's span chain + later (b-side)
@@ -694,11 +671,7 @@ object LlmOracle {
     * docs < 10. */
   private val d22GroupedCtes: String =
     s"""WITH corpus AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL SELECT doc_id + 1000000, text FROM documents
-      |  WHERE doc_id < 20
-      |  UNION ALL SELECT doc_id + 2000000, 'qq ww ee rr tt ' || text
-      |  FROM documents WHERE doc_id >= 20 AND doc_id < 40
+      |$plantedDocsSql
       |  UNION ALL SELECT doc_id + 3000000, text FROM documents
       |  WHERE doc_id < 10),
       |nrm AS (SELECT doc_id,
@@ -709,17 +682,7 @@ object LlmOracle {
       |sz AS (SELECT rep, gsz FROM grp),
       |tk AS (SELECT rep AS doc_id, gsz, string_split(nt, ' ') AS ts
       |  FROM grp),
-      |g0 AS (SELECT doc_id, ts,
-      |    unnest(generate_series(1, len(ts) - 12)) AS i
-      |  FROM tk WHERE len(ts) >= 13),
-      |g AS (SELECT doc_id, i - 1 AS pos,
-      |    array_to_string(ts[CAST(i AS INT):CAST(i AS INT) + 12], ' ') AS gs
-      |  FROM g0),
-      |p AS (SELECT a.doc_id AS id_a, a.pos AS pos_a,
-      |    b.doc_id AS id_b, b.pos AS pos_b
-      |  FROM g a JOIN g b ON a.gs = b.gs
-      |    AND (a.doc_id < b.doc_id
-      |      OR (a.doc_id = b.doc_id AND a.pos < b.pos))),
+      |$gramPairCtes,
       |$islandCte,
       |spans AS (SELECT id_a, id_b, MIN(pos_a) AS start_a,
       |    MIN(pos_b) AS start_b, COUNT(*) + 12 AS span_tokens
@@ -1119,10 +1082,7 @@ object LlmOracle {
       |dupv AS (SELECT d.doc_id, d.doc_id <> k.keeper AS is_dup,
       |    CASE WHEN d.doc_id <> k.keeper THEN k.keeper END AS dup_of
       |  FROM dup d JOIN keep0 k USING (dg)),
-      |cg AS (SELECT doc_id,
-      |    ${shinglesSql(12)} AS sh
-      |  FROM (SELECT doc_id, $normSql AS nt
-      |        FROM corpus)),
+      |${shingleCte("cg", 12, "corpus")},
       |eg AS (SELECT DISTINCT unnest(sh) AS g FROM cg WHERE doc_id < 20),
       |docg AS (SELECT doc_id, unnest(sh) AS g FROM cg),
       |hits AS (SELECT DISTINCT doc_id FROM docg JOIN eg USING (g)),
@@ -1258,8 +1218,7 @@ object LlmOracle {
         s" * ${P(k)}")
       .mkString(" +\n        ")
     s"""WITH corpus AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL SELECT doc_id + 1000000, text || ' zz qq' FROM documents),
+       |$perturbedCopiesSql),
        |base AS (SELECT doc_id,
        |    $normSql AS t
        |  FROM corpus),
@@ -2473,17 +2432,8 @@ object LlmOracle {
         |  SELECT doc_id, text, lang, source FROM documents
         |  UNION ALL SELECT doc_id + 1000000, text || ' zz qq', lang, source
         |  FROM documents),
-        |b AS (SELECT doc_id,
-        |    ${shinglesSql(2)} AS sh
-        |  FROM (SELECT doc_id, $normSql AS nt
-        |        FROM all_docs)),
-        |dg AS (SELECT doc_id, len(sh) AS sz1, unnest(sh) AS g FROM b),
-        |j AS (
-        |  SELECT a.doc_id AS id_a, bb.doc_id AS id_b,
-        |    CAST(COUNT(*) AS DOUBLE) AS common,
-        |    CAST(ANY_VALUE(a.sz1) + ANY_VALUE(bb.sz1) AS DOUBLE) AS sz
-        |  FROM dg a JOIN dg bb ON a.g = bb.g AND a.doc_id < bb.doc_id
-        |  GROUP BY a.doc_id, bb.doc_id),
+        |${shingleCte("b", 2, "all_docs")},
+        |$jaccardPairCtes,
         |pr AS (SELECT id_a, id_b FROM j WHERE common / (sz - common) >= 0.5),
         |st AS (SELECT lang, source, COUNT(*) AS n_docs FROM all_docs GROUP BY 1, 2),
         |tt AS (SELECT SUM(n_docs) AS nn, SUM(n_docs) // 10 AS k FROM st),
@@ -2531,13 +2481,9 @@ object LlmOracle {
 
     "d7_decontaminate" ->
       s"""WITH corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 1000000, text || ' zz qq' FROM documents
+        |$perturbedCopiesSql
         |  WHERE doc_id < 20),
-        |cg AS (SELECT doc_id,
-        |    ${shinglesSql(12)} AS sh
-        |  FROM (SELECT doc_id, $normSql AS nt
-        |        FROM corpus)),
+        |${shingleCte("cg", 12, "corpus")},
         |eg AS (SELECT DISTINCT unnest(sh) AS g FROM cg WHERE doc_id < 20),
         |dg AS (SELECT doc_id, unnest(sh) AS g FROM cg),
         |hits AS (SELECT doc_id, COUNT(*) AS n_hits
@@ -2554,15 +2500,8 @@ object LlmOracle {
     // 20-39 share only interior grams.
     "d8_dup_spans" ->
       s"""WITH corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 1000000, text FROM documents
-        |  WHERE doc_id < 20
-        |  UNION ALL SELECT doc_id + 2000000, 'qq ww ee rr tt ' || text
-        |  FROM documents WHERE doc_id >= 20 AND doc_id < 40),
-        |cg AS (SELECT doc_id,
-        |    ${shinglesSql(12)} AS sh
-        |  FROM (SELECT doc_id, $normSql AS nt
-        |        FROM corpus)),
+        |$plantedDocsSql),
+        |${shingleCte("cg", 12, "corpus")},
         |dg AS (SELECT doc_id, unnest(sh) AS g FROM cg),
         |dupg AS (SELECT g FROM dg GROUP BY g HAVING COUNT(*) > 1),
         |shr AS (SELECT doc_id, COUNT(*) AS n_shared
@@ -2688,10 +2627,7 @@ object LlmOracle {
         |  FROM documents WHERE doc_id >= 30 AND doc_id < 38),
         |pool AS (SELECT doc_id, text FROM documents
         |  UNION ALL SELECT doc_id, text FROM batch),
-        |psh AS (SELECT doc_id,
-        |    ${shinglesSql(2)} AS sh
-        |  FROM (SELECT doc_id, $normSql AS nt
-        |        FROM pool)),
+        |${shingleCte("psh", 2, "pool")},
         |bsh AS (SELECT doc_id, sh FROM psh WHERE doc_id >= 5000000),
         |v AS (SELECT b.doc_id AS id, p.doc_id AS pid,
         |    CAST(len(list_intersect(b.sh, p.sh)) AS DOUBLE) AS common,
@@ -3091,8 +3027,7 @@ object LlmOracle {
     // hash-match proves the fixpoint labels.
     "d6_dup_clusters" ->
       s"""WITH RECURSIVE all_docs AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 1000000, text || ' zz qq' FROM documents),
+        |$perturbedCopiesSql),
         |nrm AS (SELECT doc_id,
         |    $normSql AS nt
         |  FROM all_docs),
@@ -3101,13 +3036,7 @@ object LlmOracle {
         |b AS (SELECT rep AS doc_id,
         |    ${shinglesSql(2)} AS sh
         |  FROM grp),
-        |dg AS (SELECT doc_id, len(sh) AS sz1, unnest(sh) AS g FROM b),
-        |j AS (
-        |  SELECT a.doc_id AS id_a, bb.doc_id AS id_b,
-        |    CAST(COUNT(*) AS DOUBLE) AS common,
-        |    CAST(ANY_VALUE(a.sz1) + ANY_VALUE(bb.sz1) AS DOUBLE) AS sz
-        |  FROM dg a JOIN dg bb ON a.g = bb.g AND a.doc_id < bb.doc_id
-        |  GROUP BY a.doc_id, bb.doc_id),
+        |$jaccardPairCtes,
         |rpairs AS (SELECT id_a, id_b FROM j WHERE common / (sz - common) >= 0.5),
         |redges AS (SELECT id_a AS s, id_b AS d FROM rpairs
         |           UNION SELECT id_b, id_a FROM rpairs

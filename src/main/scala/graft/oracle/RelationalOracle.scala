@@ -2,10 +2,10 @@ package graft.oracle
 
 import graft.oracle.Fragments._
 
-/** DuckDB replay of every relational query (see [[graft.SparkEntry.oracleSql]]). */
+/** DuckDB replays of the relational registry
+  * ([[graft.relational.Relational.queries]]): one ANSI SQL string per
+  * query with an oracle, served by [[graft.SparkEntry.oracleSql]]. */
 object RelationalOracle {
-
-  private val rev = revenueSql // DuckDB fragment
 
   /** q59 oracle: the three PageRank rounds unrolled — identical
     * 9-decimal contribution rounding, exact decimal sums, identical
@@ -662,8 +662,8 @@ object RelationalOracle {
       s"""SELECT l_returnflag, l_linestatus,
          |  ${dsumSql("l_quantity")} AS sum_qty,
          |  ${dsumSql("l_extendedprice")} AS sum_base_price,
-         |  ${decToDoubleSql(s"SUM($rev)")} AS sum_disc_price,
-         |  ${decToDoubleSql(s"SUM($rev * (1 + CAST(l_tax AS DECIMAL(12,2))))")} AS sum_charge,
+         |  ${decToDoubleSql(s"SUM($revenueSql)")} AS sum_disc_price,
+         |  ${decToDoubleSql(s"SUM($revenueSql * (1 + CAST(l_tax AS DECIMAL(12,2))))")} AS sum_charge,
          |  ${dsumSql("l_quantity")} / COUNT(*) AS avg_qty,
          |  ${dsumSql("l_extendedprice")} / COUNT(*) AS avg_price,
          |  ${dsumSql("l_discount")} / COUNT(*) AS avg_disc,
@@ -886,7 +886,7 @@ object RelationalOracle {
          |                     WHERE o_orderpriority = '1-URGENT')
          |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
     "q3_join_agg" ->
-      s"""SELECT l_orderkey, o_orderdate, CAST(SUM($rev) AS DOUBLE) AS rev
+      s"""SELECT l_orderkey, o_orderdate, CAST(SUM($revenueSql) AS DOUBLE) AS rev
          |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
          |JOIN customer ON o_custkey = c_custkey
          |WHERE c_mktsegment = 'BUILDING' AND o_orderdate < TIMESTAMP '1998-03-15'
@@ -899,7 +899,7 @@ object RelationalOracle {
         |              WHERE l_orderkey = o_orderkey AND l_quantity > 45)
         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
     "q5_multi_join" ->
-      s"""SELECT n_name, CAST(SUM($rev) AS DOUBLE) AS rev
+      s"""SELECT n_name, CAST(SUM($revenueSql) AS DOUBLE) AS rev
          |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
          |JOIN supplier ON l_suppkey = s_suppkey
          |JOIN customer ON o_custkey = c_custkey AND c_nationkey = s_nationkey
@@ -950,9 +950,9 @@ object RelationalOracle {
         |  GROUP BY c_custkey)
         |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin,
     "q14_case_agg" ->
-      s"""SELECT 100.0 * CAST(SUM(CASE WHEN p_type = 'PROMO' THEN $rev
+      s"""SELECT 100.0 * CAST(SUM(CASE WHEN p_type = 'PROMO' THEN $revenueSql
          |    ELSE CAST(0 AS DECIMAL(18,4)) END) AS DOUBLE)
-         |  / CAST(SUM($rev) AS DOUBLE) AS promo_revenue
+         |  / CAST(SUM($revenueSql) AS DOUBLE) AS promo_revenue
          |FROM lineitem JOIN part ON l_partkey = p_partkey
          |WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1997-04-01'""".stripMargin,
     "q15_scalar_subq" ->
@@ -971,7 +971,7 @@ object RelationalOracle {
         |JOIN orders ON l_orderkey = o_orderkey
         |WHERE rk <= 20 ORDER BY rk""".stripMargin,
     "q17_or_pred" ->
-      s"""SELECT CAST(SUM($rev) AS DOUBLE) AS rev, COUNT(*) AS n
+      s"""SELECT CAST(SUM($revenueSql) AS DOUBLE) AS rev, COUNT(*) AS n
          |FROM lineitem JOIN part ON l_partkey = p_partkey
          |WHERE (p_brand = 'Brand#11' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 11)
          |   OR (p_brand = 'Brand#14' AND p_size BETWEEN 1 AND 25 AND l_quantity BETWEEN 10 AND 20)

@@ -1,13 +1,13 @@
 package graft.oracle
 
-import graft.oracle.Fragments._
 import graft.functions.{Casts, Rounding, TimeFns}
+import graft.oracle.Fragments._
 import graft.typesystem.TypeQueries.{tdForms, zForms}
 
-/** DuckDB replay of every type-system query (see [[graft.SparkEntry.oracleSql]]). */
+/** DuckDB replays of the type-system registry
+  * ([[graft.typesystem.TypeQueries.queries]]), served by
+  * [[graft.SparkEntry.oracleSql]]. */
 object TypeOracle {
-
-  // ---------- oracle SQL ----------------------------------------------------
 
   /** DuckDB formula mirroring Rounding.roundFloat(x, rule, d). */
   private def roundSql(x: String, rule: String, d: Int): String = {

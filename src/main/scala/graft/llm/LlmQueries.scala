@@ -649,34 +649,19 @@ object LlmQueries {
   /** Proportional STRATIFIED sampling via the largest-remainder
     * (Hamilton) method — the eval/holdout-set constructor x7's plain
     * md5 buckets can't give (a uniform 2% split under-represents small
-    * (lang, source) strata; this one allocates ⌊n_i·k/N⌋ + the k−Σ⌊⌋
-    * largest remainders, so every stratum lands within 1 of exact
-    * proportionality — Hamilton's house-monotone guarantee). All
-    * allocation arithmetic is exact integers (remainders compared as
-    * n_i·k mod N — no float quotas anywhere); within each stratum the
-    * selection is the md5-order prefix (x9's deterministic device,
-    * layout-independent), fingerprinted as md5 of the sorted id list.
-    * Scale shape: allocation runs entirely on the strata-cardinality
-    * table (tiny, one unpartitioned window — t51's bounded-window
-    * argument); the corpus sees one (lang, source)-key window shuffle
-    * + a broadcast allocation join. */
+    * (lang, source) strata; [[Sampling.hamiltonAllocation]] puts every
+    * stratum within 1 of exact proportionality, in exact integers).
+    * Within each stratum the selection is the md5-order prefix (x9's
+    * deterministic device, layout-independent), fingerprinted as md5
+    * of the sorted id list. Scale shape: allocation runs on the
+    * strata table; the corpus sees one (lang, source)-key window
+    * shuffle + a broadcast allocation join. */
   def x29StratifiedSplit(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val k = 100
     val docs = t(s, dir, "documents").select("doc_id", "lang", "source")
-    val strata = docs.groupBy("lang", "source")
-      .agg(count(lit(1)).as("n_docs"))
-    val tot = strata.agg(sum("n_docs").as("nn"))
-    val al = strata.crossJoin(broadcast(tot))
-      .withColumn("base", expr(s"(n_docs * $k) div nn"))
-      .withColumn("rem", expr(s"(n_docs * $k) % nn"))
-      .withColumn("rk", row_number().over(
-        Window.orderBy(col("rem").desc, col("lang"), col("source"))))
-    val lo = al.agg((lit(k) - sum("base")).as("lo"))
-    val alloc = al.crossJoin(broadcast(lo))
-      .withColumn("allocated", least(col("n_docs"),
-        col("base") + when(col("rk") <= col("lo"), 1L).otherwise(0L)))
-      .select("lang", "source", "n_docs", "allocated")
+    val alloc = Sampling.hamiltonAllocation(
+      docs.groupBy("lang", "source").agg(count(lit(1)).as("n_docs")),
+      lit(100), "lang", "source")
     val sel = docs
       .withColumn("rn", row_number().over(
         Window.partitionBy("lang", "source")
@@ -944,7 +929,7 @@ object LlmQueries {
     val lex = Retrieval.bm25(t(s, dir, "documents"), "doc_id", "text",
         bm25Terms)
       .orderBy(col("score").desc, col("id")).limit(20)
-      .select(col("id"),
+      .select(col("id"), // window over ≤ 20 rows: the limit above
         row_number().over(Window.orderBy(col("score").desc, col("id")))
           .as("rk"))
     val emb = t(s, dir, "embeddings")
@@ -2228,6 +2213,7 @@ object LlmQueries {
       (3, "low_quality"), (4, "length"), (5, "non_english"))
       .toDF("stage", "stage_name")
     val tot = staged.agg(count(lit(1)).as("t"))
+    // window over the 5 stage rows
     val wCum = org.apache.spark.sql.expressions.Window.orderBy("stage")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
     stages.join(drops.withColumnRenamed("fs", "stage"), Seq("stage"), "left")
@@ -2270,25 +2256,14 @@ object LlmQueries {
     // full text column into every scan): 3.6 s -> 4.2 s warm at sf0.1
     val corpus = withCopies(t(s, dir, "documents"), perturb = true)
       .select("doc_id", "text", "lang", "source")
-    val strata = corpus.groupBy("lang", "source")
-      .agg(count(lit(1)).as("n_docs"))
-    val tot = strata.agg(sum("n_docs").as("nn"))
-      .withColumn("k", expr("nn div 10"))
-    val al = strata.crossJoin(broadcast(tot))
-      .withColumn("base", expr("(n_docs * k) div nn"))
-      .withColumn("rem", expr("(n_docs * k) % nn"))
-      .withColumn("rk", row_number().over(
-        Window.orderBy(col("rem").desc, col("lang"), col("source"))))
-    val lo = al.agg((max("k") - sum("base")).as("lo"))
     // alloc (strata-cardinality) and sides (corpus-cardinality but
     // NARROW — no text) settle eagerly (r14, guide §2.5): each has two
     // consumers, and unsettled the strata window ran twice and the
     // per-strata md5 sort over the corpus ran twice. This is NOT the
     // rejected r13 corpus persist — the text column never caches.
-    val alloc = st.settle(al.crossJoin(broadcast(lo))
-      .withColumn("allocated", least(col("n_docs"),
-        col("base") + when(col("rk") <= col("lo"), 1L).otherwise(0L)))
-      .select("lang", "source", "n_docs", "allocated"), "alloc")
+    val alloc = st.settle(Sampling.hamiltonAllocation(
+      corpus.groupBy("lang", "source").agg(count(lit(1)).as("n_docs")),
+      expr("nn div 10"), "lang", "source"), "alloc")
     val sides = st.settle(corpus
       .withColumn("rn", row_number().over(
         Window.partitionBy("lang", "source")

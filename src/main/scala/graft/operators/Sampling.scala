@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 
@@ -222,5 +223,34 @@ object Sampling {
         (col("epochs_e6").cast("double") / lit(1000000.0)).as("epochs"),
         (col("t_cap") === col("t_star")).as("limiting"))
       .orderBy("source")
+  }
+
+  /** Largest-remainder (Hamilton) allocation of `k` draws over strata.
+    * `strata` holds one row per stratum: the `keyCols` and its size
+    * `n_docs`. `k` is evaluated next to `nn` = Σ n_docs and may read it
+    * (a 10 % hold-out is `expr("nn div 10")`). Each stratum gets
+    * ⌊n·k/N⌋ plus one of the k − Σ⌊n·k/N⌋ largest remainders (ties by
+    * the keys, in order), capped at n: for k ≤ N the allocations sum to
+    * k and each lies within 1 of n·k/N. All arithmetic is integer; a
+    * remainder is compared as n·k mod N.
+    *
+    * Returns `keyCols`, `n_docs`, `allocated`.
+    *
+    * Scale shape: the remainder rank is a window with no partition, so
+    * it gathers its input on one task; that input is `strata`, one row
+    * per stratum, never the corpus. */
+  def hamiltonAllocation(strata: DataFrame, k: Column,
+      keyCols: String*): DataFrame = {
+    val tot = strata.agg(sum("n_docs").as("nn")).withColumn("k", k)
+    val al = strata.crossJoin(broadcast(tot))
+      .withColumn("base", expr("(n_docs * k) div nn"))
+      .withColumn("rem", expr("(n_docs * k) % nn"))
+      .withColumn("rk", row_number().over(
+        Window.orderBy(col("rem").desc +: keyCols.map(col): _*)))
+    val lo = al.agg((max("k") - sum("base")).as("lo"))
+    al.crossJoin(broadcast(lo))
+      .withColumn("allocated", least(col("n_docs"),
+        col("base") + when(col("rk") <= col("lo"), 1L).otherwise(0L)))
+      .select((keyCols :+ "n_docs" :+ "allocated").map(col): _*)
   }
 }

@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
@@ -118,27 +116,18 @@ object Similarity {
     * classic Faiss-IVF layout on Spark: cell assignment is the
     * partition key, queries broadcast.
     *
-    * Quantizers:
-    *  - `"sample"` (default): centroids = the `nCells` corpus vectors
-    *    with the smallest `md5(id)` ([[md5Sample]]) — deterministic hash
-    *    sampling (the q31 idiom). No training fit at all: centroid
-    *    selection is a TakeOrdered scan, assignment is a map-side
-    *    argmin through the reference-object kernel
-    *    [[graft.expressions.Kernels.nearestCentroid]], and the whole
-    *    index build is reproducible in plain SQL (which is what lets the
-    *    DuckDB oracle hash-verify s3).
-    *  - `"kmeans"`: seeded MLlib K-means fit — tighter cells (better
-    *    recall per probe) at the cost of an iterative training job;
-    *    the right trade when the index is built once and reused. */
+    * The quantizer is deterministic hash sampling (the q31 idiom):
+    * centroids = the `nCells` corpus vectors with the smallest
+    * `md5(id)` ([[md5Sample]]). No training fit at all: centroid
+    * selection is a TakeOrdered scan, assignment is a map-side argmin
+    * through the reference-object kernel
+    * [[graft.expressions.Kernels.nearestCentroid]], and the whole index
+    * build is reproducible in plain SQL (which is what lets the DuckDB
+    * oracle hash-verify s3). */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      nCells: Int = 16, nProbe: Int = 4,
-      quantizer: String = "sample"): DataFrame = quantizer match {
-    case "sample" =>
-      val (centroids, cells) = ivfSampledIndex(corpus, nCells)
-      ivfTopKIndexed(centroids, cells, queries, k, nProbe)
-    case "kmeans" => ivfTopKKMeans(corpus, queries, k, nCells, nProbe)
-    case other => throw new IllegalArgumentException(
-      s"ivfTopK quantizer must be 'sample' or 'kmeans', got '$other'")
+      nCells: Int = 16, nProbe: Int = 4): DataFrame = {
+    val (centroids, cells) = ivfSampledIndex(corpus, nCells)
+    ivfTopKIndexed(centroids, cells, queries, k, nProbe)
   }
 
   /** The sampled-centroid IVF INDEX of [[ivfTopK]] — the centroid list
@@ -149,7 +138,7 @@ object Similarity {
     *
     * Scale shape: the centroid pick is one TakeOrdered over the corpus
     * (O(n) scan, nCells-sized heaps); the nCells×dim doubles collect to
-    * the driver (KMeans `clusterCenters`' footprint) and ride into the
+    * the driver (a k-means model's centers' footprint) and ride into the
     * assignment kernel as codegen reference objects, so the generated
     * code is the same for every centroid set and the assignment is a
     * map-only projection at any nCells. `cell` = argmin over centroids
@@ -183,42 +172,6 @@ object Similarity {
     val probes = q.withColumn("cell",
         explode(transform(slice(array_sort(cellRank(col("qv"))), 1, nProbe),
           s => s.getField("cid"))))
-      .select("qid", "qv", "nqv", "cell")
-    val scored = cells.join(broadcast(probes), Seq("cell"))
-      .filter(col("id") =!= col("qid"))
-      .select(col("qid"), col("id"), cosOf("v", "qv", "nv", "nqv").as("cos"))
-    topK(scored, k)
-  }
-
-  /** K-means-quantized IVF (see [[ivfTopK]]): index build = one seeded
-    * MLlib fit. */
-  private def ivfTopKKMeans(corpus: DataFrame, queries: DataFrame,
-      k: Int, nCells: Int, nProbe: Int): DataFrame = {
-    val feats = withNorm(corpus, "id", "v", "nv")
-      .withColumn("features", array_to_vector(col("v")))
-    val km = new KMeans().setK(nCells).setSeed(42L).setMaxIter(10)
-      .setFeaturesCol("features").setPredictionCol("cell")
-    val model = km.fit(feats)
-    val cells = model.transform(feats).select("id", "v", "nv", "cell")
-    // centroid relation (tiny): cell id + centroid vector
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val centroids = model.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i, c.toArray) }.toSeq.toDF("cell", "cv")
-    // per query: nProbe nearest centroids by euclidean distance —
-    // selected with the same bounded-heap aggregate as the final top-k
-    // (score = -dist so "largest" = nearest; cell id breaks ties asc),
-    // keeping every ANN plan window-free.
-    val q = withNorm(queries, "qid", "qv", "nqv")
-    val probeCells = q.crossJoin(broadcast(centroids))
-      .withColumn("dist",
-        aggregate(zip_with(col("qv"), col("cv"), (a, b) => (a - b) * (a - b)),
-          lit(0.0), (acc, x) => acc + x))
-      .select(col("qid"), (-col("dist")).as("cos"),
-        col("cell").cast("long").as("id"))
-    val probes = topK(probeCells, nProbe)
-      .select(col("qid"), col("id").cast("int").as("cell"))
-      .join(q, Seq("qid"))
       .select("qid", "qv", "nqv", "cell")
     val scored = cells.join(broadcast(probes), Seq("cell"))
       .filter(col("id") =!= col("qid"))
@@ -267,11 +220,10 @@ object Similarity {
     * re-ranked by exact cosine — the standard PQ + re-rank pipeline.
     *
     * Codebooks use the same deterministic md5-order sample as the IVF
-    * "sample" quantizer: the `ks` sampled vectors' j-th subvectors form
+    * quantizer: the `ks` sampled vectors' j-th subvectors form
     * subspace j's codebook. No training fit; the whole index is
     * replayable in plain SQL (which is what lets the oracle hash-verify
-    * s5). A production variant would swap in per-subspace k-means the
-    * way ivfTopK offers `quantizer = "kmeans"`.
+    * s5).
     *
     * Scale shape: codebooks are m·ks·(dim/m) doubles — reference
     * objects of the encoding kernel and literals of the per-query LUT,

@@ -45,6 +45,21 @@ class QueriesSmokeSpec extends AnyFunSuite {
   test("every oracle key has a query") {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
+  test("no query registry or Tables spells DuckDB SQL (graft.oracle owns it)") {
+    val duck = """list_transform|string_split|list_inner_product|epoch\(""".r
+    val files = Seq("relational/Relational.scala", "typesystem/TypeQueries.scala",
+      "llm/LlmQueries.scala", "Tables.scala")
+      .map(f => java.nio.file.Path.of("src/main/scala/graft", f))
+    assert(files.forall(java.nio.file.Files.isRegularFile(_)))
+    val offenders = files.flatMap { p =>
+      val src = scala.io.Source.fromFile(p.toFile, "UTF-8")
+      try src.getLines().zipWithIndex.collect {
+        case (line, i) if duck.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
+      }.toList
+      finally src.close()
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
 }
 
 /** Sketch estimates must track exact distinct counts closely. */

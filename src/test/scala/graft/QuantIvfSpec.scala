@@ -52,16 +52,13 @@ class IvfSpec extends AnyFunSuite {
     val queries = emb.filter($"vec_id" < 3)
     val brute = Similarity.bruteTopK(emb, queries, 10)
       .select("qid", "id").as[(Long, Long)].collect().toSet
-    // both quantizers produce genuine top-k candidates with pruning
-    Seq("sample", "kmeans").foreach { quant =>
-      val ivf = Similarity.ivfTopK(emb, queries, 10,
-        nCells = 16, nProbe = 4, quantizer = quant)
-      val got = ivf.select("qid", "id").as[(Long, Long)].collect().toSet
-      assert(got.nonEmpty, quant)
-      assert(got.intersect(brute).nonEmpty, quant)
-      // pruning actually happened: scored candidates < corpus per query
-      assert(got.size <= 30, quant)
-    }
+    // the sampled quantizer yields genuine top-k candidates with pruning
+    val ivf = Similarity.ivfTopK(emb, queries, 10, nCells = 16, nProbe = 4)
+    val got = ivf.select("qid", "id").as[(Long, Long)].collect().toSet
+    assert(got.nonEmpty)
+    assert(got.intersect(brute).nonEmpty)
+    // pruning actually happened: scored candidates < corpus per query
+    assert(got.size <= 30)
   }
 
   /** The reference IVF assignment: array_min over

@@ -40,6 +40,13 @@ object Fragments {
   def epochSec(c: String): String =
     s"CAST(FLOOR(epoch(CAST($c AS TIMESTAMP))) AS BIGINT)"
 
+  /** `e`(user_id, es, event_id, cols…): the events with whole epoch
+    * seconds `es`. */
+  def eventSecCte(cols: String): String =
+    s"""e AS (SELECT user_id,
+       |    ${epochSec("ts")} AS es,
+       |    event_id, $cols FROM events)""".stripMargin
+
   // ---- text ---------------------------------------------------------------
 
   /** DuckDB fragment: `c` lower-cased, whitespace runs collapsed to one
@@ -119,6 +126,18 @@ object Fragments {
       |    AND (a.doc_id < b.doc_id
       |      OR (a.doc_id = b.doc_id AND a.pos < b.pos)))""".stripMargin
 
+  /** The share of CJK ideographs among the characters of `c`. */
+  def cjkRatioSql(c: String): String =
+    s"""length(regexp_replace($c, '[^\\x{4e00}-\\x{9fff}]', '', 'g'))
+       |      / greatest(length($c), 1)""".stripMargin
+
+  /** The distinct character 3-grams of a normalized-text column `nt`
+    * (one gram for a text shorter than 3 characters). */
+  val charGramsSql: String =
+    """list_distinct(list_transform(
+      |      range(1, CAST(greatest(length(nt) - 2, 1) AS BIGINT) + 1),
+      |      i -> substr(nt, CAST(i AS INT), 3)))""".stripMargin
+
   /** A lang-id stop-word profile as an SQL `IN` list, read from the
     * kernel's canonical profiles so engine and oracle share one list. */
   def stopListSql(lang: String): String =
@@ -181,6 +200,15 @@ object Fragments {
       |        CASE WHEN b.nv * c.nc = 0.0 THEN 0.0
       |             ELSE -(list_inner_product(b.v, c.cv) / (b.nv * c.nc))
       |        END ASC, c.cid ASC""".stripMargin)
+
+  /** Each query's top 10 of `src`(qid, id, cos) by cos (desc, id asc
+    * — the TopKAgg order), cos rounded to 6 places. */
+  def top10Sql(src: String): String =
+    s"""SELECT qid, id, ROUND(cos, 6) AS cos, rk FROM (
+       |  SELECT qid, id, cos,
+       |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, id ASC) AS rk
+       |  FROM $src) t
+       |WHERE rk <= 10 ORDER BY qid, rk""".stripMargin
 
   /** Per-dimension first and second moments of the 64-dim embeddings:
     * `m`(i, j, exy, ex, ey) over every dimension pair i ≤ j. */

@@ -372,12 +372,23 @@ object LlmOracle {
        |    CASE WHEN c.nv * p.nqv = 0 THEN 0.0
        |         ELSE list_inner_product(c.v, p.qv) / (c.nv * p.nqv) END AS cos
        |  FROM b c JOIN probes p ON c.bucket = p.bucket AND c.vec_id <> p.qid)
-       |SELECT qid, id, ROUND(cos, 6) AS cos, rk FROM (
-       |  SELECT qid, id, cos,
-       |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, id ASC) AS rk
-       |  FROM scored) t
-       |WHERE rk <= 10 ORDER BY qid, rk""".stripMargin
+       |${top10Sql("scored")}""".stripMargin
   }
+
+  /** The x13 unigram model, shared with x42: `sc`(doc_id, lp) = each
+    * token's log-probability under the 32-token vocabulary (0.5 count
+    * floor for the rest) as a 9-place DECIMAL, so sums are order-free. */
+  private val unigramLpCtes: String =
+    s"""base AS (SELECT doc_id, $tokensSql AS toks
+       |  FROM documents),
+       |tok AS (SELECT doc_id, unnest(toks) AS tok FROM base),
+       |counts AS (SELECT tok, COUNT(*) AS cnt FROM tok GROUP BY tok),
+       |st AS (SELECT SUM(cnt) AS total FROM counts),
+       |vocab AS (SELECT tok, cnt FROM counts ORDER BY cnt DESC, tok LIMIT 32),
+       |sc AS (SELECT t.doc_id,
+       |    CAST(ROUND(ln(COALESCE(CAST(v.cnt AS DOUBLE), 0.5) / st.total), 9)
+       |      AS DECIMAL(18,9)) AS lp
+       |  FROM tok t LEFT JOIN vocab v ON t.tok = v.tok, st)""".stripMargin
 
   /** The sampled-centroid IVF index shared by the s3 and e10 oracles:
     * `cent` = the 16 md5-first vectors, `b` = every vector with its
@@ -406,11 +417,7 @@ object LlmOracle {
        |         ELSE list_inner_product(a.v, q.v) / (a.nv * q.nv) END AS cos
        |  FROM assign a JOIN probes p ON a.cell = p.cell AND a.vec_id <> p.qid
        |  JOIN b q ON q.vec_id = p.qid)
-       |SELECT qid, id, ROUND(cos, 6) AS cos, rk FROM (
-       |  SELECT qid, id, cos,
-       |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, id ASC) AS rk
-       |  FROM scored) t
-       |WHERE rk <= 10 ORDER BY qid, rk""".stripMargin
+       |${top10Sql("scored")}""".stripMargin
   }
 
   /** e10 oracle: s3's full index replay with the probe cut left at
@@ -509,11 +516,7 @@ object LlmOracle {
        |    CASE WHEN x.nv * qq.nv = 0 THEN 0.0
        |         ELSE list_inner_product(x.v, qq.v) / (x.nv * qq.nv) END AS cos
        |  FROM cand c JOIN b x ON x.vec_id = c.id JOIN b qq ON qq.vec_id = c.qid)
-       |SELECT qid, id, ROUND(cos, 6) AS cos, rk FROM (
-       |  SELECT qid, id, cos,
-       |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, id ASC) AS rk
-       |  FROM ex) t
-       |WHERE rk <= 10 ORDER BY qid, rk""".stripMargin
+       |${top10Sql("ex")}""".stripMargin
   }
 
   /** e11 oracle: one s1-shape brute-force CTE per prefix dimension,
@@ -960,8 +963,7 @@ object LlmOracle {
   private def langPredCtes(sfx: String, src: String): String =
     s"""b$sfx AS (SELECT doc_id,
        |    string_split(${normTextSql(src)}, ' ') AS toks,
-       |    length(regexp_replace($src, '[^\\x{4e00}-\\x{9fff}]', '', 'g'))
-       |      / greatest(length($src), 1) AS cjk
+       |    ${cjkRatioSql(src)} AS cjk
        |  FROM h),
        |s$sfx AS (SELECT doc_id, cjk,
        |    $stopScoresSql
@@ -2040,9 +2042,7 @@ object LlmOracle {
         |  FROM (SELECT doc_id, string_split(text, ' ') AS ws, source
         |        FROM documents)),
         |b AS (SELECT doc_id AS id, source, substr(text, 1, 12) AS pfx,
-        |    list_distinct(list_transform(
-        |      range(1, CAST(greatest(length(nt) - 2, 1) AS BIGINT) + 1),
-        |      i -> substr(nt, CAST(i AS INT), 3))) AS g
+        |    $charGramsSql AS g
         |  FROM (SELECT doc_id, source, text,
         |          $normSql AS nt
         |        FROM corpus)),
@@ -2376,8 +2376,7 @@ object LlmOracle {
         |lb AS (
         |  SELECT doc_id,
         |    $tokensSql AS toks,
-        |    length(regexp_replace(text, '[^\\x{4e00}-\\x{9fff}]', '', 'g'))
-        |      / greatest(length(text), 1) AS cjk
+        |    ${cjkRatioSql("text")} AS cjk
         |  FROM documents),
         |ls AS (
         |  SELECT doc_id, cjk,
@@ -2807,16 +2806,7 @@ object LlmOracle {
     // emitted log-domain (ln_ppl) with the VARCHAR-routed decimal cast
     // — a terminal exp put libm's last ulp ON the 6-dp grid at len_k10
     "x13_unigram_ppl" ->
-      s"""WITH base AS (SELECT doc_id, $tokensSql AS toks
-        |  FROM documents),
-        |tok AS (SELECT doc_id, unnest(toks) AS tok FROM base),
-        |counts AS (SELECT tok, COUNT(*) AS cnt FROM tok GROUP BY tok),
-        |st AS (SELECT SUM(cnt) AS total FROM counts),
-        |vocab AS (SELECT tok, cnt FROM counts ORDER BY cnt DESC, tok LIMIT 32),
-        |sc AS (SELECT t.doc_id,
-        |    CAST(ROUND(ln(COALESCE(CAST(v.cnt AS DOUBLE), 0.5) / st.total), 9)
-        |      AS DECIMAL(18,9)) AS lp
-        |  FROM tok t LEFT JOIN vocab v ON t.tok = v.tok, st)
+      s"""WITH $unigramLpCtes
         |SELECT doc_id, COUNT(*) AS n_tok,
         |  ROUND(-(CAST(CAST(SUM(lp) AS VARCHAR) AS DOUBLE) / COUNT(*)), 6)
         |    AS ln_ppl
@@ -2924,16 +2914,7 @@ object LlmOracle {
     // x42: x13's proven ppl chain as a CTE + the identical per-lang
     // rank window; terciles are pure integer comparisons (rk·3 vs n)
     "x42_ccnet_buckets" ->
-      s"""WITH base AS (SELECT doc_id, $tokensSql AS toks
-        |  FROM documents),
-        |tok AS (SELECT doc_id, unnest(toks) AS tok FROM base),
-        |counts AS (SELECT tok, COUNT(*) AS cnt FROM tok GROUP BY tok),
-        |st AS (SELECT SUM(cnt) AS total FROM counts),
-        |vocab AS (SELECT tok, cnt FROM counts ORDER BY cnt DESC, tok LIMIT 32),
-        |sc AS (SELECT t.doc_id,
-        |    CAST(ROUND(ln(COALESCE(CAST(v.cnt AS DOUBLE), 0.5) / st.total), 9)
-        |      AS DECIMAL(18,9)) AS lp
-        |  FROM tok t LEFT JOIN vocab v ON t.tok = v.tok, st),
+      s"""WITH $unigramLpCtes,
         |p AS (SELECT doc_id,
         |    ROUND(-(CAST(CAST(SUM(lp) AS VARCHAR) AS DOUBLE) / COUNT(*)), 6)
         |      AS ln_ppl
@@ -3180,8 +3161,7 @@ object LlmOracle {
       s"""WITH b AS (
         |  SELECT doc_id, lang,
         |    $tokensSql AS toks,
-        |    length(regexp_replace(text, '[^\\x{4e00}-\\x{9fff}]', '', 'g'))
-        |      / greatest(length(text), 1) AS cjk
+        |    ${cjkRatioSql("text")} AS cjk
         |  FROM documents),
         |s AS (
         |  SELECT doc_id, lang, cjk,
@@ -3281,9 +3261,7 @@ object LlmOracle {
     "d15_kmv_calibration" ->
       s"""WITH b AS (
         |  SELECT doc_id AS id, source, CAST(floor(n_chars / 100.0) AS INT) AS lb,
-        |    list_distinct(list_transform(
-        |      range(1, CAST(greatest(length(nt) - 2, 1) AS BIGINT) + 1),
-        |      i -> substr(nt, CAST(i AS INT), 3))) AS g
+        |    $charGramsSql AS g
         |  FROM (SELECT doc_id, source, n_chars,
         |          $normSql AS nt
         |        FROM documents)),
@@ -3313,9 +3291,7 @@ object LlmOracle {
     "d4_ngram_jaccard" ->
       s"""WITH b AS (
         |  SELECT doc_id AS id, source, CAST(floor(n_chars / 100.0) AS INT) AS lb,
-        |    list_distinct(list_transform(
-        |      range(1, CAST(greatest(length(nt) - 2, 1) AS BIGINT) + 1),
-        |      i -> substr(nt, CAST(i AS INT), 3))) AS g
+        |    $charGramsSql AS g
         |  FROM (SELECT doc_id, source, n_chars,
         |          $normSql AS nt
         |        FROM documents)),

@@ -79,9 +79,7 @@ object RelationalOracle {
     // q74: the same strictly-preceding IGNORE-NULLS window pass in
     // DuckDB (epoch seconds derived identically; compound tiebreak)
     "q74_attribution" ->
-      s"""WITH e AS (SELECT user_id,
-        |    ${epochSec("ts")} AS es,
-        |    event_id, event_type FROM events),
+      s"""WITH ${eventSecCte("event_type")},
         |wv AS (SELECT user_id, es, event_id, event_type,
         |    FIRST_VALUE(CASE WHEN event_type = 'view' THEN event_id END
         |      IGNORE NULLS) OVER w AS first_view_id,
@@ -148,9 +146,7 @@ object RelationalOracle {
     // q68: identical q24 session assignment, distinct (session, type)
     // sets, unordered pair join, and the exact-integer-product lift
     "q68_session_cooccurrence" ->
-      s"""WITH e AS (SELECT user_id,
-        |    ${epochSec("ts")} AS es,
-        |    event_id, event_type FROM events),
+      s"""WITH ${eventSecCte("event_type")},
         |l AS (SELECT *, LAG(es, 1) OVER (PARTITION BY user_id
         |      ORDER BY es, event_id) AS prev FROM e),
         |f AS (SELECT *, CASE WHEN prev IS NULL OR es - prev > 1800
@@ -179,9 +175,7 @@ object RelationalOracle {
     // q67: identical lag pairing + counts; probability the same single
     // IEEE division over the per-prev window total
     "q67_event_transitions" ->
-      s"""WITH e AS (SELECT user_id,
-        |    ${epochSec("ts")} AS es,
-        |    event_id, event_type FROM events),
+      s"""WITH ${eventSecCte("event_type")},
         |l AS (SELECT user_id, event_type AS cur_type,
         |    LAG(event_type, 1) OVER (PARTITION BY user_id
         |      ORDER BY es, event_id) AS prev_type

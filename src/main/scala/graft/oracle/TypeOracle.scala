@@ -53,6 +53,20 @@ object TypeOracle {
   private def divSql(rule: String): String =
     s"CAST(${divBodySql(rule)} AS BIGINT) AS q_$rule"
 
+  /** The FROM clause [[divBodySql]] reads: integer dividend `a` and
+    * divisor `b` over lineitem's first 100 orders, with the floored
+    * remainder `m`, its magnitude `mag` and the floor/ceiling quotients
+    * `qf`/`qc`. */
+  private def divFromSql(a: String, b: String): String =
+    s"""FROM (SELECT *, ABS(m) AS mag,
+       |    CAST((a - m) / b AS BIGINT) AS qf,
+       |    CAST((a - m) / b AS BIGINT) + (CASE WHEN m = 0 THEN 0 ELSE 1 END) AS qc
+       |  FROM (SELECT l_orderkey, l_linenumber, a, b, ((a % b) + b) % b AS m
+       |    FROM (SELECT l_orderkey, l_linenumber,
+       |      $a AS a,
+       |      $b AS b
+       |      FROM lineitem WHERE l_orderkey <= 100)))""".stripMargin
+
   private val floatReSql = "^[+-]?([0-9]+\\.?[0-9]*|\\.[0-9]+)([eE][+-]?[0-9]+)?$"
 
   // ---- t22 oracle generators: built from the SAME regex constants the
@@ -114,9 +128,7 @@ object TypeOracle {
     // t69: identical tagged union + IGNORE NULLS fill windows,
     // identical (es, src, event_id) tie pinning
     "t69_merge_ordered" ->
-      s"""WITH e AS (SELECT user_id,
-        |    ${epochSec("ts")} AS es,
-        |    event_id, event_type, value FROM events),
+      s"""WITH ${eventSecCte("event_type, value")},
         |u AS (
         |  SELECT user_id, es, event_id, 0 AS src,
         |    value AS v_view, CAST(NULL AS DOUBLE) AS v_buy
@@ -148,9 +160,7 @@ object TypeOracle {
     // t68: identical lag frame, identical least/greatest selection
     // network, identical pinned multiply-add blends
     "t68_rolling_quantile" ->
-      s"""WITH e AS (SELECT user_id,
-        |    ${epochSec("ts")} AS es,
-        |    event_id, value FROM events),
+      s"""WITH ${eventSecCte("value")},
         |l AS (SELECT user_id, es, event_id, value,
         |    lag(value, 1) OVER (PARTITION BY user_id
         |      ORDER BY es, event_id) AS l1,
@@ -542,9 +552,7 @@ object TypeOracle {
     // network (no arithmetic — output is one of the inputs, bit-exact);
     // warm-up nulls guarded on both engines
     "t52_rolling_median" ->
-      s"""WITH e AS (SELECT user_id,
-        |    ${epochSec("ts")} AS es,
-        |    event_id, value FROM events),
+      s"""WITH ${eventSecCte("value")},
         |l AS (SELECT user_id, es, event_id, value,
         |    LAG(value, 1) OVER (PARTITION BY user_id ORDER BY es, event_id) AS l1,
         |    LAG(value, 2) OVER (PARTITION BY user_id ORDER BY es, event_id) AS l2
@@ -761,9 +769,7 @@ object TypeOracle {
     // t44: same seed-first linear fold — list_reduce uses element 1 as
     // the accumulator seed exactly like aggregate(slice(vals,2,i), vals[1])
     "t44_ewm" ->
-      s"""WITH e AS (SELECT user_id,
-        |    ${epochSec("ts")} AS es,
-        |    event_id, value FROM events),
+      s"""WITH ${eventSecCte("value")},
         |g AS (SELECT user_id,
         |    list(value ORDER BY es, event_id, value) AS vals,
         |    list(event_id ORDER BY es, event_id, value) AS eids
@@ -777,9 +783,7 @@ object TypeOracle {
     // t45: identical lag frame + sums-of-squares identity, same IEEE
     // op order; explicit NULL guard mirrors the Spark-side when()
     "t45_rolling_std" ->
-      s"""WITH e AS (SELECT user_id,
-        |    ${epochSec("ts")} AS es,
-        |    event_id, value FROM events),
+      s"""WITH ${eventSecCte("value")},
         |l AS (SELECT user_id, es, event_id, value,
         |    lag(value, 1) OVER (PARTITION BY user_id
         |      ORDER BY es, event_id) AS l1,
@@ -1162,15 +1166,8 @@ object TypeOracle {
         .mkString(",\n")
       s"""SELECT l_orderkey, l_linenumber, CAST(a AS DOUBLE) / 100 AS x,
          |$ruleCols
-         |FROM (SELECT *, ABS(m) AS mag,
-         |    CAST((a - m) / b AS BIGINT) AS qf,
-         |    CAST((a - m) / b AS BIGINT) + (CASE WHEN m = 0 THEN 0 ELSE 1 END) AS qc
-         |  FROM (SELECT l_orderkey, l_linenumber, a, b, ((a % b) + b) % b AS m
-         |    FROM (SELECT l_orderkey, l_linenumber,
-         |      CAST(ROUND(l_extendedprice * 100) AS BIGINT)
-         |        * (CASE WHEN l_linenumber % 2 = 0 THEN -1 ELSE 1 END) AS a,
-         |      CAST(10 AS BIGINT) AS b
-         |      FROM lineitem WHERE l_orderkey <= 100)))
+         |${divFromSql("""CAST(ROUND(l_extendedprice * 100) AS BIGINT)
+         |        * (CASE WHEN l_linenumber % 2 = 0 THEN -1 ELSE 1 END)""".stripMargin, "CAST(10 AS BIGINT)")}
          |ORDER BY l_orderkey, l_linenumber""".stripMargin
     },
     "t1_detect_types" ->
@@ -1259,14 +1256,8 @@ object TypeOracle {
       val ruleCols = Rounding.validRules.map(r => "  " + divSql(r)).mkString(",\n")
       s"""SELECT l_orderkey, l_linenumber, a, b,
          |$ruleCols
-         |FROM (SELECT *, ABS(m) AS mag,
-         |    CAST((a - m) / b AS BIGINT) AS qf,
-         |    CAST((a - m) / b AS BIGINT) + (CASE WHEN m = 0 THEN 0 ELSE 1 END) AS qc
-         |  FROM (SELECT l_orderkey, l_linenumber, a, b, ((a % b) + b) % b AS m
-         |    FROM (SELECT l_orderkey, l_linenumber,
-         |      CAST(l_quantity AS BIGINT) * (CASE WHEN l_linenumber % 2 = 0 THEN -1 ELSE 1 END) AS a,
-         |      CAST(l_linenumber AS BIGINT) AS b
-         |      FROM lineitem WHERE l_orderkey <= 100)))
+         |${divFromSql("CAST(l_quantity AS BIGINT) * (CASE WHEN l_linenumber % 2 = 0 THEN -1 ELSE 1 END)",
+              "CAST(l_linenumber AS BIGINT)")}
          |ORDER BY l_orderkey, l_linenumber""".stripMargin
     },
     "t12_tolerance_snap" ->

@@ -375,6 +375,29 @@ object LlmOracle {
        |${top10Sql("scored")}""".stripMargin
   }
 
+  /** The d4 character-3-gram sets, shared with d15: `b`(id, source,
+    * lb, g) per document, blocked by (source, n_chars div 100). */
+  private val charGramBlocks: String =
+    s"""b AS (
+       |  SELECT doc_id AS id, source, CAST(floor(n_chars / 100.0) AS INT) AS lb,
+       |    $charGramsSql AS g
+       |  FROM (SELECT doc_id, source, n_chars,
+       |          $normSql AS nt
+       |        FROM documents))""".stripMargin
+
+  /** `name`(id_a, id_b, common, sz) over [[charGramBlocks]]: same-block
+    * pairs sharing a gram (`e` holds one row per gram), |A∩B| and
+    * |A|+|B| as DOUBLE. */
+  private def charGramPairsCte(name: String): String =
+    s"""e AS (SELECT id, source, lb, len(g) AS sz1, unnest(g) AS gram FROM b),
+       |$name AS (
+       |  SELECT a.id AS id_a, bb.id AS id_b,
+       |    CAST(COUNT(*) AS DOUBLE) AS common,
+       |    CAST(ANY_VALUE(a.sz1) + ANY_VALUE(bb.sz1) AS DOUBLE) AS sz
+       |  FROM e a JOIN e bb ON a.gram = bb.gram
+       |    AND a.source = bb.source AND a.lb = bb.lb AND a.id < bb.id
+       |  GROUP BY a.id, bb.id)""".stripMargin
+
   /** The x13 unigram model, shared with x42: `sc`(doc_id, lp) = each
     * token's log-probability under the 32-token vocabulary (0.5 count
     * floor for the rest) as a 9-place DECIMAL, so sums are order-free. */
@@ -1179,23 +1202,27 @@ object LlmOracle {
        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
        |ORDER BY bucket""".stripMargin
 
+  /** The 64 embedding dimensions on the 1e-6 integer grid as exact
+    * HUGEINT columns q0…q63 (e5's FLOOR quantization), and their sums
+    * s0…s63 — shared by e13 and e15. */
+  private val gridQDefs: String = (0 until 64).map(i =>
+    s"CAST(FLOOR(CAST(embedding[${i + 1}] AS DOUBLE) * 1000000.0) " +
+      s"AS HUGEINT) AS q$i").mkString(",\n    ")
+  private val gridQSums: String = (0 until 64).map(i => s"SUM(q$i) AS s$i").mkString(", ")
+
   /** e13 oracle: the moment identity replayed on the same 1e-6 integer
     * grid (e5's FLOOR quantization device) — per-label exact HUGEINT
     * sums Σq_d, Σ‖q‖², then 2·(n·S2 − Σ_d(Σq_d)²)/(n(n−1))/10¹² with
     * the identical terminal IEEE division sequence. */
   private def e13OracleSql: String = {
     val dim = 64
-    val qDefs = (0 until dim).map(i =>
-      s"CAST(FLOOR(CAST(embedding[${i + 1}] AS DOUBLE) * 1000000.0) " +
-        s"AS HUGEINT) AS q$i").mkString(",\n    ")
-    val sSums = (0 until dim).map(i => s"SUM(q$i) AS s$i").mkString(", ")
     val s2Terms = (0 until dim).map(i => s"q$i * q$i").mkString(" + ")
     val ssTerms = (0 until dim).map(i => s"s$i * s$i").mkString(" + ")
     val sSumsAll = (0 until dim).map(i => s"SUM(s$i) AS s$i").mkString(", ")
     s"""WITH q AS (SELECT CAST(label AS VARCHAR) AS label,
-       |    $qDefs
+       |    $gridQDefs
        |  FROM embeddings),
-       |lab AS (SELECT label, CAST(COUNT(*) AS HUGEINT) AS n, $sSums,
+       |lab AS (SELECT label, CAST(COUNT(*) AS HUGEINT) AS n, $gridQSums,
        |    SUM($s2Terms) AS ssq
        |  FROM q GROUP BY label),
        |alab AS (SELECT 'all' AS label, CAST(SUM(n) AS HUGEINT) AS n,
@@ -1257,10 +1284,6 @@ object LlmOracle {
     * identical left-to-right 64-term mean/L2/cosine chains. */
   private def e15OracleSql: String = {
     val dim = 64
-    val qDefs = (0 until dim).map(i =>
-      s"CAST(FLOOR(CAST(embedding[${i + 1}] AS DOUBLE) * 1000000.0) " +
-        s"AS HUGEINT) AS q$i").mkString(",\n    ")
-    val sSums = (0 until dim).map(i => s"SUM(q$i) AS s$i").mkString(", ")
     def mean(p: Char, n: String, i: Int): String =
       s"CAST($p$i AS DOUBLE) / CAST($n AS DOUBLE) / 1000000.0"
     val l2 = (0 until dim).map(i =>
@@ -1277,9 +1300,9 @@ object LlmOracle {
     val bCols = (0 until dim).map(i => s"s$i AS b$i").mkString(", ")
     s"""WITH q AS (SELECT CAST(label AS VARCHAR) AS label,
        |    vec_id % 2 = 0 AS in_a,
-       |    $qDefs
+       |    $gridQDefs
        |  FROM embeddings),
-       |g AS (SELECT label, in_a, CAST(COUNT(*) AS HUGEINT) AS n, $sSums
+       |g AS (SELECT label, in_a, CAST(COUNT(*) AS HUGEINT) AS n, $gridQSums
        |  FROM q GROUP BY label, in_a),
        |a AS (SELECT label, n AS n_a, $aCols FROM g WHERE in_a),
        |b AS (SELECT label, n AS n_b, $bCols FROM g WHERE NOT in_a)
@@ -3259,25 +3282,13 @@ object LlmOracle {
     // BIT-IDENTICAL to the all-pairs forms at sf0.001/sf0.01/sf0.1
     // before the swap (r12; the r9 d19 blocked-rewrite protocol).
     "d15_kmv_calibration" ->
-      s"""WITH b AS (
-        |  SELECT doc_id AS id, source, CAST(floor(n_chars / 100.0) AS INT) AS lb,
-        |    $charGramsSql AS g
-        |  FROM (SELECT doc_id, source, n_chars,
-        |          $normSql AS nt
-        |        FROM documents)),
+      s"""WITH $charGramBlocks,
         |kk AS (
         |  SELECT id,
         |    list_sort(list_distinct(list_transform(g,
         |      s -> CAST('0x' || substr(md5(s), 1, 15) AS BIGINT))))[1:64] AS kv
         |  FROM b),
-        |e AS (SELECT id, source, lb, len(g) AS sz1, unnest(g) AS gram FROM b),
-        |jc AS (
-        |  SELECT a.id AS id_a, bb.id AS id_b,
-        |    CAST(COUNT(*) AS DOUBLE) AS common,
-        |    CAST(ANY_VALUE(a.sz1) + ANY_VALUE(bb.sz1) AS DOUBLE) AS sz
-        |  FROM e a JOIN e bb ON a.gram = bb.gram
-        |    AND a.source = bb.source AND a.lb = bb.lb AND a.id < bb.id
-        |  GROUP BY a.id, bb.id),
+        |${charGramPairsCte("jc")},
         |f AS (
         |  SELECT id_a, id_b, common / (sz - common) AS j_exact,
         |    list_sort(list_distinct(ka.kv || kb.kv))[1:64] AS su,
@@ -3289,20 +3300,8 @@ object LlmOracle {
         |      AND list_contains(kb, x))) AS DOUBLE) / len(su) AS j_kmv
         |FROM f ORDER BY id_a, id_b""".stripMargin,
     "d4_ngram_jaccard" ->
-      s"""WITH b AS (
-        |  SELECT doc_id AS id, source, CAST(floor(n_chars / 100.0) AS INT) AS lb,
-        |    $charGramsSql AS g
-        |  FROM (SELECT doc_id, source, n_chars,
-        |          $normSql AS nt
-        |        FROM documents)),
-        |e AS (SELECT id, source, lb, len(g) AS sz1, unnest(g) AS gram FROM b),
-        |j AS (
-        |  SELECT a.id AS id_a, bb.id AS id_b,
-        |    CAST(COUNT(*) AS DOUBLE) AS common,
-        |    CAST(ANY_VALUE(a.sz1) + ANY_VALUE(bb.sz1) AS DOUBLE) AS sz
-        |  FROM e a JOIN e bb ON a.gram = bb.gram
-        |    AND a.source = bb.source AND a.lb = bb.lb AND a.id < bb.id
-        |  GROUP BY a.id, bb.id)
+      s"""WITH $charGramBlocks,
+        |${charGramPairsCte("j")}
         |SELECT id_a, id_b, ROUND(common / (sz - common), 6) AS jaccard
         |FROM j WHERE common / (sz - common) >= 0.6
         |ORDER BY id_a, id_b""".stripMargin,

@@ -38,6 +38,22 @@ object RelationalOracle {
       .stripMargin
   }
 
+  /** q27 and q29 (the native as-of join) share one replay: each
+    * purchase's latest view at or before it, same-second views
+    * collapsed to the largest event id. */
+  private val asofSql: String =
+    s"""WITH e AS (SELECT event_id, user_id,
+       |    ${epochSec("ts")} AS es,
+       |    event_type, value FROM events),
+       |p AS (SELECT event_id, user_id, es FROM e WHERE event_type = 'purchase'),
+       |v AS (SELECT user_id, es AS v_es, arg_max(event_id, event_id) AS v_id,
+       |      arg_max(value, event_id) AS v_value
+       |      FROM e WHERE event_type = 'view' GROUP BY user_id, es)
+       |SELECT p.event_id, p.user_id, p.es, v.v_id AS r_v_id,
+       |  v.v_value AS r_v_value, v.v_es AS r_v_es
+       |FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.es >= v.v_es
+       |ORDER BY p.event_id""".stripMargin
+
   val sql: Map[String, String] = Map(
     // q76: the match derived from FIRST PRINCIPLES — containment
     // argmax (latest valid_from <= as_at, ties to max ver_oid) over
@@ -618,30 +634,8 @@ object RelationalOracle {
          |FROM lineitem WHERE ($hexVal) % 100 < 10
          |ORDER BY l_orderkey, l_linenumber""".stripMargin
     },
-    "q27_asof_join" ->
-      s"""WITH e AS (SELECT event_id, user_id,
-        |    ${epochSec("ts")} AS es,
-        |    event_type, value FROM events),
-        |p AS (SELECT event_id, user_id, es FROM e WHERE event_type = 'purchase'),
-        |v AS (SELECT user_id, es AS v_es, arg_max(event_id, event_id) AS v_id,
-        |      arg_max(value, event_id) AS v_value
-        |      FROM e WHERE event_type = 'view' GROUP BY user_id, es)
-        |SELECT p.event_id, p.user_id, p.es, v.v_id AS r_v_id,
-        |  v.v_value AS r_v_value, v.v_es AS r_v_es
-        |FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.es >= v.v_es
-        |ORDER BY p.event_id""".stripMargin,
-    "q29_asof_native" ->
-      s"""WITH e AS (SELECT event_id, user_id,
-        |    ${epochSec("ts")} AS es,
-        |    event_type, value FROM events),
-        |p AS (SELECT event_id, user_id, es FROM e WHERE event_type = 'purchase'),
-        |v AS (SELECT user_id, es AS v_es, arg_max(event_id, event_id) AS v_id,
-        |      arg_max(value, event_id) AS v_value
-        |      FROM e WHERE event_type = 'view' GROUP BY user_id, es)
-        |SELECT p.event_id, p.user_id, p.es, v.v_id AS r_v_id,
-        |  v.v_value AS r_v_value, v.v_es AS r_v_es
-        |FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.es >= v.v_es
-        |ORDER BY p.event_id""".stripMargin,
+    "q27_asof_join" -> asofSql,
+    "q29_asof_native" -> asofSql,
     "q28_range_join" ->
       s"""WITH e AS (SELECT event_id, user_id,
         |    ${epochSec("ts")} AS es,

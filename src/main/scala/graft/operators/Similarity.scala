@@ -138,7 +138,7 @@ object Similarity {
     *
     * Scale shape: the centroid pick is one TakeOrdered over the corpus
     * (O(n) scan, nCells-sized heaps); the nCells×dim doubles collect to
-    * the driver (a k-means model's centers' footprint) and ride into the
+    * the driver (KMeans `clusterCenters`' footprint) and ride into the
     * assignment kernel as codegen reference objects, so the generated
     * code is the same for every centroid set and the assignment is a
     * map-only projection at any nCells. `cell` = argmin over centroids

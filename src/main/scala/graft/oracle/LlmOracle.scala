@@ -2375,7 +2375,7 @@ object LlmOracle {
     // inverted gram index (lossless for J >= 0.5 — see d2PairCtes) and
     // verifies the exact Jaccard. The Spark side runs the banded-LSH
     // plan, so a hash-match is also a 100%-recall proof.
-    // (shared WITH chain: d2PairCtes below the map)
+    // (shared WITH chain: d2PairCtes)
     "d2_minhash_lsh" ->
       s"""$d2PairCtes
         |SELECT id_a, id_b, ROUND(common / (sz - common), 6) AS jaccard
@@ -2538,7 +2538,7 @@ object LlmOracle {
     // mismatch here): positional 13-gram equality join, diagonal
     // islands via the pos - row_number device, island size + 12 =
     // maximal span length. Same planted corpus as d8.
-    // (shared WITH chain: d20SpanCtes below the map)
+    // (shared WITH chain: d20SpanCtes)
     "d20_exact_substrings" ->
       s"""$d20SpanCtes
         |SELECT id_a, id_b, CAST(MIN(pos_a) AS BIGINT) AS start_a,

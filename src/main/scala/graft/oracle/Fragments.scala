@@ -37,14 +37,14 @@ object Fragments {
   /** DuckDB fragment: a timestamp or date column as whole epoch
     * seconds, floored. `events.ts` is a nanosecond TIMESTAMP in parquet;
     * the cast to TIMESTAMP makes `epoch` read either type alike. */
-  def epochSec(c: String): String =
+  def epochSecSql(c: String): String =
     s"CAST(FLOOR(epoch(CAST($c AS TIMESTAMP))) AS BIGINT)"
 
   /** `e`(user_id, es, event_id, cols…): the events with whole epoch
     * seconds `es`. */
   def eventSecCte(cols: String): String =
     s"""e AS (SELECT user_id,
-       |    ${epochSec("ts")} AS es,
+       |    ${epochSecSql("ts")} AS es,
        |    event_id, $cols FROM events)""".stripMargin
 
   // ---- text ---------------------------------------------------------------

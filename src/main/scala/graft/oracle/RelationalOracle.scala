@@ -43,7 +43,7 @@ object RelationalOracle {
     * collapsed to the largest event id. */
   private val asofSql: String =
     s"""WITH e AS (SELECT event_id, user_id,
-       |    ${epochSec("ts")} AS es,
+       |    ${epochSecSql("ts")} AS es,
        |    event_type, value FROM events),
        |p AS (SELECT event_id, user_id, es FROM e WHERE event_type = 'purchase'),
        |v AS (SELECT user_id, es AS v_es, arg_max(event_id, event_id) AS v_id,
@@ -60,7 +60,7 @@ object RelationalOracle {
     // the same SCD2 dim — certifying the as-of reduction's semantics
     "q76_temporal_dim_join" ->
       s"""WITH feed AS (SELECT o_custkey AS k,
-        |    ${epochSec("o_orderdate")}
+        |    ${epochSecSql("o_orderdate")}
         |      AS ts,
         |    o_orderkey AS oid, o_orderpriority AS attr FROM orders),
         |dim AS (SELECT k, ts AS valid_from, oid AS ver_oid, attr FROM (
@@ -69,7 +69,7 @@ object RelationalOracle {
         |    FROM feed) t
         |  WHERE prev IS NULL OR attr <> prev),
         |facts AS (SELECT o_custkey AS k, o_orderkey,
-        |    ${epochSec("o_orderdate")}
+        |    ${epochSecSql("o_orderdate")}
         |      - 2592000 AS as_at FROM orders),
         |cand AS (SELECT f.o_orderkey, d.attr, d.valid_from, d.ver_oid,
         |    ROW_NUMBER() OVER (PARTITION BY f.o_orderkey
@@ -261,8 +261,8 @@ object RelationalOracle {
     // sum, two-level fold; exact integer-seconds arithmetic throughout
     "q63_interval_merge" ->
       s"""WITH iv AS (SELECT user_id, event_id,
-        |    ${epochSec("ts")} AS ss,
-        |    ${epochSec("ts")}
+        |    ${epochSecSql("ts")} AS ss,
+        |    ${epochSecSql("ts")}
         |      + 60 + event_id % 600 AS ee
         |  FROM events),
         |sw AS (SELECT user_id, event_id, ss, ee,
@@ -416,7 +416,7 @@ object RelationalOracle {
     // window form of the arg-max; identical planted gaps
     "q57_golden_record" ->
       s"""WITH feed AS (SELECT o_custkey AS k,
-        |    ${epochSec("o_orderdate")}
+        |    ${epochSecSql("o_orderdate")}
         |      AS ts,
         |    o_orderkey AS oid,
         |    CASE WHEN o_orderkey % 3 <> 0 THEN o_orderpriority END AS pri,
@@ -442,7 +442,7 @@ object RelationalOracle {
     // key; same pinned nearest tie rule (exact tie → backward)
     "q56_asof_directions" ->
       s"""WITH e AS (SELECT event_id, user_id,
-        |    ${epochSec("ts")} AS es,
+        |    ${epochSecSql("ts")} AS es,
         |    event_type FROM events),
         |p AS (SELECT event_id, user_id, es FROM e
         |  WHERE event_type = 'purchase'),
@@ -491,7 +491,7 @@ object RelationalOracle {
     // q53: identical RANGE frame over epoch seconds; decimal-exact sum
     "q53_range_frame" ->
       s"""WITH e AS (SELECT user_id, event_id,
-        |    ${epochSec("ts")} AS es,
+        |    ${epochSecSql("ts")} AS es,
         |    CAST(value AS DECIMAL(12,2)) AS v FROM events)
         |SELECT user_id, es, event_id,
         |  COUNT(*) OVER w AS n_1h,
@@ -638,7 +638,7 @@ object RelationalOracle {
     "q29_asof_native" -> asofSql,
     "q28_range_join" ->
       s"""WITH e AS (SELECT event_id, user_id,
-        |    ${epochSec("ts")} AS es,
+        |    ${epochSecSql("ts")} AS es,
         |    event_type FROM events)
         |SELECT p.user_id, p.event_id AS p_id, x.event_id AS e_id,
         |  p.es AS p_es, x.es AS e_es
@@ -720,7 +720,7 @@ object RelationalOracle {
         |ORDER BY set_op, o_orderpriority""".stripMargin,
     "q41_funnel" ->
       s"""WITH e AS (SELECT user_id,
-        |    ${epochSec("ts")} AS es,
+        |    ${epochSecSql("ts")} AS es,
         |    event_type FROM events),
         |a AS (SELECT user_id, MIN(es) AS t_view FROM e
         |      WHERE event_type = 'view' GROUP BY user_id),
@@ -747,7 +747,7 @@ object RelationalOracle {
     "q49_hour_concurrency" ->
       s"""WITH e AS (
         |  SELECT user_id, event_id,
-        |    ${epochSec("ts")} AS es
+        |    ${epochSecSql("ts")} AS es
         |  FROM events),
         |flagged AS (
         |  SELECT user_id, event_id, es,
@@ -772,7 +772,7 @@ object RelationalOracle {
     // (cumulative distinct ≡ cumsum of per-(key,value) first flags)
     "q48_window_count_distinct" ->
       s"""WITH e AS (SELECT user_id, event_id, event_type,
-        |    ${epochSec("ts")} AS es
+        |    ${epochSecSql("ts")} AS es
         |  FROM events),
         |f AS (SELECT user_id, es, event_id,
         |    CASE WHEN ROW_NUMBER() OVER (PARTITION BY user_id, event_type
@@ -786,7 +786,7 @@ object RelationalOracle {
     // q47: same collapse + interval windows replayed
     "q47_scd2" ->
       s"""WITH feed AS (SELECT o_custkey AS k,
-        |    ${epochSec("o_orderdate")} AS ts,
+        |    ${epochSecSql("o_orderdate")} AS ts,
         |    o_orderkey AS oid, o_orderpriority AS attr FROM orders),
         |ch AS (SELECT k, ts, oid, attr FROM (
         |    SELECT k, ts, oid, attr,
@@ -802,8 +802,8 @@ object RelationalOracle {
     // NULLS; values are copied (never summed) so plain doubles are exact
     "q46_resample_ffill" ->
       s"""WITH e AS (SELECT user_id, event_id, value,
-        |    ${epochSec("ts")} // 86400 AS ds,
-        |    ${epochSec("ts")} AS es
+        |    ${epochSecSql("ts")} // 86400 AS ds,
+        |    ${epochSecSql("ts")} AS es
         |  FROM events WHERE event_type = 'purchase'),
         |lastv AS (SELECT user_id, ds, value AS v_obs FROM (
         |    SELECT user_id, ds, value,
@@ -995,7 +995,7 @@ object RelationalOracle {
     "q24_sessionize" ->
       s"""WITH e AS (
         |  SELECT user_id, event_id,
-        |    ${epochSec("ts")} AS es
+        |    ${epochSecSql("ts")} AS es
         |  FROM events),
         |flagged AS (
         |  SELECT user_id, event_id, es,

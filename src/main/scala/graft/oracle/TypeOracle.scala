@@ -609,7 +609,7 @@ object TypeOracle {
     // all-equal test, no float threshold); no rounding anywhere
     "t49_rolling_corr" ->
       s"""WITH e AS (SELECT user_id, event_id,
-        |    ${epochSec("ts")} AS es,
+        |    ${epochSecSql("ts")} AS es,
         |    value AS x, CAST(length(props) AS DOUBLE) AS y
         |  FROM events),
         |l AS (SELECT user_id, es, event_id, x, y,
@@ -675,7 +675,7 @@ object TypeOracle {
     // like Spark's BigDecimal.doubleValue
     "t61_expanding_skew_kurt" ->
       s"""WITH e AS (SELECT user_id, event_id,
-        |    ${epochSec("ts")} AS es,
+        |    ${epochSecSql("ts")} AS es,
         |    CAST(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
         |      AS HUGEINT) AS c
         |  FROM events),
@@ -714,7 +714,7 @@ object TypeOracle {
         |FROM m ORDER BY user_id, es, event_id""".stripMargin,
     "t48_expanding" ->
       s"""WITH e AS (SELECT user_id, event_id,
-        |    ${epochSec("ts")} AS es,
+        |    ${epochSecSql("ts")} AS es,
         |    value,
         |    CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents
         |  FROM events),
@@ -818,7 +818,7 @@ object TypeOracle {
     // t38: same three policies, same (es, event_id) pinning
     "t38_drop_duplicates" ->
       s"""WITH e AS (SELECT user_id, event_type, event_id,
-        |    ${epochSec("ts")} AS es
+        |    ${epochSecSql("ts")} AS es
         |  FROM events),
         |r AS (SELECT user_id, event_type, event_id,
         |    ROW_NUMBER() OVER (PARTITION BY user_id, event_type
@@ -873,7 +873,7 @@ object TypeOracle {
     // the realized offset on both engines (naive read back as UTC)
     "t40_timezone" ->
       s"""WITH e AS (SELECT event_id,
-        |    ${epochSec("ts")}
+        |    ${epochSecSql("ts")}
         |      + (event_id % 365) * 86400 AS es
         |  FROM events)
         |SELECT event_id, es,
@@ -976,7 +976,7 @@ object TypeOracle {
     // double division; first-row lag is NULL in both engines
     "t34_shift_diff" ->
       s"""WITH e AS (SELECT user_id, event_id, value,
-        |    ${epochSec("ts")} AS es
+        |    ${epochSecSql("ts")} AS es
         |  FROM events),
         |l AS (SELECT user_id, es, event_id, value,
         |    LAG(value) OVER (PARTITION BY user_id ORDER BY es, event_id)
@@ -1228,7 +1228,7 @@ object TypeOracle {
       s"""SELECT event_id, es, es * 1000000 AS us_epoch,
         |  1704067200000000 + es * 60000000 AS us_minutes
         |FROM (SELECT event_id,
-        |  ${epochSec("ts")} AS es
+        |  ${epochSecSql("ts")} AS es
         |  FROM events WHERE event_id < 100) ORDER BY event_id""".stripMargin,
     "t8_cast_timedelta" ->
       """SELECT o_orderkey,

@@ -514,16 +514,13 @@ object LlmQueries {
     * shape: one corpus tokenize → (source, token) count shuffle →
     * source-partitioned rank window → top-200 filter → per-source
     * aggregate; everything after the count table is vocab-bounded.
-    * Fit core in [[graft.operators.TextAnalysis.zipfFromCounts]]
-    * (shared with the S27 streaming monitor — the count table is a
-    * semigroup, so the stream folds it as state). */
+    * Count table ([[graft.operators.TextAnalysis.sourceTokenCounts]])
+    * and fit core ([[graft.operators.TextAnalysis.zipfFromCounts]]) are
+    * shared with the S27 streaming monitor — the count table is a
+    * semigroup, so the stream folds it as state. */
   def x38Zipf(s: SparkSession, dir: String): DataFrame =
     TextAnalysis.zipfFromCounts(
-      t(s, dir, "documents")
-        .select(col("source"),
-          explode(TextAnalysis.tokens(col("text"))).as("tok"))
-        .filter(col("tok") =!= "")
-        .groupBy("source", "tok").agg(count(lit(1)).as("c")),
+      TextAnalysis.sourceTokenCounts(t(s, dir, "documents"), "text", "source"),
       topR = 200)
 
   // ---- L92: k-center coreset selection -------------------------------------
@@ -599,15 +596,12 @@ object LlmQueries {
     * engines replay exactly; epochs = one exactly-representable IEEE
     * division). Scale shape: ONE corpus scan → source-cardinality
     * aggregate; the two scalars (U, T*) ride 1-row broadcast crosses
-    * over the tiny source table — the corpus is never touched again. */
+    * over the tiny source table — the corpus is never touched again.
+    * Availability and units are [[Sampling.mixAvailability]] and
+    * [[Sampling.withMixUnits]], shared with the S26 streaming fold. */
   def p5MixingPlan(s: SparkSession, dir: String): DataFrame =
-    Sampling.mixingPlan(
-      t(s, dir, "documents")
-        .select(col("source"),
-          size(TextAnalysis.tokens(col("text"))).cast(LongType).as("n_tokens"))
-        .groupBy("source").agg(sum("n_tokens").as("avail"))
-        .withColumn("u",
-          regexp_extract(col("source"), "(\\d+)", 1).cast(LongType) % 4 + 1),
+    Sampling.mixingPlan(Sampling.withMixUnits(
+      Sampling.mixAvailability(t(s, dir, "documents"), "text", "source")),
       cap = 4L)
 
   // ---- L78: quality-threshold yield curve -----------------------------------
@@ -722,59 +716,16 @@ object LlmQueries {
   }
 
   // ---- L74: Count-Min sketch point-frequency queries ------------------------
-  /** Count-Min sketch (Cormode & Muthukrishnan 2005) — the fixed-size
-    * frequency sketch next to x14's Misra-Gries top-k: 4 seeded md5
-    * hash rows × 1024 buckets of purely ADDITIVE counts, so state is
-    * 4096 cells whatever the corpus and merges across partitions,
-    * batches, and streams by plain addition; answers a point query for
-    * ANY token as est = min over rows, guaranteed ≥ truth
-    * (conservative — every occurrence lands in the probed cell; only
-    * collisions inflate it; spec-pinned). Probes: the corpus's exact
-    * top-10 tokens (deterministic (cnt desc, token) cut) + 5 md5-order
-    * sampled tokens, reading both the heavy-hitter and the
-    * collision-noise regimes; the exact counts are the verification
-    * twin a 100 TB run drops. md5-prefix buckets so every cell and
-    * estimate replays bit-exact in DuckDB. Shuffle profile: only
-    * (seed, bucket) int pairs and (token, count) rows move — map-side
-    * combined; the 4096-cell table broadcasts to the probes. */
+  /** Count-Min sketch — the fixed-size frequency sketch next to x14's
+    * Misra-Gries top-k: 4 seeded md5 hash rows × 1024 buckets, 4096
+    * additive cells whatever the corpus, probed for the corpus's heavy
+    * and md5-sampled tokens ([[Sketches.countMinProbe]]; cells and
+    * estimate read shared with the S21 streaming fold). The exact
+    * counts are the verification twin a 100 TB run drops. */
   def x28CountMin(s: SparkSession, dir: String): DataFrame =
-    countMinProbe(t(s, dir, "documents")
+    Sketches.countMinProbe(t(s, dir, "documents")
         .select(explode(TextAnalysis.tokens(col("text"))).as("tok")),
       seeds = 4, buckets = 1024)
-
-  /** CMS core over a single `tok` column — parameterized so the spec
-    * can shrink `buckets` to force collisions and pin est ≥ truth. */
-  def countMinProbe(tokens: DataFrame, seeds: Int, buckets: Int): DataFrame = Settle.scope("countMinProbe") { st =>
-    def bucketOf(sd: Int, c: Column): Column =
-      pmod(conv(substring(md5(concat(lit(sd + "|"), c)), 1, 15), 16, 10)
-        .cast("long"), lit(buckets))
-    // r14 (guide §2.3 aggregate-before-you-shuffle, §4 per-row work):
-    // count tokens FIRST, then derive the CMS cells from the count
-    // table — addition is associative, so summing per-token exact
-    // counts into (seed, bucket) cells is bit-identical to counting
-    // occurrences, and the 4 md5 probes run once per DISTINCT token
-    // instead of once per occurrence (the dominant map cost). The
-    // exact-count table is also exactly what the probe selection
-    // needs, so one aggregation serves all three consumers (cached:
-    // heavy + sampled cuts and the cell derivation).
-    val exact = st.cache(tokens.filter(col("tok") =!= "")
-      .groupBy("tok").agg(count(lit(1)).as("exact_n")))
-    val cells = exact
-      .select(col("exact_n"), posexplode(array((0 until seeds).map(sd =>
-        bucketOf(sd, col("tok"))): _*)).as(Seq("seed", "bucket")))
-      .groupBy("seed", "bucket").agg(sum("exact_n").as("c"))
-    val heavy = exact.orderBy(col("exact_n").desc, col("tok")).limit(10)
-    val sampled = exact.orderBy(md5(col("tok")), col("tok")).limit(5)
-    heavy.unionByName(sampled).distinct()
-      .select(col("tok"), col("exact_n"),
-        posexplode(array((0 until seeds).map(sd =>
-          bucketOf(sd, col("tok"))): _*)).as(Seq("seed", "bucket")))
-      .join(broadcast(cells), Seq("seed", "bucket"))
-      .groupBy("tok", "exact_n").agg(min("c").as("cms_n"))
-      .select(col("tok"), col("exact_n"), col("cms_n"),
-        (col("cms_n") - col("exact_n")).as("overcount"))
-      .orderBy(col("exact_n").desc, col("tok"))
-  }
 
   // ---- L73: Matryoshka dimension-truncation recall sweep --------------------
   /** Embedding-DIMENSION recall curve — recall@10 of brute cosine over
@@ -2412,7 +2363,9 @@ object LlmQueries {
   // ---- L86: Good-Turing unseen-mass estimate -------------------------------
   /** Frequency-of-frequencies N_r for r ≤ 10 with mass shares and
     * Good-Turing adjusted counts; row r=1's mass share = estimated
-    * unseen-token probability (see [[TextAnalysis.goodTuring]]). */
+    * unseen-token probability (see [[TextAnalysis.goodTuring]]; its
+    * count table [[TextAnalysis.tokenTypeCounts]] is the one the S24
+    * streaming fold keeps). */
   def x35GoodTuring(s: SparkSession, dir: String): DataFrame =
     TextAnalysis.goodTuring(t(s, dir, "documents"), "text", maxR = 10)
 

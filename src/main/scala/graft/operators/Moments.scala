@@ -8,9 +8,10 @@ import org.apache.spark.sql.functions._
   * M4 = n³Σc⁴−4n²ΣcΣc³+6n(Σc)²Σc²−3(Σc)⁴ over exact integer units
   * (order-insensitive at any partitioning), and the pinned IEEE
   * terminal expressions for sample skewness G1 and excess kurtosis
-  * G2 (the pandas `skew()`/`kurt()` conventions). Shared by the
-  * batch t61 query and the S33 streaming monitor so both sides are
-  * the same expression tree by construction.
+  * G2 (the pandas `skew()`/`kurt()` conventions). The batch t61
+  * query and the S33 streaming monitor build their power sums through
+  * [[powerSums]] and read them through these kernels, so both sides
+  * are the same expression tree by construction.
   *
   * m2^1.5 is computed as m2·√m2 — multiply and sqrt are correctly
   * rounded IEEE ops, `pow(x, 1.5)` is not and diverges cross-engine.
@@ -19,6 +20,24 @@ import org.apache.spark.sql.functions._
 object Moments {
   import org.apache.spark.sql.types.{DecimalType, DoubleType}
   private val d38 = DecimalType(38, 0)
+  private val d19 = DecimalType(19, 0)
+
+  /** A 2-decimal money value as exact integer cents (long). */
+  def cents(v: Column): Column =
+    (graft.Tables.dec(v) * lit(100)).cast("long")
+
+  /** The five exact power sums n, s1..s4 (Σc..Σc⁴, DECIMAL(38,0)) of
+    * integer cents `c`, as aggregate columns; `over` turns each
+    * aggregate into the caller's frame — a window (t61's expanding
+    * sums) or, with `identity`, a group aggregate (S33, whose sums add
+    * across batches). c⁴ stages c²·c² through DECIMAL(19,0), since
+    * 56021⁴ ≈ 9.9e18 overflows int64. */
+  def powerSums(c: Column, over: Column => Column): Seq[Column] = Seq(
+    over(count(lit(1))).as("n"),
+    over(sum(c)).cast(d38).as("s1"),
+    over(sum(c * c)).cast(d38).as("s2"),
+    over(sum((c * c * c).cast(d38))).cast(d38).as("s3"),
+    over(sum((c * c).cast(d19) * (c * c).cast(d19))).cast(d38).as("s4"))
 
   /** (M2, M3, M4) from count + raw power sums (all exact decimals). */
   def kernels(n: Column, s1: Column, s2: Column, s3: Column,

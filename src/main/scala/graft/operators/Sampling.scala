@@ -3,10 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.Settle
-import graft.expressions.TopKAgg
 
 /** Deterministic corpus-sampling operators.
   *
@@ -26,10 +24,10 @@ object Sampling {
     * Returns (group, id, rk) with rk 1..n in hash order.
     *
     * Scale shape: one hash aggregate keyed on the group via the
-    * mergeable bounded-heap [[TopKAgg]] — each map partition holds at
-    * most n (score, id) pairs per group and heaps merge reduce-side,
-    * so a group with a billion rows still reduces O(partitions × n);
-    * no window, no sort of the corpus. */
+    * mergeable bounded heap [[Sketches.groupTopK]] — each map
+    * partition holds at most n (score, id) pairs per group and heaps
+    * merge reduce-side, so a group with a billion rows still reduces
+    * O(partitions × n); no window, no sort of the corpus. */
   def groupQuota(df: DataFrame, groupCol: String, idCol: String,
       n: Int): DataFrame = {
     // smallest-md5-first surfaced through a largest-first heap by
@@ -39,14 +37,9 @@ object Sampling {
     // so the order is still deterministic and oracle-reproducible.
     val score = -conv(substring(md5(col(idCol).cast("string")), 1, 15), 16, 10)
       .cast("long").cast("double")
-    val hits = ColumnBridge.column(
-      TopKAgg(ColumnBridge.expression(score),
-        ColumnBridge.expression(col(idCol).cast("long")), n)
-        .toAggregateExpression())
-    df.groupBy(col(groupCol).as("grp")).agg(hits.as("hits"))
-      .select(col("grp"), posexplode(col("hits")))
-      .select(col("grp").as(groupCol), col("col.id").as(idCol),
-        (col("pos") + 1).cast("int").as("rk"))
+    Sketches.groupTopK(df, Seq(col(groupCol).as("grp")), score,
+        col(idCol).cast("long"), n)
+      .select(col("grp").as(groupCol), col("id").as(idCol), col("rk"))
   }
 
   /** Temperature-reweighted mixture sampling: each group's keep rate
@@ -178,8 +171,8 @@ object Sampling {
     * replays bit-exactly in SQL. Rows with w ≤ 0 are excluded.
     *
     * Scale shape: u/ξ are map-side expressions; the per-group top-k
-    * is one window over the group key — swap in [[TopKAgg]] (the q44
-    * aggregate idiom) when groups are few and rows are huge. */
+    * is one window over the group key — swap in [[Sketches.groupTopK]]
+    * (the q44 aggregate idiom) when groups are few and rows are huge. */
   def weightedSample(df: DataFrame, groupCol: String, idCol: String,
       weight: Column, k: Int): DataFrame = {
     val u = conv(substring(md5(col(idCol).cast("string")), 1, 15), 16, 10)
@@ -195,6 +188,20 @@ object Sampling {
     ranked.filter(col("rn") <= k)
       .select(col(groupCol), col(idCol), col("w"), col("xi"))
   }
+
+  /** p5's availability table (source, avail): the tokens each source
+    * offers. A per-source sum, so it folds across batches (the S26
+    * streaming twin keeps it as state). */
+  def mixAvailability(docs: DataFrame, textCol: String,
+      sourceCol: String): DataFrame =
+    docs.select(col(sourceCol).as("source"),
+        size(TextAnalysis.tokens(col(textCol))).cast("long").as("n_tokens"))
+      .groupBy("source").agg(sum("n_tokens").as("avail"))
+
+  /** Adds p5's pinned integer target-weight units to an availability
+    * table: u = (the first number in the source name) mod 4, plus 1. */
+  def withMixUnits(avail: DataFrame): DataFrame = avail.withColumn("u",
+    regexp_extract(col("source"), "(\\d+)", 1).cast("long") % 4 + 1)
 
   /** The mixing-plan SOLVER (p5's core, shared with streaming twin
     * S26): given a per-source availability table `(source, avail, u)`

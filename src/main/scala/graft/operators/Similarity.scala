@@ -2,10 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.Settle
-import graft.expressions.{Kernels, TopKAgg}
+import graft.expressions.Kernels
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -80,23 +79,15 @@ object Similarity {
   }
 
   /** Per-query top-k of `(qid, id, cos)` rows via the mergeable
-    * bounded-heap aggregate [[graft.expressions.TopKAgg]] — NOT a
-    * `row_number` window. The window form repartitions every candidate
-    * of a query into one task (the whole corpus per query under brute
-    * force); the aggregate keeps ≤k rows per map partition per query
-    * and merges k-sized heaps, so reduce-side work is
-    * O(partitions × k), independent of corpus size. Output schema and
-    * ordering are identical to the previous window formulation
-    * (rank by cos desc, id asc; rk starting at 1). */
-  private def topK(scored: DataFrame, k: Int): DataFrame = {
-    val hits = ColumnBridge.column(
-      TopKAgg(ColumnBridge.expression(col("cos")),
-        ColumnBridge.expression(col("id")), k).toAggregateExpression())
-    scored.groupBy("qid").agg(hits.as("hits"))
-      .select(col("qid"), posexplode(col("hits")))
-      .select(col("qid"), col("col.id").as("id"), col("col.score").as("cos"),
-        (col("pos") + 1).cast("int").as("rk"))
-  }
+    * bounded heap [[Sketches.groupTopK]] — NOT a `row_number` window.
+    * The window form repartitions every candidate of a query into one
+    * task (the whole corpus per query under brute force); the heap
+    * keeps ≤k rows per map partition per query, so reduce-side work
+    * is O(partitions × k), independent of corpus size. Ranks by cos
+    * desc, id asc; rk starts at 1. */
+  private def topK(scored: DataFrame, k: Int): DataFrame =
+    Sketches.groupTopK(scored, Seq(col("qid")), col("cos"), col("id"), k)
+      .select(col("qid"), col("id"), col("score").as("cos"), col("rk"))
 
   /** Exact top-k by cosine for each query vector (brute force).
     * One pass over the corpus; per-query top-k via the bounded-heap
@@ -229,7 +220,7 @@ object Similarity {
     * objects of the encoding kernel and literals of the per-query LUT,
     * no join; encoding is a map-side projection; ADC scoring is
     * one scan of the compressed corpus against broadcast LUTs; both
-    * top-k stages run on the mergeable bounded-heap [[TopKAgg]]
+    * top-k stages run on the mergeable bounded heap [[Sketches.groupTopK]]
     * (window-free); the exact re-rank touches only rerank·k·|queries|
     * full vectors. */
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
@@ -290,7 +281,7 @@ object Similarity {
     * deterministic spherical sample quantizer ([[Dedup.semanticDedup]]
     * / s3's md5-order centroid pick, fully SQL-replayable); candidates
     * are same-cell pairs only; per-node top-k runs through the
-    * mergeable bounded-heap [[graft.expressions.TopKAgg]] (cos desc,
+    * mergeable bounded heap [[Sketches.groupTopK]] (cos desc,
     * id asc); an edge survives iff EACH endpoint ranks the other in
     * its own top-k (mutual symmetrization — the standard kNN-graph
     * noise filter).

@@ -460,14 +460,16 @@ object TextAnalysis {
       .withColumn("delim", col("tok").isin(rakeStopwords.map(lit(_)): _*) ||
         col("tok").rlike("[^a-z0-9]") || col("tok") === "")
     val wDoc = Window.partitionBy("doc_id").orderBy("p")
-    // PERSISTED (r14): three consumers (phrase fold, word stats,
-    // phrase scoring) each re-ran the tokenize + posexplode + per-doc
-    // window chain — unlike x40's flat bigram explode, the recompute
-    // here includes a shuffle+sort per consumer, which A/B measured
-    // worth caching
-    val member = st.cache(tok
+    // NOT cached (measured DON'T-DO, like x40's persists): three
+    // consumers (phrase fold, word stats, phrase scoring) re-run the
+    // tokenize + posexplode + per-doc window chain, yet caching it did
+    // not pay. x45 at sf0.1, min of 3 passes, 10 alternating fresh-JVM
+    // pairs on 4 vCPUs: cached won 5/10, median 2.161 s vs 2.220 s
+    // recomputed — a 0.059 s gap inside the cached side's 0.270 s
+    // interquartile range.
+    val member = tok
       .withColumn("grp", sum(col("delim").cast("long")).over(wDoc))
-      .filter(!col("delim")))
+      .filter(!col("delim"))
     val phrases = member.groupBy("doc_id", "grp")
       .agg(sort_array(collect_list(struct(col("p"), col("tok")))).as("pt"))
       .select(col("doc_id"), col("grp"),
@@ -488,10 +490,10 @@ object TextAnalysis {
       .agg(max("pscore").as("score"), count(lit(1)).as("n_occur"))
     val wRank = Window.partitionBy("doc_id")
       .orderBy(col("score").desc, col("phrase"))
-    // topK-per-doc result settles eagerly so the member cache releases
-    // before return; no terminal orderBy (row order is not part of the
-    // operator contract — the x45 query applies its own final sort,
-    // and a sort here made its range sampling re-evaluate the chain)
+    // topK-per-doc result settles eagerly, so a caller's final sort
+    // samples its range bounds from the settled rows instead of
+    // re-evaluating the chain; no terminal orderBy (row order is not
+    // part of the operator contract — the x45 query applies its own)
     st.settle(scored.withColumn("rank", row_number().over(wRank))
       .filter(col("rank") <= topK)
       .select(col("doc_id"), col("rank"), col("phrase"),
@@ -840,9 +842,26 @@ object TextAnalysis {
     * are single IEEE ops the oracle replays. */
   def goodTuring(df: org.apache.spark.sql.DataFrame, textCol: String,
       maxR: Int = 10): org.apache.spark.sql.DataFrame =
-    goodTuringFromCounts(
-      df.select(explode(tokens(col(textCol))).as("tok"))
-        .groupBy("tok").agg(count(lit(1)).as("c")), maxR)
+    goodTuringFromCounts(tokenTypeCounts(df, textCol), maxR)
+
+  /** Token-type counts (tok, c) of a text column, the empty token
+    * INCLUDED: Good-Turing's N is every token the tokenizer emits (x35
+    * and its S24 fold). [[sourceTokenCounts]] drops "" because Zipf
+    * ranks words, so the two tables stay two definitions. */
+  def tokenTypeCounts(df: org.apache.spark.sql.DataFrame,
+      textCol: String): org.apache.spark.sql.DataFrame =
+    df.select(explode(tokens(col(textCol))).as("tok"))
+      .groupBy("tok").agg(count(lit(1)).as("c"))
+
+  /** Per-source token counts (source, tok, c) of a text column, the
+    * empty token dropped — the input of [[zipfFromCounts]] (x38 and its
+    * S27 fold; see [[tokenTypeCounts]] for the table that keeps ""). */
+  def sourceTokenCounts(df: org.apache.spark.sql.DataFrame, textCol: String,
+      sourceCol: String): org.apache.spark.sql.DataFrame =
+    df.select(col(sourceCol).as("source"),
+        explode(tokens(col(textCol))).as("tok"))
+      .filter(col("tok") =!= "")
+      .groupBy("source", "tok").agg(count(lit(1)).as("c"))
 
   /** The terminal half of [[goodTuring]], from a (tok, c) count table.
     * The count table is a SEMIGROUP (counts fold by addition — the

@@ -70,18 +70,27 @@ object ZOrder {
   def layoutStats(df: DataFrame, a: Column, b: Column,
       log2Buckets: Int): DataFrame = {
     val base = df.select(a.cast("long").as("da"), b.cast("long").as("db"))
-    val ext = base.agg(
-      min(col("da")).as("a_mn"), max(col("da")).as("a_mx"),
-      min(col("db")).as("b_mn"), max(col("db")).as("b_mx"))
-    base.crossJoin(broadcast(ext))
-      .select(col("da"), col("db"),
-        zbucket2(
-          normalize16(col("da"), col("a_mn"), col("a_mx")),
-          normalize16(col("db"), col("b_mn"), col("b_mx")),
-          log2Buckets).as("zb"))
+    bucketStats(base.crossJoin(broadcast(extents(base))), col("da"), col("db"),
+      col("a_mn"), col("a_mx"), col("b_mn"), col("b_mx"), log2Buckets)
+  }
+
+  /** The one-row extents (a_mn, a_mx, b_mn, b_mx) of (da, db) rows. */
+  def extents(base: DataFrame): DataFrame = base.agg(
+    min(col("da")).as("a_mn"), max(col("da")).as("a_mx"),
+    min(col("db")).as("b_mn"), max(col("db")).as("b_mx"))
+
+  /** Per-bucket stats (zb, n_rows, a_min, a_max, b_min, b_max) of the
+    * dimensions `a`, `b`, each normalized over the extent Columns
+    * given — data-derived ones ([[layoutStats]], q62) or a pinned
+    * layout contract (the S15 streaming fold). Counts add and mins /
+    * maxes merge exactly, so the table folds across batches. */
+  def bucketStats(df: DataFrame, a: Column, b: Column, aMn: Column,
+      aMx: Column, bMn: Column, bMx: Column, log2Buckets: Int): DataFrame =
+    df.select(a.cast("long").as("da"), b.cast("long").as("db"),
+        zbucket2(normalize16(a.cast("long"), aMn, aMx),
+          normalize16(b.cast("long"), bMn, bMx), log2Buckets).as("zb"))
       .groupBy("zb")
       .agg(count(lit(1)).as("n_rows"),
         min(col("da")).as("a_min"), max(col("da")).as("a_max"),
         min(col("db")).as("b_min"), max(col("db")).as("b_max"))
-  }
 }

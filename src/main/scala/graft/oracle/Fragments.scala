@@ -28,12 +28,6 @@ object Fragments {
   def dsumSql(col: String): String =
     decToDoubleSql(s"SUM(CAST($col AS DECIMAL(12,2)))")
 
-  /** DuckDB fragment: the matching [[graft.Tables.dsum]] of a 2-decimal
-    * double, cast straight to DOUBLE (not through VARCHAR as
-    * [[dsumSql]] does). */
-  def moneySumSql(col: String): String =
-    s"CAST(SUM(CAST($col AS DECIMAL(12,2))) AS DOUBLE)"
-
   /** DuckDB fragment: a timestamp or date column as whole epoch
     * seconds, floored. `events.ts` is a nanosecond TIMESTAMP in parquet;
     * the cast to TIMESTAMP makes `epoch` read either type alike. */

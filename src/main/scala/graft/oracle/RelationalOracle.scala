@@ -115,7 +115,7 @@ object RelationalOracle {
       s"""SELECT CASE WHEN year(o_orderdate) <= 1995 THEN 'legacy'
         |    ELSE 'ch' || CAST(o_orderkey % 3 AS VARCHAR) END AS channel,
         |  COUNT(*) AS n,
-        |  ${moneySumSql("o_totalprice")} AS revenue
+        |  ${dsumSql("o_totalprice")} AS revenue
         |FROM orders GROUP BY 1 ORDER BY channel""".stripMargin,
     // q73: per-row quarantine verdict recomputed from the corruption
     // rule (every 7th record truncated); corrupt rows sum to NULL
@@ -130,7 +130,7 @@ object RelationalOracle {
     "q71_partition_pruning" ->
       s"""SELECT event_type, COUNT(*) AS n,
         |  COUNT(DISTINCT user_id) AS n_users,
-        |  ${moneySumSql("value")} AS total_value
+        |  ${dsumSql("value")} AS total_value
         |FROM events WHERE event_type IN ('view', 'purchase')
         |GROUP BY event_type ORDER BY event_type""".stripMargin,
     // q70: the textbook recursive-CTE rollup — semantics truth for the
@@ -155,7 +155,7 @@ object RelationalOracle {
     "q69_bucketed_join" ->
       s"""SELECT CAST(EXTRACT(year FROM o_orderdate) AS INT) AS o_year,
         |  COUNT(*) AS n_items,
-        |  ${moneySumSql("l_extendedprice")}
+        |  ${dsumSql("l_extendedprice")}
         |    AS revenue
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |GROUP BY 1 ORDER BY o_year""".stripMargin,
@@ -482,10 +482,10 @@ object RelationalOracle {
     // incremental-maintenance contract
     "q55_incremental_mv" ->
       s"""SELECT o_custkey AS k, COUNT(*) AS cnt,
-        |  ${moneySumSql("o_totalprice")} AS total,
+        |  ${dsumSql("o_totalprice")} AS total,
         |  CAST(MIN(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS lo,
         |  CAST(MAX(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS hi,
-        |  ROUND(${moneySumSql("o_totalprice")}
+        |  ROUND(${dsumSql("o_totalprice")}
         |    / COUNT(*), 6) AS avg_price
         |FROM orders GROUP BY o_custkey ORDER BY k""".stripMargin,
     // q53: identical RANGE frame over epoch seconds; decimal-exact sum
@@ -519,7 +519,7 @@ object RelationalOracle {
         |  CAST(MIN(us) // 1000000 AS BIGINT) AS start_s,
         |  CAST(MAX(us) // 1000000 AS BIGINT) + 1800 AS end_s,
         |  COUNT(*) AS n_events,
-        |  ${moneySumSql("value")} AS total_value
+        |  ${dsumSql("value")} AS total_value
         |FROM s GROUP BY user_id, sid ORDER BY user_id, start_s""".stripMargin,
     // q50: identical dow convention (DuckDB dayofweek = 0..6 Sunday
     // first), quantile_cont = Spark's exact interpolating percentile,
@@ -944,17 +944,17 @@ object RelationalOracle {
          |FROM lineitem JOIN part ON l_partkey = p_partkey
          |WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1997-04-01'""".stripMargin,
     "q15_scalar_subq" ->
-      s"""SELECT ${moneySumSql("l_extendedprice")} / 7.0 AS avg_yearly
+      s"""SELECT ${dsumSql("l_extendedprice")} / 7.0 AS avg_yearly
         |FROM lineitem JOIN (
         |  SELECT l_partkey AS ap_partkey,
-        |    ${moneySumSql("l_quantity")} / COUNT(*) AS avg_qty
+        |    ${dsumSql("l_quantity")} / COUNT(*) AS avg_qty
         |  FROM lineitem GROUP BY l_partkey) ON l_partkey = ap_partkey
         |WHERE l_quantity < 0.5 * avg_qty""".stripMargin,
     "q16_groupagg_topk" ->
       s"""SELECT l_orderkey, o_custkey, total_qty, rk FROM (
         |  SELECT l_orderkey,
-        |    ${moneySumSql("l_quantity")} AS total_qty,
-        |    ROW_NUMBER() OVER (ORDER BY ${moneySumSql("l_quantity")} DESC, l_orderkey ASC) AS rk
+        |    ${dsumSql("l_quantity")} AS total_qty,
+        |    ROW_NUMBER() OVER (ORDER BY ${dsumSql("l_quantity")} DESC, l_orderkey ASC) AS rk
         |  FROM lineitem GROUP BY l_orderkey)
         |JOIN orders ON l_orderkey = o_orderkey
         |WHERE rk <= 20 ORDER BY rk""".stripMargin,
@@ -970,12 +970,12 @@ object RelationalOracle {
         |ORDER BY p_partkey""".stripMargin,
     "q19_rollup" ->
       s"""SELECT l_returnflag, l_linestatus,
-        |  ${moneySumSql("l_quantity")} AS sum_qty, COUNT(*) AS n
+        |  ${dsumSql("l_quantity")} AS sum_qty, COUNT(*) AS n
         |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
         |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin,
     "q20_cube" ->
       s"""SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
-        |  ${moneySumSql("o_totalprice")} AS total
+        |  ${dsumSql("o_totalprice")} AS total
         |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
         |ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin,
     "q21_pivot" ->
@@ -990,7 +990,7 @@ object RelationalOracle {
     "q23_events_bucket" ->
       s"""SELECT CAST(FLOOR(epoch(date_trunc('hour', CAST(ts AS TIMESTAMP)))) AS BIGINT) AS hour_s,
         |  event_type, COUNT(*) AS n,
-        |  ${moneySumSql("value")} AS total_value
+        |  ${dsumSql("value")} AS total_value
         |FROM events GROUP BY 1, 2 ORDER BY hour_s, event_type""".stripMargin,
     "q24_sessionize" ->
       s"""WITH e AS (

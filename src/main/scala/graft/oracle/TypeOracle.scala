@@ -487,7 +487,7 @@ object TypeOracle {
         |  COUNT(*) AS n_rows,
         |  CAST(SUM(CASE WHEN score > 200000 THEN 1 ELSE 0 END) AS BIGINT)
         |    AS n_hi,
-        |  ${moneySumSql("l_quantity")} AS sum_qty
+        |  ${dsumSql("l_quantity")} AS sum_qty
         |FROM e2 GROUP BY 1 ORDER BY 1""".stripMargin,
     // t55: identical cents-string cells, identical plants, identical
     // null-safe inequality
@@ -545,7 +545,7 @@ object TypeOracle {
         |  MAX(CASE WHEN ra = 1 THEN value END) AS open,
         |  MAX(value) AS high, MIN(value) AS low,
         |  MAX(CASE WHEN rd = 1 THEN value END) AS close,
-        |  ${moneySumSql("value")} AS volume,
+        |  ${dsumSql("value")} AS volume,
         |  COUNT(*) AS n_ticks
         |FROM r GROUP BY user_id, day_s ORDER BY user_id, day_s""".stripMargin,
     // t52: identical lag frame + the same pure-selection median
@@ -1012,12 +1012,12 @@ object TypeOracle {
         |  FROM events, st)
         |SELECT 'cut' AS kind, bin, COUNT(*) AS n,
         |  MIN(value) AS vmin, MAX(value) AS vmax,
-        |  ${moneySumSql("value")} AS total
+        |  ${dsumSql("value")} AS total
         |FROM cb GROUP BY bin
         |UNION ALL
         |SELECT 'qcut' AS kind, bin, COUNT(*) AS n,
         |  MIN(value) AS vmin, MAX(value) AS vmax,
-        |  ${moneySumSql("value")} AS total
+        |  ${dsumSql("value")} AS total
         |FROM qb GROUP BY bin
         |ORDER BY kind, bin""".stripMargin,
     // the raw strings round-trip losslessly, so the oracle is simply
@@ -1223,7 +1223,7 @@ object TypeOracle {
          |p AS (SELECT CASE WHEN regexp_matches(TRIM(raw), '$floatReSql')
          |  THEN CAST(TRIM(raw) AS DOUBLE) END AS v FROM r)
          |SELECT COUNT(v) AS n_parsed, COUNT(CASE WHEN v IS NULL THEN 1 END) AS n_failed,
-         |  ${moneySumSql("v")} AS total FROM p""".stripMargin,
+         |  ${dsumSql("v")} AS total FROM p""".stripMargin,
     "t7_cast_datetime" ->
       s"""SELECT event_id, es, es * 1000000 AS us_epoch,
         |  1704067200000000 + es * 60000000 AS us_minutes
@@ -1294,8 +1294,8 @@ object TypeOracle {
         | FROM lineitem)
         |SELECT COUNT(*) AS n, COUNT(CASE WHEN q IS NULL THEN 1 END) AS n_null,
         |  COUNT(q) AS n_valid,
-        |  ${moneySumSql("COALESCE(q, 0.0)")} AS sum_filled,
-        |  ${moneySumSql("q")} / COUNT(q) AS avg_skipna
+        |  ${dsumSql("COALESCE(q, 0.0)")} AS sum_filled,
+        |  ${dsumSql("q")} / COUNT(q) AS avg_skipna
         |FROM w""".stripMargin,
     "t15_categorical" ->
       """SELECT value, CAST(DENSE_RANK() OVER (ORDER BY value) - 1 AS INTEGER) AS code, n
@@ -1342,7 +1342,7 @@ object TypeOracle {
          |    THEN CAST(TRIM(raw) AS DOUBLE) END AS v
          | FROM m)
          |SELECT subtype, COUNT(*) AS n,
-         |  ${moneySumSql("v")} AS total
+         |  ${dsumSql("v")} AS total
          |FROM c GROUP BY subtype ORDER BY subtype""".stripMargin,
   )
 }

@@ -677,24 +677,18 @@ object Relational {
 
   // ---- R44: group top-k via mergeable aggregate ---------------------------
   // q7's result (top-3 orders per customer) through the bounded-heap
-  // TopKAgg instead of a window: the window form funnels EVERY row of
-  // a group into one task; the aggregate keeps the reduce side
+  // group top-k (graft.operators.Sketches.groupTopK, shared with the S17
+  // streaming fold) instead of a window: the window form funnels EVERY
+  // row of a group into one task; the aggregate keeps the reduce side
   // O(partitions × k) with map-side partials — the shape that survives
   // a hot-key 100× scale-up. Same (score desc, id asc) ranking, so the
   // window SQL is the oracle.
-  def q44GroupTopkAgg(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    val tk = ColumnBridge.column(graft.expressions.TopKAgg(
-      ColumnBridge.expression(col("o_totalprice")),
-      ColumnBridge.expression(col("o_orderkey")), k = 3).toAggregateExpression())
-    t(s, dir, "orders")
-      .groupBy("o_custkey").agg(tk.as("tk"))
-      .select(col("o_custkey"), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(col("o_custkey"), col("e.id").as("o_orderkey"),
-        col("e.score").as("o_totalprice"),
-        (col("pos") + 1).cast(IntegerType).as("rn"))
+  def q44GroupTopkAgg(s: SparkSession, dir: String): DataFrame =
+    graft.operators.Sketches.groupTopK(t(s, dir, "orders"),
+        Seq(col("o_custkey")), col("o_totalprice"), col("o_orderkey"), k = 3)
+      .select(col("o_custkey"), col("id").as("o_orderkey"),
+        col("score").as("o_totalprice"), col("rk").as("rn"))
       .orderBy("o_custkey", "rn")
-  }
 
   // ---- R45: CDC MERGE / upsert apply -------------------------------------
   // Applies a CDC batch (update / delete / insert ops) to a snapshot —
@@ -847,14 +841,10 @@ object Relational {
   // form). Microsecond-exact: SessionWindowSpec pins the boundary rule
   // (an exact-gap event MERGES; a new session needs gap strictly
   // greater), and the oracle replays that rule on epoch-microseconds.
+  // The body is graft.operators.SeriesStats.sessionTotals, which the S18
+  // stream runs under its watermark.
   def q51SessionWindow(s: SparkSession, dir: String): DataFrame =
-    events(s, dir)
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
-      .agg(count(lit(1)).as("n_events"), dsum(dec(col("value"))).as("total_value"))
-      .select(col("user_id"),
-        unix_timestamp(col("sw.start")).as("start_s"),
-        unix_timestamp(col("sw.end")).as("end_s"),
-        col("n_events"), col("total_value"))
+    graft.operators.SeriesStats.sessionTotals(events(s, dir), "30 minutes")
       .orderBy("user_id", "start_s")
 
   // ---- R52: hop-bounded BFS reachability ---------------------------------
@@ -1135,7 +1125,10 @@ object Relational {
     * Iceberg ZORDER BY idea expressed as pure codegen'd bit
     * arithmetic, replayed bit-for-bit by the oracle's identical
     * magic-number spread. Map-only + one 256-group aggregate; no sort,
-    * no sampled range boundaries, fully deterministic. */
+    * no sampled range boundaries, fully deterministic. The per-bucket
+    * stats are [[graft.operators.ZOrder.bucketStats]] over the data's
+    * broadcast extents; the S15 streaming fold runs the same operator
+    * over pinned ones. */
   def q62Zorder(s: SparkSession, dir: String): DataFrame = {
     val o = t(s, dir, "orders").select(
       col("o_custkey").cast(LongType).as("a"),
@@ -1291,20 +1284,13 @@ object Relational {
     * — no corpus-sized second pass, no self-join). p = n/tot is one
     * IEEE division replayed identically. Shuffles: the user window +
     * the pair groupBy + a type²-table window — only the first two
-    * touch event-scale data. */
+    * touch event-scale data. Pairs, counts and probabilities are
+    * [[graft.operators.SeriesStats]]'s, shared with the S22 fold. */
   def q67EventTransitions(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy("es", "event_id")
-    events(s, dir)
-      .select(col("user_id"), unix_timestamp(col("ts")).as("es"),
-        col("event_id"), col("event_type"))
-      .withColumn("prev_type", lag("event_type", 1).over(w))
-      .filter(col("prev_type").isNotNull)
-      .groupBy(col("prev_type"), col("event_type").as("cur_type"))
-      .agg(count(lit(1)).as("n"))
-      .withColumn("tot",
-        sum("n").over(Window.partitionBy("prev_type")))
-      .select(col("prev_type"), col("cur_type"), col("n"),
-        (col("n").cast(DoubleType) / col("tot").cast(DoubleType)).as("p"))
+    import graft.operators.SeriesStats._
+    transitionProbs(transitionCounts(withPrevType(events(s, dir)
+        .select(col("user_id"), unix_timestamp(col("ts")).as("es"),
+          col("event_id"), col("event_type")), "es")))
       .orderBy("prev_type", "cur_type")
   }
 

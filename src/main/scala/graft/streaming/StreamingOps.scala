@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.util.UUID
 import graft.Settle
+import graft.operators.{Moments, Sampling, SeriesStats, Sketches, TextAnalysis, ZOrder}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
@@ -13,7 +14,11 @@ import org.apache.spark.sql.types._
   *
   * Scale posture: watermarks bound state; windowed aggregation state is
   * per (window × event_type); dedup state is bounded by the watermark
-  * horizon. Both survive arbitrarily long streams. */
+  * horizon. Both survive arbitrarily long streams.
+  *
+  * A fold whose batch twin is a registered query builds its per-batch
+  * partial through the same `graft.operators` definition as that
+  * query and keeps only its merge step and its state here. */
 object StreamingOps {
 
   /** The relations one trigger of a `foreachBatch` fold hands the next. */
@@ -138,6 +143,39 @@ object StreamingOps {
     }
   }
 
+  /** Folds the additive partial `p` into the previous state: the
+    * union, then every non-key column summed per key. The partials
+    * these folds keep are integer or decimal sums, so the fold is
+    * exact and order-free. */
+  private def addTo(prev: Option[DataFrame], p: DataFrame,
+      keys: String*): DataFrame = prev.fold(p) { s =>
+    val sums = p.columns.toSeq.filterNot(keys.contains).map(c => sum(c).as(c))
+    s.unionByName(p).groupBy(keys.map(col): _*).agg(sums.head, sums.tail: _*)
+  }
+
+  /** The known-fraction verdict of the index-matching folds (S25,
+    * S32): per doc of the (`idCol`, `keyCol`) items, its item count
+    * `nName`, how many of its keys the index `prev` — as of the
+    * previous trigger — already holds, and that fraction rounded to
+    * 6 dp; with the index grown by the items' keys, to settle as the
+    * next state. */
+  private def knownFraction(prev: Option[DataFrame], items: DataFrame,
+      idCol: String, keyCol: String, nName: String): (DataFrame, DataFrame) = {
+    val known = prev match {
+      case Some(idx) => items.join(idx, Seq(keyCol), "left_semi")
+        .groupBy(idCol).agg(count(lit(1)).as("n_known"))
+      case None => items.select(col(idCol)).limit(0)
+        .withColumn("n_known", lit(0L))
+    }
+    val nKnown = coalesce(col("n_known"), lit(0L))
+    val verdicts = items.groupBy(idCol).agg(count(lit(1)).as(nName))
+      .join(known, Seq(idCol), "left")
+      .select(col(idCol).as("doc_id"), col(nName), nKnown.as("n_known"),
+        round(nKnown / col(nName), 6).as("known_frac"))
+    val keys = items.select(keyCol)
+    (verdicts, prev.fold(keys)(_.union(keys)).distinct())
+  }
+
   /** The events parquet schema as written by the generator (nanosecond
     * timestamps are read as raw longs — see Tables.events). */
   val eventsRawSchema: StructType = StructType(Seq(
@@ -165,12 +203,16 @@ object StreamingOps {
     }
   }
 
-  /** S1: watermarked tumbling-window aggregation per event type. */
+  /** S1: watermarked tumbling-window aggregation per event type — the
+    * watermark over [[countsPerWindow]]. */
   def windowedCounts(events: DataFrame, window_ : String = "1 hour",
       watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), window_), col("event_type"))
+    countsPerWindow(events.withWatermark("ts", watermark), window_)
+
+  /** Events and value totals per tumbling window and event type: the
+    * body S1 streams and its batch equivalence checks run. */
+  def countsPerWindow(events: DataFrame, window_ : String = "1 hour"): DataFrame =
+    events.groupBy(window(col("ts"), window_), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
       .select(col("window.start").as("win_start"), col("event_type"),
         col("n"), col("total_value"))
@@ -180,20 +222,13 @@ object StreamingOps {
     * per-OPEN-session state (closed sessions emit once the watermark
     * passes their end; state never grows with history), the
     * streaming-capable form q51's batch run promises and S3's
-    * hand-rolled flatMapGroupsWithState mirrors. Projection identical
-    * to batch q51, so emitted rows compare 1:1 with the batch twin
-    * restricted to watermark-closed sessions. */
+    * hand-rolled flatMapGroupsWithState mirrors. The watermark over
+    * q51's body [[graft.operators.SeriesStats.sessionTotals]], so
+    * emitted rows compare 1:1 with the batch twin restricted to
+    * watermark-closed sessions. */
   def sessionWindowStream(events: DataFrame, gap: String = "30 minutes",
       watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(col("user_id"), session_window(col("ts"), gap).as("sw"))
-      .agg(count(lit(1)).as("n_events"),
-        graft.Tables.dsum(graft.Tables.dec(col("value"))).as("total_value"))
-      .select(col("user_id"),
-        unix_timestamp(col("sw.start")).as("start_s"),
-        unix_timestamp(col("sw.end")).as("end_s"),
-        col("n_events"), col("total_value"))
+    SeriesStats.sessionTotals(events.withWatermark("ts", watermark), gap)
 
   /** S2: streaming exact dedup on event_id within the watermark horizon
     * (bounded state: ids older than the watermark are evicted). */
@@ -248,12 +283,18 @@ object StreamingOps {
     * BROADCAST to every micro-batch task (no stream-stream state, no
     * watermark needed for the join itself); counts roll up per segment
     * window. The canonical "enrich events with a dimension table" shape
-    * at any scale: only the aggregation keeps state. */
+    * at any scale: only the aggregation keeps state. The watermark over
+    * [[segmentCountsPerWindow]]. */
   def enrichedSegmentCounts(events: DataFrame, dim: DataFrame,
       window_ : String = "1 hour", watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .join(broadcast(dim), col("user_id") === col("c_custkey"))
+    segmentCountsPerWindow(events.withWatermark("ts", watermark), dim, window_)
+
+  /** Events joined to the broadcast customer dimension, counted and
+    * value-totalled per tumbling window and market segment: the body
+    * S4 streams and its batch equivalence checks run. */
+  def segmentCountsPerWindow(events: DataFrame, dim: DataFrame,
+      window_ : String = "1 hour"): DataFrame =
+    events.join(broadcast(dim), col("user_id") === col("c_custkey"))
       .groupBy(window(col("ts"), window_), col("c_mktsegment"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
       .select(col("window.start").as("win_start"), col("c_mktsegment"),
@@ -263,57 +304,39 @@ object StreamingOps {
     * user's views in the preceding hour (conversion attribution). Both
     * sides carry watermarks and the join condition bounds event-time
     * distance, so Spark evicts join state once the watermark passes:
-    * state is O(events in the interval horizon), not O(stream). */
+    * state is O(events in the interval horizon), not O(stream). Each
+    * side gets its own watermark over [[conversionPairs]]: one
+    * watermark on the events' `ts` would sit above the event-type
+    * filters, so each side's would track every event's time, not its
+    * own, and drop rows the per-side watermarks keep. */
   def conversionJoin(events: DataFrame, intervalSql: String = "INTERVAL 1 HOUR",
       watermark: String = "2 hours"): DataFrame = {
-    val views = events.filter(col("event_type") === "view")
+    val (views, purchases) = conversionSides(events)
+    conversionPairs(views.withWatermark("v_ts", watermark),
+      purchases.withWatermark("p_ts", watermark), intervalSql)
+  }
+
+  /** S5's sides: the view events (v_user, v_ts, view_id) and the
+    * purchase events (p_user, p_ts, purchase_id). */
+  def conversionSides(events: DataFrame): (DataFrame, DataFrame) = (
+    events.filter(col("event_type") === "view")
       .select(col("user_id").as("v_user"), col("ts").as("v_ts"),
-        col("event_id").as("view_id"))
-      .withWatermark("v_ts", watermark)
-    val purchases = events.filter(col("event_type") === "purchase")
+        col("event_id").as("view_id")),
+    events.filter(col("event_type") === "purchase")
       .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-        col("event_id").as("purchase_id"))
-      .withWatermark("p_ts", watermark)
+        col("event_id").as("purchase_id")))
+
+  /** Each purchase paired with the same user's views in the preceding
+    * `intervalSql`: the body S5 streams and its batch equivalence
+    * checks run. */
+  def conversionPairs(views: DataFrame, purchases: DataFrame,
+      intervalSql: String = "INTERVAL 1 HOUR"): DataFrame =
     purchases.join(views,
       col("p_user") === col("v_user") &&
         col("v_ts") <= col("p_ts") &&
         col("v_ts") >= col("p_ts") - expr(intervalSql))
       .select(col("p_user").as("user_id"), col("purchase_id"), col("view_id"),
         col("p_ts"), col("v_ts"))
-  }
-
-  /** Batch twin of [[conversionJoin]]. */
-  def conversionJoinBatch(events: DataFrame,
-      intervalSql: String = "INTERVAL 1 HOUR"): DataFrame = {
-    val views = events.filter(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("ts").as("v_ts"),
-        col("event_id").as("view_id"))
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-        col("event_id").as("purchase_id"))
-    purchases.join(views,
-      col("p_user") === col("v_user") &&
-        col("v_ts") <= col("p_ts") &&
-        col("v_ts") >= col("p_ts") - expr(intervalSql))
-      .select(col("p_user").as("user_id"), col("purchase_id"), col("view_id"),
-        col("p_ts"), col("v_ts"))
-  }
-
-  /** Batch twin of [[enrichedSegmentCounts]]. */
-  def enrichedSegmentCountsBatch(events: DataFrame, dim: DataFrame,
-      window_ : String = "1 hour"): DataFrame =
-    events.join(broadcast(dim), col("user_id") === col("c_custkey"))
-      .groupBy(window(col("ts"), window_), col("c_mktsegment"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
-      .select(col("window.start").as("win_start"), col("c_mktsegment"),
-        col("n"), col("total_value"))
-
-  /** Batch twin of [[windowedCounts]] for equivalence checks. */
-  def windowedCountsBatch(events: DataFrame, window_ : String = "1 hour"): DataFrame =
-    events.groupBy(window(col("ts"), window_), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
-      .select(col("window.start").as("win_start"), col("event_type"),
-        col("n"), col("total_value"))
 
   /** S7: streaming heavy hitters — the Misra-Gries summary as global
     * streaming state. Works BECAUSE the aggregate is mergeable: each
@@ -441,8 +464,9 @@ object StreamingOps {
     * were new), the pair-sum increments fold into state by column
     * addition, and the corpus-so-far lag-1/lag-7 autocorrelation
     * re-derives through the SAME [[graft.operators.SeriesStats]]
-    * kernel as batch t65 — so the fold equals the batch answer by
-    * construction, doubles included. Arrival contract (the daily-
+    * daily totals, lags, pair sums and Pearson read as batch t65 — so
+    * the fold equals the batch answer by construction, doubles
+    * included. Arrival contract (the daily-
     * ingest shape): triggers are DAY-CLOSED and day-monotone per user
     * — a calendar day never spans two triggers; within a trigger any
     * order is fine (the daily groupBy is order-free). The live read:
@@ -463,65 +487,22 @@ object StreamingOps {
       checkpointDir: Option[String] = None)(
       sink: DataFrame => Unit): StreamingQuery = {
     import org.apache.spark.sql.expressions.Window
-    val d38 = DecimalType(38, 0)
-    val sumCols = Seq("n1", "sx1", "sy1", "sxy1", "sxx1", "syy1",
-      "n7", "sx7", "sy7", "sxy7", "sxx7", "syy7")
     foldStream("S35", rows, trigger, stateDir, checkpointDir) { (st, prev, b) =>
-      val daily = b
-        .select(col("user_id"), to_date(col("ts")).as("day"),
-          (col("value").cast(DecimalType(12, 2)) * lit(100))
-            .cast(LongType).as("c"))
-        .groupBy("user_id", "day").agg(sum(col("c")).as("x"))
+      val daily = SeriesStats.dailyCents(b)
       val u = st.cache(prev match {
         case Seq(tails, _) => tails.withColumn("is_new", lit(false))
           .unionByName(daily.withColumn("is_new", lit(true)))
         case _ => daily.withColumn("is_new", lit(true))
       })
-      val w = Window.partitionBy("user_id").orderBy("day")
-      def incSums(y: Column, p: String) = Seq(
-        count(y).cast(LongType).as(s"n$p"),
-        coalesce(sum(when(y.isNotNull, col("x")).cast(d38)),
-          lit(0).cast(d38)).as(s"sx$p"),
-        coalesce(sum(y.cast(d38)), lit(0).cast(d38)).as(s"sy$p"),
-        coalesce(sum(col("x").cast(d38) * y.cast(d38)),
-          lit(0).cast(d38)).as(s"sxy$p"),
-        coalesce(sum(when(y.isNotNull,
-          col("x").cast(d38) * col("x").cast(d38))),
-          lit(0).cast(d38)).as(s"sxx$p"),
-        coalesce(sum(y.cast(d38) * y.cast(d38)),
-          lit(0).cast(d38)).as(s"syy$p"))
-      val aggs = Seq(count(lit(1)).cast(LongType).as("n_days")) ++
-        incSums(col("y1"), "1") ++ incSums(col("y7"), "7")
-      val inc = u
-        .withColumn("y1", lag("x", 1).over(w))
-        .withColumn("y7", lag("x", 7).over(w))
-        .filter(col("is_new"))
-        .groupBy("user_id").agg(aggs.head, aggs.tail: _*)
-      val sums = st.settle(prev match {
-        case Seq(_, old) =>
-          old.as("a").join(inc.as("b"), Seq("user_id"), "full_outer")
-            .select(col("user_id") +:
-              (("n_days" +: sumCols).map { c =>
-                (coalesce(col(s"a.$c"), lit(0).cast(d38)) +
-                  coalesce(col(s"b.$c"), lit(0).cast(d38)))
-                  .cast(if (c.startsWith("n")) LongType else d38).as(c)
-              }): _*)
-        case _ => inc
-      }, "sums")
+      val inc = SeriesStats.lagPairSums(
+        SeriesStats.withDayLags(u).filter(col("is_new")))
+      val sums = st.settle(addTo(prev.lift(1), inc, "user_id"), "sums")
       val tails = st.settle(u
         .withColumn("rn", row_number().over(
           Window.partitionBy("user_id").orderBy(col("day").desc)))
         .filter(col("rn") <= 7)
         .select("user_id", "day", "x"), "tails")
-      (Seq(tails, sums), sums.select(col("user_id"), col("n_days"),
-        col("n1").as("n_lag1"),
-        graft.operators.SeriesStats.pearson(col("n1"), col("sx1"),
-          col("sy1"), col("sxy1"), col("sxx1"), col("syy1"))
-          .as("autocorr_1"),
-        col("n7").as("n_lag7"),
-        graft.operators.SeriesStats.pearson(col("n7"), col("sx7"),
-          col("sy7"), col("sxy7"), col("sxx7"), col("syy7"))
-          .as("autocorr_7")))
+      (Seq(tails, sums), SeriesStats.autocorr(sums))
     }(sink)
   }
 
@@ -593,11 +574,9 @@ object StreamingOps {
       trigger: Trigger = Trigger.AvailableNow())(
       sink: DataFrame => Unit): StreamingQuery =
     foldStream("S12", docs, trigger) { (st, prev, b) =>
-      val bc = graft.operators.TextAnalysis.tokenCounts(b, textCol, sliceA)
-      val next = st.settle(prev.headOption.fold(bc)(_.union(bc)
-        .groupBy("tok")
-        .agg(sum("c_a").as("c_a"), sum("c_b").as("c_b"))), "state")
-      (Seq(next), graft.operators.TextAnalysis.driftFromCounts(next))
+      val next = st.settle(addTo(prev.headOption,
+        TextAnalysis.tokenCounts(b, textCol, sliceA), "tok"), "state")
+      (Seq(next), TextAnalysis.driftFromCounts(next))
     }(sink)
 
   /** S13: streaming incremental materialized-view maintenance — the
@@ -645,11 +624,9 @@ object StreamingOps {
       trigger: Trigger = Trigger.AvailableNow())(
       sink: DataFrame => Unit): StreamingQuery =
     foldStream("S14", rows, trigger) { (st, prev, b) =>
-      val cells = graft.operators.Sketches
-        .histCounts(b, gCol, xCol, lo, hi, buckets)
-      val next = st.settle(prev.headOption.fold(cells)(
-        _.union(cells).groupBy("g", "b").agg(sum("c").as("c"))), "state")
-      (Seq(next), graft.operators.Sketches.histQuantiles(next, lo, hi, buckets, qs))
+      val next = st.settle(addTo(prev.headOption,
+        Sketches.histCounts(b, gCol, xCol, lo, hi, buckets), "g", "b"), "state")
+      (Seq(next), Sketches.histQuantiles(next, lo, hi, buckets, qs))
     }(sink)
 
   /** S15: streaming Z-order layout audit — the streaming form of q62.
@@ -659,31 +636,23 @@ object StreamingOps {
     * into maintained state by pure semigroup ops — counts ADD,
     * mins MIN, maxes MAX — state is bucket-count sized, never
     * history-sized. Emitted stats equal the batch audit over
-    * everything seen (min/max/sum merges are exact). */
+    * everything seen (min/max/sum merges are exact): each batch's
+    * stats are [[graft.operators.ZOrder.bucketStats]] over the pinned
+    * extents, the per-bucket operator q62 runs over data-derived
+    * ones. */
   def streamingZorderStats(rows: DataFrame, aCol: String, bCol: String,
       aMin: Long, aMax: Long, bMin: Long, bMax: Long, log2Buckets: Int = 6,
       trigger: Trigger = Trigger.AvailableNow())(
-      sink: DataFrame => Unit): StreamingQuery = {
-    import graft.operators.ZOrder
+      sink: DataFrame => Unit): StreamingQuery =
     foldStream("S15", rows, trigger) { (st, prev, b) =>
-      val cells = b
-        .select(col(aCol).cast(LongType).as("da"),
-          col(bCol).cast(LongType).as("db"))
-        .select(col("da"), col("db"), ZOrder.zbucket2(
-          ZOrder.normalize16(col("da"), lit(aMin), lit(aMax)),
-          ZOrder.normalize16(col("db"), lit(bMin), lit(bMax)),
-          log2Buckets).as("zb"))
-        .groupBy("zb")
-        .agg(count(lit(1)).as("n_rows"),
-          min("da").as("a_min"), max("da").as("a_max"),
-          min("db").as("b_min"), max("db").as("b_max"))
+      val cells = ZOrder.bucketStats(b, col(aCol), col(bCol), lit(aMin),
+        lit(aMax), lit(bMin), lit(bMax), log2Buckets)
       val next = st.settle(prev.headOption.fold(cells)(_.union(cells).groupBy("zb")
         .agg(sum("n_rows").as("n_rows"),
           min("a_min").as("a_min"), max("a_max").as("a_max"),
           min("b_min").as("b_min"), max("b_max").as("b_max"))), "state")
       (Seq(next), next)
     }(sink)
-  }
 
   /** S16: streaming interval merge — the streaming form of q63.
     * Interval union is ASSOCIATIVE (merge(merge(A) ∪ B) ==
@@ -717,27 +686,20 @@ object StreamingOps {
     * (2k per group)-row re-cut of state ∪ partial — never
     * history-sized. The emitted leaderboard equals the batch top-k
     * over everything seen (the spec's assertion; ties break id asc
-    * inside TopKAgg on both paths). Expects (g, score, id) rows. */
+    * inside the heap on both paths): the cut is q44's
+    * [[graft.operators.Sketches.groupTopK]]. Expects (g, score, id)
+    * rows. */
   def streamingTopK(rows: DataFrame, k: Int,
       trigger: Trigger = Trigger.AvailableNow())(
-      sink: DataFrame => Unit): StreamingQuery = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    def topk(df: DataFrame): DataFrame = {
-      val tk = ColumnBridge.column(graft.expressions.TopKAgg(
-        ColumnBridge.expression(col("score")),
-        ColumnBridge.expression(col("id")), k).toAggregateExpression())
-      df.groupBy("g").agg(tk.as("tk"))
-        .select(col("g"), posexplode(col("tk")).as(Seq("pos", "e")))
-        .select(col("g"), col("e.id").as("id"),
-          col("e.score").as("score"), (col("pos") + 1).cast("int").as("rk"))
-    }
+      sink: DataFrame => Unit): StreamingQuery =
     foldStream("S17", rows, trigger) { (st, prev, b) =>
       val batchCut = b.select(col("g"), col("score"), col("id"))
-      val next = st.settle(topk(prev.headOption.fold(batchCut)(
-        _.select(col("g"), col("score"), col("id")).union(batchCut))), "state")
+      val all = prev.headOption.fold(batchCut)(
+        _.select(col("g"), col("score"), col("id")).union(batchCut))
+      val next = st.settle(Sketches.groupTopK(all, Seq(col("g")),
+        col("score"), col("id"), k), "state")
       (Seq(next), next)
     }(sink)
-  }
 
   /** S19: streaming OHLC bars — the streaming form of t53. An OHLC
     * bar is a SEMIGROUP: open/close are min/max-STRUCT selections on
@@ -750,34 +712,23 @@ object StreamingOps {
     * state by the same min/max/add merges; emitted bars equal the
     * batch t53 over everything seen (the spec's assertion — the merge
     * is exact, not approximate). Volume is held as DECIMAL in state
-    * (exact, order-free) and surfaced as double only in the read.
+    * (exact, order-free) and surfaced as double only in the read. Bars
+    * and read are t53's [[graft.operators.SeriesStats.ohlcPartials]]
+    * and [[graft.operators.SeriesStats.ohlcBars]].
     * Expects (user_id, day_s, us, event_id, value) rows. */
   def streamingOhlc(rows: DataFrame,
       trigger: Trigger = Trigger.AvailableNow())(
-      sink: DataFrame => Unit): StreamingQuery = {
-    def bars(df: DataFrame): DataFrame = df
-      .groupBy("user_id", "day_s")
-      .agg(
-        min(struct(col("us"), col("event_id"), col("value"))).as("o"),
-        max(struct(col("us"), col("event_id"), col("value"))).as("c"),
-        max(col("value")).as("high"), min(col("value")).as("low"),
-        sum(graft.Tables.dec(col("value")))
-          .cast(DecimalType(38, 2)).as("vol"),
-        count(lit(1)).as("n_ticks"))
+      sink: DataFrame => Unit): StreamingQuery =
     foldStream("S19", rows, trigger) { (st, prev, b) =>
-      val partial = bars(b)
+      val partial = SeriesStats.ohlcPartials(b)
       val next = st.settle(prev.headOption.fold(partial)(_.union(partial)
         .groupBy("user_id", "day_s")
         .agg(min("o").as("o"), max("c").as("c"),
           max("high").as("high"), min("low").as("low"),
           sum("vol").cast(DecimalType(38, 2)).as("vol"),
           sum("n_ticks").as("n_ticks"))), "state")
-      (Seq(next), next.select(col("user_id"), col("day_s"),
-        col("o.value").as("open"), col("high"), col("low"),
-        col("c.value").as("close"),
-        col("vol").cast(DoubleType).as("volume"), col("n_ticks")))
+      (Seq(next), SeriesStats.ohlcBars(next))
     }(sink)
-  }
 
   /** S20: streaming skyline — the streaming form of q65. Dominance is
     * MONOTONE under insertion (points are only added, so a dominated
@@ -816,36 +767,23 @@ object StreamingOps {
     * an operator is monitoring — a data-dependent top-k would make the
     * probe set itself unstable across triggers); estimates carry CMS's
     * conservative guarantee and equal the batch sketch over everything
-    * seen (the spec's assertion — addition is exact). Expects a `tok`
-    * column. */
+    * seen (the spec's assertion — addition is exact). Bucket rule,
+    * cells and estimate read are x28's
+    * ([[graft.operators.Sketches.countMinCells]],
+    * [[graft.operators.Sketches.countMinEstimate]]); each batch counts
+    * its tokens before deriving cells, exact by associativity. Expects
+    * a `tok` column. */
   def streamingCountMin(rows: DataFrame, probes: Seq[String],
       seeds: Int = 4, buckets: Int = 1024,
       trigger: Trigger = Trigger.AvailableNow())(
-      sink: DataFrame => Unit): StreamingQuery = {
-    def bucketOf(sd: Int, c: Column): Column =
-      pmod(conv(substring(md5(concat(lit(sd + "|"), c)), 1, 15), 16, 10)
-        .cast("long"), lit(buckets))
-    def cellsOf(df: DataFrame): DataFrame = df
-      .filter(col("tok") =!= "")
-      .select(posexplode(array((0 until seeds).map(sd =>
-        bucketOf(sd, col("tok"))): _*)).as(Seq("seed", "bucket")))
-      .groupBy("seed", "bucket").agg(count(lit(1)).as("c"))
+      sink: DataFrame => Unit): StreamingQuery =
     foldStream("S21", rows, trigger) { (st, prev, b) =>
-      val cells = cellsOf(b)
-      val next = st.settle(prev.headOption.fold(cells)(_.union(cells)
-        .groupBy("seed", "bucket").agg(sum("c").as("c"))), "state")
+      val cells = Sketches.countMinCells(Sketches.countMinExact(b), seeds, buckets)
+      val next = st.settle(addTo(prev.headOption, cells, "seed", "bucket"), "state")
       val s = next.sparkSession
       import s.implicits._
-      val pb = probes.toDF("tok")
-        .select(col("tok"), posexplode(array((0 until seeds).map(sd =>
-          bucketOf(sd, col("tok"))): _*)).as(Seq("seed", "bucket")))
-      // an absent cell IS a zero count (the sketch has proven the
-      // token unseen) — coalesce BEFORE the min, not after
-      (Seq(next), pb.join(next, Seq("seed", "bucket"), "left")
-        .groupBy("tok")
-        .agg(min(coalesce(col("c"), lit(0L))).as("cms_n")))
+      (Seq(next), Sketches.countMinEstimate(probes.toDF("tok"), next, seeds, buckets))
     }(sink)
-  }
 
   /** S22: streaming event-transition matrix — the streaming form of
     * q67. Transition counts fold by ADDITION, so the count state is
@@ -859,12 +797,14 @@ object StreamingOps {
     * addition and re-fold the carried struct by max. Requires
     * per-user event-time-ordered arrival (the Kafka
     * partition-by-user shape); the spec splits by time and proves the
-    * folded matrix equals the batch q67 counts over everything seen.
+    * folded matrix equals the batch q67 counts over everything seen:
+    * pairs, counts and probabilities are q67's
+    * [[graft.operators.SeriesStats]] definitions, ordered here by the
+    * microsecond `us` the rows carry.
     * Expects (user_id, us, event_id, event_type) rows. */
   def streamingTransitions(rows: DataFrame,
       trigger: Trigger = Trigger.AvailableNow())(
-      sink: DataFrame => Unit): StreamingQuery = {
-    import org.apache.spark.sql.expressions.Window
+      sink: DataFrame => Unit): StreamingQuery =
     foldStream("S22", rows, trigger) { (st, prev, b) =>
       val batch = b
         .select(col("user_id"), col("us"), col("event_id"),
@@ -875,14 +815,10 @@ object StreamingOps {
           .union(batch)
         case _ => batch
       }
-      val w = Window.partitionBy("user_id").orderBy("us", "event_id")
-      val pairs = all
-        .withColumn("prev_type", lag("event_type", 1).over(w))
-        .filter(!col("carried") && col("prev_type").isNotNull)
-        .groupBy(col("prev_type"), col("event_type").as("cur_type"))
-        .agg(count(lit(1)).as("n"))
-      val counts = st.settle(prev.headOption.fold(pairs)(_.union(pairs)
-        .groupBy("prev_type", "cur_type").agg(sum("n").as("n"))), "counts")
+      val pairs = SeriesStats.transitionCounts(
+        SeriesStats.withPrevType(all, "us").filter(!col("carried")))
+      val counts = st.settle(addTo(prev.headOption, pairs,
+        "prev_type", "cur_type"), "counts")
       val last = st.settle(all
         .groupBy("user_id")
         .agg(max(struct(col("us"), col("event_id"), col("event_type")))
@@ -890,12 +826,8 @@ object StreamingOps {
         .select(col("user_id"), col("m.us").as("us"),
           col("m.event_id").as("event_id"),
           col("m.event_type").as("event_type")), "last")
-      (Seq(counts, last), counts
-        .withColumn("tot", sum("n").over(Window.partitionBy("prev_type")))
-        .select(col("prev_type"), col("cur_type"), col("n"),
-          (col("n").cast("double") / col("tot").cast("double")).as("p")))
+      (Seq(counts, last), SeriesStats.transitionProbs(counts))
     }(sink)
-  }
 
   /** S23: streaming embedding diversity — the streaming twin of e13.
     * State = the per-label EXACT decimal moment rows (n, Σq_d, Σ‖q‖²)
@@ -921,7 +853,9 @@ object StreamingOps {
     * twin of x35. State = the (tok, c) vocabulary count table (the
     * S12 tokenCounts discipline: counts fold by ADDITION, vocab-sized
     * whatever the stream length); per trigger the batch's token counts
-    * fold in and the emitted frequency-of-frequencies table — with
+    * (x35's [[graft.operators.TextAnalysis.tokenTypeCounts]], which
+    * keep the empty token) fold in and the emitted
+    * frequency-of-frequencies table — with
     * row 1's N_1/N unseen-mass estimate — equals batch x35 over
     * everything seen EXACTLY (integer counts + the same two divisions).
     * The live read: a crawl whose singleton mass stops falling has
@@ -932,13 +866,9 @@ object StreamingOps {
       trigger: Trigger = Trigger.AvailableNow())(
       sink: DataFrame => Unit): StreamingQuery =
     foldStream("S24", docs, trigger) { (st, prev, b) =>
-      val cells = b
-        .select(explode(graft.operators.TextAnalysis
-          .tokens(col(textCol))).as("tok"))
-        .groupBy("tok").agg(count(lit(1)).as("c"))
-      val next = st.settle(prev.headOption.fold(cells)(
-        _.union(cells).groupBy("tok").agg(sum("c").as("c"))), "state")
-      (Seq(next), graft.operators.TextAnalysis.goodTuringFromCounts(next, maxR))
+      val next = st.settle(addTo(prev.headOption,
+        TextAnalysis.tokenTypeCounts(b, textCol), "tok"), "state")
+      (Seq(next), TextAnalysis.goodTuringFromCounts(next, maxR))
     }(sink)
 
   /** S25: streaming incremental CDC-chunk dedup — d17's streaming
@@ -973,23 +903,9 @@ object StreamingOps {
       sink: DataFrame => Unit): StreamingQuery =
     foldStream("S25", docs, trigger, stateDir, checkpointDir) { (st, prev, b) =>
       val chunks = st.settle(graft.operators.Dedup.cdcChunks(b, idCol, textCol), "chunks")
-      val known = prev.headOption match {
-        case Some(idx) => chunks.join(idx, Seq("digest"), "left_semi")
-          .groupBy("doc_id").agg(count(lit(1)).as("n_known"))
-        case None => chunks.select(col("doc_id")).limit(0)
-          .withColumn("n_known", lit(0L))
-      }
-      val verdicts = chunks.groupBy("doc_id")
-        .agg(count(lit(1)).as("n_chunks"))
-        .join(known, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("n_chunks"),
-          coalesce(col("n_known"), lit(0L)).as("n_known"),
-          round(coalesce(col("n_known"), lit(0L)) / col("n_chunks"), 6)
-            .as("known_frac"))
-      val digests = chunks.select("digest")
-      val next = st.settle(prev.headOption.fold(digests)(_.union(digests))
-        .distinct(), "state")
-      (Seq(next), verdicts)
+      val (verdicts, index) = knownFraction(prev.headOption, chunks,
+        "doc_id", "digest", "n_chunks")
+      (Seq(st.settle(index, "state")), verdicts)
     }(sink)
 
   /** S28: streaming Bloom-filter dedup — d18's operational streaming
@@ -1073,21 +989,9 @@ object StreamingOps {
       val fps = st.settle(graft.operators.TextAnalysis
         .winnow(b, idCol, textCol, k, w)
         .select(col("id"), col("fp")).distinct(), "fingerprints")
-      val known = prev.headOption match {
-        case Some(idx) => fps.join(idx, Seq("fp"), "left_semi")
-          .groupBy("id").agg(count(lit(1)).as("n_known"))
-        case None => fps.select(col("id")).limit(0)
-          .withColumn("n_known", lit(0L))
-      }
-      val verdicts = fps.groupBy("id").agg(count(lit(1)).as("n_fp"))
-        .join(known, Seq("id"), "left")
-        .select(col("id").as("doc_id"), col("n_fp"),
-          coalesce(col("n_known"), lit(0L)).as("n_known"),
-          round(coalesce(col("n_known"), lit(0L)) / col("n_fp"), 6)
-            .as("known_frac"))
-      val fp = fps.select("fp")
-      val next = st.settle(prev.headOption.fold(fp)(_.union(fp)).distinct(), "state")
-      (Seq(next), verdicts)
+      val (verdicts, index) = knownFraction(prev.headOption, fps,
+        "id", "fp", "n_fp")
+      (Seq(st.settle(index, "state")), verdicts)
     }(sink)
 
   /** S33: streaming higher-moment monitor — t61's live half, and the
@@ -1096,7 +1000,8 @@ object StreamingOps {
     * column-wise addition), CONSTANT size per key forever, and every
     * trigger re-derives the corpus-so-far sample skewness G1 and
     * excess kurtosis G2 through the SAME [[graft.operators.Moments]]
-    * kernels and pinned IEEE terminals as batch t61 — the fold is the
+    * power sums, kernels and pinned IEEE terminals as batch t61 — the
+    * fold is the
     * batch answer by construction, doubles included (the S30 "exact
     * decimal moment row" posture extended to 3rd/4th moments). The
     * live read: distribution shape drifting — a fee schedule change
@@ -1107,37 +1012,23 @@ object StreamingOps {
     * a key-equi outer join against key-cardinality state. */
   def streamingMoments(rows: DataFrame, keyCol: String, valueCol: String,
       trigger: Trigger = Trigger.AvailableNow())(
-      sink: DataFrame => Unit): StreamingQuery = {
-    val d38 = DecimalType(38, 0)
-    val d19 = DecimalType(19, 0)
+      sink: DataFrame => Unit): StreamingQuery =
     // state: key, n, s1..s4 — one row per key
     foldStream("S33", rows, trigger) { (st, prev, b) =>
-      val c = b.select(col(keyCol).as("k"),
-        (col(valueCol).cast(DecimalType(12, 2)) * lit(100))
-          .cast(LongType).as("c"))
-      val batch = c.groupBy("k").agg(
-        count(lit(1)).as("n"),
-        sum(col("c")).cast(d38).as("s1"),
-        sum(col("c") * col("c")).cast(d38).as("s2"),
-        sum((col("c") * col("c") * col("c")).cast(d38)).cast(d38).as("s3"),
-        sum((col("c") * col("c")).cast(d19) *
-          (col("c") * col("c")).cast(d19)).cast(d38).as("s4"))
-      val next = st.settle(prev.headOption.fold(batch)(s => batch.unionByName(s)
-        .groupBy("k").agg(sum("n").as("n"),
-          sum("s1").cast(d38).as("s1"), sum("s2").cast(d38).as("s2"),
-          sum("s3").cast(d38).as("s3"), sum("s4").cast(d38).as("s4"))), "state")
-      val (m2i, m3i, m4i) = graft.operators.Moments.kernels(
+      val sums = Moments.powerSums(col("c"), identity)
+      val batch = b.select(col(keyCol).as("k"),
+          Moments.cents(col(valueCol)).as("c"))
+        .groupBy("k").agg(sums.head, sums.tail: _*)
+      val next = st.settle(addTo(prev.headOption, batch, "k"), "state")
+      val (m2i, m3i, m4i) = Moments.kernels(
         col("n"), col("s1"), col("s2"), col("s3"), col("s4"))
       (Seq(next), next
         .withColumn("m2i", m2i).withColumn("m3i", m3i)
         .withColumn("m4i", m4i)
         .select(col("k"), col("n"),
-          graft.operators.Moments.g1(col("n"), col("m2i"), col("m3i"))
-            .as("skew"),
-          graft.operators.Moments.g2(col("n"), col("m2i"), col("m4i"))
-            .as("kurt")))
+          Moments.g1(col("n"), col("m2i"), col("m3i")).as("skew"),
+          Moments.g2(col("n"), col("m2i"), col("m4i")).as("kurt")))
     }(sink)
-  }
 
   /** S9: streaming ingest curation — each arriving micro-batch runs
     * the full curation pipeline (dedup, decontamination, quality,
@@ -1160,7 +1051,8 @@ object StreamingOps {
     }(sink)
 
   /** S27: streaming Zipf rank-frequency monitor — x38's live half:
-    * state = the (source, tok, c) count table (the S12/S24 tokenCounts
+    * state = x38's (source, tok, c) count table
+    * ([[graft.operators.TextAnalysis.sourceTokenCounts]]; the S12/S24 tokenCounts
     * discipline — counts fold by ADDITION, vocab-sized whatever the
     * stream length; text tokenizes once in its arrival batch and never
     * re-shuffles), and each trigger re-derives the per-source
@@ -1179,15 +1071,9 @@ object StreamingOps {
       trigger: Trigger = Trigger.AvailableNow())(
       sink: DataFrame => Unit): StreamingQuery =
     foldStream("S27", docs, trigger) { (st, prev, b) =>
-      val counts = b
-        .select(col(sourceCol).as("source"),
-          explode(graft.operators.TextAnalysis.tokens(col(textCol)))
-            .as("tok"))
-        .filter(col("tok") =!= "")
-        .groupBy("source", "tok").agg(count(lit(1)).as("c"))
-      val next = st.settle(prev.headOption.fold(counts)(_.union(counts)
-        .groupBy("source", "tok").agg(sum("c").as("c"))), "state")
-      (Seq(next), graft.operators.TextAnalysis.zipfFromCounts(next, topR))
+      val next = st.settle(addTo(prev.headOption,
+        TextAnalysis.sourceTokenCounts(b, textCol, sourceCol), "source", "tok"), "state")
+      (Seq(next), TextAnalysis.zipfFromCounts(next, topR))
     }(sink)
 
   /** S29: streaming lexical-diversity monitor — x39's live half: each
@@ -1209,15 +1095,9 @@ object StreamingOps {
       trigger: Trigger = Trigger.AvailableNow())(
       sink: DataFrame => Unit): StreamingQuery =
     foldStream("S29", docs, trigger) { (st, prev, b) =>
-      val partials = graft.operators.TextAnalysis
-        .mattrPartials(b, sourceCol, textCol, w)
-      val next = st.settle(prev.headOption.fold(partials)(_.union(partials)
-        .groupBy("source").agg(
-          sum("n_docs").as("n_docs"),
-          sum("n_tokens").as("n_tokens"),
-          sum("sum_win_types").as("sum_win_types"),
-          sum("sum_win_slots").as("sum_win_slots"))), "state")
-      (Seq(next), graft.operators.TextAnalysis.mattrMassFromPartials(next))
+      val next = st.settle(addTo(prev.headOption,
+        TextAnalysis.mattrPartials(b, sourceCol, textCol, w), "source"), "state")
+      (Seq(next), TextAnalysis.mattrMassFromPartials(next))
     }(sink)
 
   /** S30: streaming anisotropy monitor — e20's live half and the
@@ -1322,8 +1202,8 @@ object StreamingOps {
     * the batch contributed (old-tail rows were emitted when THEY were
     * new; a trailing frame over preceding rows means no event's
     * output is ever revised), and the new tail is the last 3 rows of
-    * the union. The blends ride the SAME
-    * [[graft.operators.SeriesStats.rollingQuantiles]] kernel as batch
+    * the union. Lags and blends are the SAME
+    * [[graft.operators.SeriesStats.withRollingQuantiles]] as batch
     * t68, so the fold equals the batch pass by construction —
     * selection network, pinned IEEE blends, warm-up nulls included.
     * Arrival contract (S35's): triggers are event-time-monotone per
@@ -1341,21 +1221,13 @@ object StreamingOps {
       val u = st.cache(prev.headOption.fold(batch.withColumn("is_new", lit(true)))(
         _.withColumn("is_new", lit(false))
           .unionByName(batch.withColumn("is_new", lit(true)))))
-      val w = Window.partitionBy("user_id").orderBy("es", "event_id")
-      val (q25, q50, q75) = graft.operators.SeriesStats.rollingQuantiles(
-        col("value"), col("l1"), col("l2"), col("l3"))
       val tails = st.settle(u
         .withColumn("rn", row_number().over(Window.partitionBy("user_id")
           .orderBy(col("es").desc, col("event_id").desc)))
         .filter(col("rn") <= 3)
         .select("user_id", "es", "event_id", "value"), "tails")
-      (Seq(tails), u
-        .withColumn("l1", lag("value", 1).over(w))
-        .withColumn("l2", lag("value", 2).over(w))
-        .withColumn("l3", lag("value", 3).over(w))
-        .filter(col("is_new"))
-        .select(col("user_id"), col("es"), col("event_id"), col("value"),
-          q25.as("roll_q25"), q50.as("roll_q50"), q75.as("roll_q75")))
+      (Seq(tails), SeriesStats.withRollingQuantiles(u)
+        .filter(col("is_new")).drop("is_new"))
     }(sink)
   }
 
@@ -1366,7 +1238,9 @@ object StreamingOps {
     * never re-shuffles) and each trigger re-derives the full
     * [[graft.operators.Sampling.mixingPlan]] allocation table, so the
     * mix operator watches T*, per-source epochs, and the BINDING
-    * source shift live as availability grows. After any prefix of
+    * source shift live as availability grows. Availability and weight
+    * units are p5's ([[graft.operators.Sampling.mixAvailability]],
+    * [[graft.operators.Sampling.withMixUnits]]). After any prefix of
     * batches the emitted table provably equals the batch solver over
     * everything seen (the S24 fold-then-finish posture; spec-pinned). */
   def streamingMixingPlan(docs: DataFrame, textCol: String,
@@ -1374,16 +1248,8 @@ object StreamingOps {
       trigger: Trigger = Trigger.AvailableNow())(
       sink: DataFrame => Unit): StreamingQuery =
     foldStream("S26", docs, trigger) { (st, prev, b) =>
-      val counts = b
-        .select(col(sourceCol).as("source"),
-          size(graft.operators.TextAnalysis.tokens(col(textCol)))
-            .cast("long").as("n_tokens"))
-        .groupBy("source").agg(sum("n_tokens").as("avail"))
-      val next = st.settle(prev.headOption.fold(counts)(_.union(counts)
-        .groupBy("source").agg(sum("avail").as("avail"))), "state")
-      (Seq(next), graft.operators.Sampling.mixingPlan(
-        next.withColumn("u",
-          regexp_extract(col("source"), "(\\d+)", 1).cast("long") % 4 + 1),
-        cap))
+      val next = st.settle(addTo(prev.headOption,
+        Sampling.mixAvailability(b, textCol, sourceCol), "source"), "state")
+      (Seq(next), Sampling.mixingPlan(Sampling.withMixUnits(next), cap))
     }(sink)
 }

@@ -411,11 +411,11 @@ package object syntax {
         .foldLeft(df) { case (acc, (name, e)) => acc.withColumn(name, e) }
 
     /** Count-Min point-frequency probe over this `tok` column (see
-      * [[graft.llm.LlmQueries.countMinProbe]]): fixed additive cells,
+      * [[graft.operators.Sketches.countMinProbe]]): fixed additive cells,
       * conservative estimates for the corpus's heavy + sampled
       * tokens. */
     def countMinProbe(seeds: Int = 4, buckets: Int = 1024): DataFrame =
-      llm.LlmQueries.countMinProbe(df, seeds, buckets)
+      operators.Sketches.countMinProbe(df, seeds, buckets)
 
     /** Heaps'-law vocabulary growth curve over this corpus in `idCol`
       * order (see [[graft.operators.TextAnalysis.vocabGrowth]] —

@@ -1020,23 +1020,17 @@ object TypeQueries {
     * pass); high/low are plain min/max; volume is an exact DECIMAL sum
     * (order-free at any partitioning). One groupBy shuffle with map-side
     * partials; per-(user, day) state is two structs + four scalars — the
-    * mergeable semigroup shape that folds in streaming (S19 twin).
+    * mergeable semigroup shape that folds in streaming (S19 twin; both
+    * build their bars through [[graft.operators.SeriesStats.ohlcPartials]]).
     * Bucket surfaced as epoch seconds (q23 convention). */
-  def t53ResampleOhlc(s: SparkSession, dir: String): DataFrame =
-    events(s, dir)
+  def t53ResampleOhlc(s: SparkSession, dir: String): DataFrame = {
+    import graft.operators.SeriesStats.{ohlcBars, ohlcPartials}
+    ohlcBars(ohlcPartials(events(s, dir)
       .select(col("user_id"),
         unix_timestamp(date_trunc("day", col("ts"))).as("day_s"),
-        unix_micros(col("ts")).as("us"), col("event_id"), col("value"))
-      .groupBy("user_id", "day_s")
-      .agg(
-        min(struct(col("us"), col("event_id"), col("value"))).as("o"),
-        max(struct(col("us"), col("event_id"), col("value"))).as("c"),
-        max(col("value")).as("high"), min(col("value")).as("low"),
-        dsum(dec(col("value"))).as("volume"), count(lit(1)).as("n_ticks"))
-      .select(col("user_id"), col("day_s"), col("o.value").as("open"),
-        col("high"), col("low"), col("c.value").as("close"),
-        col("volume"), col("n_ticks"))
+        unix_micros(col("ts")).as("us"), col("event_id"), col("value"))))
       .orderBy("user_id", "day_s")
+  }
 
   // ---- T54: json_normalize (nested record-path flatten) --------------------
   /** pandas `json_normalize(data, record_path='items', meta=[['user',
@@ -1378,48 +1372,32 @@ object TypeQueries {
   // ---- T61: expanding skew/kurt --------------------------------------------
   /** pandas `expanding().skew()/.kurt()` per key — the 3rd/4th-moment
     * completion of t48's expanding count/sum/mean/max/std, same
-    * discipline: raw power sums Σc..Σc⁴ accumulate over exact integer
-    * CENTS (order-insensitive at any partitioning; c⁴ stages c²·c²
-    * through DECIMAL since 56021⁴ ≈ 9.9e18 overflows int64), the
-    * scale-free integer kernels M2 = nΣc²−(Σc)², M3 = n²Σc³−3nΣcΣc²
-    * +2(Σc)³, M4 = n³Σc⁴−4n²ΣcΣc³+6n(Σc)²Σc²−3(Σc)⁴ compute in
-    * DECIMAL(38,0) (exact while n·c⁴ holds under 38 digits — ~1e27
-    * here; the 100 TB swap is float central-moment accumulation,
-    * which is what pandas itself does), and the terminal expressions
-    * are pinned IEEE chains of the decimal→double casts:
-    * G1 = √(n(n−1))/(n−2) · M3/(M2·√M2) (m2^1.5 via multiply+sqrt —
-    * both correctly rounded ops; `pow(x,1.5)` is NOT correctly
-    * rounded and may differ 1 ulp across engines) and
-    * G2 = (n+1)(n−1)/((n−2)(n−3)) · M4/M2² − 3(n−1)²/((n−2)(n−3)).
-    * skew null below 3 obs, kurt below 4, both null at M2 = 0 — an
-    * EXACT integer test (the t49 lesson: a float zero-variance clamp
-    * is ulp-fragile), matching pandas NaN on constant prefixes.
-    * ONE partition-key Exchange+Sort serves every column. */
+    * discipline: the raw power sums Σc..Σc⁴ over exact integer CENTS
+    * ([[graft.operators.Moments.powerSums]], shared with S33) run over
+    * an expanding window, and G1/G2 derive through the exact
+    * DECIMAL(38,0) kernels and pinned IEEE terminals of
+    * [[graft.operators.Moments]] (exact while n·c⁴ holds under 38
+    * digits — ~1e27 here; the 100 TB swap is float central-moment
+    * accumulation, which is what pandas itself does). skew is null
+    * below 3 obs, kurt below 4, both at the exact M2 = 0, matching
+    * pandas NaN on constant prefixes. ONE partition-key Exchange+Sort
+    * serves every column. */
   def t61ExpandingSkewKurt(s: SparkSession, dir: String): DataFrame = {
+    import graft.operators.Moments
     val w = Window.partitionBy("user_id").orderBy("es", "event_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val d38 = DecimalType(38, 0)
-    val d19 = DecimalType(19, 0)
-    val base = events(s, dir)
+    val cents = events(s, dir)
       .select(col("user_id"), unix_timestamp(col("ts")).as("es"),
-        col("event_id"),
-        (dec(col("value")) * lit(100)).cast(LongType).as("c"))
-      .withColumn("n", count(lit(1)).over(w))
-      .withColumn("s1", sum(col("c")).over(w).cast(d38))
-      .withColumn("s2", sum(col("c") * col("c")).over(w).cast(d38))
-      .withColumn("s3",
-        sum((col("c") * col("c") * col("c")).cast(d38)).over(w).cast(d38))
-      .withColumn("s4", sum((col("c") * col("c")).cast(d19) *
-        (col("c") * col("c")).cast(d19)).over(w).cast(d38))
-    val (m2i, m3i, m4i) = graft.operators.Moments.kernels(
+        col("event_id"), Moments.cents(col("value")).as("c"))
+    val base = cents.select(cents.columns.toSeq.map(col) ++
+      Moments.powerSums(col("c"), _.over(w)): _*)
+    val (m2i, m3i, m4i) = Moments.kernels(
       col("n"), col("s1"), col("s2"), col("s3"), col("s4"))
     base
       .withColumn("m2i", m2i).withColumn("m3i", m3i).withColumn("m4i", m4i)
       .select(col("user_id"), col("es"), col("event_id"), col("n"),
-        graft.operators.Moments.g1(col("n"), col("m2i"), col("m3i"))
-          .as("exp_skew"),
-        graft.operators.Moments.g2(col("n"), col("m2i"), col("m4i"))
-          .as("exp_kurt"))
+        Moments.g1(col("n"), col("m2i"), col("m3i")).as("exp_skew"),
+        Moments.g2(col("n"), col("m2i"), col("m4i")).as("exp_kurt"))
       .orderBy("user_id", "es", "event_id")
   }
 
@@ -1473,7 +1451,7 @@ object TypeQueries {
       unix_micros(col("ts")).as("us"), col("event_id"))
     val agg = e.groupBy("event_type").agg(
       count(lit(1)).as("n"),
-      min(struct(col("us"), col("event_id"))).as("first"))
+      min(struct("us", "event_id")).as("first"))
     val w = Window.orderBy(col("first.us"), col("first.event_id"))
     agg.withColumn("code", row_number().over(w) - 1)
       .withColumn("share",
@@ -1723,46 +1701,19 @@ object TypeQueries {
     * pairs (plain Pearson on (x_t, x_{t−k})).
     *
     * Exactness discipline (the t61/t49 lineage): daily totals are
-    * exact integer cents, the five Pearson sums accumulate as
+    * exact integer cents and the five Pearson sums accumulate as
     * DECIMAL(38,0) over the aligned pairs (order-free at any
-    * partitioning), the kernels NUM = nΣxy−ΣxΣy, DX = nΣx²−(Σx)²,
-    * DY = nΣy²−(Σy)² stay exact integers, and r is the pinned IEEE
-    * chain NUM_d / (√DX_d · √DY_d) of their decimal→double casts
-    * (sqrt and multiply correctly rounded; the DuckDB side routes the
-    * casts through VARCHAR — the t61 HUGEINT→DOUBLE finding). Null
-    * when n < 2 or either variance is EXACTLY integer zero (the t49
-    * ulp lesson — matches pandas NaN on constant series).
+    * partitioning); r is [[graft.operators.SeriesStats.pearson]]'s
+    * exact-integer kernel and pinned IEEE terminal. Daily totals,
+    * lags and sums are [[graft.operators.SeriesStats]]'s, shared with
+    * the S35 streaming fold.
     *
     * Scale shape: one (user, day) groupBy, then ONE user-key
     * Exchange+Sort serves both lag columns, then a key-partitioned
     * aggregate — no global window, state per user is the five sums. */
   def t65Autocorr(s: SparkSession, dir: String): DataFrame = {
-    val d38 = DecimalType(38, 0)
-    val daily = events(s, dir)
-      .select(col("user_id"), to_date(col("ts")).as("day"),
-        (dec(col("value")) * lit(100)).cast(LongType).as("c"))
-      .groupBy("user_id", "day").agg(sum(col("c")).as("x"))
-    val w = Window.partitionBy("user_id").orderBy("day")
-    val lagged = daily
-      .withColumn("y1", lag("x", 1).over(w))
-      .withColumn("y7", lag("x", 7).over(w))
-    def sums(y: Column, p: String) = Seq(
-      count(y).as(s"n$p"),
-      sum(when(y.isNotNull, col("x")).cast(d38)).as(s"sx$p"),
-      sum(y.cast(d38)).as(s"sy$p"),
-      sum(col("x").cast(d38) * y.cast(d38)).as(s"sxy$p"),
-      sum(when(y.isNotNull, col("x").cast(d38) * col("x").cast(d38)))
-        .as(s"sxx$p"),
-      sum(y.cast(d38) * y.cast(d38)).as(s"syy$p"))
-    val aggs = Seq(count(lit(1)).as("n_days")) ++
-      sums(col("y1"), "1") ++ sums(col("y7"), "7")
-    val g = lagged.groupBy("user_id").agg(aggs.head, aggs.tail: _*)
-    def corr(p: String): Column = graft.operators.SeriesStats.pearson(
-      col(s"n$p"), col(s"sx$p"), col(s"sy$p"), col(s"sxy$p"),
-      col(s"sxx$p"), col(s"syy$p"))
-    g.select(col("user_id"), col("n_days"),
-        col("n1").as("n_lag1"), corr("1").as("autocorr_1"),
-        col("n7").as("n_lag7"), corr("7").as("autocorr_7"))
+    import graft.operators.SeriesStats._
+    autocorr(lagPairSums(withDayLags(dailyCents(events(s, dir)))))
       .orderBy("user_id")
   }
 
@@ -1858,23 +1809,15 @@ object TypeQueries {
     * exactly like pandas NaN, and ONE partition-key Exchange+Sort
     * serves all three lags and every quantile. The mergeable q60
     * histogram sketch is the documented 100 TB swap for long windows;
-    * this is the exact short-window form. Kernel shared with
-    * streaming S37 via [[graft.operators.SeriesStats.rollingQuantiles]]
-    * so the live fold equals this batch pass by construction. */
-  def t68RollingQuantile(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy("es", "event_id")
-    val (q25, q50, q75) = graft.operators.SeriesStats.rollingQuantiles(
-      col("value"), col("l1"), col("l2"), col("l3"))
-    events(s, dir)
-      .select(col("user_id"), unix_timestamp(col("ts")).as("es"),
-        col("event_id"), col("value"))
-      .withColumn("l1", lag("value", 1).over(w))
-      .withColumn("l2", lag("value", 2).over(w))
-      .withColumn("l3", lag("value", 3).over(w))
-      .select(col("user_id"), col("es"), col("event_id"), col("value"),
-        q25.as("roll_q25"), q50.as("roll_q50"), q75.as("roll_q75"))
+    * this is the exact short-window form. Lags and blends are
+    * [[graft.operators.SeriesStats.withRollingQuantiles]], shared with
+    * streaming S37, so the live fold equals this batch pass by
+    * construction. */
+  def t68RollingQuantile(s: SparkSession, dir: String): DataFrame =
+    graft.operators.SeriesStats.withRollingQuantiles(events(s, dir)
+        .select(col("user_id"), unix_timestamp(col("ts")).as("es"),
+          col("event_id"), col("value")))
       .orderBy("user_id", "es", "event_id")
-  }
 
   // ---- T69: merge_ordered with group-wise forward fill -----------------------
   /** pandas `merge_ordered(left, right, on='ts', left_by='user_id',

@@ -45,18 +45,40 @@ class QueriesSmokeSpec extends AnyFunSuite {
   test("every oracle key has a query") {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
-  test("no query registry or Tables spells DuckDB SQL (graft.oracle owns it)") {
-    val duck = """list_transform|string_split|list_inner_product|epoch\(""".r
-    val files = Seq("relational/Relational.scala", "typesystem/TypeQueries.scala",
-      "llm/LlmQueries.scala", "Tables.scala")
-      .map(f => java.nio.file.Path.of("src/main/scala/graft", f))
-    assert(files.forall(java.nio.file.Files.isRegularFile(_)))
-    val offenders = files.flatMap { p =>
+  /** `file:line: text` of every line of the given graft sources that
+    * `bad(file, line)` flags. */
+  private def offendingLines(files: Seq[String])(
+      bad: (String, String) => Boolean): Seq[String] = {
+    val paths = files.map(f => f -> java.nio.file.Path.of("src/main/scala/graft", f))
+    assert(paths.forall(p => java.nio.file.Files.isRegularFile(p._2)))
+    paths.flatMap { case (f, p) =>
       val src = scala.io.Source.fromFile(p.toFile, "UTF-8")
       try src.getLines().zipWithIndex.collect {
-        case (line, i) if duck.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
+        case (line, i) if bad(f, line) => s"$p:${i + 1}: ${line.trim}"
       }.toList
       finally src.close()
+    }
+  }
+  private val registries = Seq("relational/Relational.scala",
+    "typesystem/TypeQueries.scala", "llm/LlmQueries.scala")
+  test("no query registry or Tables spells DuckDB SQL (graft.oracle owns it)") {
+    val duck = """list_transform|string_split|list_inner_product|epoch\(""".r
+    val offenders = offendingLines(registries :+ "Tables.scala") { (_, line) =>
+      duck.findFirstIn(line).isDefined
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+  test("no streaming fold or registry re-spells a shared partial aggregate") {
+    // the group top-k heap, the Count-Min bucket rule, t68's lags, p5's
+    // weight units and the OHLC bar struct live in graft.operators; a
+    // stream applies its watermark over the one body it shares
+    val spelled = Seq("TopKAgg(", "sd + \"|\"", "lag(\"value\", 3)",
+      "regexp_extract(col(\"source\")", "min(struct(col(\"us\")")
+    val stream = "streaming/StreamingOps.scala"
+    val batchCopy = """def \w+Batch\(""".r
+    val offenders = offendingLines(stream +: registries) { (f, line) =>
+      spelled.exists(line.contains) ||
+        (f == stream && batchCopy.findFirstIn(line).isDefined)
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }

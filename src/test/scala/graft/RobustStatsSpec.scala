@@ -58,7 +58,7 @@ class RobustStatsSpec extends AnyFunSuite {
     // 60 distinct tokens into 8 buckets × 2 rows — collisions certain
     val toks = (1 to 60).flatMap(i => Seq.fill(i % 5 + 1)(s"tk$i"))
     val df = toks.toDF("tok")
-    val got = llm.LlmQueries.countMinProbe(df, seeds = 2, buckets = 8)
+    val got = operators.Sketches.countMinProbe(df, seeds = 2, buckets = 8)
       .select("tok", "exact_n", "cms_n").as[(String, Long, Long)].collect()
     assert(got.nonEmpty)
     got.foreach { case (tk, ex, est) =>

@@ -38,7 +38,7 @@ class StreamingSpec extends AnyFunSuite {
     q.awaitTermination(120000)
     val got = spark.table("s1_out")
       .orderBy("win_start", "event_type").collect()
-    val want = StreamingOps.windowedCountsBatch(Tables.events(spark, sf))
+    val want = StreamingOps.countsPerWindow(Tables.events(spark, sf))
       .orderBy("win_start", "event_type").collect()
     assert(got.length == want.length && got.length > 0)
     got.zip(want).foreach { case (g, w) =>
@@ -327,7 +327,7 @@ class StreamingSpec extends AnyFunSuite {
     val onTime = Seq((ts(0.1), "view", 1.0), (ts(0.3), "view", 2.0),
       (ts(0.6), "click", 1.5), (ts(50.2), "view", 1.0),
       (ts(51.4), "click", 2.0)).toDF("ts", "event_type", "value")
-    val want = StreamingOps.windowedCountsBatch(onTime).collect()
+    val want = StreamingOps.countsPerWindow(onTime).collect()
       .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2),
         r.getDouble(3))).toSet
     assert(got == want, s"missing=${want -- got} extra=${got -- want}")
@@ -497,6 +497,45 @@ class StreamingSpec extends AnyFunSuite {
         r.getLong(3), r.getLong(4), r.getLong(5)))
     assert(last.nonEmpty && last.toSet == batch.toSet,
       s"zorder state diverged (${last.length} vs ${batch.length})")
+  }
+
+  test("S15: pinned extents wider than the data normalize by the pin, not the data") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    import graft.operators.ZOrder
+    val rows = Tables.t(spark, sf, "orders")
+      .select(col("o_custkey").cast("long"),
+        datediff(col("o_orderdate"), to_date(lit("1970-01-01"))).cast("long"))
+      .limit(600).as[(Long, Long)].collect().toSeq
+    // a layout contract wider than anything seen: the data fills only
+    // the middle of each pinned dimension
+    def widen(xs: Seq[Long]) = (xs.min - (xs.max - xs.min), xs.max + (xs.max - xs.min))
+    val (aMn, aMx) = widen(rows.map(_._1))
+    val (bMn, bMx) = widen(rows.map(_._2))
+    val (first, second) = rows.splitAt(rows.length / 2)
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val mem = MemoryStream[(Long, Long)]
+    type Stat = (Long, Long, Long, Long, Long, Long)
+    def read(d: org.apache.spark.sql.DataFrame): Set[Stat] =
+      d.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getLong(4), r.getLong(5))).toSet
+    @volatile var last: Set[Stat] = Set.empty
+    val q = StreamingOps.streamingZorderStats(
+        mem.toDF().toDF("a", "b"), "a", "b", aMn, aMx, bMn, bMx,
+        trigger = Trigger.ProcessingTime(0L)) { d => last = read(d) }
+    mem.addData(first: _*)
+    q.processAllAvailable()
+    mem.addData(second: _*)
+    q.processAllAvailable()
+    q.stop()
+    val all = rows.toDF("a", "b")
+    val pinned = read(ZOrder.bucketStats(all, col("a"), col("b"),
+      lit(aMn), lit(aMx), lit(bMn), lit(bMx), 6))
+    assert(last.nonEmpty && last == pinned,
+      s"zorder state diverged from the pinned-extent stats (${last.size} vs ${pinned.size})")
+    // non-vacuous: normalizing by the data's own extents buckets differently
+    assert(read(ZOrder.layoutStats(all, col("a"), col("b"), 6)) != pinned,
+      "the wider pin did not move any bucket — the fixture cannot tell them apart")
   }
 
   test("S19: streaming OHLC bars fold across triggers to match batch t53") {
@@ -1498,7 +1537,7 @@ class StreamStaticJoinSpec extends AnyFunSuite {
     q.awaitTermination(120000)
     val got = spark.table("s4_out")
       .orderBy("win_start", "c_mktsegment").collect()
-    val want = StreamingOps.enrichedSegmentCountsBatch(Tables.events(spark, sf), dim)
+    val want = StreamingOps.segmentCountsPerWindow(Tables.events(spark, sf), dim)
       .orderBy("win_start", "c_mktsegment").collect()
     assert(got.length == want.length && got.length > 0)
     got.zip(want).foreach { case (g, w) =>
@@ -1546,7 +1585,8 @@ class StreamStreamJoinSpec extends AnyFunSuite {
     val got = spark.table("s5_out")
       .select("user_id", "purchase_id", "view_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val want = StreamingOps.conversionJoinBatch(Tables.events(spark, sf))
+    val (views, purchases) = StreamingOps.conversionSides(Tables.events(spark, sf))
+    val want = StreamingOps.conversionPairs(views, purchases)
       .select("user_id", "purchase_id", "view_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(want.nonEmpty)

@@ -76,8 +76,8 @@ object TextHashKernels {
   /** Heuristic language ID fused into one compiled pass: CJK code-point
     * ratio over the RAW text plus per-profile stopword-hit ratios over
     * the NORMALIZED text, with the earliest-max tie-break — exactly the
-    * arithmetic of the Column formulation it replaces (and of the DuckDB
-    * oracle): pred = cjk > 0.3 ? "zh" : best > 0 ? argmax : "und". */
+    * arithmetic of the DuckDB oracle: pred = cjk > 0.3 ? "zh" :
+    * best > 0 ? argmax : "und". */
   def langId(raw: UTF8String, norm: UTF8String): UTF8String = {
     val rs = raw.toString
     var i = 0

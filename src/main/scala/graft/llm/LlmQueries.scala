@@ -37,7 +37,7 @@ object LlmQueries {
     * shorter bands admit die cheaply in the sorted-intersect verify. */
   def d2MinhashLsh(s: SparkSession, dir: String): DataFrame =
     Dedup.minhashPairs(withCopies(t(s, dir, "documents"), perturb = true),
-        "doc_id", "text", w = 3, h = 64, bands = 32, threshold = 0.5)
+        "doc_id", "text", threshold = 0.5)
       .withColumn("jaccard", round(col("jaccard"), 6))
       .orderBy("id_a", "id_b")
 
@@ -74,7 +74,7 @@ object LlmQueries {
     * policy surfaced as a boolean. */
   def d6DupClusters(s: SparkSession, dir: String): DataFrame = {
     val pairs = Dedup.minhashPairs(withCopies(t(s, dir, "documents"), perturb = true),
-      "doc_id", "text", w = 3, h = 64, bands = 32, threshold = 0.5)
+      "doc_id", "text", threshold = 0.5)
     Dedup.dupClusters(pairs, "id_a", "id_b")
       .select(col("id").as("doc_id"), col("cluster_id"),
         col("cluster_size"), col("keep"))
@@ -94,8 +94,7 @@ object LlmQueries {
     * survivorship adds one tiny aggregate to d6's cost. */
   def d19QualitySurvivor(s: SparkSession, dir: String): DataFrame = Settle.scope("d19_quality_survivor") { st =>
     val corpus = withCopies(t(s, dir, "documents"), perturb = true)
-    val pairs = Dedup.minhashPairs(corpus, "doc_id", "text",
-      w = 3, h = 64, bands = 32, threshold = 0.5)
+    val pairs = Dedup.minhashPairs(corpus, "doc_id", "text", threshold = 0.5)
     // quality scoring is INDEPENDENT of the CC loop — settle it as a
     // concurrent driver job (guide §2.6) so the kernel's tasks
     // backfill the latency-bound CC rounds instead of running after
@@ -1624,8 +1623,7 @@ object LlmQueries {
         .select((col("doc_id") + 5000000L).as("doc_id"), rev.as("text")))
       .union(docs.filter(col("doc_id") >= 30 && col("doc_id") < 38)
         .select((col("doc_id") + 6000000L).as("doc_id"), rev.as("text")))
-    Dedup.incrementalDedup(corpus, batch, "doc_id", "text",
-        w = 3, h = 64, bands = 32, threshold = 0.5)
+    Dedup.incrementalDedup(corpus, batch, "doc_id", "text", threshold = 0.5)
       .withColumnRenamed("id", "doc_id")
       .withColumn("jaccard", round(col("jaccard"), 6))
       .orderBy("doc_id")
@@ -2223,8 +2221,7 @@ object LlmQueries {
         Seq("lang", "source"))
       .select(col("doc_id"), col("lang"), col("source"),
         (col("rn") <= col("allocated")).as("is_test")), "sides")
-    val pairs = Dedup.minhashPairs(corpus, "doc_id", "text",
-      w = 3, h = 64, bands = 32, threshold = 0.5)
+    val pairs = Dedup.minhashPairs(corpus, "doc_id", "text", threshold = 0.5)
     val testIds = sides.filter(col("is_test"))
       .select(col("doc_id").as("tid"))
     val touched = pairs.select(col("id_a").as("tid"), col("id_b").as("oid"))

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.Settle
 import graft.expressions.Kernels
@@ -11,8 +12,27 @@ import graft.expressions.Kernels
   * digests/signatures, never the text. Exact dedup is a hash groupBy;
   * MinHash/SimHash shuffle (band-key, id) pairs; candidate verification
   * joins the text back only for the (rare) colliding pairs.
-  */
+  *
+  * Every near-dup operator is one filter-and-verify pipeline (the shape
+  * of REPOSE, ICDE 2021, and of incremental top-k similarity search,
+  * EDBT 2020): a candidate filter — the salted block-local pair builder
+  * [[blockPairs]], the blocked-gram builder [[gramPairs]] or the
+  * band-key equi-join [[bandMatches]] against an index — then one exact
+  * verify over the pair's joined-back sides ([[joinBack]],
+  * [[jaccardVerified]]), and, where each document gets a verdict, one
+  * best-match [[verdict]]. No operator spells a step of its own. */
 object Dedup {
+
+  // The MinHash shape: 3-word shingles, 64 permutations in 32 bands of
+  // 2 rows (minhashPairs says why). Fixed, so every index built anywhere
+  // — a stored pool's, each batch's — matches every other.
+  private val W = 3
+  private val H = 64
+  private val Bands = 32
+  // Salting bounds of the block-local pair builder: a bucket of more
+  // than CapBucket ids splits into at most MaxSalt hash sub-buckets.
+  private val CapBucket = 4096
+  private val MaxSalt = 64
 
   /** Normalized text: lowercase, collapsed whitespace, trimmed — one
     * compiled pass (graft.expressions.NormalizeText), byte-identical to
@@ -74,26 +94,85 @@ object Dedup {
     }
   }
 
-  /** Ordered candidate pairs from one salted group: all pairs for a
-    * diagonal group (gi == gj), only cross-sub pairs off-diagonal
+  /** Pairs of one salted group's payloads, smaller id first: all pairs
+    * for a diagonal group (gi == gj), only cross-sub pairs off-diagonal
     * (within-sub pairs belong to that sub's own diagonal group). */
-  private def groupPairs(rows: Array[(Long, Int)], gi: Int, gj: Int)
-      : Iterator[(Long, Long)] =
+  private def groupPairs[P](rows: IndexedSeq[(P, Int)], gi: Int, gj: Int,
+      id: P => Long): Iterator[(P, P)] =
     if (gi == gj) {
-      val ids = rows.map(_._1)
-      java.util.Arrays.sort(ids)
+      val ps = rows.map(_._1).sortBy(id)
       for {
-        i <- ids.indices.iterator
-        j <- (i + 1) until ids.length
-      } yield (ids(i), ids(j))
+        i <- ps.indices.iterator
+        j <- (i + 1) until ps.length
+      } yield (ps(i), ps(j))
     } else {
-      val as = rows.collect { case (id, s) if s == gi => id }
-      val bs = rows.collect { case (id, s) if s == gj => id }
+      val as = rows.collect { case (p, s) if s == gi => p }
+      val bs = rows.collect { case (p, s) if s == gj => p }
       for {
         a <- as.iterator
         b <- bs.iterator
-      } yield (math.min(a, b), math.max(a, b))
+      } yield if (id(a) < id(b)) (a, b) else (b, a)
     }
+
+  /** The salted block-local pair builder (the filter of [[minhashPairs]],
+    * [[simhashPairs]] and [[editDistancePairs]]): `keyed` rows (id,
+    * band, key, …) group per salted (band, key) sub-group
+    * ([[saltBuckets]]), and each in-group pair of `payload` values goes
+    * once through `keep` inside the group's task, so a pair `keep`
+    * rejects never becomes a row. One shuffle of the keyed rows — never
+    * of materialized pair rows, as a self-join on the bucket would be. */
+  private def blockPairs[P: TypeTag, O <: Product : TypeTag](keyed: DataFrame,
+      payload: Column, id: P => Long, cap: Int, maxSalt: Int)(
+      keep: (P, P) => Option[O]): Dataset[O] = {
+    val spark = keyed.sparkSession
+    import spark.implicits._
+    saltBuckets(keyed, cap, maxSalt)
+      .select(payload, col("sub"), col("band"), col("key"), col("gi"), col("gj"))
+      .as[(P, Int, Int, Long, Int, Int)]
+      .groupByKey(t => (t._3, t._4, t._5, t._6))
+      .flatMapGroups { (k, it) =>
+        groupPairs(it.map(t => (t._1, t._2)).toIndexedSeq, k._3, k._4, id)
+          .flatMap(keep.tupled)
+      }
+  }
+
+  /** Candidate pairs (id_a, id_b) with `a`'s other columns joined back
+    * on id_a and `b`'s on id_b, suffixed `_a` / `_b` — the verify side
+    * of every pair operator. `a` and `b` carry an `id` column. */
+  private def joinBack(pairs: DataFrame, a: DataFrame, b: DataFrame): DataFrame = {
+    def side(s: DataFrame, x: String): DataFrame =
+      s.toDF(s.columns.map(c => if (c == "id") s"id_$x" else s"${c}_$x"): _*)
+    pairs.join(side(a, "a"), "id_a").join(side(b, "b"), "id_b")
+  }
+
+  /** The one exact verify of the MinHash operators: distinct candidate
+    * pairs, id_a's shingle set from index `a` and id_b's from `b`, kept
+    * iff their Jaccard (a merge-scan intersect of the sorted sets) is at
+    * least `threshold`. Returns (id_a, id_b, jaccard). */
+  private def jaccardVerified(cand: DataFrame, a: DataFrame, b: DataFrame,
+      threshold: Double): DataFrame =
+    joinBack(cand.distinct(), a.select("id", "sh"), b.select("id", "sh"))
+      .withColumn("common",
+        Kernels.sortedIntersectCount(col("sh_a"), col("sh_b")).cast("double"))
+      .withColumn("jaccard",
+        col("common") / (size(col("sh_a")) + size(col("sh_b")) - col("common")))
+      .filter(col("jaccard") >= threshold)
+      .select("id_a", "id_b", "jaccard")
+
+  /** The best-match verdict: one row per `ids` row (its columns, then
+    * `flag`, the partner column and the score column of `hits`). `hits`
+    * is (id, partner, score) per verified match; the smallest partner
+    * wins and its own score rides along in the struct-min, so the row is
+    * deterministic. Unmatched ids get flag false and nulls. */
+  private def verdict(ids: DataFrame, hits: DataFrame, flag: String): DataFrame = {
+    val Array(_, of, score) = hits.columns
+    val best = hits.groupBy("id")
+      .agg(min(struct(col(of), col(score))).as("m"))
+      .select(col("id"), col(s"m.$of").as(of), col(s"m.$score").as(score))
+    ids.join(best, Seq("id"), "left")
+      .select(ids.columns.map(col) ++
+        Seq(col(of).isNotNull.as(flag), col(of), col(score)): _*)
+  }
 
   // ---------------------------------------------------------------------
   // Exact dedup
@@ -118,76 +197,72 @@ object Dedup {
   def shingleHashes(text: Column, w: Int = 3): Column =
     Kernels.wordShingleHashes(normText(text), w)
 
+  /** The one MinHash index: (id, sh = the sorted shingle hashes, bands =
+    * the 32 band keys) per document. [[minhashPairs]] and
+    * [[incrementalDedup]] build it per call; a closed held-out pool's is
+    * built ONCE at deployment and each batch's per trigger
+    * ([[leakageVerdictsIndexed]], streaming S34). The caller caches it. */
+  def leakageIndex(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    df.select(col(idCol).cast("long").as("id"),
+        shingleHashes(col(textCol), W).as("sh"))
+      .withColumn("bands", Kernels.bandKeys(Kernels.minhash(col("sh"), H), H, Bands))
+
+  /** An index's (id, band, key) rows: one per band of each document. */
+  private def bandRows(idx: DataFrame): DataFrame =
+    idx.select(col("id"), posexplode(col("bands")).as(Seq("band", "key")))
+
+  /** The index-matching filter: (id_a, id_b) for every batch document
+    * id_a and pool document id_b that share a band key — one
+    * key-partitioned equi-join, so a hot band key is AQE-skew-splittable
+    * rather than one quadratic task. Not distinct. */
+  private def bandMatches(batchIdx: DataFrame, poolIdx: DataFrame): DataFrame =
+    bandRows(batchIdx)
+      .join(bandRows(poolIdx).toDF("id_b", "band", "key"), Seq("band", "key"))
+      .select(col("id").as("id_a"), col("id_b"))
+
   /** Candidate near-duplicate pairs via MinHash LSH, verified with the
     * exact shingle-set Jaccard. Returns (id_a, id_b, jaccard) with
     * jaccard >= `threshold`.
     *
-    * Banding default: 32 bands × 2 rows (h = 64). At the default 0.5
-    * threshold the per-pair miss probability is (1−j²)^32 ≤ 1e-4 on
-    * the whole j ≥ 0.5 region — 4-row bands (16 × 4) miss j ≈ 0.6
-    * pairs ~8% of the time, which surfaced as a real dropped pair at
-    * sf0.1. Shorter bands admit more low-similarity candidates, but
-    * those die in the cheap sorted-intersect verify; for HIGH
-    * thresholds (≥ 0.8) prefer fewer/longer bands (e.g. 16 × 4) to
-    * keep the candidate volume down.
+    * Banding: 32 bands × 2 rows (h = 64). At a 0.5 threshold the
+    * per-pair miss probability is (1−j²)^32 ≤ 1e-4 on the whole
+    * j ≥ 0.5 region — 4-row bands (16 × 4) miss j ≈ 0.6 pairs ~8% of
+    * the time, which surfaced as a real dropped pair at sf0.1. Shorter
+    * bands admit more low-similarity candidates, but those die in the
+    * cheap sorted-intersect verify.
     *
-    * Shuffle profile: explode of (band, id) — `bands` rows of 16 bytes
-    * per doc — then a self-join on the band bucket; text arrays are
-    * joined back only for surviving candidate pairs. */
+    * Shuffle profile: explode of (id, band, key) — 32 rows of 16 bytes
+    * per doc — then one shuffle grouping them per salted (band, key)
+    * bucket, whose task enumerates its pairs ([[blockPairs]]); shingle
+    * arrays are joined back only for distinct candidate pairs. */
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
-      w: Int = 3, h: Int = 64, bands: Int = 32,
-      threshold: Double = 0.5,
-      capBucket: Int = 4096, maxSalt: Int = 64): DataFrame = Settle.scope("minhashPairs") { st =>
+      threshold: Double = 0.5): DataFrame =
+    minhashPairs(df, idCol, textCol, threshold, CapBucket, MaxSalt)
+
+  /** [[minhashPairs]] under explicit salting bounds: DedupSkewSpec's
+    * hook to force the salted and the unsalted layout. */
+  private[graft] def minhashPairs(df: DataFrame, idCol: String, textCol: String,
+      threshold: Double, cap: Int, maxSalt: Int): DataFrame = Settle.scope("minhashPairs") { st =>
     // persisted: consumed three times below (band explode + both
-    // verify-join sides). At cluster scale this is a checkpoint. Only
-    // the band keys of the signature are kept.
-    val withSig = st.cache(df.select(col(idCol).as("id"),
-        shingleHashes(col(textCol), w).as("sh"))
-      .withColumn("bands", Kernels.bandKeys(Kernels.minhash(col("sh"), h), h, bands)))
-    // BLOCK-LOCAL candidate generation: pairs are enumerated inside
-    // each (band, key) group — vs the former self-join this shuffles
-    // the exploded rows (not the join's materialized pair rows).
-    // Buckets are usually small by LSH construction, but "usually" is
-    // not a guard: saltBuckets splits any bucket over `capBucket` ids
-    // into hash sub-groups so a degenerate band key (mass-shared
-    // boilerplate signature) never lands on one quadratic task.
-    val spark = df.sparkSession
-    import spark.implicits._
-    val cand = saltBuckets(
-        withSig.select(col("id"), posexplode(col("bands")).as(Seq("band", "key"))),
-        capBucket, maxSalt)
-      .select("id", "sub", "band", "key", "gi", "gj")
-      .as[(Long, Int, Int, Long, Int, Int)]
-      .groupByKey(t => (t._3, t._4, t._5, t._6))
-      .flatMapGroups { (key, it) =>
-        groupPairs(it.map(t => (t._1, t._2)).toArray, key._3, key._4)
-      }
-      .toDF("id_a", "id_b")
-      .distinct()
-    val sets = withSig.select(col("id"), col("sh"))
+    // verify-join sides). At cluster scale this is a checkpoint.
+    val idx = st.cache(leakageIndex(df, idCol, textCol))
+    val cand = blockPairs[Long, (Long, Long)](bandRows(idx), col("id"), identity,
+      cap, maxSalt)((a, b) => Some((a, b))).toDF("id_a", "id_b")
     // verified-pair result settles eagerly (it is the output —
     // pair-bounded, orders of magnitude under the corpus) so the
-    // scope releases the signature cache on return
-    st.settle(cand
-      .join(sets.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-      .join(sets.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-      .withColumn("common",
-        Kernels.sortedIntersectCount(col("sh_a"), col("sh_b")).cast("double"))
-      .withColumn("jaccard",
-        col("common") / (size(col("sh_a")) + size(col("sh_b")) - col("common")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard"), "verify")
+    // scope releases the index cache on return
+    st.settle(jaccardVerified(cand, idx, idx, threshold), "verify")
   }
 
   /** Incremental (continuous-crawl) dedup: match a NEW batch against an
     * EXISTING corpus's LSH band index plus the batch itself, and return
     * one verdict row per batch document — WITHOUT re-pairing the
     * corpus. This is the shape a 100 TB pipeline actually runs: the
-    * corpus's (band, key, id) index and shingle sets are computed once
-    * at ingest and stored; each incoming crawl batch only explodes ITS
-    * OWN bands, hash-joins them against the index, and exact-verifies
-    * the few candidates. Corpus text never re-shuffles, corpus×corpus
-    * pairs never re-enumerate.
+    * corpus's index ([[leakageIndex]]) is computed once at ingest and
+    * stored; each incoming crawl batch only explodes ITS OWN bands,
+    * hash-joins them against the index, and exact-verifies the few
+    * candidates. Corpus text never re-shuffles, corpus×corpus pairs
+    * never re-enumerate.
     *
     * Matching policy: a batch doc is a duplicate if some corpus doc, or
     * an EARLIER batch doc (smaller id — the dedup direction inside the
@@ -197,58 +272,22 @@ object Dedup {
     *
     * Returns (id, is_dup, dup_of, jaccard) for every batch row.
     *
-    * Scale shape: candidate generation is a key-partitioned equi-join
-    * on (band, key) — batch-side rows are bands·|batch|, corpus-side is
-    * the stored index. Unlike the in-batch `flatMapGroups` path this
-    * join materializes candidate rows through the shuffle machinery, so
-    * a degenerate hot band key is AQE-skew-splittable rather than a
-    * single quadratic task. Exact verification joins shingle sets for
-    * surviving (batch, pool) id pairs only, and the final verdict is
-    * one aggregate keyed on the batch id. */
+    * Scale shape: [[leakageVerdictsIndexed]]'s candidate → verify →
+    * verdict path against the pool corpus ∪ batch; only the admission
+    * rule (any corpus hit, an in-batch hit only from a smaller id) is
+    * this operator's own. */
   def incrementalDedup(corpus: DataFrame, batch: DataFrame,
       idCol: String, textCol: String,
-      w: Int = 3, h: Int = 64, bands: Int = 32,
       threshold: Double = 0.5): DataFrame = Settle.scope("incrementalDedup") { st =>
-    def indexed(df: DataFrame): DataFrame =
-      df.select(col(idCol).cast("long").as("id"),
-          shingleHashes(col(textCol), w).as("sh"))
-        .withColumn("bands", Kernels.bandKeys(Kernels.minhash(col("sh"), h), h, bands))
     // the corpus index: in production a stored table, here built once
-    val corpusIdx = st.cache(indexed(corpus))
-    val batchIdx = st.cache(indexed(batch))
-    def bandRows(idx: DataFrame): DataFrame =
-      idx.select(col("id"), posexplode(col("bands")).as(Seq("band", "key")))
-    // pool = stored corpus index ∪ the batch's own bands; an in-batch
-    // match only counts when the pool id precedes the batch id, so the
-    // first occurrence inside a batch is kept exactly like a corpus hit
-    val pool = bandRows(corpusIdx).withColumn("in_corpus", lit(true))
-      .union(bandRows(batchIdx).withColumn("in_corpus", lit(false)))
-      .select(col("id").as("pid"), col("band"), col("key"), col("in_corpus"))
-    val cand = bandRows(batchIdx)
-      .join(pool, Seq("band", "key"))
-      .filter(col("in_corpus") || col("pid") < col("id"))
-      .select(col("id"), col("pid")).distinct()
-    val batchSets = batchIdx.select(col("id"), col("sh"))
-    val poolSets = corpusIdx.select(col("id").as("pid"), col("sh").as("psh"))
-      .union(batchSets.select(col("id").as("pid"), col("sh").as("psh")))
-    val verified = cand
-      .join(batchSets, Seq("id"))
-      .join(poolSets, Seq("pid"))
-      .withColumn("common",
-        Kernels.sortedIntersectCount(col("sh"), col("psh")).cast("double"))
-      .withColumn("jaccard",
-        col("common") / (size(col("sh")) + size(col("psh")) - col("common")))
-      .filter(col("jaccard") >= threshold)
-    // smallest matching id wins; its own jaccard rides along in the
-    // struct-min so the verdict row is fully deterministic
-    val best = verified.groupBy("id")
-      .agg(min(struct(col("pid"), col("jaccard"))).as("m"))
-      .select(col("id"), col("m.pid").as("dup_of"), col("m.jaccard").as("jaccard"))
+    val corpusIdx = st.cache(leakageIndex(corpus, idCol, textCol))
+    val batchIdx = st.cache(leakageIndex(batch, idCol, textCol))
+    val cand = bandMatches(batchIdx, corpusIdx)
+      .union(bandMatches(batchIdx, batchIdx).filter(col("id_b") < col("id_a")))
+    val hits = jaccardVerified(cand, batchIdx, corpusIdx.union(batchIdx), threshold)
     // batch-row-sized verdicts settle eagerly: both index caches go on return
-    st.settle(batchIdx.select(col("id"))
-      .join(best, Seq("id"), "left")
-      .select(col("id"), col("dup_of").isNotNull.as("is_dup"),
-        col("dup_of"), col("jaccard")), "verdicts")
+    st.settle(verdict(batchIdx.select("id"), hits.toDF("id", "dup_of", "jaccard"),
+      "is_dup"), "verdicts")
   }
 
   /** Cross-boundary near-dup verdicts against a FIXED held-out pool —
@@ -264,30 +303,19 @@ object Dedup {
     * `leak_of` is the smallest matching held-out id (deterministic),
     * `jaccard` that pair's score.
     *
-    * Scale shape: [[incrementalDedup]]'s — the batch explodes only its
-    * own bands into a key-partitioned equi-join against the stored
-    * index; exact verification touches surviving candidates only. The
-    * held-out index is test-set-sized and CONSTANT — at a 10% hold-out
-    * it is the small side by construction and broadcast-eligible. */
+    * Scale shape: the batch explodes only its own bands into a
+    * key-partitioned equi-join against the stored index; exact
+    * verification touches surviving candidates only. The held-out
+    * index is test-set-sized and CONSTANT — at a 10% hold-out it is the
+    * small side by construction and broadcast-eligible. */
   def leakageVerdicts(heldOut: DataFrame, batch: DataFrame,
       idCol: String, textCol: String,
-      w: Int = 3, h: Int = 64, bands: Int = 32,
       threshold: Double = 0.5): DataFrame = Settle.scope("leakageVerdicts") { st =>
     // batch-row-sized verdicts settle eagerly: both index caches go on return
-    val poolIdx = st.cache(leakageIndex(heldOut, idCol, textCol, w, h, bands))
-    val batchIdx = st.cache(leakageIndex(batch, idCol, textCol, w, h, bands))
+    val poolIdx = st.cache(leakageIndex(heldOut, idCol, textCol))
+    val batchIdx = st.cache(leakageIndex(batch, idCol, textCol))
     st.settle(leakageVerdictsIndexed(poolIdx, batchIdx, threshold), "verdicts")
   }
-
-  /** The (id, shingle-set, band-keys) index [[leakageVerdictsIndexed]]
-    * matches against — built ONCE over the closed held-out pool at
-    * deployment and per trigger over each arriving batch; the caller
-    * caches it (leakageVerdicts in its scope, streaming S34 per stream). */
-  def leakageIndex(df: DataFrame, idCol: String, textCol: String,
-      w: Int = 3, h: Int = 64, bands: Int = 32): DataFrame =
-    df.select(col(idCol).cast("long").as("id"),
-        shingleHashes(col(textCol), w).as("sh"))
-      .withColumn("bands", Kernels.bandKeys(Kernels.minhash(col("sh"), h), h, bands))
 
   /** [[leakageVerdicts]] over PRE-BUILT indexes — the kernel streaming
     * S34 drives so the fixed pool index is computed and cached once
@@ -296,28 +324,8 @@ object Dedup {
     * releases the batch index when the trigger ends). */
   def leakageVerdictsIndexed(poolIdx: DataFrame, batchIdx: DataFrame,
       threshold: Double = 0.5): DataFrame = {
-    def bandRows(idx: DataFrame): DataFrame =
-      idx.select(col("id"), posexplode(col("bands")).as(Seq("band", "key")))
-    val cand = bandRows(batchIdx)
-      .join(bandRows(poolIdx)
-        .select(col("id").as("pid"), col("band"), col("key")),
-        Seq("band", "key"))
-      .select(col("id"), col("pid")).distinct()
-    val verified = cand
-      .join(batchIdx.select(col("id"), col("sh")), Seq("id"))
-      .join(poolIdx.select(col("id").as("pid"), col("sh").as("psh")), Seq("pid"))
-      .withColumn("common",
-        Kernels.sortedIntersectCount(col("sh"), col("psh")).cast("double"))
-      .withColumn("jaccard",
-        col("common") / (size(col("sh")) + size(col("psh")) - col("common")))
-      .filter(col("jaccard") >= threshold)
-    val best = verified.groupBy("id")
-      .agg(min(struct(col("pid"), col("jaccard"))).as("m"))
-      .select(col("id"), col("m.pid").as("leak_of"), col("m.jaccard").as("jaccard"))
-    batchIdx.select(col("id"))
-      .join(best, Seq("id"), "left")
-      .select(col("id"), col("leak_of").isNotNull.as("is_leak"),
-        col("leak_of"), col("jaccard"))
+    val hits = jaccardVerified(bandMatches(batchIdx, poolIdx), batchIdx, poolIdx, threshold)
+    verdict(batchIdx.select("id"), hits.toDF("id", "leak_of", "jaccard"), "is_leak")
   }
 
   /** Semantic dedup over an embedding column (SemDeDup, Abbas et al.
@@ -337,10 +345,10 @@ object Dedup {
     * training fit, and the whole index replays in plain SQL for the
     * oracle. The index and its within-cell pairs are
     * [[Similarity.sphericalCellPairs]], shared with the kNN graph.
-    * Verdict rows mirror
-    * [[incrementalDedup]]: (id, cell, is_dup, dup_of, cos) with
-    * smallest-matching-id determinism; the cosine comparison is
-    * bit-exact on both engines, so ANY threshold is boundary-safe.
+    * Verdict rows are [[incrementalDedup]]'s [[verdict]]: (id, cell,
+    * is_dup, dup_of, cos) with smallest-matching-id determinism; the
+    * cosine comparison is bit-exact on both engines, so ANY threshold
+    * is boundary-safe.
     *
     * Scale shape: assignment shuffles (cell, id, v) once; the
     * within-cell self-join is key-partitioned on the cell (AQE-
@@ -353,14 +361,8 @@ object Dedup {
     // read it (measured ~40% slower uncached at sf0.1)
     val (assign, pairs) = Similarity.sphericalCellPairs(st, df, idCol, vecCol, nCells)
     val hits = pairs.filter(col("cos") >= threshold)
-    val best = hits.groupBy("id_b")
-      .agg(min(struct(col("id_a"), col("cos"))).as("m"))
-      .select(col("id_b").as("id"),
-        col("m.id_a").as("dup_of"), col("m.cos").as("cos"))
-    assign.select(col("id"), col("cell"))
-      .join(best, Seq("id"), "left")
-      .select(col("id"), col("cell"), col("dup_of").isNotNull.as("is_dup"),
-        col("dup_of"), col("cos"))
+      .select(col("id_b").as("id"), col("id_a").as("dup_of"), col("cos"))
+    verdict(assign.select(col("id"), col("cell")), hits, "is_dup")
   }
 
   // ---------------------------------------------------------------------
@@ -385,70 +387,43 @@ object Dedup {
 
   /** Near-dup pairs with Hamming distance <= maxDist on 64-bit SimHash.
     * Pigeonhole bucketing: split the hash into (maxDist+1) chunks — any
-    * pair within maxDist agrees on at least one chunk, so the self-join
-    * runs per chunk bucket, never all-pairs. */
+    * pair within maxDist agrees on at least one chunk, so pairs are
+    * enumerated per (chunk, key) bucket through [[blockPairs]], never
+    * all-pairs, and the Hamming filter runs inside the bucket's task. */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-      maxDist: Int = 3, capBucket: Int = 4096, maxSalt: Int = 64): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
+      maxDist: Int = 3): DataFrame =
+    simhashPairs(df, idCol, textCol, maxDist, CapBucket, MaxSalt)
+
+  /** [[simhashPairs]] under explicit salting bounds (DedupSkewSpec's
+    * hook, as for [[minhashPairs]]). */
+  private[graft] def simhashPairs(df: DataFrame, idCol: String, textCol: String,
+      maxDist: Int, cap: Int, maxSalt: Int): DataFrame = {
     val chunks = maxDist + 1
     val bits = 64 / chunks
-    // block-local pair generation per (chunk-band, key) bucket — one
-    // pass of (id, hash, band, key) quads; the hamming filter applies
-    // in-group so over-distance pairs never materialize as rows.
-    // saltBuckets bounds the per-task pair count for degenerate keys
-    // (e.g. the all-zero chunk of near-empty docs) exactly as in
-    // minhashPairs.
-    val exploded = df.select(col(idCol).cast("long").as("id"),
+    val keyed = df.select(col(idCol).cast("long").as("id"),
         tokenMd5Hashes(normText(col(textCol))).as("th"))
       .select(col("id"), simhashFromTokHashes(col("th")).as("sh"))
       .select(col("id"), col("sh"),
         posexplode(array((0 until chunks).map(i =>
           shiftright(col("sh"), i * bits)
             .bitwiseAND(lit((1L << bits) - 1))): _*)).as(Seq("band", "key")))
-    saltBuckets(exploded, capBucket, maxSalt)
-      .select("id", "sh", "sub", "band", "key", "gi", "gj")
-      .as[(Long, Long, Int, Int, Long, Int, Int)]
-      .groupByKey(t => (t._4, t._5, t._6, t._7))
-      .flatMapGroups { (key, it) =>
-        val (gi, gj) = (key._3, key._4)
-        val rows = it.map(t => ((t._1, t._2), t._3)).toArray
-        val pairs =
-          if (gi == gj) {
-            val m = rows.map(_._1).sortBy(_._1)
-            for {
-              i <- m.indices.iterator
-              j <- (i + 1) until m.length
-            } yield (m(i), m(j))
-          } else {
-            val as = rows.collect { case (r, s) if s == gi => r }
-            val bs = rows.collect { case (r, s) if s == gj => r }
-            for {
-              a <- as.iterator
-              b <- bs.iterator
-            } yield if (a._1 < b._1) (a, b) else (b, a)
-          }
-        pairs.flatMap { case ((ida, sha), (idb, shb)) =>
-          val h = java.lang.Long.bitCount(sha ^ shb)
-          if (h <= maxDist) Iterator.single((ida, idb, h)) else Iterator.empty
-        }
-      }
-      .toDF("id_a", "id_b", "hamming")
-      .distinct()
+    blockPairs[(Long, Long), (Long, Long, Int)](keyed,
+        struct(col("id").as("_1"), col("sh").as("_2")), _._1, cap, maxSalt) { (a, b) =>
+      val h = java.lang.Long.bitCount(a._2 ^ b._2)
+      if (h <= maxDist) Some((a._1, b._1, h)) else None
+    }.toDF("id_a", "id_b", "hamming").distinct()
   }
 
   // ---------------------------------------------------------------------
   // n-gram Jaccard (character level)
   // ---------------------------------------------------------------------
 
-  /** Sorted-array intersection count (merge scan) — shared by the
-    * pair-generation kernels below. */
-  /** Merge-scan intersect with an unreachability bail-out: returns −1
-    * as soon as `c + min(remaining)` can no longer reach `need`. For
-    * dissimilar pairs (the overwhelming majority in a block) the scan
-    * stops after ~(1 − need/min(|a|,|b|)) of the shorter side instead
-    * of exhausting both — same result as [[intersectCount]] whenever
-    * the pair qualifies. */
+  /** Merge-scan intersection count of two sorted arrays, with an
+    * unreachability bail-out: returns −1 as soon as `c + min(remaining)`
+    * can no longer reach `need`. For dissimilar pairs (the overwhelming
+    * majority in a block) the scan stops after ~(1 − need/min(|a|,|b|))
+    * of the shorter side instead of exhausting both; `need` = 0 is the
+    * plain count. */
   private def intersectCountAtLeast(a: Array[Long], b: Array[Long],
       need: Int): Int = {
     var i = 0; var j = 0; var c = 0
@@ -463,102 +438,75 @@ object Dedup {
     if (c >= need) c else -1
   }
 
-  private def intersectCount(a: Array[Long], b: Array[Long]): Int = {
-    var i = 0; var j = 0; var c = 0
-    while (i < a.length && j < b.length) {
-      val x = a(i); val y = b(j)
-      if (x == y) { c += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
-    }
-    c
+  /** Exact Jaccard of two sorted distinct gram-hash arrays. */
+  private def gramJaccard(a: Array[Long], b: Array[Long]): Double = {
+    val common = intersectCountAtLeast(a, b, 0).toDouble
+    common / (a.length + b.length - common)
   }
 
-  /** Exact char-n-gram Jaccard for candidate pairs blocked on
-    * (source, length bucket) — blocking bounds the pair count so the
-    * work never goes quadratic in the corpus.
-    *
-    * Pair generation is BLOCK-LOCAL: one shuffle groups each block's
-    * (id, grams) rows, then pairs are enumerated and merge-scan
-    * verified inside the group, emitting only survivors. Compared to
-    * the former self-join this shuffles the gram arrays once (not both
-    * join sides) and never materializes sub-threshold pair rows.
+  /** The blocked-gram builder (the filter of [[ngramJaccardPairs]],
+    * [[containmentPairs]] and [[kmvCalibrationPairs]]): one shuffle
+    * groups each block's (id, `payload` of the normalized text) rows,
+    * and each in-block pair, smaller id first, goes once through `keep`
+    * inside the group — gram arrays shuffle once, never as pair rows,
+    * and sub-threshold pairs never materialize. The block key is the
+    * array of `blockCols` (as strings) itself, so two blocks never merge.
     * Blocks must fit one task's memory — that bound is the blocking
-    * key's design contract (same as the join formulation's skew bound). */
-  def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-      blockCols: Seq[Column], n: Int = 3, threshold: Double = 0.4): DataFrame = {
+    * key's design contract. */
+  private def gramPairs[P: TypeTag, O <: Product : TypeTag](df: DataFrame,
+      idCol: String, textCol: String, blockCols: Seq[Column],
+      payload: Column => Column)(keep: ((Long, P), (Long, P)) => Option[O]): Dataset[O] = {
     val spark = df.sparkSession
     import spark.implicits._
-    // grams as SORTED DISTINCT hashed longs in one compiled pass: 8-byte
-    // elements + sort-once so the per-pair intersection is a merge scan
-    val grams = Kernels.charGramHashes(col("nt"), n)
-    val prepared = df
-      .select(Seq(col(idCol).cast("long").as("id"), normText(col(textCol)).as("nt")) ++
-        blockCols.zipWithIndex.map { case (c, i) => c.cast("string").as(s"blk$i") }: _*)
-      .withColumn("grams", grams)
-      .select(concat_ws("\u0001", blockCols.indices.map(i => col(s"blk$i")): _*).as("bk"),
-        col("id"), col("grams"))
-      .as[(String, Long, Array[Long])]
-    prepared.groupByKey(_._1)
+    df.select(array(blockCols.map(_.cast("string")): _*).as("bk"),
+        col(idCol).cast("long").as("id"), normText(col(textCol)).as("nt"))
+      .select(col("bk"), col("id"), payload(col("nt")))
+      .as[(Seq[String], Long, P)]
+      .groupByKey(_._1)
       .flatMapGroups { (_, it) =>
-        val rows = it.map(t => (t._2, t._3)).toArray.sortBy(_._1)
+        val rows = it.map(t => (t._2, t._3)).toIndexedSeq.sortBy(_._1)
         for {
           i <- rows.indices.iterator
           j <- (i + 1) until rows.length
-          common = intersectCount(rows(i)._2, rows(j)._2).toDouble
-          jac = common / (rows(i)._2.length + rows(j)._2.length - common)
-          if jac >= threshold
-        } yield (rows(i)._1, rows(j)._1, jac)
+          o <- keep(rows(i), rows(j))
+        } yield o
       }
-      .toDF("id_a", "id_b", "jaccard")
   }
+
+  /** Exact char-n-gram Jaccard for candidate pairs blocked on
+    * `blockCols` (d4: source, length bucket) — blocking bounds the pair
+    * count so the work never goes quadratic in the corpus. Grams are
+    * SORTED DISTINCT hashed longs from one compiled pass, so each pair
+    * verifies in one merge scan inside its block ([[gramPairs]]). */
+  def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
+      blockCols: Seq[Column], n: Int = 3, threshold: Double = 0.4): DataFrame =
+    gramPairs[Array[Long], (Long, Long, Double)](df, idCol, textCol, blockCols,
+        Kernels.charGramHashes(_, n)) { case ((ia, a), (ib, b)) =>
+      Some((ia, ib, gramJaccard(a, b))).filter(_._3 >= threshold)
+    }.toDF("id_a", "id_b", "jaccard")
 
   /** Asymmetric containment pairs: C(A→B) = |grams(A) ∩ grams(B)| /
     * |grams(A)| ≥ threshold — the quote / truncation / boilerplate-
     * expansion detector. A prefix-truncated copy has Jaccard ≈ 0.5
     * against its original (invisible to [[ngramJaccardPairs]] at 0.6)
-    * but containment 1.0. Same block-local sorted merge-scan shape as
-    * d4; each qualifying pair is emitted once, contained side explicit
-    * (ties — e.g. exact dups — resolve to the smaller id as contained).
-    */
+    * but containment 1.0. Same blocked-gram shape as d4; each
+    * qualifying pair is emitted once, contained side explicit (ties —
+    * e.g. exact dups — resolve to the smaller id as contained). */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
       blockCols: Seq[Column], n: Int = 3,
-      threshold: Double = 0.8): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val grams = Kernels.charGramHashes(col("nt"), n)
-    val prepared = df
-      .select(Seq(col(idCol).cast("long").as("id"),
-        normText(col(textCol)).as("nt")) ++
-        blockCols.zipWithIndex.map { case (c, i) => c.cast("string").as(s"blk$i") }: _*)
-      .withColumn("grams", grams)
-      .select(concat_ws("", blockCols.indices.map(i => col(s"blk$i")): _*).as("bk"),
-        col("id"), col("grams"))
-      .as[(String, Long, Array[Long])]
-    prepared.groupByKey(_._1)
-      .flatMapGroups { (_, it) =>
-        val rows = it.map(t => (t._2, t._3)).toArray.sortBy(_._1)
-        for {
-          i <- rows.indices.iterator
-          j <- (i + 1) until rows.length
-          if rows(i)._2.nonEmpty && rows(j)._2.nonEmpty
-          // qualification needs common ≥ ⌈th·min(|A|,|B|)⌉ — scan with
-          // that bound so dissimilar pairs bail early
-          need = math.ceil(threshold *
-            math.min(rows(i)._2.length, rows(j)._2.length)).toInt
-          common0 = intersectCountAtLeast(rows(i)._2, rows(j)._2,
-            math.max(need, 1))
-          if common0 >= 0
-          common = common0.toDouble
-          cij = common / rows(i)._2.length
-          cji = common / rows(j)._2.length
-          if math.max(cij, cji) >= threshold
-        } yield
-          if (cij >= cji) (rows(i)._1, rows(j)._1, cij)
-          else (rows(j)._1, rows(i)._1, cji)
-      }
-      .toDF("contained_id", "container_id", "containment")
-  }
+      threshold: Double = 0.8): DataFrame =
+    gramPairs[Array[Long], (Long, Long, Double)](df, idCol, textCol, blockCols,
+        Kernels.charGramHashes(_, n)) { case ((ia, a), (ib, b)) =>
+      // qualification needs common ≥ ⌈th·min(|A|,|B|)⌉ — scan with
+      // that bound so dissimilar pairs bail early
+      val need = math.ceil(threshold * math.min(a.length, b.length)).toInt
+      val common =
+        if (a.isEmpty || b.isEmpty) -1 else intersectCountAtLeast(a, b, math.max(need, 1))
+      val cab = common.toDouble / a.length
+      val cba = common.toDouble / b.length
+      if (common < 0 || math.max(cab, cba) < threshold) None
+      else Some(if (cab >= cba) (ia, ib, cab) else (ib, ia, cba))
+    }.toDF("contained_id", "container_id", "containment")
 
   /** KMV (bottom-k) Jaccard estimate vs EXACT Jaccard per candidate
     * pair — the sketch-calibration harness for the dedup family, e7's
@@ -566,45 +514,24 @@ object Dedup {
     * (O(doc length) per doc, the d4 verify cost) can be swapped for
     * constant-size KMV sketches — k longs per doc, pairs compare in
     * O(k) — and this operator measures exactly what that swap costs on
-    * real pairs. Same block-local pair shape as [[ngramJaccardPairs]]
-    * (gram arrays shuffle once, never pair rows); per emitted pair:
-    * exact = merge-scan Jaccard over full gram-hash arrays, estimate =
-    * |bottom-k(A∪B) ∩ A_k ∩ B_k| / |bottom-k(A∪B)| (Beyer et al.,
-    * SIGMOD 2007) from the two sketches alone (bottom-k of a union is
-    * computable from the merged bottom-ks — the sketch is mergeable).
-    * md5-prefix hashes ([[graft.expressions.ShingleMinMd5.charGramKmv]])
-    * so every sketch value — hence the estimate — replays in the oracle;
-    * both ratios are raw IEEE divisions, no rounding anywhere. */
+    * real pairs. Same blocked-gram shape as [[ngramJaccardPairs]]; per
+    * emitted pair: exact = merge-scan Jaccard over full gram-hash
+    * arrays, estimate = |bottom-k(A∪B) ∩ A_k ∩ B_k| / |bottom-k(A∪B)|
+    * (Beyer et al., SIGMOD 2007) from the two sketches alone (bottom-k
+    * of a union is computable from the merged bottom-ks — the sketch is
+    * mergeable). md5-prefix hashes
+    * ([[graft.expressions.ShingleMinMd5.charGramKmv]]) so every sketch
+    * value — hence the estimate — replays in the oracle; both ratios
+    * are raw IEEE divisions, no rounding anywhere. */
   def kmvCalibrationPairs(df: DataFrame, idCol: String, textCol: String,
       blockCols: Seq[Column], n: Int = 3, k: Int = 64,
-      threshold: Double = 0.2): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val grams = Kernels.charGramHashes(col("nt"), n)
-    val kmv = Kernels.charGramKmv(col("nt"), n, k)
-    val prepared = df
-      .select(Seq(col(idCol).cast("long").as("id"),
-        normText(col(textCol)).as("nt")) ++
-        blockCols.zipWithIndex.map { case (c, i) => c.cast("string").as(s"blk$i") }: _*)
-      .withColumn("grams", grams)
-      .withColumn("kv", kmv)
-      .select(concat_ws("", blockCols.indices.map(i => col(s"blk$i")): _*).as("bk"),
-        col("id"), col("grams"), col("kv"))
-      .as[(String, Long, Array[Long], Array[Long])]
-    prepared.groupByKey(_._1)
-      .flatMapGroups { (_, it) =>
-        val rows = it.map(t => (t._2, t._3, t._4)).toArray.sortBy(_._1)
-        for {
-          i <- rows.indices.iterator
-          j <- (i + 1) until rows.length
-          common = intersectCount(rows(i)._2, rows(j)._2).toDouble
-          jac = common / (rows(i)._2.length + rows(j)._2.length - common)
-          if jac >= threshold
-        } yield (rows(i)._1, rows(j)._1, jac,
-          kmvJaccard(rows(i)._3, rows(j)._3, k))
-      }
-      .toDF("id_a", "id_b", "j_exact", "j_kmv")
-  }
+      threshold: Double = 0.2): DataFrame =
+    gramPairs[(Array[Long], Array[Long]), (Long, Long, Double, Double)](df, idCol,
+        textCol, blockCols, nt => struct(Kernels.charGramHashes(nt, n).as("_1"),
+          Kernels.charGramKmv(nt, n, k).as("_2"))) { case ((ia, (ga, ka)), (ib, (gb, kb))) =>
+      val jac = gramJaccard(ga, gb)
+      if (jac >= threshold) Some((ia, ib, jac, kmvJaccard(ka, kb, k))) else None
+    }.toDF("id_a", "id_b", "j_exact", "j_kmv")
 
   /** KMV Jaccard estimate from two sorted bottom-k sketches: one merge
     * walk of the union ascending, stopping after k distinct values —
@@ -665,10 +592,8 @@ object Dedup {
         .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
         .distinct()
       val side = withB.select(col("id"), col("v"), col("nv"))
-      cand
-        .join(side.toDF("id_a", "va", "nva"), "id_a")
-        .join(side.toDF("id_b", "vb", "nvb"), "id_b")
-        .select(col("id_a"), col("id_b"), Similarity.cosOf("va", "vb", "nva", "nvb").as("cos"))
+      joinBack(cand, side, side)
+        .select(col("id_a"), col("id_b"), Similarity.cosOf("v_a", "v_b", "nv_a", "nv_b").as("cos"))
         .filter(col("cos") >= threshold)
     }
   }
@@ -739,11 +664,8 @@ object Dedup {
       // pointer jump: a label is itself a vertex id, so one self-join
       // replaces lbl with lbl's own label, halving chain lengths
       val jump = stepped.select(col("id").as("jid"), col("mid").as("jlbl"))
-      // LAZY local checkpoint + one count: the convergence probe both
-      // materializes the round's labels (lineage truncated exactly as
-      // before) and answers "did anything change" — the eager-
-      // checkpoint-then-isEmpty form paid two jobs per round for the
-      // same information
+      // LAZY local checkpoint + one count: one job both materializes
+      // the round's labels and answers "did anything change"
       val (next, changed) = st.settleWith(
         stepped.join(jump, col("mid") === col("jid"), "left")
           .select(col("id"), col("old"),
@@ -772,23 +694,9 @@ object Dedup {
   }
 
   // ---------------------------------------------------------------------
-  // Benchmark decontamination
+  // Duplicated spans
   // ---------------------------------------------------------------------
 
-  /** Benchmark decontamination: flag corpus documents sharing any
-    * word `w`-gram with an evaluation set — the published long-n-gram
-    * overlap rule (GPT-3 appendix C / Dolma use 13-grams) that keeps
-    * eval answers out of training data.
-    *
-    * Returns the corpus id column plus `n_hits` (distinct eval w-grams
-    * present in the doc) and `contaminated`.
-    *
-    * Scale shape: the eval side is small by nature (benchmarks are
-    * MBs; the corpus is the 100 TB side), so its distinct w-gram hash
-    * set builds in one aggregate and BROADCASTS; the corpus explodes
-    * its w-grams map-side, hash-joins the broadcast set with no corpus
-    * shuffle of text, and re-aggregates per doc on the id — w-gram
-    * hashes (8 B) move, never text. */
   /** Corpus-INTERNAL duplicated-span statistics: for each document, how
     * many of its distinct word `w`-grams also occur in at least one
     * OTHER document (the fixed-length-gram simplification of exact
@@ -820,19 +728,10 @@ object Dedup {
     * (shingleHashes' documented fallback). */
   def dupSpans(corpus: DataFrame, idCol: String, textCol: String,
       w: Int = 13): DataFrame = Settle.scope("dupSpans") { st =>
-    // PERSISTED (r13): the gram table feeds the df>1 aggregate and the
-    // shared-count join — the compiled shingle kernel ran twice (the
-    // scaladoc's old "recompute is cheaper" claim lost its A/B probe:
-    // the hash explode is the dominant map cost, the cached rows are
-    // ~16 B)
-    // explode_OUTER (r14): a NULL text yields a null shingle array, and
-    // a plain explode dropped that document from the output entirely —
-    // where the pre-r13 size(shingleHashes(...)) projection kept the
-    // row with a null count. The outer explode keeps one (id, null)
-    // row; null grams never equi-join (so they can't be "shared") and
-    // count(g) skips them, so nullif(·, 0) below restores exactly the
-    // old (id, null n_grams, 0, null frac) row. Pinned by DedupSpec's
-    // null-text case.
+    // explode_OUTER: a NULL text keeps one (id, null) row — null grams
+    // never equi-join (so they can't be "shared") and count(g) skips
+    // them, so nullif(·, 0) below gives it (id, null, 0, null), pinned
+    // by DedupSpec's null-text case
     val grams = st.cache(corpus.select(col(idCol).as("id"),
       explode_outer(shingleHashes(col(textCol), w)).as("g")))
     val dupGrams = grams.groupBy("g")
@@ -841,13 +740,10 @@ object Dedup {
       .select("g")
     val shared = grams.join(dupGrams, Seq("g"))
       .groupBy("id").agg(count(lit(1)).as("n_shared"))
-    // n_grams = per-doc non-null gram count of the SAME persisted gram
-    // table (shingleHashes is non-empty for every non-null doc — the
-    // short-doc fallback emits one partial gram; count(g) = 0 happens
-    // ONLY for a null text, which nullif maps back to the old null),
-    // so the third shingle pass the old size(shingleHashes(...))
-    // projection paid is gone
-    // per-doc narrow result settles eagerly: the gram cache goes on return
+    // n_grams counts the same cached gram table (shingleHashes is
+    // non-empty for every non-null doc, so count(g) = 0 only for a null
+    // text); the per-doc narrow result settles eagerly, so the gram
+    // cache goes on return
     st.settle(grams.groupBy("id")
       .agg(nullif(count(col("g")), lit(0L)).as("n_grams"))
       .join(shared, Seq("id"), "left")
@@ -895,10 +791,8 @@ object Dedup {
     * gate mismatch rather than hide). */
   def exactSubstringSpans(corpus: DataFrame, idCol: String,
       textCol: String, minLen: Int = 13): DataFrame = Settle.scope("exactSubstringSpans") { st =>
-    // PERSISTED: both sides of the self-join scan the same positional
-    // index — unpersisted, the tokenize + per-window concat/xxhash
-    // kernel (the operator's dominant map cost) ran twice (r13 probe;
-    // ~20 B/row cached vs re-hashing every window)
+    // PERSISTED: both self-join sides scan the positional index; the
+    // tokenize + per-window hash is the operator's dominant map cost
     val grams = st.cache(positionalGrams(corpus, idCol, textCol, minLen))
     val lhs = grams.select(col("gh"), col("id").as("id_a"),
       col("pos").as("pos_a"))
@@ -968,15 +862,11 @@ object Dedup {
         size(split(col("nt"), " ")).cast("long").as("n_toks")))
     val sz = reps.select(col("id"), col("gsz"))
     // the d20 diagonal scan, representatives only (normText is
-    // idempotent, so re-normalizing nt inside is a no-op). The span
-    // report arrives SETTLED (exactSubstringSpans checkpoints its
-    // output), so both the cross-group and within-group branches read
-    // the materialized report — the former extra persist is redundant
+    // idempotent, so re-normalizing nt inside is a no-op); the report
+    // arrives settled, so both branches below read it materialized
     val repSpans = exactSubstringSpans(reps, "id", "nt", minLen)
     val half = expr("gsz * (gsz - 1) DIV 2")
-    val cross = repSpans.filter(col("id_a") =!= col("id_b"))
-      .join(sz.toDF("id_a", "gsz_a"), "id_a")
-      .join(sz.toDF("id_b", "gsz_b"), "id_b")
+    val cross = joinBack(repSpans.filter(col("id_a") =!= col("id_b")), sz, sz)
       .select(col("id_a"), col("id_b"), col("start_a"), col("start_b"),
         col("span_tokens"), (col("gsz_a") * col("gsz_b")).as("n_pairs"))
     val within = st.cache(repSpans.filter(col("id_a") === col("id_b"))
@@ -992,7 +882,7 @@ object Dedup {
       .select(col("id").as("id_a"), col("id").as("id_b"),
         lit(0L).as("start_a"), lit(0L).as("start_b"),
         col("n_toks").as("span_tokens"),
-        expr("gsz * (gsz - 1) DIV 2").as("n_pairs"))
+        half.as("n_pairs"))
     // grouped report settles eagerly (it is the output) so the rep
     // and within caches go on return
     st.settle(cross.unionByName(withinRows).unionByName(mirrorRows)
@@ -1075,9 +965,9 @@ object Dedup {
   def removeDuplicateSpans(corpus: DataFrame, idCol: String,
       textCol: String, minLen: Int = 13): DataFrame = {
     val spans = exactSubstringSpans(corpus, idCol, textCol, minLen)
-    rewriteCutIntervals(corpus, idCol, textCol,
+    applyCuts(corpus, idCol, textCol, mergedIntervals(
       spans.select(col("id_b").as("id"), col("start_b").as("ss"),
-        (col("start_b") + col("span_tokens")).as("ee"), lit(1L).as("n")))
+        (col("start_b") + col("span_tokens")).as("ee"), lit(1L).as("n"))))
   }
 
   /** d23: [[removeDuplicateSpans]] WITHOUT the pair enumeration — the
@@ -1110,8 +1000,7 @@ object Dedup {
   def removeDuplicateSpansOwned(corpus: DataFrame, idCol: String,
       textCol: String, minLen: Int = 13): DataFrame = Settle.scope("removeDuplicateSpansOwned") { st =>
     // PERSISTED: the index feeds the ownership aggregate AND the
-    // probe join back — unpersisted, every window re-tokenized and
-    // re-hashed twice (the exactSubstringSpans measurement)
+    // probe join back
     val grams = st.cache(positionalGrams(corpus, idCol, textCol, minLen))
     // gram ownership: the lexicographic-min (id, pos) occurrence; df=1
     // grams drop before the join (their only occurrence is the owner)
@@ -1132,23 +1021,19 @@ object Dedup {
     applyCuts(corpus, idCol, textCol, ivs)
   }
 
-  /** Shared rewrite tail of [[removeDuplicateSpans]] and
-    * [[removeDuplicateSpansOwned]]: per-doc cut intervals union through
-    * q63's associative [[Intervals.merge]], then one in-row array
-    * filter keeps the uncovered tokens in order. `cuts` needs columns
-    * (id, ss, ee, n). */
-  private def rewriteCutIntervals(corpus: DataFrame, idCol: String,
-      textCol: String, cuts: DataFrame): DataFrame =
-    applyCuts(corpus, idCol, textCol, mergedIntervals(cuts))
-
-  /** Per-doc merged cut-interval arrays (id, ivs) from a cut list. */
+  /** Per-doc merged cut-interval arrays (id, ivs) from a cut list
+    * (id, ss, ee, n) — the cut intervals union through q63's
+    * associative [[Intervals.merge]]; the rewrite tail of
+    * [[removeDuplicateSpans]] and [[removeDuplicateSpansOwned]] with
+    * [[applyCuts]]. */
   private def mergedIntervals(cuts: DataFrame): DataFrame =
     graft.operators.Intervals.merge(cuts, keyCol = "id")
       .groupBy("id")
       .agg(collect_list(struct(col("m_start").as("s"), col("m_end").as("e")))
         .as("ivs"))
 
-  /** The in-row rewrite over a (id, ivs) interval table. */
+  /** The in-row rewrite over a (id, ivs) interval table: one array
+    * filter keeps the uncovered tokens in order. */
   private def applyCuts(corpus: DataFrame, idCol: String,
       textCol: String, ivs: DataFrame): DataFrame = {
     corpus
@@ -1250,52 +1135,53 @@ object Dedup {
     * bounded, never pair enumeration); candidate id pairs are
     * distinct'd BEFORE the one levenshtein verify per pair (which
     * removes the false positives where different deletions collide at
-    * distance 2); hot variant blocks split through [[saltBuckets]]
-    * (minhashPairs' device) so a mass-identical string set never lands
-    * its quadratic pair enumeration on one task. */
+    * distance 2); hot variant blocks split through [[blockPairs]]'
+    * salting, so a mass-identical string set never lands its quadratic
+    * pair enumeration on one task. */
   def editDistancePairs(df: DataFrame, idCol: String,
-      strCol: String,
-      capBucket: Int = 4096, maxSalt: Int = 64): DataFrame = {
+      strCol: String): DataFrame =
+    editDistancePairs(df, idCol, strCol, CapBucket, MaxSalt)
+
+  /** [[editDistancePairs]] under explicit salting bounds (DedupSkewSpec's
+    * hook, as for [[minhashPairs]]). */
+  private[graft] def editDistancePairs(df: DataFrame, idCol: String,
+      strCol: String, cap: Int, maxSalt: Int): DataFrame = {
     val variants = expr(
       s"""array_union(
          |  array($strCol),
          |  transform(sequence(1, length($strCol)), i ->
          |    concat(substring($strCol, 1, i - 1),
          |      substring($strCol, i + 1, length($strCol)))))""".stripMargin)
-    // Block-local candidate generation through the SAME salted-bucket
-    // device as minhashPairs: a mass-identical string set (10k equal
-    // names → one variant bucket of 10k ids → 50M pairs on ONE task
-    // under the former self-join) now splits into bounded sub-group
-    // tasks. The bucket key is xxhash64(vk) — a collision can only ADD
-    // a candidate, which the levenshtein verify rejects, so recall is
+    // The bucket key is xxhash64(vk) — a collision can only ADD a
+    // candidate, which the levenshtein verify rejects, so recall is
     // untouched (the pigeonhole completeness argument lives on the
     // variant construction, not the key representation).
     val keyed = df.select(col(idCol).cast("long").as("id"),
         explode(variants).as("vk"))
       .select(col("id"), lit(0).as("band"), xxhash64(col("vk")).as("key"))
-    val spark = df.sparkSession
-    import spark.implicits._
-    val cand = saltBuckets(keyed, capBucket, maxSalt)
-      .select("id", "sub", "band", "key", "gi", "gj")
-      .as[(Long, Int, Int, Long, Int, Int)]
-      .groupByKey(t => (t._3, t._4, t._5, t._6))
-      .flatMapGroups { (key, it) =>
-        groupPairs(it.map(t => (t._1, t._2)).toArray, key._3, key._4)
-      }
-      .toDF("id_a", "id_b")
-      .distinct()
-    val names = df.select(col(idCol).cast("long").as("id"),
-      col(strCol).as("name"))
-    cand
-      .join(names.withColumnRenamed("id", "id_a")
-        .withColumnRenamed("name", "name_a"), "id_a")
-      .join(names.withColumnRenamed("id", "id_b")
-        .withColumnRenamed("name", "name_b"), "id_b")
+    val cand = blockPairs[Long, (Long, Long)](keyed, col("id"), identity,
+      cap, maxSalt)((a, b) => Some((a, b))).toDF("id_a", "id_b").distinct()
+    val names = df.select(col(idCol).cast("long").as("id"), col(strCol).as("name"))
+    joinBack(cand, names, names)
       .withColumn("dist", levenshtein(col("name_a"), col("name_b")))
       .filter(col("dist") <= 1)
       .select(col("id_a"), col("id_b"), col("dist").cast("long").as("dist"))
   }
 
+  /** Benchmark decontamination: flag corpus documents sharing any
+    * word `w`-gram with an evaluation set — the published long-n-gram
+    * overlap rule (GPT-3 appendix C / Dolma use 13-grams) that keeps
+    * eval answers out of training data.
+    *
+    * Returns the corpus id column plus `n_hits` (distinct eval w-grams
+    * present in the doc) and `contaminated`.
+    *
+    * Scale shape: the eval side is small by nature (benchmarks are
+    * MBs; the corpus is the 100 TB side), so its distinct w-gram hash
+    * set builds in one aggregate and BROADCASTS; the corpus explodes
+    * its w-grams map-side, hash-joins the broadcast set with no corpus
+    * shuffle of text, and re-aggregates per doc on the id — w-gram
+    * hashes (8 B) move, never text. */
   def decontaminate(corpus: DataFrame, evalDocs: DataFrame,
       idCol: String, textCol: String, w: Int = 13): DataFrame = {
     val evalGrams = evalDocs
@@ -1308,6 +1194,13 @@ object Dedup {
       .join(hits, Seq("id"), "left")
       .select(col("id"), coalesce(col("n_hits"), lit(0L)).as("n_hits"),
         (coalesce(col("n_hits"), lit(0L)) > 0).as("contaminated"))
+  }
+
+  /** (doc_id, chunk digest) rows via the fused kernel — the shared
+    * front half of [[cdcChunkStats]] and the S25 streaming dedup. */
+  def cdcChunks(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val digests = Kernels.cdcChunkDigests(normText(col(textCol)))
+    df.select(col(idCol).as("doc_id"), explode(digests).as("digest"))
   }
 
   /** Content-defined chunking (CDC) dedup statistics — the rsync/
@@ -1328,13 +1221,6 @@ object Dedup {
     * chunk-count output — measured 6× over the per-position-explode
     * spelling, which survives only as the oracle's independent
     * replay). */
-  /** (doc_id, chunk digest) rows via the fused kernel — the shared
-    * front half of [[cdcChunkStats]] and the S25 streaming dedup. */
-  def cdcChunks(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val digests = Kernels.cdcChunkDigests(normText(col(textCol)))
-    df.select(col(idCol).as("doc_id"), explode(digests).as("digest"))
-  }
-
   def cdcChunkStats(df: DataFrame, idCol: String,
       textCol: String): DataFrame = {
     val chunks = cdcChunks(df, idCol, textCol)
@@ -1348,38 +1234,6 @@ object Dedup {
         round(col("n_shared") / col("n_chunks"), 6).as("shared_frac"))
   }
 
-  /** Bloom-filter incremental-dedup audit — the MEMORY-BOUNDED answer
-    * to [[incrementalDedup]]'s growing digest index, with exact
-    * false-positive accounting: replay the corpus in id order through
-    * an `mBits`-bit Bloom filter (`kHash` md5-derived positions per
-    * normalized-text digest), flag each doc whose bits were ALL set by
-    * strictly-earlier docs, and score the flags against exact-dedup
-    * ground truth. At 100 TB the exact digest index is itself a
-    * multi-TB table; a Bloom filter is the fixed-budget alternative —
-    * this operator is the sizing audit a pipeline runs BEFORE trusting
-    * one (per-source false-positive rates = docs a bloom-gated dedup
-    * would WRONGLY drop, plus the global fill fraction and the
-    * (fill)^k predicted FPR to compare against the observed rate).
-    *
-    * Sequential-filter semantics WITHOUT a sequential pass: a bit's
-    * state before doc d is "min id over docs touching it < d" — an
-    * order-free min-aggregate identity (exact because a doc's own
-    * insert cannot flag itself: min == d means d set the bit first).
-    * Exact dups share the digest, hence the positions, so insert-all
-    * equals insert-if-new and false NEGATIVES are structurally
-    * impossible (the spec pins flagged ⊇ true-dup).
-    *
-    * Exactness: verdicts and counts are pure integer/boolean logic on
-    * md5 values both engines compute identically; the three terminal
-    * doubles derive through pinned int64→double casts and a fixed
-    * left-assoc IEEE op order (the x38 device).
-    *
-    * Scale shape: only (id, pos) pairs — 16 B rows, k per doc —
-    * shuffle (text never); one groupBy(pos) min with map-side
-    * partials, one key-partitioned join back, one groupBy(id) max, a
-    * digest min-aggregate for ground truth, a source-cardinality
-    * summary, and the single bits_set scalar riding a broadcast 1-row
-    * cross. */
   /** The k md5-derived bit positions of a digest column — shared by
     * the batch audit and the S28 streaming filter so both address the
     * SAME bit array. */
@@ -1419,6 +1273,38 @@ object Dedup {
       srcCol: String, mBits: Int, kHash: Int): DataFrame =
     bloomCore(corpus, idCol, textCol, srcCol, mBits, kHash)._1
 
+  /** Bloom-filter incremental-dedup audit — the MEMORY-BOUNDED answer
+    * to [[incrementalDedup]]'s growing digest index, with exact
+    * false-positive accounting: replay the corpus in id order through
+    * an `mBits`-bit Bloom filter (`kHash` md5-derived positions per
+    * normalized-text digest), flag each doc whose bits were ALL set by
+    * strictly-earlier docs, and score the flags against exact-dedup
+    * ground truth. At 100 TB the exact digest index is itself a
+    * multi-TB table; a Bloom filter is the fixed-budget alternative —
+    * this operator is the sizing audit a pipeline runs BEFORE trusting
+    * one (per-source false-positive rates = docs a bloom-gated dedup
+    * would WRONGLY drop, plus the global fill fraction and the
+    * (fill)^k predicted FPR to compare against the observed rate).
+    *
+    * Sequential-filter semantics WITHOUT a sequential pass: a bit's
+    * state before doc d is "min id over docs touching it < d" — an
+    * order-free min-aggregate identity (exact because a doc's own
+    * insert cannot flag itself: min == d means d set the bit first).
+    * Exact dups share the digest, hence the positions, so insert-all
+    * equals insert-if-new and false NEGATIVES are structurally
+    * impossible (the spec pins flagged ⊇ true-dup).
+    *
+    * Exactness: verdicts and counts are pure integer/boolean logic on
+    * md5 values both engines compute identically; the three terminal
+    * doubles derive through pinned int64→double casts and a fixed
+    * left-assoc IEEE op order (the x38 device).
+    *
+    * Scale shape: only (id, pos) pairs — 16 B rows, k per doc —
+    * shuffle (text never); one groupBy(pos) min with map-side
+    * partials, one key-partitioned join back, one groupBy(id) max, a
+    * digest min-aggregate for ground truth, a source-cardinality
+    * summary, and the single bits_set scalar riding a broadcast 1-row
+    * cross. */
   def bloomDedupAudit(corpus: DataFrame, idCol: String, textCol: String,
       srcCol: String, mBits: Int = 2048, kHash: Int = 3): DataFrame = {
     val (verdicts, setters) =

@@ -19,35 +19,11 @@ object TextAnalysis {
 
   def tokens(text: Column): Column = split(Dedup.normText(text), " ")
 
-  /** Stopword-hit score for one language profile: hits / n_tokens.
-    * Takes pre-tokenized input so one tokenization feeds all profiles. */
-  def langScoreFromToks(toks: Column, lang: String): Column =
-    size(filter(toks, t => t.isin(stopwords(lang).map(lit(_).cast("string")): _*))) /
-      greatest(size(toks), lit(1)).cast("double")
-
-  def langScore(text: Column, lang: String): Column =
-    langScoreFromToks(tokens(text), lang)
-
-  /** Heuristic language ID: CJK character ratio → zh; otherwise argmax
-    * of stopword profiles with deterministic tie-break order.
-    * Pass the SAME materialized `toks` column used elsewhere in the
-    * query to avoid re-tokenizing per profile (HOFs see no CSE). */
-  def langIdFromToks(text: Column, toks: Column): Column = {
-    val cjk = length(regexp_replace(text, "[^\\u4e00-\\u9fff]", "")) /
-      greatest(length(text), lit(1)).cast("double")
-    val scores = Seq("en", "de", "es", "fr").map(l => (l, langScoreFromToks(toks, l)))
-    val best = scores.tail.foldLeft(
-      struct(scores.head._2.as("s"), lit(scores.head._1).as("l"))) {
-      case (acc, (l, sc)) =>
-        when(sc > acc.getField("s"), struct(sc.as("s"), lit(l).as("l"))).otherwise(acc)
-    }
-    when(cjk > 0.3, "zh")
-      .when(best.getField("s") > 0.0, best.getField("l"))
-      .otherwise("und")
-  }
-
-  /** Fused one-pass language ID (graft.expressions.TextHashKernels.langId)
-    * — same arithmetic as [[langIdFromToks]], compiled. */
+  /** Heuristic language ID in one compiled pass
+    * ([[graft.expressions.Kernels.langId]]): a CJK character ratio
+    * above 0.3 → zh; otherwise the argmax over the en, de, es, fr
+    * stopword profiles of hits / n_tokens (the earliest profile wins a
+    * tie), or "und" when no profile scores. */
   def langId(text: Column): Column =
     graft.expressions.Kernels.langId(text, Dedup.normText(text))
 

@@ -3177,7 +3177,7 @@ object LlmOracle {
         |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS INTEGER) AS bpeish_tokens,
         |  CAST(length(text) AS INTEGER) AS n_chars_m
         |FROM documents ORDER BY doc_id""".stripMargin,
-    // langIdFromToks mirrored as arithmetic: the fold keeps the EARLIEST
+    // Kernels.langId mirrored as arithmetic: the fold keeps the EARLIEST
     // language attaining the max stopword score (strict > to replace),
     // hence the >= cascade in profile order en,de,es,fr.
     "x1_lang_id" ->

@@ -65,16 +65,14 @@ class CodegenGuardSpec extends AnyFunSuite {
   }
 
   test("d6's MinHash band stage: JIT-sized methods") {
-    import graft.expressions.Kernels
     import graft.operators.Dedup
     import org.apache.spark.sql.functions.{concat, lit}
     // d6's input (the documents plus a perturbed copy, unioned) under
-    // minhashPairs' sh → bands projection
+    // the MinHash index minhashPairs builds (id, sh, bands)
     val docs = Tables.t(spark, sf, "documents").select("doc_id", "text")
     val corpus = docs.union(docs.select((col("doc_id") + 1000000L).as("doc_id"),
       concat(col("text"), lit(" zz qq")).as("text")))
-    val banded = corpus.select(col("doc_id").as("id"), Dedup.shingleHashes(col("text"), 3).as("sh"))
-      .withColumn("bands", Kernels.bandKeys(Kernels.minhash(col("sh"), 64), 64, 32))
+    val banded = Dedup.leakageIndex(corpus, "doc_id", "text")
     val st = stages(plansOf(banded))
     assert(st.nonEmpty)
     st.foreach { case (tree, _, maxMethod) =>

@@ -16,24 +16,24 @@ class DedupSkewSpec extends AnyFunSuite {
   test("minhash salted pairs equal unsalted on a degenerate clique") {
     // 300 byte-identical docs: every band bucket is one 300-doc clique
     val docs = (0L until 300L).map(i => (i, cliqueText)).toDF("doc_id", "text")
-    val salted = Dedup.minhashPairs(docs, "doc_id", "text",
-        capBucket = 16, maxSalt = 8)
+    val salted = Dedup.minhashPairs(docs, "doc_id", "text", 0.5,
+        cap = 16, maxSalt = 8)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(salted.size == 300 * 299 / 2)
-    val unsalted = Dedup.minhashPairs(docs, "doc_id", "text",
-        capBucket = Int.MaxValue, maxSalt = 1)
+    val unsalted = Dedup.minhashPairs(docs, "doc_id", "text", 0.5,
+        cap = Int.MaxValue, maxSalt = 1)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(salted == unsalted)
   }
 
   test("simhash salted pairs equal unsalted on a degenerate clique") {
     val docs = (0L until 200L).map(i => (i, cliqueText)).toDF("doc_id", "text")
-    val salted = Dedup.simhashPairs(docs, "doc_id", "text",
-        capBucket = 16, maxSalt = 8)
+    val salted = Dedup.simhashPairs(docs, "doc_id", "text", 3,
+        cap = 16, maxSalt = 8)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(salted.size == 200 * 199 / 2)
-    val unsalted = Dedup.simhashPairs(docs, "doc_id", "text",
-        capBucket = Int.MaxValue, maxSalt = 1)
+    val unsalted = Dedup.simhashPairs(docs, "doc_id", "text", 3,
+        cap = Int.MaxValue, maxSalt = 1)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(salted == unsalted)
   }
@@ -59,10 +59,10 @@ class DedupSkewSpec extends AnyFunSuite {
         (202L, "supplier#0000000421"), (203L, "zupplier#000000042")))
       .toDF("id", "nm")
     val salted = Dedup.editDistancePairs(docs, "id", "nm",
-        capBucket = 16, maxSalt = 8)
+        cap = 16, maxSalt = 8)
       .select("id_a", "id_b", "dist").as[(Long, Long, Long)].collect().toSet
     val unsalted = Dedup.editDistancePairs(docs, "id", "nm",
-        capBucket = Int.MaxValue, maxSalt = 1)
+        cap = Int.MaxValue, maxSalt = 1)
       .select("id_a", "id_b", "dist").as[(Long, Long, Long)].collect().toSet
     assert(salted == unsalted)
     // the clique: C(150,2) dist-0 pairs, plus each variant pairs with

@@ -82,6 +82,17 @@ class QueriesSmokeSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
+  test("Dedup spells each filter-and-verify step once") {
+    // the shingle-Jaccard verify, the band-row explode and the MinHash
+    // index each have one definition every operator calls
+    val path = java.nio.file.Path.of("src/main/scala/graft/operators/Dedup.scala")
+    val src = new String(java.nio.file.Files.readAllBytes(path), "UTF-8")
+    Seq("sortedIntersectCount(", "posexplode(col(\"bands\"))", "Kernels.bandKeys(")
+      .foreach { s =>
+        val n = java.util.regex.Pattern.quote(s).r.findAllMatchIn(src).size
+        assert(n == 1, s"Dedup.scala spells $s $n times")
+      }
+  }
 }
 
 /** Sketch estimates must track exact distinct counts closely. */

@@ -41,8 +41,7 @@ class LeakageSplitSpec extends AnyFunSuite {
         rs.map(_._1).sortBy(id => (md5hex(id.toString), id))
           .take(allocated(st).toInt).toSeq
     }.toSet
-    val pairs = operators.Dedup.minhashPairs(corpus, "doc_id", "text",
-        w = 3, h = 64, bands = 32, threshold = 0.5)
+    val pairs = operators.Dedup.minhashPairs(corpus, "doc_id", "text", threshold = 0.5)
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val quarantined = pairs.flatMap { case (a, b) =>

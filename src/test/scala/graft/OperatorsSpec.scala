@@ -100,6 +100,24 @@ class DedupSpec extends AnyFunSuite {
     assert(lsh == exact)
   }
 
+  test("blocked-gram pairs stay inside a block whose parts concatenate alike") {
+    // a key joined from the parts skips null parts and cannot tell a
+    // separator inside a part from one between parts: ("x", null) and
+    // (null, "x") are different blocks, and so are ("a\u0001b", "c")
+    // and ("a", "b\u0001c"); the same two texts in one block pair up
+    val text = "the same words in both rows of this small block test"
+    def rows(b1: (String, String), b2: (String, String)) =
+      Seq((1L, text, b1._1, b1._2), (2L, text, b2._1, b2._2)).toDF("doc_id", "text", "s", "p")
+    val blocks = Seq(col("s"), col("p"))
+    Seq(rows(("x", null), (null, "x")) -> 0L,
+      rows(("a\u0001b", "c"), ("a", "b\u0001c")) -> 0L,
+      rows(("ab", "c"), ("ab", "c")) -> 1L).foreach { case (df, want) =>
+      assert(Dedup.containmentPairs(df, "doc_id", "text", blocks).count() == want)
+      assert(Dedup.ngramJaccardPairs(df, "doc_id", "text", blocks).count() == want)
+      assert(Dedup.kmvCalibrationPairs(df, "doc_id", "text", blocks).count() == want)
+    }
+  }
+
   test("decontamination flags docs sharing a 13-gram with the eval set") {
     val evalDoc = "alpha beta gamma delta epsilon zeta eta theta iota " +
       "kappa lambda mu nu xi omicron"

@@ -1,12 +1,21 @@
 package graft
 
+import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan regression guards: the properties that make these
   * plans survive a 100× scale-up, asserted so a refactor can't silently
   * lose them. */
-class PlanAuditSpec extends AnyFunSuite {
+class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterEach {
   import TestSpark._
+
+  // Building a query without running it can leave cache entries that
+  // its result reads but nothing loads (e12's contingency aggregate).
+  // Left in the shared session, Spark rebuilds such an entry under a new
+  // identity when a later suite releases a frame inside its plan, and
+  // that suite's leak check counts it as its own. Release them here.
+  override def afterEach(): Unit =
+    try GraftSession.reset(spark) finally super.afterEach()
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString

@@ -9,9 +9,9 @@ import org.apache.spark.sql.graft.PlanBridge
   * The terminal optimized + executed plan is followed by the optimized
   * plan of every frame the query settled while it was built, as
   * recorded before its checkpoint ([[Settle.capture]]) — the work a
-  * checkpoint scan hides from the terminal plan (BFS and CC rounds,
-  * the triangle close, sweep arms) — and by that plan's physical
-  * form, which shows where exchanges sit.
+  * checkpoint scan hides from the terminal plan (BFS rounds, CC rounds
+  * past their driver bound, the triangle close, sweep arms) — and by
+  * that plan's physical form, which shows where exchanges sit.
   *
   * Usage: runMain graft.PlanDump <queryName> <sfDir> <outFile>
   */

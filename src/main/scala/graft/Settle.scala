@@ -3,10 +3,10 @@ package graft
 import java.util.concurrent.{ConcurrentLinkedQueue, Executors}
 import java.util.concurrent.atomic.AtomicLong
 import scala.collection.mutable.ArrayBuffer
-import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.{Await, ExecutionContext, Future, Promise}
 import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.graft.PlanBridge
@@ -24,8 +24,9 @@ import org.apache.spark.sql.graft.PlanBridge
   * Laziness contract: registered queries (each built inside a scope
   * named after it) and operators may run Spark jobs at construction —
   * every eager settle, and every loop of jobs over settled frames, runs
-  * before the DataFrame is returned. The jobs a settle runs carry the
-  * job description `<label>/<phase>`. Inside [[capture]] each settle
+  * before the DataFrame is returned. The jobs a settle, a
+  * [[Scope.run]] or a [[Scope.collectWithin]] runs carry the job
+  * description `<label>/<phase>`. Inside [[capture]] each settle
   * records its frame's optimized plan from before the checkpoint, so
   * the plan audit and `PlanDump` see the work a checkpoint scan hides.
   */
@@ -98,17 +99,52 @@ object Settle {
     def settleWith[A](df: DataFrame, phase: String)(probe: DataFrame => A): (DataFrame, A) = {
       val q = sink
       if (q != null) q.add(Settled(label, phase, df.queryExecution.optimizedPlan))
-      val sc = df.sparkSession.sparkContext
-      val prevDesc = sc.getLocalProperty("spark.job.description")
-      sc.setJobDescription(s"$label/$phase")
-      try {
+      run(phase) {
         val out = df.localCheckpoint(false)
         out.queryExecution.analyzed.foreach {
           case r: LogicalRDD => hold((refs: Refs) => refs.holds(r.rdd.id), () => r.rdd.unpersist(false))
           case _ =>
         }
         (out, probe(out))
-      } finally sc.setLocalProperty("spark.job.description", prevDesc)
+      }
+    }
+
+    /** Runs `action`, a driver action (count, head, collect, isEmpty),
+      * so that every job it starts carries `<label>/<phase>`. */
+    def run[A](phase: String)(action: => A): A = {
+      val sc = SparkSession.active.sparkContext
+      val prevDesc = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(s"$label/$phase")
+      try action finally sc.setLocalProperty("spark.job.description", prevDesc)
+    }
+
+    /** `df`'s rows, in partition order, while it has at most `bound`
+      * of them; `None` above the bound. One job labelled
+      * `<label>/<phase>`: each task returns at most bound + 1 rows, and
+      * once the rows returned pass the bound the driver keeps no more
+      * and cancels the job. The regime switch of the graph loops:
+      * state that fits stays on the driver. */
+    def collectWithin(df: DataFrame, phase: String, bound: Int): Option[Array[Row]] = run(phase) {
+      val rows = df.rdd
+      val parts = new Array[Array[Row]](rows.getNumPartitions)
+      var kept = 0L
+      val over = Promise[Unit]()
+      val job = rows.sparkContext.submitJob(rows,
+        (it: Iterator[Row]) => it.take(bound + 1).toArray, parts.indices,
+        (i: Int, part: Array[Row]) => if (!over.isCompleted) {
+          kept += part.length
+          if (kept > bound) over.trySuccess(()) else parts(i) = part
+        }, ())
+      Await.ready(Future.firstCompletedOf(Seq(job, over.future))(ExecutionContext.parasitic),
+        Duration.Inf)
+      if (over.isCompleted) {
+        job.cancel()
+        Await.ready(job, Duration.Inf)
+        None
+      } else {
+        Await.result(job, Duration.Inf) // rethrows a failed job
+        Some(parts.flatten)
+      }
     }
 
     /** Runs independent arms as concurrent Spark jobs, inside this

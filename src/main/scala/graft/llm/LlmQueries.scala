@@ -70,8 +70,8 @@ object LlmQueries {
 
   // ---- L18: duplicate-cluster resolution (connected components) ----------
   /** The d2 pair graph collapsed to clusters: transitive closure via
-    * hash-min + pointer-jump CC, cluster id = min doc_id, keep-one
-    * policy surfaced as a boolean. */
+    * connected components (Dedup.connectedComponents), cluster id =
+    * min doc_id, keep-one policy surfaced as a boolean. */
   def d6DupClusters(s: SparkSession, dir: String): DataFrame = {
     val pairs = Dedup.minhashPairs(withCopies(t(s, dir, "documents"), perturb = true),
       "doc_id", "text", threshold = 0.5)
@@ -88,17 +88,17 @@ object LlmQueries {
     * defaults to. The real pipeline verb: a crawl's near-copies
     * differ in boilerplate/truncation, and dropping by id throws away
     * the clean variant whenever the dirty one came first. Composes
-    * three proven parts — d2's banded pairs, d6's hash-min CC, x2's
+    * three proven parts — d2's banded pairs, d6's components, x2's
     * quality kernel — into one pass: the argmax is q57's
     * max-of-struct device on the cluster-cardinality table, so
     * survivorship adds one tiny aggregate to d6's cost. */
   def d19QualitySurvivor(s: SparkSession, dir: String): DataFrame = Settle.scope("d19_quality_survivor") { st =>
     val corpus = withCopies(t(s, dir, "documents"), perturb = true)
     val pairs = Dedup.minhashPairs(corpus, "doc_id", "text", threshold = 0.5)
-    // quality scoring is INDEPENDENT of the CC loop — settle it as a
+    // quality scoring is INDEPENDENT of the clusters — settle it as a
     // concurrent driver job (guide §2.6) so the kernel's tasks
-    // backfill the latency-bound CC rounds instead of running after
-    // them; deterministic, so concurrency cannot change a row (r14)
+    // backfill the latency-bound pair and CC jobs instead of running
+    // after them; deterministic, so concurrency cannot change a row (r14)
     val Seq(qual, clusters) = st.sweep(Seq(true, false)) { quality =>
       if (quality) st.settle(corpus.select(col("doc_id").as("id"),
         TextAnalysis.qualityColumns(col("text")).last.as("q")), "quality")

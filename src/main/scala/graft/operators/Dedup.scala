@@ -1,7 +1,8 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
 import scala.reflect.runtime.universe.TypeTag
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Settle
 import graft.expressions.Kernels
@@ -33,6 +34,9 @@ object Dedup {
   // than CapBucket ids splits into at most MaxSalt hash sub-buckets.
   private val CapBucket = 4096
   private val MaxSalt = 64
+  // Round bound of the distributed connected-components loop: pointer
+  // jumping converges in O(log longest-chain) rounds.
+  private val MaxRounds = 25
 
   /** Normalized text: lowercase, collapsed whitespace, trimmed — one
     * compiled pass (graft.expressions.NormalizeText), byte-identical to
@@ -81,7 +85,7 @@ object Dedup {
     // explode entirely and stamp the trivial layout. The existence
     // check is one driver-side scalar over the already-needed aggregate
     // — the same runtime-stats shape AQE uses to pick skew handling.
-    if (big.isEmpty) {
+    if (Settle.scope("saltBuckets")(_.run("skew")(big.isEmpty))) {
       df.withColumn("sub", lit(0)).withColumn("gi", lit(0)).withColumn("gj", lit(0))
     } else {
       df.join(broadcast(big), Seq("band", "key"), "left")
@@ -608,53 +612,114 @@ object Dedup {
     * {A,B,C} even if A,C never paired). Reference scope: the dedup
     * pipeline this library's pair operators feed.
     *
-    * Returns (id, cluster) for every vertex that appears in `pairs`,
-    * with cluster = MIN vertex id of its component — the canonical
-    * representative a keep-min policy retains.
+    * Returns (id, lbl) for every vertex that appears in `pairs`, with
+    * lbl = MIN vertex id of its component — the canonical
+    * representative a keep-min policy retains. An id that casts to
+    * null joins no component: its row's lbl is the label of its least
+    * non-null neighbor (null if it has none).
     *
-    * Algorithm: hash-min label propagation with pointer jumping
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond" —
-    * public literature). Per round each vertex takes the min label in
-    * its neighborhood, then compresses label chains by one hop
-    * (lbl ← lbl(lbl)), so convergence is O(log n) rounds even on
-    * path-shaped components — not O(diameter) as plain propagation.
-    * Each round is two hash joins + one aggregate on the (id, lbl)
-    * relation, all key-partitioned: nothing is collected to the
-    * driver, and `localCheckpoint` truncates lineage so plans stay
-    * O(1) per round (on a cluster, swap for reliable `checkpoint`).
-    * Convergence test: labels only ever decrease, so one `isEmpty` on
-    * the decreased-rows filter per round, not a full comparison join.
-    * At 100 TB the label relation is one long per *distinct paired
-    * doc* — orders of magnitude smaller than the corpus. */
-  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 25): DataFrame = Settle.scope("connectedComponents") { st =>
-    // materialize the pair list ONCE before symmetrizing: the union
+    * The pair list is settled once, and one labelled driver collect
+    * that gives up past [[Graphs.DriverRows]] pairs picks the regime:
+    *   - Driver regime (the pairs fit): union-find over the collected
+    *     pairs, each root the least id of its set; the result is a
+    *     local relation — no loop, no cache entry, no checkpoint.
+    *   - Distributed regime (past the bound): hash-min label
+    *     propagation with pointer jumping (Kiveris et al., "Connected
+    *     Components in MapReduce and Beyond" — public literature). Per
+    *     round each vertex takes the min label in its neighborhood,
+    *     then compresses label chains by one hop (lbl ← lbl(lbl)), so
+    *     convergence is O(log n) rounds even on path-shaped components
+    *     — not O(diameter) as plain propagation. Each round is two
+    *     hash joins + one aggregate on the (id, lbl) relation, all
+    *     key-partitioned: nothing but the per-round change count
+    *     reaches the driver, and `localCheckpoint` truncates lineage so
+    *     plans stay O(1) per round (on a cluster, swap for reliable
+    *     `checkpoint`). Convergence test: labels only ever decrease, so
+    *     one count of the decreased rows per round, not a full
+    *     comparison join. At 100 TB the label relation is one long per
+    *     *distinct paired doc* — orders of magnitude smaller than the
+    *     corpus.
+    * Both regimes give identical rows. */
+  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
+    components(pairs, aCol, bCol, forceDistributed = false)
+
+  /** [[connectedComponents]] on its distributed loop whatever the pair
+    * count: the seam through which the regime-equality test reaches
+    * that loop on small graphs. */
+  private[graft] def connectedComponentsDistributed(pairs: DataFrame, aCol: String,
+      bCol: String): DataFrame =
+    components(pairs, aCol, bCol, forceDistributed = true)
+
+  private def components(pairs: DataFrame, aCol: String, bCol: String,
+      forceDistributed: Boolean): DataFrame = Settle.scope("connectedComponents") { st =>
+    // materialize the pair list ONCE: the distributed loop's union
     // references it twice, and Spark does not share a subplan across
     // union branches — without this, an expensive upstream (the LSH
     // pair generation) executes twice. The pair graph is orders of
     // magnitude smaller than the corpus, so an eager local checkpoint
-    // is cheap and also cuts the iterative loop's replay lineage.
-    val sym = st.settle(pairs.select(col(aCol).cast("long").as("src"),
-      col(bCol).cast("long").as("dst")), "pairs")
+    // is cheap and also cuts the iterative loop's replay lineage. Below
+    // the bound the one job that fills it also collects it.
+    val pairList = pairs.select(col(aCol).cast("long").as("src"),
+      col(bCol).cast("long").as("dst"))
+    if (forceDistributed) hashMin(st, st.settle(pairList, "pairs"))
+    else st.settleWith(pairList, "pairs")(st.collectWithin(_, "pairs", Graphs.DriverRows)) match {
+      case (_, Some(rows)) => unionFind(pairs.sparkSession, rows)
+      case (sym, None) => hashMin(st, sym)
+    }
+  }
+
+  /** The driver regime: union-find over collected (src, dst) rows. The
+    * distinct non-null ids sort ascending, so a vertex's index order is
+    * its id order, and linking the greater root under the lesser keeps
+    * every root the least index of its set. The null id, as in the
+    * loop, joins nothing and takes its least neighbor's label. */
+  private def unionFind(spark: SparkSession, rows: Array[Row]): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val ends = new Array[Long](2 * rows.length)
+    var n = 0
+    for (r <- rows; k <- 0 to 1 if !r.isNullAt(k)) { ends(n) = r.getLong(k); n += 1 }
+    java.util.Arrays.sort(ends, 0, n)
+    var m = 0 // dedup in place: position m never passes the one read
+    for (i <- 0 until n if i == 0 || ends(i) != ends(i - 1)) { ends(m) = ends(i); m += 1 }
+    val ids = ends.take(m)
+    def idx(v: Long): Int = java.util.Arrays.binarySearch(ids, v)
+    val parent = Array.range(0, ids.length)
+    def find(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    for (r <- rows if !r.isNullAt(0) && !r.isNullAt(1)) {
+      val (a, b) = (find(idx(r.getLong(0))), find(idx(r.getLong(1))))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    val withNull = rows.filter(r => r.isNullAt(0) || r.isNullAt(1))
+    val nullRow = if (withNull.isEmpty) None else {
+      val nbr = withNull.flatMap(r => (0 to 1).filterNot(r.isNullAt).map(r.getLong)).minOption
+      Some(Row(null, nbr.map(v => ids(find(idx(v)))).getOrElse(null)))
+    }
+    spark.createDataFrame((ids.indices.map(i => Row(ids(i), ids(find(i)))) ++ nullRow).asJava,
+      StructType(Seq(StructField("id", LongType), StructField("lbl", LongType))))
+  }
+
+  /** The distributed regime over the settled (src, dst) pair list. */
+  private def hashMin(st: Settle.Scope, sym: DataFrame): DataFrame = {
     // repartition by src BEFORE persisting (guide §2.4): the distinct
     // leaves the cache hash-partitioned by (src, dst), and pinned to
-    // src it satisfies every src-keyed consumer. `PlanDump
-    // d6_dup_clusters` shows both regimes. While labels are small
-    // enough to broadcast (sf0.001 and sf0.1) the round's src join is
-    // a broadcast hash join that needs no edge Exchange either way,
-    // and the pinned layout spares the seed labels aggregation its
-    // Exchange. Past the broadcast bound (the same dump at sf0.001
-    // with spark.sql.autoBroadcastJoinThreshold=-1) the round's src
-    // sort-merge join reads the cache with no Exchange on the edge
-    // side; without this repartition every round shuffles the FULL
-    // edge table there.
+    // src it satisfies every src-keyed consumer. While labels are
+    // small enough to broadcast, the round's src join is a broadcast
+    // hash join that needs no edge Exchange either way, and the pinned
+    // layout spares the seed labels aggregation its Exchange. Past the
+    // broadcast bound the round's src sort-merge join reads the cache
+    // with no Exchange on the edge side; without this repartition
+    // every round shuffles the FULL edge table there.
     val edges = st.cache(sym.union(sym.select(col("dst").as("src"), col("src").as("dst")))
       .distinct().repartition(col("src")))
     var labels = st.settle(edges.groupBy("src").agg(min("dst").as("nmin"))
       .select(col("src").as("id"), least(col("src"), col("nmin")).as("lbl")), "labels")
     var iter = 0
-    var converged = labels.isEmpty
-    while (!converged && iter < maxIter) {
+    var converged = st.run("labels")(labels.isEmpty)
+    while (!converged && iter < MaxRounds) {
       val fromNbrs = edges
         .join(labels.withColumnRenamed("id", "src"), Seq("src"))
         .groupBy(col("dst").as("id")).agg(min("lbl").as("nlbl"))
@@ -677,16 +742,21 @@ object Dedup {
     }
     if (!converged)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"connectedComponents: hit maxIter=$maxIter with labels still " +
-          "changing; components may be under-merged (raise maxIter — " +
-          "pointer jumping converges in O(log longest-chain) rounds)")
+        s"connectedComponents: hit $MaxRounds rounds with labels still " +
+          "changing; components may be under-merged (pointer jumping " +
+          "converges in O(log longest-chain) rounds)")
     labels
   }
 
   /** Cluster assignment + size + keep flag — the full dedup verdict a
-    * pipeline applies: keep rows where `keep`, drop the rest. */
-  def dupClusters(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val cc = connectedComponents(pairs, aCol, bCol)
+    * pipeline applies: keep rows where `keep`, drop the rest. The
+    * components come from [[connectedComponents]], in whichever regime
+    * the pair count picks. */
+  def dupClusters(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
+    clusterVerdict(connectedComponents(pairs, aCol, bCol))
+
+  /** [[dupClusters]]' verdict over given (id, lbl) components. */
+  private[graft] def clusterVerdict(cc: DataFrame): DataFrame = {
     val sizes = cc.groupBy("lbl").agg(count(lit(1)).as("cluster_size"))
     cc.join(sizes, "lbl")
       .select(col("id"), col("lbl").as("cluster_id"), col("cluster_size"),

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, LongType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StructType}
 import graft.Settle
 
 /** Iterative graph traversal over edge DataFrames.
@@ -13,8 +13,11 @@ import graft.Settle
   */
 object Graphs {
 
-  /** Node bound of the driver rank-vector regime of [[pageRank]]. */
-  private val DriverRankNodes = 5000000L
+  /** The most rows a graph loop holds on the driver: the node bound of
+    * [[pageRank]]'s driver rank vector and the pair bound of
+    * [[Dedup.connectedComponents]]' driver union-find. Past it, both
+    * loops stay distributed. */
+  private[operators] val DriverRows = 5000000
 
   /** Node bound under which the triangle chain broadcasts its degree
     * table (16 B a node). */
@@ -86,8 +89,9 @@ object Graphs {
     * Scale shape: edges shuffle ONCE (hash-partitioned by src, then
     * persisted — every later pass reuses that layout); node inventory
     * and out-degree come from a single explode-aggregate over the
-    * settled edges. While the rank vector fits on executors (n ≤ 5M,
-    * known exactly before the loop is chosen) it is driver model-state
+    * settled edges. While the rank vector fits on the driver (n ≤
+    * [[DriverRows]]; one bounded collect of the node table both picks
+    * the loop and lists the nodes) it is driver model-state
     * (the k-means idiom): each iteration is ONE distributed job —
     * broadcast-probe the settled edges with the (src, rank, deg)
     * vector, map-side-combine the decimal partials, collect the ≤ n
@@ -117,15 +121,21 @@ object Graphs {
     // standalone count() was one extra full cache pass (r13 probe)
     // node inventory + out-degree in ONE aggregation: every endpoint
     // appears, src occurrences carry 1 (deg = Σ), dst occurrences 0
-    val nodeDeg = st.cache(e.select(explode(array(
+    val nodeDeg = e.select(explode(array(
         struct(col("src").as("node"), lit(1L).as("one")),
         struct(col("dst").as("node"), lit(0L).as("one")))).as("x"))
       .groupBy(col("x.node").as("node"))
-      .agg(sum(col("x.one")).as("deg")))
-    val n = nodeDeg.count()
-    val ranks =
-      if (forceDistributed || n > DriverRankNodes) pageRankLarge(st, e, nodeDeg, n, iters, damping)
-      else pageRankSmall(e, nodeDeg, n, iters, damping)
+      .agg(sum(col("x.one")).as("deg"))
+    // one bounded collect picks the regime and, below the bound, is
+    // the driver vector's node list; only the distributed loop reads
+    // the node table more than once, so only it caches the table
+    val nodes = if (forceDistributed) None else st.collectWithin(nodeDeg, "nodes", DriverRows)
+    val ranks = nodes match {
+      case Some(nd) => pageRankSmall(st, e, nodeDeg.schema, nd, iters, damping)
+      case None =>
+        val cached = st.cache(nodeDeg)
+        pageRankLarge(st, e, cached, st.run("nodes")(cached.count()), iters, damping)
+    }
     // the final 9-dp round runs through Spark's Round (not driver
     // math) so both loops share the exact rounding semantics
     st.settle(ranks.select(col("node"), round(col("rank"), 9).as("rank")), "ranks")
@@ -139,15 +149,14 @@ object Graphs {
     * decimal partial sums) stays in Spark, so both regimes and the SQL
     * oracle share bit-identical semantics. Returns the unrounded
     * (node, rank) vector. */
-  private def pageRankSmall(e: DataFrame, nodeDeg: DataFrame, n: Long,
-      iters: Int, damping: Double): DataFrame = {
-    import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StructField, StructType}
-    import org.apache.spark.sql.Row
+  private def pageRankSmall(st: Settle.Scope, e: DataFrame, nodeSchema: StructType,
+      nodes: Array[Row], iters: Int, damping: Double): DataFrame = {
+    import org.apache.spark.sql.types.{DecimalType, DoubleType, StructField}
     val spark = e.sparkSession
-    val nd: Array[(Any, Long)] = nodeDeg.collect()
-      .map(r => (r.get(0), r.getLong(1)))
+    val nd: Array[(Any, Long)] = nodes.map(r => (r.get(0), r.getLong(1)))
+    val n = nd.length
     val schema = StructType(Seq(
-      nodeDeg.schema.fields.head.copy(name = "src"),
+      nodeSchema.fields.head.copy(name = "src"),
       StructField("rank", DoubleType, nullable = false),
       StructField("deg", LongType, nullable = false)))
     def toDf(ranks: Array[Double]): DataFrame = spark.createDataFrame(
@@ -155,13 +164,13 @@ object Graphs {
         nd.indices.map(i => Row(nd(i)._1, ranks(i), nd(i)._2)), 1), schema)
     var ranks: Array[Double] = Array.fill(nd.length)(1.0 / n)
     val base = (1.0 - damping) / n
-    for (_ <- 1 to iters) {
-      val sc = e
+    for (i <- 1 to iters) {
+      val sums = e
         .join(broadcast(toDf(ranks)), Seq("src"))
         .select(col("dst").as("node"),
           round(col("rank") / col("deg"), 9).cast(DecimalType(28, 9)).as("c"))
         .groupBy("node").agg(sum(col("c")).as("sc"))
-        .collect().map(r => r.get(0) -> r.getDecimal(1)).toMap
+      val sc = st.run(s"round-$i")(sums.collect()).map(r => r.get(0) -> r.getDecimal(1)).toMap
       ranks = nd.map { case (v, _) =>
         // decimal→double via BigDecimal.doubleValue = Spark's
         // Decimal.toDouble; blend order matches the large regime's
@@ -246,8 +255,8 @@ object Graphs {
     // driver aggregate and both endpoint-degree joins read it.
     val deg = st.cache(und.select(explode(array(col("a"), col("b"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("deg")))
-    val agg = deg.agg(count(lit(1)), coalesce(sum(col("deg")), lit(0L)),
-      sum(expr("deg * (deg - 1) div 2"))).head()
+    val agg = st.run("degrees")(deg.agg(count(lit(1)), coalesce(sum(col("deg")), lit(0L)),
+      sum(expr("deg * (deg - 1) div 2"))).head())
     val (n, m, wedges) = (agg.getLong(0), agg.getLong(1) / 2,
       agg.get(2).asInstanceOf[java.lang.Long])
     def bcDeg(df: DataFrame): DataFrame = if (n <= BroadcastDegNodes) broadcast(df) else df

@@ -3027,8 +3027,9 @@ object LlmOracle {
     // Proven BIT-IDENTICAL to the direct doc-level closure at
     // sf0.001, sf0.01 and dup_k1 before the swap (r12; the r9 d19
     // blocked-rewrite protocol). Cluster id = MIN reachable. The
-    // Spark side runs log-round pointer-jump CC over ALL docs; the
-    // hash-match proves the fixpoint labels.
+    // Spark side resolves components over ALL docs (driver union-find
+    // or, past its bound, log-round pointer-jump CC); the hash-match
+    // proves the labels.
     "d6_dup_clusters" ->
       s"""WITH RECURSIVE all_docs AS (
         |$perturbedCopiesSql),

@@ -1,13 +1,17 @@
 package graft
 
 import graft.operators.Dedup
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.graft.CacheEntries
+import org.scalacheck.{Gen, Prop, Test}
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.util.Random
 
-/** Duplicate-cluster resolution: hash-min + pointer-jump connected
-  * components over a pair graph (Dedup.connectedComponents). */
+/** Duplicate-cluster resolution: connected components over a pair
+  * graph (Dedup.connectedComponents) — driver union-find below the
+  * pair bound, hash-min + pointer-jump loop above it. */
 class ConnectedComponentsSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
@@ -71,5 +75,54 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       .as[(Long, Long, Long, Boolean)].collect().toSet
     assert(got == Set((1L, 1L, 3L, true), (2L, 1L, 3L, false),
       (3L, 1L, 3L, false), (7L, 7L, 2L, true), (8L, 7L, 2L, false)))
+  }
+
+  /** Rows of `df` as value lists, in a fixed order. */
+  private def rows(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().map(_.toSeq).toSeq.sortBy(_.mkString(","))
+
+  /** Both regimes give the same (id, lbl) rows and the same verdicts. */
+  private def regimesAgree(pairs: DataFrame): Boolean = {
+    val loop = Dedup.connectedComponentsDistributed(pairs, "a", "b")
+    rows(Dedup.connectedComponents(pairs, "a", "b")) == rows(loop) &&
+      rows(Dedup.dupClusters(pairs, "a", "b")) == rows(Dedup.clusterVerdict(loop))
+  }
+
+  /** Pair lists over a few ids, so self-loops come up often, plus
+    * duplicated and reversed copies of some pairs. */
+  private val pairLists: Gen[Seq[(Long, Long)]] = for {
+    n <- Gen.choose(1L, 30L)
+    m <- Gen.choose(1, 40)
+    ps <- Gen.listOfN(m, Gen.zip(Gen.choose(0L, n), Gen.choose(0L, n)))
+    d <- Gen.choose(0, m)
+  } yield ps ++ ps.take(d) ++ ps.takeRight(d).map(_.swap)
+
+  test("driver and distributed regimes give identical components and verdicts") {
+    assert(regimesAgree(Seq.empty[(Long, Long)].toDF("a", "b")), "empty pair set")
+    assert(regimesAgree((0L until 199L).map(i => (i, i + 1)).toDF("a", "b")), "200-vertex path")
+    val prop = Prop.forAll(pairLists)(ps => regimesAgree(ps.toDF("a", "b")))
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(12), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("an id that casts to null: the driver regime emits the loop's rows") {
+    // null joins no component; its row takes the label of its least
+    // non-null neighbor (5, whose component's least id is 3)
+    val pairs = Seq[(Option[Long], Option[Long])]((None, Some(5L)), (Some(5L), Some(3L)),
+      (None, Some(9L)), (Some(7L), None), (None, None), (Some(9L), Some(8L))).toDF("a", "b")
+    val want = Seq(Seq(3L, 3L), Seq(5L, 3L), Seq(7L, 7L), Seq(8L, 8L), Seq(9L, 8L), Seq(null, 3L))
+    assert(rows(Dedup.connectedComponentsDistributed(pairs, "a", "b")) ==
+      want.sortBy(_.mkString(",")))
+    assert(regimesAgree(pairs))
+  }
+
+  test("the driver regime leaves no cache entry and no persistent RDD behind") {
+    val rdds0 = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val entries0 = CacheEntries(spark)
+    val cc = Dedup.connectedComponents(Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("a", "b"), "a", "b")
+    assert(cc.queryExecution.analyzed.isInstanceOf[LocalRelation])
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == rdds0)
+    assert(CacheEntries(spark).filterNot(e => entries0.exists(_ eq e)).isEmpty)
+    assert(rows(cc) == Seq(Seq(1L, 1L), Seq(2L, 1L), Seq(3L, 1L), Seq(7L, 7L), Seq(8L, 7L)))
   }
 }

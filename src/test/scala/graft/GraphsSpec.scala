@@ -1,10 +1,33 @@
 package graft
 
-import graft.operators.Graphs
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import graft.operators.{Dedup, Graphs}
+import org.apache.spark.graft.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.sum
 import org.apache.spark.sql.graft.CacheEntries
 import org.scalatest.funsuite.AnyFunSuite
+
+/** The description of every Spark job `body` starts (null when unset),
+  * and its value. */
+object JobLog {
+  def apply[A](spark: SparkSession)(body: => A): (A, Seq[String]) = {
+    val sc = spark.sparkContext
+    val descs = new ConcurrentLinkedQueue[Option[String]]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        descs.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description"))))
+    }
+    sc.addSparkListener(listener)
+    val a = try body finally {
+      ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    (a, descs.asScala.toSeq.map(_.orNull))
+  }
+}
 
 class GraphsSpec extends AnyFunSuite {
   import TestSpark._
@@ -119,5 +142,55 @@ class GraphsSpec extends AnyFunSuite {
       val added = CacheEntries(spark).filterNot(e => before.exists(_ eq e))
       assert(added.isEmpty, s"$name left ${added.size} cache entries")
     }
+  }
+
+  test("every job a graph operator starts carries a graft label") {
+    val forest = Seq((2L, 1L), (3L, 1L), (4L, 2L)).toDF("node", "parent")
+    val values = Seq((1L, 10L), (2L, 20L), (3L, 30L), (4L, 40L)).toDF("node", "value")
+    val triangle = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
+    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("a", "b")
+    val docs = Seq((1L, "the quick brown fox jumps over the lazy dog again"),
+      (2L, "the quick brown fox jumps over the lazy dog again"),
+      (3L, "an unrelated sentence about query planning in spark")).toDF("doc_id", "text")
+    val ops: Seq[(String, () => DataFrame)] = Seq(
+      "bfs" -> (() => Graphs.bfs(edges, Seq(1L).toDF("node"), maxHops = 2)),
+      "pageRank" -> (() => Graphs.pageRank(edges, iters = 2)),
+      "pageRankDistributed" -> (() => Graphs.pageRankDistributed(edges, iters = 2)),
+      "triangleCounts" -> (() => Graphs.triangleCounts(triangle)),
+      "graphProfile" -> (() => Graphs.graphProfile(triangle)),
+      "subtreeRollup" -> (() => Graphs.subtreeRollup(forest, values, rounds = 2)),
+      "connectedComponents" -> (() => Dedup.connectedComponents(pairs, "a", "b")),
+      "connectedComponentsDistributed" ->
+        (() => Dedup.connectedComponentsDistributed(pairs, "a", "b")),
+      "dupClusters" -> (() => Dedup.dupClusters(pairs, "a", "b")),
+      "minhashPairs" -> (() => Dedup.minhashPairs(docs, "doc_id", "text")))
+    for ((name, op) <- ops) {
+      val (_, descs) = JobLog(spark)(op())
+      val bare = descs.filterNot(d => d != null && d.matches("\\w+/[\\w-]+"))
+      assert(bare.isEmpty, s"$name started ${bare.size} of ${descs.size} jobs without a label")
+    }
+  }
+}
+
+/** The jobs each graph-family query starts on the test tables, while it
+  * is built and while a `noop` write executes it (parquet schema
+  * inference included): a change that adds an eager job moves a pin on
+  * purpose. */
+class GraphJobsSpec extends AnyFunSuite {
+  import TestSpark._
+
+  private val pins: Seq[(String, (Int, Int))] = Seq(
+    "q52_bfs_reach" -> ((18, 3)),
+    "q59_pagerank" -> ((18, 3)),
+    "q61_triangles" -> ((19, 3)),
+    "q77_graph_profile" -> ((23, 1)),
+    "d6_dup_clusters" -> ((10, 5)),
+    "d19_quality_survivor" -> ((15, 6)))
+
+  for ((q, (build, exec)) <- pins) test(s"$q starts $build jobs to build and $exec to execute") {
+    GraftSession.reset(spark)
+    val (df, built) = JobLog(spark)(SparkEntry.queries(q)(spark, sf))
+    val (_, ran) = JobLog(spark)(df.write.format("noop").mode("overwrite").save())
+    assert((built.size, ran.size) == ((build, exec)))
   }
 }

@@ -143,16 +143,19 @@ class SettleSpec extends AnyFunSuite {
       }
     }
     val sc = spark.sparkContext
+    val want = Set("labels/eager", "labels/probe", "labels/action", "labels/bounded")
     sc.setJobDescription("outer")
     sc.addSparkListener(listener)
     try {
       Settle.scope("labels") { st =>
         st.settle(frame().groupBy("k").count(), "eager")
         st.settleWith(frame(), "probe")(_.count())
+        st.run("action")(frame().count())
+        st.collectWithin(frame(), "bounded", 10)
         ()
       }
       val deadline = System.nanoTime() + 30L * 1000000000L
-      while (seen.synchronized(!Set("labels/eager", "labels/probe").subsetOf(seen.toSet)) &&
+      while (seen.synchronized(!want.subsetOf(seen.toSet)) &&
           System.nanoTime() < deadline) Thread.sleep(50)
     } finally {
       sc.removeSparkListener(listener)
@@ -160,7 +163,17 @@ class SettleSpec extends AnyFunSuite {
     assert(sc.getLocalProperty("spark.job.description") == "outer", "previous description not restored")
     sc.setJobDescription(null)
     val labels = seen.synchronized(seen.toSet)
-    assert(labels == Set("labels/eager", "labels/probe"), s"job descriptions: $labels")
+    assert(labels == want, s"job descriptions: $labels")
+  }
+
+  test("collectWithin returns every row up to the bound, in partition order, and None past it") {
+    Settle.scope("bounded") { st =>
+      val df = frame() // a range: each partition a run of ids
+      assert(df.rdd.getNumPartitions > 1)
+      assert(st.collectWithin(df, "at", 1000).map(_.map(_.getLong(0)).toSeq) == Some(0L until 1000L))
+      assert(st.collectWithin(df, "past", 999).isEmpty)
+      assert(st.collectWithin(df.limit(0), "empty", 0).map(_.toSeq) == Some(Nil))
+    }
   }
 
   test("capture records each settled frame's plan from before its checkpoint") {

@@ -242,6 +242,36 @@ class SyntaxSpec extends AnyFunSuite {
       .map(r => r._2 -> r._4).toMap
     assert(packed(1L) == 0L && packed(2L) == 1L && packed(3L) == 0L)
   }
+
+  test("forwarding verbs equal the operators they forward to") {
+    import graft.functions.{Binning, Rounding}
+    import graft.operators.{BpeTrainer, Curation, Sampling, VectorOps}
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    def same(verb: org.apache.spark.sql.DataFrame, op: org.apache.spark.sql.DataFrame): Unit = {
+      val got = rows(verb)
+      assert(got.nonEmpty && got == rows(op))
+    }
+    val xs = Seq((1L, "a", 2.25, -0.5, Seq(1.0, 2.0), Seq(0.5, -1.0)),
+      (2L, "a", -1.75, 3.0, Seq(0.0, 0.0), Seq(1.0, 1.0)),
+      (3L, "b", 0.125, 1.5, Seq(3.0, -4.0), Seq(3.0, 4.0)),
+      (4L, "b", 7.5, 0.25, Seq(-2.0, 1.0), Seq(2.0, 0.5)))
+      .toDF("id", "g", "x", "w", "u", "v")
+    same(xs.select($"x".roundTo("half_even", 1)), xs.select(Rounding.roundFloat($"x", "half_even", 1)))
+    same(xs.select($"x".snapTo(0.3)), xs.select(Rounding.snap($"x", 0.3)))
+    same(xs.select($"u".dotWith($"v")), xs.select(VectorOps.dot($"u", $"v")))
+    same(xs.select($"u".cosineWith($"v")), xs.select(VectorOps.cosine($"u", $"v")))
+    same(xs.sampleWeighted("g", "id", $"w", 1),
+      xs.join(Sampling.weightedSample(xs, "g", "id", $"w", 1).select("id"), Seq("id"), "left_semi"))
+    same(xs.cutBins("x", 3), Binning.cut(xs, "x", 3))
+    same(xs.qcutBins("x", 2), Binning.qcut(xs, "x", 2))
+    val docs = Seq((1L, "low low low lower newest widest"), (2L, "low lower new newer"),
+      (3L, "12 34 " * 30)).toDF("doc_id", "text")
+    val evalSet = Seq((9L, "nothing shared here")).toDF("doc_id", "text")
+    same(docs.encodeBpe("doc_id", "text", nMerges = 3), BpeTrainer.encode(docs, "doc_id", "text", 3))
+    same(docs.curateAgainst(evalSet, "doc_id", "text", minTokens = 2),
+      Curation.curate(docs, evalSet, "doc_id", "text", minTokens = 2))
+  }
 }
 
 class VectorOpsExtraSpec extends org.scalatest.funsuite.AnyFunSuite {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.PlanBridge
 
 /** The local session every dev main runs on (Bench, QueryProbe, Verify,
   * RegimeBench, PlanDump, CertifyDup). */
@@ -33,6 +34,6 @@ object GraftSession {
     * graph queries left). */
   def reset(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+    spark.sparkContext.getPersistentRDDs.values.foreach(PlanBridge.unpersist)
   }
 }

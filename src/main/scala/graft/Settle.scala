@@ -102,7 +102,7 @@ object Settle {
       run(phase) {
         val out = df.localCheckpoint(false)
         out.queryExecution.analyzed.foreach {
-          case r: LogicalRDD => hold((refs: Refs) => refs.holds(r.rdd.id), () => r.rdd.unpersist(false))
+          case r: LogicalRDD => hold((refs: Refs) => refs.holds(r.rdd.id), () => PlanBridge.unpersist(r.rdd))
           case _ =>
         }
         (out, probe(out))

@@ -853,12 +853,14 @@ object Relational {
   // count bounded. Per round: frontier ⋈ edges (equi-join on src) →
   // anti-join against visited (first discovery = min distance, exactly
   // the oracle's MIN(dist) over the recursive closure). Scale shape:
-  // edges dedup-shuffle ONCE and persist across rounds; each round
-  // shuffles only the frontier (shrinking), never the visited set's
-  // payload; pair generation is a self-join per order key — linear,
-  // not quadratic, because order size is bounded (~7 items). Rounds
-  // are driver-sequenced but all data movement is distributed — the
-  // connectedComponents idiom, here with a full DuckDB oracle.
+  // the edges (a multigraph: no edge-level distinct) shuffle once into
+  // a cache, and bfs's count of that cache picks its regime. Up to
+  // Graphs.DriverEdges rows (sf0.01 and below) one collect brings them
+  // to the driver, which runs the rounds; above it (sf0.1) the cache
+  // persists across the distributed rounds, each of which shuffles
+  // only the frontier's matched destinations, never the visited set's
+  // payload. Pair generation is a self-join per order key — linear,
+  // not quadratic, because order size is bounded (~7 items).
   def q52BfsReach(s: SparkSession, dir: String): DataFrame = Settle.scope("q52_bfs_reach") { st =>
     val li = t(s, dir, "lineitem").select(col("l_orderkey").as("ok"),
       col("l_partkey").as("pk"))
@@ -1084,8 +1086,9 @@ object Relational {
     * Scale shape: [[graft.operators.Graphs.graphProfile]] builds the
     * degrees, moments and triangles over one canonical-edge chain
     * shared with `triangleCounts` (degree-ordered edge iterator,
-    * O(m^1.5) worst case, hub-safe), so the pairs go in as the join
-    * emits them: the chain's own distinct dedupes them. */
+    * O(m^1.5) worst case, hub-safe; on the driver while the canonical
+    * edges number at most `Graphs.DriverEdges`), so the pairs go in
+    * as the join emits them: the chain's own distinct dedupes them. */
   def q77GraphProfile(s: SparkSession, dir: String): DataFrame = {
     val li = t(s, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))

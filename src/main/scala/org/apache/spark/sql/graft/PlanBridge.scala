@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
@@ -20,6 +21,11 @@ object PlanBridge {
     case r: LogicalRDD => r.rdd.doCheckpoint()
     case _ =>
   }
+
+  /** Drops `rdd`'s blocks without waiting: what `RDD.unpersist(false)`
+    * does, minus the warning it logs for every locally checkpointed
+    * RDD, whose release is the point of a settle's checkpoint. */
+  def unpersist(rdd: RDD[_]): Unit = rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 
   private def cacheManager(df: DataFrame) = df.sparkSession.sharedState.cacheManager
 

@@ -164,10 +164,17 @@ class GraphsSpec extends AnyFunSuite {
         (() => Dedup.connectedComponentsDistributed(pairs, "a", "b")),
       "dupClusters" -> (() => Dedup.dupClusters(pairs, "a", "b")),
       "minhashPairs" -> (() => Dedup.minhashPairs(docs, "doc_id", "text")))
+    // the driver regimes' count and collect jobs, by name
+    val expected = Map(
+      "bfs" -> Set("bfs/edge-count", "bfs/edges"),
+      "triangleCounts" -> Set("triangleCounts/degrees", "triangleCounts/edges"),
+      "graphProfile" -> Set("graphProfile/degrees", "graphProfile/edges"))
     for ((name, op) <- ops) {
       val (_, descs) = JobLog(spark)(op())
       val bare = descs.filterNot(d => d != null && d.matches("\\w+/[\\w-]+"))
       assert(bare.isEmpty, s"$name started ${bare.size} of ${descs.size} jobs without a label")
+      val missing = expected.getOrElse(name, Set.empty[String]) -- descs
+      assert(missing.isEmpty, s"$name started no job labelled ${missing.mkString(", ")}")
     }
   }
 }
@@ -180,10 +187,10 @@ class GraphJobsSpec extends AnyFunSuite {
   import TestSpark._
 
   private val pins: Seq[(String, (Int, Int))] = Seq(
-    "q52_bfs_reach" -> ((18, 3)),
+    "q52_bfs_reach" -> ((10, 3)),
     "q59_pagerank" -> ((18, 3)),
-    "q61_triangles" -> ((19, 3)),
-    "q77_graph_profile" -> ((23, 1)),
+    "q61_triangles" -> ((9, 3)),
+    "q77_graph_profile" -> ((9, 1)),
     "d6_dup_clusters" -> ((10, 5)),
     "d19_quality_survivor" -> ((15, 6)))
 

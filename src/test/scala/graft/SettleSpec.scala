@@ -166,6 +166,30 @@ class SettleSpec extends AnyFunSuite {
     assert(labels == want, s"job descriptions: $labels")
   }
 
+  test("releasing a checkpoint logs no lineage warning and drops the RDD") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("settle-release", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = warnings.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    val rdds0 = rdds
+    var settled = Set.empty[Int]
+    root.addAppender(appender)
+    try Settle.scope("release") { st =>
+      st.settle(frame(), "rows")
+      settled = rdds -- rdds0
+    } finally root.removeAppender(appender)
+    assert(settled.size == 1)
+    assert(rdds == rdds0, "the released checkpoint is still a persistent RDD")
+    val lineage = warnings.asScala.filter(_.contains("locally checkpointed"))
+    assert(lineage.isEmpty, lineage.mkString("\n"))
+  }
+
   test("collectWithin returns every row up to the bound, in partition order, and None past it") {
     Settle.scope("bounded") { st =>
       val df = frame() // a range: each partition a run of ids

@@ -18,8 +18,11 @@ Usage: drive_oracle.py <sfDir> <verifyOut> [--strict] [--timeout=N]
                          evidence only, not comparable to sequential
                          timings — and timeouts fire on the same
                          contended clock, so a near-limit replay may
-                         time out under --jobs that passes alone)"""
-import json, subprocess, sys, time
+                         time out under --jobs that passes alone)
+A replay that exits non-zero without check.py's pass/fail summary is
+reported `crashed`, apart from `fail`; a failed or crashed replay's
+results entry keeps its exit code and the tails of stdout and stderr."""
+import json, re, subprocess, sys, time
 from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
@@ -66,9 +69,13 @@ def drive_one(n):
             cwd="/root/repo")
         dt = time.time() - t0
         ok = "0 fail" in r.stdout and "1 pass" in r.stdout
-        res = {"status": "pass" if ok else "fail", "sec": round(dt, 1)}
+        # a replay that exits non-zero before check.py's "N pass, M fail"
+        # summary crashed: its evidence is the exit code and stderr
+        summary = re.search(r"^\d+ pass, \d+ fail$", r.stdout, re.M)
+        status = "pass" if ok else "fail" if summary or r.returncode == 0 else "crashed"
+        res = {"status": status, "sec": round(dt, 1)}
         if not ok:
-            res["detail"] = r.stdout[-500:]
+            res.update(detail=r.stdout[-500:], exit=r.returncode, stderr=r.stderr[-500:])
     except subprocess.TimeoutExpired:
         res = {"status": "oracle_timeout", "sec": TIMEOUT}
     print(f"{res['status']:>14s} {res['sec']:7.1f}s {n}", flush=True)
@@ -80,8 +87,8 @@ else:
     with ThreadPoolExecutor(max_workers=JOBS) as ex:
         results = dict(ex.map(drive_one, names))
 
-npass = sum(1 for v in results.values() if v["status"] == "pass")
-nto = sum(1 for v in results.values() if v["status"] == "oracle_timeout")
-print(f"\n{npass} pass, {nto} oracle-timeout, "
-      f"{len(results) - npass - nto} fail of {len(results)}")
+count = {s: sum(1 for v in results.values() if v["status"] == s)
+         for s in ("pass", "oracle_timeout", "crashed", "fail")}
+print(f"\n{count['pass']} pass, {count['oracle_timeout']} oracle-timeout, "
+      f"{count['crashed']} crashed, {count['fail']} fail of {len(results)}")
 Path("/tmp/drive_oracle_results.json").write_text(json.dumps(results, indent=1))

@@ -7,6 +7,7 @@ import scala.concurrent.{Await, ExecutionContext, Future, Promise}
 import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.graft.PlanBridge
@@ -120,20 +121,31 @@ object Settle {
 
     /** `df`'s rows, in partition order, while it has at most `bound`
       * of them; `None` above the bound. One job labelled
-      * `<label>/<phase>`: each task returns at most bound + 1 rows, and
-      * once the rows returned pass the bound the driver keeps no more
-      * and cancels the job. The regime switch of the graph loops:
-      * state that fits stays on the driver. */
+      * `<label>/<phase>`: each task returns its rows while they number
+      * at most its share of the bound (bound / partitions), and past
+      * that only their count, up to bound + 1; once the rows counted
+      * pass the bound the driver keeps no more and cancels the job. So
+      * a collect that passes the bound ships next to nothing. When they
+      * do not pass it but a task held more than its share, a second job
+      * under the same label fetches that task's partition. Tasks ship
+      * copies of the plan's internal rows, which the driver turns into
+      * `Row`s. The regime switch of the graph loops: state that fits
+      * stays on the driver. */
     def collectWithin(df: DataFrame, phase: String, bound: Int): Option[Array[Row]] = run(phase) {
-      val rows = df.rdd
-      val parts = new Array[Array[Row]](rows.getNumPartitions)
+      val rows = df.queryExecution.toRdd
+      val parts = new Array[Array[InternalRow]](rows.getNumPartitions)
+      val share = bound / math.max(parts.length, 1)
       var kept = 0L
       val over = Promise[Unit]()
       val job = rows.sparkContext.submitJob(rows,
-        (it: Iterator[Row]) => it.take(bound + 1).toArray, parts.indices,
-        (i: Int, part: Array[Row]) => if (!over.isCompleted) {
-          kept += part.length
-          if (kept > bound) over.trySuccess(()) else parts(i) = part
+        (it: Iterator[InternalRow]) => {
+          val head = it.take(share + 1).map(_.copy()).toArray
+          if (head.length <= share) (head.length.toLong, head)
+          else (head.length + it.take(bound - share).size.toLong, null)
+        }, parts.indices,
+        (i: Int, part: (Long, Array[InternalRow])) => if (!over.isCompleted) {
+          kept += part._1
+          if (kept > bound) over.trySuccess(()) else parts(i) = part._2
         }, ())
       Await.ready(Future.firstCompletedOf(Seq(job, over.future))(ExecutionContext.parasitic),
         Duration.Inf)
@@ -143,7 +155,12 @@ object Settle {
         None
       } else {
         Await.result(job, Duration.Inf) // rethrows a failed job
-        Some(parts.flatten)
+        val rest = parts.indices.filter(parts(_) == null)
+        if (rest.nonEmpty) Await.result(rows.sparkContext.submitJob(rows,
+          (it: Iterator[InternalRow]) => it.map(_.copy()).toArray, rest,
+          (k: Int, part: Array[InternalRow]) => parts(rest(k)) = part, ()), Duration.Inf)
+        val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+        Some(parts.flatten.map(toRow(_).asInstanceOf[Row]))
       }
     }
 

@@ -71,7 +71,11 @@ object LlmQueries {
   // ---- L18: duplicate-cluster resolution (connected components) ----------
   /** The d2 pair graph collapsed to clusters: transitive closure via
     * connected components (Dedup.connectedComponents), cluster id =
-    * min doc_id, keep-one policy surfaced as a boolean. */
+    * min doc_id, keep-one policy surfaced as a boolean. Up to
+    * Graphs.DriverDocs documents (every test SF) the pairs come from
+    * one collect and driver work, as a local relation, so the
+    * components take no job either: the query's jobs are its collect
+    * and the execution of the verdict over local rows. */
   def d6DupClusters(s: SparkSession, dir: String): DataFrame = {
     val pairs = Dedup.minhashPairs(withCopies(t(s, dir, "documents"), perturb = true),
       "doc_id", "text", threshold = 0.5)
@@ -91,7 +95,9 @@ object LlmQueries {
     * three proven parts — d2's banded pairs, d6's components, x2's
     * quality kernel — into one pass: the argmax is q57's
     * max-of-struct device on the cluster-cardinality table, so
-    * survivorship adds one tiny aggregate to d6's cost. */
+    * survivorship adds one tiny aggregate to d6's cost. The pairs and
+    * components are d6's: local relations up to Graphs.DriverDocs
+    * documents, so the sweep's cluster arm runs no job. */
   def d19QualitySurvivor(s: SparkSession, dir: String): DataFrame = Settle.scope("d19_quality_survivor") { st =>
     val corpus = withCopies(t(s, dir, "documents"), perturb = true)
     val pairs = Dedup.minhashPairs(corpus, "doc_id", "text", threshold = 0.5)

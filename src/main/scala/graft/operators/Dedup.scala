@@ -3,6 +3,7 @@ package graft.operators
 import scala.jdk.CollectionConverters._
 import scala.reflect.runtime.universe.TypeTag
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import graft.Settle
 import graft.expressions.Kernels
@@ -226,7 +227,8 @@ object Dedup {
 
   /** Candidate near-duplicate pairs via MinHash LSH, verified with the
     * exact shingle-set Jaccard. Returns (id_a, id_b, jaccard) with
-    * jaccard >= `threshold`.
+    * id_a < id_b and jaccard >= `threshold`; a document with a null
+    * text pairs with none.
     *
     * Banding: 32 bands × 2 rows (h = 64). At a 0.5 threshold the
     * per-pair miss probability is (1−j²)^32 ≤ 1e-4 on the whole
@@ -235,18 +237,49 @@ object Dedup {
     * bands admit more low-similarity candidates, but those die in the
     * cheap sorted-intersect verify.
     *
-    * Shuffle profile: explode of (id, band, key) — 32 rows of 16 bytes
-    * per doc — then one shuffle grouping them per salted (band, key)
-    * bucket, whose task enumerates its pairs ([[blockPairs]]); shingle
-    * arrays are joined back only for distinct candidate pairs. */
+    * One labelled bounded collect of the (id, text) rows picks the
+    * regime:
+    *   - Driver regime (at most [[Graphs.DriverDocs]] documents, no
+    *     null or repeated id): the index, the band buckets and the
+    *     verify run on the driver ([[minhashLocal]]), with the kernels
+    *     the plan calls, and the result is a local relation — no
+    *     shuffle, no cache entry, no checkpoint. Band buckets whose
+    *     pairs number more than [[Graphs.DriverRows]] in all (a
+    *     degenerate clique) hand the corpus to the distributed regime,
+    *     whose salting spreads them.
+    *   - Distributed regime ([[minhashBanded]]): explode of (id, band,
+    *     key) — 32 rows of 16 bytes per doc — then one shuffle grouping
+    *     them per salted (band, key) bucket, whose task enumerates its
+    *     pairs ([[blockPairs]]); shingle arrays are joined back only
+    *     for distinct candidate pairs.
+    * Both regimes give identical rows. d2, d6 and d19 (sf0.01: about
+    * 1k documents with copies; sf0.1: 10k) run the driver regime,
+    * ScaleGen sf1 (100k) the distributed one; [[Graphs.DriverDocs]]
+    * gives the crossover measured there. */
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.5): DataFrame =
+      threshold: Double = 0.5): DataFrame = Settle.scope("minhashPairs") { st =>
+    val docs = df.select(col(idCol).cast("long"), col(textCol))
+    st.collectWithin(docs, "docs", Graphs.DriverDocs)
+      .flatMap(minhashLocal(df.sparkSession, _, threshold))
+      .getOrElse(minhashBanded(st, df, idCol, textCol, threshold, CapBucket, MaxSalt))
+  }
+
+  /** [[minhashPairs]] on its distributed regime whatever the corpus
+    * size: the seam through which the regime-equality test reaches it
+    * on small corpora. */
+  private[graft] def minhashPairsDistributed(df: DataFrame, idCol: String, textCol: String,
+      threshold: Double): DataFrame =
     minhashPairs(df, idCol, textCol, threshold, CapBucket, MaxSalt)
 
-  /** [[minhashPairs]] under explicit salting bounds: DedupSkewSpec's
-    * hook to force the salted and the unsalted layout. */
+  /** [[minhashPairs]]' distributed regime under explicit salting bounds:
+    * DedupSkewSpec's hook to force the salted and the unsalted layout. */
   private[graft] def minhashPairs(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, cap: Int, maxSalt: Int): DataFrame = Settle.scope("minhashPairs") { st =>
+      threshold: Double, cap: Int, maxSalt: Int): DataFrame =
+    Settle.scope("minhashPairs")(minhashBanded(_, df, idCol, textCol, threshold, cap, maxSalt))
+
+  /** The distributed regime: index, salted band buckets, verify. */
+  private def minhashBanded(st: Settle.Scope, df: DataFrame, idCol: String, textCol: String,
+      threshold: Double, cap: Int, maxSalt: Int): DataFrame = {
     // persisted: consumed three times below (band explode + both
     // verify-join sides). At cluster scale this is a checkpoint.
     val idx = st.cache(leakageIndex(df, idCol, textCol))
@@ -256,6 +289,53 @@ object Dedup {
     // pair-bounded, orders of magnitude under the corpus) so the
     // scope releases the index cache on return
     st.settle(jaccardVerified(cand, idx, idx, threshold), "verify")
+  }
+
+  /** The driver regime over collected (id: long, text) rows; None when
+    * it cannot mirror the distributed regime — a null or repeated id,
+    * whose joins it does not replay — or when the buckets' pairs pass
+    * [[Graphs.DriverRows]]. Each document's shingles and band keys come
+    * from the kernel methods [[leakageIndex]]'s plan invokes, so they
+    * are bit-identical; a null text, whose shingles are null, is
+    * dropped, as the verify drops its pairs. Each (band, key) bucket's
+    * id-ordered pairs are enumerated once ([[groupPairs]]), deduped,
+    * and kept when their [[gramJaccard]] — the verify's arithmetic —
+    * is at least `threshold`. */
+  private def minhashLocal(spark: SparkSession, rows: Array[Row],
+      threshold: Double): Option[DataFrame] = {
+    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.expressions.{MinHashKernel, NormalizeText, TextHashKernels}
+    if (rows.exists(_.isNullAt(0)) || rows.map(_.getLong(0)).distinct.length < rows.length)
+      return None
+    val docs = rows.filterNot(_.isNullAt(1)).sortBy(_.getLong(0))
+    val mh = MinHashKernel(H)
+    val sh = docs.map(r => TextHashKernels.wordShingles(
+      NormalizeText.compute(UTF8String.fromString(r.getString(1))), W))
+    val keys = sh.map(s => MinHashKernel.bandKeys(mh.compute(s), H / Bands, Bands).toLongArray)
+    // one bucket per (band, key) with two or more documents, as the
+    // document indices in it (index order = id order)
+    val buckets = (0 until Bands).flatMap { b =>
+      val last = scala.collection.mutable.LongMap.empty[Int]
+      val prev = new Array[Int](docs.length)
+      for (i <- docs.indices) { prev(i) = last.getOrElse(keys(i)(b), -1); last(keys(i)(b)) = i }
+      last.values.filter(prev(_) >= 0)
+        .map(i => Iterator.iterate(i)(prev).takeWhile(_ >= 0).map((_, 0)).toIndexedSeq)
+    }
+    if (buckets.iterator.map(m => m.size.toLong * (m.size - 1) / 2).sum > Graphs.DriverRows)
+      return None
+    val cand = buckets.iterator.flatMap(groupPairs[Int](_, 0, 0, _.toLong))
+      .map { case (i, j) => i.toLong << 32 | j }.toArray
+    java.util.Arrays.sort(cand)
+    val arrays = sh.map(_.toLongArray)
+    val out = cand.indices.iterator.filter(k => k == 0 || cand(k) != cand(k - 1)).flatMap { k =>
+      val (i, j) = ((cand(k) >>> 32).toInt, cand(k).toInt)
+      val jaccard = gramJaccard(arrays(i), arrays(j))
+      if (jaccard >= threshold) Some(Row(docs(i).getLong(0), docs(j).getLong(0), jaccard)) else None
+    }.toSeq
+    Some(spark.createDataFrame(out.asJava, StructType(Seq(
+      StructField("id_a", LongType, nullable = false), StructField("id_b", LongType, nullable = false),
+      StructField("jaccard", DoubleType)))))
   }
 
   /** Incremental (continuous-crawl) dedup: match a NEW batch against an
@@ -618,8 +698,12 @@ object Dedup {
     * null joins no component: its row's lbl is the label of its least
     * non-null neighbor (null if it has none).
     *
-    * The pair list is settled once, and one labelled driver collect
-    * that gives up past [[Graphs.DriverRows]] pairs picks the regime:
+    * A pair list whose plan optimizes to a local relation (as
+    * [[minhashPairs]]' driver regime returns, or a `Seq.toDF`) is
+    * already on the driver: union-find runs on its rows at once, with
+    * no job. Otherwise the
+    * pair list is settled once, and one labelled driver collect that
+    * gives up past [[Graphs.DriverRows]] pairs picks the regime:
     *   - Driver regime (the pairs fit): union-find over the collected
     *     pairs, each root the least id of its set; the result is a
     *     local relation — no loop, no cache entry, no checkpoint.
@@ -662,6 +746,8 @@ object Dedup {
     val pairList = pairs.select(col(aCol).cast("long").as("src"),
       col(bCol).cast("long").as("dst"))
     if (forceDistributed) hashMin(st, st.settle(pairList, "pairs"))
+    else if (pairList.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+      unionFind(pairs.sparkSession, pairList.collect())
     else st.settleWith(pairList, "pairs")(st.collectWithin(_, "pairs", Graphs.DriverRows)) match {
       case (_, Some(rows)) => unionFind(pairs.sparkSession, rows)
       case (sym, None) => hashMin(st, sym)

@@ -20,21 +20,37 @@ import graft.Settle
 object Graphs {
 
   /** The most rows a graph loop holds on the driver: the node bound of
-    * [[pageRank]]'s driver rank vector and the pair bound of
-    * [[Dedup.connectedComponents]]' driver union-find. Past it, both
-    * loops stay distributed. */
+    * [[pageRank]]'s driver rank vector, the pair bound of
+    * [[Dedup.connectedComponents]]' driver union-find and the bound on
+    * the bucket pairs [[Dedup.minhashPairs]]' driver regime enumerates.
+    * Past it, each runs its distributed loop. */
   private[operators] val DriverRows = 5000000
 
-  /** The most edge rows [[bfs]] and the triangle chain
+  /** The most edge rows [[bfs]], [[pageRank]] and the triangle chain
     * ([[triangleCounts]], [[graphProfile]]) hold on the driver: BFS
-    * counts its cached edge rows, the chain its canonical edges m.
-    * Past it, both run their distributed loops. Measured on the
-    * co-purchase graph (q52, q77, 4 cores): at sf0.01 (about 240k BFS
-    * and 120k triangle-chain edge rows) the driver regime won (q52
-    * 0.65 → 0.48–0.59 s a warm run, q77 0.79 → 0.29–0.42 s), at sf0.1
-    * (2.4M and 1.2M) it lost (q52 1.12 → 1.7–3.1 s). The bound sits
-    * below that crossover and keeps sf0.1 distributed. */
+    * counts its cached edge rows, pageRank's bounded collect takes at
+    * most this many, the chain counts its canonical edges m. Past it,
+    * all three run their Spark loops. Measured on the co-purchase graph
+    * (q52, q77, 4 cores): at sf0.01 (about 240k BFS and 120k
+    * triangle-chain edge rows) the driver regime won (q52 0.65 →
+    * 0.48–0.59 s a warm run, q77 0.79 → 0.29–0.42 s), at sf0.1 (2.4M
+    * and 1.2M) it lost (q52 1.12 → 1.7–3.1 s). The bound sits below
+    * that crossover and keeps sf0.1 distributed; q59's supplier →
+    * customer graph (about 60k edges at sf0.01, 600k at sf0.1) falls on
+    * the same sides of it. */
   private[operators] val DriverEdges = 1 << 19
+
+  /** The most documents [[Dedup.minhashPairs]] indexes, buckets and
+    * verifies on the driver; past it, its distributed regime runs.
+    * Measured with QueryProbe on d2, d6 and d19 (the documents plus a
+    * perturbed copy each, 4 cores, median of warm runs 2–4): at sf0.01
+    * (1k documents) the driver regime won by half (d6 1.20 → 0.51 s a
+    * run, d2 1.20 → 0.43, d19 1.54 → 0.78), at ScaleGen sf1 (100k) only
+    * by 5–13 % (d6 7.98 → 7.60 s, d2 7.32 → 6.47, d19 11.55 → 10.01):
+    * one driver thread against all the cores nears its crossover there,
+    * and more cores would bring it lower. The bound sits below, at 64k
+    * documents: sf0.1 (10k) runs on the driver, sf1 distributed. */
+  private[operators] val DriverDocs = 1 << 16
 
   /** Node bound under which the triangle chain broadcasts its degree
     * table (16 B a node). */
@@ -51,9 +67,10 @@ object Graphs {
     * orientations for an undirected walk. `seeds` must have column
     * (node). Returns (node, dist: long), dist = 0 for seeds. A seed
     * outside the graph keeps its dist-0 row. Nulls follow the join
-    * semantics: a null seed keeps its row and reaches nothing, a null
-    * src is never probed, and a null dst, which no anti-join can
-    * match, yields one (null, d) row on every hop d that reaches it.
+    * semantics, with null a node like any other: a null seed keeps its
+    * row and reaches nothing, a null src is never probed, and a null
+    * dst gets one (null, d) row, on the first hop d that reaches it,
+    * and none when a null seed already holds (null, 0).
     *
     * The edges are cached, and one labelled count of them, which
     * fills the cache the rounds read, picks the regime:
@@ -112,15 +129,15 @@ object Graphs {
     var frontier = seedRows.map(r => ids(r.get(0))).filter(_ >= 0)
     frontier.foreach(u => dist(u) = 0)
     out ++= seedRows.map(r => Row(r.get(0), 0L))
+    var nullSeen = seedRows.exists(_.isNullAt(0))
     for (d <- 1 to maxHops) {
       val next = ArrayBuffer.empty[Int]
-      var reachesNull = false
       for (u <- frontier; k <- off(u) until off(u + 1)) {
         val v = adj(k)
-        if (v < 0) reachesNull = true
-        else if (dist(v) < 0) { dist(v) = d; next += v; out += Row(ids.ids(v), d.toLong) }
+        if (v < 0) {
+          if (!nullSeen) { nullSeen = true; out += Row(null, d.toLong) }
+        } else if (dist(v) < 0) { dist(v) = d; next += v; out += Row(ids.ids(v), d.toLong) }
       }
-      if (reachesNull) out += Row(null, d.toLong)
       frontier = next.toArray
     }
     e.sparkSession.createDataFrame(out.asJava, schema)
@@ -141,11 +158,13 @@ object Graphs {
     var visited: DataFrame = s0
     var frontier: DataFrame = s0
     for (d <- 1 to maxHops) {
-      // edges stay put: the frontier probes them map-side
+      // edges stay put: the frontier probes them map-side; the
+      // null-safe anti-join lets a visited null node stay visited
       val next = st.settle(edges
         .join(broadcast(frontier.select(col("node").as("src"))), Seq("src"))
         .select(col("dst").as("node")).distinct()
-        .join(broadcast(visited.select("node")), Seq("node"), "left_anti")
+        .join(broadcast(visited.select(col("node").as("seen"))),
+          col("node") <=> col("seen"), "left_anti")
         .withColumn("dist", lit(d).cast(LongType)), s"hop-$d")
       visited = visited.union(next) // lazy union of settled rounds
       frontier = next
@@ -218,42 +237,59 @@ object Graphs {
     * decimals and summed as DECIMAL(28,9) — exact and order-free —
     * then the damping blend runs in doubles; every iteration is
     * therefore bit-replayable in SQL regardless of partitioning (the
-    * x13/e5 convention). N and the per-iteration sequencing are driver
-    * model-state (the k-means idiom).
+    * x13/e5 convention). The nodes are the distinct edge ends, null
+    * among them; a null node follows the join rule — it joins nothing,
+    * so it neither gives nor receives mass and holds the base rank
+    * (1−d)/N from the first round on.
     *
     * Scale shape: edges shuffle ONCE (hash-partitioned by src, then
-    * persisted — every later pass reuses that layout); node inventory
-    * and out-degree come from a single explode-aggregate over the
-    * settled edges. While the rank vector fits on the driver (n ≤
-    * [[DriverRows]]; one bounded collect of the node table both picks
-    * the loop and lists the nodes) it is driver model-state
-    * (the k-means idiom): each iteration is ONE distributed job —
-    * broadcast-probe the settled edges with the (src, rank, deg)
-    * vector, map-side-combine the decimal partials, collect the ≤ n
-    * sums — so the edge table never shuffles again. Past that bound
-    * the rank vector stays distributed: shuffled equi-joins with
-    * per-round settles. Both loops give bit-identical ranks. The
-    * result is a settled checkpoint, not a cache entry. */
+    * persisted — every later pass reuses that layout), and one labelled
+    * bounded collect of them, which fills that cache, picks the regime:
+    *   - Driver regime (at most [[DriverEdges]] edge rows, src and dst
+    *     of one type the driver compares as Spark does, 0 ≤ d ≤ 1): the
+    *     rounds run on the driver over the collected edges, replaying
+    *     Spark's arithmetic ([[pageRankLocal]]) — no job per round, no
+    *     checkpoint; the result is Spark's 9-dp round over a local
+    *     relation.
+    *   - Driver-vector regime (more edges, n ≤ [[DriverRows]] nodes; a
+    *     bounded collect of the node table both picks it and lists the
+    *     nodes): the rank vector is driver model-state (the k-means
+    *     idiom) and each round is ONE Spark job — broadcast-probe the
+    *     cached edges with the (src, rank, deg) vector, map-side-combine
+    *     the decimal partials, collect the ≤ n sums — so the edge table
+    *     never shuffles again.
+    *   - Distributed regime (more nodes): the rank vector stays
+    *     distributed — shuffled equi-joins with per-round settles.
+    * The Spark loops take node inventory and out-degree from one
+    * explode-aggregate over the cached edges, and their result is a
+    * settled checkpoint, not a cache entry. All three regimes give
+    * identical rows. q59's graph (about 60k edges at sf0.01, 600k at
+    * sf0.1) runs the driver regime up to sf0.01 and the driver-vector
+    * one at sf0.1. */
   def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85): DataFrame =
-    pageRankWith(edges, iters, damping, forceDistributed = false)
+    pageRankWith(edges, iters, damping, driverEdges = true, driverVector = true)
 
-  /** [[pageRank]] on its distributed loop whatever the node count: the
+  /** [[pageRank]] on its driver-vector loop whatever the edge count: the
+    * seam through which the regime-equality test reaches that loop on
+    * small graphs. */
+  private[graft] def pageRankDriverVector(edges: DataFrame, iters: Int,
+      damping: Double = 0.85): DataFrame =
+    pageRankWith(edges, iters, damping, driverEdges = false, driverVector = true)
+
+  /** [[pageRank]] on its distributed loop whatever the graph size: the
     * seam through which the regime-equality test and RegimeBench reach
     * that loop on small graphs. */
   private[graft] def pageRankDistributed(edges: DataFrame, iters: Int,
       damping: Double = 0.85): DataFrame =
-    pageRankWith(edges, iters, damping, forceDistributed = true)
+    pageRankWith(edges, iters, damping, driverEdges = false, driverVector = false)
 
   private def pageRankWith(edges: DataFrame, iters: Int, damping: Double,
-      forceDistributed: Boolean): DataFrame = Settle.scope("pageRank") { st =>
+      driverEdges: Boolean, driverVector: Boolean): DataFrame = Settle.scope("pageRank") { st =>
     // one shuffle fixes the probe layout for every later pass (and
     // keeps the persisted table at full core parallelism — an
     // AQE-coalesced tiny cache would serialize every probe)
     val e = st.cache(edges.select(col("src"), col("dst"))
       .repartition(col("src")))
-    // no eager count: the nodeDeg aggregation below is e's first
-    // consumer and materializes the cache as a side effect — a
-    // standalone count() was one extra full cache pass (r13 probe)
     // node inventory + out-degree in ONE aggregation: every endpoint
     // appears, src occurrences carry 1 (deg = Σ), dst occurrences 0
     val nodeDeg = e.select(explode(array(
@@ -261,27 +297,81 @@ object Graphs {
         struct(col("dst").as("node"), lit(0L).as("one")))).as("x"))
       .groupBy(col("x.node").as("node"))
       .agg(sum(col("x.one")).as("deg"))
-    // one bounded collect picks the regime and, below the bound, is
-    // the driver vector's node list; only the distributed loop reads
-    // the node table more than once, so only it caches the table
-    val nodes = if (forceDistributed) None else st.collectWithin(nodeDeg, "nodes", DriverRows)
-    val ranks = nodes match {
-      case Some(nd) => pageRankSmall(st, e, nodeDeg.schema, nd, iters, damping)
+    // no eager count: the edge collect, or else the nodeDeg collect,
+    // is e's first consumer and materializes the cache as a side
+    // effect — a standalone count() was one extra full cache pass (r13
+    // probe)
+    val dt = e.schema("src").dataType
+    val local = if (driverEdges && damping >= 0 && damping <= 1 && driverIds(dt) &&
+        e.schema("dst").dataType == dt) st.collectWithin(e, "edges", DriverEdges)
+      else None
+    local match {
+      case Some(rows) =>
+        pageRankLocal(e.sparkSession, nodeDeg.schema.head, rows, iters, damping)
+          .select(col("node"), round(col("rank"), 9).as("rank"))
       case None =>
-        val cached = st.cache(nodeDeg)
-        pageRankLarge(st, e, cached, st.run("nodes")(cached.count()), iters, damping)
+        // one bounded collect picks the Spark loop and, below the
+        // bound, is the driver vector's node list; only the distributed
+        // loop reads the node table more than once, so only it caches it
+        val nodes = if (driverVector) st.collectWithin(nodeDeg, "nodes", DriverRows) else None
+        val ranks = nodes match {
+          case Some(nd) => pageRankSmall(st, e, nodeDeg.schema, nd, iters, damping)
+          case None =>
+            val cached = st.cache(nodeDeg)
+            pageRankLarge(st, e, cached, st.run("nodes")(cached.count()), iters, damping)
+        }
+        // the final 9-dp round runs through Spark's Round (not driver
+        // math) so every regime shares the exact rounding semantics
+        st.settle(ranks.select(col("node"), round(col("rank"), 9).as("rank")), "ranks")
     }
-    // the final 9-dp round runs through Spark's Round (not driver
-    // math) so both loops share the exact rounding semantics
-    st.settle(ranks.select(col("node"), round(col("rank"), 9).as("rank")), "ranks")
   }
 
-  /** Small regime: the rank vector is driver model-state — each
+  /** The driver regime over the collected (src, dst) rows, replaying
+    * the Spark loops' arithmetic exactly. Per round, a source's
+    * contribution is Spark's `round(rank / deg, 9)` of a double
+    * (BigDecimal.valueOf, HALF_UP, back to a double) cast to
+    * DECIMAL(28,9) as Spark casts a double (BigDecimal.valueOf,
+    * HALF_UP); each node's contributions sum exactly, and the sum
+    * enters [[pageRankSmall]]'s blend as Spark's Decimal.toDouble
+    * (BigDecimal.doubleValue). The out-degree counts every edge of a
+    * source, a null dst included; only edges with two non-null ends
+    * carry mass. With 0 ≤ d ≤ 1 every rank stays finite and under 1
+    * plus rounding, so no cast overflows. Returns the unrounded
+    * (node, rank) vector as a local relation. */
+  private def pageRankLocal(spark: SparkSession, node: StructField, rows: Array[Row],
+      iters: Int, damping: Double): DataFrame = {
+    import java.math.{BigDecimal => JDecimal, RoundingMode}
+    import org.apache.spark.sql.types.DoubleType
+    val ids = new IdIndex(node.dataType, rows.iterator.flatMap(r => Iterator(r.get(0), r.get(1))))
+    val (src, dst) = (rows.map(r => ids(r.get(0))), rows.map(r => ids(r.get(1))))
+    val hasNull = src.contains(-1) || dst.contains(-1)
+    val n = ids.size + (if (hasNull) 1 else 0)
+    val deg = new Array[Long](ids.size)
+    src.foreach(u => if (u >= 0) deg(u) += 1)
+    def nineDp(x: Double): JDecimal = JDecimal.valueOf(x).setScale(9, RoundingMode.HALF_UP)
+    val base = (1.0 - damping) / n
+    var ranks = Array.fill(ids.size)(1.0 / n)
+    for (_ <- 1 to iters) {
+      val c = Array.tabulate(ids.size)(u =>
+        if (deg(u) == 0) null else nineDp(nineDp(ranks(u) / deg(u)).doubleValue))
+      val sc = Array.fill(ids.size)(JDecimal.ZERO)
+      for (i <- src.indices if src(i) >= 0 && dst(i) >= 0) sc(dst(i)) = sc(dst(i)).add(c(src(i)))
+      // a node no contribution reaches sums to 0.0, as coalesce gives
+      ranks = sc.map(s => base + damping * s.doubleValue)
+    }
+    val nullRank = if (iters == 0) 1.0 / n else base
+    val out = ranks.indices.map(i => Row(ids.ids(i), ranks(i))) ++
+      (if (hasNull) Seq(Row(null, nullRank)) else Nil)
+    spark.createDataFrame(out.asJava, StructType(Seq(node.copy(name = "node"),
+      StructField("rank", DoubleType, nullable = false))))
+  }
+
+  /** Driver-vector regime: the rank vector is driver model-state — each
     * iteration broadcast-probes the settled edges with the
     * (src, rank, deg) vector and collects the ≤ n decimal sums; the
     * damping blend runs on the driver with the identical IEEE double
     * ops. All per-edge arithmetic (the 9-dp contribution round, the
-    * decimal partial sums) stays in Spark, so both regimes and the SQL
+    * decimal partial sums) stays in Spark, so every regime and the SQL
     * oracle share bit-identical semantics. Returns the unrounded
     * (node, rank) vector. */
   private def pageRankSmall(st: Settle.Scope, e: DataFrame, nodeSchema: StructType,
@@ -305,7 +395,11 @@ object Graphs {
         .select(col("dst").as("node"),
           round(col("rank") / col("deg"), 9).cast(DecimalType(28, 9)).as("c"))
         .groupBy("node").agg(sum(col("c")).as("sc"))
-      val sc = st.run(s"round-$i")(sums.collect()).map(r => r.get(0) -> r.getDecimal(1)).toMap
+      // the null dst's group receives nothing: a null node joins
+      // nothing, as in the distributed regime's left join
+      val sc = st.run(s"round-$i")(sums.collect()).collect {
+        case r if !r.isNullAt(0) => r.get(0) -> r.getDecimal(1)
+      }.toMap
       ranks = nd.map { case (v, _) =>
         // decimal→double via BigDecimal.doubleValue = Spark's
         // Decimal.toDouble; blend order matches the large regime's
@@ -316,7 +410,7 @@ object Graphs {
     toDf(ranks).withColumnRenamed("src", "node")
   }
 
-  /** Large regime: the rank vector stays distributed; per iteration
+  /** Distributed regime: the rank vector stays distributed; per iteration
     * one shuffled equi-join + key-shuffle aggregation + node-list left
     * join, settled per round so lineage stays O(1). Returns the
     * unrounded (node, rank) vector. */

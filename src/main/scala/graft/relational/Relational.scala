@@ -1032,8 +1032,12 @@ object Relational {
   // purchase graph (customer ids offset out of the supplier id space):
   // 3 rounds of r' = (1−d)/N + d·Σ r(u)/deg(u), per-edge contributions
   // rounded to 9 decimals and summed as exact decimals so every
-  // iteration replays bit-for-bit in the unrolled SQL oracle. One
-  // key-shuffle per iteration; edges/degrees persist across rounds.
+  // iteration replays bit-for-bit in the unrolled SQL oracle. The
+  // edges shuffle once into a cache, and one bounded collect of it
+  // picks the regime: up to Graphs.DriverEdges rows (sf0.01 and below)
+  // the rounds run on the driver over the collected edges, with no job
+  // per round; above it (sf0.1, about 600k edges) each round is one
+  // broadcast probe of the cache against the driver's rank vector.
   def q59PageRank(s: SparkSession, dir: String): DataFrame = {
     val li = t(s, dir, "lineitem")
       .select(col("l_suppkey").as("src"), col("l_orderkey").as("ok"))

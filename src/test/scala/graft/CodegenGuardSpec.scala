@@ -2,6 +2,7 @@ package graft
 
 import graftperf.{Json, Typecast}
 import org.apache.spark.graft.ListenerBusDrain
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.debug.codegenStringSeq
@@ -78,6 +79,32 @@ class CodegenGuardSpec extends AnyFunSuite {
     st.foreach { case (tree, _, maxMethod) =>
       assert(maxMethod <= HugeMethodLimit, s"a band-stage method has $maxMethod bytes:\n$tree")
     }
+  }
+}
+
+/** The benchmark's `graph` pass fits Spark's codegen cache (100
+  * entries): once a pass has run, the next one — each query built and
+  * written to `noop` after `GraftSession.reset`, as the benchmark runs
+  * it — finds its generated classes cached and compiles next to none.
+  * A pass that overflows the cache recompiles on every pass. */
+class GraphCodegenCacheSpec extends AnyFunSuite {
+  import TestSpark._
+
+  private def pass(): Unit = graftperf.Queries.Graph.foreach { q =>
+    GraftSession.reset(spark)
+    SparkEntry.queries(q)(spark, sf).write.format("noop").mode("overwrite").save()
+  }
+
+  test("a warm graph pass compiles at most 10 classes") {
+    val start = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    pass()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    pass()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    // the first pass's count is the pass's cache entries only when this
+    // suite runs alone in its JVM
+    info(s"first pass compiled ${before - start} classes, the warm pass $compiled")
+    assert(compiled <= 10, s"the warm pass compiled $compiled classes")
   }
 }
 

@@ -81,11 +81,15 @@ class ConnectedComponentsSpec extends AnyFunSuite {
   private def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().map(_.toSeq).toSeq.sortBy(_.mkString(","))
 
-  /** Both regimes give the same (id, lbl) rows and the same verdicts. */
+  /** Both regimes give the same (id, lbl) rows and the same verdicts,
+    * whether the driver regime takes the pairs as the local relation
+    * they are or settles and collects them as a plan. */
   private def regimesAgree(pairs: DataFrame): Boolean = {
     val loop = Dedup.connectedComponentsDistributed(pairs, "a", "b")
-    rows(Dedup.connectedComponents(pairs, "a", "b")) == rows(loop) &&
-      rows(Dedup.dupClusters(pairs, "a", "b")) == rows(Dedup.clusterVerdict(loop))
+    Seq(pairs, pairs.repartition(2)).forall { p =>
+      rows(Dedup.connectedComponents(p, "a", "b")) == rows(loop) &&
+        rows(Dedup.dupClusters(p, "a", "b")) == rows(Dedup.clusterVerdict(loop))
+    }
   }
 
   /** Pair lists over a few ids, so self-loops come up often, plus
@@ -114,6 +118,15 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert(rows(Dedup.connectedComponentsDistributed(pairs, "a", "b")) ==
       want.sortBy(_.mkString(",")))
     assert(regimesAgree(pairs))
+  }
+
+  test("a local pair list resolves with no job, a planned one through its labelled collect") {
+    val local = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("a", "b")
+    val (cc, descs) = JobLog(spark)(Dedup.connectedComponents(local, "a", "b"))
+    assert(descs.isEmpty, descs)
+    assert(cc.queryExecution.analyzed.isInstanceOf[LocalRelation])
+    val (_, planned) = JobLog(spark)(Dedup.connectedComponents(local.repartition(2), "a", "b"))
+    assert(planned.nonEmpty && planned.forall(_ == "connectedComponents/pairs"), planned)
   }
 
   test("the driver regime leaves no cache entry and no persistent RDD behind") {

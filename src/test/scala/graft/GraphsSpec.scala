@@ -168,7 +168,9 @@ class GraphsSpec extends AnyFunSuite {
     val expected = Map(
       "bfs" -> Set("bfs/edge-count", "bfs/edges"),
       "triangleCounts" -> Set("triangleCounts/degrees", "triangleCounts/edges"),
-      "graphProfile" -> Set("graphProfile/degrees", "graphProfile/edges"))
+      "graphProfile" -> Set("graphProfile/degrees", "graphProfile/edges"),
+      "pageRank" -> Set("pageRank/edges"),
+      "minhashPairs" -> Set("minhashPairs/docs"))
     for ((name, op) <- ops) {
       val (_, descs) = JobLog(spark)(op())
       val bare = descs.filterNot(d => d != null && d.matches("\\w+/[\\w-]+"))
@@ -188,11 +190,11 @@ class GraphJobsSpec extends AnyFunSuite {
 
   private val pins: Seq[(String, (Int, Int))] = Seq(
     "q52_bfs_reach" -> ((10, 3)),
-    "q59_pagerank" -> ((18, 3)),
+    "q59_pagerank" -> ((7, 3)),
     "q61_triangles" -> ((9, 3)),
     "q77_graph_profile" -> ((9, 1)),
-    "d6_dup_clusters" -> ((10, 5)),
-    "d19_quality_survivor" -> ((15, 6)))
+    "d6_dup_clusters" -> ((2, 5)),
+    "d19_quality_survivor" -> ((7, 6)))
 
   for ((q, (build, exec)) <- pins) test(s"$q starts $build jobs to build and $exec to execute") {
     GraftSession.reset(spark)

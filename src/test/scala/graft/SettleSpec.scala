@@ -197,6 +197,13 @@ class SettleSpec extends AnyFunSuite {
       assert(st.collectWithin(df, "at", 1000).map(_.map(_.getLong(0)).toSeq) == Some(0L until 1000L))
       assert(st.collectWithin(df, "past", 999).isEmpty)
       assert(st.collectWithin(df.limit(0), "empty", 0).map(_.toSeq) == Some(Nil))
+      // partitions of 500, 500, 0 and 1 rows: the first two pass their
+      // share of a 1001 bound and send only counts, and a second job
+      // fetches them once the total fits
+      val skewed = spark.range(0, 1000, 1, 2).union(spark.range(1000, 1001, 1, 2)).toDF()
+      assert(st.collectWithin(skewed, "skewed", 1001).map(_.map(_.getLong(0)).toSeq) ==
+        Some(0L until 1001L))
+      assert(st.collectWithin(skewed, "skewed-past", 1000).isEmpty)
     }
   }
 
